@@ -4,31 +4,46 @@
     python3 e2e_bench/run.py --workload dashboard_mix --seed 1 --seconds 8 --trace 0
 
 Run from the repository root. Builds the program with the benchmark harness
-(`e2e_bench/Makefile`), writes seeded inputs, runs one JVM for the workload,
-checks its outputs and prints one JSON line: end-to-end metrics with
-`--trace 0`, per-layer metrics with `--trace 1`. See `e2e_bench/README.md`.
+(`e2e_bench/Makefile`), runs the workload in one JVM over the engine's sf0.01
+test tables (`e2e_bench/data`), checks its outputs and prints one JSON line:
+end-to-end metrics with `--trace 0`, per-layer metrics with `--trace 1`. See
+`e2e_bench/README.md`.
 """
 import argparse
 import glob
+import hashlib
 import json
 import os
 import shutil
 import statistics
 import subprocess
 import sys
+import time
 
 sys.dont_write_bytecode = True
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
-import inputs  # noqa: E402
 import oracle  # noqa: E402
 
 WORKLOADS = ("dashboard_mix", "batch_dags", "etl_ingest")
-SF = 0.002          # input scale (lineitem rows = 6M x SF)
+DATA = os.path.join(HERE, "data", "sf0.01")
 CORES = 4           # local[CORES], shuffle partitions = CORES
-HEAP = "2g"         # -Xms = -Xmx, touched at start so RSS does not follow GC timing
-JVM_TIMEOUT_S = 165
-SPARK_JARS = "/opt/spark/jars"
+HEAP = "2g"         # -Xms = -Xmx
+YOUNG = "384m"      # fixed young generation, so RSS above it follows the old generation
+SETUPS = 2          # set-ups per untraced run; setup_s is their median
+RUN_BUDGET_S = 170  # a run ends within this many seconds after its build
+ORACLE_RESERVE_S = 12
+
+
+def spark_home():
+    """The Spark distribution: $SPARK_HOME, else the one whose spark-submit is on the PATH."""
+    home = os.environ.get("SPARK_HOME")
+    if not home and shutil.which("spark-submit"):
+        home = os.path.dirname(os.path.dirname(os.path.realpath(shutil.which("spark-submit"))))
+    return home or ""
+
+
+SPARK_JARS = os.path.join(spark_home(), "jars")
 ADD_OPENS = ["java.base/" + p + "=ALL-UNNAMED" for p in (
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
     "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
@@ -62,20 +77,22 @@ def warm_page_cache(paths):
 def java_cmd(jar, work, archive, dump):
     cds = f"-XX:ArchiveClassesAtExit={archive}" if dump else f"-XX:SharedArchiveFile={archive}"
     opens = [a for o in ADD_OPENS for a in ("--add-opens", o)]
-    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch", "-XX:-UsePerfData", cds,
+    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Xmn{YOUNG}", "-XX:-UsePerfData", cds,
              "-Xlog:cds=off", "-Xlog:cds+dynamic=off",
              f"-Djava.io.tmpdir={work}/tmp",
              f"-Dlog4j.configurationFile={HERE}/log4j2.properties"]
             + opens + ["-cp", f"{jar}:{SPARK_JARS}/*", "e2ebench.Main"])
 
 
-def run_jvm(cmd, args, work):
+def run_jvm(cmd, args, work, deadline):
+    """Runs the JVM in `work`; exits the benchmark if it fails or is still
+    running at `deadline` (a time.monotonic() value)."""
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     env = dict(os.environ, SPARK_LOCAL_IP="127.0.0.1")
     with open(os.path.join(work, "jvm.log"), "w") as logf:
         p = subprocess.Popen(cmd + args, stdout=logf, stderr=logf, env=env)
         try:
-            rc = p.wait(timeout=JVM_TIMEOUT_S)
+            rc = p.wait(timeout=max(1.0, deadline - time.monotonic()))
         except subprocess.TimeoutExpired:
             p.kill()
             p.wait()
@@ -87,7 +104,19 @@ def run_jvm(cmd, args, work):
         sys.exit(1)
 
 
-def class_archive(root, build_dir, jar, data_dir):
+def check_data(data_dir):
+    """The input tables, as listed with their checksums in SHA256SUMS."""
+    with open(os.path.join(data_dir, "SHA256SUMS")) as f:
+        sums = [line.split() for line in f if line.strip()]
+    for digest, name in sums:
+        with open(os.path.join(data_dir, name), "rb") as f:
+            if hashlib.sha256(f.read()).hexdigest() != digest:
+                log(f"input table {name} does not match SHA256SUMS")
+                sys.exit(2)
+    return [os.path.join(data_dir, name) for _, name in sums]
+
+
+def class_archive(build_dir, jar, data_dir):
     """Class-data-sharing archive of the classes a short run loads, so every
     timed JVM starts from the same class-loading state."""
     archive = os.path.join(build_dir, "classes.jsa")
@@ -98,7 +127,7 @@ def class_archive(root, build_dir, jar, data_dir):
     run_jvm(java_cmd(jar, work, archive, dump=True),
             ["--workload", "dashboard_mix", "--data", data_dir, "--work", work, "--seed", "0",
              "--seconds", "0", "--trace", "0", "--cores", str(CORES), "--out", f"{work}/result.json"],
-            work)
+            work, time.monotonic() + 600)
     shutil.rmtree(work, ignore_errors=True)
     return archive
 
@@ -122,20 +151,35 @@ def main():
     root = os.getcwd()
     build_dir = os.path.abspath(".bench_build")
     jar = build(root, build_dir)
-    data_dir = inputs.write(os.path.join(build_dir, "data", f"seed{a.seed}_sf{SF}"), a.seed, SF)
-    archive_data = inputs.write(os.path.join(build_dir, "data", f"seed0_sf{SF}"), 0, SF)
-    warm_page_cache(glob.glob(f"{SPARK_JARS}/*.jar") + [jar] + glob.glob(f"{data_dir}/*"))
-    archive = class_archive(root, build_dir, jar, archive_data)
+    data_dir = DATA
+    warm_page_cache(glob.glob(f"{SPARK_JARS}/*.jar") + [jar] + check_data(data_dir))
+    archive = class_archive(build_dir, jar, data_dir)
+    deadline = time.monotonic() + RUN_BUDGET_S - ORACLE_RESERVE_S
 
-    work = os.path.join(build_dir, "work", f"{a.workload}-{a.seed}-{a.trace}")
+    name = f"{a.workload}-{a.seed}-{a.trace}"
+    work = os.path.join(build_dir, "work", name)
     shutil.rmtree(work, ignore_errors=True)
+
+    def jvm_args(w, out, *extra):
+        return ["--workload", a.workload, "--data", data_dir, "--work", w, "--seed", str(a.seed),
+                "--seconds", str(a.seconds), "--trace", str(a.trace), "--cores", str(CORES),
+                "--out", out] + list(extra)
+
+    # set-up alone, in fresh JVMs, before the measured run; setup_s is the
+    # median over these and the measured run's own set-up
+    setups = []
+    for i in range(SETUPS - 1 if a.trace == 0 else 0):
+        sw = os.path.join(build_dir, "work", f"{name}-setup{i}")
+        shutil.rmtree(sw, ignore_errors=True)
+        run_jvm(java_cmd(jar, sw, archive, dump=False),
+                jvm_args(sw, f"{sw}/setup.json", "--setup-only", "1"), sw, deadline)
+        with open(f"{sw}/setup.json") as f:
+            setups.append(json.load(f)["setup_s"])
+        shutil.rmtree(sw, ignore_errors=True)
+
     result_path = os.path.join(work, "result.json")
-    args = ["--workload", a.workload, "--data", data_dir, "--work", work, "--seed", str(a.seed),
-            "--seconds", str(a.seconds), "--trace", str(a.trace), "--cores", str(CORES),
-            "--out", result_path]
-    if a.faults:
-        args += ["--faults", a.faults]
-    run_jvm(java_cmd(jar, work, archive, dump=False), args, work)
+    extra = ["--faults", a.faults] if a.faults else []
+    run_jvm(java_cmd(jar, work, archive, dump=False), jvm_args(work, result_path, *extra), work, deadline)
     with open(result_path) as f:
         res = json.load(f)
 
@@ -165,7 +209,7 @@ def main():
 
     loop = res["loop"]
     if a.trace == 0:
-        metrics = {"setup_s": res["setup_s"], "first_pass_s": res["first_pass_s"],
+        metrics = {"setup_s": statistics.median(setups + [res["setup_s"]]), "first_pass_s": res["first_pass_s"],
                    "ops_per_s": rate("window", loop["window_s"]), "peak_rss_mb": res["peak_rss_mb"]}
         units = END_TO_END
     else:
@@ -186,6 +230,7 @@ def layer_metrics(a, res, samples, failed, etl_root, work):
     m = {k: layers.get(k, 0.0) for k in units}
     m.update({
         "Graft.session_ms": res["session_ms"],
+        "jvm.heap_peak_mb": res["heap_peak_mb"],
         "p50_s": statistics.median(lat) if lat else 0.0,
         "p90_s": percentile(lat, 90) if lat else 0.0,
         "latency_samples": len(lat),

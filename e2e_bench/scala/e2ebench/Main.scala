@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -49,8 +50,13 @@ object Main {
   val DashboardTables = Seq("customer", "orders", "lineitem", "nation", "region", "events")
   /** The DAG one batch pass runs (every gate once per pass). */
   val Batch: Seq[(String, Int)] = Seq(
-    "q_louvain_multi" -> 1, "q_gbt_depth2_eval" -> 1, "q_semdedup" -> 1)
-  val BatchTables = Seq("lineitem", "documents", "embeddings")
+    "q_semdedup" -> 1, "q_pipeline_mix" -> 1)
+  val BatchTables = Seq("documents", "embeddings")
+  /** Passes the timed window runs at the least: the second and third pass
+    * still run faster than the first, so a rate over fewer passes follows
+    * how far the JIT happened to get.
+    */
+  val BatchPasses = 3
 
   def main(args: Array[String]): Unit = {
     val jvmStart = ManagementFactory.getRuntimeMXBean.getStartTime
@@ -76,7 +82,7 @@ object Main {
       case "dashboard_mix" =>
         new GateWorkload(spark, opt("data"), seed, Dashboard, DashboardTables, faults)
       case "batch_dags" =>
-        new GateWorkload(spark, opt("data"), seed, Batch, BatchTables, faults)
+        new GateWorkload(spark, opt("data"), seed, Batch, BatchTables, faults, BatchPasses)
       case "etl_ingest" => new EtlWorkload(spark, work.resolve("etl"), seed)
       case other => sys.error(s"unknown workload $other")
     }
@@ -91,6 +97,11 @@ object Main {
     wl.setup()
     restoreConf()
     val setupS = (System.currentTimeMillis() - jvmStart) / 1e3
+    if (opt.get("setup-only").contains("1")) {
+      // nothing of this JVM outlives it: skip the orderly shutdown
+      Files.write(Paths.get(opt("out")), new Json().num("setup_s", setupS).toString.getBytes("UTF-8"))
+      Runtime.getRuntime.halt(0)
+    }
 
     val runs = mutable.ArrayBuffer.empty[(String, Int, OpRun)]
     val tracedRuns = mutable.ArrayBuffer.empty[(OpRun, Tracing)]
@@ -141,7 +152,7 @@ object Main {
     val windows = new Json
     if (!traced) {
       var (el, nb) = (0.0, 0)
-      while (el < seconds) { el += runBlock("window", nb); nb += 1 }
+      while (el < seconds || nb < wl.minBlocks) { el += runBlock("window", nb); nb += 1 }
       windows.num("window_s", el).num("window_blocks", nb)
     } else {
       // untraced, traced, traced, untraced: neither side runs warmer
@@ -170,20 +181,33 @@ object Main {
       .num("setup_s", setupS).num("session_ms", sessionMs)
       .num("first_pass_s", firstPassS).obj("loop", windows)
       .arr("samples", runs.toSeq.map { case (phase, block, op) =>
-        new Json().str("op", op.name).num("id", op.id).str("phase", phase).num("block", block)
+        val j = new Json().str("op", op.name).num("id", op.id).str("phase", phase).num("block", block)
           .num("latency_s", op.latencyS).bool("ok", op.ok).str("error", op.error)
           .strs("conf_writes", op.confWrites)
+        // a traced op's finished jobs, for tracing a count back to its op
+        tracedRuns.find(_._1 eq op).foreach { case (_, t) =>
+          val (build, exec) = t.jobs.jobsTagged(s"e2e.op.${op.id}").filter(_.succeeded)
+            .partition(_.tags.contains("e2e.build"))
+          j.num("build_jobs", build.size).num("exec_jobs", exec.size)
+            .strs("exec_sites", exec.map(_.site))
+        }
+        j
       })
       .arr("checks", checks.toSeq)
     wl.report(out)
     if (traced) out.obj("layers", Layers.totals(tracedRuns.toSeq, cores))
     spark.stop()
-    out.num("peak_rss_mb", vmHwmKb() / 1024.0)
+    out.num("peak_rss_mb", vmHwmKb() / 1024.0).num("heap_peak_mb", heapPeakMb())
     Files.write(Paths.get(opt("out")), out.toString.getBytes("UTF-8"))
   }
 
   def artifactDirs(tmp: Path): Set[String] =
     EtlWorkload.listDir(tmp).map(_.getFileName.toString).filter(_.startsWith("graft_")).toSet
+
+  /** Sum over the heap's memory pools of each pool's peak use since JVM start. */
+  def heapPeakMb(): Double = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == java.lang.management.MemoryType.HEAP)
+    .map(_.getPeakUsage.getUsed).sum / 1048576.0
 
   def vmHwmKb(): Double = {
     val src = scala.io.Source.fromFile("/proc/self/status")

@@ -36,6 +36,8 @@ final class OpRun(val id: Int, val name: String) {
   */
 trait Workload {
   def setup(): Unit
+  /** Blocks the timed window runs at the least, however short `--seconds`. */
+  def minBlocks: Int = 1
   def coldPass: Seq[String]
   def block(i: Int): Seq[String]
   def run(op: OpRun, capture: Boolean): Unit
@@ -47,7 +49,8 @@ trait Workload {
   */
 final class GateWorkload(spark: SparkSession, data: String, seed: Long,
                          pool: Seq[(String, Int)], tables: Seq[String],
-                         faults: Map[String, String]) extends Workload {
+                         faults: Map[String, String], override val minBlocks: Int = 1)
+    extends Workload {
   private val gates = SparkEntry.queries
   private val distinct = pool.map(_._1)
   private val weighted = pool.flatMap { case (n, w) => Seq.fill(w)(n) }
@@ -55,7 +58,10 @@ final class GateWorkload(spark: SparkSession, data: String, seed: Long,
   def setup(): Unit = tables.foreach { t =>
     (if (t == "events") Tables.events(spark, data) else Tables.load(spark, data, t)).schema
   }
-  def coldPass: Seq[String] = new scala.util.Random(seed).shuffle(distinct)
+  /** Pool order, not seeded: what the cold pass costs depends on the order
+    * its ops warm the JVM in, and a seed must not move it.
+    */
+  def coldPass: Seq[String] = distinct
   def block(i: Int): Seq[String] = new scala.util.Random(seed * 1000003L + i).shuffle(weighted)
 
   def run(op: OpRun, capture: Boolean): Unit = {

@@ -23,10 +23,12 @@ SPEC = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
 EXACT = ["exec.jobs", "build_jobs", "build_actions", "ops.IterStats.rounds",
          "SparkEntry.artifacts_built", "SparkEntry.artifacts_served", "Etl.files_landed",
          "Etl.partitions_rewritten", "Tables.conf_writes", "SparkEntry.leaked_tmp_dirs"]
-# In batch_dags, adaptive execution submits a stage job more or less for the
-# same op from run to run (measured: 1-3 of ~150 exec jobs, 1 of ~865 build
-# jobs); the actions behind the build jobs still repeat exactly.
-JITTER = {"batch_dags": {"exec.jobs": 0.03, "build_jobs": 0.01}}
+# Counts that do not repeat, and why. In batch_dags, adaptive execution
+# submits its query-stage jobs for q_semdedup's sink from its own threads,
+# and how many it submits depends on timing: 17 to 19 jobs for the same plan
+# within one run, 74 to 80 exec jobs per traced run with one seed. The other
+# counts, build_jobs and build_actions included, repeat exactly there.
+NOT_EXACT = {"batch_dags": {"exec.jobs"}}
 
 
 def bench(workload, seed, trace, faults="", cwd=ROOT):
@@ -50,9 +52,8 @@ class ExactCounts(unittest.TestCase):
             with self.subTest(workload=w):
                 a = result(w, 101, 1)["metrics"]
                 b = result(w, 101, 1)["metrics"]
-                jitter = JITTER.get(w, {})
                 differ = {n: (a[n]["value"], b[n]["value"]) for n in EXACT
-                          if abs(a[n]["value"] - b[n]["value"]) > jitter.get(n, 0) * a[n]["value"]}
+                          if n not in NOT_EXACT.get(w, ()) and a[n]["value"] != b[n]["value"]}
                 self.assertEqual(differ, {}, w)
 
 
