@@ -25,6 +25,9 @@ object Bench {
     // observed while the query ran — reported in the detail line so a
     // convergence regression is visible without re-deriving it from logs
     val roundCounts = scala.collection.mutable.Map.empty[String, Int]
+    // a gate that throws is still timed, but its detail entry carries the
+    // error ("err") so the fast failure cannot pass for a valid run
+    val errors = scala.collection.mutable.Map.empty[String, String]
     def timeOne(name: String): Double = {
       val fn = SparkEntry.queries(name)
       graft.ops.IterStats.drain() // clear anything a prior query left
@@ -40,7 +43,11 @@ object Bench {
       // conventions (BASELINE.md round-15/16 provenance).
       try {
         fn(spark, sfDir).queryExecution.toRdd.count()
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable =>
+        val msg = s"${e.getClass.getName}: ${e.getMessage}"
+        System.err.println(s"[bench] $name failed: $msg")
+        errors(name) = msg.linesIterator.nextOption().getOrElse("").take(200)
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       val rounds = graft.ops.IterStats.drain().values.sum
       if (rounds > 0) roundCounts(name) = rounds
@@ -103,17 +110,18 @@ object Bench {
     // many whole chunks visible as fit; the full set is also written to a
     // file whose path rides on the total line, so nothing is ever lost.
     // Iterative queries carry their convergence-round count ("rounds").
+    def extra(k: String): String =
+      roundCounts.get(k).map(r => s""","rounds":$r""").getOrElse("") +
+        errors.get(k).map(e => ",\"err\":" + Verify.quote(e)).getOrElse("")
     val entries = results.map { case (k, (mn, md, _, _)) =>
-      val rounds = roundCounts.get(k).map(r => s""","rounds":$r""").getOrElse("")
-      "\"" + k + "\":{\"s\":" + fmt(mn) + ",\"med\":" + fmt(md) + rounds + "}"
+      "\"" + k + "\":{\"s\":" + fmt(mn) + ",\"med\":" + fmt(md) + extra(k) + "}"
     }
     // file-only rows additionally carry the start timestamp (epoch s)
     // and the 1-min loadavg at start — drift attribution data the
     // stdout chunks omit to stay inside the driver's 2000-char tail
     val fileEntries = results.map { case (k, (mn, md, t0, load)) =>
-      val rounds = roundCounts.get(k).map(r => s""","rounds":$r""").getOrElse("")
       "\"" + k + "\":{\"s\":" + fmt(mn) + ",\"med\":" + fmt(md) +
-        ",\"t0\":" + t0 + ",\"load\":" + fmt(load) + rounds + "}"
+        ",\"t0\":" + t0 + ",\"load\":" + fmt(load) + extra(k) + "}"
     }
     val chunks = scala.collection.mutable.ArrayBuffer.empty[String]
     val cur = new StringBuilder

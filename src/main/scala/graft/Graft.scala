@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a SparkSession wired the way the engine expects —
   * [[GraftExtensions]] injected (native `cosine_sim` available to SQL and
-  * `expr(...)`), UTC session time, and a shuffle-partition count sized by
-  * the caller rather than Spark's 200 default. On a real cluster pass
+  * `expr(...)`), UTC session time, nanos parquet timestamps read as longs,
+  * and a shuffle-partition count sized by the caller rather than Spark's
+  * 200 default. On a real cluster pass
   * `master = None` and size `shufflePartitions` to ~2-3× total executor
   * cores (or leave AQE coalescing, on by default in Spark 4, to trim it).
   */
@@ -23,6 +24,10 @@ object Graft {
       // >76-char transport payload would silently break oracle parity and
       // java.util.Base64 decoding
       .config("spark.sql.chunkBase64String.enabled", "false")
+      // events.parquet has shipped its ts as TIMESTAMP(NANOS), which Spark
+      // has no type for: read it as a nanos long that Tables.events
+      // truncates to µs
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .withExtensions(new GraftExtensions)
     master.foreach(b.master)
     extraConf.foreach { case (k, v) => b.config(k, v) }

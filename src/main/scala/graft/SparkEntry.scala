@@ -1,33 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.ops.{Dedup, Etl, Features, Relational, Similarity, Temporal, Text, Windows}
+import graft.gates.Gates
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every `queries` entry is a pure plan over the testdata tables; `oracleSql`
-  * carries the DuckDB-equivalent ANSI SQL the driver hash-compares against.
-  * Column names AND row order are made to match exactly: every query ends in
-  * a total ORDER BY replicated in the oracle.
+/** Driver contract: every gate's plan and its oracle SQL, by name, both
+  * derived from the one registry in [[graft.gates.Gates]].
   */
 object SparkEntry {
-
-  private val lineitemNumCols =
-    Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-  /** The shared scored-corpus fixture behind every model-evaluation gate
-    * (q_eval_classify / q_confusion / q_roc_auc / q_calibration /
-    * q_brier): scoreLinear with the demo md5 weights plus the odd-label
-    * truth column. ONE definition so the scoring config can't drift
-    * between gates — its five oracle CTEs spell the identical recipe.
-    */
-  private def scoredDemo(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.ops.Models.scoreLinear(Tables.embeddings(s, d), "vec_id",
-      "embedding", Seq("label"),
-      graft.ops.Models.md5Weights(s, "demo", 64), bias = 0.1)
-      .withColumn("actual", col("label") % 2 === 1)
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -35,14184 +14,13 @@ object SparkEntry {
     queries("q_funnel")(spark, d)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_funnel" -> ((s, d) => Relational.funnel(
-      Tables.customer(s, d), Tables.orders(s, d),
-      Tables.lineitem(s, d), Tables.nation(s, d))),
-    "q_funnel_filtered" -> ((s, d) => Relational.funnelFiltered(
-      Tables.customer(s, d), Tables.orders(s, d),
-      Tables.lineitem(s, d), Tables.nation(s, d),
-      dateFrom = Some("1996-01-01"), dateTo = Some("1996-12-31"),
-      nations = Seq("NATION_1", "NATION_2", "NATION_3"))),
-    "q_proj_filter" -> ((s, d) =>
-      Relational.projectFilter(Tables.orders(s, d))),
-    "q_inlist_threshold" -> ((s, d) =>
-      Relational.inListThreshold(Tables.lineitem(s, d))),
-    "q_multi_join_agg" -> ((s, d) => Relational.multiJoinAgg(
-      Tables.region(s, d), Tables.nation(s, d),
-      Tables.customer(s, d), Tables.orders(s, d))),
-    "q_left_join_filter" -> ((s, d) => Relational.leftJoinStatusFilter(
-      Tables.orders(s, d), Tables.lineitem(s, d))),
-    "q_left_funnel_status" -> ((s, d) => Relational.leftFunnelStatus(
-      Tables.orders(s, d), Tables.lineitem(s, d))),
-    "q_anti_join_new" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      Relational.antiJoinNewRows(
-          ev, ev.filter(col("event_id") % 2 === 0),
-          Seq("user_id", "event_type", "value"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .orderBy("event_id")
-    }),
-    "q_cond_rates" -> ((s, d) =>
-      Relational.conditionalRates(Tables.events(s, d))),
-    "q_distinct_durations" -> ((s, d) => Relational.distinctAndDurations(
-      Tables.orders(s, d), Tables.lineitem(s, d))),
-    "q_describe" -> ((s, d) =>
-      Relational.describeColumn(Tables.lineitem(s, d), "l_extendedprice")),
-    "q_corr_matrix" -> ((s, d) =>
-      Relational.corrMatrix(Tables.lineitem(s, d), lineitemNumCols)),
-    "q_null_counts" -> ((s, d) =>
-      Relational.nullCounts(Tables.lineitem(s, d), lineitemNumCols)),
-    "q_percentile_extremes" -> ((s, d) =>
-      Relational.percentileExtremes(Tables.orders(s, d))),
-    "q_group_derived_date" -> ((s, d) =>
-      Relational.groupByDerivedDate(Tables.orders(s, d))),
-    "q_domain_summary" -> ((s, d) =>
-      Relational.domainSummary(Tables.orders(s, d))),
-    "q_topk" -> ((s, d) => Relational.topK(Tables.orders(s, d), 100)),
-    "q_log_tail" -> ((s, d) => Relational.logTail(Tables.events(s, d), 1000)),
-    "q_dedup_first" -> ((s, d) =>
-      Relational.dedupFirstPerKey(Tables.events(s, d))),
-    "q_window_ranks" -> ((s, d) =>
-      Relational.windowRanks(Tables.orders(s, d))),
-    "q_group_topk" -> ((s, d) =>
-      Relational.groupTopK(Tables.orders(s, d), 3)),
-    "q_histogram" -> ((s, d) =>
-      Relational.valueHistogram(Tables.events(s, d), 0.0, 25.0, 20)),
-    // RFM quintile grid: per-customer recency/frequency/monetary scored
-    // by dyadic-grid weighted-percentile edges (winsorize discipline)
-    "q_rfm" -> ((s, d) => graft.ops.Commerce.rfmSegments(
-      Tables.orders(s, d), "o_custkey", "o_orderdate", "o_totalprice")),
-    // revenue concentration: binned Lorenz/Gini + top-1%/10% shares
-    "q_gini" -> ((s, d) => graft.ops.Commerce.giniConcentration(
-      Tables.orders(s, d), "o_custkey", "o_totalprice")),
-    // cohort LTV ramp: first-order-month cohorts, cumulative revenue
-    // per cohort customer by month age (window over cohorts×months)
-    "q_cohort_ltv" -> ((s, d) => graft.ops.Commerce.cohortLtv(
-      Tables.orders(s, d), "o_custkey", "o_orderdate", "o_totalprice")),
-    // purchase-cycle histogram: consecutive-order day gaps per customer
-    // binned at 30-day width (valueHistogram composition)
-    "q_order_gaps" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Relational.valueHistogram(
-        graft.ops.Commerce.interOrderGaps(Tables.orders(s, d),
-          "o_custkey", "o_orderdate", "o_orderkey")
-          .select(col("gap_days").cast("double").as("value")),
-        0.0, 30.0, 12)
-    }),
-    "q_running_total" -> ((s, d) =>
-      Windows.runningTotal(Tables.events(s, d))),
-    "q_twa" -> ((s, d) => Windows.timeWeightedAvg(Tables.events(s, d))),
-    "q_anomalies" -> ((s, d) =>
-      Windows.rollingAnomalies(Tables.events(s, d), w = 7, k = 3.0)),
-    "q_mode" -> ((s, d) =>
-      Relational.modePerKey(Tables.events(s, d), "user_id", "event_type")),
-    "q_collocations" -> ((s, d) =>
-      Text.collocations(Tables.documents(s, d), "doc_id", "text",
-        minCount = 5, topK = 20)),
-    // corpus keywords: TextRank (3 PageRank rounds over the window-2
-    // word co-occurrence graph, stopwords dropped, multiplicity-weighted)
-    "q_textrank" -> ((s, d) =>
-      Text.textRank(Tables.documents(s, d), "doc_id", "text",
-        windowSize = 2, rounds = 3, topK = 30)),
-    "q_label_entropy" -> ((s, d) =>
-      Text.labelEntropy(Tables.documents(s, d), "source", "lang")),
-    "q_unpivot" -> ((s, d) =>
-      Relational.meltMetrics(Tables.lineitem(s, d))),
-    // --- temporal joins (extension surface; ops/Temporal.scala) ---
-    "q_asof_join" -> ((s, d) =>
-      Temporal.asofJoin(
-        Tables.events(s, d)
-          .select("event_id", "user_id", "ts"),
-        Tables.orders(s, d),
-        leftKey = "user_id", rightKey = "o_custkey",
-        leftTime = "ts", rightTime = "o_orderdate",
-        payload = Seq("o_orderkey", "o_totalprice"),
-        tiebreak = "o_orderkey")
-        .withColumnRenamed("asof_o_orderkey", "asof_orderkey")
-        .withColumn("asof_total",
-          org.apache.spark.sql.functions.round(
-            org.apache.spark.sql.functions.col("asof_o_totalprice"), 6))
-        .drop("asof_o_totalprice")
-        .orderBy("event_id")),
-    "q_band_join" -> ((s, d) =>
-      Temporal.bandFollowers(Tables.events(s, d),
-        key = "user_id", time = "ts", id = "event_id",
-        valueCol = "value", widthSec = 86400L)),
-    "q_ohlc_resample" -> ((s, d) =>
-      Temporal.ohlcResample(Tables.events(s, d),
-        key = "user_id", time = "ts", id = "event_id",
-        valueCol = "value")),
-    // --- event analytics (extension surface; ops/Events.scala) ---
-    "q_retention" -> ((s, d) =>
-      graft.ops.Events.retentionCohorts(Tables.events(s, d),
-        userCol = "user_id", timeCol = "ts")),
-    "q_seq_funnel" -> ((s, d) =>
-      graft.ops.Events.seqFunnel(Tables.events(s, d),
-        userCol = "user_id", timeCol = "ts", typeCol = "event_type",
-        steps = Seq("view", "click", "purchase"), withinSec = 86400L)),
-    // --- window / time-series (SURVEY §2.5) ---
-    "q_lag_features" -> ((s, d) => Windows.lagFeatures(Tables.events(s, d))),
-    "q_rolling" -> ((s, d) => Windows.rollingFeatures(Tables.events(s, d), 7)),
-    "q_chrono_split" -> ((s, d) =>
-      Windows.chronoSplitSummary(Tables.orders(s, d), 0.8)),
-    "q_interpolate" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val masked = Tables.events(s, d).withColumn("vm",
-        when(col("event_id") % 7 === 0, lit(null)).otherwise(col("value")))
-      Windows.interpolate(masked, "user_id", Seq("ts", "event_id"), "vm")
-        .select(col("event_id"), col("user_id"), col("vm"), col("vm_interp"))
-        .orderBy("event_id")
-    }),
-    "q_seasonal_decompose" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(avg(col("value")).as("observed"))
-      Windows.seasonalDecompose(daily, "day", "observed", 7)
-    }),
-    // FPP seasonality/trend strength over the same weekly decomposition
-    // (variance ratios on the published 6-decimal components)
-    "q_season_strength" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(avg(col("value")).as("observed"))
-      Windows.seasonalityStrength(daily, "day", "observed", 7)
-    }),
-    "q_seasonal_even" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(avg(col("value")).as("observed"))
-      // even period exercises the statsmodels half-weighted-ends trend path
-      // (the events series spans 30 days, so period 10 leaves 20 rows with
-      // a defined trend; period 30 would need 31 points)
-      Windows.seasonalDecompose(daily, "day", "observed", 10)
-    }),
-    "q_describe_multi" -> ((s, d) => Relational.describeColumns(
-      Tables.lineitem(s, d), lineitemNumCols)),
-    "q_yoy" -> ((s, d) => Windows.yearOverYear(Tables.orders(s, d))),
-    "q_yoy_pivot" -> ((s, d) =>
-      Windows.yoyPivot(Tables.orders(s, d), 1995 to 2001)),
-    "q_rollup" -> ((s, d) => Windows.revenueRollup(Tables.orders(s, d),
-      Tables.customer(s, d), Tables.nation(s, d), Tables.region(s, d))),
-    "q_cube" -> ((s, d) => Windows.revenueCube(Tables.orders(s, d))),
-    // GROUPING SETS: the three dashboard slices in one Expand pass
-    "q_grouping_sets" -> ((s, d) =>
-      Windows.revenueGroupingSets(Tables.orders(s, d))),
-    // Pareto frontier of customers on (total spend, order count) — the
-    // sort-scan skyline, not the all-pairs anti-join
-    "q_skyline" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val agg = Tables.orders(s, d).groupBy(col("o_custkey"))
-        .agg(round(sum(col("o_totalprice")), 2).as("spend"),
-          count(lit(1)).as("n_orders"))
-      Relational.skyline(agg, "spend", "n_orders")
-        .orderBy(col("spend").desc, col("o_custkey"))
-    }),
-    "q_get_or_create" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val existing = Tables.nation(s, d)
-        .select(col("n_nationkey").as("id"), col("n_name").as("key"))
-      val incoming = Tables.nation(s, d).select(col("n_name").as("key"))
-        .unionByName(Tables.region(s, d).select(col("r_name").as("key")))
-      Etl.getOrCreateIds(existing, incoming, "id", "key").orderBy("id", "key")
-    }),
-    "q_monthly_quartiles" -> ((s, d) =>
-      Windows.monthlyQuartiles(Tables.lineitem(s, d))),
-    // --- scalar / feature functions (SURVEY §2.7) ---
-    "q_date_features" -> ((s, d) => Features.dateFeatures(Tables.orders(s, d))),
-    "q_scalar_funcs" -> ((s, d) =>
-      Features.scalarFunctions(Tables.events(s, d))),
-    "q_json_extract" -> ((s, d) => Features.jsonExtract(Tables.events(s, d))),
-    "q_standardize" -> ((s, d) => Features.standardize(Tables.orders(s, d))),
-    "q_label_encode" -> ((s, d) => Features.labelEncode(Tables.events(s, d))),
-    "q_calendar_gapfill" -> ((s, d) =>
-      Features.calendarGapFill(Tables.orders(s, d))),
-    "q_union_branches" -> ((s, d) =>
-      Features.unionBranches(Tables.events(s, d))),
-    "q_stratified_split" -> ((s, d) => Features.stratifiedSplitSummary(
-      Tables.orders(s, d), "o_orderkey", "o_orderstatus", 0.3, 42L)),
-    // --- training-data pipeline: dedup (BASELINE.json / SURVEY §7.1 M5) ---
-    "q_exact_dedup" -> ((s, d) =>
-      Dedup.exactDedup(Tables.documents(s, d), "doc_id", "text")),
-    "q_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairs(
-      Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8)),
-    "q_ngram_jaccard_capped" -> ((s, d) => Dedup.ngramJaccardPairs(
-      Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8,
-      // df cap chosen to actually engage at the bench SFs (max df at
-      // sf0.1 is 25; >10 covers ~63% of the posting pair space while
-      // keeping every planted >=0.9 pair at sf0.01)
-      maxDocFreq = Some(10L))),
-    // directed containment twin (same shingle/cap discipline): fragments
-    // mostly inside a larger doc that symmetric Jaccard under-scores
-    "q_containment" -> ((s, d) => Dedup.containmentPairs(
-      Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.6,
-      maxDocFreq = Some(10L))),
-    "q_dup_clusters" -> ((s, d) => Dedup.dupClusters(
-      Dedup.ngramJaccardPairs(
-        Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8))),
-    // same clustering via alternating large-star/small-star rounds — the
-    // O(log n)-round path for non-clique duplicate graphs; identical
-    // output, so the oracle text is the same recursive closure
-    "q_dup_clusters_star" -> ((s, d) => Dedup.dupClustersStar(
-      Dedup.ngramJaccardPairs(
-        Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8))),
-    // quality survivorship: keep the LONGEST doc per cluster (ties -> min
-    // id) instead of resolveDuplicates' min-id representative
-    "q_dup_resolve_quality" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.resolveDuplicatesByQuality(docs,
-        Dedup.dupClusters(Dedup.ngramJaccardPairs(
-          docs, "doc_id", "text", n = 3, threshold = 0.8)),
-        "doc_id", "n_chars")
-        .select("doc_id", "n_chars").orderBy("doc_id")
-    }),
-    "q_minhash_lsh" -> ((s, d) => Dedup.minhashLshPairs(
-      Tables.documents(s, d), "doc_id", "text",
-      n = 3, numHashes = 32, bands = 8, threshold = 0.8)),
-    // the (bands, rows) S-curve table that PICKS the split before a
-    // signature pass is paid for: detection probability at the target
-    // threshold + FP/FN masses per power-of-two split of 128 hashes,
-    // exact by repeated squaring (no pow() ulp exposure)
-    "q_lsh_calibrate" -> ((s, _) => Dedup.lshCalibrate(
-      s, numHashes = 128, threshold = 0.5, gridLog2 = 4)),
-    // incremental ingest screen: every 5th doc is the "new batch", the
-    // rest is the persisted signature index; verification is the
-    // signature-estimated Jaccard, so the corpus text is never touched
-    "q_minhash_incremental" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      Dedup.minhashLshPairsAgainstIndex(
-        docs.filter(col("doc_id") % 5 === 0),
-        Dedup.minhashSignatures(docs.filter(col("doc_id") % 5 =!= 0),
-          "doc_id", "text", n = 3, numHashes = 32),
-        "doc_id", "text", n = 3, numHashes = 32, bands = 8,
-        minEstJaccard = 0.75)
-    }),
-    // the signature index LIFECYCLE: the %5 != 0 corpus's persisted
-    // signatures absorb a RE-CRAWL (every %10 == 1 doc returns with
-    // amended text) — the stale rows are evicted by one id anti-join
-    // and the fresh batch is signed once; the %5 == 0 probe batch then
-    // screens against the REFRESHED index. The oracle signs the
-    // post-re-crawl corpus directly, so the gate hash-greens only if
-    // the merge's replace semantics equal a from-scratch rebuild
-    "q_minhash_index_merge" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d)
-      val idx = Dedup.minhashSignatures(
-        docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
-        n = 3, numHashes = 32)
-      val recrawl = docs.filter(col("doc_id") % 10 === 1)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" updated edition")).as("text"))
-      val merged = Dedup.minhashIndexMerge(idx, recrawl, "doc_id",
-        "text", n = 3, numHashes = 32)
-      Dedup.minhashLshPairsAgainstIndex(
-        docs.filter(col("doc_id") % 5 === 0), merged, "doc_id",
-        "text", n = 3, numHashes = 32, bands = 8,
-        minEstJaccard = 0.75)
-    }),
-    "q_simhash" -> ((s, d) => Dedup.simhashPairs(
-      Tables.documents(s, d), "doc_id", "text", maxHamming = 3)),
-    // both embedding near-dup gates run the LSH scale plan (the O(n²)
-    // brute-force pair join is demoted to DedupSpec's recall reference —
-    // no gated query may carry a plan that dies at 100×). Two distinct
-    // (tables, planes) configurations exercise the recall/cost dial: more
-    // tables = higher recall at proportional candidate cost.
-    "q_emb_cosine_dup" -> ((s, d) => Dedup.embeddingCosinePairsLsh(
-      Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.42,
-      tables = 16, planes = 6)),
-    "q_emb_cosine_dup_lsh" -> ((s, d) => Dedup.embeddingCosinePairsLsh(
-      Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.42,
-      tables = 8, planes = 6)),
-    // the 100 TB form: plane count sized to the corpus so bucket
-    // occupancy (and thus candidate volume per vector) stays constant
-    // as n grows — the fixed-plane gates above measure quadratic
-    // candidate growth at 10x (SCALING.md); this one stays ~linear
-    "q_emb_cosine_dup_auto" -> ((s, d) =>
-      Dedup.embeddingCosinePairsLshAuto(Tables.embeddings(s, d), "vec_id",
-        "embedding", threshold = 0.42, tables = 8, minPlanes = 6,
-        targetPerBucket = 16)),
-    // --- training-data pipeline: similarity search ---
-    "q_cosine_topk" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, d)
-      Similarity.cosineTopK(emb, emb.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 5)
-    }),
-    "q_ann_topk" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.annTopKWithin(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, "vec_id", "embedding", k = 5)
-    }),
-    // graded ranking-quality scorecard over the cosine retrieval
-    // baseline: NDCG@10 with the CORPUS-WIDE ideal (from the label
-    // histogram, not the top-k list), MRR, precision/recall@10 —
-    // relevance grades: 2 = same label, 1 = adjacent label, 0 otherwise
-    "q_ndcg" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.embeddings(s, d)
-      val ranked = Similarity.cosineTopK(emb,
-        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-        k = 10)
-      val lab = emb.select(col("vec_id"), col("label"))
-      val rel = ranked
-        .join(lab.select(col("vec_id").as("cand_id"),
-          col("label").as("clab")), "cand_id")
-        .join(lab.select(col("vec_id").as("query_id"),
-          col("label").as("qlab")), "query_id")
-        .withColumn("rel",
-          when(col("qlab") === col("clab"), 2)
-            .when(abs(col("qlab") - col("clab")) === 1, 1).otherwise(0))
-      val hist = emb.groupBy(col("label")).agg(count(lit(1)).as("cnt"))
-      val queries = emb.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("query_id"), col("label").as("qlab"))
-      val gc2 = queries.join(broadcast(hist), col("qlab") === col("label"))
-        .select(col("query_id"), lit(2).as("rel"),
-          (col("cnt") - 1).as("avail"))
-      // adjacent-label availability as an EQUI join: the histogram shifted
-      // ±1 (labels-bounded), so no non-equi nested loop appears
-      val adj = hist.select((col("label") + 1).as("qlab"), col("cnt"))
-        .unionByName(hist.select((col("label") - 1).as("qlab"), col("cnt")))
-        .groupBy("qlab").agg(sum("cnt").as("cnt"))
-      val gc1 = queries.join(broadcast(adj), Seq("qlab"))
-        .select(col("query_id"), lit(1).as("rel"), col("cnt").as("avail"))
-      graft.ops.Models.rankingQuality(rel, "query_id", "rk", "rel",
-        gc2.unionByName(gc1), k = 10)
-    }),
-    // chunk→parent embedding aggregation: per-label element-wise mean +
-    // L2-normalized mean, flat (key, dim) rows
-    "q_emb_mean_pool" -> ((s, d) => Similarity.meanPoolEmbeddings(
-      Tables.embeddings(s, d), "label", "embedding")),
-    // the two-frame ANN form (distinct query frame, both sides bucketed)
-    "q_ann_topk_pair" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, d)
-      Similarity.annTopK(emb, emb.filter(col("vec_id") % 100 === 50),
-        "vec_id", "embedding", k = 5)
-    }),
-    // scalar int8 quantization of the embedding corpus: per-dim [min,max]
-    // grid, integer code checksums + reconstruction error per vector
-    "q_emb_quantize" -> ((s, d) => Similarity.quantizeEmbeddings(
-      Tables.embeddings(s, d), "vec_id", "embedding")),
-    // Matryoshka-style truncation ablation: energy retained at k dims
-    "q_emb_truncate" -> ((s, d) => Similarity.truncationEnergy(
-      Tables.embeddings(s, d), "vec_id", "embedding",
-      dims = Seq(8, 16, 32, 64))),
-    // grid=1024 trains the Lloyd loop on the dyadic 2^-10 lattice, which
-    // makes centroids — and therefore the whole probe/verify output —
-    // bit-deterministic cross-engine; the oracle replays all 3 Lloyd
-    // rounds (this was the last float-order no_oracle gate). The
-    // SimilaritySpec exactness gate (nprobe = nCells ⇒ equals brute
-    // force) and the nprobe = 2 recall floor still hold.
-    "q_ivf_topk" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, d)
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 5, nCells = 16, nprobe = 4,
-        grid = Some(1024))
-    }),
-    // per-cluster corpus map: k-means cells (dyadic Lloyd — the
-    // q_ivf_topk trainer) + size/share/cohesion per cell; the "what is
-    // IN this corpus" profile a curation run starts from
-    "q_cluster_profile" -> ((s, d) => Similarity.clusterProfile(
-      Tables.embeddings(s, d), "vec_id", "embedding", nCells = 16,
-      iters = 3)),
-    // encoder-health read: per-label centroid cosine + norm ratio vs
-    // the GLOBAL centroid — off-axis or norm-collapsed groups surface
-    // before corpus-mix weights trust them
-    "q_centroid_drift" -> ((s, d) => Similarity.centroidDrift(
-      Tables.embeddings(s, d), "label", "embedding")),
-    // cluster SEPARATION check: per-vector simplified silhouette
-    // (own-centroid cosine minus best-other cosine, dyadic lattice)
-    // aggregated per cell — is the clustering real before
-    // diverseSample/corpus-mix decisions trust the cells?
-    "q_silhouette" -> ((s, d) => Similarity.silhouette(
-      Tables.embeddings(s, d), "vec_id", "embedding", nCells = 16,
-      iters = 3)),
-    // SemDeDup within-cell semantic prune: the synthetic embeddings
-    // carry no natural near-dups (max pair cos ~0.5), so the gate
-    // PLANTS deterministic paraphrase copies (the q_pii_report
-    // discipline): every 25th vector gets a near-copy (id + 100000,
-    // per-dim alternating ±2^-8 jitter); quality = the aligned doc's
-    // n_chars, with the copy docked 1 (original wins) except every
-    // 50th where the copy gains 7 (quality overrides min-id — both
-    // keeper paths exercised). Expect: each planted pair pruned to
-    // its higher-quality member, all unplanted vectors kept. The pair
-    // pass runs the default top-2 multi-probe, so a planted pair
-    // straddling a converged cell boundary is still examined.
-    "q_semdedup" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.embeddings(s, d)
-      val orig = emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double"))
-          .as("embedding"))
-      val planted = emb.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            x.cast("double") + when(i % 2 === 0, lit(0.00390625))
-              .otherwise(lit(-0.00390625))).as("embedding"))
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"))
-      val corpus = orig.unionAll(planted)
-        .join(docs, expr("vec_id % 100000") === col("doc_id"))
-        .select(col("vec_id"), col("embedding"),
-          (col("n_chars") +
-            when(col("vec_id") >= 100000L && col("vec_id") % 50 === 0,
-              lit(7))
-              .when(col("vec_id") >= 100000L, lit(-1))
-              .otherwise(lit(0))).cast("long").as("quality"))
-      Similarity.semDedup(corpus, "vec_id", "embedding", "quality",
-        threshold = 0.95, nCells = 16, iters = 2)
-    }),
-    // occupancy-stable semDedup: the cell count DERIVED from the corpus
-    // count (max(4, 2^ceil(log2(ceil(n/64))))) so per-cell occupancy —
-    // and the multi-probe pair space — stays flat as data grows; same
-    // planted-paraphrase corpus and keeper rules as q_semdedup, and the
-    // oracle re-derives the cell count from DuckDB's own count(*)
-    "q_semdedup_auto" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.embeddings(s, d)
-      val orig = emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double"))
-          .as("embedding"))
-      val planted = emb.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            x.cast("double") + when(i % 2 === 0, lit(0.00390625))
-              .otherwise(lit(-0.00390625))).as("embedding"))
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"))
-      val corpus = orig.unionAll(planted)
-        .join(docs, expr("vec_id % 100000") === col("doc_id"))
-        .select(col("vec_id"), col("embedding"),
-          (col("n_chars") +
-            when(col("vec_id") >= 100000L && col("vec_id") % 50 === 0,
-              lit(7))
-              .when(col("vec_id") >= 100000L, lit(-1))
-              .otherwise(lit(0))).cast("long").as("quality"))
-      Similarity.semDedupAuto(corpus, "vec_id", "embedding", "quality",
-        threshold = 0.95, minCells = 4, targetPerCell = 64, iters = 2)
-    }),
-    // cluster-balanced diverse subset: perCell md5-ordered picks from
-    // EVERY cell — the anti-mode-collapse sampler for eval/annotation
-    // sets over a long-tailed corpus
-    "q_diverse_sample" -> ((s, d) => Similarity.diverseSample(
-      Tables.embeddings(s, d), "vec_id", "embedding", nCells = 16,
-      perCell = 5, iters = 3)),
-    // IVF-PQ: inverted-file candidate pruning + product-quantized ADC
-    // scoring (4 subspaces × 16 codes, dyadic-exact squared-L2 — the
-    // FAISS-style compressed-index scale path)
-    "q_pq_topk" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, d)
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", k = 5, nCells = 16, nprobe = 4,
-        ivfIters = 2, m = 4, nCodes = 16, pqIters = 2, grid = 1024,
-        refine = 4)
-    }),
-    // k-NN label-noise screen: sampled labeled points, 10 exact-cosine
-    // neighbors vote; majority != own flags a candidate mislabel —
-    // the confident-learning-lite review queue
-    "q_label_noise" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.labelNoiseScreen(Tables.embeddings(s, d),
-        col("vec_id") % 25 === 0, "vec_id", "embedding", "label",
-        k = 10)
-    }),
-    // Johnson-Lindenstrauss distortion report: ±1 md5 projection to 16
-    // dims, pairwise distance ratios on a bounded sampled pair set —
-    // "can we serve these embeddings at k dims?"
-    "q_jl_project" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.jlDistortion(Tables.embeddings(s, d),
-        col("vec_id") % 50 === 0, col("vec_id") % 50 === 7,
-        "vec_id", "embedding", kDims = 16)
-    }),
-    // LSH recall curve: one bucketing at 8 tables, each config t is
-    // the prefix filter "min matching table < t" — recall monotone in
-    // tables by construction; completes the ANN quality story for the
-    // hyperplane family (q_ann_quality covers IVF-PQ)
-    "q_lsh_quality" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.lshQualitySweep(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, "vec_id", "embedding", k = 5,
-        tablesGrid = Seq(2, 4, 8), planes = 4)
-    }),
-    // recall-vs-cost curve over ONE deterministic IVF-PQ index: the
-    // production ANN tuning table (which (nprobe, refine) clears 0.9?)
-    // — index trains once, ADC scores once, configs are rank filters
-    "q_ann_quality" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, d)
-      Similarity.annQualitySweep(emb, col("vec_id") % 100 === 0,
-        "vec_id", "embedding", k = 5, nCells = 16,
-        nprobes = Seq(4, 8, 16), refines = Seq(4, 8, 16),
-        ivfIters = 2, m = 16, nCodes = 64, pqIters = 2, grid = 1024)
-    }),
-    // label-centroid cosine matrix: per-label mean embeddings (rounded
-    // per dim) × labels²-bounded pairwise cosine — class-overlap screen
-    "q_centroid_sim" -> ((s, d) => Similarity.centroidSimilarity(
-      Tables.embeddings(s, d), "label", "embedding")),
-    // greedy MMR diverse selection: k=8 picks maximizing
-    // 0.5·relevance − 0.5·max-cos-to-selected (relevance = the rounded
-    // demo-md5 sigmoid score, so every input to the greedy argmax is
-    // deterministic cross-engine)
-    "q_mmr_select" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, d)
-      val rel = graft.ops.Models.scoreLinear(emb, "vec_id", "embedding",
-        Seq(), graft.ops.Models.md5Weights(s, "demo", 64), bias = 0.1)
-        .select(col("vec_id"), col("score").as("rel"))
-      graft.ops.Curation.mmrSelect(emb, "vec_id", "embedding", rel,
-        k = 8)
-    }),
-    // --- training-data pipeline: text analysis ---
-    "q_lang_id" -> ((s, d) =>
-      Text.langId(Tables.documents(s, d), "doc_id", "text")),
-    "q_quality" -> ((s, d) =>
-      Text.qualityScore(Tables.documents(s, d), "doc_id", "text")),
-    // which rule earns its place: per-rule fail / unique-fail /
-    // ordered-marginal / survivor counts for the quality battery —
-    // the table a filter pipeline reads before reordering or retiring
-    // a rule
-    "q_filter_attribution" -> ((s, d) =>
-      Text.filterAttribution(Tables.documents(s, d), "doc_id", "text")),
-    // mojibake audit: U+FFFD replacement chars and C0 control leakage
-    // per source; the synthetic corpus is clean, so every 9th doc gets
-    // a deterministic replacement-char suffix and every 9k+1th a
-    // control-char suffix (mirrored in the oracle) — the gate counts
-    // real damage, not a wall of zeros
-    "q_encoding_report" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(col("source"),
-        col("doc_id"),
-        when(col("doc_id") % 9 === 0,
-          concat(coalesce(col("text"), lit("")), lit(" �� damaged")))
-          .when(col("doc_id") % 9 === 1,
-            concat(coalesce(col("text"), lit("")),
-              lit(" \u0007\u0001 junk")))
-          .otherwise(col("text")).as("text"))
-      Text.encodingReport(docs, "doc_id", "text", "source")
-    }),
-    "q_token_counts" -> ((s, d) =>
-      Text.tokenCounts(Tables.documents(s, d), "doc_id", "text")),
-    "q_fingerprint" -> ((s, d) =>
-      Text.fingerprints(Tables.documents(s, d), "doc_id", "text", n = 3)),
-    "q_term_freq" -> ((s, d) =>
-      Text.termFrequencies(Tables.documents(s, d), "doc_id", "text", 20)),
-    "q_redact" -> ((s, d) =>
-      Text.redact(Tables.documents(s, d), "doc_id", "text")),
-    // corpus-hygiene rollup: per-source PII density (emails + long
-    // digit runs per 1k chars) — where does the scrub pass pay? The
-    // synthetic corpus carries no PII, so every 3rd doc gets a
-    // deterministic injected contact line (mirrored in the oracle) —
-    // the gate counts real hits, not a wall of zeros
-    "q_pii_report" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).withColumn("text",
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" contact user"),
-            col("doc_id").cast("string"), lit("@mail.example.com ref "),
-            (col("doc_id") * 7919 + 100000).cast("string")))
-          .otherwise(col("text")))
-      Text.piiReport(docs, "doc_id", "text", "source")
-    }),
-    // trigram stupid-backoff LM scoring: counts from the train split
-    // (doc_id % 7 != 0), every 7th doc scored against them — unseen
-    // eval trigrams exercise the backoff chain in the gate itself; the
-    // per-doc backoff depth (tri/bi/uni hits) is published
-    "q_lm_trigram" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      Text.lmTrigramScore(docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text")
-    }),
-    // 5-gram stupid backoff — the order CCNet's actual KenLM filter
-    // runs at: same train/eval split, four backoff rungs (dyadic
-    // lambda powers), published depth counters n_5..n_1
-    "q_lm_5gram" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      Text.lm5gramScore(docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text")
-    }),
-    // the 5-gram LM as a PUBLISHED artifact (the KenLM production
-    // shape): train split -> long-format count-table index, eval split
-    // scored against it with no retraining, rolled up per source —
-    // exact integer rung hits, round-6 share quotients, order-free
-    // min/max ppl
-    "q_lm_published" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      // consumes the per-JVM published parquet index (r17 — this gate's
-      // own semantics: the LM is a static artifact, scored with no
-      // retraining; the index BUILD stays measured live in q_lm_5gram)
-      Text.lmSourceReport(docs.filter(col("doc_id") % 7 === 0),
-        lmIndexModel(s, d), "doc_id", "text", "source")
-    }),
-    // the LM index LIFECYCLE: yesterday's index (train docs with
-    // doc_id % 7 ∉ {0, 6}) absorbs today's batch (% 7 == 6) via the
-    // additive count merge — never re-tokenizing yesterday's corpus —
-    // and the eval split scores against the MERGED artifact. The
-    // oracle replays the FULL-train (% 7 != 0) rebuild, so the gate
-    // hash-greens ONLY if merge(old, batch) ≡ rebuild(full) exactly
-    // (the mergeAggStates identity, cross-engine)
-    "q_lm_index_merge" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      val old = Text.lmCountIndex(
-        docs.filter(col("doc_id") % 7 =!= 0 && col("doc_id") % 7 =!= 6),
-        "text")
-      val merged = Text.lmCountIndexMerge(old,
-        docs.filter(col("doc_id") % 7 === 6), "text")
-      Text.lmSourceReport(docs.filter(col("doc_id") % 7 === 0), merged,
-        "doc_id", "text", "source")
-    }),
-    // the live twin: per-hour backoff-depth mix of the incoming
-    // (eval-split) stream scored against the published LM index —
-    // deep-rung share jumping = verbatim re-crawl of the train corpus,
-    // base-rung share jumping = gibberish/new-language/encoding break
-    "q_windowed_lm_depth" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d)
-      // the monitor's contract says `index` is a MATERIALIZED parameter
-      // table — consume the per-JVM published parquet index (r17; the
-      // scoring core lazily pins the bounded scan itself)
-      val idx = lmIndexModel(s, d)
-      val stream = docs.filter(col("doc_id") % 7 === 0).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        col("doc_id"), col("text"))
-      graft.streaming.Streams.windowedLmDepthMix(stream, "ts",
-        "doc_id", "text", idx).orderBy("window_start")
-    }),
-    // CCNet-style head/middle/tail perplexity bucketing of the eval
-    // split at the global 1/3 and 2/3 percentiles, per-source shares —
-    // the "keep head+middle, audit tail" curation cut
-    "q_ccnet_buckets" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      // scores against the per-JVM published LM index (r17): the
-      // order-3 path reads the n <= 3 slices, row-identical to the
-      // inline order-3 rollup (spec-pinned); the trigram build chain
-      // stays measured live in q_lm_trigram
-      Text.perplexityBuckets(docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-        "source", index = Some(lmIndexModel(s, d)))
-    }),
-    // the same bucketing re-pointed at the 5-gram LM (order = 5): the
-    // production CCNet configuration — exact-integer ECDF thirds over
-    // the 5-gram score perplexities
-    "q_ccnet_buckets5" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      // scores against the per-JVM published LM index (r17); the
-      // 5-gram build chain stays measured live in q_lm_5gram
-      Text.perplexityBuckets(docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-        "source", order = 5, index = Some(lmIndexModel(s, d)))
-    }),
-    // DSIR importance resampling: hashed-trigram log-ratio weights
-    // (target = the quality fixture's clean rows) + md5-derived
-    // Gumbel-top-k draw — sampling proportional to exp(weight)
-    // without replacement, fully deterministic
-    "q_dsir" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      import s.implicits._
-      val target = Text.qualityFixture.toDF("id", "y", "text")
-        .filter(col("y") === 1)
-        .select(col("id").as("doc_id"), col("text"))
-      graft.ops.Curation.dsirSelect(target, Tables.documents(s, d),
-        "doc_id", "text", k = 50)
-    }),
-    // what did importance resampling CHANGE: the q_dsir selection
-    // rolled up per source against the corpus base rates —
-    // delta_share > 0 means DSIR up-weights the source
-    "q_dsir_mix" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      import s.implicits._
-      val target = Text.qualityFixture.toDF("id", "y", "text")
-        .filter(col("y") === 1)
-        .select(col("id").as("doc_id"), col("text"))
-      graft.ops.Curation.dsirMixReport(target, Tables.documents(s, d),
-        "doc_id", "text", "source", k = 50)
-    }),
-    // what did steering toward the target COST in diversity: token and
-    // 3-shingle type-token ratios for the corpus, the DSIR selection,
-    // and a size-matched md5-hash baseline (the control that removes
-    // the small-sample TTR bias from the comparison)
-    "q_selection_diversity" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      import s.implicits._
-      val target = Text.qualityFixture.toDF("id", "y", "text")
-        .filter(col("y") === 1)
-        .select(col("id").as("doc_id"), col("text"))
-      graft.ops.Curation.selectionDiversityReport(target,
-        Tables.documents(s, d), "doc_id", "text", k = 50)
-    }),
-    // train/test decontamination: eval set = every 7th doc, train = rest
-    "q_decontaminate" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      Dedup.decontaminate(docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text", n = 3)
-    }),
-    // the standard multi-n eval-leakage table: per (n in {8,13,20},
-    // eval doc) worst-overlapping train doc + containment fraction —
-    // which benchmark items leak, how badly, and from where
-    "q_decontaminate_multi" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      Dedup.decontaminateMulti(docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-        ns = Seq(8, 13, 20))
-    }),
-    // C4-style line-level dedup with document REWRITE: the corpus has
-    // no newlines, so the gate injects deterministic line structure
-    // (the q_pii_report discipline) — every 5th doc gets a global
-    // banner line, every doc gets its source's syndication footer; the
-    // op must excise each boilerplate line everywhere but its
-    // (min id, min pos) occurrence and hand back the cleaned remainder
-    "q_line_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val lined = Tables.documents(s, d).select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 5 === 0,
-            lit("breaking: subscribe banner\n")).otherwise(lit("")),
-          col("text"), lit("\n"),
-          lit("(c) "), col("source"), lit(" syndication network"))
-          .as("text"))
-      Dedup.lineDedup(lined, "doc_id", "text")
-    }),
-    // exact-substring (token-span) dedup with rewrite — the last rung
-    // of the doc -> line -> span ladder (Lee et al. 2022): every 4th
-    // doc gets a 12-token license blurb prefix, every doc gets its
-    // source's 13-token promo footer; the duplicated k-token spans are
-    // excised everywhere but the corpus-wide (min id, min pos)
-    // occurrence, and boundary spans that mix doc-unique text never
-    // qualify — mirrored verbatim in the oracle
-    "q_substring_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val lined = Tables.documents(s, d).select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            lit("this work is licensed under a creative commons " +
-              "attribution share alike license ")).otherwise(lit("")),
-          col("text"), lit(" visit the "), col("source"),
-          lit(" archive for more stories and daily updates from our " +
-            "editors")).as("text"))
-      Dedup.substringDedup(lined, "doc_id", "text", k = 8)
-    }),
-    // WHERE does the verbatim duplication come from: source pairs
-    // sharing cross-doc duplicated k-token SPANS (same injection as
-    // q_substring_dedup — the license blurb lands in the doc_id%4
-    // slices of every source, each source shares its own promo footer
-    // within itself)
-    "q_substring_sources" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val lined = Tables.documents(s, d).select(col("doc_id"),
-        col("source"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            lit("this work is licensed under a creative commons " +
-              "attribution share alike license ")).otherwise(lit("")),
-          col("text"), lit(" visit the "), col("source"),
-          lit(" archive for more stories and daily updates from our " +
-            "editors")).as("text"))
-      Dedup.substringSourceReport(lined, "doc_id", "text", "source",
-        k = 8)
-    }),
-    // incremental span screen: yesterday's corpus (train split, same
-    // injections) publishes its qualifying span-digest index; the
-    // incoming batch (eval split) is fingerprinted in-row and screened
-    // by digest equi-join — NO corpus re-fingerprint, the live
-    // crawler-loop alarm for verbatim spans. Per flagged doc: span and
-    // token coverage via the exact lag-window interval union
-    "q_substring_incremental" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      def inj(df: org.apache.spark.sql.DataFrame) = df.select(
-        col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            lit("this work is licensed under a creative commons " +
-              "attribution share alike license ")).otherwise(lit("")),
-          col("text"), lit(" visit the "), col("source"),
-          lit(" archive for more stories and daily updates from our " +
-            "editors")).as("text"))
-      val docs = Tables.documents(s, d)
-      val index = Dedup.substringSpanIndex(
-        inj(docs.filter(col("doc_id") % 7 =!= 0)), "doc_id", "text",
-        k = 8)
-      Dedup.substringScreenAgainstIndex(
-        inj(docs.filter(col("doc_id") % 7 === 0)), index, "doc_id",
-        "text", k = 8)
-    }),
-    // multi-width span ladder: rungs {8,16,32} qualified independently
-    // at their own width, per-rung exact interval-union coverage — the
-    // survival-curve read on verbatim duplication LENGTH (a 37-token
-    // license blurb injected on doc_id % 5 = 0 exercises the k=32
-    // rung; the per-source archive suffix feeds the short rungs)
-    "q_substring_ladder" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(col("doc_id"), concat(
-        when(col("doc_id") % 5 === 0, lit(ladderBlurb + " "))
-          .otherwise(lit("")),
-        coalesce(col("text"), lit("")), lit(" visit the "),
-        col("source"),
-        lit(" archive for more stories and daily updates from our " +
-          "editors")).as("text"))
-      Dedup.substringLadder(docs, "doc_id", "text",
-        ks = Seq(8, 16, 32), minDocs = 2)
-    }),
-    // the ladder's LIVE monitor: train split (same ladder injection)
-    // publishes the per-rung digest index; the eval stream is
-    // fingerprinted at all rungs in one projection and hit-counted per
-    // (hour window, rung) — the survival curve over time
-    "q_windowed_span_ladder" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      def inj(df: org.apache.spark.sql.DataFrame) = df.select(
-        col("doc_id"), concat(
-          when(col("doc_id") % 5 === 0, lit(ladderBlurb + " "))
-            .otherwise(lit("")),
-          coalesce(col("text"), lit("")), lit(" visit the "),
-          col("source"),
-          lit(" archive for more stories and daily updates from our " +
-            "editors")).as("text"))
-      val docs = Tables.documents(s, d)
-      val index = Dedup.substringLadderIndex(
-        inj(docs.filter(col("doc_id") % 7 =!= 0)), "doc_id", "text",
-        ks = Seq(8, 16, 32), minDocs = 2)
-      val stream = inj(docs.filter(col("doc_id") % 7 === 0)).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        col("doc_id"), col("text"))
-      graft.streaming.Streams.windowedSpanLadderMix(stream, "ts",
-        "doc_id", "text", index, ks = Seq(8, 16, 32))
-        .orderBy("window_start", "k")
-    }),
-    // the span index LIFECYCLE: yesterday's UN-thresholded digest
-    // state (train split) absorbs today's batch (eval split, disjoint
-    // ids) via the additive count merge — never re-fingerprinting
-    // yesterday's corpus — then the qualifying screen index publishes
-    // from the merged state. The oracle rebuilds from the FULL corpus,
-    // so the gate hash-greens only if merge ≡ rebuild exactly —
-    // including the digests seen once on EACH side that a thresholded
-    // artifact would have lost
-    "q_span_index_merge" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      def inj(df: org.apache.spark.sql.DataFrame) = df.select(
-        col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            lit("this work is licensed under a creative commons " +
-              "attribution share alike license ")).otherwise(lit("")),
-          col("text"), lit(" visit the "), col("source"),
-          lit(" archive for more stories and daily updates from our " +
-            "editors")).as("text"))
-      val docs = Tables.documents(s, d)
-      val state = Dedup.substringSpanState(
-        inj(docs.filter(col("doc_id") % 7 =!= 0)), "doc_id", "text",
-        k = 8)
-      val merged = Dedup.substringSpanStateMerge(state,
-        inj(docs.filter(col("doc_id") % 7 === 0)), "doc_id", "text",
-        k = 8)
-      Dedup.substringSpanIndexFromState(merged, minDocs = 2)
-    }),
-    // the crawler-loop alarm made CONTINUOUS: per-hour span-hit rate of
-    // the incoming (eval-split) stream against yesterday's span-digest
-    // index — the windowedDupRate two-level aggregation over the same
-    // injections and index as q_substring_incremental
-    "q_windowed_span_hits" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      def inj(df: org.apache.spark.sql.DataFrame) = df.select(
-        col("doc_id"),
-        concat(
-          when(col("doc_id") % 4 === 0,
-            lit("this work is licensed under a creative commons " +
-              "attribution share alike license ")).otherwise(lit("")),
-          col("text"), lit(" visit the "), col("source"),
-          lit(" archive for more stories and daily updates from our " +
-            "editors")).as("text"))
-      val docs = Tables.documents(s, d)
-      val index = Dedup.substringSpanIndex(
-        inj(docs.filter(col("doc_id") % 7 =!= 0)), "doc_id", "text",
-        k = 8)
-      val stream = inj(docs.filter(col("doc_id") % 7 === 0)).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        col("doc_id"), col("text"))
-      graft.streaming.Streams.windowedSpanHitRate(stream, "ts",
-        "doc_id", "text", index, k = 8).orderBy("window_start")
-    }),
-    // WHERE does the boilerplate come from: source pairs sharing
-    // cross-doc duplicated lines (same injected structure as
-    // q_line_dedup — the banner lands in the doc_id%5 sources, each
-    // source shares its own footer within itself)
-    "q_boilerplate_sources" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val lined = Tables.documents(s, d).select(col("doc_id"),
-        col("source"),
-        concat(
-          when(col("doc_id") % 5 === 0,
-            lit("breaking: subscribe banner\n")).otherwise(lit("")),
-          col("text"), lit("\n"),
-          lit("(c) "), col("source"), lit(" syndication network"))
-          .as("text"))
-      Dedup.boilerplateSourceReport(lined, "doc_id", "text", "source")
-    }),
-    // line-level quality rewrite (q_line_dedup's heuristic sibling):
-    // every doc gets an injected junk ad line, every 3rd doc a second
-    // one prepended; the op must strip exactly the junk (digit/punct
-    // noise scores ~0 on the quality battery, prose ~1) and keep the
-    // cleaned remainder with accounting
-    "q_line_quality" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val lined = Tables.documents(s, d).select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 3 === 0,
-            lit("@@@ 999999 4077 ###\n")).otherwise(lit("")),
-          col("text"),
-          lit("\n$$$ 4099 2077 buy !!!")).as("text"))
-      Text.lineQualityRewrite(lined, "doc_id", "text")
-    }),
-    // which terms characterize src0 against src1: Monroe log-odds
-    // with an informative Dirichlet prior (|z| > 1.96 = a term that
-    // genuinely distinguishes the slices)
-    "q_keyness" -> ((s, d) =>
-      Text.keyness(Tables.documents(s, d), "doc_id", "text", "source",
-        "src0", "src1")),
-    // heavy-tail diagnostic: coarse Hill plot of the item-purchase
-    // frequency tail at k in {10,20,50} — alpha stable across k = a
-    // real power law (q_zipf's maximum-likelihood companion; the doc
-    // corpus's closed 31-word vocabulary can't carry a tail, the
-    // ~2000-item purchase domain can)
-    "q_hill_tail" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      Text.hillFromCounts(Tables.lineitem(s, d)
-        .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_bought")),
-        "l_partkey", "n_bought")
-    }),
-    // Heaps-law vocabulary growth V ~ K*n^beta over md5-shard unions
-    // (no global doc ordering — the scale-safe growth curve); the
-    // unit is TRIGRAM SHINGLES, the open recombination vocabulary —
-    // the corpus's closed unigram list saturates immediately
-    "q_heaps" -> ((s, d) =>
-      Text.heapsLaw(Tables.documents(s, d), "doc_id", "text",
-        shards = 16, tokenizer = Text.shingleTokenizer(3))),
-    // per-doc trigram novelty of the "new batch" (every 7th doc) vs the
-    // reference corpus vocabulary — the acquisition-freshness grade
-    "q_novelty" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      Dedup.noveltyRates(docs.filter(col("doc_id") % 7 === 0),
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text", n = 3)
-    }),
-    // ANN-grade hard negatives: per anchor, the most similar NON-dup
-    // corpus vector (cos just below the dup line) from the LSH buckets —
-    // plane count sized to the corpus (the occupancy-stable scale config;
-    // fixed planes measured 3.1x at 10x data, auto holds occupancy flat)
-    "q_hard_negatives" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Dedup.hardNegativePairs(emb, "vec_id", "embedding",
-        dupThreshold = 0.42, tables = 8,
-        planes = Dedup.autoPlanes(emb.count(), 6, 16))
-    }),
-    // semantic decontamination: embedding-space train-vs-eval screen
-    // (paraphrase leakage the n-gram screen cannot see)
-    "q_emb_decontaminate" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s, d)
-      Dedup.decontaminateByEmbedding(emb.filter(col("vec_id") % 10 =!= 0),
-        emb.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
-        threshold = 0.42, tables = 8, planes = 6)
-    }),
-    "q_hash_sample" -> ((s, d) =>
-      graft.ops.Curation.hashSample(Tables.documents(s, d), "doc_id", 0.25)
-        .select("doc_id").orderBy("doc_id")),
-    // SCD2 history build: half-open validity intervals per user from the
-    // event change log (one keyed lead window)
-    "q_scd2" -> ((s, d) => graft.ops.Etl.scd2FromChangeLog(
-      Tables.events(s, d), "user_id", "ts", "event_id", "event_type")),
-    // cross-table record linkage: nation-blocked candidates, normalized
-    // levenshtein score, best supplier per customer above 0.65
-    "q_record_linkage" -> ((s, d) => graft.ops.Linkage.linkRecords(
-      Tables.customer(s, d), Tables.supplier(s, d),
-      "c_custkey", "s_suppkey", "c_nationkey", "s_nationkey",
-      "c_name", "s_name", threshold = 0.65)),
-    // top principal embedding direction via 3 fixed power-iteration
-    // rounds (O(dims) state, never a dims^2 covariance)
-    "q_top_pc" -> ((s, d) => graft.ops.Similarity.topPrincipalComponent(
-      Tables.embeddings(s, d), "vec_id", "embedding", iterations = 3)),
-    // quantile normalization of n_chars across sources (rank within
-    // source -> cross-source rank-mean)
-    "q_quantile_norm" -> ((s, d) => graft.ops.Features.quantileNormalize(
-      Tables.documents(s, d), "source", "doc_id", "n_chars")),
-    // DP-shaped noisy per-source counts (seeded md5 Laplace inverse-CDF,
-    // eps=1 — deterministic release, oracle replays the draw)
-    "q_dp_counts" -> ((s, d) => graft.ops.Stats.dpNoisyCounts(
-      Tables.documents(s, d), "source", epsilon = 1.0, seed = "dp1")),
-    // k-anonymity / l-diversity release gate: QI = (nation, segment),
-    // sensitive = the in-debt flag — the privacy scorecard a curated
-    // dataset passes before it ships (companion to q_redact/q_dp_counts)
-    "q_k_anonymity" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      graft.ops.Curation.kAnonymityReport(
-        Tables.customer(s, d)
-          .withColumn("in_debt", col("c_acctbal") < 0),
-        Seq("c_nationkey", "c_mktsegment"), "in_debt", k = 10)
-    }),
-    // Kaplan-Meier time-to-second-order survival per first-order
-    // priority: right-censored at the corpus max date; both KM windows
-    // run over the per-group distinct-duration frame
-    "q_survival" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val ranked = Tables.orders(s, d)
-        .withColumn("__r", row_number().over(w))
-      val first = ranked.filter(col("__r") === 1)
-        .select(col("o_custkey"), col("o_orderdate").as("__d1"),
-          col("o_orderpriority").as("grp"))
-      val second = ranked.filter(col("__r") === 2)
-        .select(col("o_custkey"), col("o_orderdate").as("__d2"))
-      val horizon = Tables.orders(s, d)
-        .agg(max(col("o_orderdate")).as("__hz"))
-      val subjects = first.join(second, Seq("o_custkey"), "left")
-        .crossJoin(broadcast(horizon))
-        .withColumn("dur", when(col("__d2").isNotNull,
-          datediff(col("__d2"), col("__d1")))
-          .otherwise(datediff(col("__hz"), col("__d1"))))
-        .withColumn("event",
-          when(col("__d2").isNotNull, 1).otherwise(0))
-      graft.ops.Stats.kaplanMeier(subjects, "grp", "dur", "event")
-    }),
-    // Nelson-Aalen cumulative hazard on the same right-censored
-    // time-to-second-order subjects (q_survival's additive twin)
-    "q_nelson_aalen" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val ranked = Tables.orders(s, d)
-        .withColumn("__r", row_number().over(w))
-      val first = ranked.filter(col("__r") === 1)
-        .select(col("o_custkey"), col("o_orderdate").as("__d1"),
-          col("o_orderpriority").as("grp"))
-      val second = ranked.filter(col("__r") === 2)
-        .select(col("o_custkey"), col("o_orderdate").as("__d2"))
-      val horizon = Tables.orders(s, d)
-        .agg(max(col("o_orderdate")).as("__hz"))
-      val subjects = first.join(second, Seq("o_custkey"), "left")
-        .crossJoin(broadcast(horizon))
-        .withColumn("dur", when(col("__d2").isNotNull,
-          datediff(col("__d2"), col("__d1")))
-          .otherwise(datediff(col("__hz"), col("__d1"))))
-        .withColumn("event",
-          when(col("__d2").isNotNull, 1).otherwise(0))
-      graft.ops.Stats.nelsonAalen(subjects, "grp", "dur", "event")
-    }),
-    // log-rank test: do urgent-priority first orders reconvert at a
-    // different rate than the rest? (q_survival's hypothesis test)
-    "q_logrank" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val ranked = Tables.orders(s, d)
-        .withColumn("__r", row_number().over(w))
-      val first = ranked.filter(col("__r") === 1)
-        .select(col("o_custkey"), col("o_orderdate").as("__d1"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-            "fast").otherwise("slow").as("grp"))
-      val second = ranked.filter(col("__r") === 2)
-        .select(col("o_custkey"), col("o_orderdate").as("__d2"))
-      val horizon = Tables.orders(s, d)
-        .agg(max(col("o_orderdate")).as("__hz"))
-      val subjects = first.join(second, Seq("o_custkey"), "left")
-        .crossJoin(broadcast(horizon))
-        .withColumn("dur", when(col("__d2").isNotNull,
-          datediff(col("__d2"), col("__d1")))
-          .otherwise(datediff(col("__hz"), col("__d1"))))
-        .withColumn("event",
-          when(col("__d2").isNotNull, 1).otherwise(0))
-      graft.ops.Stats.logRank(subjects, "grp", "dur", "event")
-    }),
-    // mutual information lang×source: per-cell PMI + contribution
-    // decomposition (cell counts checkpointed; marginals + 1-row total
-    // are cell-frame aggregates broadcast back)
-    "q_mutual_info" -> ((s, d) => graft.ops.Stats.mutualInformation(
-      Tables.documents(s, d), "lang", "source")),
-    // length-bucketed batching: quartile token-count buckets + padding
-    // waste per bucket (the batcher's pad-to-max cost)
-    "q_length_buckets" -> ((s, d) => graft.ops.Curation.lengthBuckets(
-      Tables.documents(s, d), "doc_id", "text", buckets = 4)),
-    // two-sided 5/95 winsorization of the price column with before/after
-    // means and clip counts
-    "q_winsorize" -> ((s, d) => graft.ops.Curation.winsorize(
-      Tables.lineitem(s, d), "l_extendedprice", 0.05, 0.95)),
-    // deterministic contrastive negatives: 2 md5-ordered successors per
-    // doc within 8 md5 buckets
-    "q_negative_pairs" -> ((s, d) => graft.ops.Curation.negativePairs(
-      Tables.documents(s, d), "doc_id", k = 2, buckets = 8, seed = "neg1")),
-    // weighted sampling: inclusion prob ∝ length band (1 + n_chars div 256)
-    // at dyadic rate 1/64 — thresholds exact on the 2^20 grid both engines
-    "q_weighted_sample" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Curation.weightedSample(
-        Tables.documents(s, d)
-          .withColumn("w", lit(1L) + expr("n_chars div 256")),
-        "doc_id", "w", rate = 0.015625)
-        .select(col("doc_id"), col("w")).orderBy("doc_id")
-    }),
-    // exact-k per-source sample: md5(seed,id) order, 15 docs per stratum
-    // (strata hold 25 docs, so the cut is real, not a keep-all)
-    "q_sample_exact_k" -> ((s, d) =>
-      graft.ops.Curation.sampleExactK(Tables.documents(s, d), "doc_id",
-        "source", k = 15, seed = "s7")),
-    // corpus mixing: dyadic per-source rates so the kept set is engine-exact
-    // GPT-3/LLaMA-style temperature mixing recipe: per-source token
-    // shares tempered by p^0.5 (sqrt composition — cross-engine-exact
-    // power), renormalized over a pinned source order, budgeted
-    "q_temperature_mix" -> ((s, d) => graft.ops.Curation.temperatureMix(
-      Tables.documents(s, d), "source", "text", tau = 0.5,
-      targetTokens = 100000L)),
-    // the allocation temperatureMix can NOT produce: epoch-capped
-    // token budgets solved by exact one-pass waterfilling (capped
-    // sources are a prefix of the saturation order) — tau=0.25
-    // flattens hard enough that the smallest sources hit the 1-epoch
-    // cap at a 19/20 budget and the remainder redistributes
-    "q_mix_budget" -> ((s, d) => graft.ops.Curation.mixBudgetPlan(
-      Tables.documents(s, d), "source", "text", tau = MixTau,
-      budgetNum = MixBudgetNum, budgetDen = MixBudgetDen,
-      maxEpochs = MixMaxEpochs)),
-    // the plan EXECUTED: per-source allocation applied as a
-    // deterministic md5-bucket sampling rate, with the
-    // planned-vs-achieved reconciliation a budget owner reads after
-    // the run
-    "q_mix_budget_apply" -> ((s, d) => graft.ops.Curation.mixBudgetApply(
-      Tables.documents(s, d), "doc_id", "source", "text", tau = MixTau,
-      budgetNum = MixBudgetNum, budgetDen = MixBudgetDen)),
-    // empirical-Bayes credibility shrinkage of per-source mean length:
-    // a k=16-pseudo-doc prior keeps tiny sources from topping the table
-    "q_source_shrinkage" -> ((s, d) =>
-      graft.ops.Curation.shrunkSourceMeans(Tables.documents(s, d),
-        "source", "n_chars", k = 16)),
-    // two-way IPF raking: weights matching BOTH the source and lang
-    // margins to equal-share targets
-    "q_raking" -> ((s, d) => graft.ops.Curation.rakeWeights(
-      Tables.documents(s, d), "source", "lang", rounds = 3)),
-    // the raked mix's price tag: Kish effective sample size + design
-    // effect per source over the published round-6 rake weights
-    "q_ess" -> ((s, d) => graft.ops.Curation.essReport(
-      graft.ops.Curation.rakeWeights(Tables.documents(s, d), "source",
-        "lang", rounds = 3), "source", "n_docs", "weight")),
-    "q_corpus_mix" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Curation.corpusMix(Tables.documents(s, d), "doc_id",
-        "source", Map("src0" -> 1.0, "src1" -> 0.5), defaultRate = 0.125)
-        .groupBy("source").agg(count(lit(1)).as("n_docs"))
-        .orderBy("source")
-    }),
-    "q_mix_report" -> ((s, d) => graft.ops.Curation.mixReport(
-      Tables.documents(s, d), "source", "text", "lang")),
-    "q_repetition" -> ((s, d) =>
-      Text.repetitionStats(Tables.documents(s, d), "doc_id", "text", n = 3)),
-    // context-window chunking: 32-token windows overlapping by 8
-    "q_chunk" -> ((s, d) =>
-      Text.chunk(Tables.documents(s, d), "doc_id", "text",
-        chunkTokens = 32, overlap = 8)),
-    // token-budget sequence packing: 256-token bins over 8 parallel groups
-    "q_pack" -> ((s, d) => graft.ops.Curation.packSequences(
-      Tables.documents(s, d), "doc_id", "text",
-      budgetTokens = 256L, nGroups = 8)),
-    // batch emission: id-ordered concatenation per (group, bin)
-    "q_pack_batches" -> ((s, d) => graft.ops.Curation.packedBatches(
-      Tables.documents(s, d), "doc_id", "text",
-      budgetTokens = 256L, nGroups = 8)),
-    // same chunker budgeted in sub-word units (the pluggable-tokenizer
-    // seam). The synthetic corpus is pure space-joined words — sub-word ≡
-    // whitespace on it — so both sub-word gates append a punctuated
-    // suffix (" #<id>.") first: the unit difference becomes real (+2
-    // tokens/doc) and the oracle replays the same derivation.
-    "q_chunk_subword" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      Text.chunk(Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"), lit(" #"), col("doc_id").cast("string"),
-          lit(".")).as("text")),
-        "doc_id", "text", chunkTokens = 48, overlap = 8,
-        tokenizer = Text.subwordTokenizer)
-    }),
-    // packing under the sub-word budget — n_tokens/bins in BPE-ish units
-    "q_pack_subword" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Curation.packSequences(
-        Tables.documents(s, d).select(col("doc_id"),
-          concat(col("text"), lit(" #"), col("doc_id").cast("string"),
-            lit(".")).as("text")),
-        "doc_id", "text", budgetTokens = 320L, nGroups = 8,
-        tokenizer = Text.subwordTokenizer)
-    }),
-    "q_tfidf" -> ((s, d) =>
-      Text.tfidf(Tables.documents(s, d), "doc_id", "text", topK = 3)),
-    // BM25 ranked retrieval: Okapi weights for a fixed 3-term query,
-    // global top-15 (postings filtered before the shuffle)
-    "q_bm25" -> ((s, d) =>
-      Text.bm25(Tables.documents(s, d), "doc_id", "text",
-        Seq("hash", "join", "vector"), topK = 15)),
-    // conjunctive inverted-index probe: docs containing ALL three terms,
-    // ranked by total term frequency
-    "q_keyword_search" -> ((s, d) =>
-      Text.keywordSearch(Tables.documents(s, d), "doc_id", "text",
-        Seq("spark", "window", "merge"), topK = 20)),
-    // hybrid search: RRF fusion of the conjunctive keyword ranking and
-    // the embedding cosine top-k (documents and embeddings share the
-    // 0..n id space) — rank-based, so the two score scales never need
-    // calibrating; n_lists flags "found by both retrievers"
-    "q_hybrid_search" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val kw = Text.keywordSearch(Tables.documents(s, d), "doc_id",
-        "text", Seq("spark", "window", "merge"), topK = 20)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("total_tf").desc, col("doc_id"))))
-        .select(col("doc_id"), col("rank"))
-      val emb = Tables.embeddings(s, d)
-      val ev = Similarity.cosineTopK(emb,
-        emb.filter(col("vec_id") === 7), "vec_id", "embedding", k = 20)
-        .select(col("cand_id").as("doc_id"), col("rk").as("rank"))
-      Relational.rrfFuse(Seq(kw, ev), "doc_id", kf = 60, topK = 20)
-    }),
-    // CCNet-style corpus-LM perplexity: add-0.5-smoothed bigram model
-    // trained and scored in one plan (dyadic alpha → exact cross-engine
-    // ratio operands)
-    "q_lm_perplexity" -> ((s, d) =>
-      Text.lmPerplexity(Tables.documents(s, d), "doc_id", "text",
-        alpha = 0.5)),
-    // vocabulary induction: top-16 of the 31-term corpus vocabulary,
-    // per-doc OOV accounting against it
-    "q_vocab_oov" -> ((s, d) =>
-      Text.vocabOovRates(Tables.documents(s, d), "doc_id", "text",
-        vocabSize = 16)),
-    // pairwise source vocabulary overlap: per-source top-500 vocab under
-    // the (count DESC, term) order, Jaccard over the bounded vocab sets
-    "q_vocab_overlap" -> ((s, d) => Text.vocabOverlap(
-      Tables.documents(s, d), "source", "text", vocabSize = 500)),
-    // Zipf's-law fit per source: ln(freq) ~ ln(rank) OLS over the
-    // top-300 terms (slope ≈ -1 on natural text; drift monitor)
-    "q_zipf" -> ((s, d) => Text.zipfFit(
-      Tables.documents(s, d), "source", "text", topV = 300)),
-    // per-type quantile drift odd-vs-even calendar days: the tail-aware
-    // snapshot comparison PSI's fixed bins blur (did p99 move?)
-    "q_quantile_drift" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val ev = Tables.events(s, d)
-      graft.ops.Stats.quantileDrift(
-        ev.filter(dayofmonth(col("ts")) % 2 === 1),
-        ev.filter(dayofmonth(col("ts")) % 2 === 0),
-        "event_type", "value", probs = Seq(0.5, 0.9, 0.99))
-    }),
-    // per-type p50/p95/p99 SLA table: dyadic-grid weighted percentiles
-    // (buffer bounded by distinct quantized values per group)
-    "q_latency_sla" -> ((s, d) => graft.ops.Stats.groupedPercentiles(
-      Tables.events(s, d), "event_type", "value",
-      probs = Seq(0.5, 0.95, 0.99))),
-    // conversion-latency SLA: per-user first-view → earliest-purchase
-    // gaps, p50/p90/p99 over the dyadic-grid weighted percentile
-    "q_funnel_time" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val gaps = graft.ops.Events.timeToConvert(Tables.events(s, d),
-        "user_id", "ts", "event_type", "view", "purchase")
-      graft.ops.Stats.groupedPercentiles(
-        gaps.withColumn("seg", lit("all")), "seg", "gap_minutes",
-        probs = Seq(0.5, 0.9, 0.99))
-    }),
-    // rolling-origin backtest of the three baseline forecasters with
-    // MASE scaling (snaive reports exactly 1) per event type
-    "q_backtest" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.backtestNaive(daily, "event_type", "day",
-        "total")
-    }),
-    // split-conformal one-step intervals per event type: the k-th-
-    // smallest naive backtest residual (k = ceil((n+1)·0.75)) is the
-    // distribution-free radius around the last observed value
-    "q_conformal" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.conformalInterval(daily, "event_type", "day",
-        "total", alpha = 0.25)
-    }),
-    // price-volume bridge per nation, 1996 vs 1997: Laspeyres volume +
-    // Paasche price effects (identity: volume + price = delta revenue)
-    "q_price_volume" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val base = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.customer(s, d),
-          col("c_custkey") === col("o_custkey"))
-        .join(Tables.nation(s, d),
-          col("n_nationkey") === col("c_nationkey"))
-        .withColumn("yr", year(col("o_orderdate")).cast("string"))
-      Relational.priceVolumeMix(base, "n_name", "yr", "l_quantity",
-        "l_extendedprice", "1996", "1997")
-    }),
-    // BPE merge induction: 8 greedy rounds over the distinct-word
-    // frequency table (the learned upgrade path for subwordTokenizer)
-    "q_bpe_merges" -> ((s, d) =>
-      Text.bpeMerges(Tables.documents(s, d), "doc_id", "text",
-        rounds = 8)),
-    // apply the learned merges as a real subword tokenizer: per-doc
-    // letter-symbol vs BPE-token accounting over the distinct-word
-    // frame. CONSUMES the published merge table (r16 publish-split,
-    // the GBT/Louvain discipline: q_bpe_merges keeps the 8-round
-    // induction chain measured live; this gate was re-fitting the
-    // identical chain before applying it)
-    "q_bpe_encode" -> ((s, d) =>
-      Text.bpeEncode(Tables.documents(s, d), "doc_id", "text",
-        bpeMergesModel(s, d))),
-    // tokenizer fertility report: tokens-per-word and chars-per-token
-    // per source at vocab checkpoints 0/4/8 merges — the pre-commit
-    // read on a BPE vocabulary (which source is under-served?).
-    // Consumes the published merge table (r16 publish-split, same
-    // rationale as q_bpe_encode)
-    "q_bpe_fertility" -> ((s, d) =>
-      Text.bpeFertility(Tables.documents(s, d), "text", "source",
-        bpeMergesModel(s, d), checkpoints = Seq(0, 4, 8))),
-    // unigram-LM tokenizer training (SentencePiece's model, Kudo 2018):
-    // 3 hard-EM rounds — Viterbi segment the distinct-word frame against
-    // a broadcast vocab map, renormalize counts — the probabilistic
-    // sibling of q_bpe_merges; this gate keeps the EM chain measured
-    // live (its consumers ride the published table below)
-    "q_unigram_train" -> ((s, d) =>
-      Text.unigramTrain(Tables.documents(s, d), "doc_id", "text",
-        rounds = 3, maxPieceLen = 4, seedSize = 200, minCount = 2L)),
-    // segment with the PUBLISHED unigram vocab (parameter table, the
-    // gbtModelPublished discipline — no re-train in this gate)
-    "q_unigram_encode" -> ((s, d) =>
-      Text.unigramEncode(Tables.documents(s, d), "doc_id", "text",
-        unigramVocabModel(s, d))),
-    // fertility face-off of the two TRAINED tokenizers per source, both
-    // consumed as published parameter tables
-    "q_tokenizer_compare" -> ((s, d) =>
-      Text.tokenizerCompare(Tables.documents(s, d), "text", "source",
-        bpeMergesModel(s, d), unigramVocabModel(s, d))),
-    // the tokenizer-drift alarm: per-hour stream fertility under the
-    // PUBLISHED unigram vocab — the third published-table family's
-    // live monitor (beside span hits and LM backoff depth)
-    "q_windowed_fertility" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val stream = Tables.documents(s, d)
-        .filter(col("doc_id") % 7 === 0).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        col("doc_id"), col("text"))
-      graft.streaming.Streams.windowedTokenizerFertility(stream, "ts",
-        "doc_id", "text", unigramVocabModel(s, d))
-        .orderBy("window_start")
-    }),
-    // memorization risk: 8-grams shared by ≥2 documents, per-gram
-    "q_repeated_ngrams" -> ((s, d) => Dedup.repeatedNgrams(
-      Tables.documents(s, d), "doc_id", "text", n = 8, minDocs = 2L)),
-    // leakage-free split: folds assigned per duplicate cluster, so a
-    // near-dup of a train doc can never reach the eval fold
-    "q_leakage_split" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.ops.Curation.leakageFreeSplit(docs,
-        Dedup.dupClusters(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-          n = 3, threshold = 0.8)),
-        "doc_id", trainRate = 0.8)
-    }),
-    // URL canonicalization dedup: scheme/host lowercase, default-port
-    // drop, trailing-slash strip, utm_* removal (param ORDER kept —
-    // reordering is deliberately not collapsed), then exact-dup by the
-    // canonical URL; the messy URL is derived deterministically from
-    // doc_id so both engines canonicalize the identical input
-    "q_url_canon" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val did = col("doc_id")
-      val url = concat(
-        when(did % 3 === 0, "HTTP://").when(did % 3 === 1, "https://")
-          .otherwise("Https://"),
-        when(did % 2 === 0, "WWW.").otherwise(""),
-        lit("Site"), (did % 7).cast("string"), lit(".EXAMPLE.com"),
-        when(did % 4 === 0, ":80").when(did % 4 === 1, ":443")
-          .when(did % 4 === 2, ":8080").otherwise(""),
-        lit("/Articles/item-"), (did % 10).cast("string"),
-        when(did % 5 === 0, "/").otherwise(""),
-        when(did % 6 === 0,
-          concat(lit("?utm_source=news&ref="), (did % 4).cast("string")))
-          .when(did % 6 === 1, concat(lit("?ref="),
-            (did % 4).cast("string"), lit("&utm_campaign=Spring")))
-          .when(did % 6 === 2, lit("?utm_medium=email"))
-          .when(did % 6 === 3,
-            concat(lit("?ref="), (did % 4).cast("string")))
-          .otherwise(""))
-      graft.ops.Curation.urlCanonDedup(
-        Tables.documents(s, d).withColumn("url", url), "doc_id", "url")
-    }),
-    // dedup governance: near-dup pairs attributed to (source, source)
-    "q_dup_sources" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.dupSourceReport(
-        Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-          threshold = 0.8),
-        docs, "doc_id", "source")
-    }),
-    // the bloom screen is invisible in the result — the oracle is the
-    // PLAIN semi-join; the op drops definite non-members pre-shuffle and
-    // the exact semi-join removes the bloom's false positives
-    "q_bloom_semi" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val probe = Tables.lineitem(s, d)
-      val expensive = Tables.orders(s, d)
-        .filter(col("o_totalprice") > 450000.0)
-      Relational.bloomSemiJoin(probe, expensive,
-        "l_orderkey", "o_orderkey", estimatedItems = 10000L)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_quantity")), 2).as("total_qty"))
-        .orderBy("l_returnflag")
-    }),
-    // salting is invisible in the result — the oracle is the PLAIN join;
-    // the op redistributes a pathological key across `salt` reducers
-    "q_salted_join" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val probe = Tables.lineitem(s, d)
-      val build = Tables.orders(s, d)
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
-      Relational.saltedJoin(probe, col("l_partkey"), build,
-        "l_orderkey", salt = 8)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_quantity")), 2).as("total_qty"))
-        .orderBy("o_orderstatus")
-    }),
-    // the CHECKED capstone runs the near-dup stage with the skew cap —
-    // the plan you'd actually run at corpus scale (cap mirrors
-    // q_ngram_jaccard_capped; parity semantics = uncapped Jaccard)
-    "q_curation_funnel" -> ((s, d) => graft.ops.Curation.funnelCounts(
-      Tables.documents(s, d), "doc_id", "text", minQuality = 0.5, n = 3,
-      jaccardThreshold = 0.8, keepLangs = Seq("en", "de", "es", "fr"),
-      nearDup = graft.ops.Curation.NearDup.Jaccard(Some(10L)))),
-    // same funnel on the sublinear MinHash+LSH candidate path — the
-    // configuration a 100 TB corpus run would use; oracle recomputes the
-    // banded signatures bit-identically
-    "q_curation_funnel_minhash" -> ((s, d) =>
-      graft.ops.Curation.funnelCounts(
-        Tables.documents(s, d), "doc_id", "text", minQuality = 0.5, n = 3,
-        jaccardThreshold = 0.8, keepLangs = Seq("en", "de", "es", "fr"),
-        nearDup = graft.ops.Curation.NearDup.MinHashLsh(32, 8))),
-    // the CCNet recipe end-to-end over the eval-split "incoming batch":
-    // langId -> 5-gram LM perplexity head+middle -> 2-feature quality
-    // classifier -> exact dedup, one funnel row per stage with doc AND
-    // token accounting; LM trains on the train split, the classifier
-    // on the labeled fixture
-    "q_ccnet_pipeline" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      import s.implicits._
-      val docs = Tables.documents(s, d)
-      // the funnel chain (lang -> LM scoring -> classifier -> dedup
-      // accounting) runs END-TO-END live here; only the train-side LM
-      // count index is consumed from the per-JVM published artifact
-      // (r17 — the production CCNet shape: the KenLM model is static)
-      graft.ops.Curation.ccnetPipeline(
-        docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0),
-        Text.qualityFixture.toDF("doc_id", "y", "text"),
-        "doc_id", "text", "y", "source",
-        lmIndex = Some(lmIndexModel(s, d)))
-    }),
-    // the capstone "what ships to training" table: the ccnetPipeline
-    // funnel's SURVIVORS (lang -> exact-thirds ppl -> classifier ->
-    // exact-dedup keepers) waterfilled against the token budget and
-    // EXECUTED as md5-lattice sampling rates — per source, surviving
-    // docs/tokens, exact allocation, realized kept docs/tokens,
-    // planned vs achieved rate (same gate params as q_mix_budget*)
-    "q_pipeline_mix" -> ((s, d) =>
-      // consumes the per-JVM PUBLISHED funnel-verdict flags (r17): the
-      // checkpoint a production run materializes between the filter
-      // funnel and the mix planner — the lang/LM/classifier chains
-      // stay measured live in q_ccnet_pipeline over the same batch;
-      // this gate measures the planner/apply composition they feed
-      graft.ops.Curation.pipelineMixFromFlags(ccnetFlagsTable(s, d),
-        "doc_id", tau = MixTau, budgetNum = MixBudgetNum,
-        budgetDen = MixBudgetDen)),
-    // token-budget corpus fill: best-quality docs until the budget is
-    // spent — scale-safe two-phase plan vs the oracle's naive global sort
-    "q_token_budget" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d)
-        .withColumn("toks", size(split(col("text"), " ")))
-        .withColumn("qual", col("n_chars").cast("double") / col("toks"))
-      graft.ops.Curation.tokenBudgetSubset(docs, "doc_id", "qual", "toks",
-        budget = 15000L)
-    }),
-    // the pack-vs-pad decision table: per candidate context length,
-    // padded per-doc batching (kept/truncated/padding tokens, util)
-    // vs concatenated-stream packing (chunk count via exact integer
-    // ceil, util) — all exact integers + two round-6 quotients
-    "q_ctx_sweep" -> ((s, d) => graft.ops.Curation.contextSweep(
-      Tables.documents(s, d), "doc_id", "text",
-      ctxs = Seq(32, 64, 128, 256))),
-    // the data-loader manifest: curriculum by token count (short docs
-    // first — the classic warm-up), 4 exact-integer ECDF stages,
-    // seeded md5 shuffle within each stage; the gate's total ORDER BY
-    // IS the training read order
-    "q_training_order" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      graft.ops.Curation.trainingOrder(docs, "doc_id", "n_tokens",
-        nStages = 4, seed = "cur1")
-    }),
-    // --- multimodal plumbing (real image decode; MultimodalSpec verifies) ---
-    "q_media_features" -> ((s, d) => graft.ops.Multimodal.mediaFeatures(
-      s, Tables.documents(s, d), "doc_id")),
-    // perceptual-hash (aHash) image dedup over REAL decoded pixels:
-    // exact-dup groups by the 64-bit above-average hash — the dedup
-    // family lifted to the image modality
-    "q_phash_dup" -> ((s, d) => graft.ops.Multimodal.imageDupGroups(
-      s, Tables.documents(s, d), "doc_id")),
-    // frame-granular video extraction: one row per REAL decoded GIF
-    // frame; oracle recomputes every frame's solid-gray mean + dims
-    "q_video_frames" -> ((s, d) => graft.ops.Multimodal.videoFrameStats(
-      s, Tables.documents(s, d), "doc_id")),
-    // square-wave band profile over REAL decoded audio: ±1 integer
-    // matched filters at half-periods 1/2/4/8 + dominant band — exact
-    // integer correlations, no libm trig drift
-    "q_audio_bands" -> ((s, d) => graft.ops.Multimodal.audioBandProfile(
-      s, Tables.documents(s, d), "doc_id")),
-    // --- streaming surface, batch twin (same transform runs on readStream;
-    //     StreamingSpec drives it with MemoryStream + watermark) ---
-    "q_windowed_rates" -> ((s, d) =>
-      graft.streaming.Streams.windowedRates(Tables.events(s, d))
-        .orderBy("window_start", "event_type")),
-    "q_hopping_rates" -> ((s, d) =>
-      graft.streaming.Streams.hoppingRates(Tables.events(s, d))
-        .orderBy("window_start", "event_type")),
-    // live model-quality telemetry twin: per (window, score bin) counts,
-    // positives, 4-decimal score totals — deterministic md5-grid scores,
-    // value-threshold labels (the windowedRates determinism contract)
-    "q_windowed_calibration" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val scored = Tables.events(s, d).select(col("ts"),
-        when(col("value") > 50.0, 1L).otherwise(0L).as("label"),
-        round((graft.ops.Dedup.h60(col("event_id").cast("string"))
-          % 1000001L).cast("double") / 1000000.0, 6).as("score"))
-      graft.streaming.Streams.windowedCalibration(scored, "ts",
-        "label", "score", bins = 10)
-        .orderBy("window_start", "bin")
-    }),
-    // live drift monitor twin: per-window value histogram in ONE
-    // stateful agg, PSI vs the pinned reference histogram as a
-    // stateless projection (worst bin = where it drifted)
-    // live ingestion-health twin: per-hour kept rate under the quality
-    // battery (every 4th doc's text replaced by a deterministic junk
-    // burst that scores exactly 0 — the crawler-regression signal this
-    // monitor exists to catch); ts synthesized as doc_id minutes
-    "q_windowed_quality" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        when(col("doc_id") % 4 === 0,
-          lit("$$$ 4099 2077 !!! @@@ 88 99 ##"))
-          .otherwise(col("text")).as("text"))
-      graft.streaming.Streams.windowedQualityGate(docs, "ts", "text")
-        .orderBy("window_start")
-    }),
-    // live dedup-rate twin: every 5th doc's text replaced by the same
-    // boilerplate banner, so each hour window sees a deterministic
-    // burst of within-window duplicate digests (the crawler-loop /
-    // feed-replay alarm); ts synthesized as doc_id minutes
-    "q_windowed_dup_rate" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        when(col("doc_id") % 5 === 0,
-          lit("breaking subscribe banner chrome"))
-          .otherwise(col("text")).as("text"))
-      graft.streaming.Streams.windowedDupRate(docs, "ts", "text")
-        .orderBy("window_start")
-    }),
-    // live frontier-health twin: per-hour language mix (fixed 6-label
-    // domain, zeros included). Every 6th doc is replaced by a proven
-    // French fixture sentence and every 6k+1th by a German one, so
-    // each hour window carries a deterministic multilingual mix
-    "q_windowed_lang_mix" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        when(col("doc_id") % 6 === 0,
-          lit("le train quitte la gare à neuf heures et arrive dans " +
-            "la soirée"))
-          .when(col("doc_id") % 6 === 1,
-            lit("der zug verlässt den bahnhof um neun und kommt am " +
-              "abend an"))
-          .otherwise(col("text")).as("text"))
-      graft.streaming.Streams.windowedLangMix(docs, "ts", "text")
-        .orderBy("window_start", "lang")
-    }),
-    // live decoder alarm: per-hour encoding-damage rate; the same
-    // deterministic injections as q_encoding_report, so each hour
-    // window carries a known damage mix
-    "q_windowed_damage" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        when(col("doc_id") % 9 === 0,
-          concat(coalesce(col("text"), lit("")), lit(" �� damaged")))
-          .when(col("doc_id") % 9 === 1,
-            concat(coalesce(col("text"), lit("")),
-              lit(" \u0007\u0001 junk")))
-          .otherwise(col("text")).as("text"))
-      graft.streaming.Streams.windowedDamageRate(docs, "ts", "text")
-        .orderBy("window_start")
-    }),
-    // live truncation alarm: per-hour doc/token mix across fixed
-    // dyadic token-length buckets; every 4th doc is clipped to its
-    // first 10 tokens — the deterministic "fetcher started truncating"
-    // burst the monitor exists to catch
-    "q_windowed_length_mix" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d).select(
-        expr("timestampadd(MINUTE, CAST(doc_id AS INT), " +
-          "TIMESTAMP'2024-01-01 00:00:00')").as("ts"),
-        when(col("doc_id") % 4 === 0,
-          concat_ws(" ", slice(split(coalesce(col("text"), lit("")),
-            " "), 1, 10)))
-          .otherwise(col("text")).as("text"))
-      graft.streaming.Streams.windowedLengthMix(docs, "ts", "text")
-        .orderBy("window_start", "bucket")
-    }),
-    "q_windowed_psi" -> ((s, d) =>
-      graft.streaming.Streams.windowedPsi(Tables.events(s, d), "ts",
-        "value", psiRefBaseline, lo = 0.0, hi = 500.0)
-        .orderBy("window_start")),
-    "q_share_of_total" -> ((s, d) =>
-      Relational.shareOfTotal(Tables.orders(s, d))),
-    // rows-only BY DESIGN (no oracleSql entry): HLL/t-digest sketch
-    // internals are engine-specific; error bounds are property-gated in
-    // RelationalSpec instead
-    "q_approx_stats" -> ((s, d) =>
-      Relational.approxStats(Tables.events(s, d))),
-    // the same frame's ORACLE-EXPRESSIBLE half: exact distinct + exact
-    // median hash-check, so only the sketch internals stay rows-only
-    "q_approx_stats_exact" -> ((s, d) =>
-      Relational.approxStats(Tables.events(s, d))
-        .select("event_type", "exact_users", "exact_median")),
-    // batch twin of the stateful sessionizer (gaps-and-islands window
-    // form) — hash-checks the session semantics the streaming operator
-    // implements with flatMapGroupsWithState
-    "q_sessions" -> ((s, d) => graft.streaming.Streams.sessionCounts(
-      Tables.events(s, d), gapMs = 30000000L)),
-    // --- ETL pipeline semantics (SURVEY §2.9 C1-C6) ---
-    "q_file_split" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val ev = Tables.events(s, d)
-      val bad = col("event_id") % 97 === 0
-      val (valid, errored) = Etl.fileLevelSplit(ev, "user_id", bad)
-      valid.select(lit("valid").as("split"), col("user_id"))
-        .unionByName(errored.select(lit("error").as("split"), col("user_id")))
-        .groupBy("split")
-        .agg(countDistinct(col("user_id")).as("n_files"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("split")
-    }),
-    "q_error_rate" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val ev = Tables.events(s, d)
-      Etl.errorRate(Etl.transformLogs(ev, "user_id", col("event_id") % 97 === 0))
-    }),
-    "q_upsert" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val orders = Tables.orders(s, d)
-      val updates = orders.filter(col("o_orderkey") % 10 === 0)
-        .withColumn("o_orderstatus", lit("X"))
-      Etl.upsert(orders, updates, Seq("o_orderkey"))
-        .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
-        .orderBy("o_orderstatus")
-    }),
-    // CDC snapshot diff: the "new" snapshot is derived deterministically
-    // from orders (drop %97 keys, reprice %13 keys, add shifted keys)
-    "q_snapshot_diff" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val orders = Tables.orders(s, d)
-      val newSnap = orders
-        .filter(col("o_orderkey") % 97 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
-        .unionByName(orders.filter(col("o_orderkey") % 1000 === 7)
-          .withColumn("o_orderkey", col("o_orderkey") + 10000000L))
-      Etl.snapshotDiff(orders, newSnap, Seq("o_orderkey"),
-        Seq("o_totalprice", "o_orderstatus"))
-        .groupBy("diff_status").agg(count(lit(1)).as("n"))
-        .orderBy("diff_status")
-    }),
-    // data-quality expectation report: one conditional-sum pass, k rules
-    "q_dq_report" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      Etl.dqReport(Tables.events(s, d), Seq(
-        "r1_value_nonnull" -> col("value").isNull,
-        "r2_value_range" -> (col("value") < 0.0 || col("value") > 450.0),
-        "r3_type_domain" -> !col("event_type").isin(
-          "view", "click", "purchase", "signup", "error"),
-        "r4_user_nonneg" -> (col("user_id") < 0L)))
-    }),
-    // incremental materialized-view maintenance: history state + new-batch
-    // state merged must equal the full recompute (the oracle computes the
-    // full-table aggregate directly — merge algebra is what's under test)
-    "q_incr_agg" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val ev = Tables.events(s, d)
-      val cut = lit("2024-01-20").cast("timestamp")
-      val keys = Seq("user_id", "event_type")
-      val merged = Etl.mergeAggStates(
-        Etl.aggState(ev.filter(col("ts") < cut), keys, "value"),
-        Etl.aggState(ev.filter(col("ts") >= cut), keys, "value"), keys)
-      merged.select(col("user_id"), col("event_type"), col("n"),
-        round(col("sum_value"), 6).as("sum_value"),
-        col("min_value"), col("max_value"),
-        round(col("sum_value") / col("n"), 6).as("avg_value"))
-        .orderBy("user_id", "event_type")
-    }),
-    // S3: plan-time rate-limit schedule over the fetch manifest
-    "q_rate_limit" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val manifest = Etl.extractionManifest(Tables.nation(s, d), "n_name",
-        Seq("covid", "weather"), "2021-01-01", "2021-01-05", 1700000000L)
-      Etl.rateLimitSchedule(manifest, "2021-01-01 00:00:00", perSecond = 3)
-        .select(col("api"), col("path"), col("slot"),
-          date_format(col("scheduled_at"), "yyyy-MM-dd HH:mm:ss")
-            .as("scheduled_at"))
-        .orderBy("api", "path")
-    }),
-    // batch-cursor progression (etl_dag Variable cursor) unrolled: three
-    // consecutive 30-day windows sharing boundary days, full manifests
-    "q_cursor_manifest" -> ((s, d) =>
-      Etl.cursorManifests(Tables.nation(s, d), "n_name",
-        Seq("covid", "weather"), "2021-04-01", runs = 3, days = 30)
-        .orderBy("run", "iso", "api", "day")),
-    // W12: Dickey-Fuller stationarity over the deterministic daily totals
-    "q_adf" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      Windows.adfTest(daily, "day", "total")
-    }),
-    // W12 augmented: same series, one lagged-difference regressor —
-    // the 3×3 normal equations solved closed-form in the plan
-    "q_adf_lag1" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      Windows.adfTest(daily, "day", "total", maxlag = 1)
-    }),
-    // W12 with statsmodels' autolag='AIC' selection rule over a FIXED 0..2
-    // candidate set (narrower than its default maxlag): common-sample fits,
-    // min-AIC pick and the chosen order's refit all in one plan
-    "q_adf_autolag" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      Windows.adfTestAutolag(daily, "day", "total")
-    }),
-    // F25: per-status standardizer params, base64 wire round trip
-    "q_model_transport" -> ((s, d) =>
-      graft.ops.Models.transportRoundTrip(Tables.orders(s, d),
-        "o_orderstatus", "o_totalprice")),
-    // batch model scoring: σ(w·v + b) with md5-derived broadcast weights
-    "q_model_score" -> ((s, d) =>
-      graft.ops.Models.scoreLinear(Tables.embeddings(s, d), "vec_id",
-        "embedding", Seq("label"),
-        graft.ops.Models.md5Weights(s, "demo", 64), bias = 0.1)),
-    // model evaluation: classification report (per-class P/R/F1/support +
-    // accuracy/macro/weighted rows) over the scored corpus — the
-    // reference's evaluate_model surface; truth = odd source label
-    "q_eval_classify" -> ((s, d) =>
-      graft.ops.Models.evalClassification(scoredDemo(s, d),
-        "actual", "predicted")),
-    // the confusion matrix behind the report, pivoted wide
-    "q_confusion" -> ((s, d) =>
-      graft.ops.Models.confusionMatrix(scoredDemo(s, d),
-        "actual", "predicted", Seq("false", "true"))),
-    // chance-corrected agreement over the same scored frame: Cohen's
-    // kappa (accuracy overstates under a skewed class mix)
-    "q_kappa" -> ((s, d) => graft.ops.Stats.cohenKappa(
-      scoredDemo(s, d), "actual", "predicted")),
-    // how good is the lang-ID classifier REALLY? kappa of predicted vs
-    // labeled language over the LITERAL multilingual fixture — the
-    // synthetic corpus's lang labels are independent of its (English-
-    // vocabulary) text, so corpus agreement has a chance-level ceiling
-    // for ANY classifier; the fixture's labels are real, and its 4
-    // deliberately-hard rows keep the measured kappa honest (< 1)
-    "q_langid_agreement" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val fx = Text.langIdFixture.toDF("sid", "lang", "text")
-      graft.ops.Stats.cohenKappa(
-        Text.langId(fx, "sid", "text")
-          .select(col("sid"), col("pred_lang"))
-          .join(fx.select(col("sid"), col("lang")), "sid"),
-        "lang", "pred_lang")
-    }),
-    // closed-form OLS fit (3 regressors + intercept) on STANDARDIZED
-    // variables — model fitting as one pass of distributed sums; the
-    // standardization keeps the centered moments at O(1) so the betas
-    // are reproducible cross-engine (see fitLinear3's conditioning note)
-    "q_fit_linear" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val li = Tables.lineitem(s, d)
-      val stats = li.agg(
-        avg(col("l_quantity")).as("m1"),
-        stddev_samp(col("l_quantity")).as("sd1"),
-        avg(col("l_discount")).as("m2"),
-        stddev_samp(col("l_discount")).as("sd2"),
-        avg(col("l_tax")).as("m3"),
-        stddev_samp(col("l_tax")).as("sd3"),
-        avg(col("l_extendedprice")).as("my"),
-        stddev_samp(col("l_extendedprice")).as("sdy"))
-      val std = li.crossJoin(broadcast(stats)).select(
-        ((col("l_quantity") - col("m1")) / col("sd1")).as("z1"),
-        ((col("l_discount") - col("m2")) / col("sd2")).as("z2"),
-        ((col("l_tax") - col("m3")) / col("sd3")).as("z3"),
-        ((col("l_extendedprice") - col("my")) / col("sdy")).as("zy"))
-      graft.ops.Models.fitLinear3(std, Seq("z1", "z2", "z3"), "zy")
-    }),
-    // exact tie-aware ROC-AUC over the scored corpus (rank-sum form,
-    // grouped by distinct score)
-    "q_roc_auc" -> ((s, d) =>
-      graft.ops.Models.rocAuc(scoredDemo(s, d), "actual", "score")),
-    // calibration curve + Brier score over the scored corpus
-    "q_calibration" -> ((s, d) =>
-      graft.ops.Models.calibration(scoredDemo(s, d),
-        "actual", "score", bins = 10)),
-    // the reliability table folded to ECE/MCE (frequency-weighted and
-    // worst-bin miscalibration) — per-bin gaps stay visible
-    "q_ece" -> ((s, d) =>
-      graft.ops.Models.calibrationError(scoredDemo(s, d),
-        "actual", "score", bins = 10)),
-    // isotonic calibration: the monotone remapping table (PAV via the
-    // bins²-bounded minimax identity) — what you JOIN onto new scores to
-    // fix the miscalibration q_calibration only reports
-    "q_isotonic" -> ((s, d) =>
-      graft.ops.Models.isotonicCalibration(scoredDemo(s, d),
-        "actual", "score", bins = 16)),
-    "q_brier" -> ((s, d) =>
-      graft.ops.Models.brierScore(scoredDemo(s, d), "actual", "score")),
-    // distribution drift between two corpus slices: PSI over fixed bins
-    // (the 100 TB path — shuffle width = bin count)
-    "q_psi_drift" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      graft.ops.Drift.psiDrift(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"),
-        "value", lo = 0.0, hi = 500.0, bins = 10)
-    }),
-    // exact two-sample KS over the pooled distinct values (2-decimal
-    // measures -> bounded value domain)
-    "q_ks_drift" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      graft.ops.Drift.ksDrift(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"), "value")
-    }),
-    // per-dimension embedding stats: the vector-side drift monitor
-    "q_emb_dim_stats" -> ((s, d) =>
-      graft.ops.Drift.embeddingDimStats(
-        Tables.embeddings(s, d), "embedding")),
-    // linear-kernel MMD² between the even/odd label halves: the
-    // aggregate embedding two-sample drift test + per-dim gaps
-    "q_mmd_drift" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.embeddings(s, d)
-      graft.ops.Drift.mmdDrift(
-        emb.where(col("label") % 2 === 0),
-        emb.where(col("label") % 2 === 1), "embedding")
-    }),
-    // forecast scoring: MAE/RMSE of a lag-1 persistence forecast per
-    // event_type series — the forecasting DAG's error metrics
-    "q_forecast_errors" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("day")
-      graft.ops.Models.forecastErrors(
-        daily.withColumn("pred", lag(col("total"), 1).over(w)),
-        "total", "pred", Seq("event_type"))
-    }),
-    // does weekly seasonality earn its keep? skill of the lag-7
-    // seasonal-naive forecast over the lag-1 persistence baseline on
-    // the SAME rows (the fair-window rule)
-    "q_forecast_skill" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("day")
-      graft.ops.Models.forecastSkill(
-        daily.withColumn("snaive", lag(col("total"), 7).over(w))
-          .withColumn("naive", lag(col("total"), 1).over(w)),
-        "total", "snaive", "naive", Seq("event_type"))
-    }),
-    // scale-free grading of the same persistence baseline: MAPE /
-    // SMAPE / signed bias — comparable across series magnitudes,
-    // and bias exposes systematic over/under-forecasting
-    "q_forecast_scaled" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("day")
-      graft.ops.Models.scaledForecastErrors(
-        daily.withColumn("pred", lag(col("total"), 1).over(w)),
-        "total", "pred", Seq("event_type"))
-    }),
-    // quantile-forecast grading of the same persistence baseline:
-    // pinball loss at p10/p50/p90 + the under-forecast share that
-    // explains WHY a level scores badly
-    "q_pinball" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("day")
-      graft.ops.Models.pinballLoss(
-        daily.withColumn("pred", lag(col("total"), 1).over(w)),
-        "total", "pred", Seq(0.1, 0.5, 0.9), Seq("event_type"))
-    }),
-    // hash-checked: the LSH index is md5-derived and fully deterministic,
-    // so recall@k is a deterministic function of two deterministic result
-    // sets — the oracle recomputes both (the q_cosine_topk and q_ann_topk
-    // CTEs verbatim) and joins them; SimilaritySpec still asserts the floor
-    "q_ann_recall" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      graft.ops.Similarity.annRecall(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, "vec_id", "embedding", k = 5)
-    }),
-    // hashed bag-of-ngrams quality classifier, trained in-engine (the
-    // fastText-lite / NB-LR loop): char-trigram md5 hashing to 64
-    // buckets -> NB log-count-ratio micro weights from the labeled
-    // fixture -> exact-long doc features -> 4-round Newton logistic
-    // calibration -> score the corpus (every 4th doc gets an injected
-    // spam suffix — the corpus itself is neutral word salad) -> per-
-    // source kept rate. All sums exact ints; the model rides in two
-    // broadcast 1-row frames
-    "q_quality_classifier" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val labeled = Text.qualityFixture.toDF("id", "y", "text")
-      val corpus = Tables.documents(s, d).select(
-        col("doc_id").as("id"),
-        concat(col("text"),
-          when(col("doc_id") % 4 === 0,
-            lit(" win free cash prizes instantly click here claim " +
-              "your free bonus now buy cheap pills online casino " +
-              "jackpot win money fast click now free offer"))
-            .otherwise(lit(""))).as("text"),
-        col("source"))
-      Text.qualityClassifierReport(labeled, corpus, "id", "text", "y",
-        "source")
-    }),
-    // 2-feature quality classifier: mean gram log-odds PLUS gram
-    // coverage (share of grams in >= 2-count training buckets; 4096
-    // buckets so out-of-vocabulary text is visible), standardized per
-    // feature, 4-round Newton with the closed-form 3x3 adjugate solve,
-    // scored with the published round-6 coefficients — same injected
-    // spam suffix corpus, per-source rollup with mean coverage
-    "q_quality_classifier2" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val labeled = Text.qualityFixture.toDF("id", "y", "text")
-      val corpus = Tables.documents(s, d).select(
-        col("doc_id").as("id"),
-        concat(col("text"),
-          when(col("doc_id") % 4 === 0,
-            lit(" win free cash prizes instantly click here claim " +
-              "your free bonus now buy cheap pills online casino " +
-              "jackpot win money fast click now free offer"))
-            .otherwise(lit(""))).as("text"),
-        col("source"))
-      Text.qualityClassifier2Report(labeled, corpus, "id", "text", "y",
-        "source")
-    }),
-    // logistic fit (is-English ~ standardized doc length) via 4 FIXED
-    // Newton rounds over moment sums — the deterministic-iteration
-    // analogue of the reference's classifier training; the oracle
-    // replays the identical rounds
-    "q_fit_logistic" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(s, d)
-      val stats = docs.agg(
-        avg(col("n_chars").cast("double")).as("m"),
-        stddev_samp(col("n_chars").cast("double")).as("sd"))
-      val std = docs.crossJoin(broadcast(stats)).select(
-        ((col("n_chars").cast("double") - col("m")) / col("sd")).as("z"),
-        when(col("lang") === "en", 1.0).otherwise(0.0).as("y"))
-      graft.ops.Models.fitLogistic1(std, "z", "y", rounds = 4)
-    }),
-    // gradient-boosted depth-1 stumps, 3 rounds, squared loss: y is the
-    // INTEGER-rounded price so every residual/sum is exact (the dyadic
-    // discipline that makes the per-round split argmax cross-engine-safe)
-    // the fitted model AS the parameter table — consumed from the
-    // published parquet artifact (contents deterministic and identical
-    // to a live fit; q_gbt_eval keeps the stump fit chain measured
-    // live, the gbtModelPublished discipline)
-    "q_gbt_stumps" -> ((s, d) =>
-      gbtStumpsModel(s, d).orderBy("boost_round")),
-    // score with the PUBLISHED model (round-0 base row + rounded
-    // leaves): prediction domain is <= 2^3 + 1 values, grouped counts
-    "q_gbt_score" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Models.scoreStumps(gbtLiFrame(s, d),
-        Seq("l_quantity", "l_discount"), gbtStumpsModel(s, d), lr = 0.5)
-        .groupBy(col("prediction"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("prediction"))
-    }),
-    // permutation importance: rotate each feature within md5 buckets,
-    // re-score with the published model, report the RMSE degradation —
-    // the model-agnostic check on the gain shares
-    "q_gbt_perm_importance" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val li = gbtLiFrame(s, d)
-      // integer-rendered hash input so both engines hash identical text
-      val hashed = li.withColumn("__hh", md5(concat_ws("_",
-        col("y").cast("long"), col("l_quantity").cast("long"),
-        round(col("l_discount") * 100).cast("long"))))
-      graft.ops.Models.permutationImportance(hashed, "y",
-        Seq("l_quantity", "l_discount"), gbtStumpsModel(s, d), "__hh",
-        buckets = 256, lr = 0.5)
-    }),
-    // partial dependence along l_quantity: mean prediction with the
-    // feature forced to each grid value — HOW the model uses the
-    // feature (importance says only WHICH); exact cell-count means
-    "q_gbt_pdp" -> ((s, d) =>
-      graft.ops.Models.partialDependence(gbtLiFrame(s, d),
-        Seq("l_quantity", "l_discount"), gbtStumpsModel(s, d),
-        "l_quantity", grid = Seq(1.0, 10.0, 20.0, 30.0, 40.0, 50.0),
-        lr = 0.5)),
-    // the booster's fit -> score -> evaluate loop: the stump family's
-    // LIVE-FIT gate (fit + one final n/RMSE/MAE/R^2 scan over the
-    // unrounded internal predictions — the residual-decay semantics);
-    // every other stump gate consumes the published parameter table
-    "q_gbt_eval" -> ((s, d) =>
-      graft.ops.Models.boostedStumpsEval(gbtLiFrame(s, d), "y",
-        Seq("l_quantity", "l_discount"), rounds = 3, lr = 0.5)),
-    // depth-2 boosted trees, 3 rounds: root split -> per-branch split
-    // search -> 4 dyadic leaves; feature INTERACTIONS no stump ensemble
-    // can express. Output = the parameter table, consumed from the
-    // published artifact (q_gbt_depth2_eval keeps the fit chain live)
-    "q_gbt_depth2" -> ((s, d) =>
-      gbtTrees2Model(s, d).orderBy("boost_round", "node")),
-    // score with the PUBLISHED depth-2 model (base row + two-level
-    // CASE over the rounded leaves): prediction domain <= 4^rounds + 1
-    // values, grouped counts — the q_gbt_score loop one level deeper
-    "q_gbt_depth2_score" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Models.scoreTrees2(gbtLiFrame(s, d),
-        Seq("l_quantity", "l_discount"), gbtTrees2Model(s, d), lr = 0.5)
-        .groupBy(col("prediction"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("prediction"))
-    }),
-    // gain-based feature importance from the PUBLISHED depth-2 model —
-    // XGBoost's importance_type='gain' as a query over the parameter
-    // table, pinned-order gain folds
-    "q_gbt_importance" -> ((s, d) =>
-      graft.ops.Models.featureImportance(gbtTrees2Model(s, d))),
-    // the depth-2 fit -> evaluate loop: the depth-2 family's LIVE-FIT
-    // gate (the residual-decay check that depth 2 fits at least as
-    // tightly as the stumps is asserted in PipelineOpsSpec over this
-    // same frame); the other depth-2 gates consume the published table
-    "q_gbt_depth2_eval" -> ((s, d) =>
-      graft.ops.Models.boostedTrees2Eval(gbtLiFrame(s, d), "y",
-        Seq("l_quantity", "l_discount"), rounds = 3, lr = 0.5)),
-    // closed-form AR(3) Yule-Walker fit + 5-step forecast on the daily
-    // order-revenue series — the forecasting DAG's fit→forecast loop as
-    // one plan (coefficients AND the recursion are oracle-replayed)
-    "q_ar_forecast" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").as("day"))
-        .agg(round(sum(col("o_totalprice")), 2).as("total"))
-      graft.ops.Models.arForecast(daily, "day", "total", p = 3, horizon = 5)
-    }),
-    // SARIMA-lite: weekly-differenced AR(2) on the daily revenue series,
-    // 7-step forecast integrated against the OBSERVED last week — the
-    // closed-form slice of the reference's SARIMAX stage
-    "q_sarima_lite" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").as("day"))
-        .agg(round(sum(col("o_totalprice")), 2).as("total"))
-      graft.ops.Models.sarimaLite(daily, "day", "total", period = 7,
-        p = 2, horizon = 7)
-    }),
-    // exact PR-AUC (tie-grouped average precision) over the scored corpus
-    // — the rare-positive twin of q_roc_auc
-    "q_pr_auc" -> ((s, d) =>
-      graft.ops.Models.prAuc(scoredDemo(s, d), "actual", "score")),
-    // cumulative gains / lift deciles (band-atomic ties; bucket 0 = top)
-    "q_lift_gain" -> ((s, d) =>
-      graft.ops.Models.liftGain(scoredDemo(s, d), "actual", "score",
-        buckets = 10)),
-    // KS separation of the score distributions (positives vs negatives)
-    // — ksDrift re-pointed at the model-eval surface
-    "q_score_ks" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, not}
-      val sc = scoredDemo(s, d)
-      graft.ops.Drift.ksDrift(sc.filter(col("actual")),
-        sc.filter(not(col("actual"))), "score")
-    }),
-    // Jensen-Shannon divergence over the same fixed bins as q_psi_drift
-    "q_js_drift" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      graft.ops.Drift.jsDivergence(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"),
-        "value", lo = 0.0, hi = 500.0, bins = 10)
-    }),
-    // Spearman rank correlation (average ranks over the bounded
-    // distinct-value domains)
-    "q_spearman" -> ((s, d) => graft.ops.Stats.spearmanCorr(
-      Tables.lineitem(s, d), "l_quantity", "l_discount")),
-    // chi-squared independence + Cramer's V over two categorical columns
-    "q_chi_square" -> ((s, d) => graft.ops.Stats.chiSquare(
-      Tables.orders(s, d), "o_orderstatus", "o_orderpriority")),
-    // per-key robust outlier profile via median absolute deviation
-    "q_mad_outliers" -> ((s, d) => graft.ops.Stats.madOutliers(
-      Tables.events(s, d), "event_type", "value", k = 3.0)),
-    // per-key simple OLS from distributed moment sums
-    "q_grouped_ols" -> ((s, d) => graft.ops.Stats.groupedOls(
-      Tables.lineitem(s, d), "l_returnflag", "l_quantity",
-      "l_extendedprice")),
-    // Theil-Sen robust trend of monthly revenue per nation: median of
-    // pairwise slopes + median intercept over the bounded month grid
-    "q_theil_sen" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val monthly = Tables.orders(s, d)
-        .join(Tables.customer(s, d),
-          col("c_custkey") === col("o_custkey"))
-        .join(Tables.nation(s, d),
-          col("n_nationkey") === col("c_nationkey"))
-        .groupBy(col("n_name"),
-          (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
-            .as("mi"))
-        .agg(round(sum(col("o_totalprice")), 2).as("rev"))
-      graft.ops.Stats.theilSen(monthly, "n_name", "mi", "rev")
-    }),
-    // long-memory diagnostic: aggregated-variance Hurst exponent of
-    // the daily revenue series (INTEGER cents — the money rule), H =
-    // 1 + slope/2 of the ln Var(block mean) vs ln m dyadic-block fit
-    "q_hurst" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").as("day"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long"))
-          .as("cents"))
-      graft.ops.Windows.hurstExponent(daily, "day", "cents")
-    }),
-    // Mann-Kendall monotone-trend test on the same per-nation monthly
-    // revenue series (q_theil_sen's significance gate)
-    "q_mann_kendall" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val monthly = Tables.orders(s, d)
-        .join(Tables.customer(s, d),
-          col("c_custkey") === col("o_custkey"))
-        .join(Tables.nation(s, d),
-          col("n_nationkey") === col("c_nationkey"))
-        .groupBy(col("n_name"),
-          (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
-            .as("mi"))
-        .agg(round(sum(col("o_totalprice")), 2).as("rev"))
-      graft.ops.Stats.mannKendall(monthly, "n_name", "mi", "rev")
-    }),
-    // per-key EWMA (pandas adjust=False recursion) over the daily series;
-    // the oracle replays the identical recursion as a recursive CTE
-    "q_ewma" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.ewma(daily, "event_type", "day", "total",
-        alpha = 0.3)
-    }),
-    // boilerplate screen: documents sharing their first 8 tokens
-    "q_prefix_dup" -> ((s, d) => graft.ops.Curation.prefixDupGroups(
-      Tables.documents(s, d), "doc_id", "text", k = 8)),
-    // per-source corpus health report (count, dup involvement, length,
-    // language mix)
-    "q_source_report" -> ((s, d) => graft.ops.Curation.sourceReport(
-      Tables.documents(s, d), "doc_id", "text", "source", "lang", "en")),
-    // Welch's two-sample t-test between click and purchase value
-    // distributions (1-row scalar frames; Welch-Satterthwaite df)
-    "q_welch_t" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      graft.ops.Stats.welchT(ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"), "value")
-    }),
-    // Mann-Whitney U with average ranks + tie-corrected z over the
-    // bounded pooled distinct-value domain
-    "q_mann_whitney" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      graft.ops.Stats.mannWhitney(ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"), "value")
-    }),
-    // k-group rank test: Kruskal-Wallis H across ALL event types at once
-    // (tie-corrected, with the ε² effect size) — the ANOVA question the
-    // two-sample mann_whitney gate can't answer in one pass
-    "q_kruskal" -> ((s, d) => graft.ops.Stats.kruskalWallis(
-      Tables.events(s, d), "event_type", "value")),
-    // parametric sibling: one-way ANOVA F + eta-squared across the same
-    // event types (do the MEANS differ, and how much variance does the
-    // grouping explain?) — exact dyadic sums, pinned group folds
-    "q_anova" -> ((s, d) => graft.ops.Stats.anovaOneWay(
-      Tables.events(s, d), "event_type", "value", gridBits = 6)),
-    // ordered-trend test: does the high-value rate rise across the
-    // week? Cochran-Armitage over day-of-week scores 1..7 — the one-df
-    // monotone alternative chi-square ignores
-    "q_trend_test" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Stats.cochranArmitage(
-        Tables.events(s, d).select(
-          dayofweek(col("ts")).as("dow"),
-          when(col("value") > 50.0, 1L).otherwise(0L).as("hit")),
-        "dow", "hit")
-    }),
-    // first-order event-type transition matrix (per-user lag window,
-    // type-domain-squared output)
-    "q_transitions" -> ((s, d) => graft.ops.Events.transitions(
-      Tables.events(s, d), "user_id", "ts", "event_id", "event_type")),
-    // behavioral predictability: entropy rate of the journey chain
-    // (per-state fan-out entropy, visit-weighted)
-    "q_entropy_rate" -> ((s, d) => graft.ops.Events.transitionEntropy(
-      Tables.events(s, d), "user_id", "ts", "event_id", "event_type")),
-    // last-touch attribution of purchases within a 2-hour lookback
-    "q_attribution" -> ((s, d) => graft.ops.Events.lastTouchAttribution(
-      Tables.events(s, d), "user_id", "ts", "event_id", "event_type",
-      "purchase", lookbackSec = 7200L)),
-    // linear multi-touch: every in-window touch splits the conversion
-    // credit 1/n (same lookback/boundary as last-touch)
-    "q_linear_attribution" -> ((s, d) => graft.ops.Events
-      .linearAttribution(Tables.events(s, d), "user_id", "ts", "event_id",
-        "event_type", "purchase", lookbackSec = 7200L)),
-    // key-skew diagnosis over the order join key (salting decision input)
-    "q_skew_report" -> ((s, d) => graft.ops.Relational.skewReport(
-      Tables.lineitem(s, d), "l_orderkey")),
-    // A/B readout: md5 arm split, high-value-purchase conversion rates
-    // + two-proportion z (plain purchase saturates at 100% of users)
-    "q_ab_test" -> ((s, d) => graft.ops.Stats.abTestReport(
-      Tables.events(s, d), "user_id", "event_type", "value", "purchase",
-      minValue = 200.0, seed = "exp1")),
-    // pre-experiment power analysis: users/days needed per candidate
-    // lift over the observed purchase-conversion baseline
-    "q_power" -> ((s, d) => graft.ops.Stats.powerAnalysis(
-      Tables.events(s, d), "user_id", "ts", "event_type", "value",
-      "purchase", minValue = 200.0)),
-    // CUPED variance-reduced readout: pre-cutoff spend as the control
-    // covariate, adjusted per-arm means + theta/rho2/z
-    "q_cuped" -> ((s, d) => graft.ops.Stats.cupedReport(
-      Tables.events(s, d), "user_id", "ts", "value",
-      cutoff = "2024-01-16 00:00:00", seed = "cuped1")),
-    // sample-ratio-mismatch guardrail on the md5 split
-    "q_srm" -> ((s, d) => graft.ops.Stats.srmCheck(
-      Tables.events(s, d), "user_id", seed = "exp1")),
-    // quantile treatment effects: per-decile treated-vs-control gap
-    // of the per-user spend distribution
-    "q_qte" -> ((s, d) => graft.ops.Stats.quantileTreatmentEffects(
-      Tables.events(s, d), "user_id", "value", seed = "qte1")),
-    // two-model uplift deciles: who does the treatment move, observed
-    // vs model-predicted per score decile
-    "q_uplift" -> ((s, d) => graft.ops.Stats.upliftReport(
-      Tables.events(s, d), "user_id", "event_type", "value",
-      "purchase", minValue = 200.0, engageType = "view",
-      seed = "upl1")),
-    // always-valid sequential monitor: daily mSPRT lambda and the
-    // running always-valid p over cumulative arm conversions
-    "q_msprt" -> ((s, d) => graft.ops.Stats.msprtCurve(
-      Tables.events(s, d), "user_id", "ts", "event_type", "value",
-      "purchase", minValue = 200.0, seed = "seq1")),
-    // difference-in-differences on the user panel: per-arm spend
-    // change around the cutoff, paired-diff SE
-    "q_did" -> ((s, d) => graft.ops.Stats.didReport(
-      Tables.events(s, d), "user_id", "ts", "value",
-      cutoff = "2024-01-16 00:00:00", seed = "did1")),
-    // Poisson-bootstrap CI for the mean order value: 64 seeded
-    // replicates, rank-based percentile interval
-    "q_bootstrap_ci" -> ((s, d) => graft.ops.Stats.bootstrapCi(
-      Tables.orders(s, d), "o_orderkey", "o_totalprice",
-      reps = 64, seed = "bs1")),
-    // cluster-jackknife SE of revenue-per-order with customer units
-    // (delete-one-customer pseudo-values, dyadic lattice throughout)
-    "q_jackknife" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Stats.jackknifeRatio(
-        Tables.orders(s, d).withColumn("one", lit(1.0)),
-        "o_custkey", "o_totalprice", "one")
-    }),
-    // rank-2 ALS factorization of the customer×part quantity matrix:
-    // 2 alternation rounds, per-round training RMSE receipts
-    "q_als" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val inter = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_partkey"), col("l_quantity"))
-      graft.ops.Models.alsFactorize(inter, "o_custkey", "l_partkey",
-        "l_quantity")
-    }),
-    // ALS serve path: top-3 unseen parts for a 5-user md5 panel
-    "q_als_recommend" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val inter = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_partkey"), col("l_quantity"))
-      // serves from the per-JVM PUBLISHED factor tables (r17): the
-      // 2-round alternation stays measured live in q_als; the serve
-      // path recomputes only the seen-pair filter it needs
-      val (pu, qi) = alsFactorTables(s, d)
-      graft.ops.Models.alsRecommendFromFactors(inter, pu, qi,
-        "o_custkey", "l_partkey", nUsers = 5, k = 3)
-    }),
-    // propensity-score stratification: does the BUILDING segment spend
-    // more once account balance (the confounder proxy) is stratified out
-    "q_psm" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val cust = Tables.customer(s, d)
-      val rev = Tables.orders(s, d).groupBy(col("o_custkey"))
-        .agg(round(sum(col("o_totalprice")), 2).as("__rev"))
-      val units = cust
-        .join(rev, cust("c_custkey") === rev("o_custkey"), "left")
-        .select(col("c_acctbal"),
-          when(col("c_mktsegment") === "BUILDING", 1.0).otherwise(0.0)
-            .as("treated"),
-          coalesce(col("__rev"), lit(0.0)).as("outcome"))
-      graft.ops.Stats.psmStratified(units, "c_acctbal", "treated",
-        "outcome")
-    }),
-    // leave-one-out target encoding of order priority on total price
-    "q_target_encode" -> ((s, d) => graft.ops.Features.targetEncodeLoo(
-      Tables.orders(s, d), "o_orderpriority", "o_totalprice",
-      "o_orderkey")),
-    // referential integrity across the star's FK edges
-    "q_ref_integrity" -> ((s, d) => graft.ops.Etl.refIntegrityReport(Seq(
-      ("orders", Tables.orders(s, d), "o_custkey",
-        "customer", Tables.customer(s, d), "c_custkey"),
-      ("lineitem", Tables.lineitem(s, d), "l_orderkey",
-        "orders", Tables.orders(s, d), "o_orderkey"),
-      ("lineitem", Tables.lineitem(s, d), "l_partkey",
-        "part", Tables.part(s, d), "p_partkey"),
-      ("customer", Tables.customer(s, d), "c_nationkey",
-        "nation", Tables.nation(s, d), "n_nationkey")))),
-    // rolling 7-day active users (sliding distinct via bounded fan-out,
-    // never a self-join)
-    "q_rolling_wau" -> ((s, d) => graft.ops.Events.rollingActiveUsers(
-      Tables.events(s, d), "user_id", "ts", windowDays = 7)),
-    // per-day peak concurrent sessions: gap-based session spans swept as
-    // +1/-1 boundary deltas — day-partitioned prefix max plus a
-    // calendar-bounded midnight-carry prefix sum (never a global sort
-    // of the interval table)
-    "q_concurrency" -> ((s, d) => graft.ops.Temporal.maxConcurrency(
-      graft.ops.Temporal.sessionSpans(Tables.events(s, d), "user_id",
-        "ts", gapSec = 1800L), "session_start", "session_end")),
-    // longest consecutive-day activity streak per user: gaps-and-islands
-    // (day - row_number() constant within an island), all windows
-    // user-partitioned, deterministic earliest-start tie-break
-    "q_streaks" -> ((s, d) => graft.ops.Events.activityStreaks(
-      Tables.events(s, d), "user_id", "ts", topK = 50)),
-    // weekly growth accounting: new/retained/resurrected/churned user
-    // decomposition (per-user lag windows + week-shifted churn join)
-    "q_growth" -> ((s, d) => graft.ops.Events.growthAccounting(
-      Tables.events(s, d), "user_id", "ts")),
-    // audience growth curve: cumulative distinct users via first-seen
-    // days (never an expanding COUNT DISTINCT window)
-    "q_cumulative_users" -> ((s, d) => graft.ops.Events.cumulativeUsers(
-      Tables.events(s, d), "user_id", "ts")),
-    // time-decay attribution: 2^(-dt/halflife) weights, 1h half-life
-    "q_decay_attribution" -> ((s, d) => graft.ops.Events
-      .timeDecayAttribution(Tables.events(s, d), "user_id", "ts",
-        "event_id", "event_type", "purchase", lookbackSec = 7200L,
-        halflifeSec = 3600L)),
-    // Markov removal-effect attribution: journey transition chain,
-    // per-channel removal sweep over one variants dimension
-    "q_markov_attribution" -> ((s, d) => graft.ops.Events
-      .markovAttribution(Tables.events(s, d), "user_id", "ts",
-        "event_id", "event_type", "purchase", steps = 8)),
-    // Shapley coalition-game attribution over the same journeys
-    // (caller-pinned 4-channel domain, exact-integer lattice)
-    "q_shapley" -> ((s, d) => graft.ops.Events.shapleyAttribution(
-      Tables.events(s, d), "user_id", "ts", "event_id", "event_type",
-      convType = "purchase",
-      channels = Seq("click", "error", "signup", "view"))),
-    // 14-day rolling correlation of the view vs purchase daily channels
-    "q_rolling_corr" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .pivot("event_type", Seq("view", "purchase"))
-        .agg(round(sum(col("value")), 2))
-        .na.drop(Seq("view", "purchase"))
-      graft.ops.Windows.rollingCorrelation(daily, "day",
-        "view", "purchase", windowRows = 14, minPeriods = 5)
-    }),
-    // deterministic 5-fold split balance report (md5 fold assignment)
-    "q_kfold" -> ((s, d) => graft.ops.Curation.kfoldReport(
-      Tables.documents(s, d), "doc_id", "text", "lang", "en", k = 5,
-      seed = "cv0")),
-    // sample ACF at lags 1..7 of the daily event-value series (weekly
-    // cycle shows as a lag-7 peak)
-    "q_acf" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.acf(daily, "day", "total", maxLag = 7)
-    }),
-    // causal-impact-lite: counterfactual purchase volume from the view
-    // channel, fitted pre-intervention, cumulative net effect after
-    "q_causal_impact" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(when(col("event_type") === "purchase",
-          col("value")).otherwise(lit(0.0))), 2).as("y"),
-          round(sum(when(col("event_type") === "view", col("value"))
-            .otherwise(lit(0.0))), 2).as("x"))
-      graft.ops.Windows.causalImpact(daily, "day", "y", "x",
-        intervention = "2024-01-16")
-    }),
-    // lag-1 Granger screen: does yesterday's view volume predict
-    // today's purchase volume beyond its own history?
-    "q_granger" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(when(col("event_type") === "purchase",
-          col("value")).otherwise(lit(0.0))), 2).as("y"),
-          round(sum(when(col("event_type") === "view", col("value"))
-            .otherwise(lit(0.0))), 2).as("x"))
-      graft.ops.Windows.grangerLite(daily, "day", "y", "x")
-    }),
-    // Ljung-Box whiteness test over the same daily series: Q(h) per lag
-    // vs the 5% chi-square critical value
-    "q_ljung_box" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.ljungBox(daily, "day", "total", maxLag = 7)
-    }),
-    // Holt linear-trend smoothing per event type + 3-step-ahead forecast
-    // from the final (level, trend) state
-    "q_holt_forecast" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.holtForecast(daily, "event_type", "day", "total")
-    }),
-    // Croston intermittent-demand chains over sparse per-part daily
-    // quantity (demand-event rows only — no zero-filled calendar)
-    "q_croston" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.lineitem(s, d)
-        .where(col("l_partkey") <= 8)
-        .groupBy(col("l_partkey"), col("l_shipdate"))
-        .agg(round(sum(col("l_quantity")), 2).as("qty"))
-      graft.ops.Windows.crostonForecast(daily, "l_partkey",
-        "l_shipdate", "qty", alpha = 0.25)
-    }),
-    // hierarchical reconciliation: per-type Holt forecasts rescaled to
-    // cohere with the aggregate-series forecast
-    "q_reconcile" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.reconcileForecasts(daily, "event_type", "day",
-        "total")
-    }),
-    // Holt-Winters additive weekly seasonality over the same per-type
-    // daily series: (level, trend, seasonal[7]) fold, 3-step forecasts
-    // carrying the matching seasonal index
-    "q_holt_winters" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.holtWintersForecast(daily, "event_type", "day",
-        "total", period = 7)
-    }),
-    // theta-method forecast (θ=2, the M3 winner): OLS trend line +
-    // SES-smoothed double-curvature line, averaged
-    "q_theta" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.thetaForecast(daily, "event_type", "day",
-        "total", alpha = 0.5, horizons = 3)
-    }),
-    // damped-trend Holt-Winters (φ = 7/8): the long-horizon fix — the
-    // trend decays by φ per step instead of walking off linearly
-    "q_holt_damped" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.holtWintersDamped(daily, "event_type", "day",
-        "total", period = 7, phi = 0.875)
-    }),
-    // auto Holt-Winters: per-key (α, β, γ) selected from the 12-triple
-    // dyadic grid by one-step-ahead SSE — the auto_arima-style bounded
-    // model search; every candidate's full recursion is oracle-replayed
-    "q_holt_winters_auto" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.holtWintersAuto(daily, "event_type", "day",
-        "total", period = 7)
-    }),
-    // PACF at lags 1..3 over the same daily series (Durbin-Levinson on
-    // the distributed autocovariance sums — the AR-order pick next to ACF)
-    "q_pacf" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.pacf(daily, "day", "total")
-    }),
-    // cross-correlation of the view vs purchase daily channels at lags
-    // -3..3 (one exploded-lag equi-join, moments broadcast)
-    "q_ccf" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      def daily(t: String) = Tables.events(s, d)
-        .where(col("event_type") === t)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Windows.ccf(daily("view"), daily("purchase"),
-        "day", "total", maxLag = 3)
-    }),
-    // fixed-3-round PageRank over the intra-order part-sequence graph
-    // (every round one O(|E|) equi-join + map-side-combined groupBy)
-    "q_pagerank" -> ((s, d) =>
-      graft.ops.Graph.pageRank(
-        graft.ops.Graph.orderSequenceEdges(Tables.lineitem(s, d)),
-        "src", "dst", iterations = 3, damping = 0.85, topK = 20)),
-    // personalized PageRank from parts {1, 2}: proximity to the seeds
-    // through the sequence graph (teleport mass seeds-only)
-    "q_ppr" -> ((s, d) =>
-      graft.ops.Graph.personalizedPageRank(
-        graft.ops.Graph.orderSequenceEdges(Tables.lineitem(s, d)),
-        "src", "dst", seeds = Seq(1L, 2L), iterations = 3,
-        damping = 0.85, topK = 20)),
-    // market-basket item affinity: co-occurrence Jaccard over order
-    // baskets (basket-keyed self-join, fan-out bounded by basket size)
-    "q_item_affinity" -> ((s, d) => graft.ops.Graph.itemAffinity(
-      Tables.lineitem(s, d), "l_orderkey", "l_partkey",
-      minCo = 2, maxBasket = 12, topK = 25)),
-    // fixed-2-round HITS over the same graph: authorities = pointed to
-    // by good hubs (two edge equi-joins + a 1-row max scalar per round)
-    "q_hits" -> ((s, d) =>
-      graft.ops.Graph.hits(
-        graft.ops.Graph.orderSequenceEdges(Tables.lineitem(s, d)),
-        "src", "dst", iterations = 2, topK = 20)),
-    // per-node triangle count + clustering coefficient over the capped
-    // co-occurrence graph (compact-forward wedge close: each x<y<z once)
-    "q_triangles" -> ((s, d) => graft.ops.Graph.triangleStats(
-      graft.ops.Graph.basketPairs(Tables.lineitem(s, d), "l_orderkey",
-        "l_partkey", minCo = 2, maxBasket = 12),
-      "a", "b", topK = 30)),
-    // 3-round synchronous min-tie-break label propagation over the same
-    // capped co-occurrence graph (deterministic LPA communities)
-    "q_label_prop" -> ((s, d) => graft.ops.Graph.labelPropagation(
-      graft.ops.Graph.basketPairs(Tables.lineitem(s, d), "l_orderkey",
-        "l_partkey", minCo = 2, maxBasket = 12),
-      "a", "b", rounds = 3)),
-    // 3-core of the same capped co-occurrence graph: 5 synchronous
-    // peel rounds, surviving nodes with within-core degree
-    "q_kcore" -> ((s, d) => graft.ops.Graph.kCore(
-      graft.ops.Graph.basketPairs(Tables.lineitem(s, d), "l_orderkey",
-        "l_partkey", minCo = 2, maxBasket = 12),
-      "a", "b", k = 3, rounds = 5)),
-    // do hubs link to hubs? Newman degree assortativity of the capped
-    // basket graph — exact-integer endpoint-degree sums, one scalar row
-    "q_assortativity" -> ((s, d) => graft.ops.Graph.assortativity(
-      graft.ops.Graph.basketPairs(Tables.lineitem(s, d), "l_orderkey",
-        "l_partkey", minCo = 2, maxBasket = 12),
-      "a", "b")),
-    // 3-truss of the same graph: 3 synchronous edge-support peels —
-    // every surviving edge closes a triangle within the truss (bridges
-    // and hub spokes the 3-core keeps peel away here)
-    "q_ktruss" -> ((s, d) => graft.ops.Graph.kTruss(
-      graft.ops.Graph.basketPairs(Tables.lineitem(s, d), "l_orderkey",
-        "l_partkey", minCo = 2, maxBasket = 12),
-      "a", "b", k = 3, rounds = 3)),
-    // community quality: Newman modularity of the label-prop partition
-    // over the same capped basket graph — did LPA find REAL structure,
-    // and which communities carry it?
-    "q_modularity" -> ((s, d) =>
-      // scores the per-JVM PUBLISHED LPA(3) assignment (r17): the LPA
-      // chain stays measured live in q_louvain (full LPA + sweep +
-      // scorecard lineage); this gate measures the Newman scorecard
-      // over the persisted partition — labels parquet-exact longs
-      graft.ops.Graph.modularity(louvainBasketEdgesCp(s, d), "a", "b",
-        lpa3Table(s, d))),
-    // community improvement: one full direction-alternating Louvain
-    // local-move sweep (2 rounds = down-or-stay then up-or-stay) on
-    // top of the LPA partition (exact-integer gain argmax), then the
-    // Newman scorecard re-measured on the moved assignment. Runs the
-    // chain END-TO-END live (never the published table) so the chain's
-    // cost and 10x scaling stay measured by this gate.
-    "q_louvain" -> ((s, d) => {
-      // one checkpointed edge table for the WHOLE chain (LPA +
-      // local-move + scorecard embedded three basket self-joins — r16)
-      val edges = louvainBasketEdgesCp(s, d)
-      graft.ops.Graph.modularity(edges, "a", "b",
-        louvainStage1Sweep(edges))
-    }),
-    // Louvain phase two: contract the swept partition to a super-graph
-    // (integer edge-count weights, self-loops in degree mass) and run
-    // one direction sweep of community-level merges, then re-score.
-    // CONSUMES the phase-1 assignment from the published parameter
-    // table (computed at most once per JVM, parquet round-trip) — the
-    // checkpoint-between-levels discipline a 100 TB run would use,
-    // instead of recomputing the whole LPA+sweep chain per phase-2 read
-    "q_louvain2" -> ((s, d) => {
-      val edges = louvainBasketEdgesCp(s, d)
-      graft.ops.Graph.modularity(edges, "a", "b",
-        graft.ops.Graph.louvainCoarseMove(edges, "a", "b",
-          louvainStage1Published(s, d), rounds = 2))
-    }),
-    // multi-level Louvain: recurse the coarsen+sweep on the published
-    // phase-1 assignment up to 4 levels, stopping when the EXACT-INT
-    // modularity numerator stops strictly improving; one summary row
-    // per computed level (level 0 = the input assignment, last row =
-    // the stall evidence or the budget boundary)
-    "q_louvain_multi" -> ((s, d) => {
-      val edges = louvainBasketEdges(s, d)
-      graft.ops.Graph.louvainMultiLevel(edges, "a", "b",
-        louvainStage1Published(s, d), maxLevels = 4, rounds = 2)
-    }),
-    // the multi-level FINAL node->community map as a CONSUMABLE table
-    // (q_louvain_multi emits per-level summaries only, by design):
-    // published once per JVM via the saveModel/loadModel discipline,
-    // read back here with per-community sizes — the frame community-
-    // balanced sampling and per-community mix reports join against
-    "q_louvain_assign" -> ((s, d) =>
-      louvainAssignTable(s, d).orderBy("node")),
-    // the stated CONSUMER of the published assignment: per-community
-    // revenue mix (integer-cents exact) — which communities carry the
-    // catalog's mass, the input a community-balanced sampler reads
-    "q_community_mix" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val asg = louvainAssignTable(s, d)
-      val li = Tables.lineitem(s, d).select(
-        col("l_partkey").as("node"),
-        round(col("l_extendedprice") * 100).cast("long").as("__cents"))
-      val per = li.join(asg.select(col("node"), col("community")),
-          Seq("node"))
-        .groupBy(col("community"))
-        .agg(count(lit(1)).as("n_lineitems"),
-          sum(col("__cents")).as("revenue_cents"))
-      val sizes = asg.groupBy(col("community"))
-        .agg(count(lit(1)).as("n_items"))
-      val tot = per.agg(sum(col("revenue_cents")).as("__t"))
-      per.join(sizes, Seq("community"))
-        .crossJoin(broadcast(tot))
-        .select(col("community"), col("n_items"), col("n_lineitems"),
-          col("revenue_cents"),
-          round(col("revenue_cents").cast("double") / col("__t"), 6)
-            .as("revenue_share"))
-        .orderBy("community")
-    }),
-    // directed association rules (confidence + lift) over the capped
-    // basket set — itemAffinity's Jaccard turned into implication
-    "q_assoc_rules" -> ((s, d) => graft.ops.Graph.assocRules(
-      Tables.lineitem(s, d), "l_orderkey", "l_partkey", minCo = 2,
-      maxBasket = 12, topK = 30)),
-    // 3-round BFS hop distances from the PPR seed parts over the
-    // intra-order sequence graph (unit-weight Bellman-Ford relaxation)
-    "q_bfs_hops" -> ((s, d) => graft.ops.Graph.bfsHops(
-      graft.ops.Graph.orderSequenceEdges(Tables.lineitem(s, d)),
-      "src", "dst", seeds = Seq(1L, 2L), maxHops = 3)),
-    // standardized CUSUM changepoint score per event type over the daily
-    // series (mean-shift detector + estimated shift day)
-    "q_cusum" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Drift.cusumChangepoint(daily, "event_type", "day", "total")
-    }),
-    // Page-Hinkley sequential upward-shift monitor on the same daily
-    // series (first λ-crossing, standardized units)
-    "q_page_hinkley" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Drift.pageHinkley(daily, "event_type", "day", "total",
-        delta = 0.05, lambda = 3.0)
-    }),
-    // market concentration: HHI / effective firms / CR4 / entropy of
-    // per-customer revenue shares within each market segment
-    "q_concentration" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      graft.ops.Commerce.marketConcentration(
-        Tables.orders(s, d).join(Tables.customer(s, d),
-          col("c_custkey") === col("o_custkey")),
-        "c_mktsegment", "c_custkey", "o_totalprice")
-    }),
-    // ABC inventory classes: parts ranked by revenue, class A to the
-    // 80% cumulative-share line, B to 95%, C the tail — the actionable
-    // companion to the Gini/Lorenz concentration gates
-    "q_abc" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      // integer-exact revenue: 2-decimal price and discount become
-      // integer cents (round-to-nearest of a value within 1 ulp of an
-      // integer is safe on both engines), the per-item total sums in
-      // BIGINT 1e-4 units, and HALF_UP happens in integer arithmetic
-      // ((s + 50) div 100) — float rounding of the raw product flips
-      // the published cent on exact .xx5 boundaries (measured: 113
-      // items at sf0.01)
-      val e4 = (round(col("l_extendedprice") * 100).cast("long") *
-        (lit(100L) - round(col("l_discount") * 100).cast("long")))
-      val per = Tables.lineitem(s, d)
-        .where(col("l_partkey").isNotNull)
-        .groupBy(col("l_partkey"))
-        .agg(sum(e4).as("__s"))
-        .select(col("l_partkey"),
-          (expr("CAST((__s + 50) DIV 100 AS DOUBLE)") / 100.0)
-            .as("rev"))
-      graft.ops.Commerce.abcClasses(per, "l_partkey", "rev")
-    }),
-    // Pettitt rank changepoint: the O(n²) pair statistic via the linear
-    // rank identity U_t = 2·S_t − t(n+1); integer-exact U, closed-form
-    // significance, segment means on both sides of the split
-    "q_pettitt" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(round(sum(col("value")), 2).as("total"))
-      graft.ops.Drift.pettittChangepoint(daily, "event_type", "day",
-        "total")
-    }),
-    // Benjamini-Hochberg FDR over the per-nation monthly-revenue
-    // Pettitt changepoint family (the fleet-wide-scan guardrail)
-    "q_fdr" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val monthly = Tables.orders(s, d)
-        .join(Tables.customer(s, d),
-          col("c_custkey") === col("o_custkey"))
-        .join(Tables.nation(s, d),
-          col("n_nationkey") === col("c_nationkey"))
-        .groupBy(col("n_name"),
-          (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
-            .as("mi"))
-        .agg(round(sum(col("o_totalprice")), 2).as("rev"))
-      val pv = graft.ops.Drift.pettittChangepoint(monthly, "n_name",
-        "mi", "rev")
-      graft.ops.Stats.fdrBh(pv, "n_name", "p_value", q = 0.05)
-    }),
-    // deterministic count-min-sketch heavy hitters over part keys,
-    // exact counts alongside (the collision error made visible)
-    "q_cms_heavy" -> ((s, d) => graft.ops.Stats.cmsHeavyHitters(
-      Tables.lineitem(s, d), "l_partkey")),
-    // equal-frequency quartile bins of the integral quantity measure
-    // (exact interpolated edges, engine-identical on integers)
-    "q_quantile_bins" -> ((s, d) => graft.ops.Features.quantileBins(
-      Tables.lineitem(s, d).select(
-        org.apache.spark.sql.functions.col("l_quantity")),
-      "l_quantity", bins = 4)),
-    // top-20 session paths at the same 30000-second inactivity gap as
-    // q_sessions, count ties broken by path
-    "q_session_paths" -> ((s, d) => graft.ops.Events.sessionPaths(
-      Tables.events(s, d), "user_id", "ts", "event_id", "event_type",
-      gapSec = 30000L, topK = 20)),
-    // Benford first-digit screen over order totals
-    "q_benford" -> ((s, d) => graft.ops.Stats.benford(
-      Tables.orders(s, d), "o_totalprice")),
-    // character-level near-dup: prefix-blocked levenshtein pairs
-    "q_edit_dist_dup" -> ((s, d) => graft.ops.Dedup.editDistancePairs(
-      Tables.documents(s, d), "doc_id", "text", blockTokens = 4,
-      capChars = 80, maxDist = 10)),
-    // Z-order layout evidence: Morton-key range buckets of lineitem on
-    // (part, supp), per-bucket zone-map min/max spans
-    "q_zorder" -> ((s, d) => graft.ops.Layout.zorderStats(
-      Tables.lineitem(s, d), "l_partkey", "l_suppkey",
-      bits = 16, buckets = 16)),
-  )
-
-  /** The q_bpe_merges oracle: `rounds` greedy BPE rounds unrolled as a
-    * CTE chain (one pair-count + argmax + merge block per round; standard
-    * SQL recursive CTEs cannot aggregate over their own working table, so
-    * the builder writes each round out explicitly). State s&#36;r holds one
-    * row per (word, position, symbol); the merge step marks candidate
-    * positions, keeps the odd-ranked ones within each run of consecutive
-    * candidates (relational greedy left-to-right), rewrites the kept
-    * position's symbol to the concatenation, drops the consumed right
-    * position, and re-indexes.
-    */
-  private def bpeMergesOracle(rounds: Int): String = {
-    val unionArms = (1 to rounds).map(r =>
-      s"SELECT $r AS merge_round, l AS lhs, rr AS rhs, l || rr AS merged, " +
-        s"cnt AS pair_count FROM t$r").mkString("\nUNION ALL ")
-    s"""${bpeChainSql(rounds)}
-       |$unionArms
-       |ORDER BY merge_round""".stripMargin
-  }
-
-  /** The q_bpe_encode oracle rides the SAME training chain: applying the
-    * learned merges in training order to the training corpus reproduces
-    * the trainer's final symbol state, so the per-word subword count is
-    * simply the row count of s&#36;rounds — joined back to per-document
-    * word counts for the token accounting.
-    */
-  private def bpeEncodeOracle(rounds: Int): String =
-    s"""${bpeChainSql(rounds)},
-       |wc AS MATERIALIZED (
-       |  SELECT d.doc_id, t.w, CAST(count(*) AS BIGINT) AS cnt
-       |  FROM documents d,
-       |       UNNEST(regexp_extract_all(lower(d.text), '[a-z]+')) AS t(w)
-       |  GROUP BY d.doc_id, t.w),
-       |ns AS MATERIALIZED (
-       |  SELECT wid AS w, CAST(count(*) AS BIGINT) AS n_sub
-       |  FROM s$rounds GROUP BY wid)
-       |SELECT wc.doc_id,
-       |  CAST(sum(wc.cnt * len(wc.w)) AS BIGINT) AS n_char_syms,
-       |  CAST(sum(wc.cnt * ns.n_sub) AS BIGINT) AS n_bpe_tokens,
-       |  round(CAST(sum(wc.cnt * len(wc.w)) AS DOUBLE)
-       |        / sum(wc.cnt * ns.n_sub), 6) AS compression
-       |FROM wc JOIN ns ON ns.w = wc.w
-       |GROUP BY wc.doc_id ORDER BY wc.doc_id""".stripMargin
-
-  /** The q_bpe_fertility oracle rides the SAME training chain: the
-    * per-word token count at checkpoint j is the row count of state
-    * s&#36;j (the state after exactly j merges — s0 is the raw character
-    * state), joined to per-(source, word) counts for the per-source
-    * fertility/compression aggregates.
-    */
-  private def bpeFertilityOracle(rounds: Int,
-                                 checkpoints: Seq[Int]): String = {
-    val nsArms = checkpoints.map(j =>
-      s"SELECT wid AS w, $j AS n_merges, CAST(count(*) AS BIGINT) " +
-        s"AS n_sub FROM s$j GROUP BY 1, 2").mkString("\nUNION ALL ")
-    s"""${bpeChainSql(rounds)},
-       |swc AS MATERIALIZED (
-       |  SELECT d.source, t.w, CAST(count(*) AS BIGINT) AS cnt
-       |  FROM documents d,
-       |       UNNEST(regexp_extract_all(lower(d.text), '[a-z]+')) AS t(w)
-       |  GROUP BY d.source, t.w),
-       |u AS MATERIALIZED ($nsArms)
-       |SELECT swc.source, u.n_merges,
-       |  CAST(sum(swc.cnt) AS BIGINT) AS n_words,
-       |  round(CAST(sum(swc.cnt * u.n_sub) AS DOUBLE)
-       |        / sum(swc.cnt), 6) AS tokens_per_word,
-       |  round(CAST(sum(swc.cnt * len(swc.w)) AS DOUBLE)
-       |        / sum(swc.cnt * u.n_sub), 6) AS chars_per_token
-       |FROM swc JOIN u ON u.w = swc.w
-       |GROUP BY 1, 2 ORDER BY source, n_merges""".stripMargin
-  }
-
-  /** Shared q_bpe_* training chain: words → char state s0 → `rounds`
-    * merge blocks, ending with a trailing comma-ready block list. */
-  private def bpeChainSql(rounds: Int): String = {
-    val roundBlocks = (1 to rounds).map { r =>
-      val p = r - 1
-      s"""p$r AS MATERIALIZED (
-         |  SELECT a.sym AS l, b.sym AS rr, CAST(sum(a.freq) AS BIGINT) AS cnt
-         |  FROM s$p a JOIN s$p b ON a.wid = b.wid AND b.pos = a.pos + 1
-         |  GROUP BY a.sym, b.sym),
-         |t$r AS MATERIALIZED (SELECT l, rr, cnt FROM p$r ORDER BY cnt DESC, l, rr LIMIT 1),
-         |c$r AS MATERIALIZED (
-         |  SELECT a.wid, a.pos,
-         |         row_number() OVER (PARTITION BY a.wid ORDER BY a.pos) AS rn
-         |  FROM s$p a JOIN s$p b ON a.wid = b.wid AND b.pos = a.pos + 1
-         |  CROSS JOIN t$r t WHERE a.sym = t.l AND b.sym = t.rr),
-         |k$r AS MATERIALIZED (
-         |  SELECT wid, pos FROM (
-         |    SELECT wid, pos,
-         |           row_number() OVER (PARTITION BY wid, pos - rn
-         |                              ORDER BY pos) AS ri
-         |    FROM c$r) WHERE ri % 2 = 1),
-         |s$r AS MATERIALIZED (
-         |  SELECT wid, freq,
-         |         row_number() OVER (PARTITION BY wid ORDER BY pos) - 1 AS pos,
-         |         sym
-         |  FROM (
-         |    SELECT a.wid, a.freq, a.pos,
-         |           CASE WHEN k.pos IS NOT NULL THEN t.l || t.rr
-         |                ELSE a.sym END AS sym
-         |    FROM s$p a
-         |    CROSS JOIN t$r t
-         |    LEFT JOIN k$r k ON a.wid = k.wid AND a.pos = k.pos
-         |    WHERE NOT EXISTS (SELECT 1 FROM k$r k2
-         |                      WHERE k2.wid = a.wid AND k2.pos = a.pos - 1)))""".stripMargin
-    }
-    s"""WITH words AS MATERIALIZED (
-       |  SELECT t.w AS w, CAST(count(*) AS BIGINT) AS freq
-       |  FROM documents d,
-       |       UNNEST(regexp_extract_all(lower(d.text), '[a-z]+')) AS t(w)
-       |  GROUP BY t.w),
-       |s0 AS MATERIALIZED (
-       |  SELECT w.w AS wid, w.freq, i.i AS pos,
-       |         substr(w.w, CAST(i.i + 1 AS INTEGER), 1) AS sym
-       |  FROM words w CROSS JOIN UNNEST(range(len(w.w))) AS i(i)),
-       |${roundBlocks.mkString(",\n")}""".stripMargin
-  }
-
-  /** Shared q_unigram_* chain: words → substring seed (ALL single chars
-    * + top-200 multi-char with weighted count ≥ 2, count-desc/piece-asc)
-    * → `rounds` hard-EM rounds. Each round is the relational replay of
-    * the Spark HOF folds: a RECURSIVE Viterbi DP carrying the last four
-    * best-log-probs as window columns (udp — standard SQL cannot
-    * otherwise express a sequential DP), a flattened (wid, pos, best)
-    * view (ud), the chosen-edge table (ue — smallest k whose candidate
-    * equals the recorded best, via row_number; the forward greatest
-    * returns one of its inputs bit-exactly, so a match always exists
-    * and the tie resolves to the shortest piece, the Spark backtrace's
-    * order), a RECURSIVE backtrace walk (ubt), Viterbi-weighted counts
-    * (ucnt) and the renormalized vocab (uv — single chars floored at
-    * count 1, zero-count multi-char pieces pruned). `encodePass` adds
-    * round `rounds`+1's ul/udp/ud/ue/ubt against the FINAL vocab (the
-    * segmentation pass, no count update); `emitWords` = false drops the
-    * WITH prefix and words CTE for composition after [[bpeChainSql]],
-    * whose words CTE is identical.
-    */
-  private def unigramChainSql(rounds: Int, encodePass: Boolean,
-                              emitWords: Boolean): String = {
-    val last = rounds + (if (encodePass) 1 else 0)
-    val roundBlocks = (1 to last).map { r =>
-      val p = r - 1
-      val em =
-        s""",
-           |ucnt$r AS MATERIALIZED (
-           |  SELECT e.piece, CAST(sum(w.freq) AS BIGINT) AS cnt
-           |  FROM ubt$r b
-           |  JOIN ue$r e ON e.wid = b.wid AND e.pos = b.pos
-           |  JOIN words w ON w.w = b.wid
-           |  WHERE b.pos > 0
-           |  GROUP BY e.piece),
-           |uv$r AS MATERIALIZED (
-           |  SELECT c.piece,
-           |         greatest(coalesce(u.cnt, CAST(0 AS BIGINT)),
-           |                  CAST(1 AS BIGINT)) AS cnt
-           |  FROM (SELECT piece FROM uv0 WHERE len(piece) = 1) c
-           |  LEFT JOIN ucnt$r u ON u.piece = c.piece
-           |  UNION ALL
-           |  SELECT piece, cnt FROM ucnt$r WHERE len(piece) > 1)""".stripMargin
-      s"""ul$r AS MATERIALIZED (
-         |  SELECT piece, round(ln(cnt) -
-         |    ln((SELECT CAST(sum(cnt) AS DOUBLE) FROM uv$p)), 6) AS lp
-         |  FROM uv$p),
-         |udp$r AS (
-         |  SELECT w.w AS wid, 0 AS i, CAST(0.0 AS DOUBLE) AS b0,
-         |         CAST(NULL AS DOUBLE) AS b1, CAST(NULL AS DOUBLE) AS b2,
-         |         CAST(NULL AS DOUBLE) AS b3
-         |  FROM words w
-         |  UNION ALL
-         |  SELECT d.wid, d.i + 1,
-         |    greatest(
-         |      d.b0 + l1.lp,
-         |      CASE WHEN d.i >= 1 THEN d.b1 + l2.lp END,
-         |      CASE WHEN d.i >= 2 THEN d.b2 + l3.lp END,
-         |      CASE WHEN d.i >= 3 THEN d.b3 + l4.lp END),
-         |    d.b0, d.b1, d.b2
-         |  FROM udp$r d
-         |  LEFT JOIN ul$r l1 ON l1.piece = substr(d.wid, d.i + 1, 1)
-         |  LEFT JOIN ul$r l2 ON d.i >= 1 AND l2.piece = substr(d.wid, d.i, 2)
-         |  LEFT JOIN ul$r l3
-         |    ON d.i >= 2 AND l3.piece = substr(d.wid, d.i - 1, 3)
-         |  LEFT JOIN ul$r l4
-         |    ON d.i >= 3 AND l4.piece = substr(d.wid, d.i - 2, 4)
-         |  WHERE d.i < len(d.wid)),
-         |ud$r AS MATERIALIZED (SELECT wid, i, b0 AS best FROM udp$r),
-         |ue$r AS MATERIALIZED (
-         |  SELECT wid, pos, k, piece FROM (
-         |    SELECT dd.wid, dd.i AS pos, kk.k,
-         |           substr(dd.wid, dd.i - kk.k + 1, kk.k) AS piece,
-         |           row_number() OVER (PARTITION BY dd.wid, dd.i
-         |                              ORDER BY kk.k) AS rn
-         |    FROM ud$r dd
-         |    CROSS JOIN (SELECT CAST(k0 + 1 AS INTEGER) AS k
-         |                FROM UNNEST(range(4)) t(k0)) kk
-         |    JOIN ud$r pp ON pp.wid = dd.wid AND pp.i = dd.i - kk.k
-         |    JOIN ul$r ll
-         |      ON ll.piece = substr(dd.wid, dd.i - kk.k + 1, kk.k)
-         |    WHERE dd.i > 0 AND pp.best + ll.lp = dd.best)
-         |  WHERE rn = 1),
-         |ubt$r AS (
-         |  SELECT w.w AS wid, len(w.w) AS pos FROM words w
-         |  UNION ALL
-         |  SELECT b.wid, b.pos - e.k FROM ubt$r b
-         |  JOIN ue$r e ON e.wid = b.wid AND e.pos = b.pos
-         |  WHERE b.pos > 0)${if (r <= rounds) em else ""}""".stripMargin
-    }
-    val wordsCte =
-      if (emitWords)
-        """WITH RECURSIVE words AS MATERIALIZED (
-          |  SELECT t.w AS w, CAST(count(*) AS BIGINT) AS freq
-          |  FROM documents d,
-          |       UNNEST(regexp_extract_all(lower(d.text), '[a-z]+')) AS t(w)
-          |  GROUP BY t.w),
-          |""".stripMargin
-      else ""
-    s"""${wordsCte}useed AS MATERIALIZED (
-       |  SELECT substr(w.w, CAST(i.i + 1 AS INTEGER),
-       |                CAST(k.k0 + 1 AS INTEGER)) AS piece,
-       |         CAST(sum(w.freq) AS BIGINT) AS cnt
-       |  FROM words w
-       |  CROSS JOIN UNNEST(range(4)) AS k(k0)
-       |  CROSS JOIN UNNEST(range(len(w.w))) AS i(i)
-       |  WHERE i.i + k.k0 + 1 <= len(w.w)
-       |  GROUP BY 1),
-       |uv0 AS MATERIALIZED (
-       |  SELECT piece, cnt FROM useed WHERE len(piece) = 1
-       |  UNION ALL
-       |  SELECT piece, cnt FROM (
-       |    SELECT piece, cnt FROM useed
-       |    WHERE len(piece) > 1 AND cnt >= 2
-       |    ORDER BY cnt DESC, piece LIMIT 200)),
-       |${roundBlocks.mkString(",\n")}""".stripMargin
-  }
-
-  /** The q_substring_ladder injection blurb: 37 tokens, so its
-    * within-blurb windows qualify at every rung up to k = 32. */
-  private val ladderBlurb = "this dataset is distributed in the hope " +
-    "that it will be useful but without any warranty without even the " +
-    "implied warranty of merchantability or fitness for a particular " +
-    "purpose see the general public license for more details"
-
-  /** The q_substring_ladder oracle: one span-fingerprint + qualify +
-    * interval-union block per rung (the q_substring_incremental idiom
-    * at each width), unioned with the rung as a column. */
-  private def substringLadderOracle(ks: Seq[Int], minDocs: Int): String = {
-    val rungBlocks = ks.map { k =>
-      s"""sp$k AS MATERIALIZED (SELECT doc_id, i.i AS pos,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(toks[i.i + 1 : i.i + $k], x ->
-         |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-         |          % 1048576)),
-         |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-         |  FROM tk CROSS JOIN
-         |    UNNEST(range(greatest(len(toks) - ${k - 1}, 0))) AS i(i)),
-         |q$k AS (SELECT h FROM sp$k GROUP BY h
-         |        HAVING count(DISTINCT doc_id) >= $minDocs),
-         |hit$k AS (SELECT doc_id, pos FROM sp$k
-         |          WHERE h IN (SELECT h FROM q$k)),
-         |cov$k AS (SELECT doc_id, least($k, COALESCE(pos - lag(pos)
-         |            OVER (PARTITION BY doc_id ORDER BY pos), $k)) AS c
-         |          FROM hit$k),
-         |ag$k AS (SELECT doc_id, $k AS k,
-         |           CAST(count(*) AS BIGINT) AS n_hit_spans,
-         |           CAST(sum(c) AS BIGINT) AS n_covered_tokens
-         |         FROM cov$k GROUP BY 1)""".stripMargin
-    }
-    val arms = ks.map(k => s"SELECT * FROM ag$k").mkString(" UNION ALL ")
-    s"""WITH d AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 5 = 0 THEN '$ladderBlurb ' ELSE '' END
-       |    || COALESCE(text, '') || ' visit the ' || source
-       |    || ' archive for more stories and daily updates from our '
-       |    || 'editors' AS t
-       |  FROM documents),
-       |tk AS MATERIALIZED (SELECT doc_id, string_split(t, ' ') AS toks
-       |                    FROM d),
-       |${rungBlocks.mkString(",\n")},
-       |ntk AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens
-       |        FROM tk)
-       |SELECT a.doc_id, a.k, ntk.n_tokens, a.n_hit_spans,
-       |  a.n_covered_tokens,
-       |  round(CAST(a.n_covered_tokens AS DOUBLE) / ntk.n_tokens, 6)
-       |    AS coverage_rate
-       |FROM ($arms) a JOIN ntk USING (doc_id)
-       |ORDER BY a.doc_id, a.k""".stripMargin
-  }
-
-  /** The q_windowed_span_ladder oracle: per rung, the train split's
-    * qualifying digests and the eval split's hour-bucketed span hits
-    * (the q_windowed_span_hits idiom at each width), unioned with the
-    * rung as a column. */
-  private def windowedSpanLadderOracle(ks: Seq[Int],
-                                       minDocs: Int): String = {
-    val rungBlocks = ks.map { k =>
-      s"""trsp$k AS MATERIALIZED (SELECT doc_id,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(toks[i.i + 1 : i.i + $k], x ->
-         |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-         |          % 1048576)),
-         |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-         |  FROM tr CROSS JOIN
-         |    UNNEST(range(greatest(len(toks) - ${k - 1}, 0))) AS i(i)),
-         |idx$k AS (SELECT h FROM trsp$k GROUP BY h
-         |          HAVING count(DISTINCT doc_id) >= $minDocs),
-         |nbsp$k AS (SELECT doc_id, ws,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(toks[i.i + 1 : i.i + $k], x ->
-         |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-         |          % 1048576)),
-         |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-         |  FROM nb CROSS JOIN
-         |    UNNEST(range(greatest(len(toks) - ${k - 1}, 0))) AS i(i)),
-         |pd$k AS (SELECT ws, doc_id, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN h IN (SELECT h FROM idx$k)
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS hk
-         |  FROM nbsp$k GROUP BY 1, 2),
-         |ag$k AS (SELECT CAST(ws AS TIMESTAMP) AS window_start,
-         |    $k AS k,
-         |    CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n) AS BIGINT) AS n_spans,
-         |    CAST(sum(hk) AS BIGINT) AS n_hit_spans,
-         |    CAST(sum(CASE WHEN hk > 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_flagged_docs,
-         |    round(CAST(sum(hk) AS DOUBLE) / sum(n), 6) AS hit_rate
-         |  FROM pd$k GROUP BY 1)""".stripMargin
-    }
-    val arms = ks.map(k => s"SELECT * FROM ag$k").mkString(" UNION ALL ")
-    s"""WITH d AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 5 = 0 THEN '$ladderBlurb ' ELSE '' END
-       |    || COALESCE(text, '') || ' visit the ' || source
-       |    || ' archive for more stories and daily updates from our '
-       |    || 'editors' AS t
-       |  FROM documents),
-       |tr AS MATERIALIZED (SELECT doc_id, string_split(t, ' ') AS toks
-       |       FROM d WHERE doc_id % 7 <> 0),
-       |nb AS MATERIALIZED (SELECT doc_id,
-       |         time_bucket(INTERVAL 1 HOUR,
-       |           TIMESTAMP '2024-01-01 00:00:00' + to_minutes(doc_id))
-       |           AS ws,
-       |         string_split(t, ' ') AS toks
-       |       FROM d WHERE doc_id % 7 = 0),
-       |${rungBlocks.mkString(",\n")}
-       |SELECT * FROM ($arms)
-       |ORDER BY window_start, k""".stripMargin
-  }
-
-  /** The q_unigram_train oracle: the EM chain's final vocab with the
-    * renormalized 6-decimal log-probs. */
-  private def unigramTrainOracle(rounds: Int): String =
-    s"""${unigramChainSql(rounds, encodePass = false, emitWords = true)}
-       |SELECT piece, cnt,
-       |  round(ln(cnt) -
-       |    ln((SELECT CAST(sum(cnt) AS DOUBLE) FROM uv$rounds)), 6) AS lp
-       |FROM uv$rounds ORDER BY piece""".stripMargin
-
-  /** The q_unigram_encode oracle rides the SAME chain plus the encode
-    * pass: per-word token counts are the backtrace step counts of round
-    * `rounds`+1, joined to per-document word counts. */
-  private def unigramEncodeOracle(rounds: Int): String = {
-    val e = rounds + 1
-    s"""${unigramChainSql(rounds, encodePass = true, emitWords = true)},
-       |uns AS MATERIALIZED (
-       |  SELECT b.wid AS w, CAST(count(*) AS BIGINT) AS n_sub
-       |  FROM ubt$e b JOIN ue$e e ON e.wid = b.wid AND e.pos = b.pos
-       |  WHERE b.pos > 0 GROUP BY b.wid),
-       |uwc AS MATERIALIZED (
-       |  SELECT d.doc_id, t.w, CAST(count(*) AS BIGINT) AS cnt
-       |  FROM documents d,
-       |       UNNEST(regexp_extract_all(lower(d.text), '[a-z]+')) AS t(w)
-       |  GROUP BY d.doc_id, t.w)
-       |SELECT uwc.doc_id,
-       |  CAST(sum(uwc.cnt * len(uwc.w)) AS BIGINT) AS n_char_syms,
-       |  CAST(sum(uwc.cnt * uns.n_sub) AS BIGINT) AS n_unigram_tokens,
-       |  round(CAST(sum(uwc.cnt * len(uwc.w)) AS DOUBLE)
-       |        / sum(uwc.cnt * uns.n_sub), 6) AS compression
-       |FROM uwc JOIN uns ON uns.w = uwc.w
-       |GROUP BY uwc.doc_id ORDER BY uwc.doc_id""".stripMargin
-  }
-
-  /** The q_windowed_fertility oracle rides the unigram chain's encode
-    * pass: per-word token counts joined to hour-bucketed word
-    * occurrences (every stream word is a corpus word here, so the
-    * stream op's OOV floor never fires — the monitor and the chain
-    * agree bit-for-bit). */
-  private def windowedFertilityOracle(rounds: Int): String = {
-    val e = rounds + 1
-    s"""${unigramChainSql(rounds, encodePass = true, emitWords = true)},
-       |uns AS MATERIALIZED (
-       |  SELECT b.wid AS w, CAST(count(*) AS BIGINT) AS n_sub
-       |  FROM ubt$e b JOIN ue$e e ON e.wid = b.wid AND e.pos = b.pos
-       |  WHERE b.pos > 0 GROUP BY b.wid),
-       |wws AS MATERIALIZED (
-       |  SELECT d.doc_id,
-       |    time_bucket(INTERVAL 1 HOUR,
-       |      TIMESTAMP '2024-01-01 00:00:00' + to_minutes(d.doc_id))
-       |      AS ws,
-       |    t.w
-       |  FROM documents d,
-       |       UNNEST(regexp_extract_all(lower(d.text), '[a-z]+'))
-       |         AS t(w)
-       |  WHERE d.doc_id % 7 = 0),
-       |pd AS (SELECT ws, doc_id, CAST(count(*) AS BIGINT) AS nw,
-       |         CAST(sum(uns.n_sub) AS BIGINT) AS nt,
-       |         CAST(sum(len(wws.w)) AS BIGINT) AS nc
-       |       FROM wws JOIN uns ON uns.w = wws.w GROUP BY 1, 2)
-       |SELECT CAST(ws AS TIMESTAMP) AS window_start,
-       |  CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(nw) AS BIGINT) AS n_words,
-       |  CAST(sum(nt) AS BIGINT) AS n_subword_tokens,
-       |  CAST(sum(nc) AS BIGINT) AS n_chars,
-       |  round(CAST(sum(nt) AS DOUBLE) / sum(nw), 6) AS fertility,
-       |  round(CAST(sum(nc) AS DOUBLE) / sum(nt), 6) AS chars_per_token
-       |FROM pd GROUP BY 1 ORDER BY window_start""".stripMargin
-  }
-
-  /** The q_tokenizer_compare oracle: the BPE chain (8 rounds) and the
-    * unigram chain (3 EM rounds + encode pass) COMPOSED over one shared
-    * words CTE — bpeChainSql's WITH is upgraded to WITH RECURSIVE for
-    * the unigram DP/backtrace blocks — then the per-source fertility
-    * union. */
-  private def tokenizerCompareOracle(bpeRounds: Int,
-                                     uniRounds: Int): String = {
-    val e = uniRounds + 1
-    s"""${bpeChainSql(bpeRounds).replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |${unigramChainSql(uniRounds, encodePass = true, emitWords = false)},
-       |ubn AS MATERIALIZED (
-       |  SELECT wid AS w, CAST(count(*) AS BIGINT) AS n_sub,
-       |         'bpe' AS tokenizer
-       |  FROM s$bpeRounds GROUP BY wid),
-       |uun AS MATERIALIZED (
-       |  SELECT b.wid AS w, CAST(count(*) AS BIGINT) AS n_sub,
-       |         'unigram' AS tokenizer
-       |  FROM ubt$e b JOIN ue$e e ON e.wid = b.wid AND e.pos = b.pos
-       |  WHERE b.pos > 0 GROUP BY b.wid),
-       |uswc AS MATERIALIZED (
-       |  SELECT d.source, t.w, CAST(count(*) AS BIGINT) AS cnt
-       |  FROM documents d,
-       |       UNNEST(regexp_extract_all(lower(d.text), '[a-z]+')) AS t(w)
-       |  GROUP BY d.source, t.w)
-       |SELECT uswc.source, n.tokenizer,
-       |  CAST(sum(uswc.cnt) AS BIGINT) AS n_words,
-       |  round(CAST(sum(uswc.cnt * n.n_sub) AS DOUBLE)
-       |        / sum(uswc.cnt), 6) AS tokens_per_word,
-       |  round(CAST(sum(uswc.cnt * len(uswc.w)) AS DOUBLE)
-       |        / sum(uswc.cnt * n.n_sub), 6) AS chars_per_token
-       |FROM uswc
-       |JOIN (SELECT * FROM ubn UNION ALL SELECT * FROM uun) n
-       |  ON n.w = uswc.w
-       |GROUP BY 1, 2 ORDER BY uswc.source, n.tokenizer""".stripMargin
-  }
-
-  /** The q_gbt_stumps oracle: `rounds` boosting rounds unrolled as a
-    * MATERIALIZED-CTE chain (same builder pattern as q_bpe_merges). Each
-    * round scores every (feature, distinct value) candidate split by
-    * variance reduction over the current residuals, takes the
-    * (gain DESC, feature, value) argmax, quantizes the leaf means to the
-    * dyadic 2^-10 grid, and folds the stump into the running prediction.
-    * The integer-valued y + dyadic leaves/lr keep every sum exact, so the
-    * float argmax agrees with Spark bit-for-bit.
-    */
-  private def gbtStumpsOracle(rounds: Int, lr: Double): String = {
-    val baseArm = "SELECT 0 AS boost_round, '__base' AS feature, " +
-      "CAST(NULL AS DOUBLE) AS threshold, round(f, 6) AS leaf_left, " +
-      "round(f, 6) AS leaf_right, CAST(NULL AS DOUBLE) AS gain FROM f0"
-    val unionArms = (baseArm +: (1 to rounds).map(r =>
-      s"SELECT $r AS boost_round, feature, t AS threshold, " +
-        s"round(ml, 6) AS leaf_left, round(mr, 6) AS leaf_right, " +
-        s"round(gain, 4) AS gain FROM b$r")).mkString("\nUNION ALL ")
-    s"""${gbtChainSql(rounds, lr)}
-       |$unionArms
-       |ORDER BY boost_round""".stripMargin
-  }
-
-  /** The q_gbt_score oracle: score with the PUBLISHED (printf-rounded)
-    * model — the builder spells the prediction as the same left-to-right
-    * additive fold Spark's scorer evaluates (base, then each round's
-    * lr-scaled stump over the rounded leaves), then groups the bounded
-    * prediction domain.
-    */
-  private def gbtScoreOracle(rounds: Int, lr: Double): String = {
-    val terms = (1 to rounds).map(r =>
-      s"""   + $lr * (CASE WHEN (CASE WHEN b$r.feature = 'l_quantity'
-         |       THEN d.x1 ELSE d.x2 END) <= b$r.t
-         |       THEN round(b$r.ml, 6) ELSE round(b$r.mr, 6) END)"""
-        .stripMargin).mkString("\n")
-    val crosses = (1 to rounds).map(r => s"CROSS JOIN b$r").mkString(" ")
-    s"""${gbtChainSql(rounds, lr)},
-       |sc AS (
-       |  SELECT round(f0.f, 6)
-       |$terms AS prediction
-       |  FROM d CROSS JOIN f0 $crosses)
-       |SELECT prediction, CAST(count(*) AS BIGINT) AS n
-       |FROM sc GROUP BY prediction ORDER BY prediction""".stripMargin
-  }
-
-  /** The q_gbt_pdp oracle: the scoring fold with l_quantity FORCED to
-    * each grid value, then exact (grid, prediction) cell counts and a
-    * pinned-prediction-order weighted mean per grid value.
-    */
-  private def gbtPdpOracle(rounds: Int, lr: Double,
-                           grid: Seq[Double]): String = {
-    val terms = (1 to rounds).map(r =>
-      s"""   + $lr * (CASE WHEN (CASE WHEN b$r.feature = 'l_quantity'
-         |       THEN g.gv ELSE d.x2 END) <= b$r.t
-         |       THEN round(b$r.ml, 6) ELSE round(b$r.mr, 6) END)"""
-        .stripMargin).mkString("\n")
-    val crosses = (1 to rounds).map(r => s"CROSS JOIN b$r").mkString(" ")
-    val gvs = grid.map(g => s"CAST($g AS DOUBLE)").mkString(", ")
-    s"""${gbtChainSql(rounds, lr)},
-       |grid AS (SELECT unnest([$gvs]) AS gv),
-       |sc AS (
-       |  SELECT g.gv, round(f0.f, 6)
-       |$terms AS prediction
-       |  FROM d CROSS JOIN grid g CROSS JOIN f0 $crosses),
-       |cell AS (SELECT gv, prediction, CAST(count(*) AS BIGINT) AS c
-       |         FROM sc GROUP BY 1, 2),
-       |f AS (SELECT gv, prediction, c,
-       |    CAST(sum(c) OVER pin AS BIGINT) AS n,
-       |    sum(prediction * CAST(c AS DOUBLE)) OVER pin AS s,
-       |    row_number() OVER (PARTITION BY gv ORDER BY prediction)
-       |      AS rk
-       |  FROM cell WINDOW pin AS (PARTITION BY gv ORDER BY prediction
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-       |SELECT 'l_quantity' AS feature, gv AS grid_value, n,
-       |  round(s / CAST(n AS DOUBLE), 6) AS mean_prediction
-       |FROM f WHERE rk = 1 ORDER BY grid_value""".stripMargin
-  }
-
-  /** The q_gbt_perm_importance oracle: md5-bucket rotation permutation
-    * per feature, the published-leaf scoring fold on base and permuted
-    * frames, round-6 RMSEs and the guarded difference.
-    */
-  private def gbtPermImportanceOracle(rounds: Int, lr: Double,
-                                      buckets: Int): String = {
-    def scoreTerms(x1: String, x2: String) = (1 to rounds).map(r =>
-      s"""   + $lr * (CASE WHEN (CASE WHEN b$r.feature = 'l_quantity'
-         |       THEN $x1 ELSE $x2 END) <= b$r.t
-         |       THEN round(b$r.ml, 6) ELSE round(b$r.mr, 6) END)"""
-        .stripMargin).mkString("\n")
-    val crosses = (1 to rounds).map(r => s"CROSS JOIN b$r").mkString(" ")
-    def rmseCte(name: String, src: String, x1: String, x2: String) =
-      s"""$name AS (SELECT round(sqrt(avg((y - prediction) *
-         |      (y - prediction))), 6) AS v FROM (
-         |    SELECT t.y, round(f0.f, 6)
-         |${scoreTerms(s"t.$x1", s"t.$x2")} AS prediction
-         |    FROM $src t CROSS JOIN f0 $crosses))""".stripMargin
-    s"""${gbtChainSql(rounds, lr)},
-       |hsh AS MATERIALIZED (SELECT x1, x2, y,
-       |    md5(CAST(CAST(y AS BIGINT) AS VARCHAR) || '_' ||
-       |        CAST(CAST(x1 AS BIGINT) AS VARCHAR) || '_' ||
-       |        CAST(CAST(round(x2 * 100) AS BIGINT) AS VARCHAR)) AS hh
-       |  FROM d),
-       |k AS MATERIALIZED (SELECT *,
-       |    CAST('0x' || substr(hh, 1, 15) AS BIGINT) % $buckets AS b
-       |  FROM hsh),
-       |r AS MATERIALIZED (SELECT *,
-       |    row_number() OVER (PARTITION BY b ORDER BY hh) AS rn,
-       |    count(*) OVER (PARTITION BY b) AS cnt
-       |  FROM k),
-       |p1 AS (SELECT a.y, don.x1 AS x1, a.x2
-       |       FROM r a JOIN r don ON don.b = a.b
-       |         AND don.rn = a.rn % a.cnt + 1),
-       |p2 AS (SELECT a.y, a.x1, don.x2 AS x2
-       |       FROM r a JOIN r don ON don.b = a.b
-       |         AND don.rn = a.rn % a.cnt + 1),
-       |${rmseCte("rb", "r", "x1", "x2")},
-       |${rmseCte("r1", "p1", "x1", "x2")},
-       |${rmseCte("r2", "p2", "x1", "x2")}
-       |SELECT f AS feature, rb.v AS rmse_base,
-       |  CASE f WHEN 'l_discount' THEN r2.v ELSE r1.v END AS rmse_perm,
-       |  round((CASE f WHEN 'l_discount' THEN r2.v ELSE r1.v END)
-       |    - rb.v, 6) + 0.0 AS importance
-       |FROM (SELECT unnest(['l_discount', 'l_quantity']) AS f)
-       |CROSS JOIN rb CROSS JOIN r1 CROSS JOIN r2
-       |ORDER BY feature""".stripMargin
-  }
-
-  /** The q_gbt_eval oracle rides the same boosting chain: the final
-    * state s&#36;rounds carries every row's fitted prediction, so the
-    * regression summary is one aggregate over it (ȳ via a scalar cross,
-    * same operand order as the Spark side).
-    */
-  private def gbtEvalOracle(rounds: Int, lr: Double): String =
-    s"""${gbtChainSql(rounds, lr)}
-       |SELECT CAST(count(*) AS BIGINT) AS n,
-       |  round(sqrt(avg((y - fhat) * (y - fhat))), 6) AS rmse,
-       |  round(avg(abs(y - fhat)), 6) AS mae,
-       |  round(1.0 - sum((y - fhat) * (y - fhat))
-       |            / sum((y - ybar) * (y - ybar)), 6) AS r2
-       |FROM s$rounds CROSS JOIN
-       |  (SELECT avg(y) AS ybar FROM s$rounds) m""".stripMargin
-
-  /** Shared q_gbt_* boosting chain: base frame, F0, `rounds` split/merge
-    * blocks ending at state s&#36;rounds. */
-  private def gbtChainSql(rounds: Int, lr: Double): String = {
-    val roundBlocks = (1 to rounds).map { r =>
-      val p = r - 1
-      s"""g$r AS MATERIALIZED (
-         |  SELECT feature, v, sum(s) OVER w1 AS sl, sum(c) OVER w1 AS cl,
-         |         sum(s) OVER w2 AS st, sum(c) OVER w2 AS ct
-         |  FROM (
-         |    SELECT 'l_quantity' AS feature, x1 AS v,
-         |           sum(y - fhat) AS s, CAST(count(*) AS BIGINT) AS c
-         |    FROM s$p GROUP BY x1
-         |    UNION ALL
-         |    SELECT 'l_discount', x2, sum(y - fhat),
-         |           CAST(count(*) AS BIGINT)
-         |    FROM s$p GROUP BY x2)
-         |  WINDOW w1 AS (PARTITION BY feature ORDER BY v),
-         |         w2 AS (PARTITION BY feature)),
-         |b$r AS MATERIALIZED (
-         |  SELECT feature, v AS t,
-         |         floor(sl / cl * 1024) / 1024 AS ml,
-         |         floor((st - sl) / (ct - cl) * 1024) / 1024 AS mr,
-         |         sl * sl / cl + (st - sl) * (st - sl) / (ct - cl) AS gain
-         |  FROM g$r WHERE cl < ct
-         |  ORDER BY gain DESC, feature, v LIMIT 1),
-         |s$r AS MATERIALIZED (
-         |  SELECT s.x1, s.x2, s.y,
-         |         s.fhat + $lr * (CASE WHEN
-         |             (CASE WHEN b.feature = 'l_quantity' THEN s.x1
-         |                   ELSE s.x2 END) <= b.t
-         |           THEN b.ml ELSE b.mr END) AS fhat
-         |  FROM s$p s CROSS JOIN b$r b)""".stripMargin
-    }
-    s"""WITH d AS MATERIALIZED (
-       |  SELECT CAST(l_quantity AS DOUBLE) AS x1,
-       |         CAST(l_discount AS DOUBLE) AS x2,
-       |         CAST(round(l_extendedprice) AS DOUBLE) AS y
-       |  FROM lineitem),
-       |f0 AS MATERIALIZED (
-       |  SELECT floor(avg(y) * 1024) / 1024 AS f FROM d),
-       |s0 AS MATERIALIZED (
-       |  SELECT d.x1, d.x2, d.y, f.f AS fhat FROM d CROSS JOIN f0 f),
-       |${roundBlocks.mkString(",\n")}""".stripMargin
-  }
-
-  /** The q_gbt_depth2 oracle: the depth-2 boosting recursion unrolled —
-    * per round, the root split (the gbtChainSql g/b blocks), a sided
-    * frame, the branch-keyed candidate scan with per-(side, feature)
-    * windows, a per-side QUALIFY argmax, quantized side-mean fallbacks
-    * for collapsed branches, and the 4-leaf prediction fold. Identical
-    * dyadic discipline as the stumps chain, so every argmax and leaf
-    * agrees with Spark bit-for-bit.
-    */
-  private def gbtDepth2ChainSql(rounds: Int, lr: Double): String = {
-    def disp(f: String): String =
-      s"(CASE WHEN $f = 'l_quantity' THEN s.x1 ELSE s.x2 END)"
-    val roundBlocks = (1 to rounds).map { r =>
-      val p = r - 1
-      s"""g$r AS MATERIALIZED (
-         |  SELECT feature, v, sum(s) OVER w1 AS sl, sum(c) OVER w1 AS cl,
-         |         sum(s) OVER w2 AS st, sum(c) OVER w2 AS ct
-         |  FROM (
-         |    SELECT 'l_quantity' AS feature, x1 AS v,
-         |           sum(y - fhat) AS s, CAST(count(*) AS BIGINT) AS c
-         |    FROM s$p GROUP BY x1
-         |    UNION ALL
-         |    SELECT 'l_discount', x2, sum(y - fhat),
-         |           CAST(count(*) AS BIGINT)
-         |    FROM s$p GROUP BY x2)
-         |  WINDOW w1 AS (PARTITION BY feature ORDER BY v),
-         |         w2 AS (PARTITION BY feature)),
-         |b$r AS MATERIALIZED (
-         |  SELECT feature, v AS t,
-         |         sl * sl / cl + (st - sl) * (st - sl) / (ct - cl) AS gain
-         |  FROM g$r WHERE cl < ct
-         |  ORDER BY gain DESC, feature, v LIMIT 1),
-         |sd$r AS MATERIALIZED (
-         |  SELECT s.x1, s.x2, s.y, s.fhat,
-         |         CASE WHEN ${disp("b.feature")} <= b.t
-         |           THEN 'L' ELSE 'R' END AS side
-         |  FROM s$p s CROSS JOIN b$r b),
-         |h$r AS MATERIALIZED (
-         |  SELECT side, feature, v,
-         |         sum(s) OVER w1 AS sl, sum(c) OVER w1 AS cl,
-         |         sum(s) OVER w2 AS st, sum(c) OVER w2 AS ct
-         |  FROM (
-         |    SELECT side, 'l_quantity' AS feature, x1 AS v,
-         |           sum(y - fhat) AS s, CAST(count(*) AS BIGINT) AS c
-         |    FROM sd$r GROUP BY side, x1
-         |    UNION ALL
-         |    SELECT side, 'l_discount', x2, sum(y - fhat),
-         |           CAST(count(*) AS BIGINT)
-         |    FROM sd$r GROUP BY side, x2)
-         |  WINDOW w1 AS (PARTITION BY side, feature ORDER BY v),
-         |         w2 AS (PARTITION BY side, feature)),
-         |bb$r AS MATERIALIZED (
-         |  SELECT side, feature AS bf, v AS bt,
-         |         floor(sl / cl * 1024) / 1024 AS ml,
-         |         floor((st - sl) / (ct - cl) * 1024) / 1024 AS mr,
-         |         gain AS bg
-         |  FROM (SELECT *, sl * sl / cl
-         |            + (st - sl) * (st - sl) / (ct - cl) AS gain
-         |        FROM h$r WHERE cl < ct)
-         |  QUALIFY row_number() OVER (PARTITION BY side
-         |    ORDER BY gain DESC, feature, v) = 1),
-         |sm$r AS MATERIALIZED (
-         |  SELECT side,
-         |         floor(sum(y - fhat) / count(*) * 1024) / 1024 AS bm
-         |  FROM sd$r GROUP BY side),
-         |tr$r AS MATERIALIZED (
-         |  SELECT b.feature AS ft, b.t, b.gain AS g,
-         |         l.bf AS lf, l.bt AS lt,
-         |         COALESCE(l.ml, l.bm) AS lml, COALESCE(l.mr, l.bm) AS lmr,
-         |         l.bg AS lg,
-         |         q.bf AS rf, q.bt AS rt,
-         |         COALESCE(q.ml, q.bm) AS rml, COALESCE(q.mr, q.bm) AS rmr,
-         |         q.bg AS rg
-         |  FROM b$r b
-         |  CROSS JOIN (SELECT m.bm, x.bf, x.bt, x.ml, x.mr, x.bg
-         |              FROM sm$r m LEFT JOIN bb$r x ON x.side = m.side
-         |              WHERE m.side = 'L') l
-         |  CROSS JOIN (SELECT m.bm, x.bf, x.bt, x.ml, x.mr, x.bg
-         |              FROM sm$r m LEFT JOIN bb$r x ON x.side = m.side
-         |              WHERE m.side = 'R') q),
-         |s$r AS MATERIALIZED (
-         |  SELECT s.x1, s.x2, s.y,
-         |         s.fhat + $lr * (CASE WHEN ${disp("t.ft")} <= t.t
-         |           THEN (CASE WHEN ${disp("t.lf")} <= t.lt
-         |                 THEN t.lml ELSE t.lmr END)
-         |           ELSE (CASE WHEN ${disp("t.rf")} <= t.rt
-         |                 THEN t.rml ELSE t.rmr END) END) AS fhat
-         |  FROM s$p s CROSS JOIN tr$r t)""".stripMargin
-    }
-    s"""WITH d AS MATERIALIZED (
-       |  SELECT CAST(l_quantity AS DOUBLE) AS x1,
-       |         CAST(l_discount AS DOUBLE) AS x2,
-       |         CAST(round(l_extendedprice) AS DOUBLE) AS y
-       |  FROM lineitem),
-       |f0 AS MATERIALIZED (
-       |  SELECT floor(avg(y) * 1024) / 1024 AS f FROM d),
-       |s0 AS MATERIALIZED (
-       |  SELECT d.x1, d.x2, d.y, f.f AS fhat FROM d CROSS JOIN f0 f),
-       |${roundBlocks.mkString(",\n")}""".stripMargin
-  }
-
-  private def gbtDepth2Oracle(rounds: Int, lr: Double): String = {
-    val baseArm = "SELECT 0 AS boost_round, 'base' AS node, " +
-      "'__base' AS feature, CAST(NULL AS DOUBLE) AS threshold, " +
-      "round(f, 6) AS leaf_left, round(f, 6) AS leaf_right, " +
-      "CAST(NULL AS DOUBLE) AS gain FROM f0"
-    val arms = baseArm +: (1 to rounds).flatMap(r => Seq(
-      s"SELECT $r, 'root', ft, t, CAST(NULL AS DOUBLE), " +
-        s"CAST(NULL AS DOUBLE), round(g, 4) FROM tr$r",
-      s"SELECT $r, 'left', lf, lt, round(lml, 6), round(lmr, 6), " +
-        s"round(lg, 4) FROM tr$r",
-      s"SELECT $r, 'right', rf, rt, round(rml, 6), round(rmr, 6), " +
-        s"round(rg, 4) FROM tr$r"))
-    s"""${gbtDepth2ChainSql(rounds, lr)}
-       |${arms.mkString("\nUNION ALL ")}
-       |ORDER BY boost_round, node""".stripMargin
-  }
-
-  /** The q_gbt_depth2_eval oracle rides the depth-2 chain: the final
-    * state carries every row's fitted prediction, one aggregate closes
-    * the summary (same spelling as gbtEvalOracle).
-    */
-  /** The q_gbt_depth2_score oracle: score with the PUBLISHED
-    * (printf-rounded) depth-2 model — the same additive fold
-    * Models.scoreTrees2 evaluates, each round a two-level CASE over
-    * the round-6 leaves, then the bounded prediction domain grouped.
-    */
-  private def gbtDepth2ScoreOracle(rounds: Int, lr: Double): String = {
-    def disp(r: Int, f: String): String =
-      s"(CASE WHEN tr$r.$f = 'l_quantity' THEN d.x1 ELSE d.x2 END)"
-    val terms = (1 to rounds).map(r =>
-      s"""   + $lr * (CASE WHEN ${disp(r, "ft")} <= tr$r.t
-         |       THEN (CASE WHEN ${disp(r, "lf")} <= tr$r.lt
-         |             THEN round(tr$r.lml, 6) ELSE round(tr$r.lmr, 6) END)
-         |       ELSE (CASE WHEN ${disp(r, "rf")} <= tr$r.rt
-         |             THEN round(tr$r.rml, 6) ELSE round(tr$r.rmr, 6) END)
-         |       END)""".stripMargin).mkString("\n")
-    val crosses = (1 to rounds).map(r => s"CROSS JOIN tr$r").mkString(" ")
-    s"""${gbtDepth2ChainSql(rounds, lr)},
-       |sc AS (
-       |  SELECT round(f0.f, 6)
-       |$terms AS prediction
-       |  FROM d CROSS JOIN f0 $crosses)
-       |SELECT prediction, CAST(count(*) AS BIGINT) AS n
-       |FROM sc GROUP BY prediction ORDER BY prediction""".stripMargin
-  }
-
-  /** The q_gbt_importance oracle: the depth-2 chain's published split
-    * rows (round-4 gains, NULL features/gains excluded), folded in the
-    * same pinned (round, node) order as Models.featureImportance.
-    */
-  private def gbtImportanceOracle(rounds: Int, lr: Double): String = {
-    val arms = (1 to rounds).flatMap(r => Seq(
-      s"SELECT $r AS boost_round, 'root' AS node, ft AS feature, " +
-        s"round(g, 4) AS gain FROM tr$r",
-      s"SELECT $r, 'left', lf, round(lg, 4) FROM tr$r",
-      s"SELECT $r, 'right', rf, round(rg, 4) FROM tr$r"))
-    s"""${gbtDepth2ChainSql(rounds, lr)},
-       |sp AS (SELECT * FROM (${arms.mkString("\nUNION ALL ")})
-       |       WHERE feature IS NOT NULL AND gain IS NOT NULL),
-       |pf AS (SELECT feature, CAST(count(*) AS BIGINT) AS n_splits,
-       |         max(g2) AS g FROM (
-       |           SELECT *, sum(gain) OVER (PARTITION BY feature
-       |             ORDER BY boost_round, node
-       |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-       |             FOLLOWING) AS g2
-       |           FROM sp) GROUP BY 1)
-       |SELECT feature, n_splits, round(g, 4) AS total_gain,
-       |  round(CASE WHEN sum(g) OVER w <> 0 THEN g / sum(g) OVER w END,
-       |    6) AS gain_share
-       |FROM pf
-       |WINDOW w AS (ORDER BY feature
-       |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-       |ORDER BY feature""".stripMargin
-  }
-
-  private def gbtDepth2EvalOracle(rounds: Int, lr: Double): String =
-    s"""${gbtDepth2ChainSql(rounds, lr)}
-       |SELECT CAST(count(*) AS BIGINT) AS n,
-       |  round(sqrt(avg((y - fhat) * (y - fhat))), 6) AS rmse,
-       |  round(avg(abs(y - fhat)), 6) AS mae,
-       |  round(1.0 - sum((y - fhat) * (y - fhat))
-       |            / sum((y - ybar) * (y - ybar)), 6) AS r2
-       |FROM s$rounds CROSS JOIN
-       |  (SELECT avg(y) AS ybar FROM s$rounds) m""".stripMargin
-
-  /** The q_sarima_lite oracle: the q_ar_forecast chain run over the
-    * seasonally differenced series (lag-`period` difference CTE first),
-    * p = 2 Cramer solve spelled IDENTICALLY to Models.sarimaLite, the
-    * `horizon` forecast recursion unrolled, and the integration anchors
-    * (last `period` observed values, reverse-indexed) joined on step.
-    */
-  private def sarimaLiteOracle(period: Int, horizon: Int): String = {
-    val rChain = (3 to horizon).map { k =>
-      s"r$k AS (SELECT *, a1 * f${k - 1} + a2 * f${k - 2} AS f$k " +
-        s"FROM r${k - 1})"
-    }
-    val last = s"r$horizon"
-    val steps = (1 to horizon).map(k =>
-      s"SELECT $k AS k, f$k AS f FROM $last")
-    s"""WITH series AS (
-       |  SELECT o_orderdate AS day, round(sum(o_totalprice), 2) AS total
-       |  FROM orders GROUP BY 1),
-       |sd AS (SELECT day, total,
-       |         lag(total, $period) OVER (ORDER BY day) AS prev
-       |       FROM series),
-       |dz AS (SELECT day, total - prev AS sdiff FROM sd
-       |       WHERE prev IS NOT NULL),
-       |st AS (SELECT avg(sdiff) AS m, stddev_samp(sdiff) AS sd
-       |       FROM dz),
-       |z AS (SELECT day, (sdiff - m) / sd AS z FROM dz, st),
-       |lagged AS (SELECT day, z,
-       |    lag(z, 1) OVER (ORDER BY day) AS z1,
-       |    lag(z, 2) OVER (ORDER BY day) AS z2 FROM z),
-       |sums AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-       |    sum(z * z) AS s0, sum(z * z1) AS s1, sum(z * z2) AS s2
-       |  FROM lagged),
-       |cv AS (SELECT n, s0 / n AS c0, s1 / n AS c1, s2 / n AS c2
-       |       FROM sums),
-       |dt AS (SELECT n, c0, c1, c2, c0 * c0 - c1 * c1 AS det FROM cv),
-       |ab AS (SELECT n,
-       |    (c1 * c0 - c1 * c2) / det AS a1,
-       |    (c0 * c2 - c1 * c1) / det AS a2
-       |  FROM dt),
-       |anchz AS (SELECT z AS zl1, z1 AS zl2 FROM lagged
-       |          WHERE day = (SELECT max(day) FROM lagged)),
-       |one AS (SELECT a1, a2, n, zl1, zl2, m, sd FROM ab, anchz, st),
-       |r1 AS (SELECT *, a1 * zl1 + a2 * zl2 AS f1 FROM one),
-       |r2 AS (SELECT *, a1 * f1 + a2 * zl1 AS f2 FROM r1),
-       |${rChain.mkString(",\n")},
-       |steps AS (
-       |  ${steps.mkString("\n  UNION ALL ")}),
-       |anchy AS (
-       |  SELECT CAST($period - ri + 1 AS INTEGER) AS k, total AS anchor
-       |  FROM (SELECT total,
-       |          row_number() OVER (ORDER BY day DESC) AS ri
-       |        FROM series) WHERE ri <= $period)
-       |SELECT CAST(s.k AS INTEGER) AS step,
-       |  CAST(r.n AS BIGINT) AS n_obs,
-       |  round(r.a1, 6) + 0.0 AS a1,
-       |  round(r.a2, 6) + 0.0 AS a2,
-       |  round(s.f, 6) + 0.0 AS z_next,
-       |  round(r.m + r.sd * s.f, 2) + 0.0 AS sdiff_next,
-       |  round(a.anchor + (round(r.m + r.sd * s.f, 2) + 0.0), 2) + 0.0
-       |    AS forecast
-       |FROM steps s CROSS JOIN $last r JOIN anchy a ON a.k = s.k
-       |ORDER BY step""".stripMargin
-  }
-
-  /** The q_ivf_topk oracle: the full IVF pipeline — dyadic-grid Lloyd
-    * training (`iters` rounds unrolled, builder-generated like
-    * q_bpe_merges), inverted-file assignment, nprobe cell probing, exact
-    * cosine verify — replayed in DuckDB. Training runs on vectors floored
-    * to the 1/1024 lattice so every per-dimension mean is a quotient of
-    * exact sums and the assignment argmax has a total (cos DESC, cell)
-    * order: centroids agree with Spark bit-for-bit, which is what turned
-    * this gate from rows-only into hash-checked.
-    */
-  private def ivfTopKOracle(nCells: Int, nprobe: Int, iters: Int,
-                            k: Int): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    val lloyd = (1 to iters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    s"""WITH uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |                   x -> floor(CAST(x AS DOUBLE) * 1024) / 1024) AS v
-       |  FROM embeddings),
-       |uo AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${lloyd.mkString(",\n")},
-       |inv AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$iters c) WHERE rk = 1),
-       |prb AS MATERIALIZED (
-       |  SELECT vec_id AS query_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$iters c
-       |    WHERE u.vec_id % 100 = 0) WHERE rk <= $nprobe),
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT p.query_id, i.cand_id
-       |  FROM prb p JOIN inv i
-       |    ON i.cell = p.cell AND i.cand_id <> p.query_id),
-       |scored AS (
-       |  SELECT c.query_id, c.cand_id, ${cos("q.v", "t.v")} AS cos
-       |  FROM cand c
-       |  JOIN uo q ON q.vec_id = c.query_id
-       |  JOIN uo t ON t.vec_id = c.cand_id),
-       |rkd AS (
-       |  SELECT query_id, cand_id, cos,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos DESC, cand_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-       |  round(cos, 6) AS cos_sim
-       |FROM rkd WHERE rk <= $k ORDER BY query_id, rk""".stripMargin
-  }
-
-  /** Unrolled-CTE oracle for q_raking: cells, targets, then `rounds`
-    * IPF alternations (row scale, col scale), each half-round one
-    * bounded groupBy + a 1e-9-rounded rescale — the rakeWeights
-    * iterative discipline replayed.
-    */
-  /** Rule-attribution replay: the q_quality ratio CTE, five rule
-    * booleans, one conditional-sum aggregate, unpivoted as a UNION of
-    * five 1-row selects — generated so the rule order and the
-    * unique/marginal/survivor prefixes stay mechanically in lockstep
-    * with [[graft.ops.Text.filterAttribution]].
-    */
-  private def filterAttributionOracle: String = {
-    val idx = 0 until 5
-    val names = Seq("1_tokens", "2_word_len", "3_stopwords", "4_punct",
-      "5_digits")
-    def allBut(i: Int) =
-      idx.filter(_ != i).map(j => s"p$j").mkString(" AND ")
-    def prefix(i: Int) =
-      if (i == 0) "TRUE" else (0 until i).map(j => s"p$j").mkString(" AND ")
-    def through(i: Int) = (0 to i).map(j => s"p$j").mkString(" AND ")
-    val aggs = idx.map { i =>
-      s"""CAST(sum(CASE WHEN NOT p$i THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS fail$i,
-         |    CAST(sum(CASE WHEN NOT p$i AND ${allBut(i)}
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS uniq$i,
-         |    CAST(sum(CASE WHEN NOT p$i AND ${prefix(i)}
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS marg$i,
-         |    CAST(sum(CASE WHEN ${through(i)} THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS surv$i""".stripMargin
-    }.mkString(",\n    ")
-    val rows = idx.map { i =>
-      s"""SELECT '${names(i)}' AS rule, n_input, fail$i AS n_fail,
-         |    uniq$i AS n_unique_fail, marg$i AS n_marginal,
-         |    surv$i AS n_survive FROM a""".stripMargin
-    }.mkString("\n  UNION ALL ")
-    s"""WITH b AS (SELECT
-       |    CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-       |    length(replace(text, ' ', '')) * 1.0
-       |      / greatest(len(string_split(text, ' ')), 1) AS mean_tok_len,
-       |    len(list_filter(string_split(lower(text), ' '), x -> x IN
-       |      ('the','a','of','and','is','in','to'))) * 1.0
-       |      / greatest(len(string_split(text, ' ')), 1) AS stop_ratio,
-       |    len(regexp_extract_all(text, '[[:punct:]]')) * 1.0
-       |      / greatest(length(text), 1) AS punct_ratio,
-       |    len(regexp_extract_all(text, '[0-9]')) * 1.0
-       |      / greatest(length(text), 1) AS digit_ratio
-       |  FROM documents),
-       |f AS (SELECT
-       |    (n_tokens BETWEEN 5 AND 1000) AS p0,
-       |    (mean_tok_len BETWEEN 3.0 AND 12.0) AS p1,
-       |    (stop_ratio >= 0.01) AS p2,
-       |    (punct_ratio <= 0.2) AS p3,
-       |    (digit_ratio <= 0.2) AS p4
-       |  FROM b),
-       |a AS (SELECT CAST(count(*) AS BIGINT) AS n_input,
-       |    $aggs
-       |  FROM f)
-       |$rows
-       |ORDER BY rule""".stripMargin
-  }
-
-  /** The driver-call parameters of the q_mix_budget* gates — read by
-    * BOTH the query lambdas and the oracle generator, so changing the
-    * gate's configuration regenerates the oracle in lockstep (the
-    * lshCalibrateOracle discipline; a hardcoded oracle would silently
-    * diverge only at gate time).
-    */
-  private val MixTau = 0.25
-  private val MixBudgetNum = 19L
-  private val MixBudgetDen = 20L
-  private val MixMaxEpochs = 1
-
-  /** The waterfilling CTE chain (through `w5`) generated from the gate
-    * parameters: per-source token totals over `fromTable`, tempered
-    * weights with pinned-order folds, the saturation sort,
-    * prefix-exclusive cumulative caps/weights, the capped test and the
-    * first-uncapped fill level. q_mix_budget appends the plan select;
-    * q_mix_budget_apply appends the md5-bucket execution and
-    * planned-vs-achieved rollup; q_pipeline_mix rides it over the
-    * funnel-survivor CTE.
-    */
-  private def mixBudgetChainSql(tau: Double, budgetNum: Long,
-                                budgetDen: Long, maxEpochs: Int,
-                                fromTable: String = "documents",
-                                withPrefix: String = "WITH "): String = {
-    val pt = tau match {
-      case 1.0  => "sh"
-      case 0.5  => "sqrt(sh)"
-      case 0.25 => "sqrt(sqrt(sh))"
-      case 0.75 => "sqrt(sh) * sqrt(sqrt(sh))"
-    }
-    s"""${withPrefix}mbper AS (
-      |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-      |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-      |  FROM $fromTable GROUP BY 1),
-      |mbt AS (SELECT mbper.*,
-      |        (SELECT CAST(sum(n_tokens) AS BIGINT) FROM mbper) AS nn
-      |      FROM mbper),
-      |mbp0 AS (SELECT *, CAST(n_tokens AS DOUBLE) / nn AS sh FROM mbt),
-      |mbp AS (SELECT *, $pt AS pt FROM mbp0),
-      |mbw AS (SELECT *,
-      |        pt / sum(pt) OVER (ORDER BY source
-      |          ROWS BETWEEN UNBOUNDED PRECEDING
-      |          AND UNBOUNDED FOLLOWING) AS wt
-      |      FROM mbp),
-      |mbw2 AS (SELECT *,
-      |        sum(wt) OVER (ORDER BY source
-      |          ROWS BETWEEN UNBOUNDED PRECEDING
-      |          AND UNBOUNDED FOLLOWING) AS wtot,
-      |        CAST(floor(nn * $budgetNum / $budgetDen.0) AS BIGINT)
-      |          AS bb,
-      |        CAST(n_tokens * $maxEpochs AS BIGINT) AS cap_tokens,
-      |        CAST(n_tokens * $maxEpochs AS BIGINT)
-      |          / wt AS sat
-      |      FROM mbw),
-      |mbw3 AS (SELECT *,
-      |        CAST(sum(cap_tokens) OVER (ORDER BY sat, source
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |          AS BIGINT) - cap_tokens AS pc,
-      |        sum(wt) OVER (ORDER BY sat, source
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |          - wt AS pw
-      |      FROM mbw2),
-      |mbw4 AS (SELECT *,
-      |        CAST(bb - pc AS DOUBLE) / (wtot - pw) AS lam,
-      |        CAST(bb - pc AS DOUBLE) / (wtot - pw) >= sat AS capped
-      |      FROM mbw3),
-      |mbw5 AS (SELECT *,
-      |        max(CASE WHEN NOT capped THEN lam END) OVER () AS lev
-      |      FROM mbw4)""".stripMargin
-  }
-
-  /** LSH S-curve calibrator replay: the same repeated-squaring chains
-    * as [[graft.ops.Dedup.lshCalibrate]], materialized LINEARLY as
-    * chained CTE columns (s0, s1 = s0·s0, …; then the variable
-    * exponent is a CASE over the log-bounded split list), dyadic grid
-    * literals, pinned-order mass folds, final /G exact scaling.
-    */
-  private def lshCalibrateOracle(numHashes: Int, threshold: Double,
-                                 gridLog2: Int): String = {
-    val g = 1 << gridLog2
-    val log2n = java.lang.Integer.numberOfTrailingZeros(numHashes)
-    val pairs = (0 to log2n).map(e => (1 << e, numHashes >> e))
-    val pairValues = pairs.map { case (b, r) => s"($b, $r)" }
-      .mkString(", ")
-    val gridValues = (1 to g).map { i =>
-      val s = (BigDecimal(2 * i - 1) / BigDecimal(2 * g)).toString
-      s"($i, $s)"
-    }.mkString(",\n      ")
-    // each squaring step is its own CTE so the value chain is the same
-    // sequential rounding as the Spark fold
-    val sCtes = (1 to log2n).map { k =>
-      s"sq$k AS (SELECT *, v${k - 1} * v${k - 1} AS v$k FROM sq${k - 1})"
-    }.mkString(",\n    ")
-    val qCtes = (1 to log2n).map { k =>
-      s"qq$k AS (SELECT *, w${k - 1} * w${k - 1} AS w$k FROM qq${k - 1})"
-    }.mkString(",\n    ")
-    val tCtes = (1 to log2n).map { k =>
-      s"tq$k AS (SELECT *, u${k - 1} * u${k - 1} AS u$k FROM tq${k - 1})"
-    }.mkString(",\n    ")
-    val uCtes = (1 to log2n).map { k =>
-      s"uq$k AS (SELECT *, x${k - 1} * x${k - 1} AS x$k FROM uq${k - 1})"
-    }.mkString(",\n    ")
-    def caseOver(sel: String, pfx: String, values: Seq[Int]): String =
-      "CASE " + values.map { v =>
-        val k = java.lang.Integer.numberOfTrailingZeros(v)
-        s"WHEN $sel = $v THEN $pfx$k"
-      }.mkString(" ") + " END"
-    val rVals = pairs.map(_._2)
-    val bVals = pairs.map(_._1)
-    s"""WITH pairs(b, r) AS (VALUES $pairValues),
-       |grid(i, s) AS (VALUES
-       |      $gridValues),
-       |sq0 AS (SELECT b, r, i, CAST(s AS DOUBLE) AS s,
-       |          CAST(s AS DOUBLE) AS v0 FROM pairs CROSS JOIN grid),
-       |    $sCtes,
-       |qq0 AS (SELECT *, 1.0 - (${caseOver("r", "v", rVals)}) AS w0
-       |        FROM sq$log2n),
-       |    $qCtes,
-       |pg AS (SELECT b, r, i, s,
-       |         1.0 - (${caseOver("b", "w", bVals)}) AS p
-       |       FROM qq$log2n),
-       |cum AS (SELECT b, r, i,
-       |    sum(CASE WHEN s < $threshold THEN p ELSE 0.0 END)
-       |      OVER (PARTITION BY b ORDER BY i
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cfp,
-       |    sum(CASE WHEN s >= $threshold THEN 1.0 - p ELSE 0.0 END)
-       |      OVER (PARTITION BY b ORDER BY i
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cfn
-       |  FROM pg),
-       |fin AS (SELECT b, r, cfp, cfn, (cfp + cfn) / $g AS err
-       |        FROM cum WHERE i = $g),
-       |tq0 AS (SELECT b, r, CAST($threshold AS DOUBLE) AS u0 FROM pairs),
-       |    $tCtes,
-       |uq0 AS (SELECT *, 1.0 - (${caseOver("r", "u", rVals)}) AS x0
-       |        FROM tq$log2n),
-       |    $uCtes,
-       |pt AS (SELECT b, 1.0 - (${caseOver("b", "x", bVals)}) AS p_t
-       |       FROM uq$log2n),
-       |rk AS (SELECT fin.*, pt.p_t,
-       |         row_number() OVER (ORDER BY fin.err, fin.b) AS rn
-       |       FROM fin JOIN pt ON pt.b = fin.b)
-       |SELECT b, r, round(p_t, 6) AS p_at_threshold,
-       |  round(cfp / $g, 6) AS fp_mass,
-       |  round(cfn / $g, 6) AS fn_mass,
-       |  round(err, 6) AS total_err,
-       |  rn = 1 AS chosen
-       |FROM rk ORDER BY b""".stripMargin
-  }
-
-  /** The IPF raking weight chain as composable CTEs (ends at
-    * w{2·rounds}) — shared by q_raking and the q_ess design-effect
-    * tail.
-    */
-  private def rakeCtes(rounds: Int): String = {
-    val half = (1 to rounds).map { k =>
-      val p = 2 * (k - 1)
-      s"""rs$k AS (SELECT r, sum(n * w) AS rs FROM w$p GROUP BY 1),
-         |w${p + 1} AS (SELECT w$p.r, w$p.c, w$p.n, w$p.nn, w$p.tr,
-         |    w$p.tc, round(w$p.w * (w$p.tr / rs$k.rs), 9) AS w
-         |  FROM w$p JOIN rs$k ON rs$k.r = w$p.r),
-         |cs$k AS (SELECT c, sum(n * w) AS cs FROM w${p + 1}
-         |  GROUP BY 1),
-         |w${p + 2} AS (SELECT w${p + 1}.r, w${p + 1}.c, w${p + 1}.n,
-         |    w${p + 1}.nn, w${p + 1}.tr, w${p + 1}.tc,
-         |    round(w${p + 1}.w * (w${p + 1}.tc / cs$k.cs), 9) AS w
-         |  FROM w${p + 1} JOIN cs$k ON cs$k.c = w${p + 1}.c)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""cells AS (SELECT source AS r, lang AS c,
-       |    CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1, 2),
-       |t AS (SELECT CAST(sum(n) AS DOUBLE) AS nn,
-       |    CAST(count(DISTINCT r) AS DOUBLE) AS nr,
-       |    CAST(count(DISTINCT c) AS DOUBLE) AS nc FROM cells),
-       |w0 AS (SELECT r, c, n, nn, nn / nr AS tr, nn / nc AS tc,
-       |    CAST(1.0 AS DOUBLE) AS w FROM cells, t),
-       |$half""".stripMargin
-  }
-
-  private def rakeOracle(rounds: Int): String =
-    s"""WITH ${rakeCtes(rounds)}
-       |SELECT r AS source, c AS lang, n AS n_docs,
-       |  round(w, 6) AS weight,
-       |  round(n * w / nn, 6) AS weighted_share,
-       |  round(sum(n * w) OVER (PARTITION BY r) / nn, 6) AS row_share,
-       |  round(sum(n * w) OVER (PARTITION BY c) / nn, 6) AS col_share
-       |FROM w${2 * rounds} ORDER BY source, lang""".stripMargin
-
-  /** The q_ess oracle: the raking chain's published round-6 weights,
-    * integer-micros quantization (exact long sums; HUGEINT squares =
-    * Spark's decimal path), Kish ESS per source.
-    */
-  private def essOracle(rounds: Int): String =
-    s"""WITH ${rakeCtes(rounds)},
-       |fw AS (SELECT r AS grp, n,
-       |    CAST(round(round(w, 6) * 1000000) AS BIGINT) AS mw
-       |  FROM w${2 * rounds}),
-       |g AS (SELECT grp, CAST(sum(n) AS BIGINT) AS n_rows,
-       |    CAST(sum(n * mw) AS BIGINT) AS snm,
-       |    sum(CAST(n AS HUGEINT) * mw * mw) AS snm2
-       |  FROM fw GROUP BY 1),
-       |e AS (SELECT grp, n_rows,
-       |    (CAST(snm AS DOUBLE) * CAST(snm AS DOUBLE))
-       |      / CAST(snm2 AS DOUBLE) AS ess
-       |  FROM g)
-       |SELECT grp AS source, n_rows, round(ess, 6) AS ess,
-       |  round(ess / n_rows, 6) AS ess_ratio,
-       |  round(n_rows / ess, 6) AS design_effect
-       |FROM e ORDER BY source""".stripMargin
-
-  /** Unrolled fixed-round Newton chain for a 1-feature logistic fit —
-    * the q_fit_logistic CTE sequence as a builder: expects a CTE
-    * `z(y, z, ...)` in scope, emits `b0r..b{rounds}r` (b0r = zero
-    * init), each round one 6-sum scalar pass with the same expression
-    * text as [[graft.ops.Models.fitLogistic1]].
-    */
-  private def newtonChainSql(rounds: Int, src: String = "z",
-                             pfx: String = ""): String = {
-    val init = s"${pfx}b0r AS (SELECT 0.0 AS b0, 0.0 AS b1)"
-    val steps = (0 until rounds).map { k =>
-      s"""${pfx}p$k AS (SELECT y, z,
-         |    1.0 / (1.0 + exp(0.0 - (b0 + b1 * z)))
-         |    AS p, b0, b1 FROM $src, ${pfx}b${k}r),
-         |${pfx}s$k AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
-         |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
-         |    sum(p * (1.0 - p) * z * z) AS h11,
-         |    any_value(b0) AS b0, any_value(b1) AS b1 FROM ${pfx}p$k),
-         |${pfx}b${k + 1}r AS (SELECT n,
-         |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
-         |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
-         |  FROM ${pfx}s$k)""".stripMargin
-    }
-    (init +: steps).mkString(",\n")
-  }
-
-  /** Unrolled-CTE oracle for q_als: md5 dyadic item-factor init, then
-    * per round a user-side and an item-side ridge 2×2 solve (5 exact
-    * moment sums, one correctly-rounded division, floor back onto the
-    * 2^-12 lattice) plus a grid-floored RMSE pass — the alsFactorize
-    * dyadic discipline replayed expression-for-expression.
-    */
-  private def alsOracle(rounds: Int): String = {
-    def solveCte(name: String, src: String, key: String,
-                 other: String): String =
-      s"""$name AS (SELECT $key,
-         |    floor(((s22 + 0.125) * b1 - s12 * b2)
-         |      / ((s11 + 0.125) * (s22 + 0.125) - s12 * s12)
-         |      * 4096.0) / 4096.0 AS f1,
-         |    floor(((s11 + 0.125) * b2 - s12 * b1)
-         |      / ((s11 + 0.125) * (s22 + 0.125) - s12 * s12)
-         |      * 4096.0) / 4096.0 AS f2
-         |  FROM (SELECT inter.$key,
-         |      sum(f.f1 * f.f1) AS s11, sum(f.f1 * f.f2) AS s12,
-         |      sum(f.f2 * f.f2) AS s22, sum(f.f1 * r) AS b1,
-         |      sum(f.f2 * r) AS b2
-         |    FROM inter JOIN $src f ON f.$other = inter.$other
-         |    GROUP BY 1))""".stripMargin
-    val roundCtes = (1 to rounds).map { k =>
-      s"""${solveCte(s"pf$k", if (k == 1) "qf0" else s"qf${k - 1}",
-           "u", "i")},
-         |${solveCte(s"qf$k", s"pf$k", "i", "u")},
-         |e$k AS (SELECT floor((r - (pa.f1 * qa.f1 + pa.f2 * qa.f2))
-         |      * (r - (pa.f1 * qa.f1 + pa.f2 * qa.f2))
-         |      * 1048576.0) / 1048576.0 AS e2
-         |  FROM inter JOIN pf$k pa ON pa.u = inter.u
-         |  JOIN qf$k qa ON qa.i = inter.i),
-         |rr$k AS (SELECT round(sqrt(sum(e2)
-         |    / CAST(count(*) AS DOUBLE)), 6) AS rmse_r$k FROM e$k)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH inter AS (SELECT o_custkey AS u, l_partkey AS i,
-       |    sum(CAST(l_quantity AS DOUBLE)) AS r
-       |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-       |  GROUP BY 1, 2),
-       |qf0 AS (SELECT i,
-       |    CAST(CAST('0x' || substr(md5('als1_' || CAST(i AS VARCHAR)),
-       |      1, 15) AS BIGINT) % 4096 AS DOUBLE) / 4096.0 AS f1,
-       |    CAST(CAST('0x' || substr(md5('als2_' || CAST(i AS VARCHAR)),
-       |      1, 15) AS BIGINT) % 4096 AS DOUBLE) / 4096.0 AS f2
-       |  FROM (SELECT DISTINCT i FROM inter)),
-       |$roundCtes,
-       |c AS (SELECT CAST(count(*) AS BIGINT) AS n_interactions,
-       |    CAST(count(DISTINCT u) AS BIGINT) AS n_users,
-       |    CAST(count(DISTINCT i) AS BIGINT) AS n_items FROM inter)
-       |SELECT n_interactions, n_users, n_items,
-       |  ${(1 to rounds).map(k => s"rmse_r$k").mkString(", ")}
-       |FROM c ${(1 to rounds).map(k => s"CROSS JOIN rr$k")
-         .mkString(" ")}""".stripMargin
-  }
-
-  /** Oracle for q_als_recommend: the [[alsOracle]] chain's WITH body up
-    * to the final factors, then the md5 user panel, unseen-candidate
-    * cross, and per-user (score DESC, i) ranking cut.
-    */
-  private def alsRecommendOracle(rounds: Int, nUsers: Int,
-                                 k: Int): String = {
-    val chain = alsOracle(rounds)
-    val body = chain.substring(0, chain.indexOf(",\nc AS (SELECT"))
-    s"""$body,
-       |pan AS (SELECT u, f1 AS pa, f2 AS pb FROM pf$rounds
-       |  ORDER BY CAST('0x' || substr(md5('alsu_' ||
-       |    CAST(u AS VARCHAR)), 1, 15) AS BIGINT), u LIMIT $nUsers),
-       |cand AS (SELECT pan.u, q.i,
-       |    pan.pa * q.f1 + pan.pb * q.f2 AS score
-       |  FROM pan CROSS JOIN qf$rounds q
-       |  WHERE NOT EXISTS (SELECT 1 FROM inter x
-       |    WHERE x.u = pan.u AND x.i = q.i)),
-       |rk AS (SELECT u, i, score, row_number() OVER (PARTITION BY u
-       |    ORDER BY score DESC, i) AS rnk FROM cand)
-       |SELECT u, CAST(rnk AS INTEGER) AS rank, i,
-       |  round(score, 6) AS score
-       |FROM rk WHERE rnk <= $k ORDER BY u, rank""".stripMargin
-  }
-
-  /** Oracle for q_psm: outcome join, standardization, the
-    * [[newtonChainSql]] propensity fit, dyadic 2^-8 propensity grid,
-    * quantile_cont bucket edges (the rfm replay rule), and pinned-order
-    * ATT/naive folds.
-    */
-  private def psmOracle(rounds: Int): String = {
-    s"""WITH rev AS (SELECT o_custkey, round(sum(o_totalprice), 2)
-       |    AS rev FROM orders GROUP BY 1),
-       |u AS (SELECT CAST(c_acctbal AS DOUBLE) AS x,
-       |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1.0 ELSE 0.0 END
-       |      AS t,
-       |    CAST(coalesce(rev, 0.0) AS DOUBLE) AS yo
-       |  FROM customer LEFT JOIN rev ON o_custkey = c_custkey),
-       |st AS (SELECT avg(x) AS m, stddev_samp(x) AS sd FROM u),
-       |z AS (SELECT t AS y, (x - m) / sd AS z, yo FROM u, st),
-       |${newtonChainSql(rounds)},
-       |br AS (SELECT round(b0, 6) + 0.0 AS b0, round(b1, 6) + 0.0 AS b1
-       |  FROM b${rounds}r),
-       |sc AS (SELECT yo, y AS t,
-       |    floor((1.0 / (1.0 + exp(0.0 - (b0 + b1 * z)))) * 256.0)
-       |      / 256.0 AS pq
-       |  FROM z, br),
-       |ed AS (SELECT quantile_cont(pq, [0.2, 0.4, 0.6, 0.8]) AS e
-       |  FROM sc),
-       |bk AS (SELECT yo, t,
-       |    1 + CASE WHEN pq >= e[1] THEN 1 ELSE 0 END
-       |      + CASE WHEN pq >= e[2] THEN 1 ELSE 0 END
-       |      + CASE WHEN pq >= e[3] THEN 1 ELSE 0 END
-       |      + CASE WHEN pq >= e[4] THEN 1 ELSE 0 END AS bucket
-       |  FROM sc, ed),
-       |per AS (SELECT bucket, CAST(sum(t) AS BIGINT) AS n_treated,
-       |    CAST(sum(1.0 - t) AS BIGINT) AS n_control,
-       |    sum(t * yo) AS syt, sum((1.0 - t) * yo) AS syc
-       |  FROM bk GROUP BY 1),
-       |f AS (SELECT *,
-       |    CASE WHEN n_treated > 0
-       |      THEN syt / CAST(n_treated AS DOUBLE) END AS mt,
-       |    CASE WHEN n_control > 0
-       |      THEN syc / CAST(n_control AS DOUBLE) END AS mc
-       |  FROM per),
-       |g AS (SELECT *, CASE WHEN n_treated > 0 AND n_control > 0
-       |    THEN mt - mc END AS d FROM f),
-       |w AS (SELECT *,
-       |    sum(CASE WHEN n_treated > 0 AND n_control > 0
-       |      THEN d * CAST(n_treated AS DOUBLE) END) OVER pin AS attn,
-       |    sum(CASE WHEN n_treated > 0 AND n_control > 0
-       |      THEN CAST(n_treated AS DOUBLE) END) OVER pin AS attd,
-       |    CAST(sum(n_treated) OVER pin AS BIGINT) AS tnt,
-       |    CAST(sum(n_control) OVER pin AS BIGINT) AS tnc,
-       |    sum(syt) OVER pin AS tst, sum(syc) OVER pin AS tsc
-       |  FROM g WINDOW pin AS (ORDER BY bucket ROWS BETWEEN UNBOUNDED
-       |    PRECEDING AND UNBOUNDED FOLLOWING))
-       |SELECT bucket, n_treated, n_control,
-       |  round(mt, 6) AS mean_treated, round(mc, 6) AS mean_control,
-       |  round(d, 6) AS diff,
-       |  round(CASE WHEN attd > 0.0 THEN attn / attd END, 6) AS att,
-       |  round(CASE WHEN tnt > 0 AND tnc > 0
-       |    THEN tst / CAST(tnt AS DOUBLE) - tsc / CAST(tnc AS DOUBLE)
-       |    END, 6) AS naive_diff
-       |FROM w ORDER BY bucket""".stripMargin
-  }
-
-  /** Unrolled-CTE oracle for q_markov_attribution: journey windows,
-    * removal-variant transition table (exact-int count quotients),
-    * `steps` propagation rounds each rounded to the 1e-9 grid (the
-    * pageRank iterative discipline), then removal effects with a
-    * pinned-order share fold.
-    */
-  /** Unrolled k-core peel oracle over the capped basket-pair graph:
-    * one (kᵣ, eᵣ) CTE pair per synchronous round, exact-integer
-    * degrees throughout.
-    */
-  private def kcoreOracle(k: Int, rounds: Int): String = {
-    val peels = (1 to rounds).map { r =>
-      s"""k$r AS (SELECT s FROM e${r - 1} GROUP BY s
-         |  HAVING count(*) >= $k),
-         |e$r AS MATERIALIZED (SELECT e.s, e.t FROM e${r - 1} e
-         |  JOIN k$r x ON x.s = e.s JOIN k$r y ON y.s = e.t)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-       |    l_partkey AS it FROM lineitem),
-       |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-       |s0 AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-       |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-       |  FROM s0 a JOIN s0 c ON c.bk = a.bk AND a.it < c.it
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
-       |e0 AS MATERIALIZED (SELECT a AS s, b AS t FROM p
-       |  UNION ALL SELECT b, a FROM p),
-       |$peels
-       |SELECT s AS node, CAST(count(*) AS BIGINT) AS core_degree
-       |FROM e$rounds GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Shared q_louvain* chain: capped basket pairs -> 3 LPA rounds ->
-    * one direction-alternating node-level local-move sweep (r4
-    * down-or-stay: cand <= label; r5 up-or-stay: cand >= label —
-    * monotone relabels admit no in-round swap cycle) with the
-    * exact-integer gain argmax. Joins are INNER because every LPA
-    * node is an edge endpoint here (the Scala side's isolated-node
-    * LEFT joins are vacuous on this input). Ends at the r5
-    * (node, label) frame; compose with coarse CTEs and/or
-    * [[newmanTailSql]].
-    */
-  private val louvainSweepChainSql: String =
-    """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-        |          l_partkey AS it FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e AS MATERIALIZED (SELECT a AS s, b AS t FROM p
-        |      UNION ALL SELECT b, a FROM p),
-        |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label
-        |      FROM e),
-        |r1 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN l0 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r2 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r1 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r3 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r2 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM p),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
-        |        (SELECT a AS node FROM p UNION ALL SELECT b FROM p)
-        |        GROUP BY 1),
-        |kc1 AS (SELECT e.s AS node, l.label AS cand,
-        |         CAST(count(*) AS BIGINT) AS k
-        |       FROM e JOIN r3 l ON l.node = e.t GROUP BY 1, 2),
-        |cnd1 AS (SELECT node, cand, max(k) AS k FROM (
-        |        SELECT node, cand, k FROM kc1
-        |        UNION ALL SELECT node, label, CAST(0 AS BIGINT)
-        |        FROM r3) GROUP BY 1, 2),
-        |dgc1 AS (SELECT r3.label AS cand,
-        |          CAST(sum(deg.d) AS BIGINT) AS dcm
-        |        FROM r3 JOIN deg ON deg.node = r3.node GROUP BY 1),
-        |r4 AS MATERIALIZED (SELECT node, cand AS label FROM (
-        |      SELECT c.node, c.cand,
-        |        row_number() OVER (PARTITION BY c.node ORDER BY
-        |          (2 * mm.m * c.k - deg.d *
-        |           (CASE WHEN c.cand = r3.label THEN dgc1.dcm - deg.d
-        |                 ELSE dgc1.dcm END)) DESC, c.cand) AS rk
-        |      FROM cnd1 c JOIN r3 ON r3.node = c.node
-        |      JOIN deg ON deg.node = c.node
-        |      JOIN dgc1 ON dgc1.cand = c.cand CROSS JOIN mm
-        |      WHERE c.cand <= r3.label)
-        |      WHERE rk = 1),
-        |kc2 AS (SELECT e.s AS node, l.label AS cand,
-        |         CAST(count(*) AS BIGINT) AS k
-        |       FROM e JOIN r4 l ON l.node = e.t GROUP BY 1, 2),
-        |cnd2 AS (SELECT node, cand, max(k) AS k FROM (
-        |        SELECT node, cand, k FROM kc2
-        |        UNION ALL SELECT node, label, CAST(0 AS BIGINT)
-        |        FROM r4) GROUP BY 1, 2),
-        |dgc2 AS (SELECT r4.label AS cand,
-        |          CAST(sum(deg.d) AS BIGINT) AS dcm
-        |        FROM r4 JOIN deg ON deg.node = r4.node GROUP BY 1),
-        |r5 AS MATERIALIZED (SELECT node, cand AS label FROM (
-        |      SELECT c.node, c.cand,
-        |        row_number() OVER (PARTITION BY c.node ORDER BY
-        |          (2 * mm.m * c.k - deg.d *
-        |           (CASE WHEN c.cand = r4.label THEN dgc2.dcm - deg.d
-        |                 ELSE dgc2.dcm END)) DESC, c.cand) AS rk
-        |      FROM cnd2 c JOIN r4 ON r4.node = c.node
-        |      JOIN deg ON deg.node = c.node
-        |      JOIN dgc2 ON dgc2.cand = c.cand CROSS JOIN mm
-        |      WHERE c.cand >= r4.label)
-        |      WHERE rk = 1)""".stripMargin
-
-  /** The Newman modularity replay tail over a (node, label) CTE —
-    * e_in/d_tot per community, exact-int quotients, pinned label-order
-    * fold, negative-zero guards (assumes `p`, `deg`, `mm` CTEs from
-    * [[louvainSweepChainSql]] are in scope).
-    */
-  private def newmanTailSql(labCte: String): String =
-    s"""ec AS (SELECT la.label, CAST(count(*) AS BIGINT) AS e_in
-       |       FROM p JOIN $labCte la ON la.node = p.a
-       |       JOIN $labCte lb ON lb.node = p.b
-       |       WHERE la.label = lb.label GROUP BY 1),
-       |dc AS (SELECT $labCte.label, CAST(count(*) AS BIGINT) AS n_nodes,
-       |         CAST(sum(deg.d) AS BIGINT) AS d_tot
-       |       FROM $labCte JOIN deg ON deg.node = $labCte.node
-       |       GROUP BY 1),
-       |qc AS (SELECT dc.label, dc.n_nodes,
-       |         coalesce(ec.e_in, 0) AS e_in, dc.d_tot,
-       |         coalesce(ec.e_in, 0) / CAST(mm.m AS DOUBLE)
-       |           - (dc.d_tot / (2.0 * mm.m))
-       |             * (dc.d_tot / (2.0 * mm.m)) AS qq
-       |       FROM dc LEFT JOIN ec ON ec.label = dc.label
-       |       CROSS JOIN mm),
-       |f AS (SELECT qc.*, sum(qq) OVER (ORDER BY label ROWS BETWEEN
-       |        UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS qt
-       |      FROM qc)
-       |SELECT label, n_nodes, CAST(e_in AS BIGINT) AS e_in, d_tot,
-       |  round(qq, 6) + 0.0 AS q_contrib,
-       |  round(qt, 6) + 0.0 AS q_modularity
-       |FROM f ORDER BY label""".stripMargin
-
-  /** One Louvain coarsen level as CTEs, parameterized for multi-level
-    * unrolling: contract `$inLab` to a weighted super-graph (self-loops
-    * in degree mass, NOT in k) and run two direction-gated weighted
-    * move rounds s1$sfx (down-or-stay) / s2$sfx (up-or-stay); rf$sfx
-    * maps super labels back to nodes (LEFT + coalesce, mirroring the
-    * Scala map-back's isolated-community guard). q_louvain2 composes
-    * one level with sfx = "" (CTE names unchanged); q_louvain_multi
-    * chains four.
-    */
-  private def louvainCoarseCtes(inLab: String, sfx: String): String =
-    s"""se$sfx AS MATERIALIZED (SELECT least(la.label, lb.label) AS sa,
-      |        greatest(la.label, lb.label) AS sb,
-      |        CAST(count(*) AS BIGINT) AS w
-      |      FROM p JOIN $inLab la ON la.node = p.a
-      |      JOIN $inLab lb ON lb.node = p.b GROUP BY 1, 2),
-      |sd$sfx AS MATERIALIZED (SELECT node, CAST(sum(dw) AS BIGINT) AS d
-      |      FROM (SELECT sa AS node,
-      |              CASE WHEN sa = sb THEN 2 * w ELSE w END AS dw
-      |            FROM se$sfx
-      |            UNION ALL SELECT sb, w FROM se$sfx WHERE sa <> sb)
-      |      GROUP BY 1),
-      |su$sfx AS MATERIALIZED (SELECT sa AS s, sb AS t, w FROM se$sfx
-      |        WHERE sa <> sb
-      |      UNION ALL SELECT sb, sa, w FROM se$sfx WHERE sa <> sb),
-      |l0s$sfx AS (SELECT node, node AS label FROM sd$sfx),
-      |kcs1$sfx AS (SELECT su$sfx.s AS node, l.label AS cand,
-      |          CAST(sum(su$sfx.w) AS BIGINT) AS k
-      |        FROM su$sfx JOIN l0s$sfx l ON l.node = su$sfx.t GROUP BY 1, 2),
-      |cns1$sfx AS (SELECT node, cand, max(k) AS k FROM (
-      |        SELECT node, cand, k FROM kcs1$sfx
-      |        UNION ALL SELECT node, label, CAST(0 AS BIGINT)
-      |        FROM l0s$sfx) GROUP BY 1, 2),
-      |dgs1$sfx AS (SELECT l.label AS cand, CAST(sum(sd$sfx.d) AS BIGINT) AS dcm
-      |        FROM l0s$sfx l JOIN sd$sfx ON sd$sfx.node = l.node GROUP BY 1),
-      |s1$sfx AS MATERIALIZED (SELECT node, cand AS label FROM (
-      |      SELECT c.node, c.cand,
-      |        row_number() OVER (PARTITION BY c.node ORDER BY
-      |          (2 * mm.m * c.k - sd$sfx.d *
-      |           (CASE WHEN c.cand = l0s$sfx.label THEN dgs1$sfx.dcm - sd$sfx.d
-      |                 ELSE dgs1$sfx.dcm END)) DESC, c.cand) AS rk
-      |      FROM cns1$sfx c JOIN l0s$sfx ON l0s$sfx.node = c.node
-      |      JOIN sd$sfx ON sd$sfx.node = c.node
-      |      JOIN dgs1$sfx ON dgs1$sfx.cand = c.cand CROSS JOIN mm
-      |      WHERE c.cand <= l0s$sfx.label)
-      |      WHERE rk = 1),
-      |kcs2$sfx AS (SELECT su$sfx.s AS node, l.label AS cand,
-      |          CAST(sum(su$sfx.w) AS BIGINT) AS k
-      |        FROM su$sfx JOIN s1$sfx l ON l.node = su$sfx.t GROUP BY 1, 2),
-      |cns2$sfx AS (SELECT node, cand, max(k) AS k FROM (
-      |        SELECT node, cand, k FROM kcs2$sfx
-      |        UNION ALL SELECT node, label, CAST(0 AS BIGINT)
-      |        FROM s1$sfx) GROUP BY 1, 2),
-      |dgs2$sfx AS (SELECT l.label AS cand, CAST(sum(sd$sfx.d) AS BIGINT) AS dcm
-      |        FROM s1$sfx l JOIN sd$sfx ON sd$sfx.node = l.node GROUP BY 1),
-      |s2$sfx AS MATERIALIZED (SELECT node, cand AS label FROM (
-      |      SELECT c.node, c.cand,
-      |        row_number() OVER (PARTITION BY c.node ORDER BY
-      |          (2 * mm.m * c.k - sd$sfx.d *
-      |           (CASE WHEN c.cand = s1$sfx.label THEN dgs2$sfx.dcm - sd$sfx.d
-      |                 ELSE dgs2$sfx.dcm END)) DESC, c.cand) AS rk
-      |      FROM cns2$sfx c JOIN s1$sfx ON s1$sfx.node = c.node
-      |      JOIN sd$sfx ON sd$sfx.node = c.node
-      |      JOIN dgs2$sfx ON dgs2$sfx.cand = c.cand CROSS JOIN mm
-      |      WHERE c.cand >= s1$sfx.label)
-      |      WHERE rk = 1),
-      |rf$sfx AS MATERIALIZED (SELECT $inLab.node,
-      |        coalesce(s2$sfx.label, $inLab.label) AS label
-      |      FROM $inLab LEFT JOIN s2$sfx ON s2$sfx.node = $inLab.label)""".stripMargin
-
-  private val louvainCoarseCtesSql: String = louvainCoarseCtes("r5", "")
-
-  /** One q_louvain_multi level-summary CTE chain over assignment CTE
-    * `$lab`: exact-integer modularity numerator
-    * q_num = Σ_C (4m·e_in_C − D_C²) (Q = q_num/4m²) + community count —
-    * the [[graft.ops.Graph]] qLevelSummary replay (assumes p/deg/mm in
-    * scope from the sweep chain).
-    */
-  private def louvainLevelSummarySql(lab: String, lvl: Int): String =
-    s"""ecl$lvl AS (SELECT la.label, CAST(count(*) AS BIGINT) AS e_in
-       |       FROM p JOIN $lab la ON la.node = p.a
-       |       JOIN $lab lb ON lb.node = p.b
-       |       WHERE la.label = lb.label GROUP BY 1),
-       |dcl$lvl AS (SELECT $lab.label, CAST(sum(deg.d) AS BIGINT) AS d_tot
-       |       FROM $lab JOIN deg ON deg.node = $lab.node GROUP BY 1),
-       |qsl$lvl AS (SELECT $lvl AS level,
-       |        CAST(count(*) AS BIGINT) AS n_communities,
-       |        CAST(sum(4 * mm.m * coalesce(e.e_in, 0)
-       |              - d.d_tot * d.d_tot) AS BIGINT) AS q_num
-       |      FROM dcl$lvl d LEFT JOIN ecl$lvl e USING (label)
-       |      CROSS JOIN mm)""".stripMargin
-
-  /** The q_louvain_multi oracle: the sweep chain (level 0 = r5) + four
-    * unrolled coarsen levels (rf, rfb, rfc, rfd) + per-level summaries,
-    * then the strictly-improving-prefix filter that replays the Scala
-    * early stop: level l (≥ 2) is emitted iff every level j in [1, l-1]
-    * strictly improved q_num — the stall level stays visible, deeper
-    * levels (which the Scala side never computes) are dropped.
-    */
-  private def louvainMultiOracle: String =
-    louvainSweepChainSql + ",\n" +
-      louvainCoarseCtes("r5", "") + ",\n" +
-      louvainCoarseCtes("rf", "b") + ",\n" +
-      louvainCoarseCtes("rfb", "c") + ",\n" +
-      louvainCoarseCtes("rfc", "d") + ",\n" +
-      louvainLevelSummarySql("r5", 0) + ",\n" +
-      louvainLevelSummarySql("rf", 1) + ",\n" +
-      louvainLevelSummarySql("rfb", 2) + ",\n" +
-      louvainLevelSummarySql("rfc", 3) + ",\n" +
-      louvainLevelSummarySql("rfd", 4) + ",\n" +
-      """lvls AS (SELECT * FROM qsl0 UNION ALL SELECT * FROM qsl1
-        |      UNION ALL SELECT * FROM qsl2 UNION ALL SELECT * FROM qsl3
-        |      UNION ALL SELECT * FROM qsl4),
-        |seqd AS (SELECT *, lag(q_num) OVER (ORDER BY level) AS prevq
-        |      FROM lvls),
-        |impd AS (SELECT *, CASE WHEN level = 0 THEN 1
-        |             WHEN q_num > prevq THEN 1 ELSE 0 END AS ok
-        |      FROM seqd),
-        |pred AS (SELECT *, coalesce(min(ok) OVER (ORDER BY level
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 1)
-        |          AS keepr
-        |      FROM impd)
-        |SELECT CAST(level AS INTEGER) AS level, n_communities, q_num,
-        |  round(q_num / (4.0 * mm.m * mm.m), 6) + 0.0 AS q_modularity
-        |FROM pred CROSS JOIN mm WHERE keepr = 1
-        |ORDER BY level""".stripMargin
-
-  /** The q_louvain_assign oracle: the q_louvain_multi chain (sweep +
-    * four unrolled coarsen levels + per-level exact-int summaries),
-    * then the ACCEPTED level — the deepest strictly-improving one
-    * (keepr = every prior level improved, ok = this one did) — selects
-    * which node-level map-back (r5/rf/rfb/rfc/rfd) is the published
-    * assignment, with per-community sizes.
-    */
-  private def louvainAssignCtes: String =
-    louvainSweepChainSql + ",\n" +
-      louvainCoarseCtes("r5", "") + ",\n" +
-      louvainCoarseCtes("rf", "b") + ",\n" +
-      louvainCoarseCtes("rfb", "c") + ",\n" +
-      louvainCoarseCtes("rfc", "d") + ",\n" +
-      louvainLevelSummarySql("r5", 0) + ",\n" +
-      louvainLevelSummarySql("rf", 1) + ",\n" +
-      louvainLevelSummarySql("rfb", 2) + ",\n" +
-      louvainLevelSummarySql("rfc", 3) + ",\n" +
-      louvainLevelSummarySql("rfd", 4) + ",\n" +
-      """lvls AS (SELECT * FROM qsl0 UNION ALL SELECT * FROM qsl1
-        |      UNION ALL SELECT * FROM qsl2 UNION ALL SELECT * FROM qsl3
-        |      UNION ALL SELECT * FROM qsl4),
-        |seqd AS (SELECT *, lag(q_num) OVER (ORDER BY level) AS prevq
-        |      FROM lvls),
-        |impd AS (SELECT *, CASE WHEN level = 0 THEN 1
-        |             WHEN q_num > prevq THEN 1 ELSE 0 END AS ok
-        |      FROM seqd),
-        |pred AS (SELECT *, coalesce(min(ok) OVER (ORDER BY level
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 1)
-        |          AS keepr
-        |      FROM impd),
-        |chosen AS (SELECT max(level) AS lvl FROM pred
-        |           WHERE keepr = 1 AND ok = 1),
-        |asg AS (SELECT r5.node,
-        |    CASE c.lvl WHEN 0 THEN r5.label WHEN 1 THEN rf.label
-        |         WHEN 2 THEN rfb.label WHEN 3 THEN rfc.label
-        |         ELSE rfd.label END AS community
-        |  FROM r5 JOIN rf USING (node) JOIN rfb USING (node)
-        |  JOIN rfc USING (node) JOIN rfd USING (node)
-        |  CROSS JOIN chosen c)""".stripMargin
-
-  private def louvainAssignOracle: String =
-    louvainAssignCtes + ",\n" +
-      """szs AS (SELECT community,
-        |        CAST(count(*) AS BIGINT) AS community_size
-        |        FROM asg GROUP BY 1)
-        |SELECT asg.node, asg.community, szs.community_size
-        |FROM asg JOIN szs USING (community)
-        |ORDER BY asg.node""".stripMargin
-
-  /** The q_community_mix oracle: the published-assignment chain + the
-    * integer-cents revenue rollup per community (share over the
-    * ASSIGNED items' total — nodes exist iff they appear in capped
-    * baskets, so the inner join is total).
-    */
-  private def communityMixOracle: String =
-    louvainAssignCtes + ",\n" +
-      """mix AS (SELECT asg.community,
-        |    CAST(count(*) AS BIGINT) AS n_lineitems,
-        |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS revenue_cents
-        |  FROM lineitem JOIN asg ON asg.node = lineitem.l_partkey
-        |  GROUP BY 1),
-        |szs2 AS (SELECT community, CAST(count(*) AS BIGINT) AS n_items
-        |         FROM asg GROUP BY 1),
-        |tot2 AS (SELECT CAST(sum(revenue_cents) AS BIGINT) AS t
-        |         FROM mix)
-        |SELECT mix.community, szs2.n_items, mix.n_lineitems,
-        |  mix.revenue_cents,
-        |  round(CAST(mix.revenue_cents AS DOUBLE) / tot2.t, 6)
-        |    AS revenue_share
-        |FROM mix JOIN szs2 USING (community) CROSS JOIN tot2
-        |ORDER BY mix.community""".stripMargin
-
-  /** The q_ktruss oracle: the kcore chain's canonical pair CTEs + one
-    * compact-forward triangle enumeration, per-edge support billing,
-    * and support >= k-2 filter per peel round, then one final billing
-    * pass over the survivors (LEFT + coalesce 0) — the TRUE
-    * within-truss support, mirroring the Scala recompute.
-    */
-  private def ktrussOracle(k: Int, rounds: Int): String = {
-    val peels = (1 to rounds).map { r =>
-      val p = r - 1
-      s"""tri$r AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM e$p e1 JOIN e$p e2 ON e2.a = e1.b
-         |  JOIN e$p e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |e$r AS MATERIALIZED (SELECT a, b
-         |  FROM (SELECT x AS a, y AS b FROM tri$r
-         |        UNION ALL SELECT x, z FROM tri$r
-         |        UNION ALL SELECT y, z FROM tri$r)
-         |  GROUP BY 1, 2 HAVING count(*) >= ${k - 2})""".stripMargin
-    }.mkString(",\n")
-    s"""WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-       |    l_partkey AS it FROM lineitem),
-       |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-       |s0 AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-       |e0 AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-       |  FROM s0 a JOIN s0 c ON c.bk = a.bk AND a.it < c.it
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
-       |$peels,
-       |trif AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM e$rounds e1 JOIN e$rounds e2 ON e2.a = e1.b
-       |  JOIN e$rounds e3 ON e3.a = e1.a AND e3.b = e2.b),
-       |supf AS (SELECT a, b, CAST(count(*) AS BIGINT) AS support
-       |  FROM (SELECT x AS a, y AS b FROM trif
-       |        UNION ALL SELECT x, z FROM trif
-       |        UNION ALL SELECT y, z FROM trif)
-       |  GROUP BY 1, 2)
-       |SELECT e.a, e.b,
-       |  coalesce(supf.support, CAST(0 AS BIGINT)) AS support
-       |FROM e$rounds e LEFT JOIN supf
-       |  ON supf.a = e.a AND supf.b = e.b
-       |ORDER BY e.a, e.b""".stripMargin
-  }
-
-  /** Published phase-1 Louvain parameter tables, keyed by sf dir. The
-    * publish → consume seam between Louvain phases: the first consumer
-    * computes the LPA(3) + direction-sweep(2) assignment, persists it
-    * via [[graft.ops.Models.saveModel]] (a parquet parameter table —
-    * node count rows of two longs, never a driver collect), and every
-    * later consumer in the JVM loads the artifact instead of
-    * recomputing the chain — exactly how a 100 TB pipeline checkpoints
-    * between Louvain levels. The path lives in a process-scoped temp
-    * dir created here, so a code change can never read a stale
-    * artifact from an earlier run; contents are deterministic, so
-    * which gate publishes first cannot matter.
-    */
-  private val louvainPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The q_louvain* capped basket co-occurrence edge list. */
-  private def louvainBasketEdges(s: SparkSession, d: String): DataFrame =
-    graft.ops.Graph.basketPairs(Tables.lineitem(s, d), "l_orderkey",
-      "l_partkey", minCo = 2, maxBasket = 12)
-
-  /** [[louvainBasketEdges]] behind a lazy checkpoint — for gates whose
-    * chain consumes the edge table MORE THAN ONCE (LPA + local-move +
-    * the modularity scorecard each embedded their own copy of the
-    * basket self-join: q_louvain's plan computed it three times,
-    * q_modularity's and q_louvain2's twice — r16 optimization). Par.cp
-    * keeps the noCheckpoint audit flag able to see the full chain.
-    */
-  private def louvainBasketEdgesCp(s: SparkSession,
-                                   d: String): DataFrame =
-    graft.ops.Par.cp(louvainBasketEdges(s, d))
-
-  /** Phase-1 chain, computed LIVE: 3 LPA rounds + one full
-    * direction-alternating local-move sweep. Takes the (checkpointed)
-    * edge frame from the caller so the gate's scorecard and the chain
-    * share ONE basket self-join.
-    */
-  private def louvainStage1Sweep(edges: DataFrame): DataFrame =
-    graft.ops.Graph.louvainLocalMove(edges, "a", "b",
-      graft.ops.Graph.labelPropagation(edges, "a", "b", rounds = 3),
-      rounds = 2)
-
-  /** Phase-1 chain, CONSUMED from the published parameter table
-    * (compute-and-publish at most once per JVM per sf dir). The
-    * publisher itself consumes the published LPA(3) assignment (the
-    * labels parquet round-trips longs exactly), so the LPA prefix is
-    * computed once per JVM, not once per publishing family — the live
-    * receipt for the LPA chain stays q_louvain, whose gate runs the
-    * full LPA + sweep + scorecard lineage end-to-end.
-    */
-  private def louvainStage1Published(s: SparkSession,
-                                     d: String): DataFrame = {
-    val path = louvainPublished.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_louvain_pub_").toString
-      val edges = louvainBasketEdgesCp(s, d)
-      graft.ops.Models.saveModel(
-        graft.ops.Graph.louvainLocalMove(edges, "a", "b",
-          lpa3Table(s, d), rounds = 2), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** The 3-round LPA assignment over the basket graph, published once
-    * per JVM per sf dir (the louvainStage1Published discipline): the
-    * partition q_modularity scores and the stage-1 sweep refines. The
-    * chain stays measured LIVE in q_louvain (whose lineage runs LPA +
-    * local-move + scorecard end-to-end); every other consumer reads
-    * the (node, label) parquet parameter table — longs, bit-exact.
-    */
-  private val lpa3Published =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def lpa3Table(s: SparkSession, d: String): DataFrame = {
-    val path = lpa3Published.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_lpa3_pub_").toString
-      graft.ops.Models.saveModel(
-        graft.ops.Graph.labelPropagation(louvainBasketEdgesCp(s, d),
-          "a", "b", rounds = 3), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** The 5-gram LM count index (n = 1..5 long-format count tables over
-    * the % 7 != 0 train split), published once per JVM per sf dir —
-    * the KenLM production shape the r15 published-LM surface built:
-    * the model is a STATIC artifact trained once; scorers, bucketing
-    * and the CCNet funnel consume the parquet parameter table instead
-    * of re-tokenizing the train corpus per gate. Bit-identity of
-    * index-path vs inline scoring is spec-pinned (PipelineOpsSpec A/B
-    * + parquet round trip); the index BUILD chain stays measured live
-    * in q_lm_5gram (order 5), q_lm_trigram (order 3) and
-    * q_lm_index_merge (the lifecycle rebuild over its own subsets).
-    */
-  private val lmIndexPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def lmIndexModel(s: SparkSession, d: String): DataFrame = {
-    val path = lmIndexPublished.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_lm_index_pub_").toString
-      import org.apache.spark.sql.functions.col
-      graft.ops.Models.saveModel(
-        Text.lmCountIndex(
-          Tables.documents(s, d).filter(col("doc_id") % 7 =!= 0),
-          "text"), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** The CCNet funnel's per-doc stage-flag frame (id, __src, __dig,
-    * __tok, p1..p3 — parquet-exact types), published once per JVM per
-    * sf dir: the checkpoint a production curation run materializes
-    * between the filter funnel and the mix planner, so the capstone
-    * consumes a persisted funnel verdict instead of re-running the
-    * lang/LM/classifier chains. The funnel chain stays measured LIVE
-    * in q_ccnet_pipeline (end-to-end over the same batch).
-    */
-  private val ccnetFlagsPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ccnetFlagsTable(s: SparkSession, d: String): DataFrame = {
-    val path = ccnetFlagsPublished.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ccnet_flags_pub_").toString
-      import org.apache.spark.sql.functions.col
-      import s.implicits._
-      val docs = Tables.documents(s, d)
-      graft.ops.Models.saveModel(
-        graft.ops.Curation.ccnetFlagsFrame(
-          docs.filter(col("doc_id") % 7 =!= 0),
-          docs.filter(col("doc_id") % 7 === 0),
-          Text.qualityFixture.toDF("doc_id", "y", "text"),
-          "doc_id", "text", "y", "source",
-          lmIndex = Some(lmIndexModel(s, d))), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** Published rank-2 ALS factor frames over the customer×part
-    * quantity matrix (the q_als fit), once per JVM per sf dir: the
-    * serve gate reads the (key, f1, f2) parquet parameter tables —
-    * lattice doubles, bit-exact through the round trip — instead of
-    * re-running the 2-round alternation. The fit chain stays measured
-    * LIVE in q_als (fit + per-round RMSE receipts, one lineage).
-    */
-  private val alsPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def alsFactorTables(s: SparkSession,
-                              d: String): (DataFrame, DataFrame) = {
-    val base = alsPublished.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_als_pub_").toString
-      import org.apache.spark.sql.functions.col
-      val inter = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_partkey"), col("l_quantity"))
-      val (pu, qi) = graft.ops.Models.alsFactors(inter, "o_custkey",
-        "l_partkey", "l_quantity")
-      graft.ops.Models.saveModel(pu, p + "/p")
-      graft.ops.Models.saveModel(qi, p + "/q")
-      p
-    })
-    (graft.ops.Models.loadModel(s, base + "/p"),
-      graft.ops.Models.loadModel(s, base + "/q"))
-  }
-
-  /** Multi-level FINAL node→community assignment, published once per
-    * JVM per sf dir (the louvainStage1Published discipline): computed
-    * by the identical recursion as q_louvain_multi with the
-    * improving-prefix accept rule, parquet round-tripped, then
-    * consumed by q_louvain_assign and any community-keyed downstream.
-    */
-  private val louvainAssignPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def louvainAssignTable(s: SparkSession,
-                                 d: String): DataFrame = {
-    val path = louvainAssignPublished.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_louvain_assign_").toString
-      graft.ops.Models.saveModel(
-        graft.ops.Graph.louvainMultiLevelAssign(louvainBasketEdges(s, d),
-          "a", "b", louvainStage1Published(s, d), maxLevels = 4,
-          rounds = 2), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** Published boosted-model parameter tables, keyed by (sf dir, family)
-    * — the [[louvainStage1Published]] discipline applied to the q_gbt_*
-    * battery. Round-15's honest sink exposed that FIVE gates re-ran the
-    * identical depth-2 fit chain (three corpus scans per round) per
-    * bench pass; production ships ONE fitted model and every consumer
-    * (scorer, importance, PDP, permutation) reads the parameter table.
-    * The eval gates keep the full fit chain measured live (fit → eval
-    * is one lineage over the UNROUNDED internal predictions — the
-    * residual-decay semantics — so they are the family's live-fit
-    * receipts); everything else loads this parquet artifact, whose
-    * contents are deterministic, so publish order cannot matter.
-    */
-  private val gbtModelPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The shared q_gbt_* feature frame: integer-rounded price target,
-    * quantity/discount features. */
-  private def gbtLiFrame(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    Tables.lineitem(s, d).select(
-      round(col("l_extendedprice")).cast("double").as("y"),
-      col("l_quantity").cast("double").as("l_quantity"),
-      col("l_discount").cast("double").as("l_discount"))
-  }
-
-  private def gbtStumpsModel(s: SparkSession, d: String): DataFrame = {
-    val path = gbtModelPublished.computeIfAbsent(d + "#stumps", _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_gbt_stumps_").toString
-      graft.ops.Models.saveModel(graft.ops.Models.boostedStumps(
-        gbtLiFrame(s, d), "y", Seq("l_quantity", "l_discount"),
-        rounds = 3, lr = 0.5), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  private def gbtTrees2Model(s: SparkSession, d: String): DataFrame = {
-    val path = gbtModelPublished.computeIfAbsent(d + "#trees2", _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_gbt_trees2_").toString
-      graft.ops.Models.saveModel(graft.ops.Models.boostedTrees2(
-        gbtLiFrame(s, d), "y", Seq("l_quantity", "l_discount"),
-        rounds = 3, lr = 0.5), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** Published unigram vocab parameter table — trained once per JVM per
-    * sf dir (the gbtModelPublished discipline): q_unigram_train keeps
-    * the EM chain measured live; q_unigram_encode /
-    * q_tokenizer_compare consume the parquet artifact.
-    */
-  private def unigramVocabModel(s: SparkSession, d: String): DataFrame = {
-    val path = gbtModelPublished.computeIfAbsent(d + "#unigram", _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_unigram_vocab_").toString
-      graft.ops.Models.saveModel(Text.unigramTrain(
-        Tables.documents(s, d), "doc_id", "text",
-        rounds = 3, maxPieceLen = 4, seedSize = 200, minCount = 2L), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** Published BPE merge table (8 rounds, the q_bpe_merges parameters) —
-    * q_bpe_merges keeps the induction chain measured live;
-    * q_tokenizer_compare consumes the parquet artifact.
-    */
-  private def bpeMergesModel(s: SparkSession, d: String): DataFrame = {
-    val path = gbtModelPublished.computeIfAbsent(d + "#bpe8", _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_bpe_merges_").toString
-      graft.ops.Models.saveModel(Text.bpeMerges(
-        Tables.documents(s, d), "doc_id", "text", rounds = 8), p)
-      p
-    })
-    graft.ops.Models.loadModel(s, path)
-  }
-
-  /** DuckDB IN-list literal of a trigram profile — built from the SAME
-    * Text.tri* Seq the Scala classifier evaluates, so the two engines
-    * cannot drift.
-    */
-  private def triIn(p: Seq[String]): String =
-    p.map(t => s"'$t'").mkString(",")
-
-  /** Per-language trigram hit count over a lowered text column `tl` —
-    * the [[Text]] triHits replay: positions 1..len-2 (DuckDB range
-    * end-exclusive), substr(tl, i, 3) ∈ profile.
-    */
-  private def triHitSql(profile: Seq[String]): String =
-    s"""CAST(len(list_filter(range(1, greatest(length(tl) - 1, 1)),
-       |    i -> substr(tl, CAST(i AS INTEGER), 3) IN
-       |      (${triIn(profile)}))) AS INTEGER)""".stripMargin
-
-  /** The trigram langId scoring chain over relation `src` (must expose
-    * `text` + the passthrough columns): CTEs lsc (lowered) and lsg
-    * (s_en..s_fr + pred_lang). CJK short-circuit, unknown on zero
-    * hits, precedence tiebreak en > de > es > fr — Text.predLangExpr
-    * verbatim.
-    */
-  private def langScoreCtes(src: String, passCols: String): String =
-    s"""lsc AS (SELECT $passCols, lower(text) AS tl FROM $src),
-       |lsg AS (SELECT $passCols, tl,
-       |  ${triHitSql(Text.triEn)} AS s_en,
-       |  ${triHitSql(Text.triDe)} AS s_de,
-       |  ${triHitSql(Text.triEs)} AS s_es,
-       |  ${triHitSql(Text.triFr)} AS s_fr
-       |  FROM lsc),
-       |lpr AS (SELECT $passCols, tl, s_en, s_de, s_es, s_fr,
-       |  CASE WHEN regexp_matches(tl, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
-       |       WHEN greatest(s_en, s_de, s_es, s_fr) = 0 THEN 'unknown'
-       |       WHEN s_en = greatest(s_en, s_de, s_es, s_fr) THEN 'en'
-       |       WHEN s_de = greatest(s_en, s_de, s_es, s_fr) THEN 'de'
-       |       WHEN s_es = greatest(s_en, s_de, s_es, s_fr) THEN 'es'
-       |       ELSE 'fr' END AS pred_lang
-       |  FROM lsg)""".stripMargin
-
-  /** The curation funnel's language-keep CTE over the near-dedup
-    * survivors `an`: keep docs whose trigram prediction is in the
-    * en/de/es/fr keep set — Curation's pass_lang replay, shared by
-    * both q_curation_funnel oracles.
-    */
-  private val langKeepCte: String =
-    s"""lang AS (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, tl,
-       |      ${triHitSql(Text.triEn)} AS s_en,
-       |      ${triHitSql(Text.triDe)} AS s_de,
-       |      ${triHitSql(Text.triEs)} AS s_es,
-       |      ${triHitSql(Text.triFr)} AS s_fr
-       |    FROM (SELECT doc_id, lower(text) AS tl FROM an))
-       |  WHERE CASE
-       |    WHEN regexp_matches(tl, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
-       |    WHEN greatest(s_en, s_de, s_es, s_fr) = 0 THEN 'unknown'
-       |    WHEN s_en = greatest(s_en, s_de, s_es, s_fr) THEN 'en'
-       |    WHEN s_de = greatest(s_en, s_de, s_es, s_fr) THEN 'de'
-       |    WHEN s_es = greatest(s_en, s_de, s_es, s_fr) THEN 'es'
-       |    ELSE 'fr' END IN ('en', 'de', 'es', 'fr')),""".stripMargin
-
-  /** The q_decontaminate_multi oracle: per n, the q_decontaminate
-    * shingle join + an eval-keyed (n_shared DESC, train id) argmax,
-    * LEFT-joined onto every eval doc's shingle count (clean docs stay
-    * visible at 0/NULL), unioned across the sweep.
-    */
-  private def decontaminateMultiOracle(ns: Seq[Int]): String = {
-    val per = ns.map { n =>
-      s"""tsh$n AS (SELECT DISTINCT doc_id,
-         |    array_to_string(t[i:i+${n - 1}], ' ') AS s
-         |  FROM tr, UNNEST(range(1, greatest(len(t)-${n - 2}, 2)))
-         |    AS u(i)),
-         |esh$n AS (SELECT DISTINCT doc_id AS eval_id,
-         |    array_to_string(t[i:i+${n - 1}], ' ') AS s
-         |  FROM te, UNNEST(range(1, greatest(len(t)-${n - 2}, 2)))
-         |    AS u(i)),
-         |sz$n AS (SELECT eval_id, CAST(count(*) AS BIGINT) AS n_shingles
-         |  FROM esh$n GROUP BY 1),
-         |hit$n AS (SELECT e.eval_id, t.doc_id AS tid,
-         |    CAST(count(*) AS BIGINT) AS n_shared
-         |  FROM tsh$n t JOIN esh$n e USING (s) GROUP BY 1, 2),
-         |wr$n AS (SELECT eval_id, tid, n_shared FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY eval_id
-         |      ORDER BY n_shared DESC, tid) AS rk FROM hit$n)
-         |  WHERE rk = 1),
-         |rep$n AS (SELECT $n AS n, sz.eval_id, sz.n_shingles,
-         |    wr.tid AS worst_train_id,
-         |    CAST(coalesce(wr.n_shared, 0) AS BIGINT) AS n_shared,
-         |    round(coalesce(wr.n_shared, 0)
-         |      / CAST(sz.n_shingles AS DOUBLE), 6) AS overlap_frac
-         |  FROM sz$n sz LEFT JOIN wr$n wr USING (eval_id))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH tr AS (SELECT doc_id, string_split(text, ' ') AS t
-       |            FROM documents WHERE doc_id % 7 <> 0),
-       |te AS (SELECT doc_id, string_split(text, ' ') AS t
-       |       FROM documents WHERE doc_id % 7 = 0),
-       |$per
-       |SELECT CAST(n AS INTEGER) AS n, eval_id, n_shingles,
-       |  worst_train_id, n_shared, overlap_frac
-       |FROM (${ns.map(n => s"SELECT * FROM rep$n")
-                  .mkString(" UNION ALL ")})
-       |ORDER BY n, eval_id""".stripMargin
-  }
-
-  /** The q_hurst oracle: daily integer-cents series, per-block-size
-    * exact block sums (HUGEINT squares = Spark's decimal(38,0)),
-    * variance of block means as one pinned float expression, ln-ln
-    * OLS as pinned window folds over the fitted sizes.
-    */
-  private def hurstOracle(blockSizes: Seq[Int]): String = {
-    val per = blockSizes.map { m =>
-      s"""b$m AS (SELECT CAST(floor(i / $m) AS BIGINT) AS b,
-         |    count(*) AS cnt, CAST(sum(cents) AS BIGINT) AS s
-         |  FROM ix GROUP BY 1),
-         |v$m AS (SELECT $m AS m, CAST(count(*) AS BIGINT) AS n_blocks,
-         |    (CAST(sum(CAST(s AS HUGEINT) * s) AS DOUBLE) / count(*)
-         |     - (CAST(sum(s) AS DOUBLE) / count(*))
-         |       * (CAST(sum(s) AS DOUBLE) / count(*)))
-         |    / (CAST($m AS DOUBLE) * $m) AS var
-         |  FROM b$m WHERE cnt = $m)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH daily AS (SELECT o_orderdate AS day,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-       |      AS BIGINT) AS cents
-       |  FROM orders GROUP BY 1),
-       |ix AS (SELECT cents,
-       |    row_number() OVER (ORDER BY day) - 1 AS i FROM daily),
-       |$per,
-       |lv AS (SELECT m, n_blocks, var FROM
-       |    (${blockSizes.map(m => s"SELECT * FROM v$m")
-                .mkString(" UNION ALL ")})
-       |  WHERE var > 0.0),
-       |f AS (SELECT m, n_blocks, ln(CAST(m AS DOUBLE)) AS lx,
-       |        ln(var) AS ly FROM lv),
-       |g AS (SELECT *, CAST(count(*) OVER pin AS DOUBLE) AS k,
-       |    sum(lx) OVER pin AS sx, sum(ly) OVER pin AS sy,
-       |    sum(lx * ly) OVER pin AS sxy, sum(lx * lx) OVER pin AS sxx
-       |  FROM f WINDOW pin AS (ORDER BY m ROWS BETWEEN UNBOUNDED
-       |    PRECEDING AND UNBOUNDED FOLLOWING))
-       |SELECT CAST(m AS INTEGER) AS m, n_blocks,
-       |  round(ly, 6) + 0.0 AS ln_var,
-       |  round(1.0 + ((k * sxy - sx * sy) / (k * sxx - sx * sx))
-       |    / 2.0, 6) + 0.0 AS hurst
-       |FROM g WHERE k >= 2.0 ORDER BY m""".stripMargin
-  }
-
-  /** The q_hill_tail oracle: one term count, rank ≤ max k + 1, per-k
-    * pinned-rank-order ln folds against the (k+1)-th count.
-    */
-  private def hillOracle(ks: Seq[Int]): String = {
-    val kMax = ks.max
-    val per = ks.map { k =>
-      s"""h$k AS (SELECT $k AS k, threshold_count, hill_alpha FROM (
-         |  SELECT rk.r, t.c AS threshold_count,
-         |    round(CAST($k AS DOUBLE) / sum(ln(CAST(rk.c AS DOUBLE))
-         |        - ln(CAST(t.c AS DOUBLE)))
-         |      OVER (ORDER BY rk.r ROWS BETWEEN UNBOUNDED PRECEDING
-         |        AND UNBOUNDED FOLLOWING), 6) + 0.0 AS hill_alpha
-         |  FROM rk CROSS JOIN (SELECT c FROM rk WHERE r = $k + 1) t
-         |  WHERE rk.r <= $k) WHERE r = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH tc AS (SELECT l_partkey AS term,
-       |    CAST(count(*) AS BIGINT) AS c
-       |  FROM lineitem GROUP BY 1),
-       |rk AS (SELECT term, c,
-       |    row_number() OVER (ORDER BY c DESC, term) AS r
-       |  FROM tc QUALIFY r <= ${kMax + 1}),
-       |$per
-       |SELECT CAST(k AS INTEGER) AS k, threshold_count, hill_alpha
-       |FROM (${ks.map(k => s"SELECT * FROM h$k").mkString(" UNION ALL ")})
-       |ORDER BY k""".stripMargin
-  }
-
-  /** The q_heaps oracle: md5-shard assignment (the portable 60-bit
-    * hash), term min-shard + shard token counts, dyadic-union
-    * checkpoints, pinned ln-ln OLS folds.
-    */
-  private def heapsOracle(shards: Int): String = {
-    val nCheck = java.lang.Integer.numberOfTrailingZeros(shards) + 1
-    val cps = (0 until nCheck).map(j => 1 << j)
-    val per = cps.map { c =>
-      s"""p$c AS (SELECT $c AS k_shards,
-         |    (SELECT CAST(sum(nt) AS BIGINT) FROM st WHERE sh < $c)
-         |      AS n_tokens,
-         |    (SELECT CAST(count(*) AS BIGINT) FROM tm WHERE ms < $c)
-         |      AS vocab)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH sharded AS (SELECT sh, array_to_string(t[i:i+2], ' ')
-       |      AS term
-       |  FROM (SELECT
-       |      CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-       |        AS BIGINT) % $shards AS sh,
-       |      string_split(text, ' ') AS t
-       |    FROM documents),
-       |    UNNEST(range(1, greatest(len(t) - 1, 2))) AS u(i)),
-       |tm AS (SELECT term, min(sh) AS ms FROM sharded GROUP BY 1),
-       |st AS (SELECT sh, CAST(count(*) AS BIGINT) AS nt
-       |       FROM sharded GROUP BY 1),
-       |$per,
-       |pts AS (${cps.map(c => s"SELECT * FROM p$c")
-                   .mkString(" UNION ALL ")}),
-       |f AS (SELECT k_shards, n_tokens, vocab,
-       |        ln(CAST(n_tokens AS DOUBLE)) AS lx,
-       |        ln(CAST(vocab AS DOUBLE)) AS ly
-       |      FROM pts WHERE n_tokens > 0 AND vocab > 0),
-       |g AS (SELECT *, CAST(count(*) OVER pin AS DOUBLE) AS kk,
-       |    sum(lx) OVER pin AS sx, sum(ly) OVER pin AS sy,
-       |    sum(lx * ly) OVER pin AS sxy, sum(lx * lx) OVER pin AS sxx
-       |  FROM f WINDOW pin AS (ORDER BY k_shards ROWS BETWEEN
-       |    UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)),
-       |s AS (SELECT *, (kk * sxy - sx * sy) / (kk * sxx - sx * sx)
-       |        AS beta FROM g)
-       |SELECT CAST(k_shards AS INTEGER) AS k_shards, n_tokens, vocab,
-       |  round(beta, 6) AS beta,
-       |  round(exp((sy - beta * sx) / kk), 6) AS k_coef
-       |FROM s WHERE kk >= 2.0 ORDER BY k_shards""".stripMargin
-  }
-
-  /** The q_windowed_psi reference histogram — a pinned decaying
-    * distribution over the 10 value bins of [0, 500), shipped as a
-    * literal exactly like a production monitor ships its training-time
-    * reference. Shared verbatim by the Scala gate and the SQL oracle.
-    */
-  private val psiRefBaseline: Seq[Long] =
-    Seq(30L, 25L, 20L, 15L, 10L, 8L, 6L, 4L, 2L, 1L)
-
-  /** The q_windowed_psi oracle: hour buckets, per-bin conditional
-    * sums in one aggregate, then the SAME smoothed p/q arithmetic with
-    * the addition order pinned to ascending bins (the Scala reduce
-    * order), CASE-chain worst-bin with ascending tiebreak.
-    */
-  private def windowedPsiOracle(baseline: Seq[Long], lo: Double,
-                                hi: Double): String = {
-    val bins = baseline.size
-    val qTot = baseline.sum
-    val sums = (0 until bins).map(i =>
-      s"    CAST(sum(CASE WHEN bin = $i THEN 1 ELSE 0 END) AS BIGINT)" +
-        s" AS c$i").mkString(",\n|")
-    def p(i: Int) = s"((c$i + 0.5) / (n + 0.5 * $bins))"
-    def q(i: Int) = s"((${baseline(i)} + 0.5) / ($qTot + 0.5 * $bins))"
-    def contrib(i: Int) =
-      s"((${p(i)} - ${q(i)}) * ln(${p(i)} / ${q(i)}))"
-    val psi = (0 until bins).map(contrib).mkString(" + ")
-    val best = s"greatest(${(0 until bins).map(contrib).mkString(", ")})"
-    val worst = (0 until bins).map(i =>
-      s"WHEN ${contrib(i)} = best THEN $i").mkString(" ")
-    s"""WITH w AS (SELECT
-       |    CAST(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))
-       |      AS TIMESTAMP) AS window_start,
-       |    least(greatest(CAST(floor((CAST(value AS DOUBLE) - $lo)
-       |      / (($hi - $lo) / $bins)) AS BIGINT), 0), ${bins - 1})
-       |      AS bin
-       |  FROM events WHERE value IS NOT NULL),
-       |g AS (SELECT window_start, CAST(count(*) AS BIGINT) AS n,
-       |$sums
-       |  FROM w GROUP BY 1),
-       |x AS (SELECT *,
-       |    $psi AS psi_raw,
-       |    $best AS best
-       |  FROM g)
-       |SELECT window_start, n,
-       |  round(psi_raw, 6) + 0.0 AS psi,
-       |  CAST(CASE $worst END AS INTEGER) AS worst_bin,
-       |  round(best, 6) + 0.0 AS worst_contrib
-       |FROM x ORDER BY window_start""".stripMargin
-  }
-
-  /** The langIdFixture as a DuckDB VALUES relation literal (sid, lang,
-    * text) — same Seq the Scala gate builds its DataFrame from.
-    */
-  private def langFixtureValues: String =
-    Text.langIdFixture
-      .map { case (i, l, t) => s"($i, '$l', '$t')" }
-      .mkString(",\n      ")
-
-  /** Text.qualityFixture as a DuckDB VALUES literal (id, y, text) —
-    * same Seq the Scala gate trains on.
-    */
-  private def qualityFixtureValues: String =
-    Text.qualityFixture
-      .map { case (i, y, t) => s"($i, $y, '$t')" }
-      .mkString(",\n      ")
-
-  /** The q_quality_classifier oracle: replays the whole NB-LR loop —
-    * fixture char trigrams, md5 % nBuckets hashing, smoothed log-count-
-    * ratio micro weights over ALL buckets, exact-long doc features,
-    * exact-moment standardization, the q_fit_logistic Newton unroll
-    * (generated, identical expression text), round-6 published
-    * coefficients, injected-suffix corpus scoring, per-source rollup.
-    */
-  private def qualityClassifierOracle(nBuckets: Int, rounds: Int)
-      : String = {
-    val newton = (0 until rounds).map { r =>
-      s"""p$r AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z)))
-         |    AS p, b0, b1 FROM zl, b${r}r),
-         |s$r AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
-         |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
-         |    sum(p * (1.0 - p) * z * z) AS h11,
-         |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p$r),
-         |b${r + 1}r AS (SELECT
-         |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
-         |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
-         |  FROM s$r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH fx(id, y, text) AS (VALUES
-       |      $qualityFixtureValues),
-       |corp AS (SELECT doc_id AS id, source,
-       |    text || CASE WHEN doc_id % 4 = 0
-       |      THEN ' win free cash prizes instantly click here claim your free bonus now buy cheap pills online casino jackpot win money fast click now free offer'
-       |      ELSE '' END AS text
-       |  FROM documents),
-       |fg AS (SELECT id, y,
-       |    CAST('0x' || substr(md5(substr(text, i.i, 3)), 1, 15)
-       |      AS BIGINT) % $nBuckets AS bucket
-       |  FROM fx CROSS JOIN
-       |    UNNEST(range(1, greatest(length(text) - 2, 1) + 1)) AS i(i)),
-       |cnt AS (SELECT bucket,
-       |    CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-       |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS s
-       |  FROM fg GROUP BY bucket),
-       |tot AS (SELECT CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS ct,
-       |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS st
-       |  FROM fg),
-       |w AS (SELECT b.b AS bucket,
-       |    CAST(round((ln(CAST(COALESCE(cnt.c, 0) + 1 AS DOUBLE)
-       |        / CAST(tot.ct + $nBuckets AS DOUBLE))
-       |      - ln(CAST(COALESCE(cnt.s, 0) + 1 AS DOUBLE)
-       |        / CAST(tot.st + $nBuckets AS DOUBLE))) * 1000000)
-       |      AS BIGINT) AS w_micro
-       |  FROM UNNEST(range($nBuckets)) AS b(b)
-       |  LEFT JOIN cnt ON cnt.bucket = b.b CROSS JOIN tot),
-       |lf AS (SELECT fg.id, any_value(fg.y) AS y,
-       |    CAST(count(*) AS BIGINT) AS n_grams,
-       |    CAST(round(CAST(sum(w.w_micro) AS DOUBLE) / count(*))
-       |      AS BIGINT) AS f
-       |  FROM fg JOIN w ON w.bucket = fg.bucket GROUP BY fg.id),
-       |stt AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-       |    CAST(sum(f) AS DOUBLE) AS sf,
-       |    CAST(sum(CAST(f AS HUGEINT) * f) AS DOUBLE) AS sf2 FROM lf),
-       |stm AS (SELECT (sf / n) AS m,
-       |    sqrt((sf2 - sf * sf / n) / (n - 1)) AS sd FROM stt),
-       |zl AS (SELECT CAST(y AS DOUBLE) AS y,
-       |    (CAST(f AS DOUBLE) - m) / sd AS z FROM lf, stm),
-       |b0r AS (SELECT 0.0 AS b0, 0.0 AS b1),
-       |$newton,
-       |bfin AS (SELECT round(b0, 6) + 0.0 AS b0,
-       |    round(b1, 6) + 0.0 AS b1 FROM b${rounds}r),
-       |cg AS (SELECT id, source,
-       |    CAST('0x' || substr(md5(substr(text, i.i, 3)), 1, 15)
-       |      AS BIGINT) % $nBuckets AS bucket
-       |  FROM corp CROSS JOIN
-       |    UNNEST(range(1, greatest(length(text) - 2, 1) + 1)) AS i(i)),
-       |cf AS (SELECT cg.id, any_value(cg.source) AS source,
-       |    CAST(round(CAST(sum(w.w_micro) AS DOUBLE) / count(*))
-       |      AS BIGINT) AS f
-       |  FROM cg JOIN w ON w.bucket = cg.bucket GROUP BY cg.id),
-       |scored AS (SELECT cf.id, cf.source, cf.f,
-       |    round(1.0 / (1.0 + exp(0.0 - (b.b0 + b.b1
-       |      * ((CAST(cf.f AS DOUBLE) - stm.m) / stm.sd)))), 6) AS score
-       |  FROM cf, stm, bfin b)
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(CASE WHEN score > 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_kept,
-       |  round(CAST(sum(CASE WHEN score > 0.5 THEN 1 ELSE 0 END)
-       |      AS DOUBLE) / count(*), 6) AS kept_rate,
-       |  round(CAST(sum(f) AS DOUBLE) / count(*) / 1000000.0, 6)
-       |    AS mean_logodds
-       |FROM scored GROUP BY source ORDER BY source""".stripMargin
-  }
-
-  /** The q_quality_classifier2 oracle: [[qualityClassifierOracle]]
-    * widened to the (log-odds, coverage) plane — the same fixture
-    * grams and smoothed micro weights plus the >= 2-count `seen`
-    * vocabulary flag, per-doc exact (f, coverage) micros, per-feature
-    * exact-moment standardization, and the fitLogistic2 Newton unroll
-    * with the identical cofactor/adjugate expression text (c00..c22,
-    * det, the three dot products). Scoring and rollup replay the gate's
-    * injected-suffix corpus with the mean-coverage column.
-    */
-  /** Classifier-2 TRAINING chain as composable CTEs (fixture grams →
-    * bucket weights `w` → exact-micro features → moments `stm` →
-    * fixed-round Newton → published `bfin`) — shared by
-    * q_quality_classifier2 and the q_ccnet_pipeline composition.
-    */
-  private def classifier2TrainCtes(nBuckets: Int, rounds: Int)
-      : String = {
-    val newton = (0 until rounds).map { r =>
-      s"""p$r AS (SELECT y, z1, z2,
-         |    1.0 / (1.0 + exp(0.0 - (b0 + b1 * z1 + b2 * z2))) AS p,
-         |    b0, b1, b2 FROM zl, b${r}r),
-         |s$r AS (SELECT
-         |    sum(y - p) AS g0, sum((y - p) * z1) AS g1,
-         |    sum((y - p) * z2) AS g2,
-         |    sum(p * (1.0 - p)) AS h00,
-         |    sum(p * (1.0 - p) * z1) AS h01,
-         |    sum(p * (1.0 - p) * z2) AS h02,
-         |    sum(p * (1.0 - p) * z1 * z1) AS h11,
-         |    sum(p * (1.0 - p) * z1 * z2) AS h12,
-         |    sum(p * (1.0 - p) * z2 * z2) AS h22,
-         |    any_value(b0) AS b0, any_value(b1) AS b1,
-         |    any_value(b2) AS b2 FROM p$r),
-         |c$r AS (SELECT *,
-         |    h11 * h22 - h12 * h12 AS c00,
-         |    h01 * h22 - h12 * h02 AS c01,
-         |    h01 * h12 - h11 * h02 AS c02,
-         |    h00 * h22 - h02 * h02 AS c11,
-         |    h00 * h12 - h01 * h02 AS c12,
-         |    h00 * h11 - h01 * h01 AS c22 FROM s$r),
-         |d$r AS (SELECT *, h00 * c00 - h01 * c01 + h02 * c02 AS det
-         |  FROM c$r),
-         |b${r + 1}r AS (SELECT
-         |    b0 + (c00 * g0 - c01 * g1 + c02 * g2) / det AS b0,
-         |    b1 + (c11 * g1 - c01 * g0 - c12 * g2) / det AS b1,
-         |    b2 + (c02 * g0 - c12 * g1 + c22 * g2) / det AS b2
-         |  FROM d$r)""".stripMargin
-    }.mkString(",\n")
-    s"""fx(id, y, text) AS (VALUES
-       |      $qualityFixtureValues),
-       |fg AS (SELECT id, y,
-       |    CAST('0x' || substr(md5(substr(text, i.i, 3)), 1, 15)
-       |      AS BIGINT) % $nBuckets AS bucket
-       |  FROM fx CROSS JOIN
-       |    UNNEST(range(1, greatest(length(text) - 2, 1) + 1)) AS i(i)),
-       |cnt AS (SELECT bucket,
-       |    CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-       |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS s
-       |  FROM fg GROUP BY bucket),
-       |tot AS (SELECT CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS ct,
-       |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS st
-       |  FROM fg),
-       |w AS (SELECT b.b AS bucket,
-       |    CAST(round((ln(CAST(COALESCE(cnt.c, 0) + 1 AS DOUBLE)
-       |        / CAST(tot.ct + $nBuckets AS DOUBLE))
-       |      - ln(CAST(COALESCE(cnt.s, 0) + 1 AS DOUBLE)
-       |        / CAST(tot.st + $nBuckets AS DOUBLE))) * 1000000)
-       |      AS BIGINT) AS w_micro,
-       |    COALESCE(cnt.c, 0) >= 2 AS seen
-       |  FROM UNNEST(range($nBuckets)) AS b(b)
-       |  LEFT JOIN cnt ON cnt.bucket = b.b CROSS JOIN tot),
-       |lf AS (SELECT fg.id, any_value(fg.y) AS y,
-       |    CAST(count(*) AS BIGINT) AS n_grams,
-       |    CAST(round(CAST(sum(w.w_micro) AS DOUBLE) / count(*))
-       |      AS BIGINT) AS f,
-       |    CAST(round(CAST(sum(CASE WHEN w.seen THEN 1 ELSE 0 END)
-       |        AS DOUBLE) * 1000000.0 / count(*)) AS BIGINT) AS cv
-       |  FROM fg JOIN w ON w.bucket = fg.bucket GROUP BY fg.id),
-       |stt AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-       |    CAST(sum(f) AS DOUBLE) AS sf,
-       |    CAST(sum(CAST(f AS HUGEINT) * f) AS DOUBLE) AS sf2,
-       |    CAST(sum(cv) AS DOUBLE) AS sc,
-       |    CAST(sum(CAST(cv AS HUGEINT) * cv) AS DOUBLE) AS sc2 FROM lf),
-       |stm AS (SELECT (sf / n) AS m1,
-       |    sqrt((sf2 - sf * sf / n) / (n - 1)) AS sd1,
-       |    (sc / n) AS m2,
-       |    sqrt((sc2 - sc * sc / n) / (n - 1)) AS sd2 FROM stt),
-       |zl AS (SELECT CAST(y AS DOUBLE) AS y,
-       |    (CAST(f AS DOUBLE) - m1) / sd1 AS z1,
-       |    (CAST(cv AS DOUBLE) - m2) / sd2 AS z2 FROM lf, stm),
-       |b0r AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2),
-       |$newton,
-       |bfin AS (SELECT round(b0, 6) + 0.0 AS b0,
-       |    round(b1, 6) + 0.0 AS b1, round(b2, 6) + 0.0 AS b2
-       |  FROM b${rounds}r)""".stripMargin
-  }
-
-  /** Classifier-2 SCORING chain over relation `src` (must expose id,
-    * source, text): grams → exact-micro features → round-6 sigmoid
-    * score with the published bfin coefficients. Composable after
-    * [[classifier2TrainCtes]].
-    */
-  private def classifier2ScoreCtes(src: String, nBuckets: Int): String =
-    s"""cg AS (SELECT id, source,
-       |    CAST('0x' || substr(md5(substr(text, i.i, 3)), 1, 15)
-       |      AS BIGINT) % $nBuckets AS bucket
-       |  FROM $src CROSS JOIN
-       |    UNNEST(range(1, greatest(length(text) - 2, 1) + 1)) AS i(i)),
-       |cf AS (SELECT cg.id, any_value(cg.source) AS source,
-       |    CAST(round(CAST(sum(w.w_micro) AS DOUBLE) / count(*))
-       |      AS BIGINT) AS f,
-       |    CAST(round(CAST(sum(CASE WHEN w.seen THEN 1 ELSE 0 END)
-       |        AS DOUBLE) * 1000000.0 / count(*)) AS BIGINT) AS cv
-       |  FROM cg JOIN w ON w.bucket = cg.bucket GROUP BY cg.id),
-       |scored AS (SELECT cf.id, cf.source, cf.f, cf.cv,
-       |    round(1.0 / (1.0 + exp(0.0 - (b.b0
-       |      + b.b1 * ((CAST(cf.f AS DOUBLE) - stm.m1) / stm.sd1)
-       |      + b.b2 * ((CAST(cf.cv AS DOUBLE) - stm.m2) / stm.sd2)))),
-       |      6) AS score
-       |  FROM cf, stm, bfin b)""".stripMargin
-
-  private def qualityClassifier2Oracle(nBuckets: Int, rounds: Int)
-      : String =
-    s"""WITH ${classifier2TrainCtes(nBuckets, rounds)},
-       |corp AS (SELECT doc_id AS id, source,
-       |    text || CASE WHEN doc_id % 4 = 0
-       |      THEN ' win free cash prizes instantly click here claim your free bonus now buy cheap pills online casino jackpot win money fast click now free offer'
-       |      ELSE '' END AS text
-       |  FROM documents),
-       |${classifier2ScoreCtes("corp", nBuckets)}
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(CASE WHEN score > 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_kept,
-       |  round(CAST(sum(CASE WHEN score > 0.5 THEN 1 ELSE 0 END)
-       |      AS DOUBLE) / count(*), 6) AS kept_rate,
-       |  round(CAST(sum(f) AS DOUBLE) / count(*) / 1000000.0, 6)
-       |    AS mean_logodds,
-       |  round(CAST(sum(cv) AS DOUBLE) / count(*) / 1000000.0, 6)
-       |    AS mean_coverage
-       |FROM scored GROUP BY source ORDER BY source""".stripMargin
-
-  private def markovOracle(steps: Int): String = {
-    val rounds = (1 to steps).map { k =>
-      s"""v$k AS (SELECT t.v, t.to_s AS st,
-         |    round(sum(m.mass * t.p), 9) AS mass
-         |  FROM v${k - 1} m JOIN tt t ON t.v = m.v AND t.from_s = m.st
-         |  GROUP BY 1, 2)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH j AS (SELECT user_id AS u, ts, event_id AS id,
-       |    CASE WHEN event_type = 'purchase' THEN 'CONV'
-       |         ELSE event_type END AS st,
-       |    coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1
-       |        ELSE 0 END) OVER (PARTITION BY user_id ORDER BY ts,
-       |        event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-       |        PRECEDING), 0) AS jn
-       |  FROM events),
-       |tr AS (SELECT coalesce(lag(st) OVER (PARTITION BY u, jn
-       |      ORDER BY ts, id), 'START') AS from_s, st AS to_s
-       |  FROM j),
-       |lastx AS (SELECT st,
-       |    row_number() OVER (PARTITION BY u, jn
-       |      ORDER BY ts DESC, id DESC) AS rn,
-       |    max(CASE WHEN st = 'CONV' THEN 1 ELSE 0 END)
-       |      OVER (PARTITION BY u, jn) AS hc
-       |  FROM j),
-       |alltr AS (SELECT from_s, to_s FROM tr
-       |  UNION ALL SELECT st, 'NULL' FROM lastx
-       |  WHERE rn = 1 AND hc = 0),
-       |cnt AS (SELECT from_s, to_s, CAST(count(*) AS BIGINT) AS n
-       |  FROM alltr GROUP BY 1, 2),
-       |vr AS (SELECT DISTINCT from_s AS v FROM cnt
-       |    WHERE from_s <> 'START'
-       |  UNION ALL SELECT 'TOTAL'),
-       |rcg AS (SELECT v, from_s,
-       |    CASE WHEN v <> 'TOTAL' AND to_s = v THEN 'NULL'
-       |         ELSE to_s END AS to_s,
-       |    CAST(sum(n) AS BIGINT) AS n
-       |  FROM cnt CROSS JOIN vr GROUP BY 1, 2, 3),
-       |tt AS (SELECT v, from_s, to_s, CAST(n AS DOUBLE)
-       |      / CAST(sum(n) OVER (PARTITION BY v, from_s) AS DOUBLE) AS p
-       |    FROM rcg
-       |  UNION ALL
-       |  SELECT v, s.s, s.s, CAST(1.0 AS DOUBLE)
-       |  FROM vr CROSS JOIN (SELECT 'CONV' AS s
-       |    UNION ALL SELECT 'NULL') s),
-       |v0 AS (SELECT v, 'START' AS st, CAST(1.0 AS DOUBLE) AS mass
-       |  FROM vr),
-       |$rounds,
-       |pcv AS (SELECT vr.v, coalesce(p.mass, 0.0) AS pc
-       |  FROM vr LEFT JOIN (SELECT v, mass FROM v$steps
-       |    WHERE st = 'CONV') p ON p.v = vr.v),
-       |eff AS (SELECT pcv.v AS channel, pcv.pc, t.pt,
-       |    CASE WHEN t.pt > 0.0 THEN (t.pt - pcv.pc) / t.pt END AS re
-       |  FROM pcv CROSS JOIN (SELECT pc AS pt FROM pcv
-       |    WHERE v = 'TOTAL') t
-       |  WHERE pcv.v <> 'TOTAL'),
-       |sh AS (SELECT *, sum(re) OVER (ORDER BY channel ROWS BETWEEN
-       |    UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS sre FROM eff)
-       |SELECT channel, round(pt, 6) AS p_conv_total,
-       |  round(pc, 6) AS p_conv_without,
-       |  round(re, 6) AS removal_effect,
-       |  round(CASE WHEN sre > 0.0 THEN re / sre END, 6)
-       |    AS attribution_share
-       |FROM sh ORDER BY channel""".stripMargin
-  }
-
-  /** Shared CTE prefix for the cluster gates (q_cluster_profile,
-    * q_diverse_sample, q_silhouette): the ivfTopKOracle dyadic Lloyd
-    * chain, then the final-centroid assignment that KEEPS the winning
-    * cosine; with `withSecond` the emitted `asg` keeps ranks 1-2 (+ rk
-    * column) instead of the winner only — the silhouette's a/b pair.
-    */
-  private def clusterAssignCtes(nCells: Int, iters: Int,
-                                withSecond: Boolean = false): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    val lloyd = (1 to iters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    s"""WITH uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |                   x -> floor(CAST(x AS DOUBLE) * 1024) / 1024) AS v
-       |  FROM embeddings),
-       |uo AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${lloyd.mkString(",\n")},
-       |asg AS MATERIALIZED (
-       |  SELECT vec_id, cell, cos${if (withSecond) ", rk" else ""} FROM (
-       |    SELECT u.vec_id, c.cell, ${cos("u.v", "c.cvec")} AS cos,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$iters c)
-       |  WHERE rk <= ${if (withSecond) 2 else 1})""".stripMargin
-  }
-
-  /** The shared trigram stupid-backoff CTE chain (through `pd`):
-    * train-split count tables, eval trigram projection, the LEFT-join
-    * backoff ladder (exact-count quotients, dyadic λ = 1/2, smoothed
-    * unigram floor), per-doc ln sums. q_lm_trigram appends the per-doc
-    * final select; q_ccnet_buckets appends the percentile bucketing.
-    * `ev` carries `source` for the bucket rollup.
-    */
-  private val lmTrigramChainSql: String =
-    """WITH tr AS (SELECT string_split(text, ' ') AS t
-      |            FROM documents WHERE doc_id % 7 <> 0),
-      |ev AS (SELECT doc_id, source, string_split(text, ' ') AS t
-      |       FROM documents WHERE doc_id % 7 = 0),
-      |uni AS (SELECT u.w, CAST(count(*) AS BIGINT) AS c1
-      |        FROM tr, UNNEST(t) AS u(w) GROUP BY 1),
-      |nv AS (SELECT CAST(sum(c1) AS DOUBLE) AS n,
-      |         CAST(count(*) AS DOUBLE) AS v FROM uni),
-      |bi AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2,
-      |         CAST(count(*) AS BIGINT) AS c2
-      |       FROM tr CROSS JOIN
-      |         UNNEST(range(1, greatest(len(t) - 1, 1) + 1)) AS i(i)
-      |       WHERE t[i.i + 1] IS NOT NULL GROUP BY 1, 2),
-      |tri AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2, t[i.i + 2] AS w3,
-      |          CAST(count(*) AS BIGINT) AS c3
-      |        FROM tr CROSS JOIN
-      |          UNNEST(range(1, greatest(len(t) - 2, 1) + 1)) AS i(i)
-      |        WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL
-      |        GROUP BY 1, 2, 3),
-      |eg AS (SELECT doc_id, t[i.i] AS w1, t[i.i + 1] AS w2,
-      |         t[i.i + 2] AS w3
-      |       FROM ev CROSS JOIN
-      |         UNNEST(range(1, greatest(len(t) - 2, 1) + 1)) AS i(i)
-      |       WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL),
-      |sc AS (SELECT eg.doc_id,
-      |    CASE WHEN tri.c3 IS NOT NULL
-      |           THEN CAST(tri.c3 AS DOUBLE) / cab.c2
-      |         WHEN cbc.c2 IS NOT NULL
-      |           THEN 0.5 * CAST(cbc.c2 AS DOUBLE) / ub.c1
-      |         ELSE 0.25 * CAST(COALESCE(uw.c1, 0) + 1 AS DOUBLE)
-      |           / (nv.n + nv.v) END AS s,
-      |    CASE WHEN tri.c3 IS NOT NULL THEN 'tri'
-      |         WHEN cbc.c2 IS NOT NULL THEN 'bi'
-      |         ELSE 'uni' END AS depth
-      |  FROM eg
-      |  LEFT JOIN tri ON tri.w1 = eg.w1 AND tri.w2 = eg.w2
-      |    AND tri.w3 = eg.w3
-      |  LEFT JOIN bi cbc ON cbc.w1 = eg.w2 AND cbc.w2 = eg.w3
-      |  LEFT JOIN bi cab ON cab.w1 = eg.w1 AND cab.w2 = eg.w2
-      |  LEFT JOIN uni ub ON ub.w = eg.w2
-      |  LEFT JOIN uni uw ON uw.w = eg.w3
-      |  CROSS JOIN nv),
-      |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-      |    CAST(sum(CASE WHEN depth = 'tri' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_tri_hits,
-      |    CAST(sum(CASE WHEN depth = 'bi' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_bi_hits,
-      |    CAST(sum(CASE WHEN depth = 'uni' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_uni_hits,
-      |    sum(ln(s)) AS lp
-      |  FROM sc GROUP BY doc_id)""".stripMargin
-
-  /** The shared DSIR CTE chain (through `rk`): fixture target grams,
-    * corpus grams, bucket counts, micro log-ratio λ table over ALL
-    * buckets, exact-long doc sums, the md5-Gumbel key and the
-    * (key DESC, id) ranking. q_dsir appends the top-k select;
-    * q_dsir_mix appends the per-source selected-vs-corpus share rollup.
-    */
-  private def dsirChainSql: String =
-    s"""WITH fx(id, y, text) AS (VALUES
-      |      $qualityFixtureValues),
-      |tg AS (SELECT CAST('0x' || substr(md5(substr(text, i.i, 3)),
-      |           1, 15) AS BIGINT) % 64 AS bucket
-      |       FROM fx CROSS JOIN
-      |         UNNEST(range(1, greatest(length(text) - 2, 1) + 1))
-      |           AS i(i)
-      |       WHERE y = 1),
-      |rg AS (SELECT doc_id, CAST('0x' || substr(md5(substr(text, i.i,
-      |           3)), 1, 15) AS BIGINT) % 64 AS bucket
-      |       FROM documents CROSS JOIN
-      |         UNNEST(range(1, greatest(length(text) - 2, 1) + 1))
-      |           AS i(i)),
-      |tb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS t FROM tg
-      |       GROUP BY 1),
-      |rb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS r FROM rg
-      |       GROUP BY 1),
-      |tots AS (SELECT (SELECT CAST(sum(t) AS BIGINT) FROM tb) AS tt,
-      |                (SELECT CAST(sum(r) AS BIGINT) FROM rb) AS rt),
-      |lam AS (SELECT b.b AS bucket,
-      |    CAST(round((ln(CAST(COALESCE(tb.t, 0) + 1 AS DOUBLE)
-      |        / CAST(tots.tt + 64 AS DOUBLE))
-      |      - ln(CAST(COALESCE(rb.r, 0) + 1 AS DOUBLE)
-      |        / CAST(tots.rt + 64 AS DOUBLE))) * 1000000)
-      |      AS BIGINT) AS w
-      |  FROM UNNEST(range(64)) AS b(b)
-      |  LEFT JOIN tb ON tb.bucket = b.b
-      |  LEFT JOIN rb ON rb.bucket = b.b CROSS JOIN tots),
-      |feat AS (SELECT rg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-      |    CAST(sum(lam.w) AS BIGINT) AS ws
-      |  FROM rg JOIN lam ON lam.bucket = rg.bucket GROUP BY 1),
-      |keyed AS (SELECT doc_id, n_grams, ws,
-      |    -ln(-ln((CAST(CAST('0x' || substr(md5(CAST(doc_id
-      |      AS VARCHAR)), 1, 15) AS BIGINT) AS DOUBLE) + 0.5)
-      |      / CAST(1152921504606846976 AS DOUBLE))) AS gum
-      |  FROM feat),
-      |wk AS (SELECT *, CAST(ws AS DOUBLE) / 1000000.0 + gum AS key
-      |       FROM keyed),
-      |rk AS (SELECT *, row_number() OVER (ORDER BY key DESC, doc_id)
-      |         AS rank FROM wk)""".stripMargin
-
-  /** The shared 5-gram stupid-backoff CTE chain (through `pd`) — the
-    * [[lmTrigramChainSql]] ladder at CCNet's actual KenLM order: five
-    * train count tables, eval 5-gram projection, the four-rung LEFT-join
-    * backoff CASE (exact-count quotients, dyadic λ..λ⁴), per-doc ln
-    * sums with published depth counters. q_lm_5gram appends the per-doc
-    * final select; q_ccnet_buckets5 appends the percentile bucketing.
-    */
-  private val lm5gramChainSql: String =
-    """WITH tr AS (SELECT string_split(text, ' ') AS t
-      |            FROM documents WHERE doc_id % 7 <> 0),
-      |ev AS (SELECT doc_id, source, string_split(text, ' ') AS t
-      |       FROM documents WHERE doc_id % 7 = 0),
-      |uni AS (SELECT u.w, CAST(count(*) AS BIGINT) AS c1
-      |        FROM tr, UNNEST(t) AS u(w) GROUP BY 1),
-      |nv AS (SELECT CAST(sum(c1) AS DOUBLE) AS n,
-      |         CAST(count(*) AS DOUBLE) AS v FROM uni),
-      |bi AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2,
-      |         CAST(count(*) AS BIGINT) AS c2
-      |       FROM tr CROSS JOIN
-      |         UNNEST(range(1, greatest(len(t) - 1, 1) + 1)) AS i(i)
-      |       WHERE t[i.i + 1] IS NOT NULL GROUP BY 1, 2),
-      |tri AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2, t[i.i + 2] AS w3,
-      |          CAST(count(*) AS BIGINT) AS c3
-      |        FROM tr CROSS JOIN
-      |          UNNEST(range(1, greatest(len(t) - 2, 1) + 1)) AS i(i)
-      |        WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL
-      |        GROUP BY 1, 2, 3),
-      |fou AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2, t[i.i + 2] AS w3,
-      |          t[i.i + 3] AS w4, CAST(count(*) AS BIGINT) AS c4
-      |        FROM tr CROSS JOIN
-      |          UNNEST(range(1, greatest(len(t) - 3, 1) + 1)) AS i(i)
-      |        WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL
-      |          AND t[i.i + 3] IS NOT NULL
-      |        GROUP BY 1, 2, 3, 4),
-      |fiv AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2, t[i.i + 2] AS w3,
-      |          t[i.i + 3] AS w4, t[i.i + 4] AS w5,
-      |          CAST(count(*) AS BIGINT) AS c5
-      |        FROM tr CROSS JOIN
-      |          UNNEST(range(1, greatest(len(t) - 4, 1) + 1)) AS i(i)
-      |        WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL
-      |          AND t[i.i + 3] IS NOT NULL AND t[i.i + 4] IS NOT NULL
-      |        GROUP BY 1, 2, 3, 4, 5),
-      |eg AS (SELECT doc_id, t[i.i] AS w1, t[i.i + 1] AS w2,
-      |         t[i.i + 2] AS w3, t[i.i + 3] AS w4, t[i.i + 4] AS w5
-      |       FROM ev CROSS JOIN
-      |         UNNEST(range(1, greatest(len(t) - 4, 1) + 1)) AS i(i)
-      |       WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL
-      |         AND t[i.i + 3] IS NOT NULL AND t[i.i + 4] IS NOT NULL),
-      |sc AS (SELECT eg.doc_id,
-      |    CASE WHEN fiv.c5 IS NOT NULL
-      |           THEN CAST(fiv.c5 AS DOUBLE) / fab.c4
-      |         WHEN fbc.c4 IS NOT NULL
-      |           THEN 0.5 * CAST(fbc.c4 AS DOUBLE) / tb.c3
-      |         WHEN tcd.c3 IS NOT NULL
-      |           THEN 0.25 * CAST(tcd.c3 AS DOUBLE) / bc2.c2
-      |         WHEN bde.c2 IS NOT NULL
-      |           THEN 0.125 * CAST(bde.c2 AS DOUBLE) / ud.c1
-      |         ELSE 0.0625 * CAST(COALESCE(ue.c1, 0) + 1 AS DOUBLE)
-      |           / (nv.n + nv.v) END AS s,
-      |    CASE WHEN fiv.c5 IS NOT NULL THEN 5
-      |         WHEN fbc.c4 IS NOT NULL THEN 4
-      |         WHEN tcd.c3 IS NOT NULL THEN 3
-      |         WHEN bde.c2 IS NOT NULL THEN 2
-      |         ELSE 1 END AS depth
-      |  FROM eg
-      |  LEFT JOIN fiv ON fiv.w1 = eg.w1 AND fiv.w2 = eg.w2
-      |    AND fiv.w3 = eg.w3 AND fiv.w4 = eg.w4 AND fiv.w5 = eg.w5
-      |  LEFT JOIN fou fab ON fab.w1 = eg.w1 AND fab.w2 = eg.w2
-      |    AND fab.w3 = eg.w3 AND fab.w4 = eg.w4
-      |  LEFT JOIN fou fbc ON fbc.w1 = eg.w2 AND fbc.w2 = eg.w3
-      |    AND fbc.w3 = eg.w4 AND fbc.w4 = eg.w5
-      |  LEFT JOIN tri tb ON tb.w1 = eg.w2 AND tb.w2 = eg.w3
-      |    AND tb.w3 = eg.w4
-      |  LEFT JOIN tri tcd ON tcd.w1 = eg.w3 AND tcd.w2 = eg.w4
-      |    AND tcd.w3 = eg.w5
-      |  LEFT JOIN bi bc2 ON bc2.w1 = eg.w3 AND bc2.w2 = eg.w4
-      |  LEFT JOIN bi bde ON bde.w1 = eg.w4 AND bde.w2 = eg.w5
-      |  LEFT JOIN uni ud ON ud.w = eg.w4
-      |  LEFT JOIN uni ue ON ue.w = eg.w5
-      |  CROSS JOIN nv),
-      |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_5grams,
-      |    CAST(sum(CASE WHEN depth = 5 THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_5_hits,
-      |    CAST(sum(CASE WHEN depth = 4 THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_4_hits,
-      |    CAST(sum(CASE WHEN depth = 3 THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_3_hits,
-      |    CAST(sum(CASE WHEN depth = 2 THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_2_hits,
-      |    CAST(sum(CASE WHEN depth = 1 THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_1_hits,
-      |    sum(ln(s)) AS lp
-      |  FROM sc GROUP BY doc_id)""".stripMargin
-
-  /** The q_semdedup oracle: the clusterAssignCtes Lloyd chain rebuilt
-    * over the AUGMENTED corpus (originals + the gate's planted
-    * paraphrase copies — same alternating ±2^-8 jitter, same quality
-    * rule), then the TOP-2 MULTI-PROBE pair replay (rank <= 2 probe
-    * file, cell equi-join, DISTINCT pairs, 2^-20 floored cosine
-    * threshold; the output cell map stays rank 1), the q_dup_clusters
-    * recursive closure, and the quality-keeper row_number — the full
-    * ivfCentroids → pairs → dupClusters → resolveDuplicatesByQuality
-    * composition in SQL. Dims derive from len(v), never a hardcoded
-    * width.
-    */
-  private def semDedupOracle(nCells: Int, iters: Int, threshold: Double,
-                             auto: Option[(Int, Int)] = None): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    // auto = Some((minCells, targetPerCell)): the cell count is DERIVED
-    // from DuckDB's own count(*) — greatest(minCells,
-    // 2^ceil(log2(ceil(n / target)))) — replaying Similarity.autoCells
-    // (target is a power of two, so the double division is exact and
-    // ceil/log2 agree with the integer bit form)
-    val c0 = auto match {
-      case Some((minCells, target)) =>
-        s"""ncl AS MATERIALIZED (
-           |  SELECT greatest($minCells, CASE WHEN v <= 1 THEN 1
-           |      ELSE CAST(power(2, CAST(ceil(log2(CAST(v AS DOUBLE)))
-           |        AS BIGINT)) AS BIGINT) END) AS nc
-           |  FROM (SELECT CAST(ceil(count(*) / $target.0) AS BIGINT)
-           |          AS v
-           |        FROM base)),
-           |c0 AS MATERIALIZED (
-           |  SELECT cell, cvec FROM (
-           |    SELECT row_number() OVER (
-           |             ORDER BY md5(CAST(vec_id AS VARCHAR)),
-           |                      vec_id) - 1 AS cell,
-           |           v AS cvec
-           |    FROM uq)
-           |  WHERE cell < (SELECT nc FROM ncl))""".stripMargin
-      case None =>
-        s"""c0 AS MATERIALIZED (
-           |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-           |                            vec_id) - 1 AS cell,
-           |         v AS cvec
-           |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-           |  LIMIT $nCells)""".stripMargin
-    }
-    val lloyd = (1 to iters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(len(a.v))) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    s"""WITH RECURSIVE base AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 100000,
-       |    list_transform(embedding, (x, i) -> CAST(x AS DOUBLE)
-       |      + CASE WHEN (i - 1) % 2 = 0
-       |             THEN 0.00390625 ELSE -0.00390625 END)
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |qual AS MATERIALIZED (
-       |  SELECT b.vec_id,
-       |    CAST(d.n_chars
-       |      + CASE WHEN b.vec_id >= 100000 AND b.vec_id % 50 = 0 THEN 7
-       |             WHEN b.vec_id >= 100000 THEN -1 ELSE 0 END
-       |      AS BIGINT) AS quality
-       |  FROM base b JOIN documents d ON d.doc_id = b.vec_id % 100000),
-       |uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> floor(x * 1024) / 1024) AS v
-       |  FROM base),
-       |$c0,
-       |${lloyd.mkString(",\n")},
-       |prb AS MATERIALIZED (
-       |  SELECT vec_id, v, cell, rk FROM (
-       |    SELECT b.vec_id, b.v, c.cell,
-       |      row_number() OVER (PARTITION BY b.vec_id
-       |        ORDER BY ${cos("b.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM base b CROSS JOIN c$iters c) WHERE rk <= 2),
-       |inv AS MATERIALIZED (
-       |  SELECT vec_id, v, cell FROM prb WHERE rk = 1),
-       |dup AS MATERIALIZED (
-       |  SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-       |  FROM prb a JOIN prb b ON a.cell = b.cell
-       |    AND a.vec_id < b.vec_id
-       |  WHERE floor(${cos("a.v", "b.v")} * 1048576) / 1048576
-       |    >= $threshold),
-       |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-       |          UNION SELECT id_j, id_i FROM dup),
-       |reach(src, dst) AS (
-       |  SELECT DISTINCT src, src FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-       |lab AS (SELECT src AS id, min(dst) AS cluster_id
-       |        FROM reach GROUP BY src),
-       |rk AS (SELECT lab.id, row_number() OVER (
-       |         PARTITION BY lab.cluster_id
-       |         ORDER BY q.quality DESC, lab.id ASC) AS r
-       |       FROM lab JOIN qual q ON q.vec_id = lab.id),
-       |drops AS (SELECT id FROM rk WHERE r > 1)
-       |SELECT i.vec_id, i.cell, q.quality
-       |FROM inv i JOIN qual q ON q.vec_id = i.vec_id
-       |WHERE i.vec_id NOT IN (SELECT id FROM drops)
-       |ORDER BY i.vec_id""".stripMargin
-  }
-
-  /** The q_pq_topk oracle: the ivfTopKOracle candidate CTEs (same IVF
-    * Lloyd + inverted file + probe list) composed with the PQ chains —
-    * per-(vec_id, subspace) subvector rows, `pqIters` unrolled Lloyd
-    * rounds over the (subspace, code)-keyed codebook, corpus encoding,
-    * per-query ADC lookup table, Σ_m lookup scoring. Distances are
-    * spelled dot(a,a) − 2·dot(a,b) + dot(b,b) here vs Spark's
-    * fold-of-squared-diffs: both are EXACT on the 1/1024 dyadic lattice,
-    * so the spellings agree bit-for-bit (Similarity.l2sq note).
-    */
-  private def pqTopKOracle(nCells: Int, nprobe: Int, ivfIters: Int,
-                           m: Int, nCodes: Int, pqIters: Int,
-                           k: Int, refine: Int): String = {
-    val sub = 64 / m
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    def d2(a: String, b: String): String =
-      s"(list_dot_product($a, $a) - 2 * list_dot_product($a, $b) " +
-        s"+ list_dot_product($b, $b))"
-    val ivfLloyd = (1 to ivfIters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    val pqLloyd = (1 to pqIters).map { i =>
-      val p = i - 1
-      s"""pa$i AS MATERIALIZED (
-         |  SELECT vec_id, sm, sv, code FROM (
-         |    SELECT u.vec_id, u.sm, u.sv, c.code,
-         |      row_number() OVER (PARTITION BY u.vec_id, u.sm
-         |        ORDER BY ${d2("u.sv", "c.cvec")}, c.code) AS rk
-         |    FROM sq u JOIN p$p c ON c.sm = u.sm) WHERE rk = 1),
-         |p$i AS MATERIALIZED (
-         |  SELECT sm, code,
-         |         list_transform(list(mu ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.sm, a.code, d.d AS d, avg(a.sv[d.d + 1]) AS mu
-         |        FROM pa$i a CROSS JOIN UNNEST(range($sub)) AS d(d)
-         |        GROUP BY a.sm, a.code, d.d)
-         |  GROUP BY sm, code)""".stripMargin
-    }
-    s"""WITH uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |                   x -> floor(CAST(x AS DOUBLE) * 1024) / 1024) AS v
-       |  FROM embeddings),
-       |uo AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${ivfLloyd.mkString(",\n")},
-       |inv AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$ivfIters c) WHERE rk = 1),
-       |prb AS MATERIALIZED (
-       |  SELECT vec_id AS query_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$ivfIters c
-       |    WHERE u.vec_id % 100 = 0) WHERE rk <= $nprobe),
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT p.query_id, i.cand_id
-       |  FROM prb p JOIN inv i
-       |    ON i.cell = p.cell AND i.cand_id <> p.query_id),
-       |nq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> floor((CASE WHEN nm > 0
-       |      THEN x / nm ELSE x END) * 1024) / 1024) AS v
-       |  FROM (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nm
-       |        FROM uo)),
-       |sq AS MATERIALIZED (
-       |  SELECT vec_id, sm.sm AS sm,
-       |    list_slice(v, sm.sm * $sub + 1, (sm.sm + 1) * $sub) AS sv
-       |  FROM nq CROSS JOIN UNNEST(range($m)) AS sm(sm)),
-       |sc AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                       vec_id) - 1 AS code
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCodes),
-       |p0 AS MATERIALIZED (
-       |  SELECT sq.sm, sc.code, sq.sv AS cvec
-       |  FROM sq JOIN sc ON sc.vec_id = sq.vec_id),
-       |${pqLloyd.mkString(",\n")},
-       |codes AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, sm, code FROM (
-       |    SELECT u.vec_id, u.sm, c.code,
-       |      row_number() OVER (PARTITION BY u.vec_id, u.sm
-       |        ORDER BY ${d2("u.sv", "c.cvec")}, c.code) AS rk
-       |    FROM sq u JOIN p$pqIters c ON c.sm = u.sm) WHERE rk = 1),
-       |lut AS MATERIALIZED (
-       |  SELECT u.vec_id AS query_id, u.sm, c.code,
-       |    ${d2("u.sv", "c.cvec")} AS qd2
-       |  FROM sq u JOIN p$pqIters c ON c.sm = u.sm
-       |  WHERE u.vec_id % 100 = 0),
-       |scored AS (
-       |  SELECT cd.query_id, cd.cand_id, sum(l.qd2) AS approx
-       |  FROM (SELECT c.query_id, c.cand_id, k.sm, k.code
-       |        FROM cand c JOIN codes k ON k.cand_id = c.cand_id) cd
-       |  JOIN lut l ON l.query_id = cd.query_id AND l.sm = cd.sm
-       |    AND l.code = cd.code
-       |  GROUP BY 1, 2),
-       |short AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT query_id, cand_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY approx, cand_id) AS ark
-       |    FROM scored) WHERE ark <= ${k * refine}),
-       |ref AS (
-       |  SELECT s.query_id, s.cand_id, ${cos("q.v", "t.v")} AS cos
-       |  FROM short s
-       |  JOIN uo q ON q.vec_id = s.query_id
-       |  JOIN uo t ON t.vec_id = s.cand_id),
-       |rkd AS (
-       |  SELECT query_id, cand_id, cos,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos DESC, cand_id) AS rk
-       |  FROM ref)
-       |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-       |  round(cos, 6) AS cos_sim
-       |FROM rkd WHERE rk <= $k ORDER BY query_id, rk""".stripMargin
-  }
-
-  /** The q_ann_quality oracle: the pqTopKOracle training chains (IVF
-    * Lloyd + inverted file, PQ Lloyd + codes + LUT) computed ONCE, then
-    * the sweep replayed as rank filters — probe ranks kept up to
-    * max(nprobe) so "candidates at nprobe = p" is `cell_rank <= p`, one
-    * ADC sum per candidate pair, per-(query, nprobe) ADC ranks, exact
-    * cosine fetched once for the union of shortlists, per-config top-k
-    * vs the brute-force exact baseline. Every rank is a total order and
-    * every ADC sum is an exact dyadic, so the whole curve is
-    * cross-engine deterministic.
-    */
-  private def annQualityOracle(nCells: Int, nprobes: Seq[Int],
-                               refines: Seq[Int], ivfIters: Int, m: Int,
-                               nCodes: Int, pqIters: Int,
-                               k: Int): String = {
-    val sub = 64 / m
-    val nps = nprobes.distinct.sorted
-    val rfs = refines.distinct.sorted
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    def d2(a: String, b: String): String =
-      s"(list_dot_product($a, $a) - 2 * list_dot_product($a, $b) " +
-        s"+ list_dot_product($b, $b))"
-    val ivfLloyd = (1 to ivfIters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    val pqLloyd = (1 to pqIters).map { i =>
-      val p = i - 1
-      s"""pa$i AS MATERIALIZED (
-         |  SELECT vec_id, sm, sv, code FROM (
-         |    SELECT u.vec_id, u.sm, u.sv, c.code,
-         |      row_number() OVER (PARTITION BY u.vec_id, u.sm
-         |        ORDER BY ${d2("u.sv", "c.cvec")}, c.code) AS rk
-         |    FROM sq u JOIN p$p c ON c.sm = u.sm) WHERE rk = 1),
-         |p$i AS MATERIALIZED (
-         |  SELECT sm, code,
-         |         list_transform(list(mu ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.sm, a.code, d.d AS d, avg(a.sv[d.d + 1]) AS mu
-         |        FROM pa$i a CROSS JOIN UNNEST(range($sub)) AS d(d)
-         |        GROUP BY a.sm, a.code, d.d)
-         |  GROUP BY sm, code)""".stripMargin
-    }
-    s"""WITH uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |                   x -> floor(CAST(x AS DOUBLE) * 1024) / 1024) AS v
-       |  FROM embeddings),
-       |uo AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${ivfLloyd.mkString(",\n")},
-       |inv AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$ivfIters c) WHERE rk = 1),
-       |prb AS MATERIALIZED (
-       |  SELECT vec_id AS query_id, cell, rk AS cell_rank FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$ivfIters c
-       |    WHERE u.vec_id % 100 = 0) WHERE rk <= ${nps.max}),
-       |pr AS MATERIALIZED (
-       |  SELECT p.query_id, i.cand_id, p.cell_rank
-       |  FROM prb p JOIN inv i
-       |    ON i.cell = p.cell AND i.cand_id <> p.query_id),
-       |nq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> floor((CASE WHEN nm > 0
-       |      THEN x / nm ELSE x END) * 1024) / 1024) AS v
-       |  FROM (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nm
-       |        FROM uo)),
-       |sq AS MATERIALIZED (
-       |  SELECT vec_id, sm.sm AS sm,
-       |    list_slice(v, sm.sm * $sub + 1, (sm.sm + 1) * $sub) AS sv
-       |  FROM nq CROSS JOIN UNNEST(range($m)) AS sm(sm)),
-       |sc AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                       vec_id) - 1 AS code
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCodes),
-       |p0 AS MATERIALIZED (
-       |  SELECT sq.sm, sc.code, sq.sv AS cvec
-       |  FROM sq JOIN sc ON sc.vec_id = sq.vec_id),
-       |${pqLloyd.mkString(",\n")},
-       |codes AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, sm, code FROM (
-       |    SELECT u.vec_id, u.sm, c.code,
-       |      row_number() OVER (PARTITION BY u.vec_id, u.sm
-       |        ORDER BY ${d2("u.sv", "c.cvec")}, c.code) AS rk
-       |    FROM sq u JOIN p$pqIters c ON c.sm = u.sm) WHERE rk = 1),
-       |lut AS MATERIALIZED (
-       |  SELECT u.vec_id AS query_id, u.sm, c.code,
-       |    ${d2("u.sv", "c.cvec")} AS qd2
-       |  FROM sq u JOIN p$pqIters c ON c.sm = u.sm
-       |  WHERE u.vec_id % 100 = 0),
-       |scored AS MATERIALIZED (
-       |  SELECT cd.query_id, cd.cand_id,
-       |    min(cd.cell_rank) AS cell_rank, sum(l.qd2) AS adc
-       |  FROM (SELECT c.query_id, c.cand_id, c.cell_rank, x.sm, x.code
-       |        FROM pr c JOIN codes x ON x.cand_id = c.cand_id) cd
-       |  JOIN lut l ON l.query_id = cd.query_id AND l.sm = cd.sm
-       |    AND l.code = cd.code
-       |  GROUP BY 1, 2),
-       |arked AS MATERIALIZED (
-       |  SELECT query_id, cand_id, np, ark FROM (
-       |    SELECT s.query_id, s.cand_id, np.np AS np,
-       |      row_number() OVER (PARTITION BY s.query_id, np.np
-       |        ORDER BY s.adc, s.cand_id) AS ark
-       |    FROM scored s
-       |    CROSS JOIN UNNEST([${nps.mkString(", ")}]) AS np(np)
-       |    WHERE s.cell_rank <= np.np)
-       |  WHERE ark <= ${k * rfs.max}),
-       |csc AS MATERIALIZED (
-       |  SELECT n.query_id, n.cand_id, ${cos("q.v", "t.v")} AS cos
-       |  FROM (SELECT DISTINCT query_id, cand_id FROM arked) n
-       |  JOIN uo q ON q.vec_id = n.query_id
-       |  JOIN uo t ON t.vec_id = n.cand_id),
-       |topk AS MATERIALIZED (
-       |  SELECT query_id, cand_id, np, rf FROM (
-       |    SELECT a.query_id, a.cand_id, a.np, rf.rf AS rf,
-       |      row_number() OVER (PARTITION BY a.query_id, a.np, rf.rf
-       |        ORDER BY c.cos DESC, a.cand_id) AS rk
-       |    FROM arked a
-       |    CROSS JOIN UNNEST([${rfs.mkString(", ")}]) AS rf(rf)
-       |    JOIN csc c ON c.query_id = a.query_id
-       |      AND c.cand_id = a.cand_id
-       |    WHERE a.ark <= $k * rf.rf)
-       |  WHERE rk <= $k),
-       |exact AS MATERIALIZED (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${cos("q.v", "c.v")} DESC, c.vec_id) AS rk
-       |    FROM uo c CROSS JOIN (SELECT * FROM uo WHERE vec_id % 100 = 0) q
-       |    WHERE c.vec_id <> q.vec_id) WHERE rk <= $k),
-       |rep AS (
-       |  SELECT t.np, t.rf, count(*) AS n_returned,
-       |    CAST(sum(CASE WHEN e.query_id IS NOT NULL THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS n_hits
-       |  FROM topk t LEFT JOIN exact e
-       |    ON e.query_id = t.query_id AND e.cand_id = t.cand_id
-       |  GROUP BY 1, 2),
-       |ex AS (SELECT count(*) AS n_exact,
-       |         count(DISTINCT query_id) AS n_queries FROM exact)
-       |SELECT CAST(np AS INTEGER) AS nprobe, CAST(rf AS INTEGER) AS refine,
-       |  CAST($k AS INTEGER) AS k, n_queries, n_exact, n_returned, n_hits,
-       |  round(CAST(n_hits AS DOUBLE) / n_exact, 4) AS recall
-       |FROM rep CROSS JOIN ex
-       |ORDER BY nprobe, refine""".stripMargin
-  }
-
-  /** The q_mmr_select oracle: the q_model_score relevance CTE (rounded
-    * sigmoid over the md5 demo weights), then k unrolled greedy rounds —
-    * each excludes the selected set, takes the max cosine to any
-    * selected vector, and argmaxes 0.5·rel − 0.5·maxSim under the
-    * (score DESC, vec_id) total order. Every score input is
-    * deterministic (rel rounded to 6; cosines are the same sequential
-    * dot/norm spelling both engines), so the greedy path is identical.
-    */
-  private def mmrSelectOracle(k: Int): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    val rounds = (2 to k).map { r =>
-      val p = r - 1
-      s"""m$r AS (SELECT c.vec_id, max(${cos("c.v", "s.v")}) AS ms
-         |  FROM rel c, sel$p sl JOIN rel s ON s.vec_id = sl.vec_id
-         |  WHERE c.vec_id NOT IN (SELECT vec_id FROM sel$p)
-         |  GROUP BY c.vec_id),
-         |p$r AS MATERIALIZED (SELECT m.vec_id, r.rel,
-         |    0.5 * r.rel - 0.5 * m.ms AS score
-         |  FROM m$r m JOIN rel r ON r.vec_id = m.vec_id
-         |  ORDER BY score DESC, m.vec_id LIMIT 1),
-         |sel$r AS MATERIALIZED (SELECT vec_id FROM sel$p
-         |  UNION ALL SELECT vec_id FROM p$r)""".stripMargin
-    }
-    val outs = (1 to k).map(r =>
-      s"SELECT $r AS rank, vec_id, rel AS relevance, " +
-        s"round(score, 6) AS mmr_score FROM p$r")
-    s"""WITH u AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |w AS (SELECT list_transform(range(64), d ->
-       |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-       |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-       |rel AS MATERIALIZED (
-       |  SELECT vec_id, v,
-       |    round(1.0 / (1.0 + exp(-(list_dot_product(v, wv) + 0.1))),
-       |      6) AS rel
-       |  FROM u CROSS JOIN w),
-       |p1 AS MATERIALIZED (
-       |  SELECT vec_id, rel, 0.5 * rel AS score FROM rel
-       |  ORDER BY score DESC, vec_id LIMIT 1),
-       |sel1 AS MATERIALIZED (SELECT vec_id FROM p1),
-       |${rounds.mkString(",\n")}
-       |${outs.mkString("\nUNION ALL\n")}
-       |ORDER BY rank""".stripMargin
-  }
-
-  /** The q_holt_winters_auto oracle: the SAME recursive-CTE recursion as
-    * q_holt_winters, but the working table also carries the candidate id
-    * and its (α, β, γ) columns plus an accumulating one-step-ahead SSE —
-    * all 12 grid candidates recurse simultaneously, then a per-key
-    * (sse, cand) argmin keeps the winner. The VALUES list is generated
-    * from the same for-comprehension as `Windows.holtWintersAuto`'s
-    * default grid, so the two can never drift.
-    */
-  private def holtWintersAutoOracle(period: Int): String = {
-    val grid = (for (a <- Seq(0.25, 0.5, 0.75); b <- Seq(0.125, 0.25);
-                     g <- Seq(0.25, 0.5)) yield (a, b, g)).zipWithIndex
-    val values = grid.map { case ((a, b, g), i) =>
-      s"($i, CAST($a AS DOUBLE), CAST($b AS DOUBLE), CAST($g AS DOUBLE))"
-    }.mkString(",\n        ")
-    val zeros = "[" + Seq.fill(period)("CAST(0.0 AS DOUBLE)")
-      .mkString(", ") + "]"
-    s"""WITH RECURSIVE d AS (
-       |  SELECT event_type AS k, CAST(ts AS DATE) AS day,
-       |    round(sum(value), 2) AS v
-       |  FROM events GROUP BY 1, 2),
-       |s AS (SELECT k, day, v,
-       |        row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-       |      FROM d),
-       |c(cand, al, be, ga) AS (VALUES $values),
-       |e AS (
-       |  SELECT c.cand, c.al, c.be, c.ga, s.k, s.day, s.rn,
-       |    CAST(s.v AS DOUBLE) AS l, CAST(0.0 AS DOUBLE) AS b,
-       |    $zeros AS sl, CAST(0.0 AS DOUBLE) AS sse
-       |  FROM s CROSS JOIN c WHERE s.rn = 1
-       |  UNION ALL
-       |  SELECT e.cand, e.al, e.be, e.ga, s.k, s.day, s.rn,
-       |    e.al * (s.v - e.sl[1]) + (1.0 - e.al) * (e.l + e.b),
-       |    e.be * ((e.al * (s.v - e.sl[1]) + (1.0 - e.al) * (e.l + e.b))
-       |            - e.l) + (1.0 - e.be) * e.b,
-       |    list_concat(e.sl[2:],
-       |      [e.ga * (s.v - e.l - e.b) + (1.0 - e.ga) * e.sl[1]]),
-       |    e.sse + (s.v - (e.l + e.b + e.sl[1]))
-       |          * (s.v - (e.l + e.b + e.sl[1]))
-       |  FROM s JOIN e ON s.k = e.k AND s.rn = e.rn + 1),
-       |fin AS (
-       |  SELECT e.* FROM e
-       |  JOIN (SELECT k, max(rn) AS mx FROM s GROUP BY 1) m
-       |    ON m.k = e.k AND e.rn = m.mx),
-       |w AS (SELECT *, row_number() OVER (PARTITION BY k
-       |                 ORDER BY sse, cand) AS rk
-       |      FROM fin)
-       |SELECT k AS event_type, day AS last_ord, al AS alpha, be AS beta,
-       |  ga AS gamma, round(sse, 4) AS sse,
-       |  round(l, 6) AS level, round(b, 6) AS trend,
-       |  round(l + 1 * b + sl[1], 6) AS f1,
-       |  round(l + 2 * b + sl[2], 6) AS f2,
-       |  round(l + 3 * b + sl[3], 6) AS f3
-       |FROM w WHERE rk = 1 ORDER BY event_type""".stripMargin
-  }
-
-  /** The q_zorder oracle's Morton interleave, generated term-by-term so
-    * the SQL is the same bit arithmetic Layout.mortonKey folds. */
-  private def mortonSql(x: String, y: String, bits: Int): String =
-    (0 until bits).map(i =>
-      s"((($x >> $i) & 1) << ${2 * i}) + " +
-        s"((($y >> $i) & 1) << ${2 * i + 1})").mkString(" + ")
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** The shared CCNet flag CTE prefix (the 5-gram LM chain + the
-    * classifier-2 training chain + the eval-split langId chain +
-    * exact-thirds threshold + per-doc stage flags + md5 keepers +
-    * the keeper-joined f2 frame) behind the q_ccnet_pipeline and
-    * q_pipeline_mix oracles — ONE text so the funnel gate and the
-    * capstone gate can never drift apart.
-    */
-  private def ccnetFlagCtes: String = lm5gramChainSql + ",\n" +
-    classifier2TrainCtes(4096, 4) + ",\n" +
-    s"""evd AS (SELECT doc_id, source, text FROM documents
-        |        WHERE doc_id % 7 = 0),
-        |${langScoreCtes("evd", "doc_id")},
-        |ppl AS (SELECT ev.doc_id,
-        |    round(exp(-(pd.lp / pd.n_5grams)), 6) AS ppl
-        |  FROM ev LEFT JOIN pd USING (doc_id)),
-        |nnr AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ppl
-        |        WHERE ppl IS NOT NULL),
-        |cume AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM (SELECT ppl AS v, CAST(count(*) AS BIGINT) AS c
-        |        FROM ppl WHERE ppl IS NOT NULL GROUP BY 1)),
-        |thr AS (SELECT
-        |    min(CASE WHEN cum * 3 >= nnr.n * 2 THEN v END) AS t2
-        |  FROM cume CROSS JOIN nnr),
-        |evc AS (SELECT doc_id AS id, source, text FROM evd),
-        |${classifier2ScoreCtes("evc", 4096)},
-        |flags AS (SELECT evd.doc_id,
-        |    md5(COALESCE(evd.text, '')) AS dig,
-        |    CAST(len(string_split(evd.text, ' ')) AS BIGINT) AS toks,
-        |    (lpr.pred_lang = 'en') AS p1,
-        |    (ppl.ppl IS NOT NULL AND ppl.ppl <= thr.t2) AS p2,
-        |    COALESCE(scored.score > 0.5, FALSE) AS p3
-        |  FROM evd
-        |  JOIN lpr ON lpr.doc_id = evd.doc_id
-        |  LEFT JOIN ppl ON ppl.doc_id = evd.doc_id
-        |  LEFT JOIN scored ON scored.id = evd.doc_id
-        |  CROSS JOIN thr),
-        |keepers AS (SELECT min(doc_id) AS kid FROM flags
-        |            WHERE p1 AND p2 AND p3 GROUP BY dig),
-        |f2 AS (SELECT flags.*, (keepers.kid IS NOT NULL) AS kp
-        |  FROM flags LEFT JOIN keepers ON keepers.kid = flags.doc_id)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q_zorder" -> s"""WITH k AS (
-      |  SELECT l_partkey AS x, l_suppkey AS y,
-      |    CAST(${mortonSql("l_partkey", "l_suppkey", 16)} AS DOUBLE) AS z
-      |  FROM lineitem
-      |  WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL),
-      |e AS (SELECT quantile_cont(z,
-      |        [${(1 until 16).map(_.toDouble / 16).mkString(", ")}]) AS q
-      |      FROM k),
-      |b AS (SELECT CAST(1 + ${(1 to 15).map(i =>
-             s"(CASE WHEN z >= q[$i] THEN 1 ELSE 0 END)")
-             .mkString(" + ")} AS INTEGER) AS bucket, x, y
-      |      FROM k CROSS JOIN e)
-      |SELECT bucket, CAST(count(*) AS BIGINT) AS n_rows,
-      |  min(x) AS x_min, max(x) AS x_max,
-      |  min(y) AS y_min, max(y) AS y_max
-      |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q_funnel" ->
-      """SELECT n_name AS nation,
-        |  count(DISTINCT c_custkey) AS n_customers,
-        |  count(DISTINCT o_orderkey) AS n_orders,
-        |  count(l_orderkey) AS n_lineitems,
-        |  CAST(sum(CASE WHEN o_orderstatus='F' THEN 1 ELSE 0 END) AS BIGINT) AS n_fulfilled
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |LEFT JOIN orders ON c_custkey = o_custkey
-        |LEFT JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY n_name ORDER BY nation""".stripMargin,
-    "q_funnel_filtered" ->
-      """SELECT n_name AS nation,
-        |  count(DISTINCT c_custkey) AS n_customers,
-        |  count(DISTINCT o_orderkey) AS n_orders,
-        |  count(l_orderkey) AS n_lineitems,
-        |  CAST(sum(CASE WHEN o_orderstatus='F' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_fulfilled
-        |FROM customer
-        |JOIN (SELECT * FROM nation
-        |      WHERE n_name IN ('NATION_1','NATION_2','NATION_3')) n
-        |  ON c_nationkey = n_nationkey
-        |LEFT JOIN (SELECT * FROM orders
-        |           WHERE o_orderdate >= '1996-01-01'
-        |             AND o_orderdate <= '1996-12-31') o
-        |  ON c_custkey = o_custkey
-        |LEFT JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY n_name ORDER BY nation""".stripMargin,
-    "q_proj_filter" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
-        |FROM orders
-        |WHERE o_orderstatus = 'O'
-        |  AND o_orderdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_inlist_threshold" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity
-        |FROM lineitem
-        |WHERE l_returnflag IN ('A','R') AND l_quantity >= 30
-        |ORDER BY l_orderkey, l_linenumber, l_returnflag, l_quantity""".stripMargin,
-    "q_multi_join_agg" ->
-      """SELECT r_name AS region, n_name AS nation,
-        |  count(*) AS n_orders,
-        |  round(sum(o_totalprice), 2) AS total_revenue
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY region, nation""".stripMargin,
-    "q_left_join_filter" ->
-      """SELECT o_orderpriority AS priority, count(*) AS n_returned
-        |FROM orders
-        |LEFT JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY o_orderpriority ORDER BY priority""".stripMargin,
-    "q_left_funnel_status" ->
-      """SELECT CASE WHEN l_orderkey IS NOT NULL THEN 'Shipped'
-        |            ELSE 'Order Only' END AS stage,
-        |  count(DISTINCT o_orderkey) AS n_orders
-        |FROM orders
-        |LEFT JOIN (SELECT DISTINCT l_orderkey FROM lineitem) li
-        |  ON o_orderkey = l_orderkey
-        |GROUP BY stage ORDER BY stage""".stripMargin,
-    "q_anti_join_new" ->
-      """SELECT event_id, ts, user_id, event_type, value
-        |FROM events e
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM events g
-        |  WHERE g.event_id % 2 = 0 AND g.user_id = e.user_id
-        |    AND g.event_type = e.event_type AND g.value = e.value)
-        |ORDER BY event_id""".stripMargin,
-    "q_cond_rates" ->
-      """SELECT event_type,
-        |  count(*) AS n_events,
-        |  CAST(sum(CASE WHEN value >= 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-        |  round(sum(CASE WHEN value >= 10 THEN 1 ELSE 0 END) * 100.0
-        |        / count(*), 2) AS high_rate_pct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_distinct_durations" ->
-      """SELECT o_orderstatus AS status,
-        |  count(DISTINCT o_orderkey) AS n_orders,
-        |  count(DISTINCT l_partkey) AS n_parts,
-        |  round(avg(epoch(l_shipdate) - epoch(o_orderdate)), 2) AS avg_ship_delay_sec
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderstatus ORDER BY status""".stripMargin,
-    "q_describe" ->
-      """SELECT count(l_extendedprice) AS n,
-        |  round(avg(l_extendedprice), 6) AS mean,
-        |  round(stddev_samp(l_extendedprice), 6) AS std,
-        |  round(min(l_extendedprice), 6) AS min,
-        |  round(quantile_cont(l_extendedprice, 0.25), 6) AS q1,
-        |  round(quantile_cont(l_extendedprice, 0.5), 6) AS median,
-        |  round(quantile_cont(l_extendedprice, 0.75), 6) AS q3,
-        |  round(max(l_extendedprice), 6) AS max
-        |FROM lineitem""".stripMargin,
-    "q_corr_matrix" ->
-      """SELECT
-        |  round(corr(l_quantity, l_extendedprice), 6) AS corr_l_quantity_l_extendedprice,
-        |  round(corr(l_quantity, l_discount), 6) AS corr_l_quantity_l_discount,
-        |  round(corr(l_quantity, l_tax), 6) AS corr_l_quantity_l_tax,
-        |  round(corr(l_extendedprice, l_discount), 6) AS corr_l_extendedprice_l_discount,
-        |  round(corr(l_extendedprice, l_tax), 6) AS corr_l_extendedprice_l_tax,
-        |  round(corr(l_discount, l_tax), 6) AS corr_l_discount_l_tax
-        |FROM lineitem""".stripMargin,
-    "q_null_counts" ->
-      """SELECT
-        |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_quantity,
-        |  CAST(sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_extendedprice,
-        |  CAST(sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_discount,
-        |  CAST(sum(CASE WHEN l_tax IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_tax
-        |FROM lineitem""".stripMargin,
-    "q_percentile_extremes" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice >= (SELECT quantile_cont(o_totalprice, 0.95) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_group_derived_date" ->
-      """SELECT o_orderpriority AS priority,
-        |  CAST(o_orderdate AS DATE) AS order_day,
-        |  count(*) AS n_orders
-        |FROM orders GROUP BY 1, 2 ORDER BY priority, order_day""".stripMargin,
-    "q_domain_summary" ->
-      """SELECT o_orderstatus AS status,
-        |  min(o_orderdate) AS first_order,
-        |  max(o_orderdate) AS last_order,
-        |  count(DISTINCT o_orderpriority) AS n_priorities
-        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin,
-    "q_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""".stripMargin,
-    "q_log_tail" ->
-      """SELECT event_id, ts, user_id, value FROM events
-        |WHERE event_type = 'error'
-        |ORDER BY ts DESC, event_id ASC LIMIT 1000""".stripMargin,
-    "q_dedup_first" ->
-      """SELECT e.event_id, e.user_id, e.event_type, e.value
-        |FROM events e
-        |JOIN (SELECT user_id, event_type, min(event_id) AS event_id
-        |      FROM events GROUP BY user_id, event_type) f
-        |  ON e.user_id = f.user_id AND e.event_type = f.event_type
-        |     AND e.event_id = f.event_id
-        |ORDER BY e.event_id""".stripMargin,
-    "q_window_ranks" ->
-      """SELECT o_orderkey,
-        |  round(percent_rank() OVER w, 6) AS pr,
-        |  round(cume_dist() OVER w, 6) AS cd,
-        |  ntile(4) OVER w AS quartile
-        |FROM orders
-        |WINDOW w AS (PARTITION BY date_trunc('month', o_orderdate)
-        |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_group_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
-        |FROM orders QUALIFY rk <= 3
-        |ORDER BY o_custkey, rk""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(least(greatest(floor(value / 25.0), 0), 19) AS BIGINT)
-        |         AS bin,
-        |       count(*) AS n, round(sum(value), 6) AS sum_value
-        |FROM events WHERE value IS NOT NULL
-        |GROUP BY bin ORDER BY bin""".stripMargin,
-    // RFM replay: same per-customer rollup, same 2^-4 quantization, and
-    // quantile_cont over the quantized rows (identical multiset to the
-    // Spark weighted-histogram percentile), same >= edge comparisons
-    // binned Lorenz/Gini replay: dyadic 2^11 bin floors, exact rank-sum
-    // identity with ties, PINNED bin-order folds, whole-customer top-k
-    "q_gini" ->
-      """WITH per AS (SELECT o_custkey,
-        |    CAST(round(sum(o_totalprice), 2) AS DOUBLE) AS r
-        |  FROM orders GROUP BY 1),
-        |h AS (SELECT floor(r / 2048.0) * 2048.0 AS v,
-        |    CAST(count(*) AS BIGINT) AS cnt FROM per GROUP BY 1),
-        |c1 AS (SELECT v, cnt,
-        |    CAST(sum(cnt) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS c,
-        |    CAST(sum(cnt) OVER (ORDER BY v DESC ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS d,
-        |    CAST(sum(cnt) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS BIGINT) AS n,
-        |    sum(v * cnt) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS tot
-        |  FROM h),
-        |c2 AS (SELECT *,
-        |    sum(v * ((c - cnt) * cnt + cnt * (cnt + 1) / 2.0)) OVER (
-        |      ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-        |      FOLLOWING) AS rs,
-        |    sum(v * (least(d, floor(n * CAST(0.01 AS DOUBLE)))
-        |      - least(d - cnt, floor(n * CAST(0.01 AS DOUBLE))))) OVER (
-        |      ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-        |      FOLLOWING) AS t1,
-        |    sum(v * (least(d, floor(n * CAST(0.1 AS DOUBLE)))
-        |      - least(d - cnt, floor(n * CAST(0.1 AS DOUBLE))))) OVER (
-        |      ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-        |      FOLLOWING) AS t10
-        |  FROM c1)
-        |SELECT n AS n_customers,
-        |  count(*) OVER () AS n_bins,
-        |  round(tot, 2) AS total_rev,
-        |  round(2.0 * rs / (n * tot)
-        |    - (n + CAST(1.0 AS DOUBLE)) / n, 6) AS gini,
-        |  round(t1 / tot, 6) AS top1_share,
-        |  round(t10 / tot, 6) AS top10_share
-        |FROM c2 LIMIT 1""".stripMargin,
-    "q_rfm" ->
-      """WITH hz AS (SELECT max(o_orderdate) AS h FROM orders),
-        |per AS (SELECT o_custkey AS cust,
-        |    floor(CAST(date_diff('day', CAST(max(o_orderdate) AS DATE),
-        |      CAST(any_value(hz.h) AS DATE)) AS DOUBLE) * 16) / 16
-        |      AS rec,
-        |    floor(CAST(count(*) AS DOUBLE) * 16) / 16 AS freq,
-        |    floor(CAST(round(sum(o_totalprice), 2) AS DOUBLE) * 16) / 16
-        |      AS mon
-        |  FROM orders CROSS JOIN hz GROUP BY o_custkey),
-        |er AS (SELECT quantile_cont(rec, [0.2, 0.4, 0.6, 0.8]) AS e
-        |       FROM per),
-        |ef AS (SELECT quantile_cont(freq, [0.2, 0.4, 0.6, 0.8]) AS e
-        |       FROM per),
-        |em AS (SELECT quantile_cont(mon, [0.2, 0.4, 0.6, 0.8]) AS e
-        |       FROM per),
-        |s AS (SELECT mon,
-        |    6 - (1 + CASE WHEN rec >= er.e[1] THEN 1 ELSE 0 END
-        |           + CASE WHEN rec >= er.e[2] THEN 1 ELSE 0 END
-        |           + CASE WHEN rec >= er.e[3] THEN 1 ELSE 0 END
-        |           + CASE WHEN rec >= er.e[4] THEN 1 ELSE 0 END)
-        |      AS r_score,
-        |    1 + CASE WHEN freq >= ef.e[1] THEN 1 ELSE 0 END
-        |      + CASE WHEN freq >= ef.e[2] THEN 1 ELSE 0 END
-        |      + CASE WHEN freq >= ef.e[3] THEN 1 ELSE 0 END
-        |      + CASE WHEN freq >= ef.e[4] THEN 1 ELSE 0 END AS f_score,
-        |    1 + CASE WHEN mon >= em.e[1] THEN 1 ELSE 0 END
-        |      + CASE WHEN mon >= em.e[2] THEN 1 ELSE 0 END
-        |      + CASE WHEN mon >= em.e[3] THEN 1 ELSE 0 END
-        |      + CASE WHEN mon >= em.e[4] THEN 1 ELSE 0 END AS m_score
-        |  FROM per CROSS JOIN er CROSS JOIN ef CROSS JOIN em)
-        |SELECT r_score, f_score, m_score,
-        |  CAST(count(*) AS BIGINT) AS n_customers,
-        |  round(avg(mon), 6) AS avg_monetary
-        |FROM s GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    // cohort LTV replay: month-truncated cohorts, per-(cohort, age)
-    // revenue rounded BEFORE the cumulative window, same cohort sizes
-    "q_cohort_ltv" ->
-      """WITH c AS (SELECT o_custkey AS cust,
-        |        CAST(date_trunc('month', min(o_orderdate)) AS DATE)
-        |          AS cohort
-        |      FROM orders GROUP BY 1),
-        |sz AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n_customers
-        |       FROM c GROUP BY 1),
-        |a AS (SELECT c.cohort,
-        |        CAST(date_diff('month', c.cohort,
-        |          CAST(date_trunc('month', o.o_orderdate) AS DATE))
-        |          AS INTEGER) AS age_months,
-        |        round(sum(o.o_totalprice), 2) AS revenue
-        |      FROM orders o JOIN c ON c.cust = o.o_custkey
-        |      GROUP BY 1, 2),
-        |w AS (SELECT cohort, age_months, revenue,
-        |        sum(revenue) OVER (PARTITION BY cohort
-        |          ORDER BY age_months ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM a)
-        |SELECT w.cohort, w.age_months, sz.n_customers, w.revenue,
-        |  round(w.cum / CAST(sz.n_customers AS DOUBLE), 6)
-        |    AS ltv_per_customer
-        |FROM w JOIN sz ON sz.cohort = w.cohort
-        |ORDER BY w.cohort, w.age_months""".stripMargin,
-    // purchase-gap histogram replay: same lag discipline (date, id), day
-    // gaps binned at 30-day width with the valueHistogram clamp
-    "q_order_gaps" ->
-      """WITH g AS (SELECT o_custkey AS cust, o_orderdate AS d,
-        |        lag(o_orderdate) OVER (PARTITION BY o_custkey
-        |          ORDER BY o_orderdate, o_orderkey) AS pv
-        |      FROM orders),
-        |v AS (SELECT CAST(date_diff('day', CAST(pv AS DATE),
-        |        CAST(d AS DATE)) AS DOUBLE) AS value
-        |      FROM g WHERE pv IS NOT NULL)
-        |SELECT CAST(least(greatest(floor(value / 30.0), 0), 11)
-        |    AS BIGINT) AS bin,
-        |  count(*) AS n, round(sum(value), 6) AS sum_value
-        |FROM v GROUP BY bin ORDER BY bin""".stripMargin,
-    "q_running_total" ->
-      """SELECT event_id, user_id, value,
-        |  round(sum(value) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-        |    AS running
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_twa" ->
-      """WITH d AS (SELECT user_id, value,
-        |    epoch_us(lead(ts) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id)) - epoch_us(ts) AS dt
-        |  FROM events)
-        |SELECT user_id, count(*) AS n_intervals,
-        |  round(sum(value * dt) / sum(dt), 6) AS twa
-        |FROM d WHERE dt IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_anomalies" ->
-      """WITH r AS (SELECT event_id, user_id, value,
-        |    avg(value) OVER w AS m, stddev_samp(value) OVER w AS s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING))
-        |SELECT event_id, user_id, value,
-        |  round(m, 6) AS roll_mean, round(s, 6) AS roll_std
-        |FROM r WHERE s IS NOT NULL AND abs(value - m) > 3.0 * s
-        |ORDER BY event_id""".stripMargin,
-    "q_mode" ->
-      """WITH c AS (SELECT user_id, event_type, count(*) AS n
-        |           FROM events WHERE event_type IS NOT NULL
-        |           GROUP BY 1, 2),
-        |r AS (SELECT user_id, event_type, n, row_number() OVER (
-        |        PARTITION BY user_id ORDER BY n DESC, event_type ASC)
-        |        AS rk
-        |      FROM c)
-        |SELECT user_id, event_type AS mode_label, n AS mode_n
-        |FROM r WHERE rk = 1 ORDER BY user_id""".stripMargin,
-    // TextRank replay: window-2 co-occurrence pairs (stopwords out),
-    // mirrored multiplicity-weighted edges, the q_pagerank round
-    // pattern over word keys
-    "q_textrank" ->
-      """WITH dt AS (SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z]+') AS arr
-        |  FROM documents),
-        |t AS MATERIALIZED (SELECT dt.doc_id AS id, g.i AS pos,
-        |    arr[g.i] AS w
-        |  FROM dt CROSS JOIN UNNEST(range(1, len(arr) + 1)) AS g(i)
-        |  WHERE arr[g.i] NOT IN
-        |    ('the', 'a', 'of', 'and', 'is', 'in', 'to')),
-        |co AS MATERIALIZED (SELECT a.w AS src, b.w AS dst
-        |  FROM t a JOIN t b ON b.id = a.id
-        |    AND b.pos - a.pos BETWEEN 1 AND 2 AND a.w <> b.w),
-        |e AS MATERIALIZED (SELECT src, dst FROM co
-        |  UNION ALL SELECT dst, src FROM co),
-        |n AS (SELECT DISTINCT src AS word FROM e),
-        |od AS (SELECT src, CAST(count(*) AS DOUBLE) AS od
-        |       FROM e GROUP BY 1),
-        |r0 AS (SELECT word, CAST(1.0 AS DOUBLE) AS rank FROM n),
-        |r1 AS (SELECT n.word, round((1.0 - CAST(0.85 AS DOUBLE)) +
-        |         CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r0.rank / od.od) AS m
-        |          FROM e JOIN r0 ON r0.word = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.word),
-        |r2 AS (SELECT n.word, round((1.0 - CAST(0.85 AS DOUBLE)) +
-        |         CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r1.rank / od.od) AS m
-        |          FROM e JOIN r1 ON r1.word = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.word),
-        |r3 AS (SELECT n.word, round((1.0 - CAST(0.85 AS DOUBLE)) +
-        |         CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r2.rank / od.od) AS m
-        |          FROM e JOIN r2 ON r2.word = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.word)
-        |SELECT r3.word, CAST(od.od AS BIGINT) AS degree,
-        |  round(r3.rank, 6) AS rank
-        |FROM r3 JOIN od ON od.src = r3.word
-        |ORDER BY rank DESC, word LIMIT 30""".stripMargin,
-    "q_collocations" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
-        |bg AS (SELECT t[i] AS w1, t[i+1] AS w2
-        |       FROM toks, UNNEST(range(1, greatest(len(t), 2))) AS u(i)
-        |       WHERE t[i+1] IS NOT NULL),
-        |c2 AS (SELECT w1, w2, count(*) AS n FROM bg GROUP BY 1, 2),
-        |n1 AS (SELECT w1, count(*) AS n1 FROM bg GROUP BY 1),
-        |n2 AS (SELECT w2, count(*) AS n2 FROM bg GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS DOUBLE) AS nn FROM c2)
-        |SELECT c2.w1, c2.w2, c2.n,
-        |  round(ln(CAST(c2.n AS DOUBLE) * nn
-        |           / (CAST(n1.n1 AS DOUBLE) * CAST(n2.n2 AS DOUBLE))), 6)
-        |    AS pmi
-        |FROM c2 JOIN n1 USING (w1) JOIN n2 USING (w2) CROSS JOIN tot
-        |WHERE c2.n >= 5
-        |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin,
-    "q_label_entropy" ->
-      """WITH c AS (SELECT source, lang, count(*) AS c
-        |           FROM documents GROUP BY 1, 2),
-        |t AS (SELECT source, CAST(sum(c) AS BIGINT) AS n FROM c GROUP BY 1)
-        |SELECT c.source, count(*) AS n_labels, max(t.n) AS n_rows,
-        |  round(0.0 - sum((CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))
-        |          * ln(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))), 6)
-        |    AS entropy
-        |FROM c JOIN t USING (source)
-        |GROUP BY c.source ORDER BY c.source""".stripMargin,
-    "q_unpivot" ->
-      """WITH a AS (SELECT l_returnflag,
-        |    round(avg(l_discount), 6) AS avg_disc,
-        |    round(sum(l_extendedprice), 6) AS sum_price,
-        |    round(sum(l_quantity), 6) AS sum_qty
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, 'avg_disc' AS metric, avg_disc AS value FROM a
-        |UNION ALL
-        |SELECT l_returnflag, 'sum_price', sum_price FROM a
-        |UNION ALL
-        |SELECT l_returnflag, 'sum_qty', sum_qty FROM a
-        |ORDER BY l_returnflag, metric""".stripMargin,
-    // --- temporal join oracles (independent inequality-join spellings:
-    //     the engine uses union-window / bucketed equi-join plans) ---
-    "q_asof_join" ->
-      """WITH m AS (
-        |  SELECT e.event_id, e.user_id, e.ts,
-        |         o.o_orderkey, o.o_totalprice,
-        |         row_number() OVER (PARTITION BY e.event_id
-        |           ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-        |  FROM events e LEFT JOIN orders o
-        |    ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
-        |SELECT event_id, user_id, ts, o_orderkey AS asof_orderkey,
-        |       round(o_totalprice, 6) AS asof_total
-        |FROM m WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    "q_band_join" ->
-      """SELECT a.event_id,
-        |  count(b.event_id) AS n_next,
-        |  round(sum(b.value), 6) AS sum_next
-        |FROM events a LEFT JOIN events b
-        |  ON b.user_id = a.user_id AND b.ts > a.ts
-        | AND b.ts <= a.ts + INTERVAL 1 DAY
-        |GROUP BY a.event_id ORDER BY a.event_id""".stripMargin,
-    "q_ohlc_resample" ->
-      """WITH r AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day, value,
-        |    row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |      ORDER BY ts, event_id) AS rna,
-        |    row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |      ORDER BY ts DESC, event_id DESC) AS rnd
-        |  FROM events)
-        |SELECT user_id, day,
-        |  max(CASE WHEN rna = 1 THEN value END) AS open,
-        |  round(max(value), 6) AS high,
-        |  round(min(value), 6) AS low,
-        |  max(CASE WHEN rnd = 1 THEN value END) AS close,
-        |  count(*) AS n,
-        |  round(sum(value), 6) AS sum_value
-        |FROM r GROUP BY user_id, day
-        |ORDER BY user_id, day""".stripMargin,
-    "q_retention" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |c AS (SELECT user_id, min(day) AS cohort FROM ud GROUP BY user_id)
-        |SELECT c.cohort,
-        |       datediff('day', c.cohort, ud.day) AS offset_days,
-        |       count(*) AS n_users
-        |FROM ud JOIN c ON ud.user_id = c.user_id
-        |GROUP BY c.cohort, offset_days
-        |ORDER BY c.cohort, offset_days""".stripMargin,
-    "q_seq_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-        |            WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t
-        |       FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t
-        |         AND e.ts <= s1.t + INTERVAL 24 HOUR GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t
-        |       FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t
-        |         AND e.ts <= s2.t + INTERVAL 24 HOUR GROUP BY e.user_id)
-        |SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
-        |       (SELECT count(*) FROM s1) AS n_users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-        |ORDER BY step""".stripMargin,
-    // --- window / time-series oracles ---
-    "q_lag_features" ->
-      """SELECT event_id, user_id, value,
-        |  lag(value, 1) OVER w AS lag1,
-        |  lag(value, 2) OVER w AS lag2,
-        |  value - lag(value, 1) OVER w AS diff1
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
-    "q_rolling" ->
-      """SELECT event_id, user_id, value,
-        |  round(avg(value) OVER f, 6) AS roll_mean,
-        |  round(stddev_samp(value) OVER f, 6) AS roll_std,
-        |  min(value) OVER f AS roll_min,
-        |  max(value) OVER f AS roll_max
-        |FROM events
-        |WINDOW f AS (PARTITION BY user_id ORDER BY ts, event_id
-        |             ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-        |ORDER BY event_id""".stripMargin,
-    "q_chrono_split" ->
-      """WITH t AS (
-        |  SELECT o_orderdate,
-        |    row_number() OVER (ORDER BY o_orderdate, o_orderkey) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM orders)
-        |SELECT CASE WHEN rn <= floor(n * 0.8) THEN 'train' ELSE 'test' END
-        |         AS split,
-        |  count(*) AS n_rows,
-        |  min(o_orderdate) AS first_date,
-        |  max(o_orderdate) AS last_date
-        |FROM t GROUP BY split ORDER BY split""".stripMargin,
-    "q_interpolate" ->
-      """WITH m AS (
-        |  SELECT event_id, user_id, ts,
-        |    CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS vm
-        |  FROM events),
-        |b AS (
-        |  SELECT event_id, user_id, vm,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS i
-        |  FROM m),
-        |w AS (
-        |  SELECT event_id, user_id, vm, i,
-        |    last_value(vm IGNORE NULLS) OVER bw AS pv,
-        |    last_value(CASE WHEN vm IS NOT NULL THEN i END IGNORE NULLS)
-        |      OVER bw AS pi,
-        |    first_value(vm IGNORE NULLS) OVER fw AS nv,
-        |    first_value(CASE WHEN vm IS NOT NULL THEN i END IGNORE NULLS)
-        |      OVER fw AS ni
-        |  FROM b
-        |  WINDOW
-        |    bw AS (PARTITION BY user_id ORDER BY i
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |    fw AS (PARTITION BY user_id ORDER BY i
-        |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_id, user_id, vm,
-        |  round(CASE WHEN vm IS NOT NULL THEN vm
-        |             WHEN pv IS NULL THEN NULL
-        |             WHEN nv IS NULL THEN pv
-        |             ELSE pv + (nv - pv) *
-        |               (CAST(i - pi AS DOUBLE) / CAST(ni - pi AS DOUBLE))
-        |        END, 6) AS vm_interp
-        |FROM w ORDER BY event_id""".stripMargin,
-    "q_seasonal_decompose" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, avg(value) AS observed
-        |  FROM events GROUP BY 1),
-        |t AS (
-        |  SELECT day, observed,
-        |    row_number() OVER w AS rn,
-        |    count(observed) OVER cf AS cnt,
-        |    avg(observed) OVER cf AS ctr_avg
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY day),
-        |    cf AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |d AS (
-        |  SELECT day, observed,
-        |    CASE WHEN cnt = 7 THEN ctr_avg END AS trend,
-        |    observed - CASE WHEN cnt = 7 THEN ctr_avg END AS detrended,
-        |    (rn - 1) % 7 AS phase
-        |  FROM t),
-        |pm AS (SELECT phase, avg(detrended) AS phase_mean FROM d GROUP BY phase),
-        |sc AS (SELECT avg(phase_mean) AS season_center FROM pm)
-        |SELECT d.day, round(d.observed, 6) AS observed,
-        |  round(d.trend, 6) AS trend,
-        |  round(pm.phase_mean - sc.season_center, 6) AS seasonal,
-        |  round(d.observed - d.trend - (pm.phase_mean - sc.season_center), 6)
-        |    AS resid
-        |FROM d JOIN pm USING (phase) CROSS JOIN sc
-        |ORDER BY d.day""".stripMargin,
-    // strength replay: the identical decomposition CTEs, then the FPP
-    // variance ratios over the SAME rounded component columns
-    "q_season_strength" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, avg(value) AS observed
-        |  FROM events GROUP BY 1),
-        |t AS (
-        |  SELECT day, observed,
-        |    row_number() OVER w AS rn,
-        |    count(observed) OVER cf AS cnt,
-        |    avg(observed) OVER cf AS ctr_avg
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY day),
-        |    cf AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |d AS (
-        |  SELECT day, observed,
-        |    CASE WHEN cnt = 7 THEN ctr_avg END AS trend,
-        |    observed - CASE WHEN cnt = 7 THEN ctr_avg END AS detrended,
-        |    (rn - 1) % 7 AS phase
-        |  FROM t),
-        |pm AS (SELECT phase, avg(detrended) AS phase_mean FROM d
-        |       GROUP BY phase),
-        |sc AS (SELECT avg(phase_mean) AS season_center FROM pm),
-        |comp AS (
-        |  SELECT round(d.trend, 6) AS trend,
-        |    round(pm.phase_mean - sc.season_center, 6) AS seasonal,
-        |    round(d.observed - d.trend
-        |      - (pm.phase_mean - sc.season_center), 6) AS resid
-        |  FROM d JOIN pm USING (phase) CROSS JOIN sc
-        |  WHERE d.trend IS NOT NULL),
-        |v AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |        var_samp(resid) AS vr,
-        |        var_samp(seasonal + resid) AS vsr,
-        |        var_samp(trend + resid) AS vtr
-        |      FROM comp)
-        |SELECT n,
-        |  round(CASE WHEN vsr > 0 THEN greatest(0.0, 1.0 - vr / vsr)
-        |    END, 6) AS seasonal_strength,
-        |  round(CASE WHEN vtr > 0 THEN greatest(0.0, 1.0 - vr / vtr)
-        |    END, 6) AS trend_strength
-        |FROM v""".stripMargin,
-    "q_seasonal_even" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, avg(value) AS observed
-        |  FROM events GROUP BY 1),
-        |t AS (
-        |  SELECT day, observed,
-        |    row_number() OVER w AS rn,
-        |    count(observed) OVER
-        |      (ORDER BY day ROWS BETWEEN 5 PRECEDING AND 5 FOLLOWING)
-        |      AS cnt,
-        |    sum(observed) OVER
-        |      (ORDER BY day ROWS BETWEEN 4 PRECEDING AND 4 FOLLOWING)
-        |      AS innersum,
-        |    lag(observed, 5) OVER w AS lo,
-        |    lead(observed, 5) OVER w AS hi
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY day)),
-        |d AS (
-        |  SELECT day, observed,
-        |    CASE WHEN cnt = 11 THEN (innersum + (lo + hi) * 0.5) / 10 END
-        |      AS trend,
-        |    observed - CASE WHEN cnt = 11
-        |                    THEN (innersum + (lo + hi) * 0.5) / 10 END
-        |      AS detrended,
-        |    (rn - 1) % 10 AS phase
-        |  FROM t),
-        |pm AS (SELECT phase, avg(detrended) AS phase_mean FROM d GROUP BY phase),
-        |sc AS (SELECT avg(phase_mean) AS season_center FROM pm)
-        |SELECT d.day, round(d.observed, 6) AS observed,
-        |  round(d.trend, 6) AS trend,
-        |  round(pm.phase_mean - sc.season_center, 6) AS seasonal,
-        |  round(d.observed - d.trend - (pm.phase_mean - sc.season_center), 6)
-        |    AS resid
-        |FROM d JOIN pm USING (phase) CROSS JOIN sc
-        |ORDER BY d.day""".stripMargin,
-    "q_describe_multi" ->
-      """SELECT col_name, n, mean, std, min, median, max FROM (
-        |  SELECT 'l_quantity' AS col_name, count(l_quantity) AS n,
-        |    round(avg(l_quantity), 6) AS mean,
-        |    round(stddev_samp(l_quantity), 6) AS std,
-        |    round(min(l_quantity), 6) AS min,
-        |    round(quantile_cont(l_quantity, 0.5), 6) AS median,
-        |    round(max(l_quantity), 6) AS max FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', count(l_extendedprice),
-        |    round(avg(l_extendedprice), 6),
-        |    round(stddev_samp(l_extendedprice), 6),
-        |    round(min(l_extendedprice), 6),
-        |    round(quantile_cont(l_extendedprice, 0.5), 6),
-        |    round(max(l_extendedprice), 6) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_discount', count(l_discount),
-        |    round(avg(l_discount), 6),
-        |    round(stddev_samp(l_discount), 6),
-        |    round(min(l_discount), 6),
-        |    round(quantile_cont(l_discount, 0.5), 6),
-        |    round(max(l_discount), 6) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_tax', count(l_tax),
-        |    round(avg(l_tax), 6),
-        |    round(stddev_samp(l_tax), 6),
-        |    round(min(l_tax), 6),
-        |    round(quantile_cont(l_tax, 0.5), 6),
-        |    round(max(l_tax), 6) FROM lineitem)
-        |ORDER BY col_name""".stripMargin,
-    "q_yoy" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |  CAST(month(o_orderdate) AS INTEGER) AS mon,
-        |  count(*) AS n_orders,
-        |  round(avg(o_totalprice), 4) AS avg_price
-        |FROM orders GROUP BY yr, mon ORDER BY yr, mon""".stripMargin,
-    "q_yoy_pivot" ->
-      """SELECT CAST(month(o_orderdate) AS INTEGER) AS mon,
-        |  round(avg(CASE WHEN year(o_orderdate) = 1995 THEN o_totalprice END), 4) AS y1995,
-        |  round(avg(CASE WHEN year(o_orderdate) = 1996 THEN o_totalprice END), 4) AS y1996,
-        |  round(avg(CASE WHEN year(o_orderdate) = 1997 THEN o_totalprice END), 4) AS y1997,
-        |  round(avg(CASE WHEN year(o_orderdate) = 1998 THEN o_totalprice END), 4) AS y1998,
-        |  round(avg(CASE WHEN year(o_orderdate) = 1999 THEN o_totalprice END), 4) AS y1999,
-        |  round(avg(CASE WHEN year(o_orderdate) = 2000 THEN o_totalprice END), 4) AS y2000,
-        |  round(avg(CASE WHEN year(o_orderdate) = 2001 THEN o_totalprice END), 4) AS y2001
-        |FROM orders GROUP BY mon ORDER BY mon""".stripMargin,
-    "q_rollup" ->
-      """SELECT r_name AS region, n_name AS nation,
-        |  count(*) AS n_orders,
-        |  round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY region NULLS FIRST, nation NULLS FIRST""".stripMargin,
-    "q_cube" ->
-      """SELECT o_orderstatus AS status,
-        |  CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |  count(*) AS n_orders,
-        |  round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |GROUP BY CUBE(o_orderstatus, year(o_orderdate))
-        |ORDER BY status NULLS FIRST, yr NULLS FIRST""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT o_orderstatus AS status,
-        |  CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |  count(*) AS n_orders,
-        |  round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, year(o_orderdate)),
-        |                        (o_orderstatus), (year(o_orderdate)))
-        |ORDER BY status NULLS FIRST, yr NULLS FIRST""".stripMargin,
-    // skyline oracle: the quadratic NOT EXISTS spelling — a genuinely
-    // independent formulation of weak dominance
-    "q_skyline" ->
-      """WITH a AS (SELECT o_custkey, round(sum(o_totalprice), 2) AS spend,
-        |             count(*) AS n_orders
-        |           FROM orders GROUP BY 1)
-        |SELECT o_custkey, spend, n_orders FROM a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM a b
-        |  WHERE b.spend >= a.spend AND b.n_orders >= a.n_orders
-        |    AND (b.spend > a.spend OR b.n_orders > a.n_orders))
-        |ORDER BY spend DESC, o_custkey""".stripMargin,
-    "q_get_or_create" ->
-      """SELECT id, key FROM (
-        |  SELECT n_nationkey AS id, n_name AS key FROM nation
-        |  UNION ALL
-        |  SELECT CAST((SELECT max(n_nationkey) FROM nation)
-        |              + dense_rank() OVER (ORDER BY r_name) AS INTEGER)
-        |           AS id,
-        |    r_name AS key
-        |  FROM region
-        |  WHERE r_name NOT IN (SELECT n_name FROM nation))
-        |ORDER BY id, key""".stripMargin,
-    "q_monthly_quartiles" ->
-      """SELECT CAST(month(l_shipdate) AS INTEGER) AS mon,
-        |  min(l_quantity) AS min_qty,
-        |  round(quantile_cont(l_quantity, 0.25), 6) AS q1,
-        |  round(quantile_cont(l_quantity, 0.5), 6) AS median,
-        |  round(quantile_cont(l_quantity, 0.75), 6) AS q3,
-        |  max(l_quantity) AS max_qty
-        |FROM lineitem GROUP BY mon ORDER BY mon""".stripMargin,
-    // --- scalar / feature oracles ---
-    "q_date_features" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |  CAST(month(o_orderdate) AS INTEGER) AS mon,
-        |  CAST(day(o_orderdate) AS INTEGER) AS dom,
-        |  CAST(dayofyear(o_orderdate) AS INTEGER) AS doy,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS qtr,
-        |  CAST(isodow(o_orderdate) - 1 AS INTEGER) AS dow_norm,
-        |  CAST(CASE WHEN isodow(o_orderdate) - 1 >= 5 THEN 1 ELSE 0 END
-        |       AS INTEGER) AS is_weekend,
-        |  strftime(o_orderdate, '%b') AS mon_name,
-        |  CASE WHEN month(o_orderdate) IN (12, 1, 2) THEN 'winter'
-        |       WHEN month(o_orderdate) IN (3, 4, 5) THEN 'spring'
-        |       WHEN month(o_orderdate) IN (6, 7, 8) THEN 'summer'
-        |       ELSE 'autumn' END AS season,
-        |  round(sin(2 * pi() * month(o_orderdate) / 12), 6) + 0.0 AS sin_mon,
-        |  round(cos(2 * pi() * month(o_orderdate) / 12), 6) + 0.0 AS cos_mon
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_scalar_funcs" ->
-      """SELECT event_id,
-        |  concat_ws('_', user_id, event_type, strftime(ts, '%Y-%m-%d'))
-        |    AS file_key,
-        |  CAST(floor(epoch(ts)) AS BIGINT) AS epoch_sec,
-        |  round(value, 1) AS value_r1,
-        |  upper(event_type) AS etype_upper,
-        |  regexp_replace('raw/' || event_type, '^raw/', 'processed/')
-        |    AS zone_rewrite,
-        |  CAST(CASE WHEN value > 10 THEN 1 ELSE 0 END AS INTEGER) AS is_high,
-        |  coalesce(value, 0.0) AS value_filled
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_json_extract" ->
-      """SELECT event_type,
-        |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
-        |  count(*) AS n,
-        |  round(avg(value), 6) AS avg_value
-        |FROM events GROUP BY event_type, k
-        |ORDER BY event_type, k""".stripMargin,
-    "q_standardize" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice,
-        |  round((o_totalprice - avg(o_totalprice) OVER g)
-        |        / stddev_samp(o_totalprice) OVER g, 6) AS z_price
-        |FROM orders
-        |WINDOW g AS (PARTITION BY o_orderstatus)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_label_encode" ->
-      """SELECT event_type,
-        |  CAST(dense_rank() OVER (ORDER BY event_type) - 1 AS INTEGER)
-        |    AS label
-        |FROM (SELECT DISTINCT event_type FROM events)
-        |ORDER BY event_type""".stripMargin,
-    "q_calendar_gapfill" ->
-      """WITH b AS (
-        |  SELECT CAST(min(o_orderdate) AS DATE) AS d0,
-        |         CAST(max(o_orderdate) AS DATE) AS d1
-        |  FROM orders),
-        |days AS (
-        |  SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE)
-        |    AS day
-        |  FROM b),
-        |perday AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n
-        |  FROM orders GROUP BY 1)
-        |SELECT day, coalesce(n, 0) AS n_orders
-        |FROM days LEFT JOIN perday USING (day)
-        |ORDER BY day""".stripMargin,
-    "q_union_branches" ->
-      """SELECT event_id, user_id, 'CLICK' AS branch, value
-        |FROM events WHERE event_type = 'click'
-        |UNION ALL
-        |SELECT event_id, user_id, 'VIEW' AS branch, value
-        |FROM events WHERE event_type = 'view'
-        |ORDER BY event_id""".stripMargin,
-    // --- dedup / similarity / text oracles. The md5-derived 60-bit hash
-    // CAST('0x'||substr(md5(x),1,15) AS BIGINT) is the DuckDB spelling of
-    // Spark's conv(substring(md5(x),1,15),16,10) — identical signatures,
-    // so MinHash/SimHash compare exactly. ---
-    "q_exact_dedup" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
-        |  count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin,
-    "q_ngram_jaccard" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2)
-        |SELECT id_i, id_j,
-        |  round(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON sa.doc_id = id_i
-        |JOIN sizes sb ON sb.doc_id = id_j
-        |WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8
-        |ORDER BY id_i, id_j""".stripMargin,
-    // cluster-held-out split: the q_dup_clusters closure labels feed the
-    // md5-bucket fold rule on the cluster representative
-    "q_leakage_split" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src)
-        |SELECT d.doc_id,
-        |  coalesce(lab.cluster_id, d.doc_id) AS fold_rep,
-        |  CASE WHEN CAST('0x' || substr(md5('fold_' ||
-        |         CAST(coalesce(lab.cluster_id, d.doc_id) AS VARCHAR)),
-        |         1, 15) AS BIGINT) % 10000 < 8000
-        |       THEN 'train' ELSE 'test' END AS split
-        |FROM documents d LEFT JOIN lab ON lab.id = d.doc_id
-        |ORDER BY doc_id""".stripMargin,
-    // stride-1 repeated 8-grams: same shingle rule at n=8, grouped on
-    // the gram digest
-    "q_repeated_ngrams" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+7], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-6, 2))) AS u(i)),
-        |g AS (SELECT md5(s) AS gram_hash,
-        |        CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |        min(doc_id) AS first_doc
-        |      FROM sh GROUP BY 1)
-        |SELECT gram_hash, n_docs, first_doc FROM g
-        |WHERE n_docs >= 2 ORDER BY gram_hash""".stripMargin,
-    // dedup governance: the q_ngram_jaccard pair set attributed to
-    // canonicalized (source, source) combinations
-    // URL canonicalization replay: identical regexp chain, 'g' only
-    // where a pattern can hit more than once (DuckDB replaces the first
-    // match by default; Spark is always global; anchored patterns
-    // match at most once so the two agree)
-    "q_url_canon" ->
-      """WITH u AS (SELECT doc_id,
-        |  (CASE WHEN doc_id % 3 = 0 THEN 'HTTP://'
-        |        WHEN doc_id % 3 = 1 THEN 'https://'
-        |        ELSE 'Https://' END)
-        |  || (CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE '' END)
-        |  || 'Site' || CAST(doc_id % 7 AS VARCHAR) || '.EXAMPLE.com'
-        |  || (CASE WHEN doc_id % 4 = 0 THEN ':80'
-        |           WHEN doc_id % 4 = 1 THEN ':443'
-        |           WHEN doc_id % 4 = 2 THEN ':8080' ELSE '' END)
-        |  || '/Articles/item-' || CAST(doc_id % 10 AS VARCHAR)
-        |  || (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END)
-        |  || (CASE WHEN doc_id % 6 = 0
-        |        THEN '?utm_source=news&ref=' || CAST(doc_id % 4 AS VARCHAR)
-        |      WHEN doc_id % 6 = 1
-        |        THEN '?ref=' || CAST(doc_id % 4 AS VARCHAR)
-        |             || '&utm_campaign=Spring'
-        |      WHEN doc_id % 6 = 2 THEN '?utm_medium=email'
-        |      WHEN doc_id % 6 = 3
-        |        THEN '?ref=' || CAST(doc_id % 4 AS VARCHAR)
-        |      ELSE '' END) AS url
-        |  FROM documents),
-        |parts AS (SELECT doc_id,
-        |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-        |    AS scheme,
-        |  lower(regexp_extract(url,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-        |  regexp_extract(url,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS rawpath,
-        |  regexp_extract(url, '(\?[^#]*)', 1) AS rawq
-        |  FROM u),
-        |hp AS (SELECT doc_id, scheme, rawpath, rawq,
-        |  CASE WHEN scheme = 'http'
-        |         THEN regexp_replace(hostport, ':80$', '')
-        |       WHEN scheme = 'https'
-        |         THEN regexp_replace(hostport, ':443$', '')
-        |       ELSE hostport END AS host
-        |  FROM parts),
-        |canon AS (SELECT doc_id,
-        |  scheme || '://' || host
-        |  || COALESCE(NULLIF(regexp_replace(NULLIF(rawpath, ''),
-        |       '/+$', ''), ''), '/')
-        |  || regexp_replace(regexp_replace(
-        |       regexp_replace(rawq, '&utm_[^=&#]*=[^&#]*', '', 'g'),
-        |       '\?utm_[^=&#]*=[^&#]*&', '?'),
-        |       '\?utm_[^=&#]*=[^&#]*$', '') AS canonical_url,
-        |  regexp_replace(regexp_replace(host, ':[0-9]+$', ''),
-        |    '^www\.', '') AS domain
-        |  FROM hp)
-        |SELECT canonical_url, domain,
-        |  CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS keep_id
-        |FROM canon GROUP BY 1, 2
-        |ORDER BY canonical_url""".stripMargin,
-    "q_dup_sources" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j,
-        |          round(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
-        |        FROM pairs
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |m AS (SELECT least(da.source, db.source) AS source_lo,
-        |        greatest(da.source, db.source) AS source_hi, p.jaccard
-        |      FROM dup p
-        |      JOIN documents da ON da.doc_id = p.id_i
-        |      JOIN documents db ON db.doc_id = p.id_j)
-        |SELECT source_lo, source_hi, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  round(avg(jaccard), 6) AS mean_jaccard
-        |FROM m GROUP BY 1, 2 ORDER BY source_lo, source_hi""".stripMargin,
-    // vocabulary induction: top-16 terms by corpus frequency (term
-    // tiebreak), per-doc OOV accounting against the induced vocabulary
-    "q_vocab_oov" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |             FROM documents),
-        |v AS (SELECT term FROM (
-        |        SELECT term, count(*) AS c FROM tok GROUP BY 1
-        |        ORDER BY c DESC, term LIMIT 16)),
-        |s AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |        CAST(sum(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END)
-        |             AS BIGINT) AS n_oov
-        |      FROM tok t LEFT JOIN v ON t.term = v.term
-        |      GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_oov,
-        |  round(n_oov * 1.0 / n_tokens, 6) AS oov_rate
-        |FROM s ORDER BY doc_id""".stripMargin,
-    // BPE merge induction: the oracle replays all 8 greedy rounds as an
-    // unrolled CTE chain (builder-generated — recursive CTEs cannot
-    // aggregate over their own working table in standard SQL). Greedy
-    // left-to-right non-overlapping merging is spelled relationally:
-    // within each maximal run of consecutive candidate positions, the
-    // odd-ranked (1st, 3rd, …) candidates merge — consecutive candidates
-    // only arise when lhs = rhs, where left-to-right greed takes exactly
-    // every other one.
-    "q_bpe_merges" -> bpeMergesOracle(8),
-    // encode = training chain reuse: s8's per-word row count IS the
-    // subword count (merges replayed in training order)
-    "q_bpe_encode" -> bpeEncodeOracle(8),
-    "q_bpe_fertility" -> bpeFertilityOracle(8, Seq(0, 4, 8)),
-    // the unigram-LM chain: hard-EM rounds as recursive Viterbi DP +
-    // backtrace blocks (the published vocab the Spark gates consume is
-    // trained with the SAME parameters, so oracle and artifact agree)
-    "q_unigram_train" -> unigramTrainOracle(3),
-    "q_unigram_encode" -> unigramEncodeOracle(3),
-    "q_tokenizer_compare" -> tokenizerCompareOracle(8, 3),
-    "q_windowed_fertility" -> windowedFertilityOracle(3),
-    "q_substring_ladder" -> substringLadderOracle(Seq(8, 16, 32), 2),
-    "q_windowed_span_ladder" ->
-      windowedSpanLadderOracle(Seq(8, 16, 32), 2),
-    "q_ngram_jaccard_capped" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |        FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sh AS (SELECT sh0.* FROM sh0
-        |       JOIN (SELECT s, count(*) AS df FROM sh0 GROUP BY s) f
-        |         ON f.s = sh0.s AND f.df <= 10),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2)
-        |SELECT id_i, id_j,
-        |  round(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON sa.doc_id = id_i
-        |JOIN sizes sb ON sb.doc_id = id_j
-        |WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8
-        |ORDER BY id_i, id_j""".stripMargin,
-    // directed containment: same capped shingle CTE, undirected common
-    // counts mirrored into both directions, divided by the SOURCE size
-    "q_containment" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ')
-        |          AS s
-        |        FROM toks, UNNEST(range(1, greatest(len(t)-1, 2)))
-        |          AS u(i)),
-        |sh AS (SELECT sh0.* FROM sh0
-        |       JOIN (SELECT s, count(*) AS df FROM sh0 GROUP BY s) f
-        |         ON f.s = sh0.s AND f.df <= 10),
-        |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-        |          FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j,
-        |            CAST(count(*) AS BIGINT) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s
-        |            AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |dir AS (SELECT id_i, id_j, c FROM pairs
-        |        UNION ALL SELECT id_j, id_i, c FROM pairs)
-        |SELECT dir.id_i, dir.id_j, dir.c AS n_common, sizes.n AS n_i,
-        |  round(CAST(dir.c AS DOUBLE) / CAST(sizes.n AS DOUBLE), 6)
-        |    AS containment
-        |FROM dir JOIN sizes ON sizes.doc_id = dir.id_i
-        |WHERE round(CAST(dir.c AS DOUBLE) / CAST(sizes.n AS DOUBLE), 6)
-        |  >= 0.6
-        |ORDER BY containment DESC, dir.id_i, dir.id_j""".stripMargin,
-    // connected components = transitive closure; DuckDB spells the label
-    // propagation as a recursive CTE (min reachable id per node)
-    "q_dup_clusters" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src),
-        |sz AS (SELECT cluster_id, count(*) AS cluster_size
-        |       FROM lab GROUP BY cluster_id)
-        |SELECT lab.id, lab.cluster_id, sz.cluster_size
-        |FROM lab JOIN sz USING (cluster_id)
-        |ORDER BY id""".stripMargin,
-    // survivorship oracle: the same closure, then argmax keeper per
-    // cluster (longest doc, ties to min id) and an anti-join drop
-    "q_dup_resolve_quality" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src),
-        |rk AS (SELECT lab.id, row_number() OVER (
-        |         PARTITION BY lab.cluster_id
-        |         ORDER BY d.n_chars DESC, lab.id ASC) AS r
-        |       FROM lab JOIN documents d ON d.doc_id = lab.id),
-        |drops AS (SELECT id FROM rk WHERE r > 1)
-        |SELECT doc_id, n_chars FROM documents
-        |WHERE doc_id NOT IN (SELECT id FROM drops)
-        |ORDER BY doc_id""".stripMargin,
-    // star-rounds variant: same output contract, same closure oracle
-    "q_dup_clusters_star" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src),
-        |sz AS (SELECT cluster_id, count(*) AS cluster_size
-        |       FROM lab GROUP BY cluster_id)
-        |SELECT lab.id, lab.cluster_id, sz.cluster_size
-        |FROM lab JOIN sz USING (cluster_id)
-        |ORDER BY id""".stripMargin,
-    "q_lsh_calibrate" -> lshCalibrateOracle(128, 0.5, 4),
-    "q_minhash_lsh" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_i, b.doc_id AS id_j
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |              AND a.doc_id < b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |common AS (SELECT c.id_i, c.id_j, count(*) AS nc
-        |           FROM cand c
-        |           JOIN sh a ON a.doc_id = c.id_i
-        |           JOIN sh b ON b.doc_id = c.id_j AND b.s = a.s
-        |           GROUP BY c.id_i, c.id_j)
-        |SELECT id_i, id_j,
-        |  round(nc * 1.0 / (sa.n + sb.n - nc), 6) AS jaccard
-        |FROM common
-        |JOIN sizes sa ON sa.doc_id = id_i
-        |JOIN sizes sb ON sb.doc_id = id_j
-        |WHERE round(nc * 1.0 / (sa.n + sb.n - nc), 6) >= 0.8
-        |ORDER BY id_i, id_j""".stripMargin,
-    // incremental screen: same signatures/banding as q_minhash_lsh, split
-    // new-batch vs index, est = agreeing minhash fraction (k/32 dyadic)
-    "q_minhash_incremental" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_index
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |         WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
-        |est AS (SELECT c.id_new, c.id_index,
-        |          round(CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END)
-        |                     AS DOUBLE) / 32, 6) AS est_jaccard
-        |        FROM cand c
-        |        JOIN mh ma ON ma.doc_id = c.id_new
-        |        JOIN mh mb ON mb.doc_id = c.id_index AND mb.i = ma.i
-        |        GROUP BY 1, 2)
-        |SELECT id_new, id_index, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.75
-        |ORDER BY id_new, id_index""".stripMargin,
-    // signature-index-merge lifecycle: the oracle signs the
-    // POST-RE-CRAWL corpus from scratch (every %10 == 1 doc carries
-    // the amended text) while the Spark side merges the stale index
-    // with the re-crawl batch — a hash match proves the merge's
-    // replace semantics equal a from-scratch rebuild
-    "q_minhash_index_merge" ->
-      """WITH ad AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 1
-        |      THEN text || ' updated edition' ELSE text END AS text
-        |  FROM documents),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ad),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_index
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |         WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
-        |est AS (SELECT c.id_new, c.id_index,
-        |          round(CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END)
-        |                     AS DOUBLE) / 32, 6) AS est_jaccard
-        |        FROM cand c
-        |        JOIN mh ma ON ma.doc_id = c.id_new
-        |        JOIN mh mb ON mb.doc_id = c.id_index AND mb.i = ma.i
-        |        GROUP BY 1, 2)
-        |SELECT id_new, id_index, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.75
-        |ORDER BY id_new, id_index""".stripMargin,
-    "q_simhash" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tk
-        |             FROM documents),
-        |tc AS (SELECT doc_id, tk, count(*) AS w,
-        |         CAST('0x' || substr(md5(tk), 1, 15) AS BIGINT) AS th
-        |       FROM tok GROUP BY doc_id, tk),
-        |bs AS (SELECT doc_id, b.bit AS bit,
-        |         sum(w * (((th >> b.bit) & 1) * 2 - 1)) AS s
-        |       FROM tc CROSS JOIN UNNEST(range(60)) AS b(bit)
-        |       GROUP BY doc_id, b.bit),
-        |sig AS (SELECT doc_id,
-        |          CAST(sum(CASE WHEN s > 0
-        |            THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT)
-        |            AS simhash
-        |        FROM bs GROUP BY doc_id)
-        |SELECT a.doc_id AS id_i, b.doc_id AS id_j,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-        |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY id_i, id_j""".stripMargin,
-    // cosine oracles mirror graft.functions.CosineSimilarity exactly:
-    // dot/(sqrt(na)*sqrt(nb)) over double-widened elements, sequential
-    // sums. Both near-dup oracles reproduce the md5-derived hyperplanes,
-    // so the LSH plans are exactly hash-checkable; this one is the
-    // higher-recall 16-table configuration.
-    "q_emb_cosine_dup" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(16)) AS t(t)
-        |       CROSS JOIN UNNEST(range(6)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |cand AS (SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-        |         FROM bkt a JOIN bkt b
-        |           ON a.tbl = b.tbl AND a.bucket = b.bucket
-        |          AND a.vec_id < b.vec_id)
-        |SELECT c.id_i, c.id_j,
-        |  round(list_dot_product(ua.v, ub.v)
-        |        / (sqrt(list_dot_product(ua.v, ua.v))
-        |           * sqrt(list_dot_product(ub.v, ub.v))), 6) AS cos_sim
-        |FROM cand c JOIN u ua ON ua.vec_id = c.id_i
-        |JOIN u ub ON ub.vec_id = c.id_j
-        |WHERE list_dot_product(ua.v, ub.v)
-        |      / (sqrt(list_dot_product(ua.v, ua.v))
-        |         * sqrt(list_dot_product(ub.v, ub.v))) >= 0.42
-        |ORDER BY id_i, id_j""".stripMargin,
-    // auto-sized planes: greatest(minPlanes, ceil(log2(ceil(n/target))))
-    // replayed from DuckDB's own count — same recipe otherwise
-    "q_emb_cosine_dup_auto" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range((SELECT greatest(6,
-        |         CAST(ceil(log2(CAST(ceil(count(*) / 16.0) AS BIGINT)))
-        |           AS BIGINT)) FROM embeddings))) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |cand AS (SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-        |         FROM bkt a JOIN bkt b
-        |           ON a.tbl = b.tbl AND a.bucket = b.bucket
-        |          AND a.vec_id < b.vec_id)
-        |SELECT c.id_i, c.id_j,
-        |  round(list_dot_product(ua.v, ub.v)
-        |        / (sqrt(list_dot_product(ua.v, ua.v))
-        |           * sqrt(list_dot_product(ub.v, ub.v))), 6) AS cos_sim
-        |FROM cand c JOIN u ua ON ua.vec_id = c.id_i
-        |JOIN u ub ON ub.vec_id = c.id_j
-        |WHERE list_dot_product(ua.v, ub.v)
-        |      / (sqrt(list_dot_product(ua.v, ua.v))
-        |         * sqrt(list_dot_product(ub.v, ub.v))) >= 0.42
-        |ORDER BY id_i, id_j""".stripMargin,
-    // reproduces Similarity.lshBuckets' md5-derived hyperplanes exactly:
-    // w(t,p,d) = (int('0x'+md5('plane_t_p_d')[:15]) % 2000001 - 1e6) / 1e6
-    "q_emb_cosine_dup_lsh" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(6)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |cand AS (SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-        |         FROM bkt a JOIN bkt b
-        |           ON a.tbl = b.tbl AND a.bucket = b.bucket
-        |          AND a.vec_id < b.vec_id)
-        |SELECT c.id_i, c.id_j,
-        |  round(list_dot_product(ua.v, ub.v)
-        |        / (sqrt(list_dot_product(ua.v, ua.v))
-        |           * sqrt(list_dot_product(ub.v, ub.v))), 6) AS cos_sim
-        |FROM cand c JOIN u ua ON ua.vec_id = c.id_i
-        |JOIN u ub ON ub.vec_id = c.id_j
-        |WHERE list_dot_product(ua.v, ub.v)
-        |      / (sqrt(list_dot_product(ua.v, ua.v))
-        |         * sqrt(list_dot_product(ub.v, ub.v))) >= 0.42
-        |ORDER BY id_i, id_j""".stripMargin,
-    "q_cosine_topk" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    list_dot_product(q.v, c.v)
-        |      / (sqrt(list_dot_product(q.v, q.v))
-        |         * sqrt(list_dot_product(c.v, c.v))) AS cos,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v))
-        |           * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
-        |      AS rk
-        |  FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 100 = 0) q
-        |  WHERE c.vec_id <> q.vec_id)
-        |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-        |  round(cos, 6) AS cos_sim
-        |FROM scored WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin,
-    // ranking-eval replay: same brute-force ranked list at k=10, graded by
-    // label adjacency; DCG/IDCG folds in PINNED rank order (ROWS UNBOUNDED
-    // both ways) so accumulation cannot differ from Spark; the ideal list
-    // is stacked from the label histogram (corpus-wide ideal)
-    "q_ndcg" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, q.label AS qlab, c.vec_id AS cand_id,
-        |    c.label AS clab,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v))
-        |           * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
-        |      AS rk
-        |  FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 100 = 0) q
-        |  WHERE c.vec_id <> q.vec_id),
-        |topk AS (
-        |  SELECT query_id, rk,
-        |    CASE WHEN qlab = clab THEN 2
-        |         WHEN abs(qlab - clab) = 1 THEN 1 ELSE 0 END AS rel
-        |  FROM scored WHERE rk <= 10),
-        |perq AS (
-        |  SELECT query_id, count(*) AS n_eval, max(dcg) AS dcg,
-        |    count(*) FILTER (WHERE rel >= 1) AS hits,
-        |    min(CASE WHEN rel >= 1 THEN rk END) AS minrk
-        |  FROM (SELECT query_id, rk, rel,
-        |          sum((CAST((1 << rel) AS DOUBLE) - 1)
-        |              / (ln(CAST(rk AS DOUBLE) + 1) / ln(2)))
-        |            OVER (PARTITION BY query_id ORDER BY rk
-        |                  ROWS BETWEEN UNBOUNDED PRECEDING
-        |                  AND UNBOUNDED FOLLOWING) AS dcg
-        |        FROM topk)
-        |  GROUP BY query_id),
-        |hist AS (SELECT label, count(*) AS cnt FROM u GROUP BY label),
-        |qs AS (SELECT vec_id AS query_id, label AS qlab FROM u
-        |       WHERE vec_id % 100 = 0),
-        |avail AS (
-        |  SELECT q.query_id, 2 AS rel, h.cnt - 1 AS avail
-        |  FROM qs q JOIN hist h ON h.label = q.qlab
-        |  UNION ALL
-        |  SELECT q.query_id, 1 AS rel, CAST(sum(h.cnt) AS BIGINT) AS avail
-        |  FROM qs q JOIN hist h ON abs(h.label - q.qlab) = 1
-        |  GROUP BY q.query_id),
-        |cumq AS (
-        |  SELECT query_id, rel,
-        |    CAST(sum(avail) OVER (PARTITION BY query_id ORDER BY rel DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS hi,
-        |    CAST(sum(avail) OVER (PARTITION BY query_id ORDER BY rel DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - avail
-        |      AS BIGINT) AS lo
-        |  FROM avail WHERE rel >= 1 AND avail > 0),
-        |ipos AS (
-        |  SELECT query_id, rel,
-        |    unnest(range(lo + 1, least(hi, 10) + 1)) AS p
-        |  FROM cumq WHERE lo < 10),
-        |ideal AS (
-        |  SELECT query_id, max(idcg) AS idcg FROM (
-        |    SELECT query_id,
-        |      sum((CAST((1 << rel) AS DOUBLE) - 1)
-        |          / (ln(CAST(p AS DOUBLE) + 1) / ln(2)))
-        |        OVER (PARTITION BY query_id ORDER BY p
-        |              ROWS BETWEEN UNBOUNDED PRECEDING
-        |              AND UNBOUNDED FOLLOWING) AS idcg
-        |    FROM ipos)
-        |  GROUP BY query_id),
-        |nrel AS (SELECT query_id, CAST(sum(avail) AS BIGINT) AS n_rel
-        |         FROM avail WHERE rel >= 1 GROUP BY query_id)
-        |SELECT p.query_id, p.n_eval, coalesce(n.n_rel, 0) AS n_rel,
-        |  p.hits, round(p.dcg, 6) AS dcg, round(i.idcg, 6) AS idcg,
-        |  round(p.dcg / i.idcg, 6) AS ndcg,
-        |  round(coalesce(1.0 / p.minrk, 0.0), 6) AS rr,
-        |  round(p.hits / 10.0, 6) AS precision_at_k,
-        |  round(CASE WHEN n.n_rel > 0
-        |    THEN p.hits / CAST(n.n_rel AS DOUBLE) END, 6) AS recall_at_k
-        |FROM perq p LEFT JOIN ideal i USING (query_id)
-        |LEFT JOIN nrel n USING (query_id)
-        |ORDER BY query_id""".stripMargin,
-    // ANN is deterministic end-to-end: the hyperplanes are md5-derived
-    // (same recipe as q_emb_cosine_dup_lsh, planes=4), candidates are
-    // bucket-equality, and ranking uses the same sequential-fold cosine —
-    // so the "approximate" index is still exactly hash-checkable
-    // full IVF replay: dyadic Lloyd training + inverted file + probe +
-    // exact verify (see ivfTopKOracle)
-    "q_ivf_topk" -> ivfTopKOracle(nCells = 16, nprobe = 4, iters = 3, k = 5),
-    // cluster-profile replay: the same Lloyd chain + assignment; cosines
-    // floored to the 2^-20 lattice before averaging so the per-cell mean
-    // is an exact-sum quotient in any accumulation order
-    "q_cluster_profile" -> (clusterAssignCtes(nCells = 16, iters = 3) +
-      """,
-        |q AS (SELECT cell, floor(cos * 1048576) / 1048576 AS cq
-        |      FROM asg),
-        |g AS (SELECT cell, CAST(count(*) AS BIGINT) AS n, avg(cq) AS m,
-        |        min(cq) AS mn FROM q GROUP BY cell),
-        |t AS (SELECT g.*, CAST(sum(n) OVER (ORDER BY cell ROWS BETWEEN
-        |        UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS BIGINT)
-        |        AS tot
-        |      FROM g)
-        |SELECT CAST(cell AS BIGINT) AS cell, n,
-        |  round(n / CAST(tot AS DOUBLE), 6) AS share,
-        |  round(m, 6) AS mean_cos, round(mn, 6) AS min_cos
-        |FROM t ORDER BY cell""".stripMargin),
-    // silhouette replay: the rank<=2 assignment, dyadic-floored a/b,
-    // per-cell means of the exact per-vector a-b
-    "q_silhouette" -> (clusterAssignCtes(nCells = 16, iters = 3,
-      withSecond = true) +
-      """,
-        |q2 AS (SELECT vec_id, cell, rk,
-        |         floor(cos * 1048576) / 1048576 AS cq
-        |       FROM asg),
-        |pv AS (SELECT vec_id,
-        |         max(CASE WHEN rk = 1 THEN cell END) AS cell,
-        |         max(CASE WHEN rk = 1 THEN cq END) AS a,
-        |         max(CASE WHEN rk = 2 THEN cq END) AS b
-        |       FROM q2 GROUP BY vec_id),
-        |g AS (SELECT cell, CAST(count(*) AS BIGINT) AS n,
-        |        avg(a) AS ma, avg(b) AS mb,
-        |        avg(a - b) AS ms, min(a - b) AS mns
-        |      FROM pv GROUP BY cell)
-        |SELECT CAST(cell AS BIGINT) AS cell, n,
-        |  round(ma, 6) + 0.0 AS mean_cos_own,
-        |  round(mb, 6) + 0.0 AS mean_cos_other,
-        |  round(ms, 6) + 0.0 AS silhouette,
-        |  round(mns, 6) + 0.0 AS min_silhouette
-        |FROM g ORDER BY cell""".stripMargin),
-    // semdedup replay: augmented-corpus Lloyd chain + within-cell pair
-    // closure + quality keeper (full composition in SQL)
-    // auto-celled variant: same Lloyd/probe/closure/keeper replay, the
-    // c0 seed row-filtered by the count-derived nc instead of LIMIT
-    "q_semdedup_auto" -> semDedupOracle(nCells = 0, iters = 2,
-      threshold = 0.95, auto = Some((4, 64))),
-    "q_semdedup" -> semDedupOracle(nCells = 16, iters = 2,
-      threshold = 0.95),
-    // diverse-sample replay: same assignment, md5-ordered per-cell rank
-    "q_diverse_sample" -> (clusterAssignCtes(nCells = 16, iters = 3) +
-      """,
-        |rk AS (SELECT cell, vec_id,
-        |         row_number() OVER (PARTITION BY cell
-        |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-        |           AS rank_in_cell
-        |       FROM asg)
-        |SELECT CAST(cell AS BIGINT) AS cell,
-        |  CAST(rank_in_cell AS INTEGER) AS rank_in_cell, vec_id
-        |FROM rk WHERE rank_in_cell <= 5
-        |ORDER BY cell, rank_in_cell""".stripMargin),
-    // label-noise replay: same exact-cosine knn, same vote aggs, same
-    // (count DESC, label ASC) majority order
-    "q_label_noise" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |knn AS (SELECT query_id, cand_id FROM (
-        |    SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |      row_number() OVER (PARTITION BY q.vec_id
-        |        ORDER BY list_dot_product(q.v, c.v)
-        |          / (sqrt(list_dot_product(q.v, q.v))
-        |             * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
-        |        AS rk
-        |    FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 25 = 0) q
-        |    WHERE c.vec_id <> q.vec_id) WHERE rk <= 10),
-        |j AS (SELECT k.query_id, o.label, n.label AS nl
-        |      FROM knn k
-        |      JOIN u n ON n.vec_id = k.cand_id
-        |      JOIN u o ON o.vec_id = k.query_id),
-        |agg AS (SELECT query_id, label,
-        |          CAST(count(*) AS BIGINT) AS n_neighbors,
-        |          CAST(sum(CASE WHEN nl <> label THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_disagree
-        |        FROM j GROUP BY 1, 2),
-        |mj AS (SELECT query_id, nl AS majority_label FROM (
-        |    SELECT query_id, nl, count(*) AS c,
-        |      row_number() OVER (PARTITION BY query_id
-        |        ORDER BY count(*) DESC, nl) AS r
-        |    FROM j GROUP BY query_id, nl) WHERE r = 1)
-        |SELECT a.query_id AS vec_id, a.label, a.n_neighbors,
-        |  a.n_disagree,
-        |  round(CAST(a.n_disagree AS DOUBLE) / a.n_neighbors, 6)
-        |    AS disagree_rate,
-        |  mj.majority_label,
-        |  mj.majority_label <> a.label AS flagged
-        |FROM agg a JOIN mj ON mj.query_id = a.query_id
-        |ORDER BY vec_id""".stripMargin,
-    // JL replay: same ±1 md5 signs, same sequential dots, pinned-order
-    // Σ_r fold, ratios rounded before the tiny final aggregate
-    "q_jl_project" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT r.r AS r,
-        |         list_transform(range(64), d ->
-        |           CASE WHEN (CAST('0x' || substr(md5('plane_99_' || r.r
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0 >= 0
-        |           THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END)
-        |           AS w
-        |       FROM UNNEST(range(16)) AS r(r)),
-        |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |        list_transform(range(64), i -> a.v[i+1] - b.v[i+1])
-        |          AS diff
-        |      FROM (SELECT * FROM u WHERE vec_id % 50 = 0) a
-        |      CROSS JOIN (SELECT * FROM u WHERE vec_id % 50 = 7) b
-        |      WHERE a.vec_id <> b.vec_id),
-        |d2 AS (SELECT *, list_dot_product(diff, diff) AS d2 FROM p
-        |       WHERE list_dot_product(diff, diff) > 0),
-        |pr AS (SELECT d2.id_a, d2.id_b, d2.d2, pl.r,
-        |         list_dot_product(d2.diff, pl.w) AS dr
-        |       FROM d2 CROSS JOIN pl),
-        |sw AS (SELECT id_a, id_b, d2, r,
-        |         sum(dr * dr) OVER (PARTITION BY id_a, id_b ORDER BY r
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-        |           FOLLOWING) / 16 AS p2
-        |       FROM pr),
-        |rt AS (SELECT id_a, id_b, round(sqrt(p2 / d2), 6) AS ratio
-        |       FROM sw WHERE r = 0)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(16 AS INTEGER) AS k_dims,
-        |  min(ratio) AS min_ratio, round(avg(ratio), 6) AS avg_ratio,
-        |  max(ratio) AS max_ratio,
-        |  round(avg(ratio * ratio), 6) AS avg_sq_ratio
-        |FROM rt""".stripMargin,
-    // LSH curve replay: same md5 planes/buckets at 8 tables, pair ->
-    // min matching table, config = prefix filter, exact re-rank
-    "q_lsh_quality" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |ex AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v))
-        |           * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
-        |      AS rk
-        |  FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 100 = 0) q
-        |  WHERE c.vec_id <> q.vec_id),
-        |exact AS (SELECT query_id, cand_id FROM ex WHERE rk <= 5),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 0),
-        |pairs AS (SELECT qb.vec_id AS query_id, b.vec_id AS cand_id,
-        |            min(b.tbl) AS mt
-        |          FROM qb JOIN bkt b
-        |            ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-        |           AND b.vec_id <> qb.vec_id
-        |          GROUP BY 1, 2),
-        |scored AS (SELECT p.query_id, p.cand_id, p.mt,
-        |    list_dot_product(uq.v, uc.v)
-        |      / (sqrt(list_dot_product(uq.v, uq.v))
-        |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
-        |  FROM pairs p
-        |  JOIN u uq ON uq.vec_id = p.query_id
-        |  JOIN u uc ON uc.vec_id = p.cand_id),
-        |topk AS (SELECT query_id, cand_id, nt FROM (
-        |    SELECT s.query_id, s.cand_id, nt.nt AS nt,
-        |      row_number() OVER (PARTITION BY s.query_id, nt.nt
-        |        ORDER BY s.cos DESC, s.cand_id) AS rk
-        |    FROM scored s CROSS JOIN UNNEST([2, 4, 8]) AS nt(nt)
-        |    WHERE s.mt < nt.nt) WHERE rk <= 5),
-        |nn AS (SELECT count(*) AS n_exact,
-        |         count(DISTINCT query_id) AS n_queries FROM exact),
-        |rep AS (SELECT t.nt, count(*) AS n_returned,
-        |          CAST(sum(CASE WHEN e.query_id IS NOT NULL
-        |            THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-        |        FROM topk t LEFT JOIN exact e
-        |          ON e.query_id = t.query_id AND e.cand_id = t.cand_id
-        |        GROUP BY 1)
-        |SELECT CAST(nt AS INTEGER) AS n_tables, CAST(5 AS INTEGER) AS k,
-        |  n_queries, n_exact, n_returned, n_hits,
-        |  round(CAST(n_hits AS DOUBLE) / n_exact, 4) AS recall
-        |FROM rep CROSS JOIN nn
-        |ORDER BY n_tables""".stripMargin,
-    "q_ann_quality" -> annQualityOracle(nCells = 16,
-      nprobes = Seq(4, 8, 16), refines = Seq(4, 8, 16), ivfIters = 2,
-      m = 16, nCodes = 64, pqIters = 2, k = 5),
-    "q_pq_topk" -> pqTopKOracle(nCells = 16, nprobe = 4, ivfIters = 2,
-      m = 4, nCodes = 16, pqIters = 2, k = 5, refine = 4),
-    "q_mmr_select" -> mmrSelectOracle(k = 8),
-    // per-label centroid (per-dim mean rounded to 6) then pairwise
-    // cosine over the labels-bounded centroid frame
-    "q_centroid_sim" ->
-      """WITH u AS (SELECT label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |e AS (SELECT label, d.d AS d, avg(v[d.d + 1]) AS m
-        |      FROM u CROSS JOIN UNNEST(range(64)) AS d(d)
-        |      GROUP BY 1, 2),
-        |c AS (SELECT label,
-        |        list_transform(list(m ORDER BY d),
-        |                       y -> round(y, 6)) AS cvec
-        |      FROM e GROUP BY label)
-        |SELECT a.label AS label_a, b.label AS label_b,
-        |  round(list_dot_product(a.cvec, b.cvec)
-        |    / (sqrt(list_dot_product(a.cvec, a.cvec))
-        |       * sqrt(list_dot_product(b.cvec, b.cvec))), 6) AS cos_sim
-        |FROM c a JOIN c b ON a.label < b.label
-        |ORDER BY label_a, label_b""".stripMargin,
-    // centroid-drift replay: same round-6 per-dim means, global
-    // centroid from the same exploded pass, cos + norm-ratio folds.
-    // Dims come from range(len(v)) — per-row lateral, NOT a hardcoded
-    // 64 — so a fixture-width change desynchronizes loudly, matching
-    // the Scala side's posexplode-derived dimensionality.
-    "q_centroid_drift" ->
-      """WITH u AS (SELECT label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |e AS (SELECT label, d.d AS d, avg(v[d.d + 1]) AS m
-        |      FROM u CROSS JOIN UNNEST(range(len(v))) AS d(d)
-        |      GROUP BY 1, 2),
-        |c AS (SELECT label,
-        |        list_transform(list(m ORDER BY d),
-        |                       y -> round(y, 6)) AS cvec
-        |      FROM e GROUP BY label),
-        |ge AS (SELECT d.d AS d, avg(v[d.d + 1]) AS m
-        |       FROM u CROSS JOIN UNNEST(range(len(v))) AS d(d)
-        |       GROUP BY 1),
-        |g AS (SELECT list_transform(list(m ORDER BY d),
-        |               y -> round(y, 6)) AS gl
-        |      FROM ge),
-        |n AS (SELECT label, CAST(count(*) AS BIGINT) AS n
-        |      FROM embeddings GROUP BY 1)
-        |SELECT c.label, n.n,
-        |  round(list_dot_product(c.cvec, g.gl)
-        |    / (sqrt(list_dot_product(c.cvec, c.cvec))
-        |       * sqrt(list_dot_product(g.gl, g.gl))), 6) + 0.0
-        |    AS cos_to_global,
-        |  round(sqrt(list_dot_product(c.cvec, c.cvec))
-        |    / sqrt(list_dot_product(g.gl, g.gl)), 6) AS norm_ratio
-        |FROM c JOIN n ON n.label = c.label CROSS JOIN g
-        |ORDER BY c.label""".stripMargin,
-    // per-source top-V vocabulary (count DESC, term) then pairwise
-    // Jaccard over the bounded vocab sets
-    "q_vocab_overlap" ->
-      """WITH tok AS (SELECT source AS grp,
-        |               unnest(string_split(text, ' ')) AS term
-        |             FROM documents WHERE source IS NOT NULL),
-        |c AS (SELECT grp, term, count(*) AS c FROM tok GROUP BY 1, 2),
-        |v AS (SELECT grp, term FROM (
-        |        SELECT grp, term, row_number() OVER (PARTITION BY grp
-        |          ORDER BY c DESC, term) AS r FROM c)
-        |      WHERE r <= 500),
-        |s AS (SELECT grp, CAST(count(*) AS BIGINT) AS n FROM v
-        |      GROUP BY 1),
-        |p AS (SELECT a.grp AS grp_a, b.grp AS grp_b,
-        |        CAST(count(*) AS BIGINT) AS n_common
-        |      FROM v a JOIN v b ON a.term = b.term AND a.grp < b.grp
-        |      GROUP BY 1, 2)
-        |SELECT grp_a, grp_b, n_common,
-        |  round(CAST(n_common AS DOUBLE)
-        |    / CAST(sa.n + sb.n - n_common AS DOUBLE), 6) AS jaccard
-        |FROM p JOIN s sa ON sa.grp = grp_a JOIN s sb ON sb.grp = grp_b
-        |ORDER BY grp_a, grp_b""".stripMargin,
-    // Zipf replay: same (count DESC, term) ranks, same closed-form OLS
-    // moments on (ln rank, ln freq)
-    "q_zipf" ->
-      """WITH c AS (SELECT grp, term, count(*) AS c FROM (
-        |        SELECT source AS grp,
-        |          unnest(string_split(text, ' ')) AS term
-        |        FROM documents WHERE source IS NOT NULL)
-        |      GROUP BY 1, 2),
-        |p AS (SELECT grp, ln(CAST(r AS DOUBLE)) AS x,
-        |        ln(CAST(c AS DOUBLE)) AS y FROM (
-        |        SELECT grp, c, term, row_number() OVER (
-        |          PARTITION BY grp ORDER BY c DESC, term) AS r FROM c)
-        |      WHERE r <= 300),
-        |s AS (SELECT grp, CAST(count(*) AS DOUBLE) AS n, sum(x) AS sx,
-        |        sum(y) AS sy, sum(x * x) AS sxx, sum(x * y) AS sxy,
-        |        sum(y * y) AS syy FROM p GROUP BY 1),
-        |f AS (SELECT grp, n, sx, sy, n * sxx - sx * sx AS dx,
-        |        n * syy - sy * sy AS dy, n * sxy - sx * sy AS cv
-        |      FROM s)
-        |SELECT grp, CAST(n AS BIGINT) AS n_terms,
-        |  round(CASE WHEN dx <> 0 THEN cv / dx END, 6) AS slope,
-        |  round(CASE WHEN dx <> 0
-        |    THEN (sy - (cv / dx) * sx) / n END, 6) AS intercept,
-        |  round(CASE WHEN dx <> 0 AND dy <> 0
-        |    THEN cv * cv / (dx * dy) END, 6) AS r2
-        |FROM f ORDER BY grp""".stripMargin,
-    // SLA replay: same 2^-4 quantization, quantile_cont over the
-    // quantized rows (identical multiset to the weighted percentile)
-    // quantile-drift replay: two dyadic-grid quantile_cont passes
-    // (odd/even calendar days), joined, deltas of the rounded values
-    "q_quantile_drift" ->
-      """WITH qa AS (
-        |  SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS n_a,
-        |    round(quantile_cont(vq, 0.5), 6) AS p50_a,
-        |    round(quantile_cont(vq, 0.9), 6) AS p90_a,
-        |    round(quantile_cont(vq, 0.99), 6) AS p99_a
-        |  FROM (SELECT event_type,
-        |          floor(CAST(value AS DOUBLE) * 16) / 16 AS vq
-        |        FROM events
-        |        WHERE day(CAST(ts AS DATE)) % 2 = 1
-        |          AND event_type IS NOT NULL AND value IS NOT NULL)
-        |  GROUP BY 1),
-        |qb AS (
-        |  SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS n_b,
-        |    round(quantile_cont(vq, 0.5), 6) AS p50_b,
-        |    round(quantile_cont(vq, 0.9), 6) AS p90_b,
-        |    round(quantile_cont(vq, 0.99), 6) AS p99_b
-        |  FROM (SELECT event_type,
-        |          floor(CAST(value AS DOUBLE) * 16) / 16 AS vq
-        |        FROM events
-        |        WHERE day(CAST(ts AS DATE)) % 2 = 0
-        |          AND event_type IS NOT NULL AND value IS NOT NULL)
-        |  GROUP BY 1)
-        |SELECT qa.grp, n_a, n_b,
-        |  p50_a, p50_b, p90_a, p90_b, p99_a, p99_b,
-        |  round(p50_b - p50_a, 6) AS d_p50,
-        |  round(p90_b - p90_a, 6) AS d_p90,
-        |  round(p99_b - p99_a, 6) AS d_p99,
-        |  greatest(abs(round(p50_b - p50_a, 6)),
-        |    abs(round(p90_b - p90_a, 6)),
-        |    abs(round(p99_b - p99_a, 6))) AS max_abs_shift
-        |FROM qa JOIN qb ON qb.grp = qa.grp
-        |ORDER BY qa.grp""".stripMargin,
-    "q_latency_sla" ->
-      """WITH q AS (SELECT event_type AS grp,
-        |        floor(CAST(value AS DOUBLE) * 16) / 16 AS vq
-        |      FROM events
-        |      WHERE event_type IS NOT NULL AND value IS NOT NULL)
-        |SELECT grp, CAST(count(*) AS BIGINT) AS n_rows,
-        |  round(quantile_cont(vq, 0.5), 6) AS p50,
-        |  round(quantile_cont(vq, 0.95), 6) AS p95,
-        |  round(quantile_cont(vq, 0.99), 6) AS p99
-        |FROM q GROUP BY grp ORDER BY grp""".stripMargin,
-    // conversion-latency replay: same first-anchor/earliest-after join,
-    // same 2^-4 quantization + quantile_cont over the quantized rows
-    "q_funnel_time" ->
-      """WITH b AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |        event_type AS ty FROM events),
-        |a AS (SELECT u, min(us) AS t0 FROM b WHERE ty = 'view'
-        |      GROUP BY 1),
-        |g AS (SELECT b.u, min(b.us) AS t1, a.t0
-        |      FROM b JOIN a ON a.u = b.u
-        |      WHERE b.ty = 'purchase' AND b.us > a.t0
-        |      GROUP BY b.u, a.t0),
-        |q AS (SELECT floor((CAST(t1 - t0 AS DOUBLE) / 60000000.0) * 16)
-        |        / 16 AS vq FROM g)
-        |SELECT 'all' AS grp, CAST(count(*) AS BIGINT) AS n_rows,
-        |  round(quantile_cont(vq, 0.5), 6) AS p50,
-        |  round(quantile_cont(vq, 0.9), 6) AS p90,
-        |  round(quantile_cont(vq, 0.99), 6) AS p99
-        |FROM q""".stripMargin,
-    // backtest replay: same leakage-safe windows (lag 1, lag 7, shifted
-    // trailing mean), same common-warmup row filter, same MASE scaling
-    "q_backtest" ->
-      """WITH daily AS (SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |        date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-        |          AS dn,
-        |        round(sum(value), 2) AS v
-        |      FROM events GROUP BY 1, 2, 3),
-        |p AS (SELECT k, day, CAST(v AS DOUBLE) AS v,
-        |        max(CAST(v AS DOUBLE)) OVER (PARTITION BY k ORDER BY dn
-        |          RANGE BETWEEN 1 PRECEDING AND 1 PRECEDING) AS naive,
-        |        max(CAST(v AS DOUBLE)) OVER (PARTITION BY k ORDER BY dn
-        |          RANGE BETWEEN 7 PRECEDING AND 7 PRECEDING) AS snaive,
-        |        avg(CAST(v AS DOUBLE)) OVER (PARTITION BY k ORDER BY dn
-        |          RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING) AS ma,
-        |        count(*) OVER (PARTITION BY k ORDER BY dn
-        |          RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING) AS nma
-        |      FROM daily),
-        |s AS (SELECT * FROM p WHERE naive IS NOT NULL
-        |        AND snaive IS NOT NULL AND nma = 7),
-        |a AS (SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |        sum(abs(v - naive)) AS ae1,
-        |        sum((v - naive) * (v - naive)) AS se1,
-        |        sum(abs(v - snaive)) AS ae2,
-        |        sum((v - snaive) * (v - snaive)) AS se2,
-        |        sum(abs(v - ma)) AS ae3,
-        |        sum((v - ma) * (v - ma)) AS se3
-        |      FROM s GROUP BY 1)
-        |SELECT k AS event_type, method, n, mae, rmse, mase FROM (
-        |  SELECT k, 'naive' AS method, n, round(ae1 / n, 6) AS mae,
-        |    round(sqrt(se1 / n), 6) AS rmse,
-        |    round((ae1 / n) / (ae2 / n), 6) AS mase FROM a
-        |  UNION ALL
-        |  SELECT k, 'snaive', n, round(ae2 / n, 6),
-        |    round(sqrt(se2 / n), 6), round((ae2 / n) / (ae2 / n), 6)
-        |  FROM a
-        |  UNION ALL
-        |  SELECT k, 'moving_avg', n, round(ae3 / n, 6),
-        |    round(sqrt(se3 / n), 6), round((ae3 / n) / (ae2 / n), 6)
-        |  FROM a)
-        |ORDER BY event_type, method""".stripMargin,
-    // conformal replay: same calendar-anchored naive residuals, the
-    // k-th order statistic via the identical (ae, day) rank, last
-    // observed value via reverse day rank; ceil((n+1)*0.75) is exact
-    // in both double and decimal because 0.75 is dyadic
-    "q_conformal" ->
-      """WITH daily AS (SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |        date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-        |          AS dn,
-        |        round(sum(value), 2) AS v
-        |      FROM events GROUP BY 1, 2, 3),
-        |p AS (SELECT k, day, dn, CAST(v AS DOUBLE) AS v,
-        |        max(CAST(v AS DOUBLE)) OVER (PARTITION BY k ORDER BY dn
-        |          RANGE BETWEEN 1 PRECEDING AND 1 PRECEDING) AS naive
-        |      FROM daily),
-        |s AS (SELECT k, day, v, abs(v - naive) AS ae FROM p
-        |      WHERE naive IS NOT NULL),
-        |nn AS (SELECT k, CAST(count(*) AS BIGINT) AS n_cal,
-        |         CAST(ceil((count(*) + 1) * 0.75) AS BIGINT) AS kk
-        |       FROM s GROUP BY 1),
-        |rk AS (SELECT s.k, s.ae, nn.n_cal, nn.kk,
-        |         row_number() OVER (PARTITION BY s.k
-        |           ORDER BY s.ae, s.day) AS r
-        |       FROM s JOIN nn ON nn.k = s.k),
-        |qh AS (SELECT k, n_cal, ae AS q FROM rk WHERE r = kk),
-        |lv AS (SELECT k, v AS last_v FROM (
-        |         SELECT k, v, row_number() OVER (PARTITION BY k
-        |           ORDER BY dn DESC) AS r FROM p) WHERE r = 1),
-        |cov AS (SELECT s.k,
-        |          sum(CASE WHEN s.ae <= qh.q THEN 1 ELSE 0 END)
-        |            * CAST(1 AS DOUBLE) / count(*) AS c
-        |        FROM s JOIN qh ON qh.k = s.k GROUP BY 1)
-        |SELECT qh.k AS event_type, qh.n_cal,
-        |  round(qh.q, 6) AS q_hat, lv.last_v AS forecast,
-        |  round(lv.last_v - qh.q, 6) AS lo,
-        |  round(lv.last_v + qh.q, 6) AS hi,
-        |  round(cov.c, 6) AS coverage
-        |FROM qh JOIN lv ON lv.k = qh.k JOIN cov ON cov.k = qh.k
-        |ORDER BY event_type""".stripMargin,
-    // bridge replay: same rounded (group, year) sums, same Laspeyres/
-    // Paasche effect arithmetic, both-periods-present filter
-    "q_price_volume" ->
-      """WITH b AS (SELECT n_name AS grp,
-        |        CAST(year(o_orderdate) AS VARCHAR) AS p,
-        |        l_quantity AS q, l_extendedprice AS r
-        |      FROM lineitem
-        |      JOIN orders ON o_orderkey = l_orderkey
-        |      JOIN customer ON c_custkey = o_custkey
-        |      JOIN nation ON n_nationkey = c_nationkey
-        |      WHERE year(o_orderdate) IN (1996, 1997)),
-        |per AS (SELECT grp, p, round(sum(q), 2) AS q,
-        |          round(sum(r), 2) AS r
-        |        FROM b GROUP BY 1, 2),
-        |piv AS (SELECT grp,
-        |    max(CASE WHEN p = '1996' THEN q END) AS q0,
-        |    max(CASE WHEN p = '1996' THEN r END) AS r0,
-        |    max(CASE WHEN p = '1997' THEN q END) AS q1,
-        |    max(CASE WHEN p = '1997' THEN r END) AS r1
-        |  FROM per GROUP BY 1)
-        |SELECT grp, q0, q1, r0, r1,
-        |  round(r1 - r0, 2) AS delta_rev,
-        |  round((q1 - q0) * (r0 / q0), 6) AS volume_effect,
-        |  round(round(r1 - r0, 2)
-        |    - round((q1 - q0) * (r0 / q0), 6), 6) AS price_effect
-        |FROM piv
-        |WHERE q0 IS NOT NULL AND q1 IS NOT NULL
-        |  AND q0 <> 0 AND q1 <> 0
-        |ORDER BY grp""".stripMargin,
-    // hard negatives: same buckets (count-sized plane count, the auto
-    // scale config), both-orientation self-join, cosine BELOW the dup
-    // threshold, per-anchor argmax
-    "q_hard_negatives" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range((SELECT greatest(6,
-        |         CAST(ceil(log2(CAST(ceil(count(*) / 16.0) AS BIGINT)))
-        |           AS BIGINT)) FROM embeddings))) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |cand AS (SELECT DISTINCT a.vec_id AS anchor, b.vec_id AS neg
-        |         FROM bkt a JOIN bkt b
-        |           ON b.tbl = a.tbl AND b.bucket = a.bucket
-        |          AND b.vec_id <> a.vec_id),
-        |sc AS (SELECT c.anchor, c.neg,
-        |    list_dot_product(ua.v, un.v)
-        |      / (sqrt(list_dot_product(ua.v, ua.v))
-        |         * sqrt(list_dot_product(un.v, un.v))) AS cos
-        |  FROM cand c
-        |  JOIN u ua ON ua.vec_id = c.anchor
-        |  JOIN u un ON un.vec_id = c.neg),
-        |f AS (SELECT anchor, neg, cos,
-        |    row_number() OVER (PARTITION BY anchor
-        |      ORDER BY cos DESC, neg) AS rk
-        |  FROM sc WHERE cos < 0.42)
-        |SELECT anchor AS vec_id, neg AS negative_id,
-        |  round(cos, 6) AS cos_sim
-        |FROM f WHERE rk = 1 ORDER BY vec_id""".stripMargin,
-    // semantic decontamination: same md5 hyperplane buckets as the ANN
-    // oracles (8 tables × 6 planes), split train/eval, bucket equi-join,
-    // exact cosine + threshold, per-train-id worst-offender argmax
-    "q_emb_decontaminate" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(6)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |tb AS (SELECT * FROM bkt WHERE vec_id % 10 <> 0),
-        |eb AS (SELECT * FROM bkt WHERE vec_id % 10 = 0),
-        |cand AS (SELECT DISTINCT tb.vec_id AS tid, eb.vec_id AS eid
-        |         FROM tb JOIN eb
-        |           ON eb.tbl = tb.tbl AND eb.bucket = tb.bucket),
-        |sc AS (SELECT c.tid, c.eid,
-        |    list_dot_product(ut.v, ue.v)
-        |      / (sqrt(list_dot_product(ut.v, ut.v))
-        |         * sqrt(list_dot_product(ue.v, ue.v))) AS cos
-        |  FROM cand c
-        |  JOIN u ut ON ut.vec_id = c.tid
-        |  JOIN u ue ON ue.vec_id = c.eid),
-        |f AS (SELECT tid, eid, cos,
-        |    row_number() OVER (PARTITION BY tid
-        |      ORDER BY cos DESC, eid) AS rk
-        |  FROM sc WHERE cos >= 0.42)
-        |SELECT tid AS vec_id, eid AS matched_eval_id,
-        |  round(cos, 6) AS cos_sim
-        |FROM f WHERE rk = 1 ORDER BY vec_id""".stripMargin,
-    // int8 quantization: per-dim edges, code grid, reconstruction error —
-    // codes integer-exact, error folds identical-operand
-    "q_emb_quantize" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |mm AS (SELECT d.d AS d, min(u.v[d.d + 1]) AS mn,
-        |         max(u.v[d.d + 1]) AS mx
-        |       FROM u CROSS JOIN UNNEST(range(64)) AS d(d) GROUP BY d.d),
-        |q AS (SELECT u.vec_id, m.d,
-        |        CASE WHEN m.mx = m.mn THEN 0
-        |             ELSE CAST(round((u.v[m.d + 1] - m.mn) * 255
-        |                             / (m.mx - m.mn)) AS INTEGER) END AS c,
-        |        u.v[m.d + 1] AS x, m.mn, m.mx
-        |      FROM u CROSS JOIN mm m),
-        |e AS (SELECT vec_id, c,
-        |        x - (CASE WHEN mx = mn THEN mn
-        |             ELSE mn + c * (mx - mn) / 255 END) AS err
-        |      FROM q)
-        |SELECT vec_id, CAST(sum(c) AS BIGINT) AS code_sum,
-        |  round(sum(err * err) / 64, 6) AS mse,
-        |  round(max(abs(err)), 6) AS max_abs_err
-        |FROM e GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    // truncation energy: per-vector sequential norm folds (identical
-    // operands both engines), |dims|-bounded aggregate
-    "q_emb_truncate" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |en AS (SELECT k.k,
-        |         list_dot_product(u.v[1:k.k], u.v[1:k.k])
-        |           / list_dot_product(u.v, u.v) AS energy
-        |       FROM u CROSS JOIN UNNEST([8, 16, 32, 64]) AS k(k))
-        |SELECT CAST(k AS INTEGER) AS k,
-        |  round(avg(energy), 6) AS avg_energy,
-        |  round(min(energy), 6) AS min_energy,
-        |  CAST(sum(CASE WHEN energy >= 0.9 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_above_90
-        |FROM en GROUP BY k ORDER BY k""".stripMargin,
-    "q_ann_topk" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 0),
-        |cand AS (SELECT DISTINCT qb.vec_id AS query_id, b.vec_id AS cand_id
-        |         FROM qb JOIN bkt b
-        |           ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-        |          AND b.vec_id <> qb.vec_id),
-        |scored AS (SELECT c.query_id, c.cand_id,
-        |    list_dot_product(uq.v, uc.v)
-        |      / (sqrt(list_dot_product(uq.v, uq.v))
-        |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
-        |  FROM cand c
-        |  JOIN u uq ON uq.vec_id = c.query_id
-        |  JOIN u uc ON uc.vec_id = c.cand_id),
-        |rk AS (SELECT query_id, cand_id, cos,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, cand_id) AS rk
-        |  FROM scored)
-        |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-        |  round(cos, 6) AS cos_sim
-        |FROM rk WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin,
-    // mean pool: same per-dimension closed form; the L2 norm accumulates
-    // ORDER BY dim on both sides
-    "q_emb_mean_pool" ->
-      """WITH e AS (SELECT label AS key,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |x AS (SELECT key, CAST(r.d AS INTEGER) AS d, v[r.d + 1] AS x
-        |      FROM e, UNNEST(range(64)) AS r(d)),
-        |m AS (SELECT key, d, avg(x) AS m_raw FROM x GROUP BY key, d),
-        |n AS (SELECT *,
-        |    sqrt(sum(m_raw * m_raw) OVER (PARTITION BY key ORDER BY d
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-        |      AS norm
-        |  FROM m)
-        |SELECT key, d, round(m_raw, 6) AS m,
-        |  round(m_raw / norm, 6) AS m_unit
-        |FROM n ORDER BY key, d""".stripMargin,
-    // two-frame ANN: identical banding, query side its own frame
-    "q_ann_topk_pair" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 50),
-        |cand AS (SELECT DISTINCT qb.vec_id AS query_id, b.vec_id AS cand_id
-        |         FROM qb JOIN bkt b
-        |           ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-        |          AND b.vec_id <> qb.vec_id),
-        |scored AS (SELECT c.query_id, c.cand_id,
-        |    list_dot_product(uq.v, uc.v)
-        |      / (sqrt(list_dot_product(uq.v, uq.v))
-        |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
-        |  FROM cand c
-        |  JOIN u uq ON uq.vec_id = c.query_id
-        |  JOIN u uc ON uc.vec_id = c.cand_id),
-        |rk AS (SELECT query_id, cand_id, cos,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, cand_id) AS rk
-        |  FROM scored)
-        |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-        |  round(cos, 6) AS cos_sim
-        |FROM rk WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin,
-    // recall@k as a deterministic join of the two deterministic result
-    // sets above: the exact brute-force top-k (q_cosine_topk CTE) left-
-    // joined to the md5-derived LSH top-k (q_ann_topk CTE)
-    "q_ann_recall" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |ex AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v))
-        |           * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
-        |      AS rk
-        |  FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 100 = 0) q
-        |  WHERE c.vec_id <> q.vec_id),
-        |exact AS (SELECT query_id, cand_id FROM ex WHERE rk <= 5),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 0),
-        |cand AS (SELECT DISTINCT qb.vec_id AS query_id, b.vec_id AS cand_id
-        |         FROM qb JOIN bkt b
-        |           ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-        |          AND b.vec_id <> qb.vec_id),
-        |scored AS (SELECT c.query_id, c.cand_id,
-        |    list_dot_product(uq.v, uc.v)
-        |      / (sqrt(list_dot_product(uq.v, uq.v))
-        |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
-        |  FROM cand c
-        |  JOIN u uq ON uq.vec_id = c.query_id
-        |  JOIN u uc ON uc.vec_id = c.cand_id),
-        |ann AS (SELECT query_id, cand_id FROM (
-        |    SELECT query_id, cand_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cos DESC, cand_id) AS rk
-        |    FROM scored) WHERE rk <= 5),
-        |j AS (SELECT e.query_id,
-        |        CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-        |      FROM exact e LEFT JOIN ann a
-        |        ON a.query_id = e.query_id AND a.cand_id = e.cand_id)
-        |SELECT CAST(5 AS INTEGER) AS k,
-        |  count(DISTINCT query_id) AS n_queries,
-        |  count(*) AS n_exact,
-        |  CAST(sum(hit) AS BIGINT) AS n_hits,
-        |  round(CAST(sum(hit) AS DOUBLE) / count(*), 4) AS recall
-        |FROM j""".stripMargin,
-    "q_lang_id" ->
-      s"""WITH ${langScoreCtes("documents", "doc_id")}
-         |SELECT doc_id, s_en, s_de, s_es, s_fr, pred_lang,
-         |  round(greatest(s_en, s_de, s_es, s_fr) * 1.0
-         |        / greatest(length(tl) - 2, 1), 6) AS confidence
-         |FROM lpr ORDER BY doc_id""".stripMargin,
-    // lang-ID agreement replay: the trigram prediction chain over the
-    // LITERAL multilingual fixture (same rows as Text.langIdFixture),
-    // then the q_kappa fold
-    "q_langid_agreement" ->
-      (s"""WITH fx(sid, lang, text) AS (VALUES
-        |      $langFixtureValues),
-        |${langScoreCtes("fx", "sid, lang")},
-        |b AS (SELECT lang AS a, pred_lang AS p FROM lpr),""".stripMargin +
-      """
-        |cnt AS (SELECT a, p AS bb, CAST(count(*) AS BIGINT) AS c
-        |        FROM b GROUP BY 1, 2),
-        |ra AS (SELECT a AS cls, CAST(sum(c) AS BIGINT) AS n_a
-        |       FROM cnt GROUP BY 1),
-        |rb AS (SELECT bb AS cls, CAST(sum(c) AS BIGINT) AS n_b
-        |       FROM cnt GROUP BY 1),
-        |dg AS (SELECT a AS cls, CAST(sum(c) AS BIGINT) AS n_agree
-        |       FROM cnt WHERE a = bb GROUP BY 1),
-        |per AS (SELECT cls, coalesce(n_a, 0) AS n_a,
-        |          coalesce(n_b, 0) AS n_b,
-        |          coalesce(n_agree, 0) AS n_agree
-        |        FROM ra FULL JOIN rb USING (cls)
-        |             LEFT JOIN dg USING (cls)),
-        |f AS (SELECT cls, n_a, n_b, n_agree,
-        |    CAST(sum(n_a) OVER pin AS BIGINT) AS n,
-        |    CAST(sum(n_agree) OVER pin AS BIGINT) AS ag,
-        |    CAST(sum(n_a * n_b) OVER pin AS BIGINT) AS pe_num
-        |  FROM per WINDOW pin AS (ORDER BY cls ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND UNBOUNDED FOLLOWING)),
-        |g AS (SELECT *, CAST(ag AS DOUBLE) / CAST(n AS DOUBLE) AS p_o,
-        |        CAST(pe_num AS DOUBLE) /
-        |          (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS p_e
-        |      FROM f)
-        |SELECT cls, n_a, n_b, n_agree, n,
-        |  round(p_o, 6) + 0.0 AS p_o, round(p_e, 6) + 0.0 AS p_e,
-        |  round(CASE WHEN p_e < 1 THEN (p_o - p_e) / (1.0 - p_e) END, 6)
-        |    + 0.0 AS kappa
-        |FROM g ORDER BY cls""".stripMargin),
-    "q_quality" ->
-      """WITH b AS (SELECT doc_id, text,
-        |  string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-        |  CAST(length(text) AS INTEGER) AS n_chars_m,
-        |  length(replace(text, ' ', '')) * 1.0
-        |    / greatest(len(string_split(text, ' ')), 1) AS mean_tok_len,
-        |  len(list_filter(string_split(lower(text), ' '), x -> x IN
-        |    ('the','a','of','and','is','in','to'))) * 1.0
-        |    / greatest(len(string_split(text, ' ')), 1) AS stop_ratio,
-        |  len(regexp_extract_all(text, '[[:punct:]]')) * 1.0
-        |    / greatest(length(text), 1) AS punct_ratio,
-        |  len(regexp_extract_all(text, '[0-9]')) * 1.0
-        |    / greatest(length(text), 1) AS digit_ratio
-        |  FROM documents)
-        |SELECT doc_id, n_tokens, n_chars_m,
-        |  round(mean_tok_len, 6) AS mean_tok_len,
-        |  round(stop_ratio, 6) AS stop_ratio,
-        |  round(punct_ratio, 6) AS punct_ratio,
-        |  round(digit_ratio, 6) AS digit_ratio,
-        |  round(greatest(least(
-        |    (CASE WHEN n_tokens BETWEEN 5 AND 1000 THEN 0.4 ELSE 0.0 END)
-        |    + (CASE WHEN mean_tok_len BETWEEN 3.0 AND 12.0
-        |            THEN 0.3 ELSE 0.0 END)
-        |    + (CASE WHEN stop_ratio >= 0.01 THEN 0.3 ELSE 0.0 END)
-        |    - (CASE WHEN punct_ratio > 0.2 THEN 0.2 ELSE 0.0 END)
-        |    - (CASE WHEN digit_ratio > 0.2 THEN 0.2 ELSE 0.0 END),
-        |    1.0), 0.0), 6) AS quality
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "q_filter_attribution" -> filterAttributionOracle,
-    // encoding replay: identical suffix injections (chr(7)/chr(1) and
-    // the literal replacement chars), regexp strip-counts, per-source
-    // rollup with per-kilochar densities
-    "q_encoding_report" ->
-      """WITH d AS (SELECT source,
-        |    CASE WHEN doc_id % 9 = 0
-        |      THEN COALESCE(text, '') || ' �� damaged'
-        |      WHEN doc_id % 9 = 1
-        |      THEN COALESCE(text, '') || ' ' || chr(7) || chr(1)
-        |        || ' junk'
-        |      ELSE COALESCE(text, '') END AS text
-        |  FROM documents),
-        |m AS (SELECT source, CAST(length(text) AS BIGINT) AS nc,
-        |    CAST(len(regexp_extract_all(text, '�')) AS BIGINT) AS repl,
-        |    CAST(len(regexp_extract_all(text,
-        |      '[\x00-\x08\x0B\x0C\x0E-\x1F]')) AS BIGINT) AS ctrl
-        |  FROM d)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN repl > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_repl_docs,
-        |  CAST(sum(CASE WHEN ctrl > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_ctrl_docs,
-        |  CAST(sum(CASE WHEN repl > 0 OR ctrl > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_damaged,
-        |  round(CAST(sum(CASE WHEN repl > 0 OR ctrl > 0
-        |      THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
-        |    AS damage_rate,
-        |  round(CAST(sum(repl) AS DOUBLE) * 1000 / sum(nc), 6)
-        |    AS repl_per_kchars,
-        |  round(CAST(sum(ctrl) AS DOUBLE) * 1000 / sum(nc), 6)
-        |    AS ctrl_per_kchars
-        |FROM m GROUP BY source ORDER BY source""".stripMargin,
-    "q_token_counts" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text,
-        |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS bpe_tokens,
-        |  round(length(text) * 1.0
-        |    / greatest(len(regexp_extract_all(text,
-        |        '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')), 1), 6)
-        |    AS chars_per_token
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_fingerprint" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |roll AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(t, x ->
-        |      CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1048576)),
-        |    (a, b) -> (a * 131 + b) % 1099511627776) AS rolling_fp
-        |  FROM toks),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |ms AS (SELECT doc_id,
-        |         min(CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))
-        |           AS min_shingle_fp
-        |       FROM sh GROUP BY doc_id)
-        |SELECT roll.doc_id, roll.rolling_fp, ms.min_shingle_fp
-        |FROM roll JOIN ms ON roll.doc_id = ms.doc_id
-        |ORDER BY roll.doc_id""".stripMargin,
-    // Recomputes the multimodal stub's md5-derived payload bytes in SQL —
-    // independently verifying the Scala mapPartitions kernel.
-    // image rows: the oracle recomputes the REAL decoded pixel stats in
-    // closed form from the two-band pattern recipe (PNG is lossless, so a
-    // correct javax.imageio decode reproduces them exactly; a wrong or
-    // fake decoder cannot hash-match). Audio rows: REAL decoded WAV
-    // sample stats from the signal recipe. Video rows: REAL multi-frame
-    // GIF decode — per-frame solid-gray pixel stats and the decoded
-    // frame COUNT recomputed from the clip recipe (a reader that stops
-    // at frame 0 gets both the mean and n_frames wrong).
-    "q_media_features" ->
-      """WITH img AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 13 + 4 AS INTEGER) AS w,
-        |    CAST(doc_id % 11 + 4 AS INTEGER) AS h,
-        |    (doc_id * 7) % 256 AS ar, (doc_id * 11) % 256 AS ag,
-        |    (doc_id * 13) % 256 AS ab, (doc_id * 17) % 256 AS br,
-        |    (doc_id * 19) % 256 AS bg, (doc_id * 23) % 256 AS bb
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |ist AS (SELECT *, h // 2 AS th, h - h // 2 AS bh FROM img),
-        |imean AS (
-        |  SELECT doc_id, w, h,
-        |    CAST(th * w * (ar + ag + ab) + bh * w * (br + bg + bb)
-        |         AS DOUBLE) / (CAST(3 AS DOUBLE) * w * h) AS mean_val
-        |  FROM ist),
-        |chan AS (
-        |  SELECT doc_id, ar // 16 AS bin, CAST(th * w AS BIGINT) AS cnt
-        |    FROM ist
-        |  UNION ALL SELECT doc_id, ag // 16, CAST(th * w AS BIGINT) FROM ist
-        |  UNION ALL SELECT doc_id, ab // 16, CAST(th * w AS BIGINT) FROM ist
-        |  UNION ALL SELECT doc_id, br // 16, CAST(bh * w AS BIGINT) FROM ist
-        |  UNION ALL SELECT doc_id, bg // 16, CAST(bh * w AS BIGINT) FROM ist
-        |  UNION ALL SELECT doc_id, bb // 16, CAST(bh * w AS BIGINT) FROM ist),
-        |ihist AS (
-        |  SELECT i.doc_id, r.bin, CAST(coalesce(sum(c.cnt), 0) AS BIGINT) AS c
-        |  FROM (SELECT DISTINCT doc_id FROM img) i
-        |  CROSS JOIN UNNEST(range(16)) AS r(bin)
-        |  LEFT JOIN chan c ON c.doc_id = i.doc_id AND c.bin = r.bin
-        |  GROUP BY i.doc_id, r.bin),
-        |ihistcsv AS (
-        |  SELECT doc_id,
-        |    string_agg(CAST(c AS VARCHAR), ',' ORDER BY bin) AS hist_csv
-        |  FROM ihist GROUP BY doc_id),
-        |irows AS (
-        |  SELECT m.doc_id AS mediaId, 'image' AS mediaType,
-        |    m.w AS width, m.h AS height, round(m.mean_val, 6) AS mean_val,
-        |    hc.hist_csv, CAST(0 AS INTEGER) AS n_frames
-        |  FROM imean m JOIN ihistcsv hc ON m.doc_id = hc.doc_id),
-        |aud AS (
-        |  SELECT doc_id, CAST(doc_id % 400 + 100 AS INTEGER) AS n
-        |  FROM documents WHERE doc_id % 3 = 1),
-        |smp AS (
-        |  SELECT a.doc_id, ((a.doc_id * 31 + i.i * 7) % 256) AS s
-        |  FROM aud a CROSS JOIN UNNEST(range(500)) AS i(i)
-        |  WHERE i.i < a.n),
-        |astats AS (
-        |  SELECT doc_id, round(sum(s) * 1.0 / count(*), 6) AS mean_val
-        |  FROM smp GROUP BY doc_id),
-        |ahist AS (
-        |  SELECT a2.doc_id, r.bin, CAST(count(s.s) AS BIGINT) AS c
-        |  FROM (SELECT DISTINCT doc_id FROM smp) a2
-        |  CROSS JOIN UNNEST(range(16)) AS r(bin)
-        |  LEFT JOIN smp s ON s.doc_id = a2.doc_id AND s.s // 16 = r.bin
-        |  GROUP BY a2.doc_id, r.bin),
-        |ahistcsv AS (
-        |  SELECT doc_id,
-        |    string_agg(CAST(c AS VARCHAR), ',' ORDER BY bin) AS hist_csv
-        |  FROM ahist GROUP BY doc_id),
-        |arows AS (
-        |  SELECT a.doc_id AS mediaId, 'audio' AS mediaType,
-        |    CAST(NULL AS INTEGER) AS width, CAST(NULL AS INTEGER) AS height,
-        |    st.mean_val, hc.hist_csv,
-        |    CAST((a.n - 1) // 32 + 1 AS INTEGER) AS n_frames
-        |  FROM aud a JOIN astats st ON a.doc_id = st.doc_id
-        |  JOIN ahistcsv hc ON a.doc_id = hc.doc_id),
-        |vid AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 9 + 4 AS INTEGER) AS w,
-        |    CAST(doc_id % 7 + 5 AS INTEGER) AS h,
-        |    CAST(doc_id % 5 + 2 AS INTEGER) AS k
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |vfr AS (
-        |  SELECT v.doc_id, v.w, v.h, v.k, ((v.doc_id * 29 + f.f * 37) % 256) AS g
-        |  FROM vid v CROSS JOIN UNNEST(range(6)) AS f(f) WHERE f.f < v.k),
-        |vmean AS (
-        |  SELECT doc_id, round(sum(g) * 1.0 / count(*), 6) AS mean_val
-        |  FROM vfr GROUP BY doc_id),
-        |vhist AS (
-        |  SELECT v2.doc_id, r.bin,
-        |    CAST(coalesce(sum(CASE WHEN vf.g // 16 = r.bin
-        |                        THEN 3 * vf.w * vf.h END), 0) AS BIGINT) AS c
-        |  FROM (SELECT DISTINCT doc_id FROM vfr) v2
-        |  CROSS JOIN UNNEST(range(16)) AS r(bin)
-        |  LEFT JOIN vfr vf ON vf.doc_id = v2.doc_id
-        |  GROUP BY v2.doc_id, r.bin),
-        |vhistcsv AS (
-        |  SELECT doc_id,
-        |    string_agg(CAST(c AS VARCHAR), ',' ORDER BY bin) AS hist_csv
-        |  FROM vhist GROUP BY doc_id),
-        |vrows AS (
-        |  SELECT v.doc_id AS mediaId, 'video' AS mediaType,
-        |    v.w AS width, v.h AS height, m.mean_val, hc.hist_csv,
-        |    v.k AS n_frames
-        |  FROM vid v JOIN vmean m ON v.doc_id = m.doc_id
-        |  JOIN vhistcsv hc ON v.doc_id = hc.doc_id)
-        |SELECT * FROM irows UNION ALL SELECT * FROM arows
-        |UNION ALL SELECT * FROM vrows
-        |ORDER BY mediaId""".stripMargin,
-    // aHash replay from the two-band pattern recipe: for band images,
-    // 64·gray > Σgray reduces to grayTop <> grayBot row-wise (the 8×8
-    // grid samples whole rows), so the hash is the top- or bottom-band
-    // row mask — built here byte-per-row, msb row first, matching the
-    // %016x packing of bit i = y·8+x
-    "q_phash_dup" ->
-      """WITH img AS (
-        |  SELECT doc_id AS id,
-        |    CAST(doc_id % 11 + 4 AS BIGINT) AS h,
-        |    (doc_id * 7) % 256 + (doc_id * 11) % 256
-        |      + (doc_id * 13) % 256 AS gt,
-        |    (doc_id * 17) % 256 + (doc_id * 19) % 256
-        |      + (doc_id * 23) % 256 AS gb
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |rows8 AS (
-        |  SELECT img.*, y.y AS y,
-        |    ((y.y * h) // 8) < (h // 2) AS top_row
-        |  FROM img CROSS JOIN UNNEST(range(8)) AS y(y)),
-        |hx AS (
-        |  SELECT id,
-        |    string_agg(CASE WHEN (gt > gb AND top_row)
-        |        OR (gb > gt AND NOT top_row) THEN 'ff' ELSE '00' END,
-        |      '' ORDER BY y DESC) AS phash
-        |  FROM rows8 GROUP BY id)
-        |SELECT phash, CAST(count(*) AS BIGINT) AS n_images,
-        |  min(id) AS keep_id
-        |FROM hx GROUP BY phash HAVING count(*) >= 2
-        |ORDER BY phash""".stripMargin,
-    // frame rows from the clip recipe: k = id%5+2 frames, dims
-    // (id%9+4)×(id%7+5), frame f's solid gray (id·29 + f·37) mod 256 —
-    // a solid frame's channel mean IS its gray value
-    // band-profile replay: same integer sample recipe, ±1 square-wave
-    // kernels via integer div/mod, dominant = max |sum| with the
-    // smallest-b tie order (ratios share the positive divisor n, so
-    // comparing integer sums equals comparing the normalized values)
-    "q_audio_bands" ->
-      """WITH a AS (SELECT doc_id AS id,
-        |        CAST(doc_id % 400 + 100 AS INTEGER) AS n
-        |      FROM documents WHERE doc_id % 3 = 1),
-        |s AS (SELECT id, n, i.i AS i,
-        |        CAST((id * 31 + i.i * 7) % 256 AS BIGINT) AS sv
-        |      FROM a CROSS JOIN UNNEST(range(500)) AS i(i)
-        |      WHERE i.i < n),
-        |c AS (SELECT id, n,
-        |    sum(sv * (CASE WHEN (i // 1) % 2 = 0 THEN 1 ELSE -1 END))
-        |      AS a1,
-        |    sum(sv * (CASE WHEN (i // 2) % 2 = 0 THEN 1 ELSE -1 END))
-        |      AS a2,
-        |    sum(sv * (CASE WHEN (i // 4) % 2 = 0 THEN 1 ELSE -1 END))
-        |      AS a4,
-        |    sum(sv * (CASE WHEN (i // 8) % 2 = 0 THEN 1 ELSE -1 END))
-        |      AS a8
-        |  FROM s GROUP BY 1, 2)
-        |SELECT id AS media_id, CAST(n AS BIGINT) AS n_samples,
-        |  round(CAST(a1 AS DOUBLE) / n, 6) AS c1,
-        |  round(CAST(a2 AS DOUBLE) / n, 6) AS c2,
-        |  round(CAST(a4 AS DOUBLE) / n, 6) AS c4,
-        |  round(CAST(a8 AS DOUBLE) / n, 6) AS c8,
-        |  CASE WHEN abs(a1) >= abs(a2) AND abs(a1) >= abs(a4)
-        |         AND abs(a1) >= abs(a8) THEN 1
-        |    WHEN abs(a2) >= abs(a4) AND abs(a2) >= abs(a8) THEN 2
-        |    WHEN abs(a4) >= abs(a8) THEN 4
-        |    ELSE 8 END AS dominant_band
-        |FROM c ORDER BY media_id""".stripMargin,
-    "q_video_frames" ->
-      """WITH vid AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 9 + 4 AS INTEGER) AS w,
-        |    CAST(doc_id % 7 + 5 AS INTEGER) AS h,
-        |    CAST(doc_id % 5 + 2 AS INTEGER) AS k
-        |  FROM documents WHERE doc_id % 3 = 2)
-        |SELECT v.doc_id AS mediaId, CAST(f.f AS INTEGER) AS frameIdx,
-        |  v.w AS width, v.h AS height,
-        |  round(CAST((v.doc_id * 29 + f.f * 37) % 256 AS DOUBLE), 6)
-        |    AS frame_mean
-        |FROM vid v CROSS JOIN UNNEST(range(6)) AS f(f)
-        |WHERE f.f < v.k
-        |ORDER BY mediaId, frameIdx""".stripMargin,
-    // the oracle is the NAIVE spelling (global quality sort + running
-    // token sum); the engine's bucketed two-phase plan must match it
-    "q_token_budget" ->
-      """WITH b AS (
-        |  SELECT doc_id AS id,
-        |    round(CAST(n_chars AS DOUBLE)
-        |          / len(string_split(text, ' ')), 6) AS q,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
-        |    md5('tbs_' || CAST(doc_id AS VARCHAR)) AS tie
-        |  FROM documents),
-        |d AS (SELECT *,
-        |    CAST(sum(toks) OVER (ORDER BY q DESC, tie, id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cum
-        |  FROM b)
-        |SELECT id AS doc_id, q, toks, cum, cum <= 15000 AS selected
-        |FROM d ORDER BY doc_id""".stripMargin,
-    // pack-vs-pad sweep replay: identical md5 pack-groups, exact
-    // integer ceil via //, the two round-6 utilization quotients
-    "q_ctx_sweep" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        |      AS BIGINT) % 8 AS g,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS t
-        |  FROM documents),
-        |c AS (SELECT CAST(v AS BIGINT) AS ctx
-        |      FROM (VALUES (32), (64), (128), (256)) AS x(v)),
-        |pd AS (SELECT ctx, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(CASE WHEN t <= ctx THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_fit,
-        |    CAST(sum(t) AS BIGINT) AS total_tokens,
-        |    CAST(sum(least(t, ctx)) AS BIGINT) AS kept_tokens,
-        |    CAST(sum(greatest(t - ctx, 0)) AS BIGINT)
-        |      AS truncated_tokens,
-        |    CAST(sum(ctx - least(t, ctx)) AS BIGINT) AS padding_tokens
-        |  FROM d CROSS JOIN c GROUP BY 1),
-        |pg AS (SELECT ctx,
-        |    CAST(sum((gt + ctx - 1) // ctx) AS BIGINT) AS n_streams
-        |  FROM (SELECT g, CAST(sum(t) AS BIGINT) AS gt
-        |        FROM d GROUP BY 1) gg CROSS JOIN c
-        |  GROUP BY 1)
-        |SELECT pd.ctx, n_docs, n_fit, total_tokens, kept_tokens,
-        |  truncated_tokens, padding_tokens,
-        |  round(CAST(kept_tokens AS DOUBLE) / (n_docs * pd.ctx), 6)
-        |    AS pad_util,
-        |  n_streams,
-        |  round(CAST(total_tokens AS DOUBLE) / (n_streams * pd.ctx), 6)
-        |    AS packed_util
-        |FROM pd JOIN pg ON pd.ctx = pg.ctx
-        |ORDER BY pd.ctx""".stripMargin,
-    // curriculum manifest replay: exact-integer ECDF quartile cuts over
-    // the token count, seeded md5 shuffle key, the ORDER BY is the
-    // training read order itself
-    "q_training_order" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS score
-        |  FROM documents),
-        |e AS (SELECT score AS v, CAST(count(*) AS BIGINT) AS c
-        |      FROM d WHERE score IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v,
-        |    sum(c) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm,
-        |    sum(c) OVER () AS n
-        |  FROM e),
-        |thr AS (SELECT
-        |    min(CASE WHEN cm * 4 >= n * 1 THEN v END) AS t1,
-        |    min(CASE WHEN cm * 4 >= n * 2 THEN v END) AS t2,
-        |    min(CASE WHEN cm * 4 >= n * 3 THEN v END) AS t3
-        |  FROM cum)
-        |SELECT d.doc_id, d.score,
-        |  CAST(CASE WHEN d.score IS NULL THEN 0 ELSE 1
-        |    + (CASE WHEN d.score > t1 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN d.score > t2 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN d.score > t3 THEN 1 ELSE 0 END) END AS INT)
-        |    AS stage,
-        |  CAST('0x' || substr(md5('cur1_' || CAST(doc_id AS VARCHAR)),
-        |    1, 15) AS BIGINT) AS shuffle_key
-        |FROM d CROSS JOIN thr
-        |ORDER BY stage, shuffle_key, doc_id""".stripMargin,
-    "q_windowed_rates" ->
-      """SELECT CAST(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))
-        |            AS TIMESTAMP) AS window_start,
-        |  event_type, count(*) AS n_events,
-        |  round(sum(value), 2) AS total_value
-        |FROM events GROUP BY 1, 2
-        |ORDER BY window_start, event_type""".stripMargin,
-    // calibration-telemetry replay: same md5-grid scores and threshold
-    // labels, hour buckets, 2^-20 lattice quantization before the sum
-    "q_windowed_calibration" ->
-      """WITH sc AS (SELECT CAST(ts AS TIMESTAMP) AS ts,
-        |    CASE WHEN value > 50.0 THEN 1 ELSE 0 END AS label,
-        |    floor(round(CAST(CAST('0x' || substr(md5(CAST(event_id
-        |        AS VARCHAR)), 1, 15) AS BIGINT) % 1000001 AS DOUBLE)
-        |      / 1000000.0, 6) * 1048576.0) / 1048576.0 AS sq
-        |  FROM events)
-        |SELECT CAST(time_bucket(INTERVAL 1 HOUR, ts) AS TIMESTAMP)
-        |    AS window_start,
-        |  CAST(least(greatest(CAST(floor(sq * 10) AS INTEGER), 0), 9)
-        |    AS INTEGER) AS bin,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(label) AS BIGINT) AS n_pos,
-        |  round(sum(sq), 4) AS score_total
-        |FROM sc GROUP BY 1, 2
-        |ORDER BY window_start, bin""".stripMargin,
-    // hopping windows: each event belongs to exactly window/slide buckets
-    // (start = 30-min bucket - i*30min, i in 0..1 — both always cover ts)
-    "q_hopping_rates" ->
-      """SELECT CAST(time_bucket(INTERVAL 30 MINUTE, CAST(ts AS TIMESTAMP))
-        |         - i * INTERVAL 30 MINUTE AS TIMESTAMP) AS window_start,
-        |  event_type, count(*) AS n_events,
-        |  round(sum(value), 2) AS total_value
-        |FROM events, UNNEST(range(0, 2)) AS u(i)
-        |GROUP BY 1, 2
-        |ORDER BY window_start, event_type""".stripMargin,
-    "q_share_of_total" ->
-      """WITH g AS (SELECT o_orderpriority, sum(o_totalprice) AS s
-        |           FROM orders GROUP BY 1),
-        |t AS (SELECT sum(s) AS t FROM g)
-        |SELECT o_orderpriority, round(s, 2) AS revenue,
-        |       round(s / t, 6) AS share
-        |FROM g CROSS JOIN t
-        |ORDER BY o_orderpriority""".stripMargin,
-    // exact half of the approx-stats frame: countDistinct + interpolated
-    // median are engine-portable; the sketch columns stay rows-only
-    "q_approx_stats_exact" ->
-      """SELECT event_type,
-        |       count(DISTINCT user_id) AS exact_users,
-        |       median(value) AS exact_median
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_sessions" ->
-      """WITH m AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |         OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 30000000
-        |         THEN 1 ELSE 0 END AS nw
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT *, CAST(sum(nw) OVER (
-        |        PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx FROM m)
-        |SELECT user_id, session_idx,
-        |  min(ts) AS session_start, max(ts) AS session_end,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  round(sum(value), 2) AS total_value
-        |FROM s GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-    // The curation capstone oracle composes the already-verified quality /
-    // exact-dedup / jaccard / lang-id CTEs into the same 5-stage funnel.
-    "q_curation_funnel" ->
-      ("""WITH qual AS (
-        |  SELECT doc_id FROM (
-        |    SELECT doc_id,
-        |      greatest(least(
-        |        (CASE WHEN len(string_split(text,' ')) BETWEEN 5 AND 1000
-        |              THEN 0.4 ELSE 0.0 END)
-        |        + (CASE WHEN length(replace(text,' ','')) * 1.0
-        |                 / greatest(len(string_split(text,' ')), 1)
-        |                 BETWEEN 3.0 AND 12.0 THEN 0.3 ELSE 0.0 END)
-        |        + (CASE WHEN len(list_filter(string_split(lower(text),' '),
-        |                 x -> x IN ('the','a','of','and','is','in','to')))
-        |                 * 1.0 / greatest(len(string_split(text,' ')), 1)
-        |                 >= 0.01 THEN 0.3 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[[:punct:]]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[0-9]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END),
-        |        1.0), 0.0) AS quality
-        |    FROM documents)
-        |  WHERE round(quality, 6) >= 0.5),
-        |aq AS (SELECT d.* FROM documents d JOIN qual USING (doc_id)),
-        |ke AS (SELECT min(doc_id) AS doc_id FROM aq GROUP BY md5(text)),
-        |ae AS (SELECT aq.* FROM aq JOIN ke USING (doc_id)),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ae),
-        |sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |        FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sh AS (SELECT sh0.* FROM sh0
-        |       JOIN (SELECT s, count(*) AS df FROM sh0 GROUP BY s) f
-        |         ON f.s = sh0.s AND f.df <= 10),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |dup AS (SELECT DISTINCT id_j AS doc_id FROM pairs
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |an AS (SELECT ae.* FROM ae
-        |       WHERE doc_id NOT IN (SELECT doc_id FROM dup)),
-        |""".stripMargin + langKeepCte + """
-        |al AS (SELECT an.* FROM an JOIN lang USING (doc_id))
-        |SELECT '0_input' AS stage, count(*) AS n_docs FROM documents
-        |UNION ALL SELECT '1_quality', count(*) FROM aq
-        |UNION ALL SELECT '2_exact_dedup', count(*) FROM ae
-        |UNION ALL SELECT '3_near_dedup', count(*) FROM an
-        |UNION ALL SELECT '4_lang', count(*) FROM al
-        |ORDER BY stage""".stripMargin),
-    // same funnel, near-dup stage = banded MinHash candidates (recomputed
-    // bit-identically: one md5 per trigram shingle, 32-hash arithmetic
-    // family, 8 bands of 4) verified with exact Jaccard
-    "q_curation_funnel_minhash" ->
-      ("""WITH qual AS (
-        |  SELECT doc_id FROM (
-        |    SELECT doc_id,
-        |      greatest(least(
-        |        (CASE WHEN len(string_split(text,' ')) BETWEEN 5 AND 1000
-        |              THEN 0.4 ELSE 0.0 END)
-        |        + (CASE WHEN length(replace(text,' ','')) * 1.0
-        |                 / greatest(len(string_split(text,' ')), 1)
-        |                 BETWEEN 3.0 AND 12.0 THEN 0.3 ELSE 0.0 END)
-        |        + (CASE WHEN len(list_filter(string_split(lower(text),' '),
-        |                 x -> x IN ('the','a','of','and','is','in','to')))
-        |                 * 1.0 / greatest(len(string_split(text,' ')), 1)
-        |                 >= 0.01 THEN 0.3 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[[:punct:]]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[0-9]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END),
-        |        1.0), 0.0) AS quality
-        |    FROM documents)
-        |  WHERE round(quality, 6) >= 0.5),
-        |aq AS (SELECT d.* FROM documents d JOIN qual USING (doc_id)),
-        |ke AS (SELECT min(doc_id) AS doc_id FROM aq GROUP BY md5(text)),
-        |ae AS (SELECT aq.* FROM aq JOIN ke USING (doc_id)),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ae),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_i, b.doc_id AS id_j
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |              AND a.doc_id < b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |common AS (SELECT c.id_i, c.id_j, count(*) AS nc
-        |           FROM cand c
-        |           JOIN sh a ON a.doc_id = c.id_i
-        |           JOIN sh b ON b.doc_id = c.id_j AND b.s = a.s
-        |           GROUP BY c.id_i, c.id_j),
-        |dup AS (SELECT DISTINCT id_j AS doc_id FROM common
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(nc * 1.0 / (sa.n + sb.n - nc), 6) >= 0.8),
-        |an AS (SELECT ae.* FROM ae
-        |       WHERE doc_id NOT IN (SELECT doc_id FROM dup)),
-        |""".stripMargin + langKeepCte + """
-        |al AS (SELECT an.* FROM an JOIN lang USING (doc_id))
-        |SELECT '0_input' AS stage, count(*) AS n_docs FROM documents
-        |UNION ALL SELECT '1_quality', count(*) FROM aq
-        |UNION ALL SELECT '2_exact_dedup', count(*) FROM ae
-        |UNION ALL SELECT '3_near_dedup', count(*) FROM an
-        |UNION ALL SELECT '4_lang', count(*) FROM al
-        |ORDER BY stage""".stripMargin),
-    "q_term_freq" ->
-      """SELECT term, count(*) AS n_total,
-        |  count(DISTINCT doc_id) AS n_docs
-        |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |      FROM documents)
-        |GROUP BY term
-        |ORDER BY n_total DESC, term LIMIT 20""".stripMargin,
-    // --- ETL semantics oracles ---
-    "q_file_split" ->
-      """WITH fs AS (
-        |  SELECT user_id,
-        |    max(CASE WHEN event_id % 97 = 0 THEN 1 ELSE 0 END) AS bad,
-        |    count(*) AS nr
-        |  FROM events GROUP BY user_id)
-        |SELECT CASE WHEN bad = 1 THEN 'error' ELSE 'valid' END AS split,
-        |  count(*) AS n_files,
-        |  CAST(sum(nr) AS BIGINT) AS n_rows
-        |FROM fs GROUP BY 1 ORDER BY split""".stripMargin,
-    "q_error_rate" ->
-      """WITH logs AS (
-        |  SELECT user_id,
-        |    CASE WHEN max(CASE WHEN event_id % 97 = 0 THEN 1 ELSE 0 END) = 1
-        |         THEN 'Error' ELSE 'Processed' END AS status
-        |  FROM events GROUP BY user_id)
-        |SELECT count(*) AS n_files,
-        |  CAST(sum(CASE WHEN status = 'Error' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_errors,
-        |  round(sum(CASE WHEN status = 'Error' THEN 1 ELSE 0 END) * 100.0
-        |        / count(*), 2) AS error_pct,
-        |  round(sum(CASE WHEN status = 'Error' THEN 1 ELSE 0 END) * 100.0
-        |        / count(*), 2) >= 50.0 AS critical
-        |FROM logs""".stripMargin,
-    "q_upsert" ->
-      """SELECT CASE WHEN o_orderkey % 10 = 0 THEN 'X'
-        |            ELSE o_orderstatus END AS o_orderstatus,
-        |  count(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-    // CDC diff oracle: replay the snapshot derivation + full outer join
-    "q_snapshot_diff" ->
-      """WITH n AS (
-        |  SELECT o_orderkey,
-        |         CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 1.0
-        |              ELSE o_totalprice END AS o_totalprice,
-        |         o_orderstatus
-        |  FROM orders WHERE o_orderkey % 97 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_orderstatus
-        |  FROM orders WHERE o_orderkey % 1000 = 7),
-        |j AS (
-        |  SELECT CASE
-        |      WHEN o.o_orderkey IS NULL THEN 'added'
-        |      WHEN n.o_orderkey IS NULL THEN 'removed'
-        |      WHEN o.o_totalprice IS DISTINCT FROM n.o_totalprice
-        |        OR o.o_orderstatus IS DISTINCT FROM n.o_orderstatus
-        |        THEN 'changed'
-        |      ELSE 'unchanged' END AS diff_status
-        |  FROM orders o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey)
-        |SELECT diff_status, count(*) AS n FROM j
-        |GROUP BY diff_status ORDER BY diff_status""".stripMargin,
-    "q_dq_report" ->
-      """WITH t AS (SELECT
-        |    CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS r1,
-        |    CAST(sum(CASE WHEN value < 0.0 OR value > 450.0
-        |                  OR value IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS r2,
-        |    CAST(sum(CASE WHEN event_type NOT IN
-        |        ('view','click','purchase','signup','error')
-        |        OR event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS r3,
-        |    CAST(sum(CASE WHEN user_id < 0 OR user_id IS NULL
-        |                  THEN 1 ELSE 0 END) AS BIGINT) AS r4,
-        |    count(*) AS n FROM events)
-        |SELECT 'r1_value_nonnull' AS rule, r1 AS n_violations, n AS n_rows,
-        |       round(CAST(r1 AS DOUBLE) / n, 6) AS violation_rate FROM t
-        |UNION ALL SELECT 'r2_value_range', r2, n,
-        |       round(CAST(r2 AS DOUBLE) / n, 6) FROM t
-        |UNION ALL SELECT 'r3_type_domain', r3, n,
-        |       round(CAST(r3 AS DOUBLE) / n, 6) FROM t
-        |UNION ALL SELECT 'r4_user_nonneg', r4, n,
-        |       round(CAST(r4 AS DOUBLE) / n, 6) FROM t
-        |ORDER BY rule""".stripMargin,
-    // incremental merge must equal the oracle's direct full recompute
-    "q_incr_agg" ->
-      """SELECT user_id, event_type, count(*) AS n,
-        |  round(sum(value), 6) AS sum_value,
-        |  min(value) AS min_value, max(value) AS max_value,
-        |  round(sum(value) / count(*), 6) AS avg_value
-        |FROM events GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-    // S3: the manifest grid × per-api row_number admission slots
-    "q_rate_limit" ->
-      """WITH apis(api) AS (VALUES ('covid'), ('weather')),
-        |days AS (
-        |  SELECT unnest(generate_series(DATE '2021-01-01',
-        |                                DATE '2021-01-05',
-        |                                INTERVAL 1 DAY)) AS day),
-        |m AS (
-        |  SELECT api,
-        |    concat_ws('/', 'S3', 'raw', 'batch_1700000000',
-        |      concat_ws('_', n_name, upper(api),
-        |                strftime(CAST(day AS DATE), '%Y-%m-%d'))) AS path
-        |  FROM nation, apis, days),
-        |r AS (
-        |  SELECT api, path,
-        |    (row_number() OVER (PARTITION BY api ORDER BY path) - 1) // 3
-        |      AS slot
-        |  FROM m)
-        |SELECT api, path, CAST(slot AS BIGINT) AS slot,
-        |  strftime(TIMESTAMP '2021-01-01 00:00:00'
-        |           + slot * INTERVAL 1 SECOND,
-        |           '%Y-%m-%d %H:%M:%S') AS scheduled_at
-        |FROM r ORDER BY api, path""".stripMargin,
-    // batch-cursor windows: run i starts where run i-1 ended (the
-    // reference's set_start_date(end) boundary-day overlap)
-    "q_cursor_manifest" ->
-      """WITH apis(api) AS (VALUES ('covid'), ('weather')),
-        |s AS (SELECT unnest(range(0, 3)) AS run),
-        |w AS (SELECT CAST(run AS INTEGER) AS run,
-        |    CAST(DATE '2021-04-01' + (run*29) * INTERVAL 1 DAY
-        |         AS DATE) AS window_start,
-        |    CAST(DATE '2021-04-01' + (run*29 + 29) * INTERVAL 1 DAY
-        |         AS DATE) AS window_end
-        |  FROM s),
-        |d AS (SELECT run, window_start, window_end,
-        |    CAST(unnest(generate_series(window_start, window_end,
-        |                                INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM w),
-        |m AS (SELECT d.run, d.window_start, d.window_end, n_name AS iso,
-        |    api, day,
-        |    concat_ws('/', 'S3', 'raw',
-        |      concat('batch_', CAST(d.run AS VARCHAR)),
-        |      concat_ws('_', n_name, upper(api),
-        |                strftime(day, '%Y-%m-%d'))) AS path
-        |  FROM d, nation, apis)
-        |SELECT * FROM m ORDER BY run, iso, api, day""".stripMargin,
-    // W12: six sums → closed-form DF regression, same formulas both sides
-    "q_adf" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1),
-        |l AS (
-        |  SELECT CAST(total AS DOUBLE) AS y,
-        |    lag(CAST(total AS DOUBLE)) OVER (ORDER BY day) AS x
-        |  FROM daily),
-        |r AS (SELECT x, y - x AS d FROM l WHERE x IS NOT NULL),
-        |s AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n, sum(x) AS sx, sum(d) AS sy,
-        |    sum(x*x) AS sxx, sum(x*d) AS sxy, sum(d*d) AS syy
-        |  FROM r),
-        |g AS (
-        |  SELECT n, sx, sy, sxx, sxy, syy,
-        |    (n*sxy - sx*sy) / (n*sxx - sx*sx) AS gamma
-        |  FROM s),
-        |f AS (
-        |  SELECT n, sxx, sx, sxy, syy, gamma,
-        |    (sy - gamma*sx) / n AS alpha, sy
-        |  FROM g),
-        |e AS (
-        |  SELECT n, gamma,
-        |    gamma / sqrt((syy - alpha*sy - gamma*sxy) / (n - 2)
-        |                 * n / (n*sxx - sx*sx)) AS t_stat
-        |  FROM f)
-        |SELECT n AS n_obs, round(gamma, 6) AS gamma,
-        |  round(t_stat, 6) AS t_stat,
-        |  CAST(-3.43 AS DOUBLE) AS crit_1pct,
-        |  CAST(-2.86 AS DOUBLE) AS crit_5pct,
-        |  CAST(-2.57 AS DOUBLE) AS crit_10pct,
-        |  t_stat < -2.86 AS stationary
-        |FROM e""".stripMargin,
-    // W12 augmented DF (maxlag=1): ten moment sums → Cramer's-rule 3×3
-    // solve, identical formulas both engines
-    "q_adf_lag1" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1),
-        |l AS (
-        |  SELECT CAST(total AS DOUBLE) AS y,
-        |    lag(CAST(total AS DOUBLE), 1) OVER (ORDER BY day) AS x1,
-        |    lag(CAST(total AS DOUBLE), 2) OVER (ORDER BY day) AS y2
-        |  FROM daily),
-        |r AS (SELECT x1, x1 - y2 AS x2, y - x1 AS d FROM l
-        |      WHERE x1 IS NOT NULL AND y2 IS NOT NULL),
-        |s AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(x1) AS s1, sum(x2) AS s2, sum(x1*x1) AS s11,
-        |    sum(x1*x2) AS s12, sum(x2*x2) AS s22, sum(d) AS sd,
-        |    sum(x1*d) AS s1d, sum(x2*d) AS s2d, sum(d*d) AS sdd
-        |  FROM r),
-        |k AS (
-        |  SELECT *,
-        |    n*(s11*s22 - s12*s12) - s1*(s1*s22 - s12*s2)
-        |      + s2*(s1*s12 - s11*s2) AS det,
-        |    sd*(s11*s22 - s12*s12) - s1*(s1d*s22 - s12*s2d)
-        |      + s2*(s1d*s12 - s11*s2d) AS det_a,
-        |    n*(s1d*s22 - s2d*s12) - sd*(s1*s22 - s12*s2)
-        |      + s2*(s1*s2d - s1d*s2) AS det_g,
-        |    n*(s11*s2d - s12*s1d) - s1*(s1*s2d - s1d*s2)
-        |      + sd*(s1*s12 - s11*s2) AS det_b
-        |  FROM s),
-        |b AS (SELECT *, det_a/det AS alpha, det_g/det AS gamma,
-        |        det_b/det AS beta FROM k),
-        |e AS (SELECT *, sdd - alpha*sd - gamma*s1d - beta*s2d AS sse
-        |      FROM b),
-        |t AS (SELECT *, gamma / sqrt(sse / (n - 3)
-        |        * (n*s22 - s2*s2) / det) AS t_stat FROM e)
-        |SELECT CAST(n AS BIGINT) AS n_obs,
-        |  round(gamma, 6) AS gamma,
-        |  round(beta, 6) AS beta_dlag1,
-        |  round(t_stat, 6) AS t_stat,
-        |  CAST(-3.43 AS DOUBLE) AS crit_1pct,
-        |  CAST(-2.86 AS DOUBLE) AS crit_5pct,
-        |  CAST(-2.57 AS DOUBLE) AS crit_10pct,
-        |  t_stat < -2.86 AS stationary
-        |FROM t""".stripMargin,
-    // W12 autolag='AIC': three candidate closed-form fits on the common
-    // trim-3 sample (centered moments), min-AIC pick, per-order refit —
-    // every arithmetic step spelled identically to the Spark plan
-    "q_adf_autolag" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1),
-        |l AS (
-        |  SELECT CAST(total AS DOUBLE) AS y,
-        |    lag(CAST(total AS DOUBLE), 1) OVER (ORDER BY day) AS y1,
-        |    lag(CAST(total AS DOUBLE), 2) OVER (ORDER BY day) AS y2,
-        |    lag(CAST(total AS DOUBLE), 3) OVER (ORDER BY day) AS y3
-        |  FROM daily),
-        |r AS (SELECT y - y1 AS d, y1 AS x1, y1 - y2 AS x2, y2 - y3 AS x3,
-        |        y2 IS NOT NULL AS c2, y3 IS NOT NULL AS c3
-        |      FROM l WHERE y1 IS NOT NULL),
-        |s AS (SELECT
-        |    CAST(count(*) AS DOUBLE) AS n0,
-        |    sum(x1) AS a1, sum(d) AS ad, sum(x1*x1) AS a11,
-        |    sum(x1*d) AS a1d, sum(d*d) AS add2,
-        |    CAST(count(CASE WHEN c2 THEN 1 END) AS DOUBLE) AS n1,
-        |    sum(CASE WHEN c2 THEN x1 END) AS b1,
-        |    sum(CASE WHEN c2 THEN x2 END) AS b2,
-        |    sum(CASE WHEN c2 THEN d END) AS bd,
-        |    sum(CASE WHEN c2 THEN x1*x1 END) AS b11,
-        |    sum(CASE WHEN c2 THEN x1*x2 END) AS b12,
-        |    sum(CASE WHEN c2 THEN x2*x2 END) AS b22,
-        |    sum(CASE WHEN c2 THEN x1*d END) AS b1d,
-        |    sum(CASE WHEN c2 THEN x2*d END) AS b2d,
-        |    sum(CASE WHEN c2 THEN d*d END) AS bdd,
-        |    CAST(count(CASE WHEN c3 THEN 1 END) AS DOUBLE) AS n3,
-        |    sum(CASE WHEN c3 THEN x1 END) AS u1,
-        |    sum(CASE WHEN c3 THEN x2 END) AS u2,
-        |    sum(CASE WHEN c3 THEN x3 END) AS u3,
-        |    sum(CASE WHEN c3 THEN d END) AS ud,
-        |    sum(CASE WHEN c3 THEN x1*x1 END) AS u11,
-        |    sum(CASE WHEN c3 THEN x1*x2 END) AS u12,
-        |    sum(CASE WHEN c3 THEN x1*x3 END) AS u13,
-        |    sum(CASE WHEN c3 THEN x2*x2 END) AS u22,
-        |    sum(CASE WHEN c3 THEN x2*x3 END) AS u23,
-        |    sum(CASE WHEN c3 THEN x3*x3 END) AS u33,
-        |    sum(CASE WHEN c3 THEN x1*d END) AS u1d,
-        |    sum(CASE WHEN c3 THEN x2*d END) AS u2d,
-        |    sum(CASE WHEN c3 THEN x3*d END) AS u3d,
-        |    sum(CASE WHEN c3 THEN d*d END) AS udd
-        |  FROM r),
-        |cm AS (SELECT *,
-        |    u11 - u1*u1/n3 AS S11, u12 - u1*u2/n3 AS S12,
-        |    u13 - u1*u3/n3 AS S13, u22 - u2*u2/n3 AS S22,
-        |    u23 - u2*u3/n3 AS S23, u33 - u3*u3/n3 AS S33,
-        |    u1d - u1*ud/n3 AS S1d, u2d - u2*ud/n3 AS S2d,
-        |    u3d - u3*ud/n3 AS S3d, udd - ud*ud/n3 AS Sdd
-        |  FROM s),
-        |c0 AS (SELECT *, Sdd - S1d/S11*S1d AS sse0 FROM cm),
-        |c1 AS (SELECT *, S11*S22 - S12*S12 AS det2 FROM c0),
-        |c1b AS (SELECT *,
-        |    (S1d*S22 - S12*S2d)/det2 AS g1c,
-        |    (S11*S2d - S1d*S12)/det2 AS h1c
-        |  FROM c1),
-        |c1c AS (SELECT *, Sdd - g1c*S1d - h1c*S2d AS sse1 FROM c1b),
-        |c2m AS (SELECT *,
-        |    S11*(S22*S33 - S23*S23) - S12*(S12*S33 - S23*S13)
-        |      + S13*(S12*S23 - S22*S13) AS det3
-        |  FROM c1c),
-        |c2b AS (SELECT *,
-        |    (S1d*(S22*S33 - S23*S23) - S12*(S2d*S33 - S23*S3d)
-        |      + S13*(S2d*S23 - S22*S3d))/det3 AS g2c,
-        |    (S11*(S2d*S33 - S23*S3d) - S1d*(S12*S33 - S23*S13)
-        |      + S13*(S12*S3d - S2d*S13))/det3 AS h2c,
-        |    (S11*(S22*S3d - S2d*S23) - S12*(S12*S3d - S2d*S13)
-        |      + S1d*(S12*S23 - S22*S13))/det3 AS j2c
-        |  FROM c2m),
-        |c2c AS (SELECT *,
-        |    Sdd - g2c*S1d - h2c*S2d - j2c*S3d AS sse2 FROM c2b),
-        |aic AS (SELECT *,
-        |    n3*ln(sse0/n3) + n3*CAST(2.8378770664093453 AS DOUBLE) + 4
-        |      AS aic0,
-        |    n3*ln(sse1/n3) + n3*CAST(2.8378770664093453 AS DOUBLE) + 6
-        |      AS aic1,
-        |    n3*ln(sse2/n3) + n3*CAST(2.8378770664093453 AS DOUBLE) + 8
-        |      AS aic2
-        |  FROM c2c),
-        |pick AS (SELECT *,
-        |    CASE WHEN aic0 <= aic1 AND aic0 <= aic2 THEN 0
-        |         WHEN aic1 <= aic2 THEN 1 ELSE 2 END AS usedlag
-        |  FROM aic),
-        |f0 AS (SELECT *,
-        |    a11 - a1*a1/n0 AS P11, a1d - a1*ad/n0 AS P1d,
-        |    add2 - ad*ad/n0 AS Pdd
-        |  FROM pick),
-        |f0b AS (SELECT *, P1d/P11 AS gam0 FROM f0),
-        |f0c AS (SELECT *, Pdd - gam0*P1d AS sf0 FROM f0b),
-        |f0d AS (SELECT *, gam0 / sqrt(sf0 / (n0 - 2) / P11) AS t0 FROM f0c),
-        |f1 AS (SELECT *,
-        |    b11 - b1*b1/n1 AS Q11, b12 - b1*b2/n1 AS Q12,
-        |    b22 - b2*b2/n1 AS Q22, b1d - b1*bd/n1 AS Q1d,
-        |    b2d - b2*bd/n1 AS Q2d, bdd - bd*bd/n1 AS Qdd
-        |  FROM f0d),
-        |f1b AS (SELECT *, Q11*Q22 - Q12*Q12 AS detQ FROM f1),
-        |f1c AS (SELECT *,
-        |    (Q1d*Q22 - Q12*Q2d)/detQ AS gam1,
-        |    (Q11*Q2d - Q1d*Q12)/detQ AS bet1
-        |  FROM f1b),
-        |f1d AS (SELECT *, Qdd - gam1*Q1d - bet1*Q2d AS sf1 FROM f1c),
-        |f1e AS (SELECT *,
-        |    gam1 / sqrt(sf1 / (n1 - 3) * Q22 / detQ) AS t1 FROM f1d),
-        |f2 AS (SELECT *,
-        |    g2c / sqrt(sse2 / (n3 - 4) * (S22*S33 - S23*S23) / det3) AS t2
-        |  FROM f1e),
-        |fin AS (SELECT *,
-        |    CASE WHEN usedlag = 0 THEN gam0 WHEN usedlag = 1 THEN gam1
-        |         ELSE g2c END AS gamma,
-        |    CASE WHEN usedlag = 0 THEN t0 WHEN usedlag = 1 THEN t1
-        |         ELSE t2 END AS t_stat,
-        |    CASE WHEN usedlag = 0 THEN aic0 WHEN usedlag = 1 THEN aic1
-        |         ELSE aic2 END AS aic_best
-        |  FROM f2)
-        |SELECT
-        |  CAST(CASE WHEN usedlag = 0 THEN n0 WHEN usedlag = 1 THEN n1
-        |       ELSE n3 END AS BIGINT) AS n_obs,
-        |  usedlag,
-        |  round(aic_best, 6) AS aic,
-        |  round(gamma, 6) AS gamma,
-        |  round(t_stat, 6) AS t_stat,
-        |  CAST(-3.43 AS DOUBLE) AS crit_1pct,
-        |  CAST(-2.86 AS DOUBLE) AS crit_5pct,
-        |  CAST(-2.57 AS DOUBLE) AS crit_10pct,
-        |  t_stat < -2.86 AS stationary
-        |FROM fin""".stripMargin,
-    // F25: the oracle rebuilds the wire payload from the same printf and
-    // verifies the decoded params as the printf-rounded identity
-    "q_model_transport" ->
-      """WITH p AS (
-        |  SELECT o_orderstatus AS param, avg(o_totalprice) AS mu,
-        |    stddev_samp(o_totalprice) AS sigma
-        |  FROM orders GROUP BY 1),
-        |enc AS (
-        |  SELECT param,
-        |    to_base64(encode(printf('{"param":"%s","mu":%s,"sigma":%s}',
-        |      param,
-        |      CASE WHEN mu IS NULL THEN 'null'
-        |           ELSE printf('%.6f', round(mu, 6)) END,
-        |      CASE WHEN sigma IS NULL THEN 'null'
-        |           ELSE printf('%.6f', round(sigma, 6)) END)))
-        |      AS payload_b64,
-        |    CASE WHEN mu IS NULL THEN NULL
-        |         ELSE CAST(printf('%.6f', round(mu, 6)) AS DOUBLE) END
-        |      AS mu_d,
-        |    CASE WHEN sigma IS NULL THEN NULL
-        |         ELSE CAST(printf('%.6f', round(sigma, 6)) AS DOUBLE) END
-        |      AS sigma_d
-        |  FROM p)
-        |SELECT param, payload_b64, mu_d AS mu, sigma_d AS sigma
-        |FROM enc ORDER BY param""".stripMargin,
-    // batch scoring: the oracle re-derives the md5 weights and computes
-    // the identical sequential dot-product fold
-    "q_model_score" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w)
-        |SELECT vec_id, label, score,
-        |  score > 0.5 AS predicted
-        |FROM (SELECT vec_id, label,
-        |        round(1.0 / (1.0 + exp(-z)), 6) AS score FROM s)
-        |ORDER BY vec_id""".stripMargin,
-    // classification report: same confusion-count closed forms both sides;
-    // summary rows aggregate the UNROUNDED per-class metrics
-    "q_eval_classify" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w),
-        |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS l,
-        |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
-        |      FROM s),
-        |conf AS (SELECT l, p, count(*) AS c FROM b GROUP BY 1, 2),
-        |act AS (SELECT l AS cls, CAST(sum(c) AS BIGINT) AS support
-        |        FROM conf GROUP BY 1),
-        |prd AS (SELECT p AS cls, CAST(sum(c) AS BIGINT) AS npred
-        |        FROM conf GROUP BY 1),
-        |tps AS (SELECT l AS cls, CAST(sum(c) AS BIGINT) AS tp
-        |        FROM conf WHERE l = p GROUP BY 1),
-        |cells AS (SELECT cls, coalesce(support, 0) AS support,
-        |            coalesce(npred, 0) AS npred, coalesce(tp, 0) AS tp
-        |          FROM act FULL JOIN prd USING (cls)
-        |               FULL JOIN tps USING (cls)),
-        |per AS (SELECT cls, support, npred, tp,
-        |    CASE WHEN npred = 0 THEN CAST(0 AS DOUBLE)
-        |         ELSE tp / npred END AS p,
-        |    CASE WHEN support = 0 THEN CAST(0 AS DOUBLE)
-        |         ELSE tp / support END AS r
-        |  FROM cells),
-        |perf AS (SELECT *,
-        |    CASE WHEN p + r = 0 THEN CAST(0 AS DOUBLE)
-        |         ELSE CAST(2 AS DOUBLE) * p * r / (p + r) END AS f
-        |  FROM per),
-        |tot AS (SELECT CAST(sum(tp) AS BIGINT) AS tpsum,
-        |    CAST(sum(support) AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS k,
-        |    sum(p) AS sp, sum(r) AS sr, sum(f) AS sf,
-        |    sum(p * support) AS wp, sum(r * support) AS wr,
-        |    sum(f * support) AS wf
-        |  FROM perf)
-        |SELECT cls, round(p, 6) AS precision, round(r, 6) AS recall,
-        |  round(f, 6) AS f1, support FROM perf
-        |UNION ALL
-        |SELECT 'accuracy', round(tpsum / n, 6), round(tpsum / n, 6),
-        |  round(tpsum / n, 6), n FROM tot
-        |UNION ALL
-        |SELECT 'macro avg', round(sp / k, 6), round(sr / k, 6),
-        |  round(sf / k, 6), n FROM tot
-        |UNION ALL
-        |SELECT 'weighted avg', round(wp / n, 6), round(wr / n, 6),
-        |  round(wf / n, 6), n FROM tot
-        |ORDER BY cls""".stripMargin,
-    // pivoted confusion matrix behind the report
-    "q_confusion" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w),
-        |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS actual,
-        |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
-        |      FROM s)
-        |SELECT actual,
-        |  CAST(sum(CASE WHEN p = 'false' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS pred_false,
-        |  CAST(sum(CASE WHEN p = 'true' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS pred_true
-        |FROM b GROUP BY actual ORDER BY actual""".stripMargin,
-    // kappa replay: same scored-demo chain; exact integer marginals,
-    // pinned class folds, + 0.0 negative-zero guards
-    "q_kappa" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w),
-        |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS a,
-        |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
-        |      FROM s),
-        |cnt AS (SELECT a, p AS bb, CAST(count(*) AS BIGINT) AS c
-        |        FROM b GROUP BY 1, 2),
-        |ra AS (SELECT a AS cls, CAST(sum(c) AS BIGINT) AS n_a
-        |       FROM cnt GROUP BY 1),
-        |rb AS (SELECT bb AS cls, CAST(sum(c) AS BIGINT) AS n_b
-        |       FROM cnt GROUP BY 1),
-        |dg AS (SELECT a AS cls, CAST(sum(c) AS BIGINT) AS n_agree
-        |       FROM cnt WHERE a = bb GROUP BY 1),
-        |per AS (SELECT cls, coalesce(n_a, 0) AS n_a,
-        |          coalesce(n_b, 0) AS n_b,
-        |          coalesce(n_agree, 0) AS n_agree
-        |        FROM ra FULL JOIN rb USING (cls)
-        |             LEFT JOIN dg USING (cls)),
-        |f AS (SELECT cls, n_a, n_b, n_agree,
-        |    CAST(sum(n_a) OVER pin AS BIGINT) AS n,
-        |    CAST(sum(n_agree) OVER pin AS BIGINT) AS ag,
-        |    CAST(sum(n_a * n_b) OVER pin AS BIGINT) AS pe_num
-        |  FROM per WINDOW pin AS (ORDER BY cls ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND UNBOUNDED FOLLOWING)),
-        |g AS (SELECT *, CAST(ag AS DOUBLE) / CAST(n AS DOUBLE) AS p_o,
-        |        CAST(pe_num AS DOUBLE) /
-        |          (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS p_e
-        |      FROM f)
-        |SELECT cls, n_a, n_b, n_agree, n,
-        |  round(p_o, 6) + 0.0 AS p_o, round(p_e, 6) + 0.0 AS p_e,
-        |  round(CASE WHEN p_e < 1 THEN (p_o - p_e) / (1.0 - p_e) END, 6)
-        |    + 0.0 AS kappa
-        |FROM g ORDER BY cls""".stripMargin,
-    // OLS: identical standardization + centered normal-equation closed
-    // forms both sides; + 0.0 canonicalizes the intercept's IEEE -0.0
-    "q_fit_linear" ->
-      """WITH st AS (
-        |  SELECT avg(l_quantity) AS m1, stddev_samp(l_quantity) AS sd1,
-        |    avg(l_discount) AS m2, stddev_samp(l_discount) AS sd2,
-        |    avg(l_tax) AS m3, stddev_samp(l_tax) AS sd3,
-        |    avg(l_extendedprice) AS my, stddev_samp(l_extendedprice) AS sdy
-        |  FROM lineitem),
-        |b AS (
-        |  SELECT (l_quantity - m1) / sd1 AS x1,
-        |    (l_discount - m2) / sd2 AS x2,
-        |    (l_tax - m3) / sd3 AS x3,
-        |    (l_extendedprice - my) / sdy AS y
-        |  FROM lineitem CROSS JOIN st),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(x1) AS s1, sum(x2) AS s2, sum(x3) AS s3, sum(y) AS sy,
-        |    sum(x1*x1) AS s11, sum(x1*x2) AS s12, sum(x1*x3) AS s13,
-        |    sum(x2*x2) AS s22, sum(x2*x3) AS s23, sum(x3*x3) AS s33,
-        |    sum(x1*y) AS s1y, sum(x2*y) AS s2y, sum(x3*y) AS s3y,
-        |    sum(y*y) AS syy
-        |  FROM b),
-        |cm AS (SELECT *,
-        |    s11 - s1*s1/n AS S11, s12 - s1*s2/n AS S12,
-        |    s13 - s1*s3/n AS S13, s22 - s2*s2/n AS S22,
-        |    s23 - s2*s3/n AS S23, s33 - s3*s3/n AS S33,
-        |    s1y - s1*sy/n AS S1y, s2y - s2*sy/n AS S2y,
-        |    s3y - s3*sy/n AS S3y, syy - sy*sy/n AS Syy
-        |  FROM s),
-        |dt AS (SELECT *,
-        |    S11*(S22*S33 - S23*S23) - S12*(S12*S33 - S23*S13)
-        |      + S13*(S12*S23 - S22*S13) AS det
-        |  FROM cm),
-        |sl AS (SELECT *,
-        |    (S1y*(S22*S33 - S23*S23) - S12*(S2y*S33 - S23*S3y)
-        |      + S13*(S2y*S23 - S22*S3y))/det AS b1,
-        |    (S11*(S2y*S33 - S23*S3y) - S1y*(S12*S33 - S23*S13)
-        |      + S13*(S12*S3y - S2y*S13))/det AS b2,
-        |    (S11*(S22*S3y - S2y*S23) - S12*(S12*S3y - S2y*S13)
-        |      + S1y*(S12*S23 - S22*S13))/det AS b3
-        |  FROM dt),
-        |ic AS (SELECT *,
-        |    (sy - b1*s1 - b2*s2 - b3*s3) / n AS b0,
-        |    Syy - b1*S1y - b2*S2y - b3*S3y AS sse
-        |  FROM sl)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  round(b0, 6) + 0.0 AS b0, round(b1, 6) + 0.0 AS b1,
-        |  round(b2, 6) + 0.0 AS b2, round(b3, 6) + 0.0 AS b3,
-        |  round(1.0 - sse / Syy, 6) AS r2
-        |FROM ic""".stripMargin,
-    // exact tie-aware AUC: same per-distinct-score rank-sum closed form,
-    // numerator accumulated in score order on both sides
-    "q_roc_auc" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
-        |g AS (SELECT s, CAST(sum(l) AS BIGINT) AS pos,
-        |        CAST(sum(1 - l) AS BIGINT) AS neg
-        |      FROM sc GROUP BY s),
-        |tot AS (SELECT CAST(sum(pos) AS BIGINT) AS np,
-        |          CAST(sum(neg) AS BIGINT) AS nn FROM g),
-        |cums AS (SELECT g.*, np, nn,
-        |    CAST(sum(neg) OVER (ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      - neg AS below
-        |  FROM g CROSS JOIN tot),
-        |won AS (SELECT *,
-        |    pos * (below + neg / CAST(2 AS DOUBLE)) AS won FROM cums),
-        |num AS (SELECT *,
-        |    sum(won) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND UNBOUNDED FOLLOWING) AS num
-        |  FROM won)
-        |SELECT max(np) AS n_pos, max(nn) AS n_neg,
-        |  round(max(num) / (max(np) * max(nn)), 6) AS auc
-        |FROM num""".stripMargin,
-    // calibration: same bin rule and per-bin means both sides
-    "q_calibration" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w)
-        |SELECT CAST(least(greatest(CAST(floor(s * 10) AS INTEGER), 0), 9)
-        |    AS INTEGER) AS bin,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  round(avg(s), 6) AS mean_score,
-        |  round(avg(CAST(l AS DOUBLE)), 6) AS pos_rate
-        |FROM sc GROUP BY 1 ORDER BY bin""".stripMargin,
-    // ECE replay: the calibration table, gaps from the ROUNDED per-bin
-    // stats, pinned bin-order weighted fold
-    "q_ece" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
-        |cal AS (SELECT CAST(least(greatest(CAST(floor(s * 10)
-        |      AS INTEGER), 0), 9) AS INTEGER) AS bin,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    round(avg(s), 6) AS mean_score,
-        |    round(avg(CAST(l AS DOUBLE)), 6) AS pos_rate
-        |  FROM sc GROUP BY 1),
-        |g AS (SELECT *, round(abs(pos_rate - mean_score), 6) AS gap
-        |      FROM cal),
-        |f AS (SELECT *,
-        |    CAST(sum(n) OVER pin AS BIGINT) AS n_total,
-        |    sum(CAST(n AS DOUBLE) * gap) OVER pin AS wsum,
-        |    max(gap) OVER pin AS mgap
-        |  FROM g WINDOW pin AS (ORDER BY bin ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND UNBOUNDED FOLLOWING))
-        |SELECT bin, n, mean_score, pos_rate, gap, n_total,
-        |  round(wsum / CAST(n_total AS DOUBLE), 6) AS ece,
-        |  round(mgap, 6) AS mce
-        |FROM f ORDER BY bin""".stripMargin,
-    // isotonic replay: same scored corpus and binning, then PAV via the
-    // minimax identity over bins² pooled-block averages — every average
-    // is one correctly-rounded quotient of exact integer prefix sums, so
-    // min/max agree bit-for-bit with Spark before the round-6
-    "q_isotonic" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
-        |b AS (SELECT CAST(least(greatest(CAST(floor(s * 16) AS BIGINT),
-        |          0), 15) AS INTEGER) AS bin,
-        |        CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(l) AS BIGINT) AS pos
-        |      FROM sc GROUP BY 1),
-        |c AS (SELECT bin, n, pos,
-        |        CAST(sum(n) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) AS cn,
-        |        CAST(sum(pos) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) AS cp
-        |      FROM b),
-        |mu AS (SELECT j.bin AS jb,
-        |         min((l.cp - (j.cp - j.pos))
-        |           / CAST(l.cn - (j.cn - j.n) AS DOUBLE)) AS mu
-        |       FROM c j JOIN c l ON j.bin <= l.bin GROUP BY 1),
-        |iso AS (SELECT jb AS bin,
-        |          max(mu) OVER (ORDER BY jb ROWS BETWEEN UNBOUNDED
-        |            PRECEDING AND CURRENT ROW) AS iso
-        |        FROM mu)
-        |SELECT b.bin, b.n, b.pos,
-        |  round(b.pos / CAST(b.n AS DOUBLE), 6) AS raw_rate,
-        |  round(i.iso, 6) AS iso_rate
-        |FROM b JOIN iso i USING (bin) ORDER BY bin""".stripMargin,
-    "q_brier" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT CAST(CAST(label % 2 = 1 AS INTEGER) AS DOUBLE) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w)
-        |SELECT CAST(count(s - l) AS BIGINT) AS n,
-        |  round(avg((s - l) * (s - l)), 6) AS brier
-        |FROM sc""".stripMargin,
-    // PSI: identical bin rule, dyadic 0.5-Laplace smoothing, contributions
-    // summed in bin order
-    "q_psi_drift" ->
-      """WITH a AS (SELECT value FROM events WHERE event_type = 'click'),
-        |b AS (SELECT value FROM events WHERE event_type = 'purchase'),
-        |ba AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM a GROUP BY 1),
-        |bb AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM b GROUP BY 1),
-        |bins AS (SELECT CAST(i.i AS INTEGER) AS bin
-        |         FROM UNNEST(range(10)) AS i(i)),
-        |j AS (SELECT bins.bin,
-        |        CAST(coalesce(ba.c, 0) AS BIGINT) AS c_a,
-        |        CAST(coalesce(bb.c, 0) AS BIGINT) AS c_b
-        |      FROM bins LEFT JOIN ba ON ba.bin = bins.bin
-        |                LEFT JOIN bb ON bb.bin = bins.bin),
-        |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
-        |          CAST(sum(c_b) AS BIGINT) AS n_b FROM j),
-        |p AS (SELECT j.*, n_a, n_b,
-        |    (c_a + CAST(0.5 AS DOUBLE)) / (n_a + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_a,
-        |    (c_b + CAST(0.5 AS DOUBLE)) / (n_b + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_b
-        |  FROM j CROSS JOIN tot),
-        |k AS (SELECT *, (p_a - p_b) * ln(p_a / p_b) AS contrib FROM p),
-        |f AS (SELECT *,
-        |    sum(contrib) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS psi_raw
-        |  FROM k)
-        |SELECT bin, c_a, c_b, round(p_a, 6) AS p_a, round(p_b, 6) AS p_b,
-        |  round(contrib, 6) AS contrib, round(psi_raw, 6) AS psi
-        |FROM f ORDER BY bin""".stripMargin,
-    // exact KS: per-distinct-value pooled ECDF gap; the argmax value is
-    // located by exact float match against the max gap (identical
-    // arithmetic on both sides)
-    "q_ks_drift" ->
-      """WITH a AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-        |           WHERE event_type = 'click'),
-        |b AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-        |      WHERE event_type = 'purchase'),
-        |pv AS (SELECT v, CAST(sum(ca) AS BIGINT) AS ca,
-        |         CAST(sum(cb) AS BIGINT) AS cb
-        |       FROM (SELECT v, 1 AS ca, 0 AS cb FROM a
-        |             UNION ALL SELECT v, 0, 1 FROM b)
-        |       GROUP BY v),
-        |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |          CAST(sum(cb) AS BIGINT) AS n_b FROM pv),
-        |g AS (SELECT pv.*, n_a, n_b,
-        |    abs(CAST(sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_a
-        |      - CAST(sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_b) AS gap
-        |  FROM pv CROSS JOIN tot),
-        |m AS (SELECT max(gap) AS maxgap FROM g)
-        |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-        |  round(max(maxgap), 6) AS ks_d,
-        |  round(min(v), 6) AS at_value
-        |FROM g CROSS JOIN m WHERE gap = maxgap""".stripMargin,
-    // per-dimension embedding stats via 1-based array indexing
-    // MMD replay: same dyadic 2^-10 component floor (exact sums any
-    // order), exact-sum mean quotients, pinned dim-order fold
-    "q_mmd_drift" ->
-      """WITH qa AS (SELECT CAST(i - 1 AS INTEGER) AS dim,
-        |    floor(CAST(embedding[i] AS DOUBLE) * 1024.0) / 1024.0 AS x
-        |  FROM embeddings,
-        |       UNNEST(range(1, len(embedding) + 1)) AS u(i)
-        |  WHERE label % 2 = 0),
-        |qb AS (SELECT CAST(i - 1 AS INTEGER) AS dim,
-        |    floor(CAST(embedding[i] AS DOUBLE) * 1024.0) / 1024.0 AS x
-        |  FROM embeddings,
-        |       UNNEST(range(1, len(embedding) + 1)) AS u(i)
-        |  WHERE label % 2 = 1),
-        |sa AS (SELECT dim, sum(x) AS s, CAST(count(*) AS BIGINT) AS n
-        |  FROM qa GROUP BY 1),
-        |sb AS (SELECT dim, sum(x) AS s, CAST(count(*) AS BIGINT) AS n
-        |  FROM qb GROUP BY 1),
-        |m AS (SELECT sa.dim, sa.s / CAST(sa.n AS DOUBLE) AS ma,
-        |    sb.s / CAST(sb.n AS DOUBLE) AS mb
-        |  FROM sa JOIN sb ON sb.dim = sa.dim),
-        |f AS (SELECT dim, ma, mb, ma - mb AS d FROM m),
-        |g AS (SELECT *, sum(d * d) OVER (ORDER BY dim ROWS BETWEEN
-        |    UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS mmd2
-        |  FROM f)
-        |SELECT dim, round(ma, 6) AS mean_a, round(mb, 6) AS mean_b,
-        |  round(d, 6) AS mean_gap, round(mmd2, 6) AS mmd2
-        |FROM g ORDER BY dim""".stripMargin,
-    "q_emb_dim_stats" ->
-      """WITH x AS (SELECT CAST(i AS BIGINT) AS dim,
-        |    CAST(embedding[i] AS DOUBLE) AS x
-        |  FROM embeddings,
-        |       UNNEST(range(1, len(embedding) + 1)) AS u(i))
-        |SELECT dim, count(*) AS n,
-        |  round(avg(x), 6) AS mean_x,
-        |  round(stddev_samp(x), 6) AS std_x,
-        |  min(x) AS min_x, max(x) AS max_x
-        |FROM x GROUP BY dim ORDER BY dim""".stripMargin,
-    // MAE/RMSE of the lag-1 persistence forecast, identical closed forms
-    "q_forecast_errors" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, total,
-        |    lag(total) OVER (PARTITION BY event_type ORDER BY day) AS pred
-        |  FROM daily),
-        |e AS (SELECT event_type, total - pred AS err FROM p)
-        |SELECT event_type, CAST(count(err) AS BIGINT) AS n_obs,
-        |  round(avg(abs(err)), 6) AS mae,
-        |  round(sqrt(avg(err * err)), 6) AS rmse
-        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // skill replay: both lags in one windowed pass, shared-row window,
-    // identical guard and + 0.0 on the published skill
-    "q_forecast_skill" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, total AS y,
-        |    lag(total, 7) OVER (PARTITION BY event_type ORDER BY day)
-        |      AS f,
-        |    lag(total, 1) OVER (PARTITION BY event_type ORDER BY day)
-        |      AS b
-        |  FROM daily),
-        |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_obs,
-        |    round(avg(abs(y - f)), 6) AS mae_model,
-        |    round(avg(abs(y - b)), 6) AS mae_baseline
-        |  FROM p WHERE y IS NOT NULL AND f IS NOT NULL
-        |    AND b IS NOT NULL
-        |  GROUP BY 1)
-        |SELECT event_type, n_obs, mae_model, mae_baseline,
-        |  round(CASE WHEN mae_baseline > 0
-        |    THEN 1.0 - mae_model / mae_baseline END, 6) + 0.0 AS skill
-        |FROM g ORDER BY event_type""".stripMargin,
-    // scaled-errors replay: same persistence chain, conditional
-    // averages with identical guards; bias carries the + 0.0 guard
-    "q_forecast_scaled" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, total AS y,
-        |    lag(total) OVER (PARTITION BY event_type ORDER BY day) AS f
-        |  FROM daily)
-        |SELECT event_type,
-        |  CAST(count(y - f) AS BIGINT) AS n_obs,
-        |  CAST(count(CASE WHEN y <> 0 AND f IS NOT NULL THEN 1 END)
-        |    AS BIGINT) AS n_mape,
-        |  round(avg(CASE WHEN y <> 0 THEN abs(y - f) / abs(y) END), 6)
-        |    AS mape,
-        |  round(avg(CASE WHEN abs(y) + abs(f) > 0
-        |    THEN 2.0 * abs(y - f) / (abs(y) + abs(f)) END), 6) AS smape,
-        |  round(avg(y - f), 6) + 0.0 AS bias
-        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // pinball replay: same persistence chain, quantiles-bounded explode,
-    // single conditional averages (the forecastErrors contract)
-    "q_pinball" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, total,
-        |    lag(total) OVER (PARTITION BY event_type ORDER BY day) AS pred
-        |  FROM daily),
-        |b AS (SELECT event_type, total AS y, pred AS f, q.q
-        |      FROM p CROSS JOIN (SELECT unnest([CAST(0.1 AS DOUBLE),
-        |        CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE)]) AS q) q
-        |      WHERE total IS NOT NULL AND pred IS NOT NULL)
-        |SELECT event_type, q, CAST(count(*) AS BIGINT) AS n_obs,
-        |  round(avg(CASE WHEN y >= f THEN q * (y - f)
-        |                 ELSE (1.0 - q) * (f - y) END), 6) AS pinball,
-        |  round(avg(CASE WHEN y > f THEN 1.0 ELSE 0.0 END), 6)
-        |    AS under_forecast_share
-        |FROM b GROUP BY 1, 2 ORDER BY event_type, q""".stripMargin,
-    // logistic Newton fit: the oracle unrolls the SAME 4 rounds with the
-    // SAME expression text (float op order identical in both engines)
-    // 3 boosting rounds replayed by the builder-generated CTE chain; the
-    // dyadic exactness discipline (integer y, 2^-10 leaves, lr 0.5) is
-    // what lets a float argmax hash-match across engines
-    "q_gbt_stumps" -> gbtStumpsOracle(3, 0.5),
-    "q_gbt_depth2" -> gbtDepth2Oracle(3, 0.5),
-    "q_gbt_depth2_score" -> gbtDepth2ScoreOracle(3, 0.5),
-    "q_gbt_importance" -> gbtImportanceOracle(3, 0.5),
-    "q_sarima_lite" -> sarimaLiteOracle(period = 7, horizon = 7),
-    "q_gbt_depth2_eval" -> gbtDepth2EvalOracle(3, 0.5),
-    "q_gbt_eval" -> gbtEvalOracle(3, 0.5),
-    "q_gbt_score" -> gbtScoreOracle(3, 0.5),
-    "q_gbt_pdp" -> gbtPdpOracle(3, 0.5,
-      Seq(1.0, 10.0, 20.0, 30.0, 40.0, 50.0)),
-    "q_gbt_perm_importance" -> gbtPermImportanceOracle(3, 0.5, 256),
-    // NB-LR quality-classifier replay: generated Newton unroll over the
-    // fixture VALUES, exact-int features, per-source rollup
-    "q_quality_classifier" -> qualityClassifierOracle(nBuckets = 64,
-      rounds = 4),
-    // 2-feature replay: seen-flagged weights, exact (f, coverage)
-    // micros, per-feature standardization, 3x3 adjugate Newton unroll
-    "q_quality_classifier2" -> qualityClassifier2Oracle(nBuckets = 4096,
-      rounds = 4),
-    "q_fit_logistic" ->
-      """WITH d AS (SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-        |                  CAST(n_chars AS DOUBLE) AS x FROM documents),
-        |st AS (SELECT avg(x) AS m, stddev_samp(x) AS sd FROM d),
-        |z AS (SELECT y, (x - m) / sd AS z FROM d, st),
-        |b0r AS (SELECT 0.0 AS b0, 0.0 AS b1),
-        |p0 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
-        |              b0, b1 FROM z, b0r),
-        |s0 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
-        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
-        |    sum(p * (1.0 - p) * z * z) AS h11,
-        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p0),
-        |b1r AS (SELECT n,
-        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
-        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
-        |  FROM s0),
-        |p1 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
-        |              b0, b1 FROM z, b1r),
-        |s1 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
-        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
-        |    sum(p * (1.0 - p) * z * z) AS h11,
-        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p1),
-        |b2r AS (SELECT n,
-        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
-        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
-        |  FROM s1),
-        |p2 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
-        |              b0, b1 FROM z, b2r),
-        |s2 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
-        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
-        |    sum(p * (1.0 - p) * z * z) AS h11,
-        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p2),
-        |b3r AS (SELECT n,
-        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
-        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
-        |  FROM s2),
-        |p3 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
-        |              b0, b1 FROM z, b3r),
-        |s3 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
-        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
-        |    sum(p * (1.0 - p) * z * z) AS h11,
-        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p3),
-        |b4r AS (SELECT n,
-        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
-        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
-        |  FROM s3),
-        |fin AS (SELECT z.y,
-        |    1.0 / (1.0 + exp(0.0 - (b.b0 + b.b1 * z.z))) AS p,
-        |    b.n, b.b0, b.b1 FROM z, b4r b)
-        |SELECT CAST(any_value(n) AS BIGINT) AS n,
-        |  round(any_value(b0), 6) + 0.0 AS b0,
-        |  round(any_value(b1), 6) + 0.0 AS b1,
-        |  round(0.0 - avg(y * ln(p) + (1.0 - y) * ln(1.0 - p)), 6) + 0.0
-        |    AS logloss
-        |FROM fin""".stripMargin,
-    // AR(3) Yule-Walker fit + 5-step forecast: the oracle replays the
-    // standardization, the autocovariance sums, the Cramer solve (same
-    // expression text = same float op order), and the unrolled recursion
-    "q_ar_forecast" ->
-      """WITH series AS (
-        |  SELECT o_orderdate AS day, round(sum(o_totalprice), 2) AS total
-        |  FROM orders GROUP BY 1),
-        |st AS (SELECT avg(total) AS m, stddev_samp(total) AS sd
-        |       FROM series),
-        |z AS (SELECT day, (total - m) / sd AS z FROM series, st),
-        |lagged AS (SELECT day, z,
-        |    lag(z, 1) OVER (ORDER BY day) AS z1,
-        |    lag(z, 2) OVER (ORDER BY day) AS z2,
-        |    lag(z, 3) OVER (ORDER BY day) AS z3 FROM z),
-        |sums AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(z * z) AS s0, sum(z * z1) AS s1,
-        |    sum(z * z2) AS s2, sum(z * z3) AS s3
-        |  FROM lagged),
-        |cv AS (SELECT n, s0 / n AS c0, s1 / n AS c1, s2 / n AS c2,
-        |    s3 / n AS c3 FROM sums),
-        |dt AS (SELECT n, c0, c1, c2, c3,
-        |    c0 * (c0 * c0 - c1 * c1) - c1 * (c1 * c0 - c1 * c2)
-        |      + c2 * (c1 * c1 - c0 * c2) AS det
-        |  FROM cv),
-        |abc AS (SELECT n,
-        |    (c1 * (c0 * c0 - c1 * c1) - c1 * (c2 * c0 - c1 * c3)
-        |      + c2 * (c2 * c1 - c0 * c3)) / det AS a1,
-        |    (c0 * (c2 * c0 - c1 * c3) - c1 * (c1 * c0 - c1 * c2)
-        |      + c2 * (c1 * c3 - c2 * c2)) / det AS a2,
-        |    (c0 * (c0 * c3 - c2 * c1) - c1 * (c1 * c3 - c2 * c2)
-        |      + c1 * (c1 * c1 - c0 * c2)) / det AS a3
-        |  FROM dt),
-        |anch AS (SELECT z AS zl1, z1 AS zl2, z2 AS zl3 FROM lagged
-        |         WHERE day = (SELECT max(day) FROM lagged)),
-        |one AS (SELECT a1, a2, a3, n, zl1, zl2, zl3, m, sd
-        |        FROM abc, anch, st),
-        |r1 AS (SELECT *, a1 * zl1 + a2 * zl2 + a3 * zl3 AS f1 FROM one),
-        |r2 AS (SELECT *, a1 * f1 + a2 * zl1 + a3 * zl2 AS f2 FROM r1),
-        |r3 AS (SELECT *, a1 * f2 + a2 * f1 + a3 * zl1 AS f3 FROM r2),
-        |r4 AS (SELECT *, a1 * f3 + a2 * f2 + a3 * f1 AS f4 FROM r3),
-        |r5 AS (SELECT *, a1 * f4 + a2 * f3 + a3 * f2 AS f5 FROM r4),
-        |steps AS (
-        |  SELECT 1 AS k, f1 AS f FROM r5
-        |  UNION ALL SELECT 2, f2 FROM r5
-        |  UNION ALL SELECT 3, f3 FROM r5
-        |  UNION ALL SELECT 4, f4 FROM r5
-        |  UNION ALL SELECT 5, f5 FROM r5)
-        |SELECT CAST(s.k AS INTEGER) AS step,
-        |  CAST(r.n AS BIGINT) AS n_obs,
-        |  round(r.a1, 6) + 0.0 AS a1,
-        |  round(r.a2, 6) + 0.0 AS a2,
-        |  round(r.a3, 6) + 0.0 AS a3,
-        |  round(s.f, 6) + 0.0 AS z_next,
-        |  round(r.m + r.sd * s.f, 2) + 0.0 AS forecast
-        |FROM steps s, r5 r ORDER BY step""".stripMargin,
-    // PII redaction: identical RE2-safe regexes, g flag on the DuckDB side
-    "q_redact" ->
-      """WITH e AS (
-        |  SELECT doc_id, text,
-        |    regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |      '<EMAIL>', 'g') AS after_email
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text,
-        |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |     + len(regexp_extract_all(after_email, '[0-9]{4,}')) AS INTEGER)
-        |    AS n_redactions,
-        |  regexp_replace(after_email, '[0-9]{4,}', '<NUM>', 'g') AS redacted
-        |FROM e ORDER BY doc_id""".stripMargin,
-    // PII-density replay: identical injected contact lines, identical
-    // regexes, digit runs on the email-redacted text, source-keyed sums
-    "q_pii_report" ->
-      """WITH aug AS (
-        |  SELECT source,
-        |    CASE WHEN doc_id % 3 = 0 THEN text || ' contact user'
-        |        || CAST(doc_id AS VARCHAR) || '@mail.example.com ref '
-        |        || CAST(doc_id * 7919 + 100000 AS VARCHAR)
-        |      ELSE text END AS text
-        |  FROM documents),
-        |d AS (
-        |  SELECT source,
-        |    CAST(len(regexp_extract_all(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |      AS BIGINT) AS e,
-        |    CAST(len(regexp_extract_all(regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |      '<EMAIL>', 'g'), '[0-9]{4,}')) AS BIGINT) AS nr,
-        |    CAST(length(text) AS BIGINT) AS c
-        |  FROM aug)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN e + nr > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_docs_with_pii,
-        |  CAST(sum(e) AS BIGINT) AS n_emails,
-        |  CAST(sum(nr) AS BIGINT) AS n_digit_runs,
-        |  round(CAST(sum(e) + sum(nr) AS DOUBLE) * 1000.0
-        |    / CAST(sum(c) AS DOUBLE), 6) AS pii_per_kchar
-        |FROM d GROUP BY source ORDER BY source""".stripMargin,
-    // novelty replay: reference distinct-shingle vocabulary, left join,
-    // per-doc miss fraction
-    "q_novelty" ->
-      """WITH inc AS (SELECT doc_id, string_split(text, ' ') AS t
-        |             FROM documents WHERE doc_id % 7 = 0),
-        |ref AS (SELECT doc_id, string_split(text, ' ') AS t
-        |        FROM documents WHERE doc_id % 7 <> 0),
-        |rv AS (SELECT DISTINCT array_to_string(t[i:i+2], ' ') AS s
-        |       FROM ref, UNNEST(range(1, greatest(len(t)-1, 2)))
-        |         AS u(i)),
-        |ish AS (SELECT DISTINCT doc_id,
-        |          array_to_string(t[i:i+2], ' ') AS s
-        |        FROM inc, UNNEST(range(1, greatest(len(t)-1, 2)))
-        |          AS u(i))
-        |SELECT ish.doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_shingles,
-        |  CAST(sum(CASE WHEN rv.s IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_novel,
-        |  round(sum(CASE WHEN rv.s IS NULL THEN 1 ELSE 0 END) * 1.0
-        |    / count(*), 6) AS novelty_rate
-        |FROM ish LEFT JOIN rv ON rv.s = ish.s
-        |GROUP BY ish.doc_id ORDER BY ish.doc_id""".stripMargin,
-    // trigram stupid-backoff replay: the three train count tables, the
-    // same LEFT-join chain and CASE ladder (exact-count quotients,
-    // dyadic lambda), per-doc ln sum rounded 6
-    "q_lm_trigram" -> (lmTrigramChainSql + "\n" +
-      """SELECT ev.doc_id, pd.n_trigrams, pd.n_tri_hits, pd.n_bi_hits,
-        |  pd.n_uni_hits,
-        |  round(pd.lp / pd.n_trigrams, 6) AS avg_logscore,
-        |  round(exp(-(pd.lp / pd.n_trigrams)), 6) AS ppl
-        |FROM ev LEFT JOIN pd USING (doc_id)
-        |ORDER BY ev.doc_id""".stripMargin),
-    // CCNet bucket replay: the same trigram chain, global 1/3 and 2/3
-    // percentile thresholds over the round-6 ppl, CASE buckets,
-    // per-source shares with order-free min/max
-    "q_ccnet_buckets" -> (lmTrigramChainSql + ",\n" +
-      """ppl AS (SELECT ev.doc_id, ev.source,
-        |    round(exp(-(pd.lp / pd.n_trigrams)), 6) AS ppl
-        |  FROM ev LEFT JOIN pd USING (doc_id)),
-        |nnr AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ppl
-        |        WHERE ppl IS NOT NULL),
-        |cume AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM (SELECT ppl AS v, CAST(count(*) AS BIGINT) AS c
-        |        FROM ppl WHERE ppl IS NOT NULL GROUP BY 1)),
-        |thr AS (SELECT
-        |    min(CASE WHEN cum * 3 >= nnr.n THEN v END) AS t1,
-        |    min(CASE WHEN cum * 3 >= nnr.n * 2 THEN v END) AS t2
-        |  FROM cume CROSS JOIN nnr),
-        |bkt AS (SELECT doc_id, source, ppl,
-        |    CASE WHEN ppl IS NULL THEN 'unscored'
-        |         WHEN ppl <= thr.t1 THEN 'head'
-        |         WHEN ppl <= thr.t2 THEN 'middle'
-        |         ELSE 'tail' END AS bucket
-        |  FROM ppl CROSS JOIN thr),
-        |tots AS (SELECT source, CAST(count(*) AS BIGINT) AS n_src
-        |  FROM bkt GROUP BY 1)
-        |SELECT bkt.source, bkt.bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  round(CAST(count(*) AS DOUBLE) / any_value(tots.n_src), 6)
-        |    AS share,
-        |  round(min(bkt.ppl), 6) AS min_ppl,
-        |  round(max(bkt.ppl), 6) AS max_ppl
-        |FROM bkt JOIN tots USING (source) GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin),
-    // 5-gram backoff replay: the shared 5-gram chain's per-doc final
-    "q_lm_5gram" -> (lm5gramChainSql + "\n" +
-      """SELECT ev.doc_id, pd.n_5grams, pd.n_5_hits, pd.n_4_hits,
-        |  pd.n_3_hits, pd.n_2_hits, pd.n_1_hits,
-        |  round(pd.lp / pd.n_5grams, 6) AS avg_logscore,
-        |  round(exp(-(pd.lp / pd.n_5grams)), 6) AS ppl
-        |FROM ev LEFT JOIN pd USING (doc_id)
-        |ORDER BY ev.doc_id""".stripMargin),
-    // published-LM per-source fluency report: the same train/score
-    // chain (the index path is bit-identical by construction — the
-    // PipelineOpsSpec A/B), rolled up per source with exact integer
-    // rung sums, round-6 share quotients, order-free min/max ppl
-    "q_lm_published" -> (lm5gramChainSql + "\n" +
-      """SELECT source, n_docs, n_scored, n_5grams, n_5_hits, n_4_hits,
-        |  n_3_hits, n_2_hits, n_1_hits, min_ppl, max_ppl,
-        |  CASE WHEN n_5grams > 0 THEN
-        |    round(CAST(n_5_hits + n_4_hits AS DOUBLE) / n_5grams, 6)
-        |  END AS share_deep,
-        |  CASE WHEN n_5grams > 0 THEN
-        |    round(CAST(n_1_hits AS DOUBLE) / n_5grams, 6)
-        |  END AS share_base
-        |FROM (
-        |  SELECT ev.source,
-        |    CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(CASE WHEN pd.n_5grams IS NOT NULL THEN 1 ELSE 0
-        |      END) AS BIGINT) AS n_scored,
-        |    CAST(coalesce(sum(pd.n_5grams), 0) AS BIGINT) AS n_5grams,
-        |    CAST(coalesce(sum(pd.n_5_hits), 0) AS BIGINT) AS n_5_hits,
-        |    CAST(coalesce(sum(pd.n_4_hits), 0) AS BIGINT) AS n_4_hits,
-        |    CAST(coalesce(sum(pd.n_3_hits), 0) AS BIGINT) AS n_3_hits,
-        |    CAST(coalesce(sum(pd.n_2_hits), 0) AS BIGINT) AS n_2_hits,
-        |    CAST(coalesce(sum(pd.n_1_hits), 0) AS BIGINT) AS n_1_hits,
-        |    min(round(exp(-(pd.lp / pd.n_5grams)), 6)) AS min_ppl,
-        |    max(round(exp(-(pd.lp / pd.n_5grams)), 6)) AS max_ppl
-        |  FROM ev LEFT JOIN pd USING (doc_id) GROUP BY 1) t
-        |ORDER BY source""".stripMargin),
-    // index-merge lifecycle: the oracle is the FULL-train (% 7 != 0)
-    // rebuild — the q_lm_published chain VERBATIM — while the Spark
-    // side merges yesterday's (% 7 ∉ {0,6}) index with today's
-    // (% 7 == 6) batch, so a hash match IS the merge ≡ rebuild proof
-    // cross-engine
-    "q_lm_index_merge" -> (lm5gramChainSql + "\n" +
-      """SELECT source, n_docs, n_scored, n_5grams, n_5_hits, n_4_hits,
-        |  n_3_hits, n_2_hits, n_1_hits, min_ppl, max_ppl,
-        |  CASE WHEN n_5grams > 0 THEN
-        |    round(CAST(n_5_hits + n_4_hits AS DOUBLE) / n_5grams, 6)
-        |  END AS share_deep,
-        |  CASE WHEN n_5grams > 0 THEN
-        |    round(CAST(n_1_hits AS DOUBLE) / n_5grams, 6)
-        |  END AS share_base
-        |FROM (
-        |  SELECT ev.source,
-        |    CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(CASE WHEN pd.n_5grams IS NOT NULL THEN 1 ELSE 0
-        |      END) AS BIGINT) AS n_scored,
-        |    CAST(coalesce(sum(pd.n_5grams), 0) AS BIGINT) AS n_5grams,
-        |    CAST(coalesce(sum(pd.n_5_hits), 0) AS BIGINT) AS n_5_hits,
-        |    CAST(coalesce(sum(pd.n_4_hits), 0) AS BIGINT) AS n_4_hits,
-        |    CAST(coalesce(sum(pd.n_3_hits), 0) AS BIGINT) AS n_3_hits,
-        |    CAST(coalesce(sum(pd.n_2_hits), 0) AS BIGINT) AS n_2_hits,
-        |    CAST(coalesce(sum(pd.n_1_hits), 0) AS BIGINT) AS n_1_hits,
-        |    min(round(exp(-(pd.lp / pd.n_5grams)), 6)) AS min_ppl,
-        |    max(round(exp(-(pd.lp / pd.n_5grams)), 6)) AS max_ppl
-        |  FROM ev LEFT JOIN pd USING (doc_id) GROUP BY 1) t
-        |ORDER BY source""".stripMargin),
-    // the streaming twin's batch replay: per-hour two-level rollup of
-    // the same depth chain (sc carries the per-gram backoff depth)
-    "q_windowed_lm_depth" -> (lm5gramChainSql + ",\n" +
-      """pdw AS (SELECT sc.doc_id,
-        |    time_bucket(INTERVAL 1 HOUR,
-        |      TIMESTAMP '2024-01-01 00:00:00' + to_minutes(sc.doc_id))
-        |      AS ws,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN depth >= 4 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS deep,
-        |    CAST(sum(CASE WHEN depth = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS base
-        |  FROM sc GROUP BY 1, 2)
-        |SELECT CAST(ws AS TIMESTAMP) AS window_start,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n) AS BIGINT) AS n_5grams,
-        |  CAST(sum(deep) AS BIGINT) AS n_deep_hits,
-        |  CAST(sum(base) AS BIGINT) AS n_base_hits,
-        |  round(CAST(sum(deep) AS DOUBLE) / sum(n), 6) AS share_deep,
-        |  round(CAST(sum(base) AS DOUBLE) / sum(n), 6) AS share_base
-        |FROM pdw GROUP BY 1 ORDER BY 1""".stripMargin),
-    // CCNet bucket replay over the 5-gram chain: identical
-    // exact-integer ECDF thirds, CASE buckets, per-source shares
-    "q_ccnet_buckets5" -> (lm5gramChainSql + ",\n" +
-      """ppl AS (SELECT ev.doc_id, ev.source,
-        |    round(exp(-(pd.lp / pd.n_5grams)), 6) AS ppl
-        |  FROM ev LEFT JOIN pd USING (doc_id)),
-        |nnr AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ppl
-        |        WHERE ppl IS NOT NULL),
-        |cume AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM (SELECT ppl AS v, CAST(count(*) AS BIGINT) AS c
-        |        FROM ppl WHERE ppl IS NOT NULL GROUP BY 1)),
-        |thr AS (SELECT
-        |    min(CASE WHEN cum * 3 >= nnr.n THEN v END) AS t1,
-        |    min(CASE WHEN cum * 3 >= nnr.n * 2 THEN v END) AS t2
-        |  FROM cume CROSS JOIN nnr),
-        |bkt AS (SELECT doc_id, source, ppl,
-        |    CASE WHEN ppl IS NULL THEN 'unscored'
-        |         WHEN ppl <= thr.t1 THEN 'head'
-        |         WHEN ppl <= thr.t2 THEN 'middle'
-        |         ELSE 'tail' END AS bucket
-        |  FROM ppl CROSS JOIN thr),
-        |tots AS (SELECT source, CAST(count(*) AS BIGINT) AS n_src
-        |  FROM bkt GROUP BY 1)
-        |SELECT bkt.source, bkt.bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  round(CAST(count(*) AS DOUBLE) / any_value(tots.n_src), 6)
-        |    AS share,
-        |  round(min(bkt.ppl), 6) AS min_ppl,
-        |  round(max(bkt.ppl), 6) AS max_ppl
-        |FROM bkt JOIN tots USING (source) GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin),
-    // CCNet pipeline replay: the 5-gram LM chain + the classifier-2
-    // training chain + the trigram langId chain composed over the
-    // eval split, exact-thirds threshold, md5 keeper among stage-3
-    // survivors, one conditional-sum aggregate unpivoted as UNION
-    "q_ccnet_pipeline" -> (ccnetFlagCtes + ",\n" +
-      s"""a AS (SELECT CAST(count(*) AS BIGINT) AS n0,
-        |    CAST(sum(toks) AS BIGINT) AS t0,
-        |    CAST(sum(CASE WHEN p1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN p1 THEN toks ELSE 0 END) AS BIGINT)
-        |      AS t1,
-        |    CAST(sum(CASE WHEN p1 AND p2 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n2,
-        |    CAST(sum(CASE WHEN p1 AND p2 THEN toks ELSE 0 END)
-        |      AS BIGINT) AS t2,
-        |    CAST(sum(CASE WHEN p1 AND p2 AND p3 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n3,
-        |    CAST(sum(CASE WHEN p1 AND p2 AND p3 THEN toks ELSE 0 END)
-        |      AS BIGINT) AS t3,
-        |    CAST(sum(CASE WHEN p1 AND p2 AND p3 AND kp
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n4,
-        |    CAST(sum(CASE WHEN p1 AND p2 AND p3 AND kp
-        |      THEN toks ELSE 0 END) AS BIGINT) AS t4
-        |  FROM f2)
-        |SELECT '0_input' AS stage, n0 AS n_docs, t0 AS n_tokens FROM a
-        |UNION ALL SELECT '1_lang', n1, t1 FROM a
-        |UNION ALL SELECT '2_ppl', n2, t2 FROM a
-        |UNION ALL SELECT '3_classifier', n3, t3 FROM a
-        |UNION ALL SELECT '4_exact_dedup', n4, t4 FROM a
-        |ORDER BY stage""".stripMargin),
-    // capstone replay: the SAME flag CTEs select the funnel survivors,
-    // then the q_mix_budget waterfill chain runs over them (fromTable =
-    // surv) and the q_mix_budget_apply md5-lattice keep rule + rollup
-    // executes the plan — every float the same expression over the
-    // same operands in the same order as the Spark composition
-    "q_pipeline_mix" -> (ccnetFlagCtes + ",\n" +
-      """surv AS (SELECT evd.doc_id, evd.source, evd.text
-        |  FROM f2 JOIN evd USING (doc_id)
-        |  WHERE f2.p1 AND f2.p2 AND f2.p3 AND f2.kp),
-        |""".stripMargin +
-      mixBudgetChainSql(MixTau, MixBudgetNum, MixBudgetDen,
-        maxEpochs = 1, fromTable = "surv", withPrefix = "") +
-      """,
-        |pl AS (SELECT source,
-        |    CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END
-        |      AS alloc_tokens,
-        |    CAST(CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END AS DOUBLE)
-        |      / n_tokens AS rate
-        |  FROM mbw5),
-        |dk AS (SELECT sv.source, sv.doc_id,
-        |    CAST(len(string_split(sv.text, ' ')) AS BIGINT) AS toks,
-        |    pl.alloc_tokens,
-        |    (CAST('0x' || substr(md5('mba_' || CAST(sv.doc_id
-        |        AS VARCHAR)), 1, 15) AS BIGINT) % 1048576)
-        |      < greatest(CAST(floor(pl.rate * 1048576) AS BIGINT),
-        |                 least(pl.alloc_tokens, 1)) AS kp
-        |  FROM surv sv JOIN pl ON pl.source = sv.source)
-        |SELECT source, CAST(count(*) AS BIGINT) AS surv_docs,
-        |  CAST(sum(toks) AS BIGINT) AS surv_tokens,
-        |  CAST(min(alloc_tokens) AS BIGINT) AS planned_tokens,
-        |  CAST(sum(CASE WHEN kp THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS kept_docs,
-        |  CAST(sum(CASE WHEN kp THEN toks ELSE 0 END) AS BIGINT)
-        |    AS kept_tokens,
-        |  round(CAST(min(alloc_tokens) AS DOUBLE) / sum(toks), 6)
-        |    AS planned_rate,
-        |  round(CAST(sum(CASE WHEN kp THEN toks ELSE 0 END) AS DOUBLE)
-        |    / sum(toks), 6) AS achieved_rate
-        |FROM dk GROUP BY source ORDER BY source""".stripMargin),
-    // DSIR replay: target/raw hashed-trigram bucket counts, micro
-    // log-ratio weights over ALL buckets, exact-long doc sums, the
-    // md5-Gumbel key, (key DESC, id) top-k
-    "q_dsir" -> (dsirChainSql +
-      """
-        |SELECT CAST(rank AS INTEGER) AS rank, doc_id, n_grams,
-        |  ws AS w_micro_sum, round(gum, 6) AS gumbel,
-        |  round(key, 6) AS sample_key
-        |FROM rk WHERE rank <= 50 ORDER BY rank""".stripMargin),
-    // DSIR mix replay: the same chain's top-k selection rolled up per
-    // source against the corpus base rates — selected vs corpus share
-    "q_dsir_mix" -> (dsirChainSql +
-      """,
-        |sel AS (SELECT doc_id FROM rk WHERE rank <= 50),
-        |nsr AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM sel),
-        |ncr AS (SELECT CAST(count(*) AS BIGINT) AS nc FROM documents),
-        |mix AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_corpus,
-        |    CAST(sum(CASE WHEN sel.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_selected
-        |  FROM documents d LEFT JOIN sel ON sel.doc_id = d.doc_id
-        |  GROUP BY 1)
-        |SELECT source, n_corpus, n_selected,
-        |  round(CAST(n_corpus AS DOUBLE) / ncr.nc, 6) AS corpus_share,
-        |  round(CAST(n_selected AS DOUBLE) / nsr.ns, 6)
-        |    AS selected_share,
-        |  round(CAST(n_selected AS DOUBLE) / nsr.ns
-        |    - CAST(n_corpus AS DOUBLE) / ncr.nc, 6) AS delta_share
-        |FROM mix CROSS JOIN nsr CROSS JOIN ncr
-        |ORDER BY source""".stripMargin),
-    // diversity replay: the same chain's top-k, the md5-ordered
-    // size-matched baseline, and token/3-shingle distinct counts per
-    // scope (shingle slice = the q_fingerprint sh-CTE convention)
-    "q_selection_diversity" -> (dsirChainSql +
-      """,
-        |sel AS (SELECT doc_id FROM rk WHERE rank <= 50),
-        |bas AS (SELECT doc_id FROM documents
-        |        ORDER BY CAST('0x' || substr(md5(CAST(doc_id
-        |          AS VARCHAR)), 1, 15) AS BIGINT), doc_id
-        |        LIMIT 50),
-        |mem AS (SELECT doc_id, '1_corpus' AS scope FROM documents
-        |        UNION ALL
-        |        SELECT doc_id, '2_dsir_selected' FROM sel
-        |        UNION ALL
-        |        SELECT doc_id, '3_hash_baseline' FROM bas),
-        |wt AS (SELECT mem.scope,
-        |         string_split(lower(d.text), ' ') AS t
-        |       FROM mem JOIN documents d ON d.doc_id = mem.doc_id),
-        |tk AS (SELECT scope, CAST(count(*) AS BIGINT) AS n_tokens,
-        |         CAST(count(DISTINCT tok) AS BIGINT) AS distinct_tokens
-        |       FROM wt, UNNEST(t) AS u(tok) GROUP BY 1),
-        |shr AS (SELECT scope, array_to_string(t[i.i:i.i + 2], ' ') AS s
-        |        FROM wt CROSS JOIN
-        |          UNNEST(range(1, greatest(len(t) - 1, 2))) AS i(i)),
-        |sh AS (SELECT scope, CAST(count(*) AS BIGINT) AS n_shingles,
-        |         CAST(count(DISTINCT s) AS BIGINT) AS distinct_shingles
-        |       FROM shr GROUP BY 1),
-        |nd AS (SELECT scope, CAST(count(*) AS BIGINT) AS n_docs
-        |       FROM mem GROUP BY 1)
-        |SELECT nd.scope, n_docs, n_tokens, distinct_tokens,
-        |  round(CAST(distinct_tokens AS DOUBLE) / n_tokens, 6) AS ttr,
-        |  n_shingles, distinct_shingles,
-        |  round(CAST(distinct_shingles AS DOUBLE) / n_shingles, 6)
-        |    AS shingle_ttr
-        |FROM nd JOIN tk ON tk.scope = nd.scope
-        |JOIN sh ON sh.scope = nd.scope
-        |ORDER BY 1""".stripMargin),
-    // windowed-quality replay: same synthesized minutes-offset ts,
-    // same junk replacement, the q_quality battery per doc, hour
-    // buckets, 4-decimal quality totals
-    "q_windowed_quality" ->
-      """WITH d AS (SELECT
-        |    TIMESTAMP '2024-01-01 00:00:00' + to_minutes(doc_id) AS ts,
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN '$$$ 4099 2077 !!! @@@ 88 99 ##' ELSE text END
-        |      AS line
-        |  FROM documents),
-        |q AS (SELECT ts,
-        |    CAST(len(string_split(line, ' ')) AS INTEGER) AS n_tokens,
-        |    length(replace(line, ' ', '')) * 1.0
-        |      / greatest(len(string_split(line, ' ')), 1)
-        |      AS mean_tok_len,
-        |    len(list_filter(string_split(lower(line), ' '), x -> x IN
-        |      ('the','a','of','and','is','in','to'))) * 1.0
-        |      / greatest(len(string_split(line, ' ')), 1) AS stop_ratio,
-        |    len(regexp_extract_all(line, '[[:punct:]]')) * 1.0
-        |      / greatest(length(line), 1) AS punct_ratio,
-        |    len(regexp_extract_all(line, '[0-9]')) * 1.0
-        |      / greatest(length(line), 1) AS digit_ratio
-        |  FROM d),
-        |sc AS (SELECT ts,
-        |    round(greatest(least(
-        |      (CASE WHEN n_tokens BETWEEN 5 AND 1000
-        |            THEN 0.4 ELSE 0.0 END)
-        |      + (CASE WHEN mean_tok_len BETWEEN 3.0 AND 12.0
-        |              THEN 0.3 ELSE 0.0 END)
-        |      + (CASE WHEN stop_ratio >= 0.01 THEN 0.3 ELSE 0.0 END)
-        |      - (CASE WHEN punct_ratio > 0.2 THEN 0.2 ELSE 0.0 END)
-        |      - (CASE WHEN digit_ratio > 0.2 THEN 0.2 ELSE 0.0 END),
-        |      1.0), 0.0), 6) AS quality
-        |  FROM q)
-        |SELECT CAST(time_bucket(INTERVAL 1 HOUR, ts) AS TIMESTAMP)
-        |    AS window_start,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_kept,
-        |  round(CAST(sum(CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END)
-        |      AS DOUBLE) / count(*), 6) AS kept_rate,
-        |  round(sum(quality), 4) AS quality_total
-        |FROM sc GROUP BY 1 ORDER BY window_start""".stripMargin,
-    // damage replay: same synthesized minutes-offset ts, same
-    // suffix injections, per-hour conditional sums with per-kilochar
-    // densities
-    "q_windowed_damage" ->
-      """WITH d AS (SELECT
-        |    TIMESTAMP '2024-01-01 00:00:00' + to_minutes(doc_id) AS ts,
-        |    CASE WHEN doc_id % 9 = 0
-        |      THEN COALESCE(text, '') || ' �� damaged'
-        |      WHEN doc_id % 9 = 1
-        |      THEN COALESCE(text, '') || ' ' || chr(7) || chr(1)
-        |        || ' junk'
-        |      ELSE COALESCE(text, '') END AS text
-        |  FROM documents),
-        |m AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS ws,
-        |    CAST(length(text) AS BIGINT) AS nc,
-        |    CAST(len(regexp_extract_all(text, '�')) AS BIGINT) AS repl,
-        |    CAST(len(regexp_extract_all(text,
-        |      '[\x00-\x08\x0B\x0C\x0E-\x1F]')) AS BIGINT) AS ctrl
-        |  FROM d)
-        |SELECT CAST(ws AS TIMESTAMP) AS window_start,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN repl > 0 OR ctrl > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_damaged,
-        |  round(CAST(sum(CASE WHEN repl > 0 OR ctrl > 0
-        |      THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
-        |    AS damage_rate,
-        |  round(CAST(sum(repl) AS DOUBLE) * 1000 / sum(nc), 6)
-        |    AS repl_per_kchars,
-        |  round(CAST(sum(ctrl) AS DOUBLE) * 1000 / sum(nc), 6)
-        |    AS ctrl_per_kchars
-        |FROM m GROUP BY 1 ORDER BY window_start""".stripMargin,
-    // length-mix replay: same synthesized minutes-offset ts, same
-    // first-10-tokens clipping, dyadic bucket CASE, hour buckets
-    // crossed with the fixed 4-bucket domain (zeros kept)
-    "q_windowed_length_mix" ->
-      """WITH d AS (SELECT
-        |    TIMESTAMP '2024-01-01 00:00:00' + to_minutes(doc_id) AS ts,
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN array_to_string(
-        |        string_split(COALESCE(text, ''), ' ')[1:10], ' ')
-        |      ELSE COALESCE(text, '') END AS text
-        |  FROM documents),
-        |tk AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS ws,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks
-        |  FROM d),
-        |bk AS (SELECT ws, toks,
-        |    CASE WHEN toks < 64 THEN '1_lt64'
-        |         WHEN toks < 256 THEN '2_lt256'
-        |         WHEN toks < 1024 THEN '3_lt1024'
-        |         ELSE '4_ge1024' END AS b
-        |  FROM tk),
-        |nw AS (SELECT ws, CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST(sum(toks) AS BIGINT) AS n_tokens
-        |       FROM bk GROUP BY 1),
-        |bl(bucket) AS (VALUES ('1_lt64'), ('2_lt256'), ('3_lt1024'),
-        |      ('4_ge1024')),
-        |cnt AS (SELECT ws, b, CAST(count(*) AS BIGINT) AS c,
-        |          CAST(sum(toks) AS BIGINT) AS tt
-        |        FROM bk GROUP BY 1, 2)
-        |SELECT CAST(nw.ws AS TIMESTAMP) AS window_start, bl.bucket,
-        |  CAST(COALESCE(cnt.c, 0) AS BIGINT) AS n_in_bucket,
-        |  CAST(COALESCE(cnt.tt, 0) AS BIGINT) AS tokens_in_bucket,
-        |  nw.n_docs, nw.n_tokens,
-        |  round(CAST(COALESCE(cnt.c, 0) AS DOUBLE) / nw.n_docs, 6)
-        |    AS doc_share,
-        |  round(CAST(COALESCE(cnt.tt, 0) AS DOUBLE) / nw.n_tokens, 6)
-        |    AS token_share
-        |FROM nw CROSS JOIN bl
-        |LEFT JOIN cnt ON cnt.ws = nw.ws AND cnt.b = bl.bucket
-        |ORDER BY 1, 2""".stripMargin,
-    // lang-mix replay: same synthesized minutes-offset ts, same
-    // fixture-sentence injections, the trigram langId chain per doc,
-    // hour buckets crossed with the fixed 6-label domain (zeros kept)
-    "q_windowed_lang_mix" -> (s"""WITH d AS (SELECT
-        |    TIMESTAMP '2024-01-01 00:00:00' + to_minutes(doc_id) AS ts,
-        |    CASE WHEN doc_id % 6 = 0
-        |      THEN 'le train quitte la gare à neuf heures '
-        |        || 'et arrive dans la soirée'
-        |      WHEN doc_id % 6 = 1
-        |      THEN 'der zug verlässt den bahnhof um neun '
-        |        || 'und kommt am abend an'
-        |      ELSE COALESCE(text, '') END AS text
-        |  FROM documents),
-        |${langScoreCtes("d", "ts")},
-        |base AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS ws,
-        |           pred_lang FROM lpr),
-        |nw AS (SELECT ws, CAST(count(*) AS BIGINT) AS n_docs
-        |       FROM base GROUP BY 1),
-        |langs(lang) AS (VALUES ('en'), ('de'), ('es'), ('fr'), ('zh'),
-        |      ('unknown')),
-        |cnt AS (SELECT ws, pred_lang AS lang,
-        |          CAST(count(*) AS BIGINT) AS c
-        |        FROM base GROUP BY 1, 2)
-        |SELECT CAST(nw.ws AS TIMESTAMP) AS window_start, langs.lang,
-        |  COALESCE(cnt.c, 0) AS n_lang, nw.n_docs,
-        |  round(CAST(COALESCE(cnt.c, 0) AS DOUBLE) / nw.n_docs, 6)
-        |    AS share
-        |FROM nw CROSS JOIN langs
-        |LEFT JOIN cnt ON cnt.ws = nw.ws AND cnt.lang = langs.lang
-        |ORDER BY 1, 2""".stripMargin),
-    // dup-rate replay: same synthesized minutes-offset ts, same banner
-    // injection, per-(hour, digest) counts re-aggregated per hour
-    "q_windowed_dup_rate" ->
-      """WITH d AS (SELECT
-        |    TIMESTAMP '2024-01-01 00:00:00' + to_minutes(doc_id) AS ts,
-        |    md5(CASE WHEN doc_id % 5 = 0
-        |      THEN 'breaking subscribe banner chrome'
-        |      ELSE COALESCE(text, '') END) AS dig
-        |  FROM documents),
-        |w AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS ws, dig,
-        |        CAST(count(*) AS BIGINT) AS c
-        |      FROM d GROUP BY 1, 2)
-        |SELECT CAST(ws AS TIMESTAMP) AS window_start,
-        |  CAST(sum(c) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_unique,
-        |  CAST(sum(c - 1) AS BIGINT) AS n_dup,
-        |  round(CAST(sum(c - 1) AS DOUBLE) / sum(c), 6) AS dup_rate
-        |FROM w GROUP BY 1 ORDER BY window_start""".stripMargin,
-    // span-provenance replay: the q_substring_dedup injection and
-    // rolling-fingerprint recurrence, qualified-digest semi-join,
-    // source-pair self-join with the within-source >= 2 rule
-    "q_substring_sources" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN 'this work is licensed under a creative commons '
-        |        || 'attribution share alike license ' ELSE '' END
-        |    || COALESCE(text, '') || ' visit the ' || source
-        |    || ' archive for more stories and daily updates from our '
-        |    || 'editors' AS t
-        |  FROM documents),
-        |tk AS (SELECT doc_id, source, string_split(t, ' ') AS toks
-        |       FROM d),
-        |sp AS (SELECT doc_id, source,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks[i.i + 1 : i.i + 8], x ->
-        |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-        |          % 1048576)),
-        |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-        |  FROM tk CROSS JOIN
-        |    UNNEST(range(greatest(len(toks) - 7, 0))) AS i(i)),
-        |ks AS (SELECT h, source,
-        |         CAST(count(DISTINCT doc_id) AS BIGINT) AS nd
-        |       FROM sp GROUP BY 1, 2),
-        |qual AS (SELECT h FROM ks GROUP BY h HAVING sum(nd) >= 2),
-        |side AS (SELECT ks.* FROM ks JOIN qual USING (h))
-        |SELECT a.source AS source_lo, b.source AS source_hi,
-        |  CAST(count(*) AS BIGINT) AS n_shared_spans
-        |FROM side a JOIN side b ON a.h = b.h
-        |WHERE a.source < b.source
-        |   OR (a.source = b.source AND a.nd >= 2)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // incremental span-screen replay: train-split qualifying digests
-    // (the same rolling-fingerprint recurrence), eval-split span
-    // fingerprints, digest semi-join, exact lag-window interval union
-    "q_substring_incremental" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN 'this work is licensed under a creative commons '
-        |        || 'attribution share alike license ' ELSE '' END
-        |    || COALESCE(text, '') || ' visit the ' || source
-        |    || ' archive for more stories and daily updates from our '
-        |    || 'editors' AS t
-        |  FROM documents),
-        |tr AS (SELECT doc_id, string_split(t, ' ') AS toks FROM d
-        |       WHERE doc_id % 7 <> 0),
-        |trsp AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks[i.i + 1 : i.i + 8], x ->
-        |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-        |          % 1048576)),
-        |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-        |  FROM tr CROSS JOIN
-        |    UNNEST(range(greatest(len(toks) - 7, 0))) AS i(i)),
-        |idx AS (SELECT h FROM trsp GROUP BY h
-        |        HAVING count(DISTINCT doc_id) >= 2),
-        |nb AS (SELECT doc_id, string_split(t, ' ') AS toks FROM d
-        |       WHERE doc_id % 7 = 0),
-        |nbsp AS (SELECT doc_id, i.i AS pos,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks[i.i + 1 : i.i + 8], x ->
-        |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-        |          % 1048576)),
-        |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-        |  FROM nb CROSS JOIN
-        |    UNNEST(range(greatest(len(toks) - 7, 0))) AS i(i)),
-        |per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans
-        |        FROM nbsp GROUP BY 1),
-        |tk AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens
-        |       FROM nb),
-        |hit AS (SELECT doc_id, pos FROM nbsp
-        |        WHERE h IN (SELECT h FROM idx)),
-        |cov AS (SELECT doc_id, least(8, COALESCE(pos - lag(pos)
-        |          OVER (PARTITION BY doc_id ORDER BY pos), 8)) AS c
-        |        FROM hit),
-        |ag AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hit_spans,
-        |         CAST(sum(c) AS BIGINT) AS n_flagged_tokens
-        |       FROM cov GROUP BY 1)
-        |SELECT ag.doc_id, tk.n_tokens, per.n_spans, ag.n_hit_spans,
-        |  ag.n_flagged_tokens,
-        |  round(CAST(ag.n_flagged_tokens AS DOUBLE) / tk.n_tokens, 6)
-        |    AS flag_rate
-        |FROM ag JOIN per USING (doc_id) JOIN tk USING (doc_id)
-        |ORDER BY ag.doc_id""".stripMargin,
-    // windowed span-hit replay: the q_substring_incremental chain's
-    // train-split digests + eval-split span fingerprints, hour-bucketed
-    // per (window, doc) then rolled up per window
-    "q_windowed_span_hits" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN 'this work is licensed under a creative commons '
-        |        || 'attribution share alike license ' ELSE '' END
-        |    || COALESCE(text, '') || ' visit the ' || source
-        |    || ' archive for more stories and daily updates from our '
-        |    || 'editors' AS t
-        |  FROM documents),
-        |tr AS (SELECT doc_id, string_split(t, ' ') AS toks FROM d
-        |       WHERE doc_id % 7 <> 0),
-        |trsp AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks[i.i + 1 : i.i + 8], x ->
-        |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-        |          % 1048576)),
-        |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-        |  FROM tr CROSS JOIN
-        |    UNNEST(range(greatest(len(toks) - 7, 0))) AS i(i)),
-        |idx AS (SELECT h FROM trsp GROUP BY h
-        |        HAVING count(DISTINCT doc_id) >= 2),
-        |nb AS (SELECT doc_id,
-        |         time_bucket(INTERVAL 1 HOUR,
-        |           TIMESTAMP '2024-01-01 00:00:00' + to_minutes(doc_id))
-        |           AS ws,
-        |         string_split(t, ' ') AS toks
-        |       FROM d WHERE doc_id % 7 = 0),
-        |nbsp AS (SELECT doc_id, ws,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks[i.i + 1 : i.i + 8], x ->
-        |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-        |          % 1048576)),
-        |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-        |  FROM nb CROSS JOIN
-        |    UNNEST(range(greatest(len(toks) - 7, 0))) AS i(i)),
-        |pd AS (SELECT ws, doc_id, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN h IN (SELECT h FROM idx)
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM nbsp GROUP BY 1, 2)
-        |SELECT CAST(ws AS TIMESTAMP) AS window_start,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n) AS BIGINT) AS n_spans,
-        |  CAST(sum(k) AS BIGINT) AS n_hit_spans,
-        |  CAST(sum(CASE WHEN k > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_flagged_docs,
-        |  round(CAST(sum(k) AS DOUBLE) / sum(n), 6) AS hit_rate
-        |FROM pd GROUP BY 1 ORDER BY window_start""".stripMargin,
-    // span-index-merge lifecycle: the oracle is the FULL-corpus
-    // rebuild (every doc, the same injection + rolling-fingerprint
-    // recurrence, HAVING count >= 2) while the Spark side merges the
-    // train split's UN-thresholded state with the eval batch — a hash
-    // match proves merge ≡ rebuild including the 1+1-occurrence
-    // digests a thresholded artifact would lose
-    "q_span_index_merge" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN 'this work is licensed under a creative commons '
-        |        || 'attribution share alike license ' ELSE '' END
-        |    || COALESCE(text, '') || ' visit the ' || source
-        |    || ' archive for more stories and daily updates from our '
-        |    || 'editors' AS t
-        |  FROM documents),
-        |tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM d),
-        |sp AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks[i.i + 1 : i.i + 8], x ->
-        |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-        |          % 1048576)),
-        |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-        |  FROM tk CROSS JOIN
-        |    UNNEST(range(greatest(len(toks) - 7, 0))) AS i(i))
-        |SELECT h AS span_fp,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-        |FROM sp GROUP BY 1
-        |HAVING count(DISTINCT doc_id) >= 2
-        |ORDER BY span_fp""".stripMargin,
-    // boilerplate-source replay: same injection, same normalized keys,
-    // qualified-key semi-join, source-pair self-join with the
-    // within-source >= 2 rule on self rows
-    "q_boilerplate_sources" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN 'breaking: subscribe banner' || chr(10) ELSE '' END
-        |    || text || chr(10) || '(c) ' || source
-        |    || ' syndication network' AS t
-        |  FROM documents),
-        |l AS (SELECT doc_id, source,
-        |        md5(trim(regexp_replace(lower(line), '\s+', ' ', 'g')))
-        |          AS key
-        |      FROM (SELECT doc_id, source,
-        |              unnest(string_split(t, chr(10))) AS line FROM d)
-        |      WHERE trim(regexp_replace(lower(line), '\s+', ' ', 'g'))
-        |        <> ''),
-        |ks AS (SELECT key, source,
-        |         CAST(count(DISTINCT doc_id) AS BIGINT) AS nd
-        |       FROM l GROUP BY 1, 2),
-        |qual AS (SELECT key FROM ks GROUP BY key
-        |         HAVING sum(nd) >= 2),
-        |side AS (SELECT ks.* FROM ks JOIN qual USING (key))
-        |SELECT a.source AS source_lo, b.source AS source_hi,
-        |  CAST(count(*) AS BIGINT) AS n_shared_lines
-        |FROM side a JOIN side b ON a.key = b.key
-        |WHERE a.source < b.source
-        |   OR (a.source = b.source AND a.nd >= 2)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // line-quality-rewrite replay: identical injected junk lines, the
-    // q_quality battery per line, keep norm-empty or quality >= 0.5,
-    // position-ordered string_agg re-assembly
-    "q_line_quality" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0
-        |      THEN '@@@ 999999 4077 ###' || chr(10) ELSE '' END
-        |    || COALESCE(text, '') || chr(10)
-        |    || '$$$ 4099 2077 buy !!!' AS t
-        |  FROM documents),
-        |sp AS (SELECT doc_id, t, string_split(t, chr(10)) AS ls FROM d),
-        |l AS (SELECT doc_id, i.i AS pos, ls[i.i + 1] AS line,
-        |        trim(regexp_replace(lower(ls[i.i + 1]), '\s+', ' ',
-        |          'g')) AS norm
-        |      FROM sp CROSS JOIN UNNEST(range(len(ls))) AS i(i)),
-        |q AS (SELECT doc_id, pos, line, norm,
-        |    CAST(len(string_split(line, ' ')) AS INTEGER) AS n_tokens,
-        |    length(replace(line, ' ', '')) * 1.0
-        |      / greatest(len(string_split(line, ' ')), 1)
-        |      AS mean_tok_len,
-        |    len(list_filter(string_split(lower(line), ' '), x -> x IN
-        |      ('the','a','of','and','is','in','to'))) * 1.0
-        |      / greatest(len(string_split(line, ' ')), 1) AS stop_ratio,
-        |    len(regexp_extract_all(line, '[[:punct:]]')) * 1.0
-        |      / greatest(length(line), 1) AS punct_ratio,
-        |    len(regexp_extract_all(line, '[0-9]')) * 1.0
-        |      / greatest(length(line), 1) AS digit_ratio
-        |  FROM l),
-        |sc AS (SELECT doc_id, pos, line, norm,
-        |    round(greatest(least(
-        |      (CASE WHEN n_tokens BETWEEN 5 AND 1000
-        |            THEN 0.4 ELSE 0.0 END)
-        |      + (CASE WHEN mean_tok_len BETWEEN 3.0 AND 12.0
-        |              THEN 0.3 ELSE 0.0 END)
-        |      + (CASE WHEN stop_ratio >= 0.01 THEN 0.3 ELSE 0.0 END)
-        |      - (CASE WHEN punct_ratio > 0.2 THEN 0.2 ELSE 0.0 END)
-        |      - (CASE WHEN digit_ratio > 0.2 THEN 0.2 ELSE 0.0 END),
-        |      1.0), 0.0), 6) AS quality
-        |  FROM q),
-        |kept AS (SELECT doc_id, pos, line FROM sc
-        |         WHERE norm = '' OR quality >= 0.5),
-        |reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |          string_agg(line, chr(10) ORDER BY pos) AS clean
-        |        FROM kept GROUP BY doc_id),
-        |nl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines
-        |       FROM l GROUP BY doc_id)
-        |SELECT d.doc_id, nl.n_lines,
-        |  COALESCE(reb.n_kept, 0) AS n_lines_kept,
-        |  nl.n_lines - COALESCE(reb.n_kept, 0) AS n_lines_removed,
-        |  CAST(len(d.t) - len(COALESCE(reb.clean, '')) AS BIGINT)
-        |    AS n_chars_removed,
-        |  COALESCE(reb.clean, '') AS text_clean
-        |FROM d JOIN nl USING (doc_id) LEFT JOIN reb USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    // decontamination: train shingle postings ∩ eval shingle set
-    "q_decontaminate" ->
-      """WITH tr AS (SELECT doc_id, string_split(text, ' ') AS t
-        |            FROM documents WHERE doc_id % 7 <> 0),
-        |te AS (SELECT doc_id, string_split(text, ' ') AS t
-        |       FROM documents WHERE doc_id % 7 = 0),
-        |tsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |        FROM tr, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |esh AS (SELECT DISTINCT array_to_string(t[i:i+2], ' ') AS s
-        |        FROM te, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i))
-        |SELECT doc_id, count(*) AS n_shared
-        |FROM tsh JOIN esh USING (s)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // multi-n leakage replay: per n the same shingle join, eval-keyed
-    // worst-train argmax, LEFT so clean eval docs stay visible
-    "q_decontaminate_multi" -> decontaminateMultiOracle(Seq(8, 13, 20)),
-    // line-dedup replay: identical injected banner/footer, identical
-    // normalized-md5 dup keys, (doc_id, pos) keeper via row_number,
-    // position-ordered string_agg re-assembly
-    "q_line_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN 'breaking: subscribe banner' || chr(10) ELSE '' END
-        |    || COALESCE(text, '') || chr(10) || '(c) ' || source
-        |    || ' syndication network' AS t
-        |  FROM documents),
-        |sp AS (SELECT doc_id, t, string_split(t, chr(10)) AS ls FROM d),
-        |k AS (SELECT doc_id, i.i AS pos, ls[i.i + 1] AS line,
-        |        trim(regexp_replace(lower(ls[i.i + 1]), '\s+', ' ', 'g'))
-        |          AS norm
-        |      FROM sp CROSS JOIN UNNEST(range(len(ls))) AS i(i)),
-        |st AS (SELECT md5(norm) AS key FROM k WHERE norm <> ''
-        |       GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
-        |keepr AS (SELECT key, doc_id AS kid, pos AS kpos FROM (
-        |    SELECT md5(norm) AS key, doc_id, pos, row_number() OVER (
-        |      PARTITION BY md5(norm) ORDER BY doc_id, pos) AS rn
-        |    FROM k WHERE norm <> '') WHERE rn = 1),
-        |kept AS (SELECT k.doc_id, k.pos, k.line FROM k
-        |    LEFT JOIN st ON st.key = md5(k.norm)
-        |    LEFT JOIN keepr ON keepr.key = md5(k.norm)
-        |    WHERE st.key IS NULL
-        |       OR (k.doc_id = keepr.kid AND k.pos = keepr.kpos)),
-        |reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |          string_agg(line, chr(10) ORDER BY pos) AS clean
-        |        FROM kept GROUP BY doc_id),
-        |nl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines
-        |       FROM k GROUP BY doc_id)
-        |SELECT d.doc_id, nl.n_lines,
-        |  COALESCE(reb.n_kept, 0) AS n_lines_kept,
-        |  nl.n_lines - COALESCE(reb.n_kept, 0) AS n_lines_removed,
-        |  CAST(len(d.t) - len(COALESCE(reb.clean, '')) AS BIGINT)
-        |    AS n_chars_removed,
-        |  COALESCE(reb.clean, '') AS text_clean
-        |FROM d JOIN nl USING (doc_id) LEFT JOIN reb USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // exact-substring dedup replay: identical injected license blurb +
-    // source footer, the SAME rolling-fingerprint integer recurrence
-    // per k-token slice (list_reduce over md5 20-bit token hashes),
-    // (doc_id, pos) keeper via row_number, keeper-protected per-token
-    // removal set, position-ordered string_agg re-assembly
-    "q_substring_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN 'this work is licensed under a creative commons '
-        |        || 'attribution share alike license ' ELSE '' END
-        |    || COALESCE(text, '') || ' visit the ' || source
-        |    || ' archive for more stories and daily updates from our '
-        |    || 'editors' AS t
-        |  FROM documents),
-        |tk AS (SELECT doc_id, t, string_split(t, ' ') AS toks FROM d),
-        |sp AS (SELECT doc_id, i.i AS pos,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks[i.i + 1 : i.i + 8], x ->
-        |        CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-        |          % 1048576)),
-        |      (a, b) -> (a * 131 + b) % 1099511627776) AS h
-        |  FROM tk CROSS JOIN
-        |    UNNEST(range(greatest(len(toks) - 7, 0))) AS i(i)),
-        |st AS (SELECT h FROM sp GROUP BY h
-        |       HAVING count(DISTINCT doc_id) >= 2),
-        |kp AS (SELECT h, doc_id AS kid, pos AS kpos FROM (
-        |    SELECT h, doc_id, pos, row_number() OVER (
-        |      PARTITION BY h ORDER BY doc_id, pos) AS rn FROM sp)
-        |  WHERE rn = 1),
-        |occ AS (SELECT sp.doc_id, sp.pos,
-        |    CASE WHEN sp.doc_id = kp.kid AND sp.pos = kp.kpos
-        |         THEN 1 ELSE 0 END AS iskeep
-        |  FROM sp JOIN st USING (h) JOIN kp USING (h)),
-        |rem AS (SELECT doc_id, pos + j.j AS ti
-        |  FROM occ CROSS JOIN UNNEST(range(8)) AS j(j)
-        |  GROUP BY 1, 2 HAVING max(iskeep) = 0),
-        |tok AS (SELECT doc_id, i.i AS ti, toks[i.i + 1] AS w
-        |  FROM tk CROSS JOIN UNNEST(range(len(toks))) AS i(i)),
-        |keep AS (SELECT tok.doc_id, tok.ti, tok.w FROM tok
-        |  LEFT JOIN rem ON rem.doc_id = tok.doc_id AND rem.ti = tok.ti
-        |  WHERE rem.doc_id IS NULL),
-        |reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |    string_agg(w, ' ' ORDER BY ti) AS clean
-        |  FROM keep GROUP BY doc_id),
-        |nt AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens
-        |       FROM tk)
-        |SELECT d.doc_id, nt.n_tokens,
-        |  COALESCE(reb.n_kept, 0) AS n_tokens_kept,
-        |  nt.n_tokens - COALESCE(reb.n_kept, 0) AS n_tokens_removed,
-        |  CAST(len(d.t) - len(COALESCE(reb.clean, '')) AS BIGINT)
-        |    AS n_chars_removed,
-        |  COALESCE(reb.clean, '') AS text_clean
-        |FROM d JOIN nt USING (doc_id) LEFT JOIN reb USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // keyness replay: exact side counts + totals, one per-row float
-    // expression, rounded-z total order
-    "q_keyness" ->
-      """WITH tk AS (SELECT source = 'src0' AS a,
-        |    unnest(string_split(text, ' ')) AS term
-        |  FROM documents WHERE source IN ('src0', 'src1')),
-        |c AS (SELECT term,
-        |    CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |    CAST(sum(CASE WHEN a THEN 0 ELSE 1 END) AS BIGINT) AS n_b
-        |  FROM tk GROUP BY 1),
-        |t AS (SELECT
-        |    CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |    CAST(sum(CASE WHEN a THEN 0 ELSE 1 END) AS BIGINT) AS nb
-        |  FROM tk),
-        |x AS (SELECT term, n_a, n_b,
-        |    CAST(100 AS DOUBLE) * CAST(n_a + n_b AS DOUBLE)
-        |      / CAST(na + nb AS DOUBLE) AS aw,
-        |    CAST(na AS DOUBLE) AS nad, CAST(nb AS DOUBLE) AS nbd
-        |  FROM c CROSS JOIN t),
-        |y AS (SELECT term, n_a, n_b,
-        |    ln((n_a + aw) / (nad + CAST(100 AS DOUBLE) - n_a - aw))
-        |      - ln((n_b + aw) / (nbd + CAST(100 AS DOUBLE) - n_b - aw))
-        |      AS d,
-        |    1.0 / (n_a + aw) + 1.0 / (n_b + aw) AS v
-        |  FROM x)
-        |SELECT term, n_a, n_b,
-        |  round(d, 6) + 0.0 AS delta_logodds,
-        |  round(d / sqrt(v), 6) + 0.0 AS z
-        |FROM y ORDER BY z DESC, term""".stripMargin,
-    // Hill replay: one term count, rank window, pinned ln folds
-    "q_hill_tail" -> hillOracle(Seq(10, 20, 50)),
-    // Heaps replay: portable-hash shards, min-shard vocab, pinned fit
-    "q_heaps" -> heapsOracle(16),
-    // windowed-PSI replay: same bins, same pinned-order smoothed sums
-    "q_windowed_psi" -> windowedPsiOracle(psiRefBaseline, 0.0, 500.0),
-    // deterministic hash sampling via the portable 60-bit md5 hash
-    "q_hash_sample" ->
-      """SELECT doc_id FROM documents
-        |WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        |           AS BIGINT) % 10000 < 2500
-        |ORDER BY doc_id""".stripMargin,
-    "q_scd2" ->
-      """SELECT user_id, event_id, event_type,
-        |  ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS valid_to,
-        |  lead(ts) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) IS NULL AS is_current
-        |FROM events
-        |ORDER BY user_id, valid_from, event_id""".stripMargin,
-    "q_record_linkage" ->
-      """WITH c AS (SELECT c_custkey, c_nationkey, c_name FROM customer),
-        |s AS (SELECT s_suppkey, s_nationkey, s_name FROM supplier),
-        |p AS (SELECT c_custkey, s_suppkey,
-        |        round(1.0 - CAST(levenshtein(c_name, s_name) AS DOUBLE) /
-        |          CAST(greatest(len(c_name), len(s_name)) AS DOUBLE), 6)
-        |          AS sim
-        |      FROM c JOIN s ON s_nationkey = c_nationkey),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |        ORDER BY sim DESC, s_suppkey) AS rk
-        |      FROM p WHERE sim >= 0.65)
-        |SELECT c_custkey, s_suppkey, sim FROM r WHERE rk = 1
-        |ORDER BY c_custkey""".stripMargin,
-    // power iteration: 3 unrolled (dot -> project -> normalize) rounds;
-    // v0 = e0; per-round rounding at 9 mirrors the Spark plan
-    "q_top_pc" ->
-      """WITH x AS (SELECT vec_id AS id, CAST(u.d AS INTEGER) AS dim,
-        |             CAST(embedding[u.d + 1] AS DOUBLE) AS x
-        |           FROM embeddings CROSS JOIN UNNEST(range(64)) AS u(d)),
-        |v0 AS (SELECT DISTINCT dim,
-        |         CASE WHEN dim = 0 THEN CAST(1.0 AS DOUBLE)
-        |              ELSE CAST(0.0 AS DOUBLE) END AS val
-        |       FROM x),
-        |d1 AS (SELECT id, sum(x.x * v0.val) AS dot
-        |       FROM x JOIN v0 USING (dim) GROUP BY 1),
-        |p1 AS (SELECT dim, sum(x.x * d1.dot) AS s
-        |       FROM x JOIN d1 USING (id) GROUP BY 1),
-        |n1 AS (SELECT sqrt(sum(s * s)) AS nm FROM p1),
-        |v1 AS (SELECT dim, round(s / nm, 9) AS val
-        |       FROM p1 CROSS JOIN n1),
-        |d2 AS (SELECT id, sum(x.x * v1.val) AS dot
-        |       FROM x JOIN v1 USING (dim) GROUP BY 1),
-        |p2 AS (SELECT dim, sum(x.x * d2.dot) AS s
-        |       FROM x JOIN d2 USING (id) GROUP BY 1),
-        |n2 AS (SELECT sqrt(sum(s * s)) AS nm FROM p2),
-        |v2 AS (SELECT dim, round(s / nm, 9) AS val
-        |       FROM p2 CROSS JOIN n2),
-        |d3 AS (SELECT id, sum(x.x * v2.val) AS dot
-        |       FROM x JOIN v2 USING (dim) GROUP BY 1),
-        |p3 AS (SELECT dim, sum(x.x * d3.dot) AS s
-        |       FROM x JOIN d3 USING (id) GROUP BY 1),
-        |n3 AS (SELECT sqrt(sum(s * s)) AS nm FROM p3),
-        |v3 AS (SELECT dim, round(s / nm, 9) AS val
-        |       FROM p3 CROSS JOIN n3)
-        |SELECT dim, round(val, 6) AS component FROM v3
-        |ORDER BY dim""".stripMargin,
-    "q_quantile_norm" ->
-      """WITH r AS (SELECT source, doc_id, n_chars,
-        |             row_number() OVER (PARTITION BY source
-        |               ORDER BY n_chars, doc_id) AS rank
-        |           FROM documents),
-        |m AS (SELECT rank, round(avg(CAST(n_chars AS DOUBLE)), 6) AS qnorm
-        |      FROM r GROUP BY 1)
-        |SELECT source, doc_id, n_chars, CAST(rank AS INTEGER) AS rank,
-        |  qnorm
-        |FROM r JOIN m USING (rank) ORDER BY source, rank""".stripMargin,
-    "q_dp_counts" ->
-      """WITH g AS (SELECT source, count(*) AS n FROM documents
-        |           GROUP BY 1),
-        |u AS (SELECT source, n,
-        |        (CAST(CAST('0x' || substr(md5('dp1_' || source), 1, 15)
-        |                   AS BIGINT) % 1048576 AS DOUBLE) + 0.5)
-        |          / 1048576.0 - 0.5 AS u
-        |      FROM g)
-        |SELECT source, n,
-        |  round(n + -sign(u) * ln(1.0 - 2.0 * abs(u)) * 1.0, 6)
-        |    AS noisy_n
-        |FROM u ORDER BY source""".stripMargin,
-    // k-anonymity replay: per-QI-class sizes + exact sensitive distinct,
-    // scalar rollup; worst class = ORDER BY (sz, QIs) LIMIT 1 — the same
-    // total order as Spark's min(struct)
-    "q_k_anonymity" ->
-      """WITH cls AS (
-        |  SELECT c_nationkey, c_mktsegment,
-        |    CAST(count(*) AS BIGINT) AS sz,
-        |    CAST(count(DISTINCT coalesce(
-        |      CAST(c_acctbal < 0 AS VARCHAR), '__null__')) AS BIGINT)
-        |      AS ldiv
-        |  FROM customer GROUP BY 1, 2),
-        |s AS (
-        |  SELECT CAST(sum(sz) AS BIGINT) AS n_rows,
-        |    CAST(count(*) AS BIGINT) AS n_classes,
-        |    min(sz) AS k_anonymity,
-        |    CAST(count(*) FILTER (WHERE sz < 10) AS BIGINT)
-        |      AS classes_below_k,
-        |    CAST(coalesce(sum(sz) FILTER (WHERE sz < 10), 0) AS BIGINT)
-        |      AS rows_below_k,
-        |    min(ldiv) AS min_l_diversity,
-        |    CAST(count(*) FILTER (WHERE ldiv = 1) AS BIGINT) AS classes_l1
-        |  FROM cls),
-        |w AS (SELECT c_nationkey AS worst_c_nationkey,
-        |        c_mktsegment AS worst_c_mktsegment
-        |      FROM cls ORDER BY sz, c_nationkey, c_mktsegment LIMIT 1)
-        |SELECT 10 AS k_threshold, n_rows, n_classes, k_anonymity,
-        |  classes_below_k, rows_below_k,
-        |  round(rows_below_k / CAST(n_rows AS DOUBLE), 6)
-        |    AS pct_rows_below_k,
-        |  min_l_diversity, classes_l1, worst_c_nationkey,
-        |  worst_c_mktsegment
-        |FROM s CROSS JOIN w""".stripMargin,
-    // KM replay: identical ranked first/second-order prep, censor at the
-    // max-date horizon, reverse-cumulative risk set, exp(Σ ln(1-d/n))
-    // survival over the same unique (grp, t) order
-    // log-rank replay: zero-filled times×sides grid, exact integer
-    // at-risk/event counts, pinned U/V folds, chi-square constant
-    "q_logrank" ->
-      """WITH rk0 AS (SELECT o_custkey, o_orderdate, o_orderpriority,
-        |        o_orderkey, row_number() OVER (PARTITION BY o_custkey
-        |          ORDER BY o_orderdate, o_orderkey) AS r FROM orders),
-        |f AS (SELECT o_custkey, o_orderdate AS d1,
-        |    CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |      THEN 'fast' ELSE 'slow' END AS grp
-        |  FROM rk0 WHERE r = 1),
-        |s2 AS (SELECT o_custkey, o_orderdate AS d2 FROM rk0
-        |  WHERE r = 2),
-        |hz AS (SELECT max(o_orderdate) AS h FROM orders),
-        |subj AS (SELECT f.grp,
-        |    CAST(CASE WHEN s2.d2 IS NOT NULL THEN date_diff('day',
-        |        CAST(f.d1 AS DATE), CAST(s2.d2 AS DATE))
-        |      ELSE date_diff('day', CAST(f.d1 AS DATE),
-        |        CAST(hz.h AS DATE)) END AS BIGINT) AS t,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM f LEFT JOIN s2 ON s2.o_custkey = f.o_custkey
-        |  CROSS JOIN hz),
-        |g AS (SELECT min(grp) AS ga,
-        |    CAST(count(DISTINCT grp) AS BIGINT) AS n_groups FROM subj),
-        |tg AS (SELECT CASE WHEN grp = ga THEN 'A' ELSE 'B' END AS side,
-        |    t, ev FROM subj, g),
-        |cnt AS (SELECT side, t, CAST(count(*) AS BIGINT) AS n_at,
-        |    CAST(sum(ev) AS BIGINT) AS d FROM tg GROUP BY 1, 2),
-        |grid AS (SELECT s.side, tt.t, coalesce(c.n_at, 0) AS n_at,
-        |    coalesce(c.d, 0) AS d
-        |  FROM (SELECT DISTINCT t FROM cnt) tt
-        |  CROSS JOIN (SELECT DISTINCT side FROM tg) s
-        |  LEFT JOIN cnt c ON c.side = s.side AND c.t = tt.t),
-        |rsk AS (SELECT *, CAST(sum(n_at) OVER (PARTITION BY side
-        |    ORDER BY t DESC ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |    CURRENT ROW) AS BIGINT) AS n_risk FROM grid),
-        |pt AS (SELECT t,
-        |    CAST(coalesce(sum(CASE WHEN side = 'A' THEN d END), 0)
-        |      AS BIGINT) AS da,
-        |    CAST(coalesce(sum(CASE WHEN side = 'B' THEN d END), 0)
-        |      AS BIGINT) AS db,
-        |    CAST(coalesce(sum(CASE WHEN side = 'A' THEN n_risk END), 0)
-        |      AS BIGINT) AS na,
-        |    CAST(coalesce(sum(CASE WHEN side = 'B' THEN n_risk END), 0)
-        |      AS BIGINT) AS nb
-        |  FROM rsk GROUP BY 1),
-        |flt AS (SELECT * FROM pt WHERE da + db > 0),
-        |tm AS (SELECT t,
-        |    CAST(da AS DOUBLE) - CAST(da + db AS DOUBLE)
-        |      * CAST(na AS DOUBLE) / CAST(na + nb AS DOUBLE) AS u,
-        |    CASE WHEN CAST(na + nb AS DOUBLE) > 1.0 THEN
-        |      CAST(da + db AS DOUBLE)
-        |        * (CAST(na AS DOUBLE) / CAST(na + nb AS DOUBLE))
-        |        * (CAST(nb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-        |        * (CAST(na + nb AS DOUBLE) - CAST(da + db AS DOUBLE))
-        |        / (CAST(na + nb AS DOUBLE) - 1.0)
-        |      ELSE 0.0 END AS v
-        |  FROM flt),
-        |fold AS (SELECT
-        |    sum(u) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND UNBOUNDED FOLLOWING) AS uu,
-        |    sum(v) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND UNBOUNDED FOLLOWING) AS vv
-        |  FROM tm),
-        |one AS (SELECT uu, vv FROM fold LIMIT 1),
-        |sm AS (SELECT
-        |    CAST(sum(CASE WHEN side = 'A' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_a,
-        |    CAST(sum(CASE WHEN side = 'B' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_b,
-        |    CAST(sum(CASE WHEN side = 'A' THEN ev ELSE 0 END)
-        |      AS BIGINT) AS events_a,
-        |    CAST(sum(CASE WHEN side = 'B' THEN ev ELSE 0 END)
-        |      AS BIGINT) AS events_b
-        |  FROM tg)
-        |SELECT n_a, n_b, events_a, events_b,
-        |  round(uu, 6) AS observed_minus_expected,
-        |  round(vv, 6) AS variance,
-        |  round(CASE WHEN vv > 0.0 AND n_groups = 2
-        |    THEN uu * uu / vv END, 6) AS chi2,
-        |  CASE WHEN vv > 0.0 AND n_groups = 2
-        |    THEN uu * uu / vv END > 3.841459 AS groups_differ_5pct
-        |FROM one CROSS JOIN sm CROSS JOIN g""".stripMargin,
-    "q_survival" ->
-      """WITH rk AS (SELECT o_custkey, o_orderdate, o_orderpriority,
-        |        o_orderkey, row_number() OVER (PARTITION BY o_custkey
-        |          ORDER BY o_orderdate, o_orderkey) AS r FROM orders),
-        |f AS (SELECT o_custkey, o_orderdate AS d1,
-        |        o_orderpriority AS grp FROM rk WHERE r = 1),
-        |s2 AS (SELECT o_custkey, o_orderdate AS d2 FROM rk WHERE r = 2),
-        |hz AS (SELECT max(o_orderdate) AS h FROM orders),
-        |subj AS (SELECT f.grp,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN date_diff('day',
-        |        CAST(f.d1 AS DATE), CAST(s2.d2 AS DATE))
-        |      ELSE date_diff('day', CAST(f.d1 AS DATE),
-        |        CAST(hz.h AS DATE)) END AS t,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM f LEFT JOIN s2 ON s2.o_custkey = f.o_custkey
-        |  CROSS JOIN hz),
-        |c AS (SELECT grp, t, CAST(count(*) AS BIGINT) AS n_at,
-        |        CAST(sum(ev) AS BIGINT) AS d_events
-        |      FROM subj GROUP BY 1, 2),
-        |r AS (SELECT grp, t, n_at, d_events,
-        |        CAST(sum(n_at) OVER (PARTITION BY grp ORDER BY t DESC
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_risk
-        |      FROM c),
-        |sv AS (SELECT grp, t, n_risk, d_events,
-        |        CASE WHEN max(CASE WHEN d_events = n_risk THEN 1
-        |              ELSE 0 END) OVER (PARTITION BY grp ORDER BY t ASC
-        |              ROWS UNBOUNDED PRECEDING) = 1 THEN 0.0
-        |          ELSE round(exp(sum(CASE
-        |              WHEN d_events > 0 AND d_events < n_risk
-        |              THEN ln(1.0 - CAST(d_events AS DOUBLE)
-        |                            / CAST(n_risk AS DOUBLE))
-        |              ELSE 0.0 END)
-        |            OVER (PARTITION BY grp ORDER BY t ASC
-        |              ROWS UNBOUNDED PRECEDING)), 6) END AS survival
-        |       FROM r)
-        |SELECT grp, t, n_risk, d_events, survival FROM sv
-        |WHERE d_events > 0 ORDER BY grp, t""".stripMargin,
-    // Nelson-Aalen replay: identical subject construction, same pinned
-    // ORDER BY t cumulative folds over exact-integer counts
-    "q_nelson_aalen" ->
-      """WITH rk AS (SELECT o_custkey, o_orderdate, o_orderpriority,
-        |        o_orderkey, row_number() OVER (PARTITION BY o_custkey
-        |          ORDER BY o_orderdate, o_orderkey) AS r FROM orders),
-        |f AS (SELECT o_custkey, o_orderdate AS d1,
-        |        o_orderpriority AS grp FROM rk WHERE r = 1),
-        |s2 AS (SELECT o_custkey, o_orderdate AS d2 FROM rk WHERE r = 2),
-        |hz AS (SELECT max(o_orderdate) AS h FROM orders),
-        |subj AS (SELECT f.grp,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN date_diff('day',
-        |        CAST(f.d1 AS DATE), CAST(s2.d2 AS DATE))
-        |      ELSE date_diff('day', CAST(f.d1 AS DATE),
-        |        CAST(hz.h AS DATE)) END AS t,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM f LEFT JOIN s2 ON s2.o_custkey = f.o_custkey
-        |  CROSS JOIN hz),
-        |c AS (SELECT grp, t, CAST(count(*) AS BIGINT) AS n_at,
-        |        CAST(sum(ev) AS BIGINT) AS d_events
-        |      FROM subj GROUP BY 1, 2),
-        |r AS (SELECT grp, t, n_at, d_events,
-        |        CAST(sum(n_at) OVER (PARTITION BY grp ORDER BY t DESC
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_risk
-        |      FROM c),
-        |na AS (SELECT grp, t, n_risk, d_events,
-        |        round(sum(CAST(d_events AS DOUBLE)
-        |            / CAST(n_risk AS DOUBLE)) OVER w, 6) AS cum_hazard,
-        |        round(sum(CAST(d_events AS DOUBLE)
-        |            * CAST(n_risk - d_events AS DOUBLE)
-        |            / (CAST(n_risk AS DOUBLE) * CAST(n_risk AS DOUBLE)
-        |               * CAST(n_risk AS DOUBLE))) OVER w, 6)
-        |          AS hazard_var,
-        |        round(exp(0.0 - sum(CAST(d_events AS DOUBLE)
-        |            / CAST(n_risk AS DOUBLE)) OVER w), 6)
-        |          AS breslow_survival
-        |      FROM r
-        |      WINDOW w AS (PARTITION BY grp ORDER BY t ASC
-        |        ROWS UNBOUNDED PRECEDING))
-        |SELECT grp, t, n_risk, d_events, cum_hazard, hazard_var,
-        |  breslow_survival
-        |FROM na WHERE d_events > 0 ORDER BY grp, t""".stripMargin,
-    // MI replay: identical cell/marginal/total decomposition, ln-based
-    // PMI and contribution at the same 6-decimal rounding
-    "q_mutual_info" ->
-      """WITH c AS (SELECT lang AS x, source AS y,
-        |        CAST(count(*) AS BIGINT) AS n
-        |      FROM documents
-        |      WHERE lang IS NOT NULL AND source IS NOT NULL
-        |      GROUP BY 1, 2),
-        |nx AS (SELECT x, CAST(sum(n) AS BIGINT) AS nx FROM c
-        |       GROUP BY 1),
-        |ny AS (SELECT y, CAST(sum(n) AS BIGINT) AS ny FROM c
-        |       GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS DOUBLE) AS nn FROM c)
-        |SELECT c.x, c.y, c.n,
-        |  round(ln(CAST(c.n AS DOUBLE) * t.nn
-        |    / (CAST(nx.nx AS DOUBLE) * CAST(ny.ny AS DOUBLE))), 6)
-        |    AS pmi,
-        |  round((CAST(c.n AS DOUBLE) / t.nn) * ln(CAST(c.n AS DOUBLE)
-        |    * t.nn / (CAST(nx.nx AS DOUBLE) * CAST(ny.ny AS DOUBLE))),
-        |    6) AS contrib
-        |FROM c JOIN nx ON nx.x = c.x JOIN ny ON ny.y = c.y CROSS JOIN t
-        |ORDER BY c.x, c.y""".stripMargin,
-    "q_length_buckets" ->
-      """WITH c AS (SELECT doc_id,
-        |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        |           FROM documents),
-        |e AS (SELECT quantile_cont(CAST(n AS DOUBLE),
-        |        [0.25, 0.5, 0.75]) AS q FROM c),
-        |b AS (SELECT CAST(1
-        |          + (CASE WHEN n >= q[1] THEN 1 ELSE 0 END)
-        |          + (CASE WHEN n >= q[2] THEN 1 ELSE 0 END)
-        |          + (CASE WHEN n >= q[3] THEN 1 ELSE 0 END)
-        |        AS INTEGER) AS bucket, n
-        |      FROM c CROSS JOIN e),
-        |g AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |        min(n) AS min_tokens, max(n) AS max_tokens,
-        |        CAST(sum(n) AS BIGINT) AS sum_tokens
-        |      FROM b GROUP BY bucket)
-        |SELECT bucket, n_docs, min_tokens, max_tokens, sum_tokens,
-        |  max_tokens * n_docs - sum_tokens AS pad_waste,
-        |  round(CAST(max_tokens * n_docs - sum_tokens AS DOUBLE) /
-        |    CAST(max_tokens * n_docs AS DOUBLE), 6) AS waste_frac
-        |FROM g ORDER BY bucket""".stripMargin,
-    "q_winsorize" ->
-      """WITH e AS (SELECT quantile_cont(
-        |             floor(CAST(l_extendedprice AS DOUBLE) * 16.0) / 16.0,
-        |             [0.05, 0.95]) AS q
-        |           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        |c AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
-        |        q[1] AS lo, q[2] AS hi
-        |      FROM lineitem CROSS JOIN e
-        |      WHERE l_extendedprice IS NOT NULL),
-        |g AS (SELECT lo, hi, round(avg(v), 6) AS mean_raw,
-        |        round(avg(CASE WHEN v < lo THEN lo
-        |                       WHEN v > hi THEN hi ELSE v END), 6)
-        |          AS mean_winsorized,
-        |        CAST(sum(CASE WHEN v < lo THEN 1 ELSE 0 END) AS BIGINT)
-        |          AS n_clipped_lo,
-        |        CAST(sum(CASE WHEN v > hi THEN 1 ELSE 0 END) AS BIGINT)
-        |          AS n_clipped_hi
-        |      FROM c GROUP BY lo, hi)
-        |SELECT round(lo, 6) AS p_lo, round(hi, 6) AS p_hi, mean_raw,
-        |  mean_winsorized, n_clipped_lo, n_clipped_hi FROM g""".stripMargin,
-    "q_negative_pairs" ->
-      """WITH b AS (SELECT doc_id,
-        |             md5('neg1_' || CAST(doc_id AS VARCHAR)) AS key
-        |           FROM documents),
-        |k AS (SELECT doc_id,
-        |        key, CAST('0x' || substr(key, 1, 15) AS BIGINT) % 8 AS bk
-        |      FROM b),
-        |l AS (SELECT doc_id AS anchor_id,
-        |        lead(doc_id, 1) OVER w AS n1,
-        |        lead(doc_id, 2) OVER w AS n2
-        |      FROM k WINDOW w AS (PARTITION BY bk ORDER BY key, doc_id))
-        |SELECT anchor_id, j, neg_id FROM (
-        |  SELECT anchor_id, 1 AS j, n1 AS neg_id FROM l
-        |  UNION ALL SELECT anchor_id, 2 AS j, n2 AS neg_id FROM l)
-        |WHERE neg_id IS NOT NULL
-        |ORDER BY anchor_id, j""".stripMargin,
-    // weighted sampling: per-row threshold w * (rate * 2^20) on the same
-    // md5 grid; rate 1/64 -> 16384 threshold units per weight step
-    "q_weighted_sample" ->
-      """SELECT doc_id, 1 + n_chars // 256 AS w FROM documents
-        |WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        |           AS BIGINT) % 1048576
-        |      < least((1 + n_chars // 256) * 16384, 1048576)
-        |ORDER BY doc_id""".stripMargin,
-    // exact-k per-stratum sample: identical md5 sort key both engines
-    "q_sample_exact_k" ->
-      """WITH r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY md5('s7_' || CAST(doc_id AS VARCHAR)), doc_id)
-        |      AS sample_rank
-        |  FROM documents)
-        |SELECT doc_id, source, CAST(sample_rank AS INTEGER) AS sample_rank
-        |FROM r WHERE sample_rank <= 15
-        |ORDER BY source, sample_rank""".stripMargin,
-    // deterministic stratified split: identical md5 rank key both engines;
-    // test = percent_rank STRICTLY above 1 - testFrac (1.0 - 0.3 rounds to
-    // the same IEEE double as the literal 0.7 in both engines)
-    "q_stratified_split" ->
-      """WITH r AS (
-        |  SELECT o_orderstatus,
-        |    percent_rank() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY md5('42_' || CAST(o_orderkey AS VARCHAR)),
-        |        o_orderkey) AS pr
-        |  FROM orders)
-        |SELECT o_orderstatus,
-        |  CASE WHEN pr > 0.7 THEN 'test' ELSE 'train' END AS split,
-        |  count(*) AS n_rows
-        |FROM r GROUP BY 1, 2
-        |ORDER BY o_orderstatus, split""".stripMargin,
-    // corpus mixing: same hash rule, per-source dyadic rates via CASE
-    // temperature mix replay: exact long token sums, sqrt-composed
-    // power, pinned-order window fold for the normalizer
-    "q_temperature_mix" ->
-      """WITH per AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT per.*,
-        |        (SELECT CAST(sum(n_tokens) AS BIGINT) FROM per) AS N
-        |      FROM per),
-        |p AS (SELECT *, CAST(n_tokens AS DOUBLE) / N AS sh FROM t),
-        |w AS (SELECT *, sqrt(sh) AS pt,
-        |        sum(sqrt(sh)) OVER (ORDER BY source
-        |          ROWS BETWEEN UNBOUNDED PRECEDING
-        |          AND UNBOUNDED FOLLOWING) AS z
-        |      FROM p)
-        |SELECT source, n_docs, n_tokens,
-        |  round(sh, 6) AS share,
-        |  round(pt / z, 6) AS weight,
-        |  CAST(round(pt / z * 100000) AS BIGINT) AS expected_tokens,
-        |  round(pt / z * 100000 / n_tokens, 4) AS epochs
-        |FROM w ORDER BY source""".stripMargin,
-    // waterfilling replay: tempered weights with pinned-order folds,
-    // saturation sort, prefix-exclusive cumulative caps/weights, the
-    // capped-iff-lambda-clears-r test, and the first-uncapped level —
-    // every float is the same expression over the same operands in the
-    // same order as the Spark plan
-    "q_mix_budget" -> (mixBudgetChainSql(MixTau, MixBudgetNum,
-      MixBudgetDen, MixMaxEpochs) +
-      """
-        |SELECT source, n_docs, n_tokens,
-        |  round(sh, 6) AS share, round(wt, 6) AS weight,
-        |  cap_tokens,
-        |  CASE WHEN capped THEN cap_tokens
-        |       ELSE CAST(round(lev * wt, 0) AS BIGINT) END
-        |    AS alloc_tokens,
-        |  round((CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END)
-        |    * 1.0 / n_tokens, 4) AS epochs,
-        |  capped, round(lev, 6) AS fill_level
-        |FROM mbw5 ORDER BY source""".stripMargin),
-    // plan EXECUTION replay: the same chain's per-source allocation as
-    // an md5-bucket sampling rate on the 2^20 lattice, per-doc keep,
-    // planned-vs-achieved rollup
-    "q_mix_budget_apply" -> (mixBudgetChainSql(MixTau, MixBudgetNum,
-      MixBudgetDen, MixMaxEpochs) +
-      """,
-        |pl AS (SELECT source,
-        |    CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END
-        |      AS alloc_tokens,
-        |    CAST(CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END AS DOUBLE)
-        |      / n_tokens AS rate
-        |  FROM mbw5),
-        |dk AS (SELECT d.source, d.doc_id,
-        |    CAST(len(string_split(d.text, ' ')) AS BIGINT) AS toks,
-        |    pl.alloc_tokens,
-        |    (CAST('0x' || substr(md5('mba_' || CAST(d.doc_id
-        |        AS VARCHAR)), 1, 15) AS BIGINT) % 1048576)
-        |      < greatest(CAST(floor(pl.rate * 1048576) AS BIGINT),
-        |                 least(pl.alloc_tokens, 1)) AS kp
-        |  FROM documents d JOIN pl ON pl.source = d.source)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(toks) AS BIGINT) AS n_tokens,
-        |  CAST(min(alloc_tokens) AS BIGINT) AS planned_tokens,
-        |  CAST(sum(CASE WHEN kp THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS kept_docs,
-        |  CAST(sum(CASE WHEN kp THEN toks ELSE 0 END) AS BIGINT)
-        |    AS kept_tokens,
-        |  round(CAST(min(alloc_tokens) AS DOUBLE) / sum(toks), 6)
-        |    AS planned_rate,
-        |  round(CAST(sum(CASE WHEN kp THEN toks ELSE 0 END) AS DOUBLE)
-        |    / sum(toks), 6) AS achieved_rate
-        |FROM dk GROUP BY source ORDER BY source""".stripMargin),
-    // shrinkage replay: integer sums exact in any order, identical
-    // blend arithmetic
-    "q_source_shrinkage" ->
-      """WITH per AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS s
-        |  FROM documents GROUP BY 1),
-        |g AS (SELECT CAST(sum(s) AS BIGINT) AS gs,
-        |        CAST(sum(n_docs) AS BIGINT) AS gn FROM per)
-        |SELECT source, n_docs,
-        |  round(CAST(s AS DOUBLE) / n_docs, 6) AS raw_mean,
-        |  round((s + 16 * (CAST(gs AS DOUBLE) / gn)) / (n_docs + 16), 6)
-        |    AS shrunk_mean,
-        |  round(CAST(n_docs AS DOUBLE) / (n_docs + 16), 6) AS credibility
-        |FROM per, g ORDER BY source""".stripMargin,
-    // raking replay: builder-generated IPF alternation chain (3 rounds)
-    "q_raking" -> rakeOracle(3),
-    // ESS replay: same weight chain, micros quantization, Kish ratio
-    "q_ess" -> essOracle(3),
-    "q_corpus_mix" ->
-      """WITH r AS (
-        |  SELECT source, doc_id,
-        |    CASE WHEN source = 'src0' THEN 1.0
-        |         WHEN source = 'src1' THEN 0.5
-        |         ELSE 0.125 END AS rate
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs FROM r
-        |WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        |           AS BIGINT) % 10000 < CAST(round(rate * 10000, 0) AS BIGINT)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q_mix_report" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-        |  CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_en,
-        |  round(sum(length(text)) * 1.0 / count(*), 6) AS mean_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    // overlapping token-window chunking (32-token windows, stride 24)
-    "q_chunk" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents)
-        |SELECT doc_id, CAST(s AS INTEGER) AS chunk_start,
-        |  array_to_string(t[s+1 : s+32], ' ') AS chunk_text,
-        |  CAST(least(32, len(t) - s) AS BIGINT) AS n_tokens
-        |FROM toks, UNNEST(range(0, greatest(len(t) - 8, 1), 24)) AS u(s)
-        |ORDER BY doc_id, chunk_start""".stripMargin,
-    // corpus bigram LM: counts + smoothed per-doc average log-prob; the
-    // dyadic alpha keeps every ratio operand float-exact in both engines
-    "q_lm_perplexity" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |bg AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |       FROM toks, UNNEST(range(1, greatest(len(t), 2))) AS u(i)
-        |       WHERE t[i+1] IS NOT NULL),
-        |c2 AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY 1),
-        |v AS (SELECT CAST(count(*) AS DOUBLE) AS vv FROM c1),
-        |s AS (SELECT bg.doc_id, count(*) AS n_bigrams,
-        |        sum(ln((c2.c2 + CAST(0.5 AS DOUBLE))
-        |                / (c1.c1 + CAST(0.5 AS DOUBLE) * vv))) AS lp
-        |      FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
-        |      CROSS JOIN v
-        |      GROUP BY 1)
-        |SELECT d.doc_id, s.n_bigrams,
-        |  round(lp / n_bigrams, 6) AS avg_logprob,
-        |  round(exp(-lp / n_bigrams), 6) AS ppl
-        |FROM (SELECT doc_id FROM documents) d LEFT JOIN s USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // packed-batch emission: same assignment as q_pack, id-ordered
-    // string_agg per bin
-    "q_pack_batches" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        |         AS BIGINT) % 8 AS pack_group,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT *, sum(n_tokens) OVER (PARTITION BY pack_group
-        |        ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM base)
-        |SELECT pack_group,
-        |  CAST(floor((cum - n_tokens) * 1.0 / 256) AS BIGINT) AS bin_seq,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-        |  string_agg(text, ' ' ORDER BY doc_id) AS packed_text
-        |FROM c
-        |GROUP BY 1, 2 ORDER BY pack_group, bin_seq""".stripMargin,
-    // sub-word-budgeted chunking: same plan, tokens via regexp_extract_all
-    "q_chunk_subword" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_extract_all(
-        |      text || ' #' || CAST(doc_id AS VARCHAR) || '.',
-        |      '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]') AS t
-        |  FROM documents)
-        |SELECT doc_id, CAST(s AS INTEGER) AS chunk_start,
-        |  array_to_string(t[s+1 : s+48], ' ') AS chunk_text,
-        |  CAST(least(48, len(t) - s) AS BIGINT) AS n_tokens
-        |FROM toks, UNNEST(range(0, greatest(len(t) - 8, 1), 40)) AS u(s)
-        |ORDER BY doc_id, chunk_start""".stripMargin,
-    // sub-word-budgeted packing: n_tokens counted in BPE-ish units
-    "q_pack_subword" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        |         AS BIGINT) % 8 AS pack_group,
-        |    CAST(len(regexp_extract_all(
-        |      text || ' #' || CAST(doc_id AS VARCHAR) || '.',
-        |      '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT *, sum(n_tokens) OVER (PARTITION BY pack_group
-        |        ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM base)
-        |SELECT doc_id, pack_group, n_tokens,
-        |  CAST(floor((cum - n_tokens) * 1.0 / 320) AS BIGINT) AS bin_seq
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // streaming sequence packing: md5 groups, id-ordered running token sum
-    "q_pack" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        |         AS BIGINT) % 8 AS pack_group,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT *, sum(n_tokens) OVER (PARTITION BY pack_group
-        |        ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM base)
-        |SELECT doc_id, pack_group, n_tokens,
-        |  CAST(floor((cum - n_tokens) * 1.0 / 256) AS BIGINT) AS bin_seq
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q_tfidf" ->
-      """WITH tf AS (
-        |  SELECT doc_id, tok AS term, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf
-        |        GROUP BY 1),
-        |n AS (SELECT count(DISTINCT doc_id) AS nd FROM documents),
-        |s AS (SELECT doc_id, term, tf, df,
-        |        round(tf * ln(nd * 1.0 / df), 6) AS tfidf
-        |      FROM tf JOIN dfq USING (term) CROSS JOIN n),
-        |r AS (SELECT *, row_number() OVER
-        |        (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk
-        |      FROM s)
-        |SELECT doc_id, CAST(rk AS INTEGER) AS rk, term, tf, df, tfidf
-        |FROM r WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-    // BM25: arithmetic order mirrors Text.bm25 exactly; k1+1 and 1-b are
-    // spelled as the same double ops (1.2 is inexact in binary — never
-    // pre-fold it into a 2.2 literal, the nearest doubles can differ)
-    "q_bm25" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |           FROM documents),
-        |dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl
-        |       FROM t GROUP BY 1),
-        |sc AS (SELECT CAST(count(*) AS DOUBLE) AS nd, avg(dl) AS avgdl
-        |       FROM dl),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |       FROM t WHERE term IN ('hash', 'join', 'vector')
-        |       GROUP BY 1, 2),
-        |dfq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
-        |        FROM tf GROUP BY 1),
-        |idf AS (SELECT term,
-        |          ln((nd - df + 0.5) / (df + 0.5) + 1.0) AS idf
-        |        FROM dfq CROSS JOIN sc),
-        |s AS (SELECT tf.doc_id,
-        |        idf.idf * tf.tf * (CAST(1.2 AS DOUBLE) + 1.0) /
-        |          (tf.tf + CAST(1.2 AS DOUBLE) *
-        |            ((1.0 - 0.75) + 0.75 * dl.dl / sc.avgdl)) AS s
-        |      FROM tf JOIN idf USING (term) JOIN dl USING (doc_id)
-        |      CROSS JOIN sc)
-        |SELECT doc_id, round(sum(s), 6) AS score,
-        |  CAST(count(*) AS INTEGER) AS n_terms_hit
-        |FROM s GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 15""".stripMargin,
-    "q_keyword_search" ->
-      """SELECT doc_id, CAST(count(*) AS BIGINT) AS total_tf
-        |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |      FROM documents)
-        |WHERE term IN ('spark', 'window', 'merge')
-        |GROUP BY 1 HAVING count(DISTINCT term) = 3
-        |ORDER BY total_tf DESC, doc_id LIMIT 20""".stripMargin,
-    // RRF replay: the keyword top-20 ranked, the cosine top-20 of
-    // query vec 7 (q_cosine_topk spelling), full-outer fused with the
-    // fixed-order 1/(60+r) sum; CAST(1 AS DOUBLE) keeps the division
-    // in double (a bare 1.0 is DECIMAL in DuckDB)
-    "q_hybrid_search" ->
-      """WITH kw AS (
-        |  SELECT doc_id,
-        |    row_number() OVER (ORDER BY total_tf DESC, doc_id) AS r0
-        |  FROM (
-        |    SELECT doc_id, CAST(count(*) AS BIGINT) AS total_tf
-        |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |          FROM documents)
-        |    WHERE term IN ('spark', 'window', 'merge')
-        |    GROUP BY 1 HAVING count(DISTINCT term) = 3
-        |    ORDER BY total_tf DESC, doc_id LIMIT 20)),
-        |u AS (SELECT vec_id,
-        |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |      FROM embeddings),
-        |ev AS (
-        |  SELECT cand_id AS doc_id, rk AS r1 FROM (
-        |    SELECT c.vec_id AS cand_id,
-        |      row_number() OVER (ORDER BY
-        |        list_dot_product(q.v, c.v)
-        |          / (sqrt(list_dot_product(q.v, q.v))
-        |             * sqrt(list_dot_product(c.v, c.v))) DESC,
-        |        c.vec_id) AS rk
-        |    FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id = 7) q
-        |    WHERE c.vec_id <> q.vec_id) WHERE rk <= 20),
-        |f AS (
-        |  SELECT COALESCE(kw.doc_id, ev.doc_id) AS doc_id, r0, r1
-        |  FROM kw FULL OUTER JOIN ev ON ev.doc_id = kw.doc_id),
-        |sc AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN r0 IS NOT NULL
-        |       THEN CAST(1 AS DOUBLE) / (60 + r0) ELSE 0.0 END)
-        |    + (CASE WHEN r1 IS NOT NULL
-        |       THEN CAST(1 AS DOUBLE) / (60 + r1) ELSE 0.0 END) AS s,
-        |    (CASE WHEN r0 IS NOT NULL THEN 1 ELSE 0 END)
-        |    + (CASE WHEN r1 IS NOT NULL THEN 1 ELSE 0 END) AS n_lists
-        |  FROM f)
-        |SELECT CAST(rnk AS INTEGER) AS fused_rank, doc_id, n_lists,
-        |  round(s, 6) AS rrf_score
-        |FROM (SELECT *, row_number() OVER (ORDER BY s DESC, doc_id)
-        |        AS rnk FROM sc)
-        |WHERE rnk <= 20 ORDER BY fused_rank""".stripMargin,
-    // the bloom screen's oracle is the plain semi-join — same rows by
-    // design (the exact semi-join removes bloom false positives)
-    "q_bloom_semi" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  round(sum(l_quantity), 2) AS total_qty
-        |FROM lineitem
-        |WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-        |                     WHERE o_totalprice > 450000.0)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the salted join's oracle is the plain join — same rows by design
-    "q_salted_join" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(l_quantity), 2) AS total_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Gopher repetition filters: duplicate n-grams + top-token share
-    "q_repetition" ->
-      """WITH g AS (SELECT doc_id, string_split(text, ' ') AS t
-        |           FROM documents),
-        |grams AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |          FROM g, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |gs AS (SELECT doc_id, CAST(count(*) AS INTEGER) AS n_grams,
-        |         CAST(count(DISTINCT s) AS INTEGER) AS n_distinct
-        |       FROM grams GROUP BY doc_id),
-        |tc AS (SELECT doc_id, tok, count(*) AS c
-        |       FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |             FROM documents) GROUP BY 1, 2),
-        |ts AS (SELECT doc_id, max(c) AS max_tok,
-        |         CAST(sum(c) AS BIGINT) AS n_toks
-        |       FROM tc GROUP BY doc_id)
-        |SELECT doc_id, n_grams, n_distinct,
-        |  round(1.0 - n_distinct * 1.0 / n_grams, 6) AS dup_ngram_ratio,
-        |  round(max_tok * 1.0 / n_toks, 6) AS top_token_ratio
-        |FROM gs JOIN ts USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // PR-AUC: same scored-corpus CTE as q_roc_auc; AP numerator summed
-    // via an ordered window so both engines accumulate identically
-    "q_pr_auc" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
-        |g AS (SELECT s, CAST(sum(l) AS BIGINT) AS pos,
-        |        CAST(sum(1 - l) AS BIGINT) AS neg
-        |      FROM sc GROUP BY s),
-        |tot AS (SELECT CAST(sum(pos) AS BIGINT) AS np,
-        |          CAST(sum(neg) AS BIGINT) AS nn FROM g),
-        |cums AS (SELECT g.*, np, nn,
-        |    CAST(sum(pos) OVER (ORDER BY s DESC ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tp,
-        |    CAST(sum(pos + neg) OVER (ORDER BY s DESC ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_n
-        |  FROM g CROSS JOIN tot),
-        |st AS (SELECT *,
-        |    (CAST(pos AS DOUBLE) / np) * (CAST(cum_tp AS DOUBLE) / cum_n)
-        |      AS step FROM cums),
-        |ap AS (SELECT *, sum(step) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS ap FROM st)
-        |SELECT max(np) AS n_pos, max(nn) AS n_neg,
-        |  round(max(ap), 6) AS pr_auc
-        |FROM ap""".stripMargin,
-    // lift/gain: band-atomic tie groups via integer division on the
-    // cumulative start position
-    "q_lift_gain" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
-        |g AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt,
-        |        CAST(sum(l) AS BIGINT) AS pos
-        |      FROM sc GROUP BY s),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n,
-        |          CAST(sum(pos) AS BIGINT) AS np FROM g),
-        |cs AS (SELECT g.*, n, np,
-        |    CAST(sum(cnt) OVER (ORDER BY s DESC ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) - cnt AS start
-        |  FROM g CROSS JOIN tot),
-        |bd AS (SELECT CAST((start * 10) // n AS INTEGER) AS bucket,
-        |         CAST(sum(cnt) AS BIGINT) AS n_rows,
-        |         CAST(sum(pos) AS BIGINT) AS n_pos,
-        |         max(n) AS n, max(np) AS np
-        |       FROM cs GROUP BY 1),
-        |cb AS (SELECT *, CAST(sum(n_pos) OVER (ORDER BY bucket ROWS
-        |      BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cum_pos FROM bd)
-        |SELECT bucket, n_rows, n_pos,
-        |  round((CAST(n_pos AS DOUBLE) / n_rows)
-        |    / (CAST(np AS DOUBLE) / n), 6) AS lift,
-        |  round(CAST(cum_pos AS DOUBLE) / np, 6) AS capture
-        |FROM cb ORDER BY bucket""".stripMargin,
-    // KS separation of scores: q_ks_drift's exact machinery over the
-    // scored corpus split by the truth label
-    "q_score_ks" ->
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
-        |pv AS (SELECT s AS v, CAST(sum(l) AS BIGINT) AS ca,
-        |         CAST(sum(1 - l) AS BIGINT) AS cb
-        |       FROM sc GROUP BY s),
-        |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |          CAST(sum(cb) AS BIGINT) AS n_b FROM pv),
-        |g AS (SELECT pv.*, n_a, n_b,
-        |    abs(CAST(sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_a
-        |      - CAST(sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_b) AS gap
-        |  FROM pv CROSS JOIN tot),
-        |m AS (SELECT max(gap) AS maxgap FROM g)
-        |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-        |  round(max(maxgap), 6) AS ks_d,
-        |  round(min(v), 6) AS at_value
-        |FROM g CROSS JOIN m WHERE gap = maxgap""".stripMargin,
-    // JSD: identical bins and smoothing as q_psi_drift, symmetric
-    // divergence against the midpoint distribution
-    "q_js_drift" ->
-      """WITH a AS (SELECT value FROM events WHERE event_type = 'click'),
-        |b AS (SELECT value FROM events WHERE event_type = 'purchase'),
-        |ba AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM a GROUP BY 1),
-        |bb AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM b GROUP BY 1),
-        |bins AS (SELECT CAST(i.i AS INTEGER) AS bin
-        |         FROM UNNEST(range(10)) AS i(i)),
-        |j AS (SELECT bins.bin,
-        |        CAST(coalesce(ba.c, 0) AS BIGINT) AS c_a,
-        |        CAST(coalesce(bb.c, 0) AS BIGINT) AS c_b
-        |      FROM bins LEFT JOIN ba ON ba.bin = bins.bin
-        |                LEFT JOIN bb ON bb.bin = bins.bin),
-        |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
-        |          CAST(sum(c_b) AS BIGINT) AS n_b FROM j),
-        |p AS (SELECT j.*, n_a, n_b,
-        |    (c_a + CAST(0.5 AS DOUBLE)) / (n_a + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_a,
-        |    (c_b + CAST(0.5 AS DOUBLE)) / (n_b + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_b
-        |  FROM j CROSS JOIN tot),
-        |k AS (SELECT *, (p_a + p_b) / CAST(2 AS DOUBLE) AS m FROM p),
-        |k2 AS (SELECT *, (p_a * ln(p_a / m) + p_b * ln(p_b / m))
-        |         / CAST(2 AS DOUBLE) AS contrib FROM k),
-        |f AS (SELECT *,
-        |    sum(contrib) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS jsd_raw
-        |  FROM k2)
-        |SELECT bin, c_a, c_b, round(p_a, 6) AS p_a, round(p_b, 6) AS p_b,
-        |  round(contrib, 6) AS contrib, round(jsd_raw, 6) AS jsd
-        |FROM f ORDER BY bin""".stripMargin,
-    // Spearman: average ranks (min-rank + (ties-1)/2) then Pearson
-    "q_spearman" ->
-      """WITH b AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-        |             CAST(l_discount AS DOUBLE) AS y
-        |           FROM lineitem
-        |           WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL),
-        |r AS (SELECT x, y,
-        |    rank() OVER (ORDER BY x)
-        |      + (count(*) OVER (PARTITION BY x) - 1) / CAST(2 AS DOUBLE)
-        |      AS rx,
-        |    rank() OVER (ORDER BY y)
-        |      + (count(*) OVER (PARTITION BY y) - 1) / CAST(2 AS DOUBLE)
-        |      AS ry
-        |  FROM b)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  round(corr(rx, ry), 6) AS spearman
-        |FROM r""".stripMargin,
-    // chi-squared independence over the contingency table + Cramer's V
-    "q_chi_square" ->
-      """WITH o AS (SELECT o_orderstatus AS a, o_orderpriority AS b,
-        |             CAST(count(*) AS DOUBLE) AS obs
-        |           FROM orders
-        |           WHERE o_orderstatus IS NOT NULL
-        |             AND o_orderpriority IS NOT NULL
-        |           GROUP BY 1, 2),
-        |c AS (SELECT *, sum(obs) OVER (PARTITION BY a) AS ra,
-        |        sum(obs) OVER (PARTITION BY b) AS cb,
-        |        sum(obs) OVER () AS nn
-        |      FROM o),
-        |e AS (SELECT *, ra * cb / nn AS exp FROM c),
-        |s AS (SELECT CAST(max(nn) AS BIGINT) AS n,
-        |        count(DISTINCT a) AS nr, count(DISTINCT b) AS nc,
-        |        sum((obs - exp) * (obs - exp) / exp) AS chi2
-        |      FROM e)
-        |SELECT n, CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof,
-        |  round(chi2, 6) AS chi2,
-        |  round(sqrt(chi2 / (n * least(nr - 1, nc - 1))), 6) AS cramers_v
-        |FROM s""".stripMargin,
-    // MAD outliers: exact interpolated medians both sides
-    "q_mad_outliers" ->
-      """WITH r AS (SELECT event_type AS k, CAST(value AS DOUBLE) AS v
-        |           FROM events WHERE value IS NOT NULL),
-        |m AS (SELECT k, quantile_cont(v, 0.5) AS med FROM r GROUP BY k),
-        |d AS (SELECT r.k, r.v, abs(r.v - m.med) AS ad, m.med
-        |      FROM r JOIN m USING (k)),
-        |md AS (SELECT k, quantile_cont(ad, 0.5) AS mad FROM d GROUP BY k)
-        |SELECT d.k AS event_type, CAST(count(*) AS BIGINT) AS n,
-        |  round(max(d.med), 6) AS median, round(max(md.mad), 6) AS mad,
-        |  CAST(sum(CASE WHEN d.ad > 3.0 * md.mad THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers
-        |FROM d JOIN md USING (k)
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
-    // grouped OLS: identical closed forms over the five moment sums
-    "q_grouped_ols" ->
-      """WITH b AS (SELECT l_returnflag AS k,
-        |             CAST(l_quantity AS DOUBLE) AS x,
-        |             CAST(l_extendedprice AS DOUBLE) AS y
-        |           FROM lineitem
-        |           WHERE l_quantity IS NOT NULL
-        |             AND l_extendedprice IS NOT NULL),
-        |s AS (SELECT k, CAST(count(*) AS DOUBLE) AS n, sum(x) AS sx,
-        |        sum(y) AS sy, sum(x * x) AS sxx, sum(x * y) AS sxy,
-        |        sum(y * y) AS syy
-        |      FROM b GROUP BY k),
-        |c AS (SELECT k, n, sx, sy,
-        |        n * sxx - sx * sx AS dx, n * syy - sy * sy AS dy,
-        |        n * sxy - sx * sy AS cv
-        |      FROM s)
-        |SELECT k AS l_returnflag, CAST(n AS BIGINT) AS n,
-        |  round(CASE WHEN dx <> 0 THEN cv / dx END, 6) AS slope,
-        |  round(CASE WHEN dx <> 0
-        |    THEN (sy - (cv / dx) * sx) / n END, 6) AS intercept,
-        |  round(CASE WHEN dx <> 0 AND dy <> 0
-        |    THEN cv * cv / (dx * dy) END, 6) AS r2
-        |FROM c ORDER BY l_returnflag""".stripMargin,
-    // Theil-Sen replay: identical monthly rollup, pairwise-slope median
-    // (continuous quantile, both engines' h = (n-1)/2 interpolation),
-    // then the intercept median over the slope-joined base
-    "q_theil_sen" ->
-      """WITH m AS (SELECT n_name AS k,
-        |        CAST(year(o_orderdate) * 12 + month(o_orderdate)
-        |          AS DOUBLE) AS x,
-        |        round(sum(o_totalprice), 2) AS y
-        |      FROM orders JOIN customer ON c_custkey = o_custkey
-        |      JOIN nation ON n_nationkey = c_nationkey
-        |      GROUP BY 1, 2),
-        |s AS (SELECT k, quantile_cont(sl, 0.5) AS slope FROM (
-        |        SELECT a.k, (b.y - a.y) / (b.x - a.x) AS sl
-        |        FROM m a JOIN m b ON b.k = a.k AND a.x < b.x)
-        |      GROUP BY k),
-        |i AS (SELECT m.k, CAST(count(*) AS BIGINT) AS n_points,
-        |        round(any_value(s.slope), 6) AS slope,
-        |        round(quantile_cont(m.y - s.slope * m.x, 0.5), 6)
-        |          AS intercept
-        |      FROM m JOIN s ON s.k = m.k GROUP BY m.k)
-        |SELECT k, n_points, slope, intercept FROM i
-        |ORDER BY k""".stripMargin,
-    // Mann-Kendall replay: same monthly series; S and the tie term are
-    // exact integers, z one quotient of their casts
-    // Hurst replay: same integer-cents daily series, same dyadic
-    // blocks (exact HUGEINT sum-of-squares), same pinned ln-ln fold
-    "q_hurst" -> hurstOracle(Seq(1, 2, 4, 8, 16)),
-    "q_mann_kendall" ->
-      """WITH m AS (SELECT n_name AS k,
-        |        CAST(year(o_orderdate) * 12 + month(o_orderdate)
-        |          AS DOUBLE) AS x,
-        |        round(sum(o_totalprice), 2) AS y
-        |      FROM orders JOIN customer ON c_custkey = o_custkey
-        |      JOIN nation ON n_nationkey = c_nationkey
-        |      GROUP BY 1, 2),
-        |s AS (SELECT a.k,
-        |        CAST(sum(CAST(sign(b.y - a.y) AS BIGINT)) AS BIGINT)
-        |          AS s
-        |      FROM m a JOIN m b ON b.k = a.k AND a.x < b.x
-        |      GROUP BY 1),
-        |t AS (SELECT k,
-        |        CAST(sum(tt * (tt - 1) * (2 * tt + 5)) AS BIGINT)
-        |          AS tie_term,
-        |        CAST(sum(tt) AS BIGINT) AS n_points
-        |      FROM (SELECT k, y, CAST(count(*) AS BIGINT) AS tt
-        |            FROM m GROUP BY 1, 2) GROUP BY 1),
-        |v AS (SELECT s.k, s.s, t.n_points, t.tie_term,
-        |        CAST(n_points * (n_points - 1) * (2 * n_points + 5)
-        |          - tie_term AS DOUBLE) / 18.0 AS var_s
-        |      FROM s JOIN t ON t.k = s.k),
-        |z AS (SELECT *,
-        |        round(CASE WHEN var_s > 0.0 AND s > 0
-        |            THEN CAST(s - 1 AS DOUBLE) / sqrt(var_s)
-        |          WHEN var_s > 0.0 AND s < 0
-        |            THEN CAST(s + 1 AS DOUBLE) / sqrt(var_s)
-        |          ELSE 0.0 END, 6) AS z
-        |      FROM v)
-        |SELECT k, n_points, s, tie_term, round(var_s, 6) AS var_s, z,
-        |  CASE WHEN z > 1.959964 THEN 'increasing'
-        |    WHEN z < -1.959964 THEN 'decreasing'
-        |    ELSE 'no_trend' END AS trend
-        |FROM z ORDER BY k""".stripMargin,
-    // EWMA: the oracle replays the identical per-key recursion (same
-    // 0.3/0.7 literals, same rounded inputs) as a recursive CTE
-    "q_ewma" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT k, day, v,
-        |        row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-        |      FROM d),
-        |e AS (
-        |  SELECT k, day, v, rn, v AS y FROM s WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.k, s.day, s.v, s.rn, 0.3 * s.v + 0.7 * e.y
-        |  FROM s JOIN e ON s.k = e.k AND s.rn = e.rn + 1)
-        |SELECT k AS event_type, day, v AS total, round(y, 6) AS ewma
-        |FROM e ORDER BY event_type, day""".stripMargin,
-    // prefix-duplicate groups: first 8 whitespace tokens verbatim
-    "q_prefix_dup" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t
-        |           FROM documents),
-        |p AS (SELECT doc_id, array_to_string(t[1:8], ' ') AS prefix
-        |      FROM t)
-        |SELECT prefix, CAST(count(*) AS BIGINT) AS n_docs,
-        |  min(doc_id) AS min_doc
-        |FROM p GROUP BY prefix HAVING count(*) > 1
-        |ORDER BY prefix""".stripMargin,
-    // per-source health report: corpus-wide dup digests, length, lang mix
-    "q_source_report" ->
-      """WITH d AS (SELECT doc_id, source, lang,
-        |             CAST(length(text) AS DOUBLE) AS len, md5(text) AS dg
-        |           FROM documents),
-        |dup AS (SELECT dg FROM d GROUP BY dg HAVING count(*) > 1)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN dup.dg IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_dup_docs,
-        |  round(avg(len), 2) AS avg_chars,
-        |  round(avg(CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END), 4)
-        |    AS pct_en
-        |FROM d LEFT JOIN dup ON d.dg = dup.dg
-        |GROUP BY source ORDER BY source""".stripMargin,
-    // Welch t: per-side scalar moments, then the t/df arithmetic
-    "q_welch_t" ->
-      """WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n_a,
-        |             avg(value) AS m_a, var_samp(value) AS v_a
-        |           FROM events
-        |           WHERE event_type = 'click' AND value IS NOT NULL),
-        |b AS (SELECT CAST(count(*) AS BIGINT) AS n_b,
-        |        avg(value) AS m_b, var_samp(value) AS v_b
-        |      FROM events
-        |      WHERE event_type = 'purchase' AND value IS NOT NULL)
-        |SELECT n_a, n_b, round(m_a, 6) AS mean_a, round(m_b, 6) AS mean_b,
-        |  round(CASE WHEN n_a >= 2 AND n_b >= 2 THEN
-        |    (m_a - m_b) / sqrt(v_a / n_a + v_b / n_b) END, 6) AS t_stat,
-        |  round(CASE WHEN n_a >= 2 AND n_b >= 2 THEN
-        |    (v_a / n_a + v_b / n_b) * (v_a / n_a + v_b / n_b)
-        |      / ((v_a / n_a) * (v_a / n_a) / (n_a - 1)
-        |        + (v_b / n_b) * (v_b / n_b) / (n_b - 1)) END, 6) AS df
-        |FROM a CROSS JOIN b""".stripMargin,
-    // Mann-Whitney: identical average-rank windows over the pooled
-    // distinct-value domain, tie-corrected sigma
-    "q_mann_whitney" ->
-      """WITH pv AS (
-        |  SELECT CAST(value AS DOUBLE) AS v,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS ca,
-        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS cb
-        |  FROM events
-        |  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-        |  GROUP BY 1),
-        |r AS (SELECT *, ca + cb AS t,
-        |    CAST(sum(ca + cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) - (ca + cb)
-        |      + (ca + cb + 1) / 2.0 AS rank
-        |  FROM pv),
-        |s AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-        |        CAST(sum(cb) AS BIGINT) AS nb,
-        |        sum(ca * rank) AS ra,
-        |        sum(CAST(t AS DOUBLE) * t * t - t) AS ties
-        |      FROM r)
-        |SELECT na AS n_a, nb AS n_b,
-        |  round(ra - na * (na + 1) / 2.0, 2) AS u_stat,
-        |  round((ra - na * (na + 1) / 2.0 - na * nb / 2.0)
-        |    / sqrt(na * nb / 12.0 * ((na + nb + 1)
-        |      - ties / (CAST(na + nb AS DOUBLE) * (na + nb - 1)))), 6)
-        |    AS z
-        |FROM s""".stripMargin,
-    // Kruskal-Wallis replay: same distinct-value average ranks as the
-    // mann_whitney oracle, per-group rank sums (exact half-integers), Σ
-    // R²/n folded in PINNED group order, tie-corrected H + ε²
-    "q_kruskal" ->
-      """WITH cell AS (
-        |  SELECT CAST(event_type AS VARCHAR) AS grp,
-        |    CAST(value AS DOUBLE) AS v, CAST(count(*) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |pv AS (SELECT v, CAST(sum(c) AS BIGINT) AS t FROM cell
-        |       GROUP BY v),
-        |r AS (SELECT v, t,
-        |    CAST(sum(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) - t
-        |      + (t + 1) / 2.0 AS rank
-        |  FROM pv),
-        |g AS (SELECT grp, CAST(sum(c) AS BIGINT) AS n_g,
-        |        sum(c * rank) AS r_g
-        |      FROM cell JOIN r USING (v) GROUP BY grp),
-        |tot AS (SELECT CAST(sum(t) AS BIGINT) AS n,
-        |          CAST(sum(t * t * t - t) AS BIGINT) AS ties FROM r),
-        |gs AS (SELECT grp, n_g, r_g,
-        |    sum(r_g * r_g / n_g) OVER (ORDER BY grp ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS s_rank,
-        |    CAST(count(*) OVER (ORDER BY grp ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS BIGINT) AS k_groups
-        |  FROM g),
-        |f AS (SELECT gs.*, t.n, t.ties,
-        |    12.0 / (n * (n + 1)) * s_rank - 3.0 * (n + 1) AS h_raw,
-        |    1.0 - ties / (CAST(n AS DOUBLE) * n * n - n) AS tie_c
-        |  FROM gs CROSS JOIN tot t)
-        |SELECT grp, n_g, round(r_g, 2) AS rank_sum,
-        |  round(r_g / n_g, 6) AS mean_rank, k_groups, n,
-        |  round(h_raw, 6) AS h,
-        |  round(CASE WHEN tie_c > 0 THEN h_raw / tie_c END, 6)
-        |    AS h_tie_corrected,
-        |  k_groups - 1 AS df_h,
-        |  round(CASE WHEN n > k_groups AND tie_c > 0
-        |    THEN (h_raw / tie_c - k_groups + 1) / (n - k_groups) END, 6)
-        |    AS epsilon_sq
-        |FROM f ORDER BY grp""".stripMargin,
-    // trend replay: Spark dayofweek is 1=Sunday, DuckDB's is 0=Sunday
-    // (+1 aligns); exact integer sums in pinned score order
-    "q_trend_test" ->
-      """WITH b AS (SELECT dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS score,
-        |    CASE WHEN value > 50.0 THEN 1 ELSE 0 END AS hit
-        |  FROM events WHERE ts IS NOT NULL),
-        |g AS (SELECT score, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(hit) AS BIGINT) AS successes
-        |      FROM b GROUP BY 1),
-        |w AS (SELECT score, n, successes,
-        |    CAST(sum(n) OVER pin AS BIGINT) AS N_tot,
-        |    CAST(sum(successes) OVER pin AS BIGINT) AS R_tot,
-        |    CAST(sum(successes * score) OVER pin AS BIGINT) AS rs,
-        |    CAST(sum(n * score) OVER pin AS BIGINT) AS ns,
-        |    CAST(sum(n * score * score) OVER pin AS BIGINT) AS ns2
-        |  FROM g WINDOW pin AS (ORDER BY score ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND UNBOUNDED FOLLOWING)),
-        |f AS (SELECT *,
-        |    CAST(R_tot AS DOUBLE) / CAST(N_tot AS DOUBLE) AS p
-        |  FROM w),
-        |h AS (SELECT *,
-        |    CAST(rs AS DOUBLE) - p * CAST(ns AS DOUBLE) AS t,
-        |    p * (1.0 - p) * (CAST(ns2 AS DOUBLE) -
-        |      CAST(ns AS DOUBLE) * CAST(ns AS DOUBLE)
-        |        / CAST(N_tot AS DOUBLE)) AS v
-        |  FROM f)
-        |SELECT score, n, successes,
-        |  round(CAST(successes AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS rate,
-        |  N_tot AS n_total,
-        |  round(t, 6) + 0.0 AS t_stat,
-        |  round(CASE WHEN v > 0 THEN t / sqrt(v) END, 6) + 0.0 AS z
-        |FROM h ORDER BY score""".stripMargin,
-    // ANOVA replay: same dyadic lattice, same exact sums, same pinned
-    // group folds and rounding sequence; + 0.0 negative-zero guards
-    "q_anova" ->
-      """WITH q AS (
-        |  SELECT CAST(event_type AS VARCHAR) AS grp,
-        |    floor(CAST(value AS DOUBLE) * 64) / 64 AS v
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |g AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_g,
-        |        sum(v) AS s_g, sum(v * v) AS q_g
-        |      FROM q GROUP BY grp),
-        |w AS (SELECT grp, n_g, s_g, q_g,
-        |    CAST(sum(n_g) OVER pin AS BIGINT) AS n,
-        |    CAST(count(*) OVER pin AS BIGINT) AS k_groups,
-        |    sum(s_g) OVER pin AS s_all,
-        |    sum(q_g) OVER pin AS q_all,
-        |    sum(s_g * s_g / n_g) OVER pin AS ssb_sum
-        |  FROM g WINDOW pin AS (ORDER BY grp ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND UNBOUNDED FOLLOWING)),
-        |f AS (SELECT *, ssb_sum - s_all * s_all / n AS ssb,
-        |        q_all - s_all * s_all / n AS sst
-        |      FROM w),
-        |h AS (SELECT *, sst - ssb AS ssw FROM f)
-        |SELECT grp, n_g, round(s_g / n_g, 6) AS mean_g, k_groups, n,
-        |  round(ssb, 6) + 0.0 AS ss_between,
-        |  round(ssw, 6) + 0.0 AS ss_within,
-        |  k_groups - 1 AS df_between, n - k_groups AS df_within,
-        |  round(CASE WHEN k_groups > 1 AND n > k_groups AND ssw > 0
-        |    THEN (ssb / (k_groups - 1)) / (ssw / (n - k_groups)) END, 6)
-        |    + 0.0 AS f_stat,
-        |  round(CASE WHEN sst > 0 THEN ssb / sst END, 6) + 0.0 AS eta_sq
-        |FROM h ORDER BY grp""".stripMargin,
-    // entropy-rate replay: exact count quotients, pinned per-state and
-    // cross-state folds, ln/exp same-expression (perplexity precedent)
-    "q_entropy_rate" ->
-      """WITH p AS (SELECT event_type AS to_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS from_type
-        |  FROM events),
-        |cnt AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT)
-        |    AS n FROM p WHERE from_type IS NOT NULL GROUP BY 1, 2),
-        |a AS (SELECT *, CAST(sum(n) OVER (PARTITION BY from_type)
-        |    AS BIGINT) AS nf FROM cnt),
-        |b AS (SELECT *, CAST(n AS DOUBLE) / CAST(nf AS DOUBLE) AS pp
-        |  FROM a),
-        |c AS (SELECT *,
-        |    sum(0.0 - pp * ln(pp)) OVER (PARTITION BY from_type
-        |      ORDER BY to_type ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |      UNBOUNDED FOLLOWING) AS h,
-        |    row_number() OVER (PARTITION BY from_type
-        |      ORDER BY to_type) AS rn
-        |  FROM b),
-        |d AS (SELECT * FROM c WHERE rn = 1),
-        |e AS (SELECT *, CAST(sum(nf) OVER (ORDER BY from_type ROWS
-        |    BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |    AS BIGINT) AS nt FROM d),
-        |f AS (SELECT *, CAST(nf AS DOUBLE) / CAST(nt AS DOUBLE) AS pi
-        |  FROM e),
-        |g AS (SELECT *, sum(pi * h) OVER (ORDER BY from_type ROWS
-        |    BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |    AS rate FROM f)
-        |SELECT from_type, nf AS n_out, round(h, 6) AS h_row,
-        |  round(exp(h), 6) AS effective_branching,
-        |  round(pi, 6) AS visit_share, round(pi * h, 6) AS contribution,
-        |  round(rate, 6) AS entropy_rate
-        |FROM g ORDER BY from_type""".stripMargin,
-    // transition matrix: same (ts, event_id) tie discipline as sessions
-    "q_transitions" ->
-      """WITH p AS (
-        |  SELECT lag(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) AS from_type,
-        |         event_type AS to_type
-        |  FROM events),
-        |m AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |      FROM p WHERE from_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        |  round(n / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE),
-        |    6) AS p
-        |FROM m ORDER BY from_type, to_type""".stripMargin,
-    // last-touch attribution: RANGE frame [t-L, t-1us] over epoch_us,
-    // struct max picks the deterministic latest touch
-    "q_attribution" ->
-      """WITH b AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |             event_id AS id, event_type AS ty FROM events),
-        |t AS (SELECT *,
-        |    max(CASE WHEN ty <> 'purchase'
-        |             THEN struct_pack(us := us, id := id, ty := ty) END)
-        |      OVER (PARTITION BY u ORDER BY us
-        |            RANGE BETWEEN 7200000000 PRECEDING
-        |                      AND 1 PRECEDING) AS touch
-        |  FROM b)
-        |SELECT coalesce(touch.ty, 'none') AS channel,
-        |  CAST(count(*) AS BIGINT) AS n_conversions
-        |FROM t WHERE ty = 'purchase'
-        |GROUP BY 1 ORDER BY channel""".stripMargin,
-    "q_linear_attribution" ->
-      """WITH b AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |             event_id AS id, event_type AS ty FROM events),
-        |c AS (SELECT u, us AS cus, id AS cid FROM b
-        |      WHERE ty = 'purchase'),
-        |t AS (SELECT u, us AS tus, ty FROM b WHERE ty <> 'purchase'),
-        |p AS (SELECT c.u, c.cid, t.ty FROM c JOIN t ON t.u = c.u
-        |      WHERE t.tus >= c.cus - 7200000000 AND t.tus < c.cus),
-        |n AS (SELECT u, cid, CAST(count(*) AS BIGINT) AS n
-        |      FROM p GROUP BY 1, 2),
-        |cr AS (SELECT p.ty AS channel,
-        |         CAST(1.0 AS DOUBLE) / n.n AS credit
-        |       FROM p JOIN n ON n.u = p.u AND n.cid = p.cid
-        |       UNION ALL
-        |       SELECT 'none' AS channel, CAST(1.0 AS DOUBLE) AS credit
-        |       FROM c LEFT JOIN n ON n.u = c.u AND n.cid = c.cid
-        |       WHERE n.u IS NULL)
-        |SELECT channel, round(sum(credit), 6) AS credit,
-        |  CAST(count(*) AS BIGINT) AS n_touchpoints
-        |FROM cr GROUP BY 1 ORDER BY channel""".stripMargin,
-    "q_ab_test" ->
-      """WITH u AS (SELECT DISTINCT user_id AS uid FROM events),
-        |arms AS (SELECT uid,
-        |    CASE WHEN CAST('0x' || substr(
-        |        md5('exp1_' || CAST(uid AS VARCHAR)), 1, 15) AS BIGINT)
-        |        % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-        |  FROM u),
-        |cv AS (SELECT DISTINCT user_id AS uid FROM events
-        |       WHERE event_type = 'purchase' AND value >= 200.0),
-        |g AS (SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-        |        CAST(sum(CASE WHEN cv.uid IS NULL THEN 0 ELSE 1 END)
-        |          AS BIGINT) AS n_converted
-        |      FROM arms LEFT JOIN cv ON cv.uid = arms.uid
-        |      GROUP BY 1),
-        |s AS (SELECT sum(CASE WHEN arm = 'A' THEN n_users END) AS na,
-        |        sum(CASE WHEN arm = 'A' THEN n_converted END) AS ca,
-        |        sum(CASE WHEN arm = 'B' THEN n_users END) AS nb,
-        |        sum(CASE WHEN arm = 'B' THEN n_converted END) AS cb
-        |      FROM g),
-        |z AS (SELECT round(
-        |        (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-        |         - CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) /
-        |        sqrt(CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE)
-        |          * (1.0 - CAST(ca + cb AS DOUBLE)
-        |                   / CAST(na + nb AS DOUBLE))
-        |          * (1.0 / CAST(na AS DOUBLE)
-        |             + 1.0 / CAST(nb AS DOUBLE))), 6) AS z
-        |      FROM s)
-        |SELECT arm, n_users, n_converted,
-        |  round(CAST(n_converted AS DOUBLE) / CAST(n_users AS DOUBLE), 6)
-        |    AS rate, z
-        |FROM g CROSS JOIN z ORDER BY arm""".stripMargin,
-    // SRM replay: exact distinct-user conditional counts, same chi2
-    // expression and critical constant
-    "q_srm" ->
-      """WITH u AS (SELECT DISTINCT user_id AS uid FROM events),
-        |a AS (SELECT CASE WHEN CAST('0x' || substr(
-        |    md5('exp1_' || CAST(uid AS VARCHAR)), 1, 15) AS BIGINT)
-        |    % 2 = 0 THEN 'A' ELSE 'B' END AS arm FROM u),
-        |s AS (SELECT
-        |    CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_a,
-        |    CAST(sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_b
-        |  FROM a),
-        |e AS (SELECT *,
-        |    CAST(n_a + n_b AS DOUBLE) * CAST(0.5 AS DOUBLE) AS ea,
-        |    CAST(n_a + n_b AS DOUBLE)
-        |      * (1.0 - CAST(0.5 AS DOUBLE)) AS eb
-        |  FROM s),
-        |c AS (SELECT *, CASE WHEN ea > 0.0 AND eb > 0.0 THEN
-        |    (CAST(n_a AS DOUBLE) - ea) * (CAST(n_a AS DOUBLE) - ea)
-        |      / ea
-        |    + (CAST(n_b AS DOUBLE) - eb) * (CAST(n_b AS DOUBLE) - eb)
-        |      / eb END AS chi2
-        |  FROM e)
-        |SELECT n_a, n_b, round(ea, 6) AS expected_a,
-        |  round(chi2, 6) AS chi2,
-        |  chi2 > 3.841459 AS srm_detected
-        |FROM c""".stripMargin,
-    // QTE replay: per-arm quantile_cont over the dyadic value lattice,
-    // per-decile gap
-    "q_qte" ->
-      """WITH per AS (SELECT user_id AS u,
-        |    CAST(round(sum(value), 2) AS DOUBLE) AS m
-        |  FROM events GROUP BY 1),
-        |a AS (SELECT floor(m * 16.0) / 16.0 AS vq,
-        |    CASE WHEN CAST('0x' || substr(
-        |        md5('qte1_' || CAST(u AS VARCHAR)), 1, 15) AS BIGINT)
-        |        % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-        |  FROM per),
-        |ea AS (SELECT quantile_cont(vq, [0.1, 0.2, 0.3, 0.4, 0.5,
-        |    0.6, 0.7, 0.8, 0.9]) AS e FROM a WHERE arm = 'A'),
-        |eb AS (SELECT quantile_cont(vq, [0.1, 0.2, 0.3, 0.4, 0.5,
-        |    0.6, 0.7, 0.8, 0.9]) AS e FROM a WHERE arm = 'B')
-        |SELECT CAST(u.i AS DOUBLE) / 10.0 AS quantile,
-        |  round(ea.e[CAST(u.i AS INTEGER)], 6) AS q_control,
-        |  round(eb.e[CAST(u.i AS INTEGER)], 6) AS q_treated,
-        |  round(eb.e[CAST(u.i AS INTEGER)]
-        |    - ea.e[CAST(u.i AS INTEGER)], 6) AS qte
-        |FROM UNNEST(range(1, 10)) AS u(i)
-        |CROSS JOIN ea CROSS JOIN eb
-        |ORDER BY quantile""".stripMargin,
-    // uplift replay: two prefixed Newton chains (per-arm fits), dyadic
-    // score grid, quantile_cont decile edges, exact-count rates
-    "q_uplift" -> {
-      s"""WITH per AS (SELECT user_id AS u,
-         |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-         |      AS DOUBLE) AS x,
-         |    CAST(max(CASE WHEN event_type = 'purchase'
-         |      AND value >= 200.0 THEN 1 ELSE 0 END) AS DOUBLE) AS y
-         |  FROM events GROUP BY 1),
-         |ar AS (SELECT x, y,
-         |    CASE WHEN CAST('0x' || substr(
-         |        md5('upl1_' || CAST(u AS VARCHAR)), 1, 15) AS BIGINT)
-         |        % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-         |  FROM per),
-         |st AS (SELECT avg(x) AS m, stddev_samp(x) AS sd FROM ar),
-         |std AS (SELECT (x - m) / sd AS zz, y, arm FROM ar, st),
-         |za AS (SELECT y, zz AS z FROM std WHERE arm = 'A'),
-         |zc AS (SELECT y, zz AS z FROM std WHERE arm = 'B'),
-         |${newtonChainSql(4, "za", "a")},
-         |${newtonChainSql(4, "zc", "c")},
-         |ba AS (SELECT round(b0, 6) + 0.0 AS a0,
-         |    round(b1, 6) + 0.0 AS a1 FROM ab4r),
-         |bc AS (SELECT round(b0, 6) + 0.0 AS c0,
-         |    round(b1, 6) + 0.0 AS c1 FROM cb4r),
-         |sc AS (SELECT y, arm,
-         |    floor(((1.0 / (1.0 + exp(0.0 - (c0 + c1 * zz))))
-         |      - (1.0 / (1.0 + exp(0.0 - (a0 + a1 * zz)))))
-         |      * 256.0) / 256.0 AS su
-         |  FROM std, ba, bc),
-         |ed AS (SELECT quantile_cont(su, [0.1, 0.2, 0.3, 0.4, 0.5,
-         |    0.6, 0.7, 0.8, 0.9]) AS e FROM sc),
-         |bk AS (SELECT y, arm, su,
-         |    1 + (CASE WHEN su >= e[1] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[2] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[3] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[4] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[5] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[6] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[7] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[8] THEN 1 ELSE 0 END)
-         |      + (CASE WHEN su >= e[9] THEN 1 ELSE 0 END) AS bucket
-         |  FROM sc, ed),
-         |pb AS (SELECT bucket,
-         |    CAST(coalesce(sum(CASE WHEN arm = 'B' THEN 1 END), 0)
-         |      AS BIGINT) AS n_treated,
-         |    CAST(coalesce(sum(CASE WHEN arm = 'B' THEN y END), 0.0)
-         |      AS BIGINT) AS conv_treated,
-         |    CAST(coalesce(sum(CASE WHEN arm = 'A' THEN 1 END), 0)
-         |      AS BIGINT) AS n_control,
-         |    CAST(coalesce(sum(CASE WHEN arm = 'A' THEN y END), 0.0)
-         |      AS BIGINT) AS conv_control,
-         |    avg(su) AS pu
-         |  FROM bk GROUP BY 1)
-         |SELECT bucket, n_treated, conv_treated, n_control,
-         |  conv_control,
-         |  round(CASE WHEN n_treated > 0
-         |    THEN CAST(conv_treated AS DOUBLE)
-         |      / CAST(n_treated AS DOUBLE) END, 6) AS rate_treated,
-         |  round(CASE WHEN n_control > 0
-         |    THEN CAST(conv_control AS DOUBLE)
-         |      / CAST(n_control AS DOUBLE) END, 6) AS rate_control,
-         |  round(CASE WHEN n_treated > 0 AND n_control > 0
-         |    THEN CAST(conv_treated AS DOUBLE)
-         |        / CAST(n_treated AS DOUBLE)
-         |      - CAST(conv_control AS DOUBLE)
-         |        / CAST(n_control AS DOUBLE) END, 6)
-         |    AS observed_uplift,
-         |  round(pu, 6) AS predicted_uplift
-         |FROM pb ORDER BY bucket""".stripMargin
-    },
-    // mSPRT replay: first-touch rollups, zero-filled days×arms grid,
-    // exact cumulative counts, same Λ expression, running-min p
-    "q_msprt" ->
-      """WITH seen AS (SELECT user_id AS u,
-        |    min(CAST(ts AS DATE)) AS d0 FROM events GROUP BY 1),
-        |sa AS (SELECT u, d0,
-        |    CASE WHEN CAST('0x' || substr(
-        |        md5('seq1_' || CAST(u AS VARCHAR)), 1, 15) AS BIGINT)
-        |        % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-        |  FROM seen),
-        |cv AS (SELECT user_id AS u, min(CAST(ts AS DATE)) AS dc
-        |  FROM events WHERE event_type = 'purchase' AND value >= 200.0
-        |  GROUP BY 1),
-        |pu AS (SELECT sa.arm, sa.d0, cv.dc
-        |  FROM sa LEFT JOIN cv ON cv.u = sa.u),
-        |days AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
-        |arms AS (SELECT DISTINCT arm FROM pu),
-        |nu AS (SELECT arm, d0 AS day, CAST(count(*) AS BIGINT) AS nu
-        |  FROM pu GROUP BY 1, 2),
-        |ncv AS (SELECT arm, dc AS day, CAST(count(*) AS BIGINT) AS nc
-        |  FROM pu WHERE dc IS NOT NULL GROUP BY 1, 2),
-        |grid AS (SELECT a.arm, d.day, coalesce(nu.nu, 0) AS nu,
-        |    coalesce(ncv.nc, 0) AS nc
-        |  FROM days d CROSS JOIN arms a
-        |  LEFT JOIN nu ON nu.arm = a.arm AND nu.day = d.day
-        |  LEFT JOIN ncv ON ncv.arm = a.arm AND ncv.day = d.day),
-        |cum AS (SELECT arm, day,
-        |    CAST(sum(nu) OVER (PARTITION BY arm ORDER BY day ROWS
-        |      BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS n,
-        |    CAST(sum(nc) OVER (PARTITION BY arm ORDER BY day ROWS
-        |      BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS c
-        |  FROM grid),
-        |pd AS (SELECT day,
-        |    CAST(coalesce(sum(CASE WHEN arm = 'A' THEN n END), 0)
-        |      AS BIGINT) AS n_a,
-        |    CAST(coalesce(sum(CASE WHEN arm = 'A' THEN c END), 0)
-        |      AS BIGINT) AS conv_a,
-        |    CAST(coalesce(sum(CASE WHEN arm = 'B' THEN n END), 0)
-        |      AS BIGINT) AS n_b,
-        |    CAST(coalesce(sum(CASE WHEN arm = 'B' THEN c END), 0)
-        |      AS BIGINT) AS conv_b
-        |  FROM cum GROUP BY 1),
-        |t0 AS (SELECT *,
-        |    CAST(conv_a + conv_b AS DOUBLE)
-        |      / CAST(n_a + n_b AS DOUBLE) AS pb
-        |  FROM pd),
-        |t1 AS (SELECT *,
-        |    CASE WHEN CAST(n_a AS DOUBLE) > 0.0
-        |        AND CAST(n_b AS DOUBLE) > 0.0
-        |      THEN CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE)
-        |        - CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE) END
-        |      AS th,
-        |    CASE WHEN CAST(n_a AS DOUBLE) > 0.0
-        |        AND CAST(n_b AS DOUBLE) > 0.0
-        |        AND pb > 0.0 AND pb < 1.0
-        |      THEN pb * (1.0 - pb) * (1.0 / CAST(n_a AS DOUBLE)
-        |        + 1.0 / CAST(n_b AS DOUBLE)) END AS v
-        |  FROM t0),
-        |t2 AS (SELECT *,
-        |    sqrt(v / (v + 0.0625)) * exp(th * th * 0.0625
-        |      / (2.0 * v * (v + 0.0625))) AS lam
-        |  FROM t1),
-        |t3 AS (SELECT *,
-        |    min(1.0 / lam) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS mn
-        |  FROM t2),
-        |t4 AS (SELECT *, CASE WHEN mn IS NOT NULL
-        |    THEN least(1.0, mn) END AS p FROM t3)
-        |SELECT day, n_a, conv_a, n_b, conv_b,
-        |  round(th, 6) AS theta, round(lam, 6) AS lambda,
-        |  round(p, 6) AS p_always_valid,
-        |  p < 0.05 AS significant
-        |FROM t4 ORDER BY day""".stripMargin,
-    // DiD replay: per-user rounded pre/post sums, md5 arms, paired-
-    // diff moments, same guards and literals
-    "q_did" ->
-      """WITH per AS (SELECT user_id AS u,
-        |    round(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN value ELSE 0.0 END), 2) AS pre,
-        |    round(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN value ELSE 0.0 END), 2) AS post
-        |  FROM events GROUP BY 1),
-        |a AS (SELECT pre, post, post - pre AS d,
-        |    CASE WHEN CAST('0x' || substr(
-        |        md5('did1_' || CAST(u AS VARCHAR)), 1, 15) AS BIGINT)
-        |        % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-        |  FROM per),
-        |arms AS (SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-        |    sum(pre) AS sp, sum(post) AS so, sum(d) AS sd,
-        |    sum(d * d) AS sdd FROM a GROUP BY 1),
-        |s AS (SELECT
-        |    sum(CASE WHEN arm = 'A'
-        |      THEN CAST(n_users AS DOUBLE) END) AS na,
-        |    sum(CASE WHEN arm = 'A' THEN sd END) AS sda,
-        |    sum(CASE WHEN arm = 'A' THEN sdd END) AS sdda,
-        |    sum(CASE WHEN arm = 'B'
-        |      THEN CAST(n_users AS DOUBLE) END) AS nb,
-        |    sum(CASE WHEN arm = 'B' THEN sd END) AS sdb,
-        |    sum(CASE WHEN arm = 'B' THEN sdd END) AS sddb
-        |  FROM arms),
-        |e0 AS (SELECT *, sdb / nb - sda / na AS did,
-        |    CASE WHEN na > 1.0
-        |      THEN (sdda - sda * sda / na) / (na - 1.0) END AS va,
-        |    CASE WHEN nb > 1.0
-        |      THEN (sddb - sdb * sdb / nb) / (nb - 1.0) END AS vb
-        |  FROM s),
-        |e AS (SELECT round(did, 6) AS did,
-        |    round(sqrt(va / na + vb / nb), 6) AS se,
-        |    round(CASE WHEN sqrt(va / na + vb / nb) > 0.0
-        |      THEN did / sqrt(va / na + vb / nb) END, 6) AS z
-        |  FROM e0)
-        |SELECT arm, n_users,
-        |  round(sp / CAST(n_users AS DOUBLE), 6) AS mean_pre,
-        |  round(so / CAST(n_users AS DOUBLE), 6) AS mean_post,
-        |  round(sd / CAST(n_users AS DOUBLE), 6) AS mean_change,
-        |  e.did, e.se, e.z
-        |FROM arms CROSS JOIN e ORDER BY arm""".stripMargin,
-    // jackknife replay: identical 2^-6 unit-sum lattice, 2^-30
-    // pseudo-value/squared-deviation lattices — every sum exact in any
-    // order, single correctly-rounded quotients between
-    "q_jackknife" ->
-      """WITH per AS (SELECT o_custkey AS u,
-        |    floor(sum(o_totalprice) * 64.0) / 64.0 AS nq,
-        |    floor(sum(CAST(1.0 AS DOUBLE)) * 64.0) / 64.0 AS dq
-        |  FROM orders GROUP BY 1),
-        |t AS (SELECT CAST(sum(nq) AS DOUBLE) AS sn,
-        |    CAST(sum(dq) AS DOUBLE) AS sd,
-        |    CAST(count(*) AS BIGINT) AS m FROM per),
-        |ps AS (SELECT floor((t.sn - nq) / (t.sd - dq) * 1073741824.0)
-        |      / 1073741824.0 AS ti, t.sn, t.sd, t.m
-        |  FROM per CROSS JOIN t WHERE t.sd - dq <> 0.0),
-        |mn AS (SELECT CAST(sum(ti) AS DOUBLE) AS s1,
-        |    CAST(count(*) AS BIGINT) AS mm FROM ps),
-        |e AS (SELECT ps.*, mn.mm,
-        |    mn.s1 / CAST(mn.mm AS DOUBLE) AS tbar
-        |  FROM ps CROSS JOIN mn),
-        |g AS (SELECT max(m) AS n_units, max(mm) AS n_pseudo,
-        |    max(sn / sd) AS th,
-        |    CAST(sum(floor((ti - tbar) * (ti - tbar) * 1073741824.0)
-        |      / 1073741824.0) AS DOUBLE) AS sse,
-        |    CAST(max(mm) AS DOUBLE) AS md
-        |  FROM g0) ,
-        |g0 AS (SELECT * FROM e)
-        |SELECT n_units, n_pseudo, round(th, 6) AS theta,
-        |  round(sqrt((md - 1.0) / md * sse), 6) AS jk_se,
-        |  round(th - CAST(1.959964 AS DOUBLE)
-        |    * sqrt((md - 1.0) / md * sse), 6) AS ci_lo,
-        |  round(th + CAST(1.959964 AS DOUBLE)
-        |    * sqrt((md - 1.0) / md * sse), 6) AS ci_hi
-        |FROM g""".stripMargin,
-    // Poisson-bootstrap replay: same md5 dyadic uniforms, same fixed
-    // CDF thresholds, exact order-statistic CI ranks (4th/61st of 64),
-    // PINNED b-order folds for the replicate mean/se
-    "q_bootstrap_ci" ->
-      """WITH base AS (SELECT o_orderkey AS id,
-        |    CAST(o_totalprice AS DOUBLE) AS x FROM orders
-        |  WHERE o_totalprice IS NOT NULL),
-        |g AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    sum(x) / CAST(count(*) AS DOUBLE) AS pm FROM base),
-        |rep AS (SELECT r.b, x,
-        |    (CAST(CAST('0x' || substr(md5('bs1_' || CAST(r.b AS VARCHAR)
-        |        || '_' || CAST(id AS VARCHAR)), 1, 15) AS BIGINT)
-        |      % 1048576 AS DOUBLE) + 0.5) / 1048576.0 AS u
-        |  FROM base CROSS JOIN UNNEST(range(0, 64)) AS r(b)),
-        |w AS (SELECT b, x,
-        |    (CASE WHEN u > 0.3678794412 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN u > 0.7357588823 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN u > 0.9196986029 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN u > 0.9810118431 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN u > 0.9963401532 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN u > 0.9994058151 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN u > 0.9999167589 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN u > 0.9999897509 THEN 1 ELSE 0 END) AS w
-        |  FROM rep),
-        |ests AS (SELECT b,
-        |    CASE WHEN sum(w) > 0
-        |      THEN sum(w * x) / CAST(sum(w) AS DOUBLE) END AS est
-        |  FROM w GROUP BY 1),
-        |rk AS (SELECT b, est,
-        |    row_number() OVER (ORDER BY est NULLS FIRST, b) AS rk,
-        |    sum(est) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND UNBOUNDED FOLLOWING) AS s1,
-        |    sum(est * est) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS s2
-        |  FROM ests),
-        |s AS (SELECT max(s1) AS s1, max(s2) AS s2,
-        |    sum(CASE WHEN rk = 2 THEN est END) AS lo,
-        |    sum(CASE WHEN rk = 63 THEN est END) AS hi
-        |  FROM rk)
-        |SELECT n, 64 AS reps, round(pm, 6) AS point_mean,
-        |  round(s1 / 64.0, 6) AS boot_mean,
-        |  round(sqrt(greatest((s2 - s1 * s1 / 64.0) / 63.0,
-        |    CAST(0.0 AS DOUBLE))), 6) AS boot_se,
-        |  round(lo, 6) AS ci_lo, round(hi, 6) AS ci_hi
-        |FROM s CROSS JOIN g""".stripMargin,
-    // power-analysis replay: exact-integer baseline scalars, literal
-    // z constants, same single-expression n formula
-    "q_power" ->
-      """WITH u AS (SELECT CAST(count(*) AS BIGINT) AS n_users FROM
-        |    (SELECT DISTINCT user_id FROM events)),
-        |cv AS (SELECT CAST(count(*) AS BIGINT) AS n_conv FROM
-        |    (SELECT DISTINCT user_id FROM events
-        |     WHERE event_type = 'purchase' AND value >= 200.0)),
-        |tr AS (SELECT CAST(count(*) AS BIGINT) AS n_user_days,
-        |    CAST(count(DISTINCT d) AS BIGINT) AS n_days FROM
-        |    (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-        |     FROM events)),
-        |b AS (SELECT n_users, n_conv,
-        |    CAST(n_conv AS DOUBLE) / CAST(n_users AS DOUBLE) AS p1,
-        |    CAST(n_user_days AS DOUBLE) / CAST(n_days AS DOUBLE)
-        |      AS daily_users
-        |  FROM u CROSS JOIN cv CROSS JOIN tr),
-        |l AS (SELECT b.*, CAST(u.l AS DOUBLE) AS rel_lift
-        |  FROM b CROSS JOIN
-        |    UNNEST(CAST([0.02, 0.05, 0.1, 0.2] AS DOUBLE[])) AS u(l)),
-        |c AS (SELECT *, p1 * (1.0 + rel_lift) AS p2 FROM l),
-        |n AS (SELECT *,
-        |    CASE WHEN p2 < 1.0 AND p1 > 0.0 THEN
-        |      ceil((CAST(1.959964 AS DOUBLE) + CAST(0.841621 AS DOUBLE))
-        |        * (CAST(1.959964 AS DOUBLE) + CAST(0.841621 AS DOUBLE))
-        |        * (p1 * (1.0 - p1) + p2 * (1.0 - p2))
-        |        / ((p2 - p1) * (p2 - p1))) END AS nn
-        |  FROM c)
-        |SELECT rel_lift, n_users, n_conv,
-        |  round(p1, 6) AS baseline_rate, round(p2, 6) AS target_rate,
-        |  CAST(nn AS BIGINT) AS n_per_arm,
-        |  CASE WHEN nn IS NOT NULL THEN
-        |    CAST(ceil(2.0 * CAST(nn AS DOUBLE) / daily_users)
-        |      AS BIGINT) END AS days_to_run
-        |FROM n ORDER BY rel_lift""".stripMargin,
-    // CUPED replay: per-user pre/post rounded sums, md5 arms, pooled
-    // moment scalars, conditional arm sums — same guards, same literals
-    "q_cuped" ->
-      """WITH per AS (SELECT user_id AS u,
-        |    round(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN value ELSE 0.0 END), 2) AS x,
-        |    round(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN value ELSE 0.0 END), 2) AS y
-        |  FROM events GROUP BY 1),
-        |a AS (SELECT x, y,
-        |    CASE WHEN CAST('0x' || substr(
-        |        md5('cuped1_' || CAST(u AS VARCHAR)), 1, 15) AS BIGINT)
-        |        % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-        |  FROM per),
-        |g0 AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(x) AS sx,
-        |        sum(y) AS sy, sum(x * x) AS sxx, sum(x * y) AS sxy,
-        |        sum(y * y) AS syy FROM a),
-        |g1 AS (SELECT n, sx,
-        |    n * sxx - sx * sx AS dx, n * syy - sy * sy AS dy,
-        |    n * sxy - sx * sy AS cv FROM g0),
-        |g AS (SELECT n, sx,
-        |    CASE WHEN dx <> 0.0 THEN cv / dx END AS theta,
-        |    CASE WHEN dx <> 0.0 AND dy <> 0.0
-        |      THEN cv * cv / (dx * dy) END AS rho2,
-        |    CASE WHEN dx <> 0.0 THEN dy / (n * n)
-        |      - (cv / (n * n)) * (cv / (n * n)) / (dx / (n * n)) END
-        |      AS s2cv
-        |  FROM g1),
-        |arms AS (SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-        |    sum(x) AS sxa, sum(y) AS sya FROM a GROUP BY 1),
-        |s AS (SELECT
-        |    sum(CASE WHEN arm = 'A'
-        |      THEN CAST(n_users AS DOUBLE) END) AS na,
-        |    sum(CASE WHEN arm = 'A' THEN sxa END) AS xa,
-        |    sum(CASE WHEN arm = 'A' THEN sya END) AS ya,
-        |    sum(CASE WHEN arm = 'B'
-        |      THEN CAST(n_users AS DOUBLE) END) AS nb,
-        |    sum(CASE WHEN arm = 'B' THEN sxa END) AS xb,
-        |    sum(CASE WHEN arm = 'B' THEN sya END) AS yb
-        |  FROM arms),
-        |z AS (SELECT round(theta, 6) AS theta,
-        |    round(rho2, 6) AS var_reduction,
-        |    round(CASE WHEN s2cv > 0.0 THEN
-        |      ((ya / na - yb / nb) - theta * (xa / na - xb / nb))
-        |      / sqrt(s2cv * (1.0 / na + 1.0 / nb)) END, 6) AS z_adj
-        |  FROM s CROSS JOIN g)
-        |SELECT arm, n_users,
-        |  round(sxa / CAST(n_users AS DOUBLE), 6) AS mean_pre,
-        |  round(sya / CAST(n_users AS DOUBLE), 6) AS mean_post,
-        |  round(sya / CAST(n_users AS DOUBLE)
-        |    - g.theta * (sxa / CAST(n_users AS DOUBLE) - g.sx / g.n), 6)
-        |    AS adj_mean_post,
-        |  z.theta, z.var_reduction, z.z_adj
-        |FROM arms CROSS JOIN g CROSS JOIN z
-        |ORDER BY arm""".stripMargin,
-    "q_target_encode" ->
-      """WITH s AS (SELECT o_orderpriority AS cat,
-        |             sum(CAST(o_totalprice AS DOUBLE)) AS sy,
-        |             CAST(count(*) AS BIGINT) AS n
-        |           FROM orders GROUP BY 1),
-        |g AS (SELECT avg(CAST(o_totalprice AS DOUBLE)) AS gm FROM orders)
-        |SELECT o_orderkey, o_orderpriority,
-        |  round(CASE WHEN n > 1
-        |        THEN (sy - CAST(o_totalprice AS DOUBLE))
-        |             / CAST(n - 1 AS DOUBLE)
-        |        ELSE gm END, 6) AS encoded
-        |FROM orders JOIN s ON s.cat = o_orderpriority CROSS JOIN g
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_ref_integrity" ->
-      """WITH e1 AS (SELECT 'orders.o_custkey -> customer.c_custkey'
-        |    AS fk_edge,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM orders
-        |     WHERE o_custkey NOT IN (SELECT c_custkey FROM customer))
-        |      AS n_orphan_rows,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM
-        |       (SELECT DISTINCT c_custkey FROM customer)
-        |     WHERE c_custkey NOT IN (SELECT o_custkey FROM orders))
-        |      AS n_childless_keys),
-        |e2 AS (SELECT 'lineitem.l_orderkey -> orders.o_orderkey',
-        |    (SELECT CAST(count(*) AS BIGINT) FROM lineitem
-        |     WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM
-        |       (SELECT DISTINCT o_orderkey FROM orders)
-        |     WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem))),
-        |e3 AS (SELECT 'lineitem.l_partkey -> part.p_partkey',
-        |    (SELECT CAST(count(*) AS BIGINT) FROM lineitem
-        |     WHERE l_partkey NOT IN (SELECT p_partkey FROM part)),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM
-        |       (SELECT DISTINCT p_partkey FROM part)
-        |     WHERE p_partkey NOT IN (SELECT l_partkey FROM lineitem))),
-        |e4 AS (SELECT 'customer.c_nationkey -> nation.n_nationkey',
-        |    (SELECT CAST(count(*) AS BIGINT) FROM customer
-        |     WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation)),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM
-        |       (SELECT DISTINCT n_nationkey FROM nation)
-        |     WHERE n_nationkey NOT IN
-        |       (SELECT c_nationkey FROM customer)))
-        |SELECT * FROM e1 UNION ALL SELECT * FROM e2
-        |UNION ALL SELECT * FROM e3 UNION ALL SELECT * FROM e4
-        |ORDER BY fk_edge""".stripMargin,
-    "q_rolling_wau" ->
-      """WITH ud AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
-        |            FROM events),
-        |days AS (SELECT DISTINCT d AS window_end FROM ud),
-        |x AS (SELECT u, d + CAST(o.o AS INTEGER) AS window_end
-        |      FROM ud CROSS JOIN UNNEST(range(7)) AS o(o))
-        |SELECT x.window_end,
-        |  CAST(count(DISTINCT u) AS BIGINT) AS active_users
-        |FROM x JOIN days ON days.window_end = x.window_end
-        |GROUP BY 1 ORDER BY x.window_end""".stripMargin,
-    // sweep-line replay: identical sessionization, then the same
-    // two-level sweep (day-partitioned run + midnight carry); the
-    // ORDER BY t, d DESC tie order mirrors the Spark closed-interval
-    // convention (starts before ends at equal instants)
-    "q_concurrency" ->
-      """WITH lg AS (SELECT user_id AS u, ts,
-        |       lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pv
-        |     FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |fl AS (SELECT u, ts, CASE WHEN pv IS NULL
-        |         OR epoch_us(ts) - epoch_us(pv) > 1800000000
-        |         THEN 1 ELSE 0 END AS nw FROM lg),
-        |si AS (SELECT u, ts, sum(nw) OVER (PARTITION BY u ORDER BY ts
-        |         ROWS UNBOUNDED PRECEDING) AS sid FROM fl),
-        |sp AS (SELECT u, sid, min(ts) AS st, max(ts) AS en
-        |       FROM si GROUP BY 1, 2),
-        |dl AS (SELECT st AS t, 1 AS d FROM sp
-        |       UNION ALL SELECT en AS t, -1 AS d FROM sp),
-        |dd AS (SELECT CAST(t AS DATE) AS day, t, d FROM dl),
-        |net AS (SELECT day, sum(d) AS net FROM dd GROUP BY 1),
-        |cr AS (SELECT day, coalesce(sum(net) OVER (ORDER BY day
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |         0) AS carry FROM net),
-        |rn AS (SELECT day, sum(d) OVER (PARTITION BY day
-        |         ORDER BY t, d DESC ROWS UNBOUNDED PRECEDING) AS run
-        |       FROM dd),
-        |pk AS (SELECT day, max(run) AS peak FROM rn GROUP BY 1)
-        |SELECT pk.day,
-        |  CAST(cr.carry + greatest(pk.peak, 0) AS BIGINT)
-        |    AS peak_concurrency
-        |FROM pk JOIN cr ON cr.day = pk.day ORDER BY pk.day""".stripMargin,
-    // gaps-and-islands replay: day - row_number() island key, longest
-    // island per user with the earliest-start tie-break, total-order cut
-    "q_streaks" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |            FROM events
-        |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |r AS (SELECT user_id, day, row_number() OVER (
-        |        PARTITION BY user_id ORDER BY day) AS rn FROM ud),
-        |i AS (SELECT user_id, day - CAST(rn AS INTEGER) AS isl, day
-        |      FROM r),
-        |s AS (SELECT user_id, isl,
-        |        CAST(count(*) AS BIGINT) AS streak_days,
-        |        min(day) AS streak_start FROM i GROUP BY 1, 2),
-        |p AS (SELECT user_id, streak_start, streak_days,
-        |        row_number() OVER (PARTITION BY user_id
-        |          ORDER BY streak_days DESC, streak_start) AS rk
-        |      FROM s)
-        |SELECT user_id, streak_start, streak_days FROM p WHERE rk = 1
-        |ORDER BY streak_days DESC, user_id LIMIT 50""".stripMargin,
-    // growth accounting replay: same Monday-anchored weeks, per-user lag
-    // classification, and the week+7 shifted churn anti-count
-    "q_growth" ->
-      """WITH uw AS (SELECT DISTINCT user_id AS u,
-        |        CAST(date_trunc('week', ts) AS DATE) AS wk
-        |      FROM events
-        |      WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |cl AS (SELECT u, wk,
-        |         lag(wk) OVER (PARTITION BY u ORDER BY wk) AS pv
-        |       FROM uw),
-        |c2 AS (SELECT wk, CASE WHEN pv IS NULL THEN 'new'
-        |         WHEN wk - pv = 7 THEN 'retained'
-        |         ELSE 'resurrected' END AS cls FROM cl),
-        |cnt AS (SELECT wk,
-        |    CAST(sum(CASE WHEN cls = 'new' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_new,
-        |    CAST(sum(CASE WHEN cls = 'retained' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_retained,
-        |    CAST(sum(CASE WHEN cls = 'resurrected' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_resurrected
-        |  FROM c2 GROUP BY 1),
-        |act AS (SELECT wk, CAST(count(*) AS BIGINT) AS act FROM uw
-        |        GROUP BY 1),
-        |st AS (SELECT p.wk, CAST(count(*) AS BIGINT) AS stay
-        |       FROM uw p JOIN uw c ON c.u = p.u AND c.wk = p.wk + 7
-        |       GROUP BY 1),
-        |hz AS (SELECT max(wk) AS mx FROM uw),
-        |ch AS (SELECT a.wk + 7 AS wk,
-        |         a.act - coalesce(st.stay, 0) AS churned
-        |       FROM act a LEFT JOIN st ON st.wk = a.wk
-        |       CROSS JOIN hz WHERE a.wk + 7 <= hz.mx)
-        |SELECT coalesce(cnt.wk, ch.wk) AS week,
-        |  CAST(coalesce(cnt.n_new, 0) AS BIGINT) AS n_new,
-        |  CAST(coalesce(cnt.n_retained, 0) AS BIGINT) AS n_retained,
-        |  CAST(coalesce(cnt.n_resurrected, 0) AS BIGINT)
-        |    AS n_resurrected,
-        |  CAST(coalesce(ch.churned, 0) AS BIGINT) AS n_churned
-        |FROM cnt FULL OUTER JOIN ch ON ch.wk = cnt.wk
-        |ORDER BY week""".stripMargin,
-    // cumulative-audience replay: first-seen day per user, day-level
-    // running sum over the calendar-bounded frame
-    "q_cumulative_users" ->
-      """WITH f AS (SELECT user_id AS u, min(CAST(ts AS DATE)) AS fd
-        |           FROM events
-        |           WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |           GROUP BY 1),
-        |d AS (SELECT fd AS day, CAST(count(*) AS BIGINT) AS new_users
-        |      FROM f GROUP BY 1)
-        |SELECT day, new_users,
-        |  CAST(sum(new_users) OVER (ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS total_users
-        |FROM d ORDER BY day""".stripMargin,
-    // removal-effect replay: builder-generated unrolled propagation
-    // chain (8 rounds), see markovOracle
-    "q_markov_attribution" -> markovOracle(8),
-    // Shapley replay: same journey split, literal channel-bit CASE,
-    // 2^4 lattice from range(0,16), premultiplied integer weights
-    // (s!(C-1-s)!: 6,2,2,6), one division by 4! at the end
-    "q_shapley" ->
-      """WITH j AS (SELECT user_id AS u, ts, event_id AS id,
-        |    event_type AS ty,
-        |    coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1
-        |        ELSE 0 END) OVER (PARTITION BY user_id ORDER BY ts,
-        |        event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-        |        PRECEDING), 0) AS jn
-        |  FROM events),
-        |jr AS (SELECT u, jn,
-        |    max(CASE WHEN ty = 'purchase' THEN 1 ELSE 0 END) AS cv,
-        |    coalesce(CAST(sum(DISTINCT CASE ty WHEN 'click' THEN 1
-        |        WHEN 'error' THEN 2 WHEN 'signup' THEN 4
-        |        WHEN 'view' THEN 8 END) AS BIGINT), 0) AS mask
-        |  FROM j GROUP BY 1, 2),
-        |cmt AS (SELECT mask AS t, CAST(sum(cv) AS BIGINT) AS cv
-        |  FROM jr GROUP BY 1),
-        |mk AS (SELECT CAST(range AS BIGINT) AS mask FROM range(0, 16)),
-        |vv AS (SELECT mk.mask,
-        |    CAST(coalesce(sum(cmt.cv), 0) AS BIGINT) AS v
-        |  FROM mk LEFT JOIN cmt ON (cmt.t & mk.mask) = cmt.t
-        |  GROUP BY 1),
-        |ch AS (SELECT * FROM (VALUES (0, 'click', 1), (1, 'error', 2),
-        |    (2, 'signup', 4), (3, 'view', 8)) AS t(i, channel, bit)),
-        |mg AS (SELECT ch.channel,
-        |    CAST(sum((CASE bit_count(s.mask) WHEN 0 THEN 6
-        |      WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 6 END)
-        |      * (si.v - s.v)) AS BIGINT) AS num
-        |  FROM ch JOIN vv s ON (s.mask & ch.bit) = 0
-        |  JOIN vv si ON si.mask = s.mask + ch.bit
-        |  GROUP BY 1),
-        |ef AS (SELECT max(CASE WHEN mask = 15 THEN v END) AS vfull,
-        |    max(CASE WHEN mask = 0 THEN v END) AS v0 FROM vv)
-        |SELECT channel,
-        |  round(CAST(num AS DOUBLE) / 24.0, 6) AS shapley_conversions,
-        |  round(CASE WHEN vfull - v0 > 0
-        |    THEN (CAST(num AS DOUBLE) / 24.0)
-        |      / CAST(vfull - v0 AS DOUBLE) END, 6) AS share
-        |FROM mg CROSS JOIN ef ORDER BY channel""".stripMargin,
-    "q_kcore" -> kcoreOracle(3, 5),
-    "q_ktruss" -> ktrussOracle(3, 3),
-    // assortativity replay: exact integer endpoint-degree sums, one
-    // quotient block spelled as the Spark expression tree
-    "q_assortativity" ->
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-        |          l_partkey AS it FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s0 AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-        |  FROM s0 a JOIN s0 c ON c.bk = a.bk AND a.it < c.it
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
-        |        (SELECT a AS node FROM p UNION ALL SELECT b FROM p)
-        |        GROUP BY 1),
-        |jk AS (SELECT da.d AS j, db.d AS k
-        |       FROM p JOIN deg da ON da.node = p.a
-        |       JOIN deg db ON db.node = p.b),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_edges,
-        |        CAST(sum(j * k) AS BIGINT) AS sjk,
-        |        CAST(sum(j + k) AS BIGINT) AS ssum,
-        |        CAST(sum(j * j + k * k) AS BIGINT) AS ssq
-        |      FROM jk),
-        |f AS (SELECT n_edges,
-        |    CAST(ssum AS DOUBLE) / (2.0 * CAST(n_edges AS DOUBLE))
-        |      AS mu,
-        |    CAST(sjk AS DOUBLE) / CAST(n_edges AS DOUBLE) AS jk_m,
-        |    CAST(ssq AS DOUBLE) / (2.0 * CAST(n_edges AS DOUBLE))
-        |      AS sq_m
-        |  FROM t)
-        |SELECT n_edges, round(mu, 6) AS mean_edge_degree,
-        |  round(CASE WHEN sq_m - mu * mu <> 0
-        |    THEN (jk_m - mu * mu) / (sq_m - mu * mu) END, 6) + 0.0
-        |    AS assortativity
-        |FROM f""".stripMargin,
-    // propensity-stratification replay: builder-generated Newton chain
-    // (4 rounds) + dyadic propensity grid + pinned ATT folds
-    "q_psm" -> psmOracle(4),
-    // ALS replay: builder-generated alternation chain (2 rounds),
-    // exact dyadic moment sums + lattice-floored solves
-    "q_als" -> alsOracle(2),
-    // ALS serve replay: same chain + md5 panel + unseen top-k cut
-    "q_als_recommend" -> alsRecommendOracle(2, 5, 3),
-    "q_decay_attribution" ->
-      """WITH b AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |             event_id AS id, event_type AS ty FROM events),
-        |c AS (SELECT u, us AS cus, id AS cid FROM b
-        |      WHERE ty = 'purchase'),
-        |t AS (SELECT u, us AS tus, ty FROM b WHERE ty <> 'purchase'),
-        |p AS (SELECT c.u, c.cid, t.ty,
-        |        pow(2.0, -(CAST(c.cus - t.tus AS DOUBLE)
-        |                   / 3600000000.0)) AS w
-        |      FROM c JOIN t ON t.u = c.u
-        |      WHERE t.tus >= c.cus - 7200000000 AND t.tus < c.cus),
-        |n AS (SELECT u, cid, sum(w) AS sw FROM p GROUP BY 1, 2),
-        |cr AS (SELECT p.ty AS channel, p.w / n.sw AS credit
-        |       FROM p JOIN n ON n.u = p.u AND n.cid = p.cid
-        |       UNION ALL
-        |       SELECT 'none' AS channel, CAST(1.0 AS DOUBLE) AS credit
-        |       FROM c LEFT JOIN n ON n.u = c.u AND n.cid = c.cid
-        |       WHERE n.u IS NULL)
-        |SELECT channel, round(sum(credit), 6) AS credit,
-        |  CAST(count(*) AS BIGINT) AS n_touchpoints
-        |FROM cr GROUP BY 1 ORDER BY channel""".stripMargin,
-    "q_rolling_corr" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day,
-        |    round(sum(CASE WHEN event_type = 'view' THEN value END), 2)
-        |      AS view,
-        |    round(sum(CASE WHEN event_type = 'purchase' THEN value END),
-        |      2) AS purchase
-        |  FROM events GROUP BY 1),
-        |d2 AS (SELECT * FROM daily
-        |       WHERE view IS NOT NULL AND purchase IS NOT NULL),
-        |s AS (SELECT day, view, purchase,
-        |    CAST(count(*) OVER w AS DOUBLE) AS n,
-        |    sum(CAST(view AS DOUBLE)) OVER w AS sx,
-        |    sum(CAST(purchase AS DOUBLE)) OVER w AS sy,
-        |    sum(CAST(view AS DOUBLE) * CAST(view AS DOUBLE)) OVER w
-        |      AS sxx,
-        |    sum(CAST(purchase AS DOUBLE) * CAST(purchase AS DOUBLE))
-        |      OVER w AS syy,
-        |    sum(CAST(view AS DOUBLE) * CAST(purchase AS DOUBLE)) OVER w
-        |      AS sxy
-        |  FROM d2 WINDOW w AS (ORDER BY day
-        |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-        |SELECT day, view, purchase,
-        |  round(CASE WHEN n >= 5 AND n * sxx - sx * sx > 0.0
-        |                  AND n * syy - sy * sy > 0.0
-        |             THEN (n * sxy - sx * sy) /
-        |               (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
-        |        END, 6) AS rolling_corr
-        |FROM s ORDER BY day""".stripMargin,
-    "q_skew_report" ->
-      """WITH k AS (SELECT l_orderkey, count(*) AS c FROM lineitem
-        |           GROUP BY 1),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
-        |        CAST(sum(c) AS BIGINT) AS n_rows,
-        |        CAST(max(c) AS BIGINT) AS max_key_rows,
-        |        round(avg(c), 6) AS avg_key_rows,
-        |        round(quantile_cont(CAST(c AS DOUBLE), 0.5), 6)
-        |          AS p50_key_rows,
-        |        round(quantile_cont(CAST(c AS DOUBLE), 0.99), 6)
-        |          AS p99_key_rows,
-        |        round(sum(c * (ln(c) / ln(2.0))), 9) AS sxlx
-        |      FROM k)
-        |SELECT n_keys, n_rows, max_key_rows, avg_key_rows, p50_key_rows,
-        |  p99_key_rows,
-        |  round(CAST(max_key_rows AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-        |    AS top_key_share,
-        |  round(ln(CAST(n_rows AS DOUBLE)) / ln(2.0)
-        |    - sxlx / CAST(n_rows AS DOUBLE), 6) AS key_entropy_bits,
-        |  round(ln(CAST(n_keys AS DOUBLE)) / ln(2.0), 6)
-        |    AS uniform_entropy_bits
-        |FROM a""".stripMargin,
-    // ACF: full-series mean/denominator (statsmodels convention), per-lag
-    // product sums over the daily frame
-    "q_acf" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1),
-        |m AS (SELECT avg(CAST(total AS DOUBLE)) AS mu FROM daily),
-        |l AS (SELECT CAST(total AS DOUBLE) AS x, mu,
-        |        lag(CAST(total AS DOUBLE), 1) OVER (ORDER BY day) AS l1,
-        |        lag(CAST(total AS DOUBLE), 2) OVER (ORDER BY day) AS l2,
-        |        lag(CAST(total AS DOUBLE), 3) OVER (ORDER BY day) AS l3,
-        |        lag(CAST(total AS DOUBLE), 4) OVER (ORDER BY day) AS l4,
-        |        lag(CAST(total AS DOUBLE), 5) OVER (ORDER BY day) AS l5,
-        |        lag(CAST(total AS DOUBLE), 6) OVER (ORDER BY day) AS l6,
-        |        lag(CAST(total AS DOUBLE), 7) OVER (ORDER BY day) AS l7
-        |      FROM daily CROSS JOIN m),
-        |s AS (SELECT sum((x - mu) * (x - mu)) AS ss,
-        |        sum((x - mu) * (l1 - mu)) AS s1,
-        |        sum((x - mu) * (l2 - mu)) AS s2,
-        |        sum((x - mu) * (l3 - mu)) AS s3,
-        |        sum((x - mu) * (l4 - mu)) AS s4,
-        |        sum((x - mu) * (l5 - mu)) AS s5,
-        |        sum((x - mu) * (l6 - mu)) AS s6,
-        |        sum((x - mu) * (l7 - mu)) AS s7
-        |      FROM l)
-        |SELECT CAST(u.l AS INTEGER) AS lag,
-        |  round(CASE u.l WHEN 1 THEN s1 WHEN 2 THEN s2 WHEN 3 THEN s3
-        |                 WHEN 4 THEN s4 WHEN 5 THEN s5 WHEN 6 THEN s6
-        |                 WHEN 7 THEN s7 END / ss, 6) AS acf
-        |FROM s CROSS JOIN UNNEST(range(1, 8)) AS u(l)
-        |ORDER BY lag""".stripMargin,
-    // causal-impact replay: pre-period moment scalar, same closed-form
-    // slope/intercept text, pinned cumulative-effect fold
-    "q_causal_impact" ->
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS day,
-        |    round(sum(CASE WHEN event_type = 'purchase' THEN value
-        |      ELSE 0.0 END), 2) AS y,
-        |    round(sum(CASE WHEN event_type = 'view' THEN value
-        |      ELSE 0.0 END), 2) AS x
-        |  FROM events GROUP BY 1),
-        |pre AS (SELECT CAST(y AS DOUBLE) AS y, CAST(x AS DOUBLE) AS x
-        |  FROM daily WHERE day < DATE '2024-01-16'),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(x) AS sx,
-        |    sum(y) AS sy, sum(x * x) AS sxx, sum(x * y) AS sxy
-        |  FROM pre),
-        |f0 AS (SELECT n, sx, sy,
-        |    CASE WHEN n * sxx - sx * sx <> 0.0
-        |      THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END AS b
-        |  FROM s),
-        |f AS (SELECT n, b, (sy - b * sx) / n AS a FROM f0),
-        |post AS (SELECT day, CAST(y AS DOUBLE) AS y,
-        |    CAST(x AS DOUBLE) AS x FROM daily
-        |  WHERE day >= DATE '2024-01-16'),
-        |p AS (SELECT day, y, a + b * x AS pred FROM post, f),
-        |q AS (SELECT day, y, pred, y - pred AS eff,
-        |    sum(y - pred) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(pred) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS sp,
-        |    sum(y) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND UNBOUNDED FOLLOWING) AS sa
-        |  FROM p)
-        |SELECT day, round(y, 6) AS actual,
-        |  round(pred, 6) AS counterfactual,
-        |  round(eff, 6) AS effect, round(cum, 6) AS cum_effect,
-        |  round(CASE WHEN sp <> 0.0 THEN (sa - sp) / sp END, 6)
-        |    AS relative_effect
-        |FROM q ORDER BY day""".stripMargin,
-    // Granger replay: same standardization, same 10 moment sums, same
-    // Cramer determinant text — one IEEE path in both engines
-    "q_granger" ->
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS day,
-        |    round(sum(CASE WHEN event_type = 'purchase' THEN value
-        |      ELSE 0.0 END), 2) AS y,
-        |    round(sum(CASE WHEN event_type = 'view' THEN value
-        |      ELSE 0.0 END), 2) AS x
-        |  FROM events GROUP BY 1),
-        |m AS (SELECT avg(CAST(y AS DOUBLE)) AS my,
-        |    stddev_samp(CAST(y AS DOUBLE)) AS sy0,
-        |    avg(CAST(x AS DOUBLE)) AS mx,
-        |    stddev_samp(CAST(x AS DOUBLE)) AS sx0 FROM daily),
-        |z AS (SELECT day, (CAST(y AS DOUBLE) - my) / sy0 AS zy,
-        |    (CAST(x AS DOUBLE) - mx) / sx0 AS zx FROM daily, m),
-        |l AS (SELECT zy, lag(zy) OVER (ORDER BY day) AS y1,
-        |    lag(zx) OVER (ORDER BY day) AS x1 FROM z),
-        |ff AS (SELECT * FROM l
-        |  WHERE y1 IS NOT NULL AND x1 IS NOT NULL),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(y1) AS s1,
-        |    sum(x1) AS s2, sum(zy) AS sy, sum(y1 * y1) AS s11,
-        |    sum(y1 * x1) AS s12, sum(x1 * x1) AS s22,
-        |    sum(y1 * zy) AS s1y, sum(x1 * zy) AS s2y,
-        |    sum(zy * zy) AS syy FROM ff),
-        |d AS (SELECT *,
-        |    n * (s11 * s22 - s12 * s12) - s1 * (s1 * s22 - s12 * s2)
-        |      + s2 * (s1 * s12 - s11 * s2) AS det,
-        |    sy * (s11 * s22 - s12 * s12)
-        |      - s1 * (s1y * s22 - s12 * s2y)
-        |      + s2 * (s1y * s12 - s11 * s2y) AS det0,
-        |    n * (s1y * s22 - s12 * s2y) - sy * (s1 * s22 - s12 * s2)
-        |      + s2 * (s1 * s2y - s1y * s2) AS det1,
-        |    n * (s11 * s2y - s1y * s12) - s1 * (s1 * s2y - s1y * s2)
-        |      + sy * (s1 * s12 - s11 * s2) AS det2,
-        |    n * s11 - s1 * s1 AS dr
-        |  FROM s),
-        |e AS (SELECT *,
-        |    syy - (det0 / det) * sy - (det1 / det) * s1y
-        |      - (det2 / det) * s2y AS sseu,
-        |    (n * s1y - s1 * sy) / dr AS slr
-        |  FROM d),
-        |g AS (SELECT *, (sy - slr * s1) / n AS inr FROM e),
-        |h AS (SELECT *, syy - inr * sy - slr * s1y AS sser FROM g),
-        |k AS (SELECT *,
-        |    (sser - sseu) / (sseu / (n - 3.0)) AS f FROM h)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  round(CASE WHEN det <> 0.0 THEN det1 / det END, 6) AS b_ylag,
-        |  round(CASE WHEN det <> 0.0 THEN det2 / det END, 6) AS b_xlag,
-        |  round(CASE WHEN det <> 0.0 THEN sseu END, 6) AS sse_u,
-        |  round(CASE WHEN dr <> 0.0 THEN sser END, 6) AS sse_r,
-        |  round(CASE WHEN det <> 0.0 AND dr <> 0.0 AND sseu > 0.0
-        |    THEN f END, 6) AS f_stat,
-        |  CASE WHEN det <> 0.0 AND dr <> 0.0 AND sseu > 0.0
-        |    THEN f END > 3.841459 AS x_granger_causes_y
-        |FROM k""".stripMargin,
-    // Ljung-Box replay: the q_acf product-sums plus n, unrounded rho
-    // terms folded in PINNED lag order, published chi-square constants
-    "q_ljung_box" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1),
-        |m AS (SELECT avg(CAST(total AS DOUBLE)) AS mu FROM daily),
-        |l AS (SELECT CAST(total AS DOUBLE) AS x, mu,
-        |        lag(CAST(total AS DOUBLE), 1) OVER (ORDER BY day) AS l1,
-        |        lag(CAST(total AS DOUBLE), 2) OVER (ORDER BY day) AS l2,
-        |        lag(CAST(total AS DOUBLE), 3) OVER (ORDER BY day) AS l3,
-        |        lag(CAST(total AS DOUBLE), 4) OVER (ORDER BY day) AS l4,
-        |        lag(CAST(total AS DOUBLE), 5) OVER (ORDER BY day) AS l5,
-        |        lag(CAST(total AS DOUBLE), 6) OVER (ORDER BY day) AS l6,
-        |        lag(CAST(total AS DOUBLE), 7) OVER (ORDER BY day) AS l7
-        |      FROM daily CROSS JOIN m),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |        sum((x - mu) * (x - mu)) AS ss,
-        |        sum((x - mu) * (l1 - mu)) AS s1,
-        |        sum((x - mu) * (l2 - mu)) AS s2,
-        |        sum((x - mu) * (l3 - mu)) AS s3,
-        |        sum((x - mu) * (l4 - mu)) AS s4,
-        |        sum((x - mu) * (l5 - mu)) AS s5,
-        |        sum((x - mu) * (l6 - mu)) AS s6,
-        |        sum((x - mu) * (l7 - mu)) AS s7
-        |      FROM l),
-        |r AS (SELECT n, CAST(u.l AS INTEGER) AS lag,
-        |        CASE u.l WHEN 1 THEN s1 WHEN 2 THEN s2 WHEN 3 THEN s3
-        |                 WHEN 4 THEN s4 WHEN 5 THEN s5 WHEN 6 THEN s6
-        |                 WHEN 7 THEN s7 END / ss AS rho
-        |      FROM s CROSS JOIN UNNEST(range(1, 8)) AS u(l)),
-        |q AS (SELECT n, lag, rho,
-        |        n * (n + 2.0) * sum(rho * rho / (n - lag)) OVER (
-        |          ORDER BY lag ROWS BETWEEN UNBOUNDED PRECEDING
-        |          AND CURRENT ROW) AS qstat
-        |      FROM r)
-        |SELECT lag, round(rho, 6) AS acf, round(qstat, 6) AS q_stat,
-        |  ([3.841459, 5.991465, 7.814728, 9.487729, 11.070498,
-        |    12.591587, 14.06714])[lag] AS chi2_crit_5pct,
-        |  qstat > ([3.841459, 5.991465, 7.814728, 9.487729, 11.070498,
-        |    12.591587, 14.06714])[lag] AS reject_white_noise
-        |FROM q ORDER BY lag""".stripMargin,
-    // Croston replay: the q_ewma recursive-CTE pattern with the
-    // (z, p) demand-size/interval chains; intervals from lag over the
-    // demand-event frame, never a zero-filled calendar
-    "q_croston" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT l_partkey AS k, l_shipdate AS day,
-        |    CAST(round(sum(l_quantity), 2) AS DOUBLE) AS v
-        |  FROM lineitem WHERE l_partkey <= 8 GROUP BY 1, 2),
-        |s AS (SELECT k, day, v,
-        |    CAST(coalesce(date_diff('day',
-        |      lag(day) OVER (PARTITION BY k ORDER BY day), day), 1)
-        |      AS DOUBLE) AS q,
-        |    row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-        |  FROM d WHERE v > 0.0),
-        |c AS (
-        |  SELECT k, day, v, q, rn, v AS z, CAST(1.0 AS DOUBLE) AS p
-        |  FROM s WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.k, s.day, s.v, s.q, s.rn,
-        |    0.25 * s.v + 0.75 * c.z, 0.25 * s.q + 0.75 * c.p
-        |  FROM s JOIN c ON s.k = c.k AND s.rn = c.rn + 1)
-        |SELECT k AS l_partkey, day AS l_shipdate, v AS demand,
-        |  CAST(q AS BIGINT) AS interval_days,
-        |  round(z, 6) AS smoothed_demand,
-        |  round(p, 6) AS smoothed_interval,
-        |  round(z / p, 6) AS forecast_rate
-        |FROM c ORDER BY l_partkey, l_shipdate""".stripMargin,
-    // Holt: the q_ewma recursive-CTE pattern with coupled (l, b) state;
-    // l's expression is inlined twice so both engines walk one IEEE path
-    "q_holt_forecast" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT k, day, v,
-        |        row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-        |      FROM d),
-        |e AS (
-        |  SELECT k, day, rn, CAST(v AS DOUBLE) AS l,
-        |    CAST(0.0 AS DOUBLE) AS b
-        |  FROM s WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.k, s.day, s.rn,
-        |    0.5 * s.v + 0.5 * (e.l + e.b),
-        |    0.25 * ((0.5 * s.v + 0.5 * (e.l + e.b)) - e.l) + 0.75 * e.b
-        |  FROM s JOIN e ON s.k = e.k AND s.rn = e.rn + 1),
-        |m AS (SELECT k, max(rn) AS mx FROM s GROUP BY 1)
-        |SELECT e.k AS event_type, e.day AS last_ord,
-        |  round(e.l, 6) AS level, round(e.b, 6) AS trend,
-        |  round(e.l + 1 * e.b, 6) AS f1,
-        |  round(e.l + 2 * e.b, 6) AS f2,
-        |  round(e.l + 3 * e.b, 6) AS f3
-        |FROM e JOIN m ON m.k = e.k AND e.rn = m.mx
-        |ORDER BY event_type""".stripMargin,
-    // reconciliation replay: the q_holt_forecast recursion over the
-    // per-type series UNION the TOTAL series, then the pinned top-down
-    // proportional rescale
-    "q_reconcile" ->
-      """WITH RECURSIVE d0 AS (
-        |  SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2),
-        |dt AS (SELECT 'TOTAL' AS k, day, round(sum(v), 2) AS v
-        |  FROM d0 GROUP BY 2),
-        |d AS (SELECT * FROM d0 UNION ALL SELECT * FROM dt),
-        |s AS (SELECT k, day, v,
-        |        row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-        |      FROM d),
-        |e AS (
-        |  SELECT k, day, rn, CAST(v AS DOUBLE) AS l,
-        |    CAST(0.0 AS DOUBLE) AS b
-        |  FROM s WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.k, s.day, s.rn,
-        |    0.5 * s.v + 0.5 * (e.l + e.b),
-        |    0.25 * ((0.5 * s.v + 0.5 * (e.l + e.b)) - e.l) + 0.75 * e.b
-        |  FROM s JOIN e ON s.k = e.k AND s.rn = e.rn + 1),
-        |m AS (SELECT k, max(rn) AS mx FROM s GROUP BY 1),
-        |fin AS (SELECT e.k,
-        |    round(e.l + 1 * e.b, 6) AS f1,
-        |    round(e.l + 2 * e.b, 6) AS f2,
-        |    round(e.l + 3 * e.b, 6) AS f3
-        |  FROM e JOIN m ON m.k = e.k AND e.rn = m.mx),
-        |lng AS (SELECT k, 1 AS h, f1 AS f FROM fin
-        |  UNION ALL SELECT k, 2, f2 FROM fin
-        |  UNION ALL SELECT k, 3, f3 FROM fin),
-        |ch AS (SELECT * FROM lng WHERE k <> 'TOTAL'),
-        |tt AS (SELECT h, f AS tf FROM lng WHERE k = 'TOTAL'),
-        |j AS (SELECT ch.k, ch.h, ch.f, tt.tf,
-        |    sum(ch.f) OVER (PARTITION BY ch.h ORDER BY ch.k ROWS
-        |      BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS s
-        |  FROM ch JOIN tt ON tt.h = ch.h)
-        |SELECT k AS event_type, CAST(h AS INTEGER) AS horizon,
-        |  f AS base_forecast, tf AS total_forecast,
-        |  round(CASE WHEN s <> 0.0 THEN f * (tf / s) END, 6)
-        |    AS reconciled
-        |FROM j ORDER BY event_type, horizon""".stripMargin,
-    // Holt-Winters: the q_holt_forecast recursive CTE with the last-7
-    // seasonals carried as a list (Spark reads them from its full fold
-    // history instead — same doubles, different bookkeeping); every
-    // arithmetic expression is spelled operand-for-operand identically
-    // all 12 dyadic candidates recurse simultaneously; per-key SSE argmin
-    "q_holt_winters_auto" -> holtWintersAutoOracle(7),
-    "q_holt_winters" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT k, day, v,
-        |        row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-        |      FROM d),
-        |e AS (
-        |  SELECT k, day, rn, CAST(v AS DOUBLE) AS l,
-        |    CAST(0.0 AS DOUBLE) AS b, CAST(0.0 AS DOUBLE) AS sv,
-        |    [CAST(0.0 AS DOUBLE), 0.0, 0.0, 0.0, 0.0, 0.0, 0.0] AS sl
-        |  FROM s WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.k, s.day, s.rn,
-        |    0.5 * (s.v - e.sl[1]) + 0.5 * (e.l + e.b),
-        |    0.25 * ((0.5 * (s.v - e.sl[1]) + 0.5 * (e.l + e.b)) - e.l)
-        |      + 0.75 * e.b,
-        |    0.25 * (s.v - e.l - e.b) + 0.75 * e.sl[1],
-        |    list_concat(e.sl[2:],
-        |      [0.25 * (s.v - e.l - e.b) + 0.75 * e.sl[1]])
-        |  FROM s JOIN e ON s.k = e.k AND s.rn = e.rn + 1),
-        |m AS (SELECT k, max(rn) AS mx FROM s GROUP BY 1)
-        |SELECT e.k AS event_type, e.day AS last_ord,
-        |  round(e.l, 6) AS level, round(e.b, 6) AS trend,
-        |  round(e.l + 1 * e.b + e.sl[1], 6) AS f1,
-        |  round(e.l + 2 * e.b + e.sl[2], 6) AS f2,
-        |  round(e.l + 3 * e.b + e.sl[3], 6) AS f3
-        |FROM e JOIN m ON m.k = e.k AND e.rn = m.mx
-        |ORDER BY event_type""".stripMargin,
-    // ABC replay: per-item 2-decimal revenue, pinned (revenue DESC,
-    // item) cumulative fold, identical boundary literals
-    "q_abc" ->
-      """WITH p0 AS (SELECT l_partkey AS item,
-        |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |      (100 - CAST(round(l_discount * 100) AS BIGINT)))
-        |      AS BIGINT) AS s
-        |  FROM lineitem WHERE l_partkey IS NOT NULL GROUP BY 1),
-        |per AS (SELECT item,
-        |    round(CAST((s + 50) // 100 AS DOUBLE) / CAST(100 AS DOUBLE),
-        |      2) AS revenue
-        |  FROM p0),
-        |w AS (SELECT item, revenue,
-        |    CAST(row_number() OVER (ORDER BY revenue DESC, item)
-        |      AS INTEGER) AS rank,
-        |    sum(revenue) OVER (ORDER BY revenue DESC, item
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(revenue) OVER (ORDER BY revenue DESC, item
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS tot
-        |  FROM per)
-        |SELECT item, rank, revenue, round(cum / tot, 6) AS cum_share,
-        |  CASE WHEN cum / tot <= 0.8 THEN 'A'
-        |       WHEN cum / tot <= 0.95 THEN 'B' ELSE 'C' END AS abc_class
-        |FROM w ORDER BY rank""".stripMargin,
-    // theta replay: sequential OLS moment sums (pinned running windows
-    // = the array fold's order), round-6 (a, b) feeding the recursive
-    // SES over the theta2 line, identical combination arithmetic
-    "q_theta" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT k, day, CAST(v AS DOUBLE) AS v,
-        |        row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-        |      FROM d),
-        |acc AS (SELECT k, day, v, rn,
-        |    sum(CAST(rn AS DOUBLE)) OVER seqw AS st,
-        |    sum(v) OVER seqw AS sx,
-        |    sum(CAST(rn AS DOUBLE) * v) OVER seqw AS stx,
-        |    sum(CAST(rn AS DOUBLE) * CAST(rn AS DOUBLE)) OVER seqw
-        |      AS stt
-        |  FROM s WINDOW seqw AS (PARTITION BY k ORDER BY rn
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT k, CAST(max(rn) AS BIGINT) AS n FROM s GROUP BY 1),
-        |fit AS (SELECT a.k, a.day AS last_ord, m.n, a.st, a.sx,
-        |    round(CASE WHEN CAST(m.n AS DOUBLE) * a.stt - a.st * a.st
-        |        <> 0
-        |      THEN (CAST(m.n AS DOUBLE) * a.stx - a.st * a.sx)
-        |        / (CAST(m.n AS DOUBLE) * a.stt - a.st * a.st) END, 6)
-        |      AS b
-        |  FROM acc a JOIN m ON m.k = a.k AND a.rn = m.n),
-        |fit2 AS (SELECT k, last_ord, n, b,
-        |    round((sx - b * st) / CAST(n AS DOUBLE), 6) AS a
-        |  FROM fit WHERE b IS NOT NULL),
-        |e AS (
-        |  SELECT s.k, s.rn,
-        |    2 * s.v - (f.a + f.b * CAST(s.rn AS DOUBLE)) AS l,
-        |    f.a AS fa, f.b AS fb, f.n, f.last_ord
-        |  FROM s JOIN fit2 f ON f.k = s.k WHERE s.rn = 1
-        |  UNION ALL
-        |  SELECT s.k, s.rn,
-        |    0.5 * (2 * s.v - (e.fa + e.fb * CAST(s.rn AS DOUBLE)))
-        |      + 0.5 * e.l,
-        |    e.fa, e.fb, e.n, e.last_ord
-        |  FROM s JOIN e ON s.k = e.k AND s.rn = e.rn + 1)
-        |SELECT e.k AS event_type, e.last_ord, e.n,
-        |  e.fa AS intercept, e.fb AS slope,
-        |  round(e.l, 6) AS ses_level,
-        |  round(0.5 * (e.fa + e.fb * (CAST(e.n AS DOUBLE) + 1.0))
-        |    + 0.5 * e.l, 6) AS f1,
-        |  round(0.5 * (e.fa + e.fb * (CAST(e.n AS DOUBLE) + 2.0))
-        |    + 0.5 * e.l, 6) AS f2,
-        |  round(0.5 * (e.fa + e.fb * (CAST(e.n AS DOUBLE) + 3.0))
-        |    + 0.5 * e.l, 6) AS f3
-        |FROM e WHERE e.rn = e.n ORDER BY event_type""".stripMargin,
-    // damped replay: the q_holt_winters recursion with φ = 0.875 on the
-    // trend terms and exact dyadic φ-sum forecast multipliers
-    "q_holt_damped" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type AS k, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT k, day, v,
-        |        row_number() OVER (PARTITION BY k ORDER BY day) AS rn
-        |      FROM d),
-        |e AS (
-        |  SELECT k, day, rn, CAST(v AS DOUBLE) AS l,
-        |    CAST(0.0 AS DOUBLE) AS b, CAST(0.0 AS DOUBLE) AS sv,
-        |    [CAST(0.0 AS DOUBLE), 0.0, 0.0, 0.0, 0.0, 0.0, 0.0] AS sl
-        |  FROM s WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.k, s.day, s.rn,
-        |    0.5 * (s.v - e.sl[1]) + 0.5 * (e.l + 0.875 * e.b),
-        |    0.25 * ((0.5 * (s.v - e.sl[1]) + 0.5 * (e.l + 0.875 * e.b))
-        |        - e.l)
-        |      + 0.75 * 0.875 * e.b,
-        |    0.25 * (s.v - e.l - 0.875 * e.b) + 0.75 * e.sl[1],
-        |    list_concat(e.sl[2:],
-        |      [0.25 * (s.v - e.l - 0.875 * e.b) + 0.75 * e.sl[1]])
-        |  FROM s JOIN e ON s.k = e.k AND s.rn = e.rn + 1),
-        |m AS (SELECT k, max(rn) AS mx FROM s GROUP BY 1)
-        |SELECT e.k AS event_type, e.day AS last_ord,
-        |  round(e.l, 6) AS level, round(e.b, 6) AS trend,
-        |  round(e.l + 0.875 * e.b + e.sl[1], 6) AS f1,
-        |  round(e.l + 1.640625 * e.b + e.sl[2], 6) AS f2,
-        |  round(e.l + 2.310546875 * e.b + e.sl[3], 6) AS f3
-        |FROM e JOIN m ON m.k = e.k AND e.rn = m.mx
-        |ORDER BY event_type""".stripMargin,
-    // PACF: identical moment sums, then the Durbin-Levinson chain spelled
-    // operand-for-operand as Windows.pacf evaluates it
-    "q_pacf" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1),
-        |m AS (SELECT avg(CAST(total AS DOUBLE)) AS mu FROM daily),
-        |l AS (SELECT CAST(total AS DOUBLE) AS x, mu,
-        |        lag(CAST(total AS DOUBLE), 1) OVER (ORDER BY day) AS l1,
-        |        lag(CAST(total AS DOUBLE), 2) OVER (ORDER BY day) AS l2,
-        |        lag(CAST(total AS DOUBLE), 3) OVER (ORDER BY day) AS l3
-        |      FROM daily CROSS JOIN m),
-        |s AS (SELECT sum((x - mu) * (x - mu)) AS ss,
-        |        sum((x - mu) * (l1 - mu)) AS s1,
-        |        sum((x - mu) * (l2 - mu)) AS s2,
-        |        sum((x - mu) * (l3 - mu)) AS s3
-        |      FROM l),
-        |r AS (SELECT s1 / ss AS r1, s2 / ss AS r2, s3 / ss AS r3 FROM s),
-        |d1 AS (SELECT *, r1 AS p1, 1.0 - r1 * r1 AS v1 FROM r),
-        |d2 AS (SELECT *, (r2 - r1 * r1) / v1 AS p2 FROM d1),
-        |d3 AS (SELECT *, r1 - p2 * r1 AS p21,
-        |         v1 * (1.0 - p2 * p2) AS v2 FROM d2),
-        |d4 AS (SELECT *, (r3 - p21 * r2 - p2 * r1) / v2 AS p3 FROM d3)
-        |SELECT CAST(u.l AS INTEGER) AS lag,
-        |  round(CASE u.l WHEN 1 THEN p1 WHEN 2 THEN p2
-        |                 WHEN 3 THEN p3 END, 6) AS pacf
-        |FROM d4 CROSS JOIN UNNEST(range(1, 4)) AS u(l)
-        |ORDER BY lag""".stripMargin,
-    // CCF: each series' moments over its own domain; the numerator rides
-    // one exploded-lag equi-join exactly like Windows.ccf
-    "q_ccf" ->
-      """WITH a AS (SELECT CAST(ts AS DATE) AS day,
-        |             round(sum(value), 2) AS total
-        |           FROM events WHERE event_type = 'view' GROUP BY 1),
-        |b AS (SELECT CAST(ts AS DATE) AS day,
-        |        round(sum(value), 2) AS total
-        |      FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |ma AS (SELECT avg(CAST(total AS DOUBLE)) AS mx FROM a),
-        |mb AS (SELECT avg(CAST(total AS DOUBLE)) AS my FROM b),
-        |sa AS (SELECT sum((CAST(total AS DOUBLE) - mx) *
-        |         (CAST(total AS DOUBLE) - mx)) AS ssx
-        |       FROM a CROSS JOIN ma),
-        |sb AS (SELECT sum((CAST(total AS DOUBLE) - my) *
-        |         (CAST(total AS DOUBLE) - my)) AS ssy
-        |       FROM b CROSS JOIN mb),
-        |n AS (SELECT u.k AS lag,
-        |        sum((CAST(a.total AS DOUBLE) - mx) *
-        |          (CAST(b.total AS DOUBLE) - my)) AS num
-        |      FROM a CROSS JOIN UNNEST(range(-3, 4)) AS u(k)
-        |      JOIN b ON b.day = a.day + CAST(u.k AS INTEGER)
-        |      CROSS JOIN ma CROSS JOIN mb
-        |      GROUP BY 1)
-        |SELECT CAST(lag AS INTEGER) AS lag,
-        |  round(num / sqrt(ssx * ssy), 6) AS ccf
-        |FROM n CROSS JOIN sa CROSS JOIN sb ORDER BY lag""".stripMargin,
-    // PageRank: 3 unrolled power-iteration rounds; 0.85 is inexact in
-    // binary, so 1-d is spelled (1.0 - CAST(0.85 AS DOUBLE)) to walk the
-    // identical IEEE path as lit(1.0 - damping)
-    "q_pagerank" ->
-      """WITH el AS (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
-        |            FROM lineitem),
-        |el2 AS (SELECT l_partkey AS src,
-        |          lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |            ORDER BY l_linenumber, l_partkey) AS dst
-        |        FROM el),
-        |e AS (SELECT src, dst FROM el2 WHERE dst IS NOT NULL),
-        |n AS (SELECT DISTINCT node FROM
-        |        (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |od AS (SELECT src, CAST(count(*) AS DOUBLE) AS od
-        |       FROM e GROUP BY 1),
-        |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS rank FROM n),
-        |r1 AS (SELECT n.node, round((1.0 - CAST(0.85 AS DOUBLE)) +
-        |         CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r0.rank / od.od) AS m
-        |          FROM e JOIN r0 ON r0.node = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.node),
-        |r2 AS (SELECT n.node, round((1.0 - CAST(0.85 AS DOUBLE)) +
-        |         CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r1.rank / od.od) AS m
-        |          FROM e JOIN r1 ON r1.node = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.node),
-        |r3 AS (SELECT n.node, round((1.0 - CAST(0.85 AS DOUBLE)) +
-        |         CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r2.rank / od.od) AS m
-        |          FROM e JOIN r2 ON r2.node = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.node)
-        |SELECT node, round(rank, 6) AS rank FROM r3
-        |ORDER BY rank DESC, node LIMIT 20""".stripMargin,
-    // PPR: the q_pagerank CTE chain with seed-restricted teleport and
-    // seed-indicator init
-    "q_ppr" ->
-      """WITH el AS (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
-        |            FROM lineitem),
-        |el2 AS (SELECT l_partkey AS src,
-        |          lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |            ORDER BY l_linenumber, l_partkey) AS dst
-        |        FROM el),
-        |e AS (SELECT src, dst FROM el2 WHERE dst IS NOT NULL),
-        |n AS (SELECT DISTINCT node,
-        |        CASE WHEN node IN (1, 2) THEN CAST(1.0 AS DOUBLE)
-        |             ELSE CAST(0.0 AS DOUBLE) END AS sd
-        |      FROM (SELECT src AS node FROM e
-        |            UNION ALL SELECT dst FROM e)),
-        |od AS (SELECT src, CAST(count(*) AS DOUBLE) AS od
-        |       FROM e GROUP BY 1),
-        |r0 AS (SELECT node, sd AS rank FROM n),
-        |r1 AS (SELECT n.node, round((1.0 - CAST(0.85 AS DOUBLE)) * n.sd
-        |         + CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r0.rank / od.od) AS m
-        |          FROM e JOIN r0 ON r0.node = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.node),
-        |r2 AS (SELECT n.node, round((1.0 - CAST(0.85 AS DOUBLE)) * n.sd
-        |         + CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r1.rank / od.od) AS m
-        |          FROM e JOIN r1 ON r1.node = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.node),
-        |r3 AS (SELECT n.node, round((1.0 - CAST(0.85 AS DOUBLE)) * n.sd
-        |         + CAST(0.85 AS DOUBLE) * coalesce(c.m, 0.0), 9) AS rank
-        |       FROM n LEFT JOIN
-        |         (SELECT e.dst, sum(r2.rank / od.od) AS m
-        |          FROM e JOIN r2 ON r2.node = e.src
-        |          JOIN od ON od.src = e.src GROUP BY 1) c
-        |         ON c.dst = n.node)
-        |SELECT node, round(rank, 6) AS rank FROM r3 WHERE rank > 0.0
-        |ORDER BY rank DESC, node LIMIT 20""".stripMargin,
-    "q_item_affinity" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |f AS (SELECT it, CAST(count(*) AS BIGINT) AS fr
-        |      FROM s GROUP BY 1),
-        |p AS (SELECT a.it AS item_a, c.it AS item_b,
-        |        CAST(count(*) AS BIGINT) AS co
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT item_a, item_b, co,
-        |  round(CAST(co AS DOUBLE) /
-        |    CAST(fa.fr + fb.fr - co AS DOUBLE), 6) AS jaccard
-        |FROM p JOIN f fa ON fa.it = item_a JOIN f fb ON fb.it = item_b
-        |ORDER BY jaccard DESC, co DESC, item_a, item_b
-        |LIMIT 25""".stripMargin,
-    // same capped pair CTE, then the compact-forward wedge close (each
-    // triangle x<y<z exactly once) + degree / clustering decomposition
-    "q_triangles" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS (SELECT a.it AS a, c.it AS b
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |        FROM p e1 JOIN p e2 ON e2.a = e1.b
-        |        JOIN p e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |tn AS (SELECT node, CAST(count(*) AS BIGINT) AS triangles FROM
-        |         (SELECT x AS node FROM tri UNION ALL
-        |          SELECT y FROM tri UNION ALL SELECT z FROM tri)
-        |       GROUP BY 1),
-        |dg AS (SELECT node, CAST(count(*) AS BIGINT) AS degree FROM
-        |         (SELECT a AS node FROM p UNION ALL SELECT b FROM p)
-        |       GROUP BY 1)
-        |SELECT dg.node, dg.degree,
-        |  CAST(coalesce(tn.triangles, 0) AS BIGINT) AS triangles,
-        |  CASE WHEN dg.degree >= 2
-        |    THEN round(2.0 * coalesce(tn.triangles, 0)
-        |      / (CAST(dg.degree AS DOUBLE) * (dg.degree - 1.0)), 6)
-        |    ELSE 0.0 END AS clustering
-        |FROM dg LEFT JOIN tn ON tn.node = dg.node
-        |ORDER BY triangles DESC, dg.node LIMIT 30""".stripMargin,
-    // 3 unrolled synchronous LPA rounds (MATERIALIZED — the round CTEs
-    // are multiply-referenced); mode-of-neighbors with the same
-    // (count DESC, label ASC) tie order the Spark window uses
-    "q_label_prop" ->
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-        |          l_partkey AS it FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e AS MATERIALIZED (SELECT a AS s, b AS t FROM p
-        |      UNION ALL SELECT b, a FROM p),
-        |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label
-        |      FROM e),
-        |r1 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN l0 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r2 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r1 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r3 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r2 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |cs AS (SELECT label, CAST(count(*) AS BIGINT)
-        |         AS community_size FROM r3 GROUP BY 1)
-        |SELECT r3.node, r3.label, cs.community_size
-        |FROM r3 JOIN cs ON cs.label = r3.label
-        |ORDER BY r3.node""".stripMargin,
-    // modularity replay: the q_label_prop chain (same 3 rounds) + the
-    // Newman sum — exact-int quotients, Σ over communities folded in
-    // PINNED label order
-    "q_modularity" ->
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-        |          l_partkey AS it FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e AS MATERIALIZED (SELECT a AS s, b AS t FROM p
-        |      UNION ALL SELECT b, a FROM p),
-        |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label
-        |      FROM e),
-        |r1 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN l0 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r2 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r1 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r3 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r2 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM p),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
-        |        (SELECT a AS node FROM p UNION ALL SELECT b FROM p)
-        |        GROUP BY 1),
-        |ec AS (SELECT la.label, CAST(count(*) AS BIGINT) AS e_in
-        |       FROM p JOIN r3 la ON la.node = p.a
-        |       JOIN r3 lb ON lb.node = p.b
-        |       WHERE la.label = lb.label GROUP BY 1),
-        |dc AS (SELECT r3.label, CAST(count(*) AS BIGINT) AS n_nodes,
-        |         CAST(sum(deg.d) AS BIGINT) AS d_tot
-        |       FROM r3 JOIN deg ON deg.node = r3.node GROUP BY 1),
-        |qc AS (SELECT dc.label, dc.n_nodes,
-        |         coalesce(ec.e_in, 0) AS e_in, dc.d_tot,
-        |         coalesce(ec.e_in, 0) / CAST(mm.m AS DOUBLE)
-        |           - (dc.d_tot / (2.0 * mm.m))
-        |             * (dc.d_tot / (2.0 * mm.m)) AS qq
-        |       FROM dc LEFT JOIN ec ON ec.label = dc.label
-        |       CROSS JOIN mm),
-        |f AS (SELECT qc.*, sum(qq) OVER (ORDER BY label ROWS BETWEEN
-        |        UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS qt
-        |      FROM qc)
-        |SELECT label, n_nodes, CAST(e_in AS BIGINT) AS e_in, d_tot,
-        |  round(qq, 6) + 0.0 AS q_contrib,
-        |  round(qt, 6) + 0.0 AS q_modularity
-        |FROM f ORDER BY label""".stripMargin,
-    // Louvain replay: the q_modularity chain + one full direction-
-    // alternating local-move sweep (round 1 = down-or-stay, round 2 =
-    // up-or-stay; argmax over the exact-INTEGER gain score
-    // S(C) = 2m·k_{i,C} − d_i·D_C, same tie order as Spark) before
-    // the Newman sum re-measures the moved partition
-    "q_louvain" -> (louvainSweepChainSql + ",\n" + newmanTailSql("r5")),
-    // phase two replay: the sweep chain + contraction + two weighted
-    // direction-gated super moves + map back + the Newman tail on rf
-    "q_louvain2" -> (louvainSweepChainSql + ",\n" +
-      louvainCoarseCtesSql + ",\n" + newmanTailSql("rf")),
-    // multi-level replay: 4 unrolled coarsen levels + exact-int q_num
-    // summaries + the strictly-improving-prefix early-stop filter
-    "q_louvain_multi" -> louvainMultiOracle,
-    "q_louvain_assign" -> louvainAssignOracle,
-    "q_community_mix" -> communityMixOracle,
-    // same capped basket CTEs; confidence/lift over mirrored directed
-    // pairs with frequencies counted on the SAME capped set
-    "q_assoc_rules" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |n AS (SELECT CAST(count(DISTINCT bk) AS DOUBLE) AS nn FROM s),
-        |f AS (SELECT it, CAST(count(*) AS BIGINT) AS fr
-        |      FROM s GROUP BY 1),
-        |p AS (SELECT a.it AS a, c.it AS b,
-        |        CAST(count(*) AS BIGINT) AS co
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |d AS (SELECT a AS antecedent, b AS consequent, co FROM p
-        |      UNION ALL SELECT b, a, co FROM p)
-        |SELECT antecedent, consequent, co,
-        |  round(CAST(co AS DOUBLE) / CAST(fa.fr AS DOUBLE), 6)
-        |    AS confidence,
-        |  round(CAST(co AS DOUBLE) * n.nn
-        |    / (CAST(fa.fr AS DOUBLE) * CAST(fb.fr AS DOUBLE)), 6)
-        |    AS lift
-        |FROM d JOIN f fa ON fa.it = antecedent
-        |JOIN f fb ON fb.it = consequent CROSS JOIN n
-        |ORDER BY lift DESC, antecedent, consequent
-        |LIMIT 30""".stripMargin,
-    // 3 unrolled unit-weight relaxation rounds from the seed parts over
-    // the deduplicated sequence-edge list
-    "q_bfs_hops" ->
-      """WITH el AS (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
-        |            FROM lineitem),
-        |el2 AS (SELECT l_partkey AS src,
-        |          lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |            ORDER BY l_linenumber, l_partkey) AS dst
-        |        FROM el),
-        |e AS MATERIALIZED (SELECT DISTINCT src, dst FROM el2
-        |     WHERE dst IS NOT NULL),
-        |d0 AS MATERIALIZED (SELECT DISTINCT node,
-        |       CAST(0 AS BIGINT) AS hops FROM
-        |         (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
-        |     WHERE node IN (1, 2)),
-        |d1 AS MATERIALIZED (SELECT node, min(hops) AS hops FROM (
-        |       SELECT e.dst AS node, d0.hops + 1 AS hops
-        |       FROM e JOIN d0 ON d0.node = e.src
-        |       UNION ALL SELECT node, hops FROM d0) GROUP BY 1),
-        |d2 AS MATERIALIZED (SELECT node, min(hops) AS hops FROM (
-        |       SELECT e.dst AS node, d1.hops + 1 AS hops
-        |       FROM e JOIN d1 ON d1.node = e.src
-        |       UNION ALL SELECT node, hops FROM d1) GROUP BY 1),
-        |d3 AS MATERIALIZED (SELECT node, min(hops) AS hops FROM (
-        |       SELECT e.dst AS node, d2.hops + 1 AS hops
-        |       FROM e JOIN d2 ON d2.node = e.src
-        |       UNION ALL SELECT node, hops FROM d2) GROUP BY 1)
-        |SELECT node, CAST(hops AS BIGINT) AS hops FROM d3
-        |ORDER BY node""".stripMargin,
-    // HITS: 2 unrolled rounds of (authority <- hub sums, max-norm) then
-    // (hub <- authority sums, max-norm), same edge CTE as q_pagerank
-    "q_hits" ->
-      """WITH el AS (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
-        |            FROM lineitem),
-        |el2 AS (SELECT l_partkey AS src,
-        |          lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |            ORDER BY l_linenumber, l_partkey) AS dst
-        |        FROM el),
-        |e AS (SELECT src, dst FROM el2 WHERE dst IS NOT NULL),
-        |n AS (SELECT DISTINCT node FROM
-        |        (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |a0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS auth,
-        |         CAST(1.0 AS DOUBLE) AS hub FROM n),
-        |a1r AS (SELECT n.node, coalesce(s.v, 0.0) AS v FROM n LEFT JOIN
-        |          (SELECT e.dst, sum(a0.hub) AS v FROM e
-        |           JOIN a0 ON a0.node = e.src GROUP BY 1) s
-        |          ON s.dst = n.node),
-        |a1m AS (SELECT max(v) AS m FROM a1r),
-        |a1 AS (SELECT node, round(v / m, 9) AS auth
-        |       FROM a1r CROSS JOIN a1m),
-        |h1r AS (SELECT n.node, coalesce(s.v, 0.0) AS v FROM n LEFT JOIN
-        |          (SELECT e.src, sum(a1.auth) AS v FROM e
-        |           JOIN a1 ON a1.node = e.dst GROUP BY 1) s
-        |          ON s.src = n.node),
-        |h1m AS (SELECT max(v) AS m FROM h1r),
-        |h1 AS (SELECT node, round(v / m, 9) AS hub
-        |       FROM h1r CROSS JOIN h1m),
-        |a2r AS (SELECT n.node, coalesce(s.v, 0.0) AS v FROM n LEFT JOIN
-        |          (SELECT e.dst, sum(h1.hub) AS v FROM e
-        |           JOIN h1 ON h1.node = e.src GROUP BY 1) s
-        |          ON s.dst = n.node),
-        |a2m AS (SELECT max(v) AS m FROM a2r),
-        |a2 AS (SELECT node, round(v / m, 9) AS auth
-        |       FROM a2r CROSS JOIN a2m),
-        |h2r AS (SELECT n.node, coalesce(s.v, 0.0) AS v FROM n LEFT JOIN
-        |          (SELECT e.src, sum(a2.auth) AS v FROM e
-        |           JOIN a2 ON a2.node = e.dst GROUP BY 1) s
-        |          ON s.src = n.node),
-        |h2m AS (SELECT max(v) AS m FROM h2r),
-        |h2 AS (SELECT node, round(v / m, 9) AS hub
-        |       FROM h2r CROSS JOIN h2m)
-        |SELECT a2.node, round(a2.auth, 6) AS authority,
-        |  round(h2.hub, 6) AS hub
-        |FROM a2 JOIN h2 ON h2.node = a2.node
-        |ORDER BY authority DESC, a2.node LIMIT 20""".stripMargin,
-    // CUSUM: per-key window stats + cumulative excursion; argmax via
-    // struct-max on (rounded |S|, day), ties to the later day
-    // Pettitt replay: identical midrank / cumulative-rank / argmax
-    // windows; U is integer-exact, exp() differences are absorbed by
-    // the round-6 (fitLogistic precedent)
-    "q_pettitt" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT event_type, day, CAST(total AS DOUBLE) AS x,
-        |        rank() OVER (PARTITION BY event_type ORDER BY total)
-        |          + (count(*) OVER (PARTITION BY event_type, total) - 1)
-        |            / 2.0 AS rk,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY day)
-        |          AS t,
-        |        CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-        |          AS n
-        |      FROM daily),
-        |u AS (SELECT *, CAST(2.0 * sum(rk) OVER (PARTITION BY event_type
-        |        ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |        CURRENT ROW) - t * (n + 1) AS BIGINT) AS uu
-        |      FROM r WHERE 1 = 1),
-        |st AS (SELECT event_type, max(n) AS n_obs,
-        |         max(struct_pack(a := abs(uu), negt := -t, u := uu,
-        |                         o := day)) AS best
-        |       FROM u WHERE t < n GROUP BY 1),
-        |m AS (SELECT u.event_type,
-        |        round(sum(CASE WHEN u.t <= -st.best.negt THEN u.x END)
-        |          / sum(CASE WHEN u.t <= -st.best.negt THEN 1 END), 6)
-        |          AS mean_before,
-        |        round(sum(CASE WHEN u.t > -st.best.negt THEN u.x END)
-        |          / sum(CASE WHEN u.t > -st.best.negt THEN 1 END), 6)
-        |          AS mean_after
-        |      FROM u JOIN st ON st.event_type = u.event_type
-        |      GROUP BY 1)
-        |SELECT st.event_type, st.n_obs, st.best.o AS change_at,
-        |  st.best.u AS u_max,
-        |  round(least(CAST(1 AS DOUBLE), 2.0 * exp(-6.0 * st.best.u
-        |    * st.best.u / (st.n_obs * st.n_obs * st.n_obs
-        |      + st.n_obs * st.n_obs))), 6) AS p_value,
-        |  m.mean_before, m.mean_after
-        |FROM st JOIN m ON m.event_type = st.event_type
-        |ORDER BY st.event_type""".stripMargin,
-    // BH replay: the q_pettitt machinery keyed by nation over monthly
-    // revenue, then the step-up over the family frame in pinned rank
-    // order (same unrounded thresholds)
-    "q_fdr" ->
-      """WITH mo AS (SELECT n_name AS k,
-        |        year(o_orderdate) * 12 + month(o_orderdate) AS mi,
-        |        round(sum(o_totalprice), 2) AS rev
-        |      FROM orders JOIN customer ON c_custkey = o_custkey
-        |      JOIN nation ON n_nationkey = c_nationkey
-        |      GROUP BY 1, 2),
-        |r AS (SELECT k, mi, CAST(rev AS DOUBLE) AS x,
-        |        rank() OVER (PARTITION BY k ORDER BY rev)
-        |          + (count(*) OVER (PARTITION BY k, rev) - 1) / 2.0
-        |          AS rk,
-        |        row_number() OVER (PARTITION BY k ORDER BY mi) AS t,
-        |        CAST(count(*) OVER (PARTITION BY k) AS BIGINT) AS n
-        |      FROM mo),
-        |u AS (SELECT *, CAST(2.0 * sum(rk) OVER (PARTITION BY k
-        |        ORDER BY mi ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |        CURRENT ROW) - t * (n + 1) AS BIGINT) AS uu
-        |      FROM r),
-        |st AS (SELECT k, max(n) AS n_obs,
-        |         max(struct_pack(a := abs(uu), negt := -t, u := uu))
-        |           AS best
-        |       FROM u WHERE t < n GROUP BY 1),
-        |pv AS (SELECT k AS key, round(least(CAST(1 AS DOUBLE),
-        |        2.0 * exp(-6.0 * best.u * best.u
-        |          / (n_obs * n_obs * n_obs + n_obs * n_obs))), 6)
-        |        AS p_value
-        |      FROM st),
-        |rk2 AS (SELECT key, p_value,
-        |        row_number() OVER (ORDER BY p_value, key) AS rank,
-        |        CAST(count(*) OVER () AS BIGINT) AS m FROM pv),
-        |a AS (SELECT *,
-        |        round(CAST(0.05 AS DOUBLE) * rank / m, 6)
-        |          AS bh_threshold,
-        |        round(least(CAST(1 AS DOUBLE), min(p_value * m / rank)
-        |          OVER (ORDER BY rank ROWS BETWEEN CURRENT ROW AND
-        |            UNBOUNDED FOLLOWING)), 6) AS p_adj,
-        |        max(CASE WHEN p_value <= CAST(0.05 AS DOUBLE) * rank / m
-        |          THEN rank ELSE 0 END) OVER () AS k_star
-        |      FROM rk2)
-        |SELECT key, p_value, rank, bh_threshold, p_adj,
-        |  rank <= k_star AS rejected
-        |FROM a ORDER BY rank""".stripMargin,
-    // CMS replay: identical md5 bucket arithmetic per depth, the same
-    // width-bounded counter tables, min-over-depths estimate
-    "q_cms_heavy" ->
-      """WITH c AS (SELECT CAST(l_partkey AS VARCHAR) AS key,
-        |        CAST(count(*) AS BIGINT) AS exact_n
-        |      FROM lineitem GROUP BY 1),
-        |h AS (SELECT key, exact_n,
-        |    CAST('0x' || substr(md5('cms0_' || key), 1, 15) AS BIGINT)
-        |      % 256 AS b0,
-        |    CAST('0x' || substr(md5('cms1_' || key), 1, 15) AS BIGINT)
-        |      % 256 AS b1,
-        |    CAST('0x' || substr(md5('cms2_' || key), 1, 15) AS BIGINT)
-        |      % 256 AS b2,
-        |    CAST('0x' || substr(md5('cms3_' || key), 1, 15) AS BIGINT)
-        |      % 256 AS b3
-        |  FROM c),
-        |t0 AS (SELECT b0, CAST(sum(exact_n) AS BIGINT) AS c0 FROM h
-        |       GROUP BY 1),
-        |t1 AS (SELECT b1, CAST(sum(exact_n) AS BIGINT) AS c1 FROM h
-        |       GROUP BY 1),
-        |t2 AS (SELECT b2, CAST(sum(exact_n) AS BIGINT) AS c2 FROM h
-        |       GROUP BY 1),
-        |t3 AS (SELECT b3, CAST(sum(exact_n) AS BIGINT) AS c3 FROM h
-        |       GROUP BY 1),
-        |e AS (SELECT h.key, h.exact_n,
-        |        least(t0.c0, t1.c1, t2.c2, t3.c3) AS estimate
-        |      FROM h JOIN t0 USING (b0) JOIN t1 USING (b1)
-        |      JOIN t2 USING (b2) JOIN t3 USING (b3))
-        |SELECT key, estimate, exact_n,
-        |  estimate - exact_n AS overestimate
-        |FROM e ORDER BY estimate DESC, key LIMIT 20""".stripMargin,
-    "q_cusum" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, day, CAST(total AS DOUBLE) AS x,
-        |        avg(CAST(total AS DOUBLE)) OVER (PARTITION BY event_type)
-        |          AS m,
-        |        stddev_samp(CAST(total AS DOUBLE))
-        |          OVER (PARTITION BY event_type) AS sd,
-        |        CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-        |          AS n
-        |      FROM daily),
-        |c AS (SELECT *, round(abs(sum(x - m) OVER (PARTITION BY event_type
-        |        ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |        CURRENT ROW)), 6) AS ab
-        |      FROM w)
-        |SELECT event_type, max(n) AS n_obs,
-        |  round(CASE WHEN max(sd) > 0
-        |    THEN max(ab) / (max(sd) * sqrt(max(n))) END, 6)
-        |    AS cusum_score,
-        |  max(struct_pack(ab := ab, day := day)).day AS change_at
-        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // PH replay: same standardized series, pinned cumulative m_t and
-    // running-min excursion, unrounded λ comparison in both engines
-    "q_page_hinkley" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, day, CAST(total AS DOUBLE) AS x,
-        |        avg(CAST(total AS DOUBLE)) OVER (PARTITION BY event_type)
-        |          AS m,
-        |        stddev_samp(CAST(total AS DOUBLE))
-        |          OVER (PARTITION BY event_type) AS sd,
-        |        CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-        |          AS n
-        |      FROM daily),
-        |z AS (SELECT *, CASE WHEN sd > 0.0 THEN (x - m) / sd
-        |        ELSE 0.0 END AS zz FROM w),
-        |c AS (SELECT *, sum(zz - CAST(0.05 AS DOUBLE))
-        |        OVER (PARTITION BY event_type ORDER BY day
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |        AS mt
-        |      FROM z),
-        |p AS (SELECT *, mt - min(mt) OVER (PARTITION BY event_type
-        |        ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |        CURRENT ROW) AS ph
-        |      FROM c),
-        |g AS (SELECT event_type, max(n) AS n_obs,
-        |        round(max(ph), 6) AS ph_max,
-        |        CAST(sum(CASE WHEN ph > 3.0 THEN 1 ELSE 0 END)
-        |          AS BIGINT) AS n_over,
-        |        min(CASE WHEN ph > 3.0 THEN day END) AS alarm_at
-        |      FROM p GROUP BY 1)
-        |SELECT event_type, n_obs, ph_max, n_over, alarm_at,
-        |  n_over > 0 AS alarmed
-        |FROM g ORDER BY event_type""".stripMargin,
-    // concentration replay: rounded per-firm revenue, pinned-order
-    // share/HHI/CR4/entropy folds over the market-partitioned frame
-    "q_concentration" ->
-      """WITH per AS (SELECT c_mktsegment AS market,
-        |        c_custkey AS firm,
-        |        round(sum(o_totalprice), 2) AS rev
-        |      FROM orders JOIN customer ON c_custkey = o_custkey
-        |      GROUP BY 1, 2),
-        |f AS (SELECT market, firm, rev,
-        |        sum(rev) OVER wp AS tot,
-        |        row_number() OVER (PARTITION BY market
-        |          ORDER BY rev DESC, firm) AS rnk,
-        |        CAST(count(*) OVER (PARTITION BY market) AS BIGINT)
-        |          AS n
-        |      FROM per
-        |      WINDOW wp AS (PARTITION BY market ORDER BY firm
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-        |        FOLLOWING)),
-        |s AS (SELECT *, rev / tot AS sh FROM f),
-        |a AS (SELECT *,
-        |        sum(sh * sh) OVER wp AS hhi,
-        |        sum(CASE WHEN rnk <= 4 THEN sh ELSE 0.0 END) OVER wp
-        |          AS cr4,
-        |        sum(CASE WHEN sh > 0.0 THEN -(sh * ln(sh))
-        |          ELSE 0.0 END) OVER wp AS ent,
-        |        row_number() OVER (PARTITION BY market ORDER BY firm)
-        |          AS r1
-        |      FROM s
-        |      WINDOW wp AS (PARTITION BY market ORDER BY firm
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-        |        FOLLOWING))
-        |SELECT market, n AS n_firms, round(hhi, 6) AS hhi,
-        |  round(1.0 / hhi, 6) AS effective_firms,
-        |  round(cr4, 6) AS cr4, round(ent, 6) AS entropy
-        |FROM a WHERE r1 = 1 ORDER BY market""".stripMargin,
-    // quartile bins: exact interpolated edges (quantile_cont ==
-    // Spark percentile on integral inputs), bin = 1 + sum(v >= edge)
-    "q_quantile_bins" ->
-      """WITH e AS (SELECT quantile_cont(CAST(l_quantity AS DOUBLE),
-        |             [0.25, 0.5, 0.75]) AS q FROM lineitem
-        |           WHERE l_quantity IS NOT NULL),
-        |b AS (SELECT CAST(1 + CASE WHEN CAST(l_quantity AS DOUBLE)
-        |            >= q[1] THEN 1 ELSE 0 END
-        |          + CASE WHEN CAST(l_quantity AS DOUBLE) >= q[2]
-        |            THEN 1 ELSE 0 END
-        |          + CASE WHEN CAST(l_quantity AS DOUBLE) >= q[3]
-        |            THEN 1 ELSE 0 END AS INTEGER) AS bin,
-        |        CAST(l_quantity AS DOUBLE) AS v
-        |      FROM lineitem CROSS JOIN e
-        |      WHERE l_quantity IS NOT NULL)
-        |SELECT bin, CAST(count(*) AS BIGINT) AS n_rows,
-        |  round(min(v), 6) AS lo, round(max(v), 6) AS hi
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-    // session paths: q_sessions' sessionization, ordered string_agg,
-    // deterministic (n desc, path) top-20
-    "q_session_paths" ->
-      """WITH m AS (
-        |  SELECT user_id, event_id, ts, event_type,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |         OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 30000000
-        |         THEN 1 ELSE 0 END AS nw
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT *, CAST(sum(nw) OVER (
-        |        PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx FROM m),
-        |p AS (SELECT user_id, session_idx,
-        |        string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-        |      FROM s GROUP BY user_id, session_idx)
-        |SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
-        |FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-    // Benford: leading significant digit via DECIMAL(18,2) string
-    // rendering (engine-exact), expected = ln(1+1/d)/ln(10)
-    "q_benford" ->
-      """WITH c AS (
-        |  SELECT CAST(substr(regexp_replace(
-        |      CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR),
-        |      '[^1-9]', '', 'g'), 1, 1) AS INTEGER) AS digit,
-        |    count(*) AS cnt
-        |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0
-        |  GROUP BY 1),
-        |d AS (SELECT CAST(u.d AS INTEGER) AS digit
-        |      FROM UNNEST(range(1, 10)) AS u(d)),
-        |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM c)
-        |SELECT d.digit, CAST(coalesce(c.cnt, 0) AS BIGINT) AS n,
-        |  round(coalesce(c.cnt, 0) / CAST(t.n AS DOUBLE), 6) AS share,
-        |  round(ln(1.0 + 1.0 / d.digit) / ln(10.0), 6) AS expected,
-        |  round(round(coalesce(c.cnt, 0) / CAST(t.n AS DOUBLE), 6)
-        |    - round(ln(1.0 + 1.0 / d.digit) / ln(10.0), 6), 6)
-        |    AS deviation
-        |FROM d LEFT JOIN c ON c.digit = d.digit CROSS JOIN t
-        |ORDER BY d.digit""".stripMargin,
-    // edit-distance near-dup: identical prefix blocking + levenshtein
-    // over the capped prefix
-    "q_edit_dist_dup" ->
-      """WITH b AS (SELECT doc_id AS id, substr(text, 1, 80) AS t,
-        |             array_to_string(list_slice(
-        |               string_split(text, ' '), 1, 4), ' ') AS blk
-        |           FROM documents)
-        |SELECT a.id AS id_i, b2.id AS id_j,
-        |  CAST(levenshtein(a.t, b2.t) AS INTEGER) AS edit_dist
-        |FROM b a JOIN b b2 ON a.blk = b2.blk AND a.id < b2.id
-        |WHERE levenshtein(a.t, b2.t) <= 10
-        |ORDER BY id_i, id_j""".stripMargin,
-    // k-fold balance: same md5 grid as q_hash_sample, mod 5
-    "q_kfold" ->
-      """SELECT CAST(CAST('0x' || substr(md5('cv0_' ||
-        |           CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 5
-        |         AS INTEGER) AS fold,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  round(avg(CAST(length(text) AS DOUBLE)), 2) AS avg_chars,
-        |  round(avg(CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END), 4)
-        |    AS pct_en
-        |FROM documents GROUP BY 1 ORDER BY fold""".stripMargin,
-  )
+  /** Every gate's plan. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gates.byName.map { case (n, g) => n -> g.plan }
+
+  /** The DuckDB oracle SQL of every gate that has one, built on first use:
+    * loading the plans forces no SQL.
+    */
+  lazy val oracleSql: Map[String, String] =
+    Gates.byName.flatMap { case (n, g) => g.oracle.map(n -> _) }
 }

@@ -35,9 +35,10 @@ object Tables {
     *    (Graft.session) the instant is unchanged and every unix-epoch /
     *    to_date call site keeps working;
     *  - native µs TIMESTAMP (tools.ScaleGen output): pass through.
+    * The nanos-as-long read needs `spark.sql.legacy.parquet.nanosAsLong`,
+    * which [[Graft.session]] sets once; this loader writes no conf.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -23,26 +23,29 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // full query list so the checker can flag ANY query (oracle-backed or
     // rows-only) whose output dir is missing because it threw above
     Files.writeString(Paths.get(s"$outDir/query_names.json"),
       SparkEntry.queries.keys.toSeq.filter(keep).sorted
-        .map(q).mkString("[", ",", "]"))
+        .map(quote).mkString("[", ",", "]"))
     spark.stop()
   }
+
+  /** A JSON string literal of `s`: backslash, quote and ALL control chars
+    * (<0x20) escaped — a tab or CR in oracle SQL would otherwise make the
+    * checker's json.load fail and silently zero the round's correctness.
+    */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

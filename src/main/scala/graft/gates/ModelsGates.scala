@@ -1,0 +1,1472 @@
+package graft
+package gates
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import Shared._
+
+/** The gates whose plans call [[graft.ops.Models]] first: each plan
+  * declared beside the DuckDB oracle SQL its result must match. */
+object ModelsGates {
+  val all: Seq[Gate] = Seq(
+    // greedy MMR diverse selection: k=8 picks maximizing
+    // 0.5·relevance − 0.5·max-cos-to-selected (relevance = the rounded
+    // demo-md5 sigmoid score, so every input to the greedy argmax is
+    // deterministic cross-engine)
+    Gate("q_mmr_select", (s, d) => {
+      import org.apache.spark.sql.functions.col
+      val emb = Tables.embeddings(s, d)
+      val rel = graft.ops.Models.scoreLinear(emb, "vec_id", "embedding",
+        Seq(), graft.ops.Models.md5Weights(s, "demo", 64), bias = 0.1)
+        .select(col("vec_id"), col("score").as("rel"))
+      graft.ops.Curation.mmrSelect(emb, "vec_id", "embedding", rel,
+        k = 8)
+    })(
+      mmrSelectOracle(k = 8)),
+    // F25: per-status standardizer params, base64 wire round trip
+    // F25: the oracle rebuilds the wire payload from the same printf and
+    // verifies the decoded params as the printf-rounded identity
+    Gate("q_model_transport", (s, d) =>
+      graft.ops.Models.transportRoundTrip(Tables.orders(s, d),
+        "o_orderstatus", "o_totalprice"))(
+      """WITH p AS (
+        |  SELECT o_orderstatus AS param, avg(o_totalprice) AS mu,
+        |    stddev_samp(o_totalprice) AS sigma
+        |  FROM orders GROUP BY 1),
+        |enc AS (
+        |  SELECT param,
+        |    to_base64(encode(printf('{"param":"%s","mu":%s,"sigma":%s}',
+        |      param,
+        |      CASE WHEN mu IS NULL THEN 'null'
+        |           ELSE printf('%.6f', round(mu, 6)) END,
+        |      CASE WHEN sigma IS NULL THEN 'null'
+        |           ELSE printf('%.6f', round(sigma, 6)) END)))
+        |      AS payload_b64,
+        |    CASE WHEN mu IS NULL THEN NULL
+        |         ELSE CAST(printf('%.6f', round(mu, 6)) AS DOUBLE) END
+        |      AS mu_d,
+        |    CASE WHEN sigma IS NULL THEN NULL
+        |         ELSE CAST(printf('%.6f', round(sigma, 6)) AS DOUBLE) END
+        |      AS sigma_d
+        |  FROM p)
+        |SELECT param, payload_b64, mu_d AS mu, sigma_d AS sigma
+        |FROM enc ORDER BY param""".stripMargin),
+    // batch model scoring: σ(w·v + b) with md5-derived broadcast weights
+    // batch scoring: the oracle re-derives the md5 weights and computes
+    // the identical sequential dot-product fold
+    Gate("q_model_score", (s, d) =>
+      graft.ops.Models.scoreLinear(Tables.embeddings(s, d), "vec_id",
+        "embedding", Seq("label"),
+        graft.ops.Models.md5Weights(s, "demo", 64), bias = 0.1))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |s AS (SELECT vec_id, label,
+        |        list_dot_product(u.v, w.wv) + 0.1 AS z
+        |      FROM u CROSS JOIN w)
+        |SELECT vec_id, label, score,
+        |  score > 0.5 AS predicted
+        |FROM (SELECT vec_id, label,
+        |        round(1.0 / (1.0 + exp(-z)), 6) AS score FROM s)
+        |ORDER BY vec_id""".stripMargin),
+    // model evaluation: classification report (per-class P/R/F1/support +
+    // accuracy/macro/weighted rows) over the scored corpus — the
+    // reference's evaluate_model surface; truth = odd source label
+    // classification report: same confusion-count closed forms both sides;
+    // summary rows aggregate the UNROUNDED per-class metrics
+    Gate("q_eval_classify", (s, d) =>
+      graft.ops.Models.evalClassification(scoredDemo(s, d),
+        "actual", "predicted"))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |s AS (SELECT vec_id, label,
+        |        list_dot_product(u.v, w.wv) + 0.1 AS z
+        |      FROM u CROSS JOIN w),
+        |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS l,
+        |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
+        |      FROM s),
+        |conf AS (SELECT l, p, count(*) AS c FROM b GROUP BY 1, 2),
+        |act AS (SELECT l AS cls, CAST(sum(c) AS BIGINT) AS support
+        |        FROM conf GROUP BY 1),
+        |prd AS (SELECT p AS cls, CAST(sum(c) AS BIGINT) AS npred
+        |        FROM conf GROUP BY 1),
+        |tps AS (SELECT l AS cls, CAST(sum(c) AS BIGINT) AS tp
+        |        FROM conf WHERE l = p GROUP BY 1),
+        |cells AS (SELECT cls, coalesce(support, 0) AS support,
+        |            coalesce(npred, 0) AS npred, coalesce(tp, 0) AS tp
+        |          FROM act FULL JOIN prd USING (cls)
+        |               FULL JOIN tps USING (cls)),
+        |per AS (SELECT cls, support, npred, tp,
+        |    CASE WHEN npred = 0 THEN CAST(0 AS DOUBLE)
+        |         ELSE tp / npred END AS p,
+        |    CASE WHEN support = 0 THEN CAST(0 AS DOUBLE)
+        |         ELSE tp / support END AS r
+        |  FROM cells),
+        |perf AS (SELECT *,
+        |    CASE WHEN p + r = 0 THEN CAST(0 AS DOUBLE)
+        |         ELSE CAST(2 AS DOUBLE) * p * r / (p + r) END AS f
+        |  FROM per),
+        |tot AS (SELECT CAST(sum(tp) AS BIGINT) AS tpsum,
+        |    CAST(sum(support) AS BIGINT) AS n,
+        |    CAST(count(*) AS BIGINT) AS k,
+        |    sum(p) AS sp, sum(r) AS sr, sum(f) AS sf,
+        |    sum(p * support) AS wp, sum(r * support) AS wr,
+        |    sum(f * support) AS wf
+        |  FROM perf)
+        |SELECT cls, round(p, 6) AS precision, round(r, 6) AS recall,
+        |  round(f, 6) AS f1, support FROM perf
+        |UNION ALL
+        |SELECT 'accuracy', round(tpsum / n, 6), round(tpsum / n, 6),
+        |  round(tpsum / n, 6), n FROM tot
+        |UNION ALL
+        |SELECT 'macro avg', round(sp / k, 6), round(sr / k, 6),
+        |  round(sf / k, 6), n FROM tot
+        |UNION ALL
+        |SELECT 'weighted avg', round(wp / n, 6), round(wr / n, 6),
+        |  round(wf / n, 6), n FROM tot
+        |ORDER BY cls""".stripMargin),
+    // the confusion matrix behind the report, pivoted wide
+    // pivoted confusion matrix behind the report
+    Gate("q_confusion", (s, d) =>
+      graft.ops.Models.confusionMatrix(scoredDemo(s, d),
+        "actual", "predicted", Seq("false", "true")))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |s AS (SELECT vec_id, label,
+        |        list_dot_product(u.v, w.wv) + 0.1 AS z
+        |      FROM u CROSS JOIN w),
+        |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS actual,
+        |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
+        |      FROM s)
+        |SELECT actual,
+        |  CAST(sum(CASE WHEN p = 'false' THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS pred_false,
+        |  CAST(sum(CASE WHEN p = 'true' THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS pred_true
+        |FROM b GROUP BY actual ORDER BY actual""".stripMargin),
+    // closed-form OLS fit (3 regressors + intercept) on STANDARDIZED
+    // variables — model fitting as one pass of distributed sums; the
+    // standardization keeps the centered moments at O(1) so the betas
+    // are reproducible cross-engine (see fitLinear3's conditioning note)
+    // OLS: identical standardization + centered normal-equation closed
+    // forms both sides; + 0.0 canonicalizes the intercept's IEEE -0.0
+    Gate("q_fit_linear", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val li = Tables.lineitem(s, d)
+      val stats = li.agg(
+        avg(col("l_quantity")).as("m1"),
+        stddev_samp(col("l_quantity")).as("sd1"),
+        avg(col("l_discount")).as("m2"),
+        stddev_samp(col("l_discount")).as("sd2"),
+        avg(col("l_tax")).as("m3"),
+        stddev_samp(col("l_tax")).as("sd3"),
+        avg(col("l_extendedprice")).as("my"),
+        stddev_samp(col("l_extendedprice")).as("sdy"))
+      val std = li.crossJoin(broadcast(stats)).select(
+        ((col("l_quantity") - col("m1")) / col("sd1")).as("z1"),
+        ((col("l_discount") - col("m2")) / col("sd2")).as("z2"),
+        ((col("l_tax") - col("m3")) / col("sd3")).as("z3"),
+        ((col("l_extendedprice") - col("my")) / col("sdy")).as("zy"))
+      graft.ops.Models.fitLinear3(std, Seq("z1", "z2", "z3"), "zy")
+    })(
+      """WITH st AS (
+        |  SELECT avg(l_quantity) AS m1, stddev_samp(l_quantity) AS sd1,
+        |    avg(l_discount) AS m2, stddev_samp(l_discount) AS sd2,
+        |    avg(l_tax) AS m3, stddev_samp(l_tax) AS sd3,
+        |    avg(l_extendedprice) AS my, stddev_samp(l_extendedprice) AS sdy
+        |  FROM lineitem),
+        |b AS (
+        |  SELECT (l_quantity - m1) / sd1 AS x1,
+        |    (l_discount - m2) / sd2 AS x2,
+        |    (l_tax - m3) / sd3 AS x3,
+        |    (l_extendedprice - my) / sdy AS y
+        |  FROM lineitem CROSS JOIN st),
+        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    sum(x1) AS s1, sum(x2) AS s2, sum(x3) AS s3, sum(y) AS sy,
+        |    sum(x1*x1) AS s11, sum(x1*x2) AS s12, sum(x1*x3) AS s13,
+        |    sum(x2*x2) AS s22, sum(x2*x3) AS s23, sum(x3*x3) AS s33,
+        |    sum(x1*y) AS s1y, sum(x2*y) AS s2y, sum(x3*y) AS s3y,
+        |    sum(y*y) AS syy
+        |  FROM b),
+        |cm AS (SELECT *,
+        |    s11 - s1*s1/n AS S11, s12 - s1*s2/n AS S12,
+        |    s13 - s1*s3/n AS S13, s22 - s2*s2/n AS S22,
+        |    s23 - s2*s3/n AS S23, s33 - s3*s3/n AS S33,
+        |    s1y - s1*sy/n AS S1y, s2y - s2*sy/n AS S2y,
+        |    s3y - s3*sy/n AS S3y, syy - sy*sy/n AS Syy
+        |  FROM s),
+        |dt AS (SELECT *,
+        |    S11*(S22*S33 - S23*S23) - S12*(S12*S33 - S23*S13)
+        |      + S13*(S12*S23 - S22*S13) AS det
+        |  FROM cm),
+        |sl AS (SELECT *,
+        |    (S1y*(S22*S33 - S23*S23) - S12*(S2y*S33 - S23*S3y)
+        |      + S13*(S2y*S23 - S22*S3y))/det AS b1,
+        |    (S11*(S2y*S33 - S23*S3y) - S1y*(S12*S33 - S23*S13)
+        |      + S13*(S12*S3y - S2y*S13))/det AS b2,
+        |    (S11*(S22*S3y - S2y*S23) - S12*(S12*S3y - S2y*S13)
+        |      + S1y*(S12*S23 - S22*S13))/det AS b3
+        |  FROM dt),
+        |ic AS (SELECT *,
+        |    (sy - b1*s1 - b2*s2 - b3*s3) / n AS b0,
+        |    Syy - b1*S1y - b2*S2y - b3*S3y AS sse
+        |  FROM sl)
+        |SELECT CAST(n AS BIGINT) AS n,
+        |  round(b0, 6) + 0.0 AS b0, round(b1, 6) + 0.0 AS b1,
+        |  round(b2, 6) + 0.0 AS b2, round(b3, 6) + 0.0 AS b3,
+        |  round(1.0 - sse / Syy, 6) AS r2
+        |FROM ic""".stripMargin),
+    // exact tie-aware ROC-AUC over the scored corpus (rank-sum form,
+    // grouped by distinct score)
+    // exact tie-aware AUC: same per-distinct-score rank-sum closed form,
+    // numerator accumulated in score order on both sides
+    Gate("q_roc_auc", (s, d) =>
+      graft.ops.Models.rocAuc(scoredDemo(s, d), "actual", "score"))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |sc AS (SELECT vec_id,
+        |         CAST(label % 2 = 1 AS INTEGER) AS l,
+        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+        |           + 0.1))), 6) AS s
+        |       FROM u CROSS JOIN w),
+        |g AS (SELECT s, CAST(sum(l) AS BIGINT) AS pos,
+        |        CAST(sum(1 - l) AS BIGINT) AS neg
+        |      FROM sc GROUP BY s),
+        |tot AS (SELECT CAST(sum(pos) AS BIGINT) AS np,
+        |          CAST(sum(neg) AS BIGINT) AS nn FROM g),
+        |cums AS (SELECT g.*, np, nn,
+        |    CAST(sum(neg) OVER (ORDER BY s
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |      - neg AS below
+        |  FROM g CROSS JOIN tot),
+        |won AS (SELECT *,
+        |    pos * (below + neg / CAST(2 AS DOUBLE)) AS won FROM cums),
+        |num AS (SELECT *,
+        |    sum(won) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
+        |      AND UNBOUNDED FOLLOWING) AS num
+        |  FROM won)
+        |SELECT max(np) AS n_pos, max(nn) AS n_neg,
+        |  round(max(num) / (max(np) * max(nn)), 6) AS auc
+        |FROM num""".stripMargin),
+    // calibration curve + Brier score over the scored corpus
+    // calibration: same bin rule and per-bin means both sides
+    Gate("q_calibration", (s, d) =>
+      graft.ops.Models.calibration(scoredDemo(s, d),
+        "actual", "score", bins = 10))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |sc AS (SELECT vec_id,
+        |         CAST(label % 2 = 1 AS INTEGER) AS l,
+        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+        |           + 0.1))), 6) AS s
+        |       FROM u CROSS JOIN w)
+        |SELECT CAST(least(greatest(CAST(floor(s * 10) AS INTEGER), 0), 9)
+        |    AS INTEGER) AS bin,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  round(avg(s), 6) AS mean_score,
+        |  round(avg(CAST(l AS DOUBLE)), 6) AS pos_rate
+        |FROM sc GROUP BY 1 ORDER BY bin""".stripMargin),
+    // the reliability table folded to ECE/MCE (frequency-weighted and
+    // worst-bin miscalibration) — per-bin gaps stay visible
+    // ECE replay: the calibration table, gaps from the ROUNDED per-bin
+    // stats, pinned bin-order weighted fold
+    Gate("q_ece", (s, d) =>
+      graft.ops.Models.calibrationError(scoredDemo(s, d),
+        "actual", "score", bins = 10))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |sc AS (SELECT vec_id,
+        |         CAST(label % 2 = 1 AS INTEGER) AS l,
+        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+        |           + 0.1))), 6) AS s
+        |       FROM u CROSS JOIN w),
+        |cal AS (SELECT CAST(least(greatest(CAST(floor(s * 10)
+        |      AS INTEGER), 0), 9) AS INTEGER) AS bin,
+        |    CAST(count(*) AS BIGINT) AS n,
+        |    round(avg(s), 6) AS mean_score,
+        |    round(avg(CAST(l AS DOUBLE)), 6) AS pos_rate
+        |  FROM sc GROUP BY 1),
+        |g AS (SELECT *, round(abs(pos_rate - mean_score), 6) AS gap
+        |      FROM cal),
+        |f AS (SELECT *,
+        |    CAST(sum(n) OVER pin AS BIGINT) AS n_total,
+        |    sum(CAST(n AS DOUBLE) * gap) OVER pin AS wsum,
+        |    max(gap) OVER pin AS mgap
+        |  FROM g WINDOW pin AS (ORDER BY bin ROWS BETWEEN UNBOUNDED
+        |    PRECEDING AND UNBOUNDED FOLLOWING))
+        |SELECT bin, n, mean_score, pos_rate, gap, n_total,
+        |  round(wsum / CAST(n_total AS DOUBLE), 6) AS ece,
+        |  round(mgap, 6) AS mce
+        |FROM f ORDER BY bin""".stripMargin),
+    // isotonic calibration: the monotone remapping table (PAV via the
+    // bins²-bounded minimax identity) — what you JOIN onto new scores to
+    // fix the miscalibration q_calibration only reports
+    // isotonic replay: same scored corpus and binning, then PAV via the
+    // minimax identity over bins² pooled-block averages — every average
+    // is one correctly-rounded quotient of exact integer prefix sums, so
+    // min/max agree bit-for-bit with Spark before the round-6
+    Gate("q_isotonic", (s, d) =>
+      graft.ops.Models.isotonicCalibration(scoredDemo(s, d),
+        "actual", "score", bins = 16))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |sc AS (SELECT vec_id,
+        |         CAST(label % 2 = 1 AS INTEGER) AS l,
+        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+        |           + 0.1))), 6) AS s
+        |       FROM u CROSS JOIN w),
+        |b AS (SELECT CAST(least(greatest(CAST(floor(s * 16) AS BIGINT),
+        |          0), 15) AS INTEGER) AS bin,
+        |        CAST(count(*) AS BIGINT) AS n,
+        |        CAST(sum(l) AS BIGINT) AS pos
+        |      FROM sc GROUP BY 1),
+        |c AS (SELECT bin, n, pos,
+        |        CAST(sum(n) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
+        |          PRECEDING AND CURRENT ROW) AS BIGINT) AS cn,
+        |        CAST(sum(pos) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
+        |          PRECEDING AND CURRENT ROW) AS BIGINT) AS cp
+        |      FROM b),
+        |mu AS (SELECT j.bin AS jb,
+        |         min((l.cp - (j.cp - j.pos))
+        |           / CAST(l.cn - (j.cn - j.n) AS DOUBLE)) AS mu
+        |       FROM c j JOIN c l ON j.bin <= l.bin GROUP BY 1),
+        |iso AS (SELECT jb AS bin,
+        |          max(mu) OVER (ORDER BY jb ROWS BETWEEN UNBOUNDED
+        |            PRECEDING AND CURRENT ROW) AS iso
+        |        FROM mu)
+        |SELECT b.bin, b.n, b.pos,
+        |  round(b.pos / CAST(b.n AS DOUBLE), 6) AS raw_rate,
+        |  round(i.iso, 6) AS iso_rate
+        |FROM b JOIN iso i USING (bin) ORDER BY bin""".stripMargin),
+    Gate("q_brier", (s, d) =>
+      graft.ops.Models.brierScore(scoredDemo(s, d), "actual", "score"))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |sc AS (SELECT CAST(CAST(label % 2 = 1 AS INTEGER) AS DOUBLE) AS l,
+        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+        |           + 0.1))), 6) AS s
+        |       FROM u CROSS JOIN w)
+        |SELECT CAST(count(s - l) AS BIGINT) AS n,
+        |  round(avg((s - l) * (s - l)), 6) AS brier
+        |FROM sc""".stripMargin),
+    // forecast scoring: MAE/RMSE of a lag-1 persistence forecast per
+    // event_type series — the forecasting DAG's error metrics
+    // MAE/RMSE of the lag-1 persistence forecast, identical closed forms
+    Gate("q_forecast_errors", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val daily = Tables.events(s, d)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(round(sum(col("value")), 2).as("total"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("day")
+      graft.ops.Models.forecastErrors(
+        daily.withColumn("pred", lag(col("total"), 1).over(w)),
+        "total", "pred", Seq("event_type"))
+    })(
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day,
+        |    round(sum(value), 2) AS total
+        |  FROM events GROUP BY 1, 2),
+        |p AS (SELECT event_type, total,
+        |    lag(total) OVER (PARTITION BY event_type ORDER BY day) AS pred
+        |  FROM daily),
+        |e AS (SELECT event_type, total - pred AS err FROM p)
+        |SELECT event_type, CAST(count(err) AS BIGINT) AS n_obs,
+        |  round(avg(abs(err)), 6) AS mae,
+        |  round(sqrt(avg(err * err)), 6) AS rmse
+        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // does weekly seasonality earn its keep? skill of the lag-7
+    // seasonal-naive forecast over the lag-1 persistence baseline on
+    // the SAME rows (the fair-window rule)
+    // skill replay: both lags in one windowed pass, shared-row window,
+    // identical guard and + 0.0 on the published skill
+    Gate("q_forecast_skill", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val daily = Tables.events(s, d)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(round(sum(col("value")), 2).as("total"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("day")
+      graft.ops.Models.forecastSkill(
+        daily.withColumn("snaive", lag(col("total"), 7).over(w))
+          .withColumn("naive", lag(col("total"), 1).over(w)),
+        "total", "snaive", "naive", Seq("event_type"))
+    })(
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day,
+        |    round(sum(value), 2) AS total
+        |  FROM events GROUP BY 1, 2),
+        |p AS (SELECT event_type, total AS y,
+        |    lag(total, 7) OVER (PARTITION BY event_type ORDER BY day)
+        |      AS f,
+        |    lag(total, 1) OVER (PARTITION BY event_type ORDER BY day)
+        |      AS b
+        |  FROM daily),
+        |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_obs,
+        |    round(avg(abs(y - f)), 6) AS mae_model,
+        |    round(avg(abs(y - b)), 6) AS mae_baseline
+        |  FROM p WHERE y IS NOT NULL AND f IS NOT NULL
+        |    AND b IS NOT NULL
+        |  GROUP BY 1)
+        |SELECT event_type, n_obs, mae_model, mae_baseline,
+        |  round(CASE WHEN mae_baseline > 0
+        |    THEN 1.0 - mae_model / mae_baseline END, 6) + 0.0 AS skill
+        |FROM g ORDER BY event_type""".stripMargin),
+    // scale-free grading of the same persistence baseline: MAPE /
+    // SMAPE / signed bias — comparable across series magnitudes,
+    // and bias exposes systematic over/under-forecasting
+    // scaled-errors replay: same persistence chain, conditional
+    // averages with identical guards; bias carries the + 0.0 guard
+    Gate("q_forecast_scaled", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val daily = Tables.events(s, d)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(round(sum(col("value")), 2).as("total"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("day")
+      graft.ops.Models.scaledForecastErrors(
+        daily.withColumn("pred", lag(col("total"), 1).over(w)),
+        "total", "pred", Seq("event_type"))
+    })(
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day,
+        |    round(sum(value), 2) AS total
+        |  FROM events GROUP BY 1, 2),
+        |p AS (SELECT event_type, total AS y,
+        |    lag(total) OVER (PARTITION BY event_type ORDER BY day) AS f
+        |  FROM daily)
+        |SELECT event_type,
+        |  CAST(count(y - f) AS BIGINT) AS n_obs,
+        |  CAST(count(CASE WHEN y <> 0 AND f IS NOT NULL THEN 1 END)
+        |    AS BIGINT) AS n_mape,
+        |  round(avg(CASE WHEN y <> 0 THEN abs(y - f) / abs(y) END), 6)
+        |    AS mape,
+        |  round(avg(CASE WHEN abs(y) + abs(f) > 0
+        |    THEN 2.0 * abs(y - f) / (abs(y) + abs(f)) END), 6) AS smape,
+        |  round(avg(y - f), 6) + 0.0 AS bias
+        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // quantile-forecast grading of the same persistence baseline:
+    // pinball loss at p10/p50/p90 + the under-forecast share that
+    // explains WHY a level scores badly
+    // pinball replay: same persistence chain, quantiles-bounded explode,
+    // single conditional averages (the forecastErrors contract)
+    Gate("q_pinball", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val daily = Tables.events(s, d)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(round(sum(col("value")), 2).as("total"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("day")
+      graft.ops.Models.pinballLoss(
+        daily.withColumn("pred", lag(col("total"), 1).over(w)),
+        "total", "pred", Seq(0.1, 0.5, 0.9), Seq("event_type"))
+    })(
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day,
+        |    round(sum(value), 2) AS total
+        |  FROM events GROUP BY 1, 2),
+        |p AS (SELECT event_type, total,
+        |    lag(total) OVER (PARTITION BY event_type ORDER BY day) AS pred
+        |  FROM daily),
+        |b AS (SELECT event_type, total AS y, pred AS f, q.q
+        |      FROM p CROSS JOIN (SELECT unnest([CAST(0.1 AS DOUBLE),
+        |        CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE)]) AS q) q
+        |      WHERE total IS NOT NULL AND pred IS NOT NULL)
+        |SELECT event_type, q, CAST(count(*) AS BIGINT) AS n_obs,
+        |  round(avg(CASE WHEN y >= f THEN q * (y - f)
+        |                 ELSE (1.0 - q) * (f - y) END), 6) AS pinball,
+        |  round(avg(CASE WHEN y > f THEN 1.0 ELSE 0.0 END), 6)
+        |    AS under_forecast_share
+        |FROM b GROUP BY 1, 2 ORDER BY event_type, q""".stripMargin),
+    // logistic fit (is-English ~ standardized doc length) via 4 FIXED
+    // Newton rounds over moment sums — the deterministic-iteration
+    // analogue of the reference's classifier training; the oracle
+    // replays the identical rounds
+    Gate("q_fit_logistic", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val docs = Tables.documents(s, d)
+      val stats = docs.agg(
+        avg(col("n_chars").cast("double")).as("m"),
+        stddev_samp(col("n_chars").cast("double")).as("sd"))
+      val std = docs.crossJoin(broadcast(stats)).select(
+        ((col("n_chars").cast("double") - col("m")) / col("sd")).as("z"),
+        when(col("lang") === "en", 1.0).otherwise(0.0).as("y"))
+      graft.ops.Models.fitLogistic1(std, "z", "y", rounds = 4)
+    })(
+      """WITH d AS (SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
+        |                  CAST(n_chars AS DOUBLE) AS x FROM documents),
+        |st AS (SELECT avg(x) AS m, stddev_samp(x) AS sd FROM d),
+        |z AS (SELECT y, (x - m) / sd AS z FROM d, st),
+        |b0r AS (SELECT 0.0 AS b0, 0.0 AS b1),
+        |p0 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
+        |              b0, b1 FROM z, b0r),
+        |s0 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
+        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
+        |    sum(p * (1.0 - p) * z * z) AS h11,
+        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p0),
+        |b1r AS (SELECT n,
+        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
+        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
+        |  FROM s0),
+        |p1 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
+        |              b0, b1 FROM z, b1r),
+        |s1 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
+        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
+        |    sum(p * (1.0 - p) * z * z) AS h11,
+        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p1),
+        |b2r AS (SELECT n,
+        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
+        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
+        |  FROM s1),
+        |p2 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
+        |              b0, b1 FROM z, b2r),
+        |s2 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
+        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
+        |    sum(p * (1.0 - p) * z * z) AS h11,
+        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p2),
+        |b3r AS (SELECT n,
+        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
+        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
+        |  FROM s2),
+        |p3 AS (SELECT y, z, 1.0 / (1.0 + exp(0.0 - (b0 + b1 * z))) AS p,
+        |              b0, b1 FROM z, b3r),
+        |s3 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    sum(y - p) AS g0, sum((y - p) * z) AS g1,
+        |    sum(p * (1.0 - p)) AS h00, sum(p * (1.0 - p) * z) AS h01,
+        |    sum(p * (1.0 - p) * z * z) AS h11,
+        |    any_value(b0) AS b0, any_value(b1) AS b1 FROM p3),
+        |b4r AS (SELECT n,
+        |    b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS b0,
+        |    b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b1
+        |  FROM s3),
+        |fin AS (SELECT z.y,
+        |    1.0 / (1.0 + exp(0.0 - (b.b0 + b.b1 * z.z))) AS p,
+        |    b.n, b.b0, b.b1 FROM z, b4r b)
+        |SELECT CAST(any_value(n) AS BIGINT) AS n,
+        |  round(any_value(b0), 6) + 0.0 AS b0,
+        |  round(any_value(b1), 6) + 0.0 AS b1,
+        |  round(0.0 - avg(y * ln(p) + (1.0 - y) * ln(1.0 - p)), 6) + 0.0
+        |    AS logloss
+        |FROM fin""".stripMargin),
+    // gradient-boosted depth-1 stumps, 3 rounds, squared loss: y is the
+    // INTEGER-rounded price so every residual/sum is exact (the dyadic
+    // discipline that makes the per-round split argmax cross-engine-safe)
+    // the fitted model AS the parameter table — consumed from the
+    // published parquet artifact (contents deterministic and identical
+    // to a live fit; q_gbt_eval keeps the stump fit chain measured
+    // live)
+    // logistic Newton fit: the oracle unrolls the SAME 4 rounds with the
+    // SAME expression text (float op order identical in both engines)
+    // 3 boosting rounds replayed by the Scala-generated CTE chain; the
+    // dyadic exactness discipline (integer y, 2^-10 leaves, lr 0.5) is
+    // what lets a float argmax hash-match across engines
+    Gate("q_gbt_stumps", (s, d) =>
+      gbtStumpsModel(s, d).orderBy("boost_round"))(
+      gbtStumpsOracle(3, 0.5)),
+    // score with the PUBLISHED model (round-0 base row + rounded
+    // leaves): prediction domain is <= 2^3 + 1 values, grouped counts
+    Gate("q_gbt_score", (s, d) => {
+      import org.apache.spark.sql.functions._
+      graft.ops.Models.scoreStumps(gbtLiFrame(s, d),
+        Seq("l_quantity", "l_discount"), gbtStumpsModel(s, d), lr = 0.5)
+        .groupBy(col("prediction"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("prediction"))
+    })(
+      gbtScoreOracle(3, 0.5)),
+    // permutation importance: rotate each feature within md5 buckets,
+    // re-score with the published model, report the RMSE degradation —
+    // the model-agnostic check on the gain shares
+    Gate("q_gbt_perm_importance", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val li = gbtLiFrame(s, d)
+      // integer-rendered hash input so both engines hash identical text
+      val hashed = li.withColumn("__hh", md5(concat_ws("_",
+        col("y").cast("long"), col("l_quantity").cast("long"),
+        round(col("l_discount") * 100).cast("long"))))
+      graft.ops.Models.permutationImportance(hashed, "y",
+        Seq("l_quantity", "l_discount"), gbtStumpsModel(s, d), "__hh",
+        buckets = 256, lr = 0.5)
+    })(
+      gbtPermImportanceOracle(3, 0.5, 256)),
+    // partial dependence along l_quantity: mean prediction with the
+    // feature forced to each grid value — HOW the model uses the
+    // feature (importance says only WHICH); exact cell-count means
+    Gate("q_gbt_pdp", (s, d) =>
+      graft.ops.Models.partialDependence(gbtLiFrame(s, d),
+        Seq("l_quantity", "l_discount"), gbtStumpsModel(s, d),
+        "l_quantity", grid = Seq(1.0, 10.0, 20.0, 30.0, 40.0, 50.0),
+        lr = 0.5))(
+      gbtPdpOracle(3, 0.5,
+      Seq(1.0, 10.0, 20.0, 30.0, 40.0, 50.0))),
+    // the booster's fit -> score -> evaluate loop: the stump family's
+    // LIVE-FIT gate (fit + one final n/RMSE/MAE/R^2 scan over the
+    // unrounded internal predictions — the residual-decay semantics);
+    // every other stump gate consumes the published parameter table
+    Gate("q_gbt_eval", (s, d) =>
+      graft.ops.Models.boostedStumpsEval(gbtLiFrame(s, d), "y",
+        Seq("l_quantity", "l_discount"), rounds = 3, lr = 0.5))(
+      gbtEvalOracle(3, 0.5)),
+    // depth-2 boosted trees, 3 rounds: root split -> per-branch split
+    // search -> 4 dyadic leaves; feature INTERACTIONS no stump ensemble
+    // can express. Output = the parameter table, consumed from the
+    // published artifact (q_gbt_depth2_eval keeps the fit chain live)
+    Gate("q_gbt_depth2", (s, d) =>
+      gbtTrees2Model(s, d).orderBy("boost_round", "node"))(
+      gbtDepth2Oracle(3, 0.5)),
+    // score with the PUBLISHED depth-2 model (base row + two-level
+    // CASE over the rounded leaves): prediction domain <= 4^rounds + 1
+    // values, grouped counts — the q_gbt_score loop one level deeper
+    Gate("q_gbt_depth2_score", (s, d) => {
+      import org.apache.spark.sql.functions._
+      graft.ops.Models.scoreTrees2(gbtLiFrame(s, d),
+        Seq("l_quantity", "l_discount"), gbtTrees2Model(s, d), lr = 0.5)
+        .groupBy(col("prediction"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("prediction"))
+    })(
+      gbtDepth2ScoreOracle(3, 0.5)),
+    // gain-based feature importance from the PUBLISHED depth-2 model —
+    // XGBoost's importance_type='gain' as a query over the parameter
+    // table, pinned-order gain folds
+    Gate("q_gbt_importance", (s, d) =>
+      graft.ops.Models.featureImportance(gbtTrees2Model(s, d)))(
+      gbtImportanceOracle(3, 0.5)),
+    // the depth-2 fit -> evaluate loop: the depth-2 family's LIVE-FIT
+    // gate (the residual-decay check that depth 2 fits at least as
+    // tightly as the stumps is asserted in PipelineOpsSpec over this
+    // same frame); the other depth-2 gates consume the published table
+    Gate("q_gbt_depth2_eval", (s, d) =>
+      graft.ops.Models.boostedTrees2Eval(gbtLiFrame(s, d), "y",
+        Seq("l_quantity", "l_discount"), rounds = 3, lr = 0.5))(
+      gbtDepth2EvalOracle(3, 0.5)),
+    // closed-form AR(3) Yule-Walker fit + 5-step forecast on the daily
+    // order-revenue series — the forecasting DAG's fit→forecast loop as
+    // one plan (coefficients AND the recursion are oracle-replayed)
+    // AR(3) Yule-Walker fit + 5-step forecast: the oracle replays the
+    // standardization, the autocovariance sums, the Cramer solve (same
+    // expression text = same float op order), and the unrolled recursion
+    Gate("q_ar_forecast", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val daily = Tables.orders(s, d)
+        .groupBy(col("o_orderdate").as("day"))
+        .agg(round(sum(col("o_totalprice")), 2).as("total"))
+      graft.ops.Models.arForecast(daily, "day", "total", p = 3, horizon = 5)
+    })(
+      """WITH series AS (
+        |  SELECT o_orderdate AS day, round(sum(o_totalprice), 2) AS total
+        |  FROM orders GROUP BY 1),
+        |st AS (SELECT avg(total) AS m, stddev_samp(total) AS sd
+        |       FROM series),
+        |z AS (SELECT day, (total - m) / sd AS z FROM series, st),
+        |lagged AS (SELECT day, z,
+        |    lag(z, 1) OVER (ORDER BY day) AS z1,
+        |    lag(z, 2) OVER (ORDER BY day) AS z2,
+        |    lag(z, 3) OVER (ORDER BY day) AS z3 FROM z),
+        |sums AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    sum(z * z) AS s0, sum(z * z1) AS s1,
+        |    sum(z * z2) AS s2, sum(z * z3) AS s3
+        |  FROM lagged),
+        |cv AS (SELECT n, s0 / n AS c0, s1 / n AS c1, s2 / n AS c2,
+        |    s3 / n AS c3 FROM sums),
+        |dt AS (SELECT n, c0, c1, c2, c3,
+        |    c0 * (c0 * c0 - c1 * c1) - c1 * (c1 * c0 - c1 * c2)
+        |      + c2 * (c1 * c1 - c0 * c2) AS det
+        |  FROM cv),
+        |abc AS (SELECT n,
+        |    (c1 * (c0 * c0 - c1 * c1) - c1 * (c2 * c0 - c1 * c3)
+        |      + c2 * (c2 * c1 - c0 * c3)) / det AS a1,
+        |    (c0 * (c2 * c0 - c1 * c3) - c1 * (c1 * c0 - c1 * c2)
+        |      + c2 * (c1 * c3 - c2 * c2)) / det AS a2,
+        |    (c0 * (c0 * c3 - c2 * c1) - c1 * (c1 * c3 - c2 * c2)
+        |      + c1 * (c1 * c1 - c0 * c2)) / det AS a3
+        |  FROM dt),
+        |anch AS (SELECT z AS zl1, z1 AS zl2, z2 AS zl3 FROM lagged
+        |         WHERE day = (SELECT max(day) FROM lagged)),
+        |one AS (SELECT a1, a2, a3, n, zl1, zl2, zl3, m, sd
+        |        FROM abc, anch, st),
+        |r1 AS (SELECT *, a1 * zl1 + a2 * zl2 + a3 * zl3 AS f1 FROM one),
+        |r2 AS (SELECT *, a1 * f1 + a2 * zl1 + a3 * zl2 AS f2 FROM r1),
+        |r3 AS (SELECT *, a1 * f2 + a2 * f1 + a3 * zl1 AS f3 FROM r2),
+        |r4 AS (SELECT *, a1 * f3 + a2 * f2 + a3 * f1 AS f4 FROM r3),
+        |r5 AS (SELECT *, a1 * f4 + a2 * f3 + a3 * f2 AS f5 FROM r4),
+        |steps AS (
+        |  SELECT 1 AS k, f1 AS f FROM r5
+        |  UNION ALL SELECT 2, f2 FROM r5
+        |  UNION ALL SELECT 3, f3 FROM r5
+        |  UNION ALL SELECT 4, f4 FROM r5
+        |  UNION ALL SELECT 5, f5 FROM r5)
+        |SELECT CAST(s.k AS INTEGER) AS step,
+        |  CAST(r.n AS BIGINT) AS n_obs,
+        |  round(r.a1, 6) + 0.0 AS a1,
+        |  round(r.a2, 6) + 0.0 AS a2,
+        |  round(r.a3, 6) + 0.0 AS a3,
+        |  round(s.f, 6) + 0.0 AS z_next,
+        |  round(r.m + r.sd * s.f, 2) + 0.0 AS forecast
+        |FROM steps s, r5 r ORDER BY step""".stripMargin),
+    // SARIMA-lite: weekly-differenced AR(2) on the daily revenue series,
+    // 7-step forecast integrated against the OBSERVED last week — the
+    // closed-form slice of the reference's SARIMAX stage
+    Gate("q_sarima_lite", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val daily = Tables.orders(s, d)
+        .groupBy(col("o_orderdate").as("day"))
+        .agg(round(sum(col("o_totalprice")), 2).as("total"))
+      graft.ops.Models.sarimaLite(daily, "day", "total", period = 7,
+        p = 2, horizon = 7)
+    })(
+      sarimaLiteOracle(period = 7, horizon = 7)),
+    // exact PR-AUC (tie-grouped average precision) over the scored corpus
+    // — the rare-positive twin of q_roc_auc
+    // PR-AUC: same scored-corpus CTE as q_roc_auc; AP numerator summed
+    // via an ordered window so both engines accumulate identically
+    Gate("q_pr_auc", (s, d) =>
+      graft.ops.Models.prAuc(scoredDemo(s, d), "actual", "score"))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
+        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+        |           + 0.1))), 6) AS s
+        |       FROM u CROSS JOIN w),
+        |g AS (SELECT s, CAST(sum(l) AS BIGINT) AS pos,
+        |        CAST(sum(1 - l) AS BIGINT) AS neg
+        |      FROM sc GROUP BY s),
+        |tot AS (SELECT CAST(sum(pos) AS BIGINT) AS np,
+        |          CAST(sum(neg) AS BIGINT) AS nn FROM g),
+        |cums AS (SELECT g.*, np, nn,
+        |    CAST(sum(pos) OVER (ORDER BY s DESC ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tp,
+        |    CAST(sum(pos + neg) OVER (ORDER BY s DESC ROWS BETWEEN
+        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_n
+        |  FROM g CROSS JOIN tot),
+        |st AS (SELECT *,
+        |    (CAST(pos AS DOUBLE) / np) * (CAST(cum_tp AS DOUBLE) / cum_n)
+        |      AS step FROM cums),
+        |ap AS (SELECT *, sum(step) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND UNBOUNDED FOLLOWING) AS ap FROM st)
+        |SELECT max(np) AS n_pos, max(nn) AS n_neg,
+        |  round(max(ap), 6) AS pr_auc
+        |FROM ap""".stripMargin),
+    // cumulative gains / lift deciles (band-atomic ties; bucket 0 = top)
+    // lift/gain: band-atomic tie groups via integer division on the
+    // cumulative start position
+    Gate("q_lift_gain", (s, d) =>
+      graft.ops.Models.liftGain(scoredDemo(s, d), "actual", "score",
+        buckets = 10))(
+      """WITH u AS (SELECT vec_id, label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |           FROM embeddings),
+        |w AS (SELECT list_transform(range(64), d ->
+        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+        |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
+        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+        |           + 0.1))), 6) AS s
+        |       FROM u CROSS JOIN w),
+        |g AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt,
+        |        CAST(sum(l) AS BIGINT) AS pos
+        |      FROM sc GROUP BY s),
+        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n,
+        |          CAST(sum(pos) AS BIGINT) AS np FROM g),
+        |cs AS (SELECT g.*, n, np,
+        |    CAST(sum(cnt) OVER (ORDER BY s DESC ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) AS BIGINT) - cnt AS start
+        |  FROM g CROSS JOIN tot),
+        |bd AS (SELECT CAST((start * 10) // n AS INTEGER) AS bucket,
+        |         CAST(sum(cnt) AS BIGINT) AS n_rows,
+        |         CAST(sum(pos) AS BIGINT) AS n_pos,
+        |         max(n) AS n, max(np) AS np
+        |       FROM cs GROUP BY 1),
+        |cb AS (SELECT *, CAST(sum(n_pos) OVER (ORDER BY bucket ROWS
+        |      BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |      AS cum_pos FROM bd)
+        |SELECT bucket, n_rows, n_pos,
+        |  round((CAST(n_pos AS DOUBLE) / n_rows)
+        |    / (CAST(np AS DOUBLE) / n), 6) AS lift,
+        |  round(CAST(cum_pos AS DOUBLE) / np, 6) AS capture
+        |FROM cb ORDER BY bucket""".stripMargin),
+    // rank-2 ALS factorization of the customer×part quantity matrix:
+    // 2 alternation rounds, per-round training RMSE receipts
+    // ALS replay: Scala-generated alternation chain (2 rounds),
+    // exact dyadic moment sums + lattice-floored solves
+    Gate("q_als", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val inter = Tables.lineitem(s, d)
+        .join(Tables.orders(s, d),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey"), col("l_partkey"), col("l_quantity"))
+      graft.ops.Models.alsFactorize(inter, "o_custkey", "l_partkey",
+        "l_quantity")
+    })(
+      alsOracle(2)),
+    // ALS serve path: top-3 unseen parts for a 5-user md5 panel
+    // ALS serve replay: same chain + md5 panel + unseen top-k cut
+    Gate("q_als_recommend", (s, d) => {
+      import org.apache.spark.sql.functions._
+      val inter = Tables.lineitem(s, d)
+        .join(Tables.orders(s, d),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey"), col("l_partkey"), col("l_quantity"))
+      // serves from the per-JVM PUBLISHED factor tables (r17): the
+      // 2-round alternation stays measured live in q_als; the serve
+      // path recomputes only the seen-pair filter it needs
+      val (pu, qi) = alsFactorTables(s, d)
+      graft.ops.Models.alsRecommendFromFactors(inter, pu, qi,
+        "o_custkey", "l_partkey", nUsers = 5, k = 3)
+    })(
+      alsRecommendOracle(2, 5, 3)),
+  )
+
+  /** The q_gbt_stumps oracle: `rounds` boosting rounds unrolled as a
+    * MATERIALIZED-CTE chain (same generator pattern as q_bpe_merges). Each
+    * round scores every (feature, distinct value) candidate split by
+    * variance reduction over the current residuals, takes the
+    * (gain DESC, feature, value) argmax, quantizes the leaf means to the
+    * dyadic 2^-10 grid, and folds the stump into the running prediction.
+    * The integer-valued y + dyadic leaves/lr keep every sum exact, so the
+    * float argmax agrees with Spark bit-for-bit.
+    */
+  private def gbtStumpsOracle(rounds: Int, lr: Double): String = {
+    val baseArm = "SELECT 0 AS boost_round, '__base' AS feature, " +
+      "CAST(NULL AS DOUBLE) AS threshold, round(f, 6) AS leaf_left, " +
+      "round(f, 6) AS leaf_right, CAST(NULL AS DOUBLE) AS gain FROM f0"
+    val unionArms = (baseArm +: (1 to rounds).map(r =>
+      s"SELECT $r AS boost_round, feature, t AS threshold, " +
+        s"round(ml, 6) AS leaf_left, round(mr, 6) AS leaf_right, " +
+        s"round(gain, 4) AS gain FROM b$r")).mkString("\nUNION ALL ")
+    s"""${gbtChainSql(rounds, lr)}
+       |$unionArms
+       |ORDER BY boost_round""".stripMargin
+  }
+
+  /** The q_gbt_score oracle: score with the PUBLISHED (printf-rounded)
+    * model — the generator spells the prediction as the same left-to-right
+    * additive fold Spark's scorer evaluates (base, then each round's
+    * lr-scaled stump over the rounded leaves), then groups the bounded
+    * prediction domain.
+    */
+  private def gbtScoreOracle(rounds: Int, lr: Double): String = {
+    val terms = (1 to rounds).map(r =>
+      s"""   + $lr * (CASE WHEN (CASE WHEN b$r.feature = 'l_quantity'
+         |       THEN d.x1 ELSE d.x2 END) <= b$r.t
+         |       THEN round(b$r.ml, 6) ELSE round(b$r.mr, 6) END)"""
+        .stripMargin).mkString("\n")
+    val crosses = (1 to rounds).map(r => s"CROSS JOIN b$r").mkString(" ")
+    s"""${gbtChainSql(rounds, lr)},
+       |sc AS (
+       |  SELECT round(f0.f, 6)
+       |$terms AS prediction
+       |  FROM d CROSS JOIN f0 $crosses)
+       |SELECT prediction, CAST(count(*) AS BIGINT) AS n
+       |FROM sc GROUP BY prediction ORDER BY prediction""".stripMargin
+  }
+
+  /** The q_gbt_pdp oracle: the scoring fold with l_quantity FORCED to
+    * each grid value, then exact (grid, prediction) cell counts and a
+    * pinned-prediction-order weighted mean per grid value.
+    */
+  private def gbtPdpOracle(rounds: Int, lr: Double,
+                           grid: Seq[Double]): String = {
+    val terms = (1 to rounds).map(r =>
+      s"""   + $lr * (CASE WHEN (CASE WHEN b$r.feature = 'l_quantity'
+         |       THEN g.gv ELSE d.x2 END) <= b$r.t
+         |       THEN round(b$r.ml, 6) ELSE round(b$r.mr, 6) END)"""
+        .stripMargin).mkString("\n")
+    val crosses = (1 to rounds).map(r => s"CROSS JOIN b$r").mkString(" ")
+    val gvs = grid.map(g => s"CAST($g AS DOUBLE)").mkString(", ")
+    s"""${gbtChainSql(rounds, lr)},
+       |grid AS (SELECT unnest([$gvs]) AS gv),
+       |sc AS (
+       |  SELECT g.gv, round(f0.f, 6)
+       |$terms AS prediction
+       |  FROM d CROSS JOIN grid g CROSS JOIN f0 $crosses),
+       |cell AS (SELECT gv, prediction, CAST(count(*) AS BIGINT) AS c
+       |         FROM sc GROUP BY 1, 2),
+       |f AS (SELECT gv, prediction, c,
+       |    CAST(sum(c) OVER pin AS BIGINT) AS n,
+       |    sum(prediction * CAST(c AS DOUBLE)) OVER pin AS s,
+       |    row_number() OVER (PARTITION BY gv ORDER BY prediction)
+       |      AS rk
+       |  FROM cell WINDOW pin AS (PARTITION BY gv ORDER BY prediction
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
+       |SELECT 'l_quantity' AS feature, gv AS grid_value, n,
+       |  round(s / CAST(n AS DOUBLE), 6) AS mean_prediction
+       |FROM f WHERE rk = 1 ORDER BY grid_value""".stripMargin
+  }
+
+  /** The q_gbt_perm_importance oracle: md5-bucket rotation permutation
+    * per feature, the published-leaf scoring fold on base and permuted
+    * frames, round-6 RMSEs and the guarded difference.
+    */
+  private def gbtPermImportanceOracle(rounds: Int, lr: Double,
+                                      buckets: Int): String = {
+    def scoreTerms(x1: String, x2: String) = (1 to rounds).map(r =>
+      s"""   + $lr * (CASE WHEN (CASE WHEN b$r.feature = 'l_quantity'
+         |       THEN $x1 ELSE $x2 END) <= b$r.t
+         |       THEN round(b$r.ml, 6) ELSE round(b$r.mr, 6) END)"""
+        .stripMargin).mkString("\n")
+    val crosses = (1 to rounds).map(r => s"CROSS JOIN b$r").mkString(" ")
+    def rmseCte(name: String, src: String, x1: String, x2: String) =
+      s"""$name AS (SELECT round(sqrt(avg((y - prediction) *
+         |      (y - prediction))), 6) AS v FROM (
+         |    SELECT t.y, round(f0.f, 6)
+         |${scoreTerms(s"t.$x1", s"t.$x2")} AS prediction
+         |    FROM $src t CROSS JOIN f0 $crosses))""".stripMargin
+    s"""${gbtChainSql(rounds, lr)},
+       |hsh AS MATERIALIZED (SELECT x1, x2, y,
+       |    md5(CAST(CAST(y AS BIGINT) AS VARCHAR) || '_' ||
+       |        CAST(CAST(x1 AS BIGINT) AS VARCHAR) || '_' ||
+       |        CAST(CAST(round(x2 * 100) AS BIGINT) AS VARCHAR)) AS hh
+       |  FROM d),
+       |k AS MATERIALIZED (SELECT *,
+       |    CAST('0x' || substr(hh, 1, 15) AS BIGINT) % $buckets AS b
+       |  FROM hsh),
+       |r AS MATERIALIZED (SELECT *,
+       |    row_number() OVER (PARTITION BY b ORDER BY hh) AS rn,
+       |    count(*) OVER (PARTITION BY b) AS cnt
+       |  FROM k),
+       |p1 AS (SELECT a.y, don.x1 AS x1, a.x2
+       |       FROM r a JOIN r don ON don.b = a.b
+       |         AND don.rn = a.rn % a.cnt + 1),
+       |p2 AS (SELECT a.y, a.x1, don.x2 AS x2
+       |       FROM r a JOIN r don ON don.b = a.b
+       |         AND don.rn = a.rn % a.cnt + 1),
+       |${rmseCte("rb", "r", "x1", "x2")},
+       |${rmseCte("r1", "p1", "x1", "x2")},
+       |${rmseCte("r2", "p2", "x1", "x2")}
+       |SELECT f AS feature, rb.v AS rmse_base,
+       |  CASE f WHEN 'l_discount' THEN r2.v ELSE r1.v END AS rmse_perm,
+       |  round((CASE f WHEN 'l_discount' THEN r2.v ELSE r1.v END)
+       |    - rb.v, 6) + 0.0 AS importance
+       |FROM (SELECT unnest(['l_discount', 'l_quantity']) AS f)
+       |CROSS JOIN rb CROSS JOIN r1 CROSS JOIN r2
+       |ORDER BY feature""".stripMargin
+  }
+
+  /** The q_gbt_eval oracle rides the same boosting chain: the final
+    * state s&#36;rounds carries every row's fitted prediction, so the
+    * regression summary is one aggregate over it (ȳ via a scalar cross,
+    * same operand order as the Spark side).
+    */
+  private def gbtEvalOracle(rounds: Int, lr: Double): String =
+    s"""${gbtChainSql(rounds, lr)}
+       |SELECT CAST(count(*) AS BIGINT) AS n,
+       |  round(sqrt(avg((y - fhat) * (y - fhat))), 6) AS rmse,
+       |  round(avg(abs(y - fhat)), 6) AS mae,
+       |  round(1.0 - sum((y - fhat) * (y - fhat))
+       |            / sum((y - ybar) * (y - ybar)), 6) AS r2
+       |FROM s$rounds CROSS JOIN
+       |  (SELECT avg(y) AS ybar FROM s$rounds) m""".stripMargin
+
+  /** Shared q_gbt_* boosting chain: base frame, F0, `rounds` split/merge
+    * blocks ending at state s&#36;rounds. */
+  private def gbtChainSql(rounds: Int, lr: Double): String = {
+    val roundBlocks = (1 to rounds).map { r =>
+      val p = r - 1
+      s"""g$r AS MATERIALIZED (
+         |  SELECT feature, v, sum(s) OVER w1 AS sl, sum(c) OVER w1 AS cl,
+         |         sum(s) OVER w2 AS st, sum(c) OVER w2 AS ct
+         |  FROM (
+         |    SELECT 'l_quantity' AS feature, x1 AS v,
+         |           sum(y - fhat) AS s, CAST(count(*) AS BIGINT) AS c
+         |    FROM s$p GROUP BY x1
+         |    UNION ALL
+         |    SELECT 'l_discount', x2, sum(y - fhat),
+         |           CAST(count(*) AS BIGINT)
+         |    FROM s$p GROUP BY x2)
+         |  WINDOW w1 AS (PARTITION BY feature ORDER BY v),
+         |         w2 AS (PARTITION BY feature)),
+         |b$r AS MATERIALIZED (
+         |  SELECT feature, v AS t,
+         |         floor(sl / cl * 1024) / 1024 AS ml,
+         |         floor((st - sl) / (ct - cl) * 1024) / 1024 AS mr,
+         |         sl * sl / cl + (st - sl) * (st - sl) / (ct - cl) AS gain
+         |  FROM g$r WHERE cl < ct
+         |  ORDER BY gain DESC, feature, v LIMIT 1),
+         |s$r AS MATERIALIZED (
+         |  SELECT s.x1, s.x2, s.y,
+         |         s.fhat + $lr * (CASE WHEN
+         |             (CASE WHEN b.feature = 'l_quantity' THEN s.x1
+         |                   ELSE s.x2 END) <= b.t
+         |           THEN b.ml ELSE b.mr END) AS fhat
+         |  FROM s$p s CROSS JOIN b$r b)""".stripMargin
+    }
+    s"""WITH d AS MATERIALIZED (
+       |  SELECT CAST(l_quantity AS DOUBLE) AS x1,
+       |         CAST(l_discount AS DOUBLE) AS x2,
+       |         CAST(round(l_extendedprice) AS DOUBLE) AS y
+       |  FROM lineitem),
+       |f0 AS MATERIALIZED (
+       |  SELECT floor(avg(y) * 1024) / 1024 AS f FROM d),
+       |s0 AS MATERIALIZED (
+       |  SELECT d.x1, d.x2, d.y, f.f AS fhat FROM d CROSS JOIN f0 f),
+       |${roundBlocks.mkString(",\n")}""".stripMargin
+  }
+
+  /** The q_gbt_depth2 oracle: the depth-2 boosting recursion unrolled —
+    * per round, the root split (the gbtChainSql g/b blocks), a sided
+    * frame, the branch-keyed candidate scan with per-(side, feature)
+    * windows, a per-side QUALIFY argmax, quantized side-mean fallbacks
+    * for collapsed branches, and the 4-leaf prediction fold. Identical
+    * dyadic discipline as the stumps chain, so every argmax and leaf
+    * agrees with Spark bit-for-bit.
+    */
+  private def gbtDepth2ChainSql(rounds: Int, lr: Double): String = {
+    def disp(f: String): String =
+      s"(CASE WHEN $f = 'l_quantity' THEN s.x1 ELSE s.x2 END)"
+    val roundBlocks = (1 to rounds).map { r =>
+      val p = r - 1
+      s"""g$r AS MATERIALIZED (
+         |  SELECT feature, v, sum(s) OVER w1 AS sl, sum(c) OVER w1 AS cl,
+         |         sum(s) OVER w2 AS st, sum(c) OVER w2 AS ct
+         |  FROM (
+         |    SELECT 'l_quantity' AS feature, x1 AS v,
+         |           sum(y - fhat) AS s, CAST(count(*) AS BIGINT) AS c
+         |    FROM s$p GROUP BY x1
+         |    UNION ALL
+         |    SELECT 'l_discount', x2, sum(y - fhat),
+         |           CAST(count(*) AS BIGINT)
+         |    FROM s$p GROUP BY x2)
+         |  WINDOW w1 AS (PARTITION BY feature ORDER BY v),
+         |         w2 AS (PARTITION BY feature)),
+         |b$r AS MATERIALIZED (
+         |  SELECT feature, v AS t,
+         |         sl * sl / cl + (st - sl) * (st - sl) / (ct - cl) AS gain
+         |  FROM g$r WHERE cl < ct
+         |  ORDER BY gain DESC, feature, v LIMIT 1),
+         |sd$r AS MATERIALIZED (
+         |  SELECT s.x1, s.x2, s.y, s.fhat,
+         |         CASE WHEN ${disp("b.feature")} <= b.t
+         |           THEN 'L' ELSE 'R' END AS side
+         |  FROM s$p s CROSS JOIN b$r b),
+         |h$r AS MATERIALIZED (
+         |  SELECT side, feature, v,
+         |         sum(s) OVER w1 AS sl, sum(c) OVER w1 AS cl,
+         |         sum(s) OVER w2 AS st, sum(c) OVER w2 AS ct
+         |  FROM (
+         |    SELECT side, 'l_quantity' AS feature, x1 AS v,
+         |           sum(y - fhat) AS s, CAST(count(*) AS BIGINT) AS c
+         |    FROM sd$r GROUP BY side, x1
+         |    UNION ALL
+         |    SELECT side, 'l_discount', x2, sum(y - fhat),
+         |           CAST(count(*) AS BIGINT)
+         |    FROM sd$r GROUP BY side, x2)
+         |  WINDOW w1 AS (PARTITION BY side, feature ORDER BY v),
+         |         w2 AS (PARTITION BY side, feature)),
+         |bb$r AS MATERIALIZED (
+         |  SELECT side, feature AS bf, v AS bt,
+         |         floor(sl / cl * 1024) / 1024 AS ml,
+         |         floor((st - sl) / (ct - cl) * 1024) / 1024 AS mr,
+         |         gain AS bg
+         |  FROM (SELECT *, sl * sl / cl
+         |            + (st - sl) * (st - sl) / (ct - cl) AS gain
+         |        FROM h$r WHERE cl < ct)
+         |  QUALIFY row_number() OVER (PARTITION BY side
+         |    ORDER BY gain DESC, feature, v) = 1),
+         |sm$r AS MATERIALIZED (
+         |  SELECT side,
+         |         floor(sum(y - fhat) / count(*) * 1024) / 1024 AS bm
+         |  FROM sd$r GROUP BY side),
+         |tr$r AS MATERIALIZED (
+         |  SELECT b.feature AS ft, b.t, b.gain AS g,
+         |         l.bf AS lf, l.bt AS lt,
+         |         COALESCE(l.ml, l.bm) AS lml, COALESCE(l.mr, l.bm) AS lmr,
+         |         l.bg AS lg,
+         |         q.bf AS rf, q.bt AS rt,
+         |         COALESCE(q.ml, q.bm) AS rml, COALESCE(q.mr, q.bm) AS rmr,
+         |         q.bg AS rg
+         |  FROM b$r b
+         |  CROSS JOIN (SELECT m.bm, x.bf, x.bt, x.ml, x.mr, x.bg
+         |              FROM sm$r m LEFT JOIN bb$r x ON x.side = m.side
+         |              WHERE m.side = 'L') l
+         |  CROSS JOIN (SELECT m.bm, x.bf, x.bt, x.ml, x.mr, x.bg
+         |              FROM sm$r m LEFT JOIN bb$r x ON x.side = m.side
+         |              WHERE m.side = 'R') q),
+         |s$r AS MATERIALIZED (
+         |  SELECT s.x1, s.x2, s.y,
+         |         s.fhat + $lr * (CASE WHEN ${disp("t.ft")} <= t.t
+         |           THEN (CASE WHEN ${disp("t.lf")} <= t.lt
+         |                 THEN t.lml ELSE t.lmr END)
+         |           ELSE (CASE WHEN ${disp("t.rf")} <= t.rt
+         |                 THEN t.rml ELSE t.rmr END) END) AS fhat
+         |  FROM s$p s CROSS JOIN tr$r t)""".stripMargin
+    }
+    s"""WITH d AS MATERIALIZED (
+       |  SELECT CAST(l_quantity AS DOUBLE) AS x1,
+       |         CAST(l_discount AS DOUBLE) AS x2,
+       |         CAST(round(l_extendedprice) AS DOUBLE) AS y
+       |  FROM lineitem),
+       |f0 AS MATERIALIZED (
+       |  SELECT floor(avg(y) * 1024) / 1024 AS f FROM d),
+       |s0 AS MATERIALIZED (
+       |  SELECT d.x1, d.x2, d.y, f.f AS fhat FROM d CROSS JOIN f0 f),
+       |${roundBlocks.mkString(",\n")}""".stripMargin
+  }
+
+  private def gbtDepth2Oracle(rounds: Int, lr: Double): String = {
+    val baseArm = "SELECT 0 AS boost_round, 'base' AS node, " +
+      "'__base' AS feature, CAST(NULL AS DOUBLE) AS threshold, " +
+      "round(f, 6) AS leaf_left, round(f, 6) AS leaf_right, " +
+      "CAST(NULL AS DOUBLE) AS gain FROM f0"
+    val arms = baseArm +: (1 to rounds).flatMap(r => Seq(
+      s"SELECT $r, 'root', ft, t, CAST(NULL AS DOUBLE), " +
+        s"CAST(NULL AS DOUBLE), round(g, 4) FROM tr$r",
+      s"SELECT $r, 'left', lf, lt, round(lml, 6), round(lmr, 6), " +
+        s"round(lg, 4) FROM tr$r",
+      s"SELECT $r, 'right', rf, rt, round(rml, 6), round(rmr, 6), " +
+        s"round(rg, 4) FROM tr$r"))
+    s"""${gbtDepth2ChainSql(rounds, lr)}
+       |${arms.mkString("\nUNION ALL ")}
+       |ORDER BY boost_round, node""".stripMargin
+  }
+
+  /** The q_gbt_depth2_score oracle: score with the PUBLISHED
+    * (printf-rounded) depth-2 model — the same additive fold
+    * Models.scoreTrees2 evaluates, each round a two-level CASE over
+    * the round-6 leaves, then the bounded prediction domain grouped.
+    */
+  private def gbtDepth2ScoreOracle(rounds: Int, lr: Double): String = {
+    def disp(r: Int, f: String): String =
+      s"(CASE WHEN tr$r.$f = 'l_quantity' THEN d.x1 ELSE d.x2 END)"
+    val terms = (1 to rounds).map(r =>
+      s"""   + $lr * (CASE WHEN ${disp(r, "ft")} <= tr$r.t
+         |       THEN (CASE WHEN ${disp(r, "lf")} <= tr$r.lt
+         |             THEN round(tr$r.lml, 6) ELSE round(tr$r.lmr, 6) END)
+         |       ELSE (CASE WHEN ${disp(r, "rf")} <= tr$r.rt
+         |             THEN round(tr$r.rml, 6) ELSE round(tr$r.rmr, 6) END)
+         |       END)""".stripMargin).mkString("\n")
+    val crosses = (1 to rounds).map(r => s"CROSS JOIN tr$r").mkString(" ")
+    s"""${gbtDepth2ChainSql(rounds, lr)},
+       |sc AS (
+       |  SELECT round(f0.f, 6)
+       |$terms AS prediction
+       |  FROM d CROSS JOIN f0 $crosses)
+       |SELECT prediction, CAST(count(*) AS BIGINT) AS n
+       |FROM sc GROUP BY prediction ORDER BY prediction""".stripMargin
+  }
+
+  /** The q_gbt_importance oracle: the depth-2 chain's published split
+    * rows (round-4 gains, NULL features/gains excluded), folded in the
+    * same pinned (round, node) order as Models.featureImportance.
+    */
+  private def gbtImportanceOracle(rounds: Int, lr: Double): String = {
+    val arms = (1 to rounds).flatMap(r => Seq(
+      s"SELECT $r AS boost_round, 'root' AS node, ft AS feature, " +
+        s"round(g, 4) AS gain FROM tr$r",
+      s"SELECT $r, 'left', lf, round(lg, 4) FROM tr$r",
+      s"SELECT $r, 'right', rf, round(rg, 4) FROM tr$r"))
+    s"""${gbtDepth2ChainSql(rounds, lr)},
+       |sp AS (SELECT * FROM (${arms.mkString("\nUNION ALL ")})
+       |       WHERE feature IS NOT NULL AND gain IS NOT NULL),
+       |pf AS (SELECT feature, CAST(count(*) AS BIGINT) AS n_splits,
+       |         max(g2) AS g FROM (
+       |           SELECT *, sum(gain) OVER (PARTITION BY feature
+       |             ORDER BY boost_round, node
+       |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
+       |             FOLLOWING) AS g2
+       |           FROM sp) GROUP BY 1)
+       |SELECT feature, n_splits, round(g, 4) AS total_gain,
+       |  round(CASE WHEN sum(g) OVER w <> 0 THEN g / sum(g) OVER w END,
+       |    6) AS gain_share
+       |FROM pf
+       |WINDOW w AS (ORDER BY feature
+       |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+       |ORDER BY feature""".stripMargin
+  }
+
+  /** The q_gbt_depth2_eval oracle rides the depth-2 chain: the final
+    * state carries every row's fitted prediction, one aggregate closes
+    * the summary (same spelling as gbtEvalOracle).
+    */
+  private def gbtDepth2EvalOracle(rounds: Int, lr: Double): String =
+    s"""${gbtDepth2ChainSql(rounds, lr)}
+       |SELECT CAST(count(*) AS BIGINT) AS n,
+       |  round(sqrt(avg((y - fhat) * (y - fhat))), 6) AS rmse,
+       |  round(avg(abs(y - fhat)), 6) AS mae,
+       |  round(1.0 - sum((y - fhat) * (y - fhat))
+       |            / sum((y - ybar) * (y - ybar)), 6) AS r2
+       |FROM s$rounds CROSS JOIN
+       |  (SELECT avg(y) AS ybar FROM s$rounds) m""".stripMargin
+
+  /** The q_sarima_lite oracle: the q_ar_forecast chain run over the
+    * seasonally differenced series (lag-`period` difference CTE first),
+    * p = 2 Cramer solve spelled IDENTICALLY to Models.sarimaLite, the
+    * `horizon` forecast recursion unrolled, and the integration anchors
+    * (last `period` observed values, reverse-indexed) joined on step.
+    */
+  private def sarimaLiteOracle(period: Int, horizon: Int): String = {
+    val rChain = (3 to horizon).map { k =>
+      s"r$k AS (SELECT *, a1 * f${k - 1} + a2 * f${k - 2} AS f$k " +
+        s"FROM r${k - 1})"
+    }
+    val last = s"r$horizon"
+    val steps = (1 to horizon).map(k =>
+      s"SELECT $k AS k, f$k AS f FROM $last")
+    s"""WITH series AS (
+       |  SELECT o_orderdate AS day, round(sum(o_totalprice), 2) AS total
+       |  FROM orders GROUP BY 1),
+       |sd AS (SELECT day, total,
+       |         lag(total, $period) OVER (ORDER BY day) AS prev
+       |       FROM series),
+       |dz AS (SELECT day, total - prev AS sdiff FROM sd
+       |       WHERE prev IS NOT NULL),
+       |st AS (SELECT avg(sdiff) AS m, stddev_samp(sdiff) AS sd
+       |       FROM dz),
+       |z AS (SELECT day, (sdiff - m) / sd AS z FROM dz, st),
+       |lagged AS (SELECT day, z,
+       |    lag(z, 1) OVER (ORDER BY day) AS z1,
+       |    lag(z, 2) OVER (ORDER BY day) AS z2 FROM z),
+       |sums AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+       |    sum(z * z) AS s0, sum(z * z1) AS s1, sum(z * z2) AS s2
+       |  FROM lagged),
+       |cv AS (SELECT n, s0 / n AS c0, s1 / n AS c1, s2 / n AS c2
+       |       FROM sums),
+       |dt AS (SELECT n, c0, c1, c2, c0 * c0 - c1 * c1 AS det FROM cv),
+       |ab AS (SELECT n,
+       |    (c1 * c0 - c1 * c2) / det AS a1,
+       |    (c0 * c2 - c1 * c1) / det AS a2
+       |  FROM dt),
+       |anchz AS (SELECT z AS zl1, z1 AS zl2 FROM lagged
+       |          WHERE day = (SELECT max(day) FROM lagged)),
+       |one AS (SELECT a1, a2, n, zl1, zl2, m, sd FROM ab, anchz, st),
+       |r1 AS (SELECT *, a1 * zl1 + a2 * zl2 AS f1 FROM one),
+       |r2 AS (SELECT *, a1 * f1 + a2 * zl1 AS f2 FROM r1),
+       |${rChain.mkString(",\n")},
+       |steps AS (
+       |  ${steps.mkString("\n  UNION ALL ")}),
+       |anchy AS (
+       |  SELECT CAST($period - ri + 1 AS INTEGER) AS k, total AS anchor
+       |  FROM (SELECT total,
+       |          row_number() OVER (ORDER BY day DESC) AS ri
+       |        FROM series) WHERE ri <= $period)
+       |SELECT CAST(s.k AS INTEGER) AS step,
+       |  CAST(r.n AS BIGINT) AS n_obs,
+       |  round(r.a1, 6) + 0.0 AS a1,
+       |  round(r.a2, 6) + 0.0 AS a2,
+       |  round(s.f, 6) + 0.0 AS z_next,
+       |  round(r.m + r.sd * s.f, 2) + 0.0 AS sdiff_next,
+       |  round(a.anchor + (round(r.m + r.sd * s.f, 2) + 0.0), 2) + 0.0
+       |    AS forecast
+       |FROM steps s CROSS JOIN $last r JOIN anchy a ON a.k = s.k
+       |ORDER BY step""".stripMargin
+  }
+
+  /** Unrolled-CTE oracle for q_als: md5 dyadic item-factor init, then
+    * per round a user-side and an item-side ridge 2×2 solve (5 exact
+    * moment sums, one correctly-rounded division, floor back onto the
+    * 2^-12 lattice) plus a grid-floored RMSE pass — the alsFactorize
+    * dyadic discipline replayed expression-for-expression.
+    */
+  private def alsOracle(rounds: Int): String = {
+    def solveCte(name: String, src: String, key: String,
+                 other: String): String =
+      s"""$name AS (SELECT $key,
+         |    floor(((s22 + 0.125) * b1 - s12 * b2)
+         |      / ((s11 + 0.125) * (s22 + 0.125) - s12 * s12)
+         |      * 4096.0) / 4096.0 AS f1,
+         |    floor(((s11 + 0.125) * b2 - s12 * b1)
+         |      / ((s11 + 0.125) * (s22 + 0.125) - s12 * s12)
+         |      * 4096.0) / 4096.0 AS f2
+         |  FROM (SELECT inter.$key,
+         |      sum(f.f1 * f.f1) AS s11, sum(f.f1 * f.f2) AS s12,
+         |      sum(f.f2 * f.f2) AS s22, sum(f.f1 * r) AS b1,
+         |      sum(f.f2 * r) AS b2
+         |    FROM inter JOIN $src f ON f.$other = inter.$other
+         |    GROUP BY 1))""".stripMargin
+    val roundCtes = (1 to rounds).map { k =>
+      s"""${solveCte(s"pf$k", if (k == 1) "qf0" else s"qf${k - 1}",
+           "u", "i")},
+         |${solveCte(s"qf$k", s"pf$k", "i", "u")},
+         |e$k AS (SELECT floor((r - (pa.f1 * qa.f1 + pa.f2 * qa.f2))
+         |      * (r - (pa.f1 * qa.f1 + pa.f2 * qa.f2))
+         |      * 1048576.0) / 1048576.0 AS e2
+         |  FROM inter JOIN pf$k pa ON pa.u = inter.u
+         |  JOIN qf$k qa ON qa.i = inter.i),
+         |rr$k AS (SELECT round(sqrt(sum(e2)
+         |    / CAST(count(*) AS DOUBLE)), 6) AS rmse_r$k FROM e$k)"""
+        .stripMargin
+    }.mkString(",\n")
+    s"""WITH inter AS (SELECT o_custkey AS u, l_partkey AS i,
+       |    sum(CAST(l_quantity AS DOUBLE)) AS r
+       |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
+       |  GROUP BY 1, 2),
+       |qf0 AS (SELECT i,
+       |    CAST(CAST('0x' || substr(md5('als1_' || CAST(i AS VARCHAR)),
+       |      1, 15) AS BIGINT) % 4096 AS DOUBLE) / 4096.0 AS f1,
+       |    CAST(CAST('0x' || substr(md5('als2_' || CAST(i AS VARCHAR)),
+       |      1, 15) AS BIGINT) % 4096 AS DOUBLE) / 4096.0 AS f2
+       |  FROM (SELECT DISTINCT i FROM inter)),
+       |$roundCtes,
+       |c AS (SELECT CAST(count(*) AS BIGINT) AS n_interactions,
+       |    CAST(count(DISTINCT u) AS BIGINT) AS n_users,
+       |    CAST(count(DISTINCT i) AS BIGINT) AS n_items FROM inter)
+       |SELECT n_interactions, n_users, n_items,
+       |  ${(1 to rounds).map(k => s"rmse_r$k").mkString(", ")}
+       |FROM c ${(1 to rounds).map(k => s"CROSS JOIN rr$k")
+         .mkString(" ")}""".stripMargin
+  }
+
+  /** Oracle for q_als_recommend: the [[alsOracle]] chain's WITH body up
+    * to the final factors, then the md5 user panel, unseen-candidate
+    * cross, and per-user (score DESC, i) ranking cut.
+    */
+  private def alsRecommendOracle(rounds: Int, nUsers: Int,
+                                 k: Int): String = {
+    val chain = alsOracle(rounds)
+    val body = chain.substring(0, chain.indexOf(",\nc AS (SELECT"))
+    s"""$body,
+       |pan AS (SELECT u, f1 AS pa, f2 AS pb FROM pf$rounds
+       |  ORDER BY CAST('0x' || substr(md5('alsu_' ||
+       |    CAST(u AS VARCHAR)), 1, 15) AS BIGINT), u LIMIT $nUsers),
+       |cand AS (SELECT pan.u, q.i,
+       |    pan.pa * q.f1 + pan.pb * q.f2 AS score
+       |  FROM pan CROSS JOIN qf$rounds q
+       |  WHERE NOT EXISTS (SELECT 1 FROM inter x
+       |    WHERE x.u = pan.u AND x.i = q.i)),
+       |rk AS (SELECT u, i, score, row_number() OVER (PARTITION BY u
+       |    ORDER BY score DESC, i) AS rnk FROM cand)
+       |SELECT u, CAST(rnk AS INTEGER) AS rank, i,
+       |  round(score, 6) AS score
+       |FROM rk WHERE rnk <= $k ORDER BY u, rank""".stripMargin
+  }
+
+  /** Published rank-2 ALS factor frames over the customer×part
+    * quantity matrix (the q_als fit): the serve gate reads the (key, f1,
+    * f2) parquet parameter tables — lattice doubles, bit-exact through
+    * the round trip — instead of re-running the 2-round alternation.
+    * The fit chain stays measured LIVE in q_als (fit + per-round RMSE
+    * receipts, one lineage).
+    */
+  private def alsFactorTables(s: SparkSession,
+                              d: String): (DataFrame, DataFrame) = {
+    val base = Artifacts.publish("als_pub", d) { p =>
+      import org.apache.spark.sql.functions.col
+      val inter = Tables.lineitem(s, d)
+        .join(Tables.orders(s, d),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey"), col("l_partkey"), col("l_quantity"))
+      val (pu, qi) = graft.ops.Models.alsFactors(inter, "o_custkey",
+        "l_partkey", "l_quantity")
+      graft.ops.Models.saveModel(pu, p + "/p")
+      graft.ops.Models.saveModel(qi, p + "/q")
+    }
+    (graft.ops.Models.loadModel(s, base + "/p"),
+      graft.ops.Models.loadModel(s, base + "/q"))
+  }
+
+  /** The shared q_gbt_* feature frame: integer-rounded price target,
+    * quantity/discount features. */
+  private def gbtLiFrame(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    Tables.lineitem(s, d).select(
+      round(col("l_extendedprice")).cast("double").as("y"),
+      col("l_quantity").cast("double").as("l_quantity"),
+      col("l_discount").cast("double").as("l_discount"))
+  }
+
+  /** Published boosted-model parameter tables — the q_gbt_* battery.
+    * Round-15's honest sink exposed that FIVE gates re-ran the identical
+    * depth-2 fit chain (three corpus scans per round) per bench pass;
+    * production ships ONE fitted model and every consumer (scorer,
+    * importance, PDP, permutation) reads the parameter table. The eval
+    * gates keep the full fit chain measured live (fit → eval is one
+    * lineage over the UNROUNDED internal predictions — the
+    * residual-decay semantics — so they are the family's live-fit
+    * receipts).
+    */
+  private def gbtStumpsModel(s: SparkSession, d: String): DataFrame =
+    published(s, d, "gbt_stumps")(graft.ops.Models.boostedStumps(
+      gbtLiFrame(s, d), "y", Seq("l_quantity", "l_discount"),
+      rounds = 3, lr = 0.5))
+
+  private def gbtTrees2Model(s: SparkSession, d: String): DataFrame =
+    published(s, d, "gbt_trees2")(graft.ops.Models.boostedTrees2(
+      gbtLiFrame(s, d), "y", Seq("l_quantity", "l_discount"),
+      rounds = 3, lr = 0.5))
+
+  /** The q_mmr_select oracle: the q_model_score relevance CTE (rounded
+    * sigmoid over the md5 demo weights), then k unrolled greedy rounds —
+    * each excludes the selected set, takes the max cosine to any
+    * selected vector, and argmaxes 0.5·rel − 0.5·maxSim under the
+    * (score DESC, vec_id) total order. Every score input is
+    * deterministic (rel rounded to 6; cosines are the same sequential
+    * dot/norm spelling both engines), so the greedy path is identical.
+    */
+  private def mmrSelectOracle(k: Int): String = {
+    def cos(a: String, b: String): String =
+      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
+        s"* sqrt(list_dot_product($b, $b)))"
+    val rounds = (2 to k).map { r =>
+      val p = r - 1
+      s"""m$r AS (SELECT c.vec_id, max(${cos("c.v", "s.v")}) AS ms
+         |  FROM rel c, sel$p sl JOIN rel s ON s.vec_id = sl.vec_id
+         |  WHERE c.vec_id NOT IN (SELECT vec_id FROM sel$p)
+         |  GROUP BY c.vec_id),
+         |p$r AS MATERIALIZED (SELECT m.vec_id, r.rel,
+         |    0.5 * r.rel - 0.5 * m.ms AS score
+         |  FROM m$r m JOIN rel r ON r.vec_id = m.vec_id
+         |  ORDER BY score DESC, m.vec_id LIMIT 1),
+         |sel$r AS MATERIALIZED (SELECT vec_id FROM sel$p
+         |  UNION ALL SELECT vec_id FROM p$r)""".stripMargin
+    }
+    val outs = (1 to k).map(r =>
+      s"SELECT $r AS rank, vec_id, rel AS relevance, " +
+        s"round(score, 6) AS mmr_score FROM p$r")
+    s"""WITH u AS MATERIALIZED (
+       |  SELECT vec_id,
+       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  FROM embeddings),
+       |w AS (SELECT list_transform(range(64), d ->
+       |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+       |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+       |rel AS MATERIALIZED (
+       |  SELECT vec_id, v,
+       |    round(1.0 / (1.0 + exp(-(list_dot_product(v, wv) + 0.1))),
+       |      6) AS rel
+       |  FROM u CROSS JOIN w),
+       |p1 AS MATERIALIZED (
+       |  SELECT vec_id, rel, 0.5 * rel AS score FROM rel
+       |  ORDER BY score DESC, vec_id LIMIT 1),
+       |sel1 AS MATERIALIZED (SELECT vec_id FROM p1),
+       |${rounds.mkString(",\n")}
+       |${outs.mkString("\nUNION ALL\n")}
+       |ORDER BY rank""".stripMargin
+  }
+}

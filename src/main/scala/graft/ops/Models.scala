@@ -1782,10 +1782,18 @@ object Models {
                    rounds: Int = 2, lambda: Double = 0.125,
                    gridBits: Int = 12, seed: String = "als")
       : DataFrame = {
+    requireServeArgs(nUsers, k)
     val (inter, p, q, _) = alsCore(inter0, userCol, itemCol, ratingCol,
       rounds, lambda, gridBits, seed)
     alsRecommendCore(inter, p, q, nUsers, k, seed)
   }
+
+  /** The serve-path argument bounds, checked before anything runs: the
+    * fit behind [[alsRecommend]] submits eager checkpoint jobs.
+    */
+  private def requireServeArgs(nUsers: Int, k: Int): Unit =
+    require(nUsers >= 1 && nUsers <= 64 && k >= 1 && k <= 50,
+      "alsRecommend needs 1 <= nUsers <= 64 and 1 <= k <= 50")
 
   /** The serving tail of [[alsRecommend]] given the fitted factor
     * frames — the consume half of the fit → serve seam: `p` (u, f1,
@@ -1795,11 +1803,9 @@ object Models {
     * deduped (u, i) interaction table the left_anti seen-filter
     * needs — the interaction store a serving layer keeps regardless.
     */
-  private[ops] def alsRecommendCore(inter: DataFrame, p: DataFrame,
-                                    q: DataFrame, nUsers: Int, k: Int,
-                                    seed: String): DataFrame = {
-    require(nUsers >= 1 && nUsers <= 64 && k >= 1 && k <= 50,
-      "alsRecommend needs 1 <= nUsers <= 64 and 1 <= k <= 50")
+  private def alsRecommendCore(inter: DataFrame, p: DataFrame,
+                               q: DataFrame, nUsers: Int, k: Int,
+                               seed: String): DataFrame = {
     val panel = broadcast(p
       .withColumn("__h", Dedup.h60(concat(lit(s"${seed}u_"),
         col("u").cast("string"))))
@@ -1832,6 +1838,7 @@ object Models {
                               itemCol: String, nUsers: Int = 5,
                               k: Int = 3, seed: String = "als")
       : DataFrame = {
+    requireServeArgs(nUsers, k)
     val inter = inter0
       .select(col(userCol).as("u"), col(itemCol).as("i")).distinct()
     alsRecommendCore(inter,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -233,6 +233,16 @@ object Similarity {
       .orderBy("key", "d")
   }
 
+  /** The `field` of the `__cands` entry the native `kernel` (nearest_cos
+    * or nearest_l2) picks for vector column `vec`. A null vector falls
+    * back to the first candidate (the smallest key); an empty candidate
+    * array gives NULL.
+    */
+  private def nearestOrFirst(kernel: String, vec: String,
+                             field: String): Column =
+    coalesce(call_function(kernel, col(vec), col("__cands")),
+      get(col("__cands"), lit(0)).getField(field))
+
   /** IVF coarse quantizer: k-means cells over the corpus, trained with a
     * few Lloyd iterations as plain DataFrame jobs. Seeds are the k
     * corpus vectors with the smallest md5(id) — deterministic, no RNG
@@ -254,6 +264,7 @@ object Similarity {
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                    nCells: Int, iters: Int = 3,
                    grid: Option[Int] = None): DataFrame = {
+    require(nCells >= 1, "ivfCentroids needs nCells >= 1")
     require(grid.forall(g => g > 0 && (g & (g - 1)) == 0),
       "ivfCentroids grid must be a power of two")
     val spark = corpus.sparkSession
@@ -288,9 +299,7 @@ object Similarity {
         struct(col("cell").cast("long").as("cell"), col("cvec"))))
         .as("__cands")))
       val assigned = base.crossJoin(cands)
-        .select(coalesce(
-          call_function("nearest_cos", col("__v"), col("__cands")),
-          element_at(col("__cands"), 1).getField("cell")).as("cell"),
+        .select(nearestOrFirst("nearest_cos", "__v", "cell").as("cell"),
           col("__v"))
       val mean = grid match {
         case Some(g) => floor(avg(col("x")) * g) / g
@@ -344,9 +353,8 @@ object Similarity {
       df.select(col(idCol).as(outId),
           transform(col(vecCol), x => x.cast("double")).as("__v"))
         .crossJoin(cands)
-        .select(col(outId), coalesce(
-          call_function("nearest_cos", col("__v"), col("__cands")),
-          element_at(col("__cands"), 1).getField("cell")).as("cell"))
+        .select(col(outId),
+          nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
     } else {
       val w = Window.partitionBy("__id")
         .orderBy(col("__cos").desc, col("cell"))
@@ -725,9 +733,8 @@ object Similarity {
         sort_array(collect_list(struct(col("code"), col("cvec"))))
           .as("__cands")))
       val assigned = sub.join(cands, "__m")
-        .select(col("__m"), coalesce(
-          call_function("nearest_l2", col("__sv"), col("__cands")),
-          element_at(col("__cands"), 1).getField("code")).as("code"),
+        .select(col("__m"),
+          nearestOrFirst("nearest_l2", "__sv", "code").as("code"),
           col("__sv"))
       val means = assigned
         .select(col("__m"), col("code"),
@@ -852,9 +859,8 @@ object Similarity {
         .as("__cands")))
     subvectors(corpus, idCol, vecCol, m, grid)
       .join(cands, "__m")
-      .select(col("__id").as("cand_id"), col("__m"), coalesce(
-        call_function("nearest_l2", col("__sv"), col("__cands")),
-        element_at(col("__cands"), 1).getField("code")).as("code"))
+      .select(col("__id").as("cand_id"), col("__m"),
+        nearestOrFirst("nearest_l2", "__sv", "code").as("code"))
   }
 
   /** Per-query ADC lookup table (m·nCodes rows per query, broadcast):
@@ -935,9 +941,8 @@ object Similarity {
     val inv = corpus.select(col(idCol).as("cand_id"),
         transform(col(vecCol), x => x.cast("double")).as("__v"))
       .crossJoin(candsArr)
-      .select(col("cand_id"), coalesce(
-        call_function("nearest_cos", col("__v"), col("__cands")),
-        element_at(col("__cands"), 1).getField("cell")).as("cell"))
+      .select(col("cand_id"),
+        nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
     val prb = rankedCells(queries, "query_id", nps.max)
       .withColumnRenamed("__rk", "cell_rank")
     // each cand sits in ONE cell ⇒ one row per (query, cand) pair, its
@@ -1101,9 +1106,8 @@ object Similarity {
     corpus.select(col(idCol).as("__id"),
         transform(col(vecCol), x => x.cast("double")).as("__v"))
       .crossJoin(cands)
-      .select(col("__id"), col("__v"), coalesce(
-        call_function("nearest_cos", col("__v"), col("__cands")),
-        element_at(col("__cands"), 1).getField("cell")).as("cell"))
+      .select(col("__id"), col("__v"),
+        nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
       .join(broadcast(cents), Seq("cell"))
       .select(col("__id"), col("cell"),
         expr("cosine_sim(__v, cvec)").as("__cos"))

@@ -44,8 +44,7 @@ class BucketSpec extends SparkSpec {
   }
 
   test("date-partitioned gold: a partition-key predicate prunes the scan") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_part").toString + "/events_gold"
+    val dir = tempDir("graft_part").toString + "/events_gold"
     val ev = Tables.events(spark, sfDir)
       .withColumn("day", to_date(col("ts")))
     Tables.writePartitioned(ev, dir, "day")
@@ -69,8 +68,7 @@ class BucketSpec extends SparkSpec {
     // seam must not be parquet-only, and the scan contract (predicates
     // into PushedFilters, projection into a narrow ReadSchema) must hold
     // identically so a format swap keeps the 100 TB scan behavior
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_orc").toString + "/orders_gold"
+    val dir = tempDir("graft_orc").toString + "/orders_gold"
     val orders = Tables.orders(spark, sfDir)
     orders.write.mode("overwrite").orc(dir)
     val q = spark.read.orc(dir)

@@ -24,6 +24,14 @@ class CatalogSpec extends SparkSpec {
       === "timestamp")
   }
 
+  test("Tables.events writes no session conf: the nanos-as-long read " +
+    "setting comes from Graft.session") {
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    val before = spark.conf.getAll
+    Tables.events(spark, sfDir).schema
+    assert(spark.conf.getAll === before)
+  }
+
   // The 31 oracle texts that are pure ANSI (no DuckDB list/regex/lambda
   // dialect) — each must run VERBATIM through spark.sql and reproduce the
   // DataFrame form exactly. This is the S12 depth gate: the SQL entry

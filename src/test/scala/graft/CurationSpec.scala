@@ -678,8 +678,7 @@ class CurationSpec extends SparkSpec {
     val train = docs.filter(col("doc_id") % 7 =!= 0)
     val batch = docs.filter(col("doc_id") % 7 === 0)
     val labeled = graft.ops.Text.qualityFixture.toDF("doc_id", "y", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_flags_rt").toString
+    val dir = tempDir("graft_flags_rt").toString
     graft.ops.Text.lmCountIndex(train, "text")
       .write.mode("overwrite").parquet(dir + "/lm5")
     val idx = spark.read.parquet(dir + "/lm5")

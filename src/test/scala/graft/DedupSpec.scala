@@ -123,7 +123,7 @@ class DedupSpec extends SparkSpec {
       Seq((5L, 7L)))
     assert(hits.head.getDouble(2) === 1.0)
     // the persisted index (S11 parquet parameter table) screens the same
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_idx")
+    val dir = tempDir("graft_mh_idx")
       .resolve("idx").toString
     graft.ops.Models.saveModel(index, dir)
     val viaStore = Dedup.minhashLshPairsAgainstIndex(newDocs,
@@ -595,8 +595,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val live = Dedup.substringSpanIndex(corpus, "doc_id", "text",
       k = 4, minDocs = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("span_idx").toString
+    val dir = tempDir("span_idx").toString
     live.write.mode("overwrite").parquet(dir)
     val reloaded = spark.read.parquet(dir)
     val batch = Seq((10L, "a b c d e f"), (11L, "p q a b c d r s"))
@@ -630,8 +629,7 @@ class DedupSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     // the state round-trips through parquet between epochs (the S11
     // publish shape — what a real ingest loop persists)
-    val dir = java.nio.file.Files
-      .createTempDirectory("span_state").toString
+    val dir = tempDir("span_state").toString
     Dedup.substringSpanState(old_, "doc_id", "text", k = 4)
       .write.mode("overwrite").parquet(dir)
     val merged = Dedup.substringSpanStateMerge(

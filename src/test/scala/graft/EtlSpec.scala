@@ -188,7 +188,7 @@ class EtlSpec extends SparkSpec {
 
   test("upsertPartitioned rewrites ONLY the touched partitions and " +
     "matches the global upsert's rows (operations.py:146-172 at scale)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert")
+    val dir = tempDir("graft_upsert")
       .toFile.getAbsolutePath
     val existing = Seq(
       ("2023-01-01", 1, "Pending"), ("2023-01-01", 2, "Pending"),
@@ -241,7 +241,7 @@ class EtlSpec extends SparkSpec {
 
   test("batch cursor: three runs advance the persisted Variable into " +
     "abutting 30-day windows (etl_dag.py:32-46,84-86)") {
-    val state = java.nio.file.Files.createTempDirectory("graft_cursor")
+    val state = tempDir("graft_cursor")
       .resolve("cursor").toString
     val countries = Seq("MDA", "DEU").toDF("iso")
     // run 1: no state yet → the DAG's fixed default start. The cursor
@@ -287,9 +287,9 @@ class EtlSpec extends SparkSpec {
 
   test("full DAG replay (§3.1): cursor → manifest → rate schedule → fetch " +
     "→ zone transform → dedup load, end to end") {
-    val state = java.nio.file.Files.createTempDirectory("graft_dag")
+    val state = tempDir("graft_dag")
       .resolve("cursor").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_dag_zones")
+    val root = tempDir("graft_dag_zones")
     val countries = Seq("US", "DE").toDF("iso")
     // run 1: cursor falls back to the DAG default; 3-day window for speed
     val (s1, e1, manifest) = Etl.nextCursorWindow(spark, state, countries,
@@ -351,7 +351,7 @@ class EtlSpec extends SparkSpec {
   // --- file-granularity via input_file_name over a real JSON zone ---------
 
   test("C1 end-to-end over JSON files: input_file_name() granularity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_raw").toFile
+    val dir = tempDir("graft_raw").toFile
     def write(name: String, lines: Seq[String]): Unit = {
       val f = new java.io.File(dir, name)
       val w = new java.io.PrintWriter(f)
@@ -420,7 +420,7 @@ class EtlSpec extends SparkSpec {
     val countries = Seq("US", "DE").toDF("iso")
     val manifest = Etl.extractionManifest(countries, "iso",
       Seq("covid", "weather"), "2023-01-01", "2023-01-02", batchTs = 42L)
-    val root = java.nio.file.Files.createTempDirectory("graft_fetch")
+    val root = tempDir("graft_fetch")
     val log = Etl.runFetch(manifest, root.toString)
     assert(log.count() === 8) // 2 countries × 2 apis × 2 days
     assert(log.filter($"status" =!= "Landed").count() === 0)
@@ -473,7 +473,7 @@ class EtlSpec extends SparkSpec {
 
   test("compactParquet: shrinks a many-small-files table to the sized " +
     "file count with identical data") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = tempDir("compact").toString
     val path = s"$dir/events"
     val ev = Tables.events(spark, sfDir)
     ev.repartition(16).write.parquet(path)

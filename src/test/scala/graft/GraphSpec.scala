@@ -240,8 +240,7 @@ class GraphSpec extends SparkSpec {
       (3L, 4L), (10L, 11L), (10L, 12L), (11L, 12L)).toDF("a", "b")
     val lab = Graph.louvainLocalMove(e, "a", "b",
       Graph.labelPropagation(e, "a", "b", rounds = 3), rounds = 2)
-    val path = java.nio.file.Files
-      .createTempDirectory("louvain_pub_spec_").toString
+    val path = tempDir("louvain_pub_spec_").toString
     Models.saveModel(lab, path)
     val loaded = Models.loadModel(spark, path)
     val asMap = (df: org.apache.spark.sql.DataFrame) => df.collect()
@@ -332,8 +331,7 @@ class GraphSpec extends SparkSpec {
     assert(rescored.head === acceptedQ,
       "level-0 score of the published map must equal the best level")
     // parquet round-trip: the published table reads back identical
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_assign_rt_").toString
+    val dir = tempDir("graft_assign_rt_").toString
     graft.ops.Models.saveModel(Graph.louvainMultiLevelAssign(e, "a",
       "b", singletons, maxLevels = 4), dir)
     val back = graft.ops.Models.loadModel(spark, dir)

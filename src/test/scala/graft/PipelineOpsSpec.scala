@@ -155,7 +155,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("model save/load round-trips the parameter table (S11)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_model").toString
+    val dir = tempDir("graft_model").toString
     val params = Seq(("a", 1.5, 0.25), ("b", -2.0, 3.125))
       .toDF("param", "mu", "sigma")
     Models.saveModel(params, s"$dir/m.parquet")
@@ -169,7 +169,7 @@ class PipelineOpsSpec extends SparkSpec {
       .toDF("y", "fa")
     val model = graft.ops.Models.boostedStumps(d, "y", Seq("fa"),
       rounds = 2, lr = 0.5)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gbt").toString
+    val dir = tempDir("graft_gbt").toString
     Models.saveModel(model, s"$dir/stumps.parquet")
     val back = Models.loadModel(spark, s"$dir/stumps.parquet")
     def preds(m: org.apache.spark.sql.DataFrame) =
@@ -1575,7 +1575,7 @@ class PipelineOpsSpec extends SparkSpec {
       "depth-1 cannot express the interaction")
     // scoring with the PUBLISHED model (parquet round-trip) reproduces
     // the fit to the 6-decimal leaf-rounding grain
-    val dir = java.nio.file.Files.createTempDirectory("t2model").toString
+    val dir = tempDir("t2model").toString
     model.write.mode("overwrite").parquet(dir)
     val reloaded = spark.read.parquet(dir)
     val preds = graft.ops.Models.scoreTrees2(d, Seq("fa", "fb"),
@@ -2052,8 +2052,7 @@ class PipelineOpsSpec extends SparkSpec {
     "r17 publish-split witness") {
     val train = docs.filter(col("doc_id") % 7 =!= 0)
     val eval_ = docs.filter(col("doc_id") % 7 === 0)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lm_idx_ppl").toString + "/lm5"
+    val dir = tempDir("graft_lm_idx_ppl").toString + "/lm5"
     Text.lmCountIndex(train, "text").write.mode("overwrite").parquet(dir)
     val idx = spark.read.parquet(dir)
     for (order <- Seq(3, 5)) {
@@ -2077,8 +2076,7 @@ class PipelineOpsSpec extends SparkSpec {
       "l_quantity", nUsers = 5, k = 3).collect()
     val (p, q) = Models.alsFactors(inter, "o_custkey", "l_partkey",
       "l_quantity")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_als_rt").toString
+    val base = tempDir("graft_als_rt").toString
     p.write.mode("overwrite").parquet(base + "/p")
     q.write.mode("overwrite").parquet(base + "/q")
     val served = Models.alsRecommendFromFactors(inter,
@@ -2086,6 +2084,41 @@ class PipelineOpsSpec extends SparkSpec {
       "o_custkey", "l_partkey", nUsers = 5, k = 3).collect()
     assert(direct.length === served.length)
     assert(direct.sameElements(served))
+  }
+
+  test("alsRecommend / alsRecommendFromFactors: out-of-range nUsers or k " +
+    "fails its require before any Spark job is submitted") {
+    val inter = Tables.lineitem(spark, sfDir)
+      .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
+    val users = Seq((1L, 0.5, 0.25)).toDF("l_orderkey", "f1", "f2")
+    val items = Seq((1L, 0.5, 0.25)).toDF("l_partkey", "f1", "f2")
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      Seq((0, 3), (65, 3), (5, 0), (5, 51)).foreach { case (n, k) =>
+        val fit = intercept[IllegalArgumentException](
+          Models.alsRecommend(inter, "l_orderkey", "l_partkey",
+            "l_quantity", nUsers = n, k = k))
+        val serve = intercept[IllegalArgumentException](
+          Models.alsRecommendFromFactors(inter, users, items,
+            "l_orderkey", "l_partkey", nUsers = n, k = k))
+        Seq(fit, serve).foreach(e => assert(e.getMessage.contains(
+          "alsRecommend needs 1 <= nUsers <= 64 and 1 <= k <= 50")))
+      }
+      // one marker job: the listener bus delivers in order, so once its
+      // start is seen every earlier start has been counted
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (started.get() < 1 && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.get() === 1, "only the marker job may have run")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("lmCountIndexMerge: merge(lmCountIndex(a), b) ≡ " +
@@ -2097,8 +2130,7 @@ class PipelineOpsSpec extends SparkSpec {
       col("doc_id") % 7 =!= 6)
     val b = docs.filter(col("doc_id") % 7 === 6)
     val eval_ = docs.filter(col("doc_id") % 7 === 0)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lm_merge").toString + "/lm5"
+    val dir = tempDir("graft_lm_merge").toString + "/lm5"
     Text.lmCountIndex(a, "text").write.mode("overwrite").parquet(dir)
     val merged = Text.lmCountIndexMerge(spark.read.parquet(dir), b,
       "text").localCheckpoint()
@@ -2126,8 +2158,7 @@ class PipelineOpsSpec extends SparkSpec {
     val train = docs.filter(col("doc_id") % 7 =!= 0)
       .limit(200).localCheckpoint()
     val eval_ = docs.filter(col("doc_id") % 7 === 0).limit(50)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lm_idx").toString + "/lm5"
+    val dir = tempDir("graft_lm_idx").toString + "/lm5"
     Text.lmCountIndex(train, "text").write.mode("overwrite").parquet(dir)
     val live = Text.lm5gramScoreAgainstIndex(eval_,
       Text.lmCountIndex(train, "text"), "doc_id", "text").collect()
@@ -2219,8 +2250,7 @@ class PipelineOpsSpec extends SparkSpec {
     val train = docs.limit(300).localCheckpoint()
     val vocab = Text.unigramTrain(train, "doc_id", "text", rounds = 2,
       maxPieceLen = 4, seedSize = 100, minCount = 2L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_uni_vocab").toString + "/v"
+    val dir = tempDir("graft_uni_vocab").toString + "/v"
     vocab.write.mode("overwrite").parquet(dir)
     val live = Text.unigramEncode(train, "doc_id", "text", vocab).collect()
     val reloaded = Text.unigramEncode(train, "doc_id", "text",

@@ -1,0 +1,63 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import graft.gates.{Gate, Gates}
+
+/** The gate registry and the artifact store behind the publish-split
+  * gates: each gate is declared once, declaring it builds no oracle SQL,
+  * and each published artifact is built once per JVM in its own
+  * `graft_<name>_*` directory.
+  */
+class RegistrySpec extends SparkSpec {
+
+  private val noPlan: Gate.Plan = (s, _) => s.emptyDataFrame
+
+  test("registry: a gate name declared twice fails its require") {
+    val e = intercept[IllegalArgumentException](Gates.index(Seq(
+      Gate("q_twice", noPlan)("SELECT 1"),
+      Gate("q_twice", noPlan)("SELECT 2"))))
+    assert(e.getMessage.contains("gate q_twice is declared twice"))
+  }
+
+  test("registry: declaring and indexing gates builds no oracle SQL") {
+    var built = 0
+    val g = Gate("q_lazy", noPlan) { built += 1; "SELECT 1" }
+    Gates.index(Seq(g, Gate.rowsOnly("q_rows", "no SQL spelling")(noPlan)))
+    assert(built === 0)
+    assert(g.oracle === Some("SELECT 1"))
+    assert(built === 1)
+  }
+
+  test("Artifacts.publish: one build per (name, sf dir), in its own " +
+    "graft_<name>_ dir; a publish nested in a build works; a failed " +
+    "build is retried") {
+    val tag = "spec" + System.nanoTime()
+    var builds = 0
+    def inner(d: String): String =
+      Artifacts.publish(tag + "_inner", d) { p =>
+        builds += 1
+        Files.writeString(Paths.get(p, "v"), "inner")
+      }
+    def outer(d: String): String =
+      Artifacts.publish(tag + "_outer", d) { p =>
+        builds += 1
+        Files.writeString(Paths.get(p, "v"), inner(d))
+      }
+    val a = outer("a")
+    assert(outer("a") === a)
+    assert(builds === 2)
+    assert(Paths.get(a).getFileName.toString.startsWith(s"graft_${tag}_outer_"))
+    assert(Paths.get(a).getParent ===
+      Paths.get(System.getProperty("java.io.tmpdir")))
+    assert(outer("b") !== a)
+    assert(builds === 4)
+    var attempts = 0
+    def flaky(): String = Artifacts.publish(tag + "_flaky", "a") { _ =>
+      attempts += 1
+      if (attempts == 1) throw new IllegalStateException("first build fails")
+    }
+    intercept[IllegalStateException](flaky())
+    flaky()
+    assert(attempts === 2)
+  }
+}

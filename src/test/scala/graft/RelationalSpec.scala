@@ -19,6 +19,8 @@ class RelationalSpec extends SparkSpec {
     SparkEntry.oracleSql.keys.foreach { k =>
       assert(SparkEntry.queries.contains(k), s"oracleSql for unknown query $k")
     }
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ===
+      Set("q_approx_stats"), "q_approx_stats must be the only rows-only gate")
   }
 
   test("funnel keeps customers with no orders (left join preserved)") {

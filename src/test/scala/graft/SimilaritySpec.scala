@@ -41,6 +41,14 @@ class SimilaritySpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, sfDir)
   private lazy val queries = emb.filter(col("vec_id") % 20 === 0)
 
+  test("ivfCentroids: nCells = 0 fails with the declared require, not an " +
+    "array-index error from an empty candidate array") {
+    val e = intercept[IllegalArgumentException](
+      Similarity.ivfCentroids(emb, "vec_id", "embedding", nCells = 0)
+        .collect())
+    assert(e.getMessage.contains("ivfCentroids needs nCells >= 1"))
+  }
+
   test("ivfCentroids: nCells centroids of the corpus dimensionality") {
     val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding",
       nCells = 8, iters = 2).collect()

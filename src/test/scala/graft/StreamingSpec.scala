@@ -1084,7 +1084,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("u", "i", "r")
     val (pf0, qf0) = graft.ops.Models.alsFactors(inter, "u", "i", "r")
     // publish: the factors round-trip parquet, serving reads artifacts
-    val dir = java.nio.file.Files.createTempDirectory("als").toString
+    val dir = tempDir("als").toString
     pf0.write.parquet(s"$dir/p"); qf0.write.parquet(s"$dir/q")
     val pf = spark.read.parquet(s"$dir/p")
     val qf = spark.read.parquet(s"$dir/q")
@@ -1127,7 +1127,7 @@ class StreamingSpec extends SparkSpec {
     // publish the index: all four frames round-trip through parquet —
     // serving below reads ONLY the stored artifact plus raw corpus
     // vectors for the shortlist re-rank
-    val dir = java.nio.file.Files.createTempDirectory("pq_idx").toString
+    val dir = tempDir("pq_idx").toString
     def store(df: org.apache.spark.sql.DataFrame, name: String) = {
       df.write.mode("overwrite").parquet(s"$dir/$name")
       spark.read.parquet(s"$dir/$name")

@@ -12,7 +12,7 @@ class ZoneSpec extends SparkSpec {
   import spark.implicits._
 
   test("raw zone splits into processed and error zones with audit + breaker") {
-    val base = java.nio.file.Files.createTempDirectory("graft_zones").toFile
+    val base = tempDir("graft_zones").toFile
     val rawDir = new java.io.File(base, "raw"); rawDir.mkdirs()
     def write(name: String, lines: Seq[String]): Unit = {
       val w = new java.io.PrintWriter(new java.io.File(rawDir, name))
@@ -56,7 +56,7 @@ class ZoneSpec extends SparkSpec {
 
   test("covid raw zone: null in a to-be-dropped column still errors the " +
     "file; survivors lose last_update/region (transformer.py:36-43)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_covid").toFile
+    val base = tempDir("graft_covid").toFile
     val rawDir = new java.io.File(base, "raw"); rawDir.mkdirs()
     def write(name: String, lines: Seq[String]): Unit = {
       val w = new java.io.PrintWriter(new java.io.File(rawDir, name))
@@ -87,7 +87,7 @@ class ZoneSpec extends SparkSpec {
   }
 
   test("CSV sink/source round-trip (S10: forecast/prediction exports)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toFile
+    val dir = tempDir("graft_csv").toFile
     val out = new java.io.File(dir, "preds").getAbsolutePath
     val df = Seq(("2023-01-01", 25.5, 24.9), ("2023-01-02", 24.0, 24.2))
       .toDF("date", "actual", "predicted")
@@ -104,7 +104,7 @@ class ZoneSpec extends SparkSpec {
   }
 
   test("gold layout: partitioned write enables partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gold").toFile
+    val dir = tempDir("graft_gold").toFile
     val gold = new java.io.File(dir, "orders").getAbsolutePath
     Tables.orders(spark, sfDir)
       .withColumn("o_year", year(col("o_orderdate")))
