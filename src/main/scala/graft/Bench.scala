@@ -140,18 +140,26 @@ object Bench {
     val total = results.map(_._2._1).sum
     // Full detail also lands in a file (one JSON object, all queries) so
     // per-query history survives even if the stdout tail clips the chunks —
-    // inside the repo, so the end-of-round commit archives it in git.
-    val detailPath = "/root/repo/BENCH_DETAIL.json"
-    try {
-      val fw = new java.io.FileWriter(detailPath)
-      fw.write(s"""{"queries":{${fileEntries.mkString(",")}},""" +
-        s""""passes":$nPasses,"sink":"toRdd","sf":"$sfDir"}""")
-      fw.close()
-    } catch { case _: Throwable => () }
+    // in the working directory (the checkout root under `sbt run`), so the
+    // checkout's own history archives it. A failed write is reported, and
+    // the total line then names no file.
+    val detailPath = new java.io.File("BENCH_DETAIL.json").getAbsolutePath
+    val written = try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
+        (s"""{"queries":{${fileEntries.mkString(",")}},""" +
+          s""""passes":$nPasses,"sink":"toRdd","sf":"$sfDir"}""")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      true
+    } catch {
+      case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write $detailPath: $e")
+        false
+    }
+    val detailFile = if (written) Verify.quote(detailPath) else "null"
     // FINAL line: compact total-only JSON (~100 chars) — immune to query-
     // count growth, always fits the tail whole.
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-      s""""detail_file":"$detailPath","sf":"$sfDir"}"""
+      s""""detail_file":$detailFile,"sf":"$sfDir"}"""
     // Stop Spark BEFORE printing so shutdown chatter (even at WARN) cannot
     // land after the JSON — the driver parses the LAST line of the tail.
     spark.stop()

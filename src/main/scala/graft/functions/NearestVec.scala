@@ -56,6 +56,15 @@ case class NearestVec(left: Expression, right: Expression,
       case _ => None
     }
 
+  // The input types, resolved once per expression rather than per row
+  // (only valid after checkInputDataTypes has passed).
+  @transient private lazy val idT: DataType = candFields.get._1
+  @transient private lazy val vecT: DataType = candFields.get._2
+  @transient private lazy val mayNullElem: Boolean = candFields.get._3
+  @transient private lazy val lt: DataType = vecElem(left.dataType).get
+  @transient private lazy val checkL: Boolean =
+    left.dataType.asInstanceOf[ArrayType].containsNull
+
   override def checkInputDataTypes(): TypeCheckResult =
     if (vecElem(left.dataType).isDefined && candFields.isDefined)
       TypeCheckResult.TypeCheckSuccess
@@ -65,7 +74,7 @@ case class NearestVec(left: Expression, right: Expression,
           s"array<struct<int|bigint, array<float|double>>>), got " +
           s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
 
-  override def dataType: DataType = candFields.get._1
+  override def dataType: DataType = idT
 
   override def nullable: Boolean = true
 
@@ -88,9 +97,6 @@ case class NearestVec(left: Expression, right: Expression,
     val arr = cands.asInstanceOf[ArrayData]
     val nc = arr.numElements()
     if (nc == 0) return null
-    val (idT, vecT, mayNullElem) = candFields.get
-    val lt = vecElem(left.dataType).get
-    val checkL = left.dataType.asInstanceOf[ArrayType].containsNull
     var bestSet = false
     var bestNull = true
     var bestVal = 0.0
@@ -151,9 +157,6 @@ case class NearestVec(left: Expression, right: Expression,
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, arr) => {
-      val (idT, vecT, mayNullElem) = candFields.get
-      val lt = vecElem(left.dataType).get
-      val checkL = left.dataType.asInstanceOf[ArrayType].containsNull
       def read(a: String, dt: DataType, i: String): String = dt match {
         case FloatType => s"(double) $a.getFloat($i)"
         case _ => s"$a.getDouble($i)"

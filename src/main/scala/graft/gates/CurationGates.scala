@@ -225,15 +225,7 @@ object CurationGates {
       budgetNum = MixBudgetNum, budgetDen = MixBudgetDen))(
       (mixBudgetChainSql(MixTau, MixBudgetNum,
       MixBudgetDen, MixMaxEpochs) +
-      """,
-        |pl AS (SELECT source,
-        |    CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END
-        |      AS alloc_tokens,
-        |    CAST(CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END AS DOUBLE)
-        |      / n_tokens AS rate
-        |  FROM mbw5),
+      ",\n" + allocRateCte + """,
         |dk AS (SELECT d.source, d.doc_id,
         |    CAST(len(string_split(d.text, ' ')) AS BIGINT) AS toks,
         |    pl.alloc_tokens,
@@ -387,26 +379,7 @@ object CurationGates {
           n = 3, threshold = 0.8)),
         "doc_id", trainRate = 0.8)
     })(
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src)
+      jaccardClosureCtes + """
         |SELECT d.doc_id,
         |  coalesce(lab.cluster_id, d.doc_id) AS fold_rep,
         |  CASE WHEN CAST('0x' || substr(md5('fold_' ||
@@ -510,55 +483,11 @@ object CurationGates {
       Tables.documents(s, d), "doc_id", "text", minQuality = 0.5, n = 3,
       jaccardThreshold = 0.8, keepLangs = Seq("en", "de", "es", "fr"),
       nearDup = graft.ops.Curation.NearDup.Jaccard(Some(10L))))(
-      ("""WITH qual AS (
-        |  SELECT doc_id FROM (
-        |    SELECT doc_id,
-        |      greatest(least(
-        |        (CASE WHEN len(string_split(text,' ')) BETWEEN 5 AND 1000
-        |              THEN 0.4 ELSE 0.0 END)
-        |        + (CASE WHEN length(replace(text,' ','')) * 1.0
-        |                 / greatest(len(string_split(text,' ')), 1)
-        |                 BETWEEN 3.0 AND 12.0 THEN 0.3 ELSE 0.0 END)
-        |        + (CASE WHEN len(list_filter(string_split(lower(text),' '),
-        |                 x -> x IN ('the','a','of','and','is','in','to')))
-        |                 * 1.0 / greatest(len(string_split(text,' ')), 1)
-        |                 >= 0.01 THEN 0.3 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[[:punct:]]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[0-9]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END),
-        |        1.0), 0.0) AS quality
-        |    FROM documents)
-        |  WHERE round(quality, 6) >= 0.5),
-        |aq AS (SELECT d.* FROM documents d JOIN qual USING (doc_id)),
-        |ke AS (SELECT min(doc_id) AS doc_id FROM aq GROUP BY md5(text)),
-        |ae AS (SELECT aq.* FROM aq JOIN ke USING (doc_id)),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ae),
-        |sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |        FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sh AS (SELECT sh0.* FROM sh0
-        |       JOIN (SELECT s, count(*) AS df FROM sh0 GROUP BY s) f
-        |         ON f.s = sh0.s AND f.df <= 10),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
+      funnelOracle(cappedShingleCtes + ",\n" + shinglePairCtes + """,
         |dup AS (SELECT DISTINCT id_j AS doc_id FROM pairs
         |        JOIN sizes sa ON sa.doc_id = id_i
         |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |an AS (SELECT ae.* FROM ae
-        |       WHERE doc_id NOT IN (SELECT doc_id FROM dup)),
-        |""".stripMargin + langKeepCte + """
-        |al AS (SELECT an.* FROM an JOIN lang USING (doc_id))
-        |SELECT '0_input' AS stage, count(*) AS n_docs FROM documents
-        |UNION ALL SELECT '1_quality', count(*) FROM aq
-        |UNION ALL SELECT '2_exact_dedup', count(*) FROM ae
-        |UNION ALL SELECT '3_near_dedup', count(*) FROM an
-        |UNION ALL SELECT '4_lang', count(*) FROM al
-        |ORDER BY stage""".stripMargin)),
+        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8)""".stripMargin)),
     // same funnel on the sublinear MinHash+LSH candidate path — the
     // configuration a 100 TB corpus run would use; oracle recomputes the
     // banded signatures bit-identically
@@ -570,67 +499,11 @@ object CurationGates {
         Tables.documents(s, d), "doc_id", "text", minQuality = 0.5, n = 3,
         jaccardThreshold = 0.8, keepLangs = Seq("en", "de", "es", "fr"),
         nearDup = graft.ops.Curation.NearDup.MinHashLsh(32, 8)))(
-      ("""WITH qual AS (
-        |  SELECT doc_id FROM (
-        |    SELECT doc_id,
-        |      greatest(least(
-        |        (CASE WHEN len(string_split(text,' ')) BETWEEN 5 AND 1000
-        |              THEN 0.4 ELSE 0.0 END)
-        |        + (CASE WHEN length(replace(text,' ','')) * 1.0
-        |                 / greatest(len(string_split(text,' ')), 1)
-        |                 BETWEEN 3.0 AND 12.0 THEN 0.3 ELSE 0.0 END)
-        |        + (CASE WHEN len(list_filter(string_split(lower(text),' '),
-        |                 x -> x IN ('the','a','of','and','is','in','to')))
-        |                 * 1.0 / greatest(len(string_split(text,' ')), 1)
-        |                 >= 0.01 THEN 0.3 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[[:punct:]]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END)
-        |        - (CASE WHEN len(regexp_extract_all(text, '[0-9]'))
-        |                 * 1.0 / greatest(length(text), 1) > 0.2
-        |                 THEN 0.2 ELSE 0.0 END),
-        |        1.0), 0.0) AS quality
-        |    FROM documents)
-        |  WHERE round(quality, 6) >= 0.5),
-        |aq AS (SELECT d.* FROM documents d JOIN qual USING (doc_id)),
-        |ke AS (SELECT min(doc_id) AS doc_id FROM aq GROUP BY md5(text)),
-        |ae AS (SELECT aq.* FROM aq JOIN ke USING (doc_id)),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ae),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_i, b.doc_id AS id_j
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |              AND a.doc_id < b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |common AS (SELECT c.id_i, c.id_j, count(*) AS nc
-        |           FROM cand c
-        |           JOIN sh a ON a.doc_id = c.id_i
-        |           JOIN sh b ON b.doc_id = c.id_j AND b.s = a.s
-        |           GROUP BY c.id_i, c.id_j),
+      funnelOracle(minhashBandCtes + ",\n" + minhashCommonCtes + """,
         |dup AS (SELECT DISTINCT id_j AS doc_id FROM common
         |        JOIN sizes sa ON sa.doc_id = id_i
         |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(nc * 1.0 / (sa.n + sb.n - nc), 6) >= 0.8),
-        |an AS (SELECT ae.* FROM ae
-        |       WHERE doc_id NOT IN (SELECT doc_id FROM dup)),
-        |""".stripMargin + langKeepCte + """
-        |al AS (SELECT an.* FROM an JOIN lang USING (doc_id))
-        |SELECT '0_input' AS stage, count(*) AS n_docs FROM documents
-        |UNION ALL SELECT '1_quality', count(*) FROM aq
-        |UNION ALL SELECT '2_exact_dedup', count(*) FROM ae
-        |UNION ALL SELECT '3_near_dedup', count(*) FROM an
-        |UNION ALL SELECT '4_lang', count(*) FROM al
-        |ORDER BY stage""".stripMargin)),
+        |        WHERE round(nc * 1.0 / (sa.n + sb.n - nc), 6) >= 0.8)""".stripMargin)),
     // the CCNet recipe end-to-end over the eval-split "incoming batch":
     // langId -> 5-gram LM perplexity head+middle -> 2-feature quality
     // classifier -> exact dedup, one funnel row per stage with doc AND
@@ -707,15 +580,7 @@ object CurationGates {
         |""".stripMargin +
       mixBudgetChainSql(MixTau, MixBudgetNum, MixBudgetDen,
         maxEpochs = 1, fromTable = "surv", withPrefix = "") +
-      """,
-        |pl AS (SELECT source,
-        |    CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END
-        |      AS alloc_tokens,
-        |    CAST(CASE WHEN capped THEN cap_tokens
-        |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END AS DOUBLE)
-        |      / n_tokens AS rate
-        |  FROM mbw5),
+      ",\n" + allocRateCte + """,
         |dk AS (SELECT sv.source, sv.doc_id,
         |    CAST(len(string_split(sv.text, ' ')) AS BIGINT) AS toks,
         |    pl.alloc_tokens,
@@ -1044,10 +909,68 @@ object CurationGates {
         lmIndex = Some(lmIndexModel(s, d)))
     }
 
+  /** [[graft.ops.Curation.funnelCounts]] (min quality 0.5, langs
+    * en/de/es/fr): the heuristic quality gate `aq`, the exact-dedup
+    * keepers `ae` and their tokens, then `nearDup` — CTEs ending in
+    * `dup(doc_id)`, the near-duplicates to drop — then [[langKeepCte]]
+    * and one count row per stage.
+    */
+  private def funnelOracle(nearDup: String): String =
+    """WITH qual AS (
+      |  SELECT doc_id FROM (
+      |    SELECT doc_id,
+      |      greatest(least(
+      |        (CASE WHEN len(string_split(text,' ')) BETWEEN 5 AND 1000
+      |              THEN 0.4 ELSE 0.0 END)
+      |        + (CASE WHEN length(replace(text,' ','')) * 1.0
+      |                 / greatest(len(string_split(text,' ')), 1)
+      |                 BETWEEN 3.0 AND 12.0 THEN 0.3 ELSE 0.0 END)
+      |        + (CASE WHEN len(list_filter(string_split(lower(text),' '),
+      |                 x -> x IN ('the','a','of','and','is','in','to')))
+      |                 * 1.0 / greatest(len(string_split(text,' ')), 1)
+      |                 >= 0.01 THEN 0.3 ELSE 0.0 END)
+      |        - (CASE WHEN len(regexp_extract_all(text, '[[:punct:]]'))
+      |                 * 1.0 / greatest(length(text), 1) > 0.2
+      |                 THEN 0.2 ELSE 0.0 END)
+      |        - (CASE WHEN len(regexp_extract_all(text, '[0-9]'))
+      |                 * 1.0 / greatest(length(text), 1) > 0.2
+      |                 THEN 0.2 ELSE 0.0 END),
+      |        1.0), 0.0) AS quality
+      |    FROM documents)
+      |  WHERE round(quality, 6) >= 0.5),
+      |aq AS (SELECT d.* FROM documents d JOIN qual USING (doc_id)),
+      |ke AS (SELECT min(doc_id) AS doc_id FROM aq GROUP BY md5(text)),
+      |ae AS (SELECT aq.* FROM aq JOIN ke USING (doc_id)),
+      |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ae),
+      |""".stripMargin + nearDup + """,
+      |an AS (SELECT ae.* FROM ae
+      |       WHERE doc_id NOT IN (SELECT doc_id FROM dup)),
+      |""".stripMargin + langKeepCte + """
+      |al AS (SELECT an.* FROM an JOIN lang USING (doc_id))
+      |SELECT '0_input' AS stage, count(*) AS n_docs FROM documents
+      |UNION ALL SELECT '1_quality', count(*) FROM aq
+      |UNION ALL SELECT '2_exact_dedup', count(*) FROM ae
+      |UNION ALL SELECT '3_near_dedup', count(*) FROM an
+      |UNION ALL SELECT '4_lang', count(*) FROM al
+      |ORDER BY stage""".stripMargin
+
+  /** [[graft.ops.Curation.mixBudgetApply]]'s per-source plan over the
+    * waterfill result `mbw5`: the allocated tokens and the sampling rate
+    * they imply, `pl(source, alloc_tokens, rate)`.
+    */
+  private lazy val allocRateCte: String =
+    """pl AS (SELECT source,
+      |    CASE WHEN capped THEN cap_tokens
+      |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END
+      |      AS alloc_tokens,
+      |    CAST(CASE WHEN capped THEN cap_tokens
+      |         ELSE CAST(round(lev * wt, 0) AS BIGINT) END AS DOUBLE)
+      |      / n_tokens AS rate
+      |  FROM mbw5)""".stripMargin
+
   /** The curation funnel's language-keep CTE over the near-dedup
     * survivors `an`: keep docs whose trigram prediction is in the
-    * en/de/es/fr keep set — Curation's pass_lang replay, shared by
-    * both q_curation_funnel oracles.
+    * en/de/es/fr keep set — Curation's pass_lang replay.
     */
   private lazy val langKeepCte: String =
     s"""lang AS (

@@ -20,45 +20,14 @@ object DedupGates {
         |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin),
     Gate("q_ngram_jaccard", (s, d) => Dedup.ngramJaccardPairs(
       Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8))(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2)
-        |SELECT id_i, id_j,
-        |  round(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON sa.doc_id = id_i
-        |JOIN sizes sb ON sb.doc_id = id_j
-        |WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8
-        |ORDER BY id_i, id_j""".stripMargin),
+      jaccardPairsOracle(shingleCte)),
     Gate("q_ngram_jaccard_capped", (s, d) => Dedup.ngramJaccardPairs(
       Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8,
       // df cap chosen to actually engage at the bench SFs (max df at
       // sf0.1 is 25; >10 covers ~63% of the posting pair space while
       // keeping every planted >=0.9 pair at sf0.01)
       maxDocFreq = Some(10L)))(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |        FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sh AS (SELECT sh0.* FROM sh0
-        |       JOIN (SELECT s, count(*) AS df FROM sh0 GROUP BY s) f
-        |         ON f.s = sh0.s AND f.df <= 10),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2)
-        |SELECT id_i, id_j,
-        |  round(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON sa.doc_id = id_i
-        |JOIN sizes sb ON sb.doc_id = id_j
-        |WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8
-        |ORDER BY id_i, id_j""".stripMargin),
+      jaccardPairsOracle(cappedShingleCtes)),
     // directed containment twin (same shingle/cap discipline): fragments
     // mostly inside a larger doc that symmetric Jaccard under-scores
     // directed containment: same capped shingle CTE, undirected common
@@ -91,68 +60,17 @@ object DedupGates {
         |WHERE round(CAST(dir.c AS DOUBLE) / CAST(sizes.n AS DOUBLE), 6)
         |  >= 0.6
         |ORDER BY containment DESC, dir.id_i, dir.id_j""".stripMargin),
-    // connected components = transitive closure; DuckDB spells the label
-    // propagation as a recursive CTE (min reachable id per node)
     Gate("q_dup_clusters", (s, d) => Dedup.dupClusters(
       Dedup.ngramJaccardPairs(
         Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8)))(
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src),
-        |sz AS (SELECT cluster_id, count(*) AS cluster_size
-        |       FROM lab GROUP BY cluster_id)
-        |SELECT lab.id, lab.cluster_id, sz.cluster_size
-        |FROM lab JOIN sz USING (cluster_id)
-        |ORDER BY id""".stripMargin),
+      dupClustersOracle),
     // same clustering via alternating large-star/small-star rounds — the
     // O(log n)-round path for non-clique duplicate graphs; identical
     // output, so the oracle text is the same recursive closure
-    // star-rounds variant: same output contract, same closure oracle
     Gate("q_dup_clusters_star", (s, d) => Dedup.dupClustersStar(
       Dedup.ngramJaccardPairs(
         Tables.documents(s, d), "doc_id", "text", n = 3, threshold = 0.8)))(
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src),
-        |sz AS (SELECT cluster_id, count(*) AS cluster_size
-        |       FROM lab GROUP BY cluster_id)
-        |SELECT lab.id, lab.cluster_id, sz.cluster_size
-        |FROM lab JOIN sz USING (cluster_id)
-        |ORDER BY id""".stripMargin),
+      dupClustersOracle),
     // quality survivorship: keep the LONGEST doc per cluster (ties -> min
     // id) instead of resolveDuplicates' min-id representative
     // survivorship oracle: the same closure, then argmax keeper per
@@ -165,26 +83,7 @@ object DedupGates {
         "doc_id", "n_chars")
         .select("doc_id", "n_chars").orderBy("doc_id")
     })(
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
-        |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |dup AS (SELECT id_i, id_j FROM p
-        |        JOIN sizes sa ON sa.doc_id = id_i
-        |        JOIN sizes sb ON sb.doc_id = id_j
-        |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
-        |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-        |          UNION SELECT id_j, id_i FROM dup),
-        |reach(src, dst) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-        |lab AS (SELECT src AS id, min(dst) AS cluster_id
-        |        FROM reach GROUP BY src),
+      (jaccardClosureCtes + """,
         |rk AS (SELECT lab.id, row_number() OVER (
         |         PARTITION BY lab.cluster_id
         |         ORDER BY d.n_chars DESC, lab.id ASC) AS r
@@ -192,40 +91,20 @@ object DedupGates {
         |drops AS (SELECT id FROM rk WHERE r > 1)
         |SELECT doc_id, n_chars FROM documents
         |WHERE doc_id NOT IN (SELECT id FROM drops)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
     Gate("q_minhash_lsh", (s, d) => Dedup.minhashLshPairs(
       Tables.documents(s, d), "doc_id", "text",
       n = 3, numHashes = 32, bands = 8, threshold = 0.8))(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
+      ("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
         |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_i, b.doc_id AS id_j
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |              AND a.doc_id < b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |common AS (SELECT c.id_i, c.id_j, count(*) AS nc
-        |           FROM cand c
-        |           JOIN sh a ON a.doc_id = c.id_i
-        |           JOIN sh b ON b.doc_id = c.id_j AND b.s = a.s
-        |           GROUP BY c.id_i, c.id_j)
+        |""".stripMargin + minhashBandCtes + ",\n" + minhashCommonCtes + """
         |SELECT id_i, id_j,
         |  round(nc * 1.0 / (sa.n + sb.n - nc), 6) AS jaccard
         |FROM common
         |JOIN sizes sa ON sa.doc_id = id_i
         |JOIN sizes sb ON sb.doc_id = id_j
         |WHERE round(nc * 1.0 / (sa.n + sb.n - nc), 6) >= 0.8
-        |ORDER BY id_i, id_j""".stripMargin),
+        |ORDER BY id_i, id_j""".stripMargin)),
     // the (bands, rows) S-curve table that PICKS the split before a
     // signature pass is paid for: detection probability at the target
     // threshold + FP/FN masses per power-of-two split of 128 hashes,
@@ -248,33 +127,10 @@ object DedupGates {
         "doc_id", "text", n = 3, numHashes = 32, bands = 8,
         minEstJaccard = 0.75)
     })(
+      minhashScreenOracle(
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
         |              FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_index
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |         WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
-        |est AS (SELECT c.id_new, c.id_index,
-        |          round(CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END)
-        |                     AS DOUBLE) / 32, 6) AS est_jaccard
-        |        FROM cand c
-        |        JOIN mh ma ON ma.doc_id = c.id_new
-        |        JOIN mh mb ON mb.doc_id = c.id_index AND mb.i = ma.i
-        |        GROUP BY 1, 2)
-        |SELECT id_new, id_index, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.75
-        |ORDER BY id_new, id_index""".stripMargin),
+        |""".stripMargin)),
     // the signature index LIFECYCLE: the %5 != 0 corpus's persisted
     // signatures absorb a RE-CRAWL (every %10 == 1 doc returns with
     // amended text) — the stale rows are evicted by one id anti-join
@@ -303,36 +159,13 @@ object DedupGates {
         "text", n = 3, numHashes = 32, bands = 8,
         minEstJaccard = 0.75)
     })(
+      minhashScreenOracle(
       """WITH ad AS (SELECT doc_id,
         |    CASE WHEN doc_id % 10 = 1
         |      THEN text || ' updated edition' ELSE text END AS text
         |  FROM documents),
         |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ad),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
-        |mh AS (SELECT doc_id, r.i AS i,
-        |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-        |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
-        |             % 2147483647) AS m
-        |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
-        |       GROUP BY doc_id, r.i),
-        |bands AS (SELECT doc_id, i // 4 AS band,
-        |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
-        |          FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_index
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bsig = b.bsig
-        |         WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
-        |est AS (SELECT c.id_new, c.id_index,
-        |          round(CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END)
-        |                     AS DOUBLE) / 32, 6) AS est_jaccard
-        |        FROM cand c
-        |        JOIN mh ma ON ma.doc_id = c.id_new
-        |        JOIN mh mb ON mb.doc_id = c.id_index AND mb.i = ma.i
-        |        GROUP BY 1, 2)
-        |SELECT id_new, id_index, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.75
-        |ORDER BY id_new, id_index""".stripMargin),
+        |""".stripMargin)),
     Gate("q_simhash", (s, d) => Dedup.simhashPairs(
       Tables.documents(s, d), "doc_id", "text", maxHamming = 3))(
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tk
@@ -359,77 +192,15 @@ object DedupGates {
     // no gated query may carry a plan that dies at 100×). Two distinct
     // (tables, planes) configurations exercise the recall/cost dial: more
     // tables = higher recall at proportional candidate cost.
-    // cosine oracles mirror graft.functions.CosineSimilarity exactly:
-    // dot/(sqrt(na)*sqrt(nb)) over double-widened elements, sequential
-    // sums. Both near-dup oracles reproduce the md5-derived hyperplanes,
-    // so the LSH plans are exactly hash-checkable; this one is the
-    // higher-recall 16-table configuration.
+    // This one is the higher-recall 16-table configuration.
     Gate("q_emb_cosine_dup", (s, d) => Dedup.embeddingCosinePairsLsh(
       Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.42,
       tables = 16, planes = 6))(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(16)) AS t(t)
-        |       CROSS JOIN UNNEST(range(6)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |cand AS (SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-        |         FROM bkt a JOIN bkt b
-        |           ON a.tbl = b.tbl AND a.bucket = b.bucket
-        |          AND a.vec_id < b.vec_id)
-        |SELECT c.id_i, c.id_j,
-        |  round(list_dot_product(ua.v, ub.v)
-        |        / (sqrt(list_dot_product(ua.v, ua.v))
-        |           * sqrt(list_dot_product(ub.v, ub.v))), 6) AS cos_sim
-        |FROM cand c JOIN u ua ON ua.vec_id = c.id_i
-        |JOIN u ub ON ub.vec_id = c.id_j
-        |WHERE list_dot_product(ua.v, ub.v)
-        |      / (sqrt(list_dot_product(ua.v, ua.v))
-        |         * sqrt(list_dot_product(ub.v, ub.v))) >= 0.42
-        |ORDER BY id_i, id_j""".stripMargin),
-    // reproduces Similarity.lshBuckets' md5-derived hyperplanes exactly:
-    // w(t,p,d) = (int('0x'+md5('plane_t_p_d')[:15]) % 2000001 - 1e6) / 1e6
+      cosineDupOracle(16, "6")),
     Gate("q_emb_cosine_dup_lsh", (s, d) => Dedup.embeddingCosinePairsLsh(
       Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.42,
       tables = 8, planes = 6))(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(6)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |cand AS (SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-        |         FROM bkt a JOIN bkt b
-        |           ON a.tbl = b.tbl AND a.bucket = b.bucket
-        |          AND a.vec_id < b.vec_id)
-        |SELECT c.id_i, c.id_j,
-        |  round(list_dot_product(ua.v, ub.v)
-        |        / (sqrt(list_dot_product(ua.v, ua.v))
-        |           * sqrt(list_dot_product(ub.v, ub.v))), 6) AS cos_sim
-        |FROM cand c JOIN u ua ON ua.vec_id = c.id_i
-        |JOIN u ub ON ub.vec_id = c.id_j
-        |WHERE list_dot_product(ua.v, ub.v)
-        |      / (sqrt(list_dot_product(ua.v, ua.v))
-        |         * sqrt(list_dot_product(ub.v, ub.v))) >= 0.42
-        |ORDER BY id_i, id_j""".stripMargin),
+      cosineDupOracle(8, "6")),
     // the 100 TB form: plane count sized to the corpus so bucket
     // occupancy (and thus candidate volume per vector) stays constant
     // as n grows — the fixed-plane gates above measure quadratic
@@ -440,37 +211,7 @@ object DedupGates {
       Dedup.embeddingCosinePairsLshAuto(Tables.embeddings(s, d), "vec_id",
         "embedding", threshold = 0.42, tables = 8, minPlanes = 6,
         targetPerBucket = 16))(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range((SELECT greatest(6,
-        |         CAST(ceil(log2(CAST(ceil(count(*) / 16.0) AS BIGINT)))
-        |           AS BIGINT)) FROM embeddings))) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |cand AS (SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-        |         FROM bkt a JOIN bkt b
-        |           ON a.tbl = b.tbl AND a.bucket = b.bucket
-        |          AND a.vec_id < b.vec_id)
-        |SELECT c.id_i, c.id_j,
-        |  round(list_dot_product(ua.v, ub.v)
-        |        / (sqrt(list_dot_product(ua.v, ua.v))
-        |           * sqrt(list_dot_product(ub.v, ub.v))), 6) AS cos_sim
-        |FROM cand c JOIN u ua ON ua.vec_id = c.id_i
-        |JOIN u ub ON ub.vec_id = c.id_j
-        |WHERE list_dot_product(ua.v, ub.v)
-        |      / (sqrt(list_dot_product(ua.v, ua.v))
-        |         * sqrt(list_dot_product(ub.v, ub.v))) >= 0.42
-        |ORDER BY id_i, id_j""".stripMargin),
+      cosineDupOracle(8, autoPlanesSql)),
     // train/test decontamination: eval set = every 7th doc, train = rest
     // decontamination: train shingle postings ∩ eval shingle set
     Gate("q_decontaminate", (s, d) => {
@@ -1026,23 +767,7 @@ object DedupGates {
         dupThreshold = 0.42, tables = 8,
         planes = Dedup.autoPlanes(emb.count(), 6, 16))
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range((SELECT greatest(6,
-        |         CAST(ceil(log2(CAST(ceil(count(*) / 16.0) AS BIGINT)))
-        |           AS BIGINT)) FROM embeddings))) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
+      embVecCte + ",\n" + hyperplaneCtes(8, autoPlanesSql) + """,
         |cand AS (SELECT DISTINCT a.vec_id AS anchor, b.vec_id AS neg
         |         FROM bkt a JOIN bkt b
         |           ON b.tbl = a.tbl AND b.bucket = a.bucket
@@ -1073,21 +798,7 @@ object DedupGates {
         emb.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
         threshold = 0.42, tables = 8, planes = 6)
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(6)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
+      embVecCte + ",\n" + hyperplaneCtes(8, "6") + """,
         |tb AS (SELECT * FROM bkt WHERE vec_id % 10 <> 0),
         |eb AS (SELECT * FROM bkt WHERE vec_id % 10 = 0),
         |cand AS (SELECT DISTINCT tb.vec_id AS tid, eb.vec_id AS eid
@@ -1198,6 +909,85 @@ object DedupGates {
         |WHERE levenshtein(a.t, b2.t) <= 10
         |ORDER BY id_i, id_j""".stripMargin),
   )
+
+  /** `Dedup.autoPlanes(count, 6, 16)` from DuckDB's own count:
+    * greatest(6, ceil(log2(ceil(n / 16)))).
+    */
+  private lazy val autoPlanesSql: String =
+    """(SELECT greatest(6,
+      |         CAST(ceil(log2(CAST(ceil(count(*) / 16.0) AS BIGINT)))
+      |           AS BIGINT)) FROM embeddings)""".stripMargin
+
+  /** [[graft.ops.Dedup.embeddingCosinePairsLsh]] at threshold 0.42:
+    * pairs sharing a [[hyperplaneCtes]] bucket in any table, kept when
+    * their exact cosine clears the threshold.
+    */
+  private def cosineDupOracle(tables: Int, planes: String): String =
+    embVecCte + ",\n" + hyperplaneCtes(tables, planes) + """,
+      |cand AS (SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
+      |         FROM bkt a JOIN bkt b
+      |           ON a.tbl = b.tbl AND a.bucket = b.bucket
+      |          AND a.vec_id < b.vec_id)
+      |SELECT c.id_i, c.id_j,
+      |  round(list_dot_product(ua.v, ub.v)
+      |        / (sqrt(list_dot_product(ua.v, ua.v))
+      |           * sqrt(list_dot_product(ub.v, ub.v))), 6) AS cos_sim
+      |FROM cand c JOIN u ua ON ua.vec_id = c.id_i
+      |JOIN u ub ON ub.vec_id = c.id_j
+      |WHERE list_dot_product(ua.v, ub.v)
+      |      / (sqrt(list_dot_product(ua.v, ua.v))
+      |         * sqrt(list_dot_product(ub.v, ub.v))) >= 0.42
+      |ORDER BY id_i, id_j""".stripMargin
+
+  /** [[graft.ops.Dedup.ngramJaccardPairs]] (n = 3, threshold 0.8) over
+    * the shingle CTEs `shingles` (`sh`, capped or not): pairs whose
+    * rounded Jaccard clears the threshold, in (id_i, id_j) order.
+    */
+  private def jaccardPairsOracle(shingles: String): String =
+    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
+      |              FROM documents),
+      |""".stripMargin + shingles + ",\n" + shinglePairCtes + """
+      |SELECT id_i, id_j,
+      |  round(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
+      |FROM pairs
+      |JOIN sizes sa ON sa.doc_id = id_i
+      |JOIN sizes sb ON sb.doc_id = id_j
+      |WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8
+      |ORDER BY id_i, id_j""".stripMargin
+
+  /** [[graft.ops.Dedup.dupClusters]] output (id, cluster_id,
+    * cluster_size) of the Jaccard duplicate graph; the star-round
+    * variant emits the same table.
+    */
+  private lazy val dupClustersOracle: String =
+    jaccardClosureCtes + """,
+      |sz AS (SELECT cluster_id, count(*) AS cluster_size
+      |       FROM lab GROUP BY cluster_id)
+      |SELECT lab.id, lab.cluster_id, sz.cluster_size
+      |FROM lab JOIN sz USING (cluster_id)
+      |ORDER BY id""".stripMargin
+
+  /** [[graft.ops.Dedup.minhashLshPairsAgainstIndex]] with the %5 = 0
+    * docs as the new batch and the rest as the index: band-sharing
+    * (new, index) pairs, est = agreeing minhash fraction (k/32 dyadic),
+    * kept at est >= 0.75. `tokens` opens the query and defines `toks`.
+    */
+  private def minhashScreenOracle(tokens: String): String =
+    tokens + minhashBandCtes + """,
+      |cand AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_index
+      |         FROM bands a JOIN bands b
+      |           ON a.band = b.band AND a.bsig = b.bsig
+      |         WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
+      |est AS (SELECT c.id_new, c.id_index,
+      |          round(CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END)
+      |                     AS DOUBLE) / 32, 6) AS est_jaccard
+      |        FROM cand c
+      |        JOIN mh ma ON ma.doc_id = c.id_new
+      |        JOIN mh mb ON mb.doc_id = c.id_index AND mb.i = ma.i
+      |        GROUP BY 1, 2)
+      |SELECT id_new, id_index, est_jaccard FROM est
+      |WHERE est_jaccard >= 0.75
+      |ORDER BY id_new, id_index""".stripMargin
 
   /** The q_substring_ladder injection blurb: 37 tokens, so its
     * within-blurb windows qualify at every rung up to k = 32. */

@@ -19,33 +19,7 @@ object DriftGates {
         ev.filter(col("event_type") === "purchase"),
         "value", lo = 0.0, hi = 500.0, bins = 10)
     })(
-      """WITH a AS (SELECT value FROM events WHERE event_type = 'click'),
-        |b AS (SELECT value FROM events WHERE event_type = 'purchase'),
-        |ba AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM a GROUP BY 1),
-        |bb AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM b GROUP BY 1),
-        |bins AS (SELECT CAST(i.i AS INTEGER) AS bin
-        |         FROM UNNEST(range(10)) AS i(i)),
-        |j AS (SELECT bins.bin,
-        |        CAST(coalesce(ba.c, 0) AS BIGINT) AS c_a,
-        |        CAST(coalesce(bb.c, 0) AS BIGINT) AS c_b
-        |      FROM bins LEFT JOIN ba ON ba.bin = bins.bin
-        |                LEFT JOIN bb ON bb.bin = bins.bin),
-        |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
-        |          CAST(sum(c_b) AS BIGINT) AS n_b FROM j),
-        |p AS (SELECT j.*, n_a, n_b,
-        |    (c_a + CAST(0.5 AS DOUBLE)) / (n_a + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_a,
-        |    (c_b + CAST(0.5 AS DOUBLE)) / (n_b + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_b
-        |  FROM j CROSS JOIN tot),
+      smoothedBinCtes + """,
         |k AS (SELECT *, (p_a - p_b) * ln(p_a / p_b) AS contrib FROM p),
         |f AS (SELECT *,
         |    sum(contrib) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
@@ -75,19 +49,7 @@ object DriftGates {
         |       FROM (SELECT v, 1 AS ca, 0 AS cb FROM a
         |             UNION ALL SELECT v, 0, 1 FROM b)
         |       GROUP BY v),
-        |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |          CAST(sum(cb) AS BIGINT) AS n_b FROM pv),
-        |g AS (SELECT pv.*, n_a, n_b,
-        |    abs(CAST(sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_a
-        |      - CAST(sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_b) AS gap
-        |  FROM pv CROSS JOIN tot),
-        |m AS (SELECT max(gap) AS maxgap FROM g)
-        |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-        |  round(max(maxgap), 6) AS ks_d,
-        |  round(min(v), 6) AS at_value
-        |FROM g CROSS JOIN m WHERE gap = maxgap""".stripMargin),
+        |""".stripMargin + ksGapSql),
     // per-dimension embedding stats: the vector-side drift monitor
     Gate("q_emb_dim_stats", (s, d) =>
       graft.ops.Drift.embeddingDimStats(
@@ -147,12 +109,7 @@ object DriftGates {
       graft.ops.Drift.ksDrift(sc.filter(col("actual")),
         sc.filter(not(col("actual"))), "score")
     })(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+      demoWeightCtes + """,
         |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
         |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
         |           + 0.1))), 6) AS s
@@ -160,19 +117,7 @@ object DriftGates {
         |pv AS (SELECT s AS v, CAST(sum(l) AS BIGINT) AS ca,
         |         CAST(sum(1 - l) AS BIGINT) AS cb
         |       FROM sc GROUP BY s),
-        |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |          CAST(sum(cb) AS BIGINT) AS n_b FROM pv),
-        |g AS (SELECT pv.*, n_a, n_b,
-        |    abs(CAST(sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_a
-        |      - CAST(sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_b) AS gap
-        |  FROM pv CROSS JOIN tot),
-        |m AS (SELECT max(gap) AS maxgap FROM g)
-        |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-        |  round(max(maxgap), 6) AS ks_d,
-        |  round(min(v), 6) AS at_value
-        |FROM g CROSS JOIN m WHERE gap = maxgap""".stripMargin),
+        |""".stripMargin + ksGapSql),
     // Jensen-Shannon divergence over the same fixed bins as q_psi_drift
     // JSD: identical bins and smoothing as q_psi_drift, symmetric
     // divergence against the midpoint distribution
@@ -184,33 +129,7 @@ object DriftGates {
         ev.filter(col("event_type") === "purchase"),
         "value", lo = 0.0, hi = 500.0, bins = 10)
     })(
-      """WITH a AS (SELECT value FROM events WHERE event_type = 'click'),
-        |b AS (SELECT value FROM events WHERE event_type = 'purchase'),
-        |ba AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM a GROUP BY 1),
-        |bb AS (SELECT least(greatest(CAST(floor(
-        |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
-        |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
-        |           AS INTEGER), 0), 9) AS bin,
-        |         count(*) AS c FROM b GROUP BY 1),
-        |bins AS (SELECT CAST(i.i AS INTEGER) AS bin
-        |         FROM UNNEST(range(10)) AS i(i)),
-        |j AS (SELECT bins.bin,
-        |        CAST(coalesce(ba.c, 0) AS BIGINT) AS c_a,
-        |        CAST(coalesce(bb.c, 0) AS BIGINT) AS c_b
-        |      FROM bins LEFT JOIN ba ON ba.bin = bins.bin
-        |                LEFT JOIN bb ON bb.bin = bins.bin),
-        |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
-        |          CAST(sum(c_b) AS BIGINT) AS n_b FROM j),
-        |p AS (SELECT j.*, n_a, n_b,
-        |    (c_a + CAST(0.5 AS DOUBLE)) / (n_a + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_a,
-        |    (c_b + CAST(0.5 AS DOUBLE)) / (n_b + CAST(0.5 AS DOUBLE) * 10)
-        |      AS p_b
-        |  FROM j CROSS JOIN tot),
+      smoothedBinCtes + """,
         |k AS (SELECT *, (p_a + p_b) / CAST(2 AS DOUBLE) AS m FROM p),
         |k2 AS (SELECT *, (p_a * ln(p_a / m) + p_b * ln(p_b / m))
         |         / CAST(2 AS DOUBLE) AS contrib FROM k),
@@ -230,18 +149,7 @@ object DriftGates {
         .agg(round(sum(col("value")), 2).as("total"))
       graft.ops.Drift.cusumChangepoint(daily, "event_type", "day", "total")
     })(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, day, CAST(total AS DOUBLE) AS x,
-        |        avg(CAST(total AS DOUBLE)) OVER (PARTITION BY event_type)
-        |          AS m,
-        |        stddev_samp(CAST(total AS DOUBLE))
-        |          OVER (PARTITION BY event_type) AS sd,
-        |        CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-        |          AS n
-        |      FROM daily),
+      dailyMomentCtes + """,
         |c AS (SELECT *, round(abs(sum(x - m) OVER (PARTITION BY event_type
         |        ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND
         |        CURRENT ROW)), 6) AS ab
@@ -264,18 +172,7 @@ object DriftGates {
       graft.ops.Drift.pageHinkley(daily, "event_type", "day", "total",
         delta = 0.05, lambda = 3.0)
     })(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    round(sum(value), 2) AS total
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, day, CAST(total AS DOUBLE) AS x,
-        |        avg(CAST(total AS DOUBLE)) OVER (PARTITION BY event_type)
-        |          AS m,
-        |        stddev_samp(CAST(total AS DOUBLE))
-        |          OVER (PARTITION BY event_type) AS sd,
-        |        CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-        |          AS n
-        |      FROM daily),
+      dailyMomentCtes + """,
         |z AS (SELECT *, CASE WHEN sd > 0.0 THEN (x - m) / sd
         |        ELSE 0.0 END AS zz FROM w),
         |c AS (SELECT *, sum(zz - CAST(0.05 AS DOUBLE))
@@ -412,4 +309,78 @@ object DriftGates {
         |  rank <= k_star AS rejected
         |FROM a ORDER BY rank""".stripMargin),
   )
+
+  /** The binning shared by [[graft.ops.Drift.psiDrift]] and
+    * [[graft.ops.Drift.jsDivergence]] for click (a) against purchase (b)
+    * event values: 10 fixed bins over [0, 500) with out-of-range values
+    * clamped to the edge bins, zero-filled counts `j(bin, c_a, c_b)` and
+    * the dyadic 0.5-Laplace-smoothed shares `p(…, p_a, p_b)`.
+    */
+  private lazy val smoothedBinCtes: String =
+    """WITH a AS (SELECT value FROM events WHERE event_type = 'click'),
+      |b AS (SELECT value FROM events WHERE event_type = 'purchase'),
+      |ba AS (SELECT least(greatest(CAST(floor(
+      |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
+      |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
+      |           AS INTEGER), 0), 9) AS bin,
+      |         count(*) AS c FROM a GROUP BY 1),
+      |bb AS (SELECT least(greatest(CAST(floor(
+      |           (CAST(value AS DOUBLE) - CAST(0 AS DOUBLE))
+      |           / ((CAST(500 AS DOUBLE) - CAST(0 AS DOUBLE)) / 10))
+      |           AS INTEGER), 0), 9) AS bin,
+      |         count(*) AS c FROM b GROUP BY 1),
+      |bins AS (SELECT CAST(i.i AS INTEGER) AS bin
+      |         FROM UNNEST(range(10)) AS i(i)),
+      |j AS (SELECT bins.bin,
+      |        CAST(coalesce(ba.c, 0) AS BIGINT) AS c_a,
+      |        CAST(coalesce(bb.c, 0) AS BIGINT) AS c_b
+      |      FROM bins LEFT JOIN ba ON ba.bin = bins.bin
+      |                LEFT JOIN bb ON bb.bin = bins.bin),
+      |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
+      |          CAST(sum(c_b) AS BIGINT) AS n_b FROM j),
+      |p AS (SELECT j.*, n_a, n_b,
+      |    (c_a + CAST(0.5 AS DOUBLE)) / (n_a + CAST(0.5 AS DOUBLE) * 10)
+      |      AS p_a,
+      |    (c_b + CAST(0.5 AS DOUBLE)) / (n_b + CAST(0.5 AS DOUBLE) * 10)
+      |      AS p_b
+      |  FROM j CROSS JOIN tot)""".stripMargin
+
+  /** [[graft.ops.Drift.ksDrift]] over the pooled per-value counts
+    * `pv(v, ca, cb)`: the exact ECDF gap at every distinct value, the
+    * largest gap as ks_d and the smallest value where it occurs.
+    */
+  private lazy val ksGapSql: String =
+    """tot AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
+      |          CAST(sum(cb) AS BIGINT) AS n_b FROM pv),
+      |g AS (SELECT pv.*, n_a, n_b,
+      |    abs(CAST(sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
+      |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_a
+      |      - CAST(sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
+      |          PRECEDING AND CURRENT ROW) AS BIGINT) / n_b) AS gap
+      |  FROM pv CROSS JOIN tot),
+      |m AS (SELECT max(gap) AS maxgap FROM g)
+      |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
+      |  round(max(maxgap), 6) AS ks_d,
+      |  round(min(v), 6) AS at_value
+      |FROM g CROSS JOIN m WHERE gap = maxgap""".stripMargin
+
+  /** The daily series the changepoint monitors
+    * [[graft.ops.Drift.cusumChangepoint]] and
+    * [[graft.ops.Drift.pageHinkley]] read: per event type and day the
+    * value total rounded to cents, then `w(…, x, m, sd, n)` with each
+    * type's mean, sample stddev and day count.
+    */
+  private lazy val dailyMomentCtes: String =
+    """WITH daily AS (
+      |  SELECT event_type, CAST(ts AS DATE) AS day,
+      |    round(sum(value), 2) AS total
+      |  FROM events GROUP BY 1, 2),
+      |w AS (SELECT event_type, day, CAST(total AS DOUBLE) AS x,
+      |        avg(CAST(total AS DOUBLE)) OVER (PARTITION BY event_type)
+      |          AS m,
+      |        stddev_samp(CAST(total AS DOUBLE))
+      |          OVER (PARTITION BY event_type) AS sd,
+      |        CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
+      |          AS n
+      |      FROM daily)""".stripMargin
 }

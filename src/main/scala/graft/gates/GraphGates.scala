@@ -17,15 +17,7 @@ object GraphGates {
       graft.ops.Graph.pageRank(
         graft.ops.Graph.orderSequenceEdges(Tables.lineitem(s, d)),
         "src", "dst", iterations = 3, damping = 0.85, topK = 20))(
-      """WITH el AS (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
-        |            FROM lineitem),
-        |el2 AS (SELECT l_partkey AS src,
-        |          lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |            ORDER BY l_linenumber, l_partkey) AS dst
-        |        FROM el),
-        |e AS (SELECT src, dst FROM el2 WHERE dst IS NOT NULL),
-        |n AS (SELECT DISTINCT node FROM
-        |        (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+      orderSequenceCtes + """,
         |od AS (SELECT src, CAST(count(*) AS DOUBLE) AS od
         |       FROM e GROUP BY 1),
         |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS rank FROM n),
@@ -128,15 +120,7 @@ object GraphGates {
       graft.ops.Graph.hits(
         graft.ops.Graph.orderSequenceEdges(Tables.lineitem(s, d)),
         "src", "dst", iterations = 2, topK = 20))(
-      """WITH el AS (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
-        |            FROM lineitem),
-        |el2 AS (SELECT l_partkey AS src,
-        |          lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |            ORDER BY l_linenumber, l_partkey) AS dst
-        |        FROM el),
-        |e AS (SELECT src, dst FROM el2 WHERE dst IS NOT NULL),
-        |n AS (SELECT DISTINCT node FROM
-        |        (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+      orderSequenceCtes + """,
         |a0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS auth,
         |         CAST(1.0 AS DOUBLE) AS hub FROM n),
         |a1r AS (SELECT n.node, coalesce(s.v, 0.0) AS v FROM n LEFT JOIN
@@ -213,35 +197,7 @@ object GraphGates {
       graft.ops.Graph.basketPairs(Tables.lineitem(s, d), "l_orderkey",
         "l_partkey", minCo = 2, maxBasket = 12),
       "a", "b", rounds = 3))(
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-        |          l_partkey AS it FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e AS MATERIALIZED (SELECT a AS s, b AS t FROM p
-        |      UNION ALL SELECT b, a FROM p),
-        |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label
-        |      FROM e),
-        |r1 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN l0 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r2 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r1 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r3 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r2 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
+      lpa3Ctes + """,
         |cs AS (SELECT label, CAST(count(*) AS BIGINT)
         |         AS community_size FROM r3 GROUP BY 1)
         |SELECT r3.node, r3.label, cs.community_size
@@ -313,35 +269,7 @@ object GraphGates {
       // over the persisted partition — labels parquet-exact longs
       graft.ops.Graph.modularity(louvainBasketEdgesCp(s, d), "a", "b",
         lpa3Table(s, d)))(
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-        |          l_partkey AS it FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e AS MATERIALIZED (SELECT a AS s, b AS t FROM p
-        |      UNION ALL SELECT b, a FROM p),
-        |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label
-        |      FROM e),
-        |r1 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN l0 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r2 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r1 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r3 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r2 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
+      lpa3Ctes + """,
         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM p),
         |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
         |        (SELECT a AS node FROM p UNION ALL SELECT b FROM p)
@@ -541,6 +469,80 @@ object GraphGates {
        |FROM e$rounds GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
+  /** [[graft.ops.Graph.orderSequenceEdges]]: each order's part
+    * sequence in (linenumber, partkey) order as edges `e(src, dst)`, and
+    * the node set `n(node)`.
+    */
+  private lazy val orderSequenceCtes: String =
+    """WITH el AS (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
+      |            FROM lineitem),
+      |el2 AS (SELECT l_partkey AS src,
+      |          lead(l_partkey) OVER (PARTITION BY l_orderkey
+      |            ORDER BY l_linenumber, l_partkey) AS dst
+      |        FROM el),
+      |e AS (SELECT src, dst FROM el2 WHERE dst IS NOT NULL),
+      |n AS (SELECT DISTINCT node FROM
+      |        (SELECT src AS node FROM e UNION ALL SELECT dst FROM e))""".stripMargin
+
+  /** [[graft.ops.Graph.labelPropagation]] (3 synchronous rounds) over
+    * the [[graft.ops.Graph.basketPairs]] graph (baskets of at most 12
+    * items, pairs co-occurring at least twice): `p(a, b)`, both edge
+    * directions `e(s, t)`, then each round's (count DESC, label) mode of
+    * the neighbor labels, `r1`..`r3(node, label)`.
+    */
+  private lazy val lpa3Ctes: String = {
+    val rounds = (1 to 3).map { r =>
+      val prev = if (r == 1) "l0" else s"r${r - 1}"
+      s"""r$r AS MATERIALIZED (SELECT s AS node, label FROM (
+         |      SELECT s, label, row_number() OVER (PARTITION BY s
+         |          ORDER BY c DESC, label) AS rk FROM (
+         |        SELECT e.s, l.label, count(*) AS c FROM e
+         |        JOIN $prev l ON l.node = e.t GROUP BY e.s, l.label))
+         |      WHERE rk = 1)""".stripMargin
+    }
+    s"""WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
+       |          l_partkey AS it FROM lineitem),
+       |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
+       |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
+       |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
+       |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
+       |      GROUP BY 1, 2 HAVING count(*) >= 2),
+       |e AS MATERIALIZED (SELECT a AS s, b AS t FROM p
+       |      UNION ALL SELECT b, a FROM p),
+       |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label
+       |      FROM e),
+       |${rounds.mkString(",\n")}""".stripMargin
+  }
+
+  /** [[graft.ops.Graph.louvainMultiLevel]]'s levels: the sweep chain
+    * (level 0 = r5), four unrolled coarsen levels (rf, rfb, rfc, rfd),
+    * the per-level exact-int summaries and `pred(…, ok, keepr)`: ok = the
+    * level strictly improved q_num, keepr = every earlier level did.
+    */
+  private lazy val louvainLevelCtes: String =
+    louvainSweepChainSql + ",\n" +
+      louvainCoarseCtes("r5", "") + ",\n" +
+      louvainCoarseCtes("rf", "b") + ",\n" +
+      louvainCoarseCtes("rfb", "c") + ",\n" +
+      louvainCoarseCtes("rfc", "d") + ",\n" +
+      louvainLevelSummarySql("r5", 0) + ",\n" +
+      louvainLevelSummarySql("rf", 1) + ",\n" +
+      louvainLevelSummarySql("rfb", 2) + ",\n" +
+      louvainLevelSummarySql("rfc", 3) + ",\n" +
+      louvainLevelSummarySql("rfd", 4) + ",\n" +
+      """lvls AS (SELECT * FROM qsl0 UNION ALL SELECT * FROM qsl1
+        |      UNION ALL SELECT * FROM qsl2 UNION ALL SELECT * FROM qsl3
+        |      UNION ALL SELECT * FROM qsl4),
+        |seqd AS (SELECT *, lag(q_num) OVER (ORDER BY level) AS prevq
+        |      FROM lvls),
+        |impd AS (SELECT *, CASE WHEN level = 0 THEN 1
+        |             WHEN q_num > prevq THEN 1 ELSE 0 END AS ok
+        |      FROM seqd),
+        |pred AS (SELECT *, coalesce(min(ok) OVER (ORDER BY level
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 1)
+        |          AS keepr
+        |      FROM impd)""".stripMargin
+
   /** Shared q_louvain* chain: capped basket pairs -> 3 LPA rounds ->
     * one direction-alternating node-level local-move sweep (r4
     * down-or-stay: cand <= label; r5 up-or-stay: cand >= label —
@@ -552,35 +554,7 @@ object GraphGates {
     * [[newmanTailSql]].
     */
   private lazy val louvainSweepChainSql: String =
-    """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS bk,
-        |          l_partkey AS it FROM lineitem),
-        |sz AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 12),
-        |s AS (SELECT b.bk, b.it FROM b JOIN sz ON sz.bk = b.bk),
-        |p AS MATERIALIZED (SELECT a.it AS a, c.it AS b
-        |      FROM s a JOIN s c ON c.bk = a.bk AND a.it < c.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e AS MATERIALIZED (SELECT a AS s, b AS t FROM p
-        |      UNION ALL SELECT b, a FROM p),
-        |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label
-        |      FROM e),
-        |r1 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN l0 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r2 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r1 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
-        |r3 AS MATERIALIZED (SELECT s AS node, label FROM (
-        |      SELECT s, label, row_number() OVER (PARTITION BY s
-        |          ORDER BY c DESC, label) AS rk FROM (
-        |        SELECT e.s, l.label, count(*) AS c FROM e
-        |        JOIN r2 l ON l.node = e.t GROUP BY e.s, l.label))
-        |      WHERE rk = 1),
+    lpa3Ctes + """,
         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM p),
         |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
         |        (SELECT a AS node FROM p UNION ALL SELECT b FROM p)
@@ -756,28 +730,7 @@ object GraphGates {
     * levels (which the Scala side never computes) are dropped.
     */
   private def louvainMultiOracle: String =
-    louvainSweepChainSql + ",\n" +
-      louvainCoarseCtes("r5", "") + ",\n" +
-      louvainCoarseCtes("rf", "b") + ",\n" +
-      louvainCoarseCtes("rfb", "c") + ",\n" +
-      louvainCoarseCtes("rfc", "d") + ",\n" +
-      louvainLevelSummarySql("r5", 0) + ",\n" +
-      louvainLevelSummarySql("rf", 1) + ",\n" +
-      louvainLevelSummarySql("rfb", 2) + ",\n" +
-      louvainLevelSummarySql("rfc", 3) + ",\n" +
-      louvainLevelSummarySql("rfd", 4) + ",\n" +
-      """lvls AS (SELECT * FROM qsl0 UNION ALL SELECT * FROM qsl1
-        |      UNION ALL SELECT * FROM qsl2 UNION ALL SELECT * FROM qsl3
-        |      UNION ALL SELECT * FROM qsl4),
-        |seqd AS (SELECT *, lag(q_num) OVER (ORDER BY level) AS prevq
-        |      FROM lvls),
-        |impd AS (SELECT *, CASE WHEN level = 0 THEN 1
-        |             WHEN q_num > prevq THEN 1 ELSE 0 END AS ok
-        |      FROM seqd),
-        |pred AS (SELECT *, coalesce(min(ok) OVER (ORDER BY level
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 1)
-        |          AS keepr
-        |      FROM impd)
+    louvainLevelCtes + """
         |SELECT CAST(level AS INTEGER) AS level, n_communities, q_num,
         |  round(q_num / (4.0 * mm.m * mm.m), 6) + 0.0 AS q_modularity
         |FROM pred CROSS JOIN mm WHERE keepr = 1
@@ -791,28 +744,7 @@ object GraphGates {
     * assignment, with per-community sizes.
     */
   private def louvainAssignCtes: String =
-    louvainSweepChainSql + ",\n" +
-      louvainCoarseCtes("r5", "") + ",\n" +
-      louvainCoarseCtes("rf", "b") + ",\n" +
-      louvainCoarseCtes("rfb", "c") + ",\n" +
-      louvainCoarseCtes("rfc", "d") + ",\n" +
-      louvainLevelSummarySql("r5", 0) + ",\n" +
-      louvainLevelSummarySql("rf", 1) + ",\n" +
-      louvainLevelSummarySql("rfb", 2) + ",\n" +
-      louvainLevelSummarySql("rfc", 3) + ",\n" +
-      louvainLevelSummarySql("rfd", 4) + ",\n" +
-      """lvls AS (SELECT * FROM qsl0 UNION ALL SELECT * FROM qsl1
-        |      UNION ALL SELECT * FROM qsl2 UNION ALL SELECT * FROM qsl3
-        |      UNION ALL SELECT * FROM qsl4),
-        |seqd AS (SELECT *, lag(q_num) OVER (ORDER BY level) AS prevq
-        |      FROM lvls),
-        |impd AS (SELECT *, CASE WHEN level = 0 THEN 1
-        |             WHEN q_num > prevq THEN 1 ELSE 0 END AS ok
-        |      FROM seqd),
-        |pred AS (SELECT *, coalesce(min(ok) OVER (ORDER BY level
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 1)
-        |          AS keepr
-        |      FROM impd),
+    louvainLevelCtes + """,
         |chosen AS (SELECT max(level) AS lvl FROM pred
         |           WHERE keepr = 1 AND ok = 1),
         |asg AS (SELECT r5.node,

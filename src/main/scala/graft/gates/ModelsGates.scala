@@ -57,15 +57,7 @@ object ModelsGates {
       graft.ops.Models.scoreLinear(Tables.embeddings(s, d), "vec_id",
         "embedding", Seq("label"),
         graft.ops.Models.md5Weights(s, "demo", 64), bias = 0.1))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w)
+      demoLogitCtes + """
         |SELECT vec_id, label, score,
         |  score > 0.5 AS predicted
         |FROM (SELECT vec_id, label,
@@ -79,15 +71,7 @@ object ModelsGates {
     Gate("q_eval_classify", (s, d) =>
       graft.ops.Models.evalClassification(scoredDemo(s, d),
         "actual", "predicted"))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w),
+      demoLogitCtes + """,
         |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS l,
         |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
         |      FROM s),
@@ -136,15 +120,7 @@ object ModelsGates {
     Gate("q_confusion", (s, d) =>
       graft.ops.Models.confusionMatrix(scoredDemo(s, d),
         "actual", "predicted", Seq("false", "true")))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w),
+      demoLogitCtes + """,
         |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS actual,
         |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
         |      FROM s)
@@ -232,17 +208,7 @@ object ModelsGates {
     // numerator accumulated in score order on both sides
     Gate("q_roc_auc", (s, d) =>
       graft.ops.Models.rocAuc(scoredDemo(s, d), "actual", "score"))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
+      demoScoreCtes + """,
         |g AS (SELECT s, CAST(sum(l) AS BIGINT) AS pos,
         |        CAST(sum(1 - l) AS BIGINT) AS neg
         |      FROM sc GROUP BY s),
@@ -267,17 +233,7 @@ object ModelsGates {
     Gate("q_calibration", (s, d) =>
       graft.ops.Models.calibration(scoredDemo(s, d),
         "actual", "score", bins = 10))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w)
+      demoScoreCtes + """
         |SELECT CAST(least(greatest(CAST(floor(s * 10) AS INTEGER), 0), 9)
         |    AS INTEGER) AS bin,
         |  CAST(count(*) AS BIGINT) AS n,
@@ -291,17 +247,7 @@ object ModelsGates {
     Gate("q_ece", (s, d) =>
       graft.ops.Models.calibrationError(scoredDemo(s, d),
         "actual", "score", bins = 10))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
+      demoScoreCtes + """,
         |cal AS (SELECT CAST(least(greatest(CAST(floor(s * 10)
         |      AS INTEGER), 0), 9) AS INTEGER) AS bin,
         |    CAST(count(*) AS BIGINT) AS n,
@@ -330,17 +276,7 @@ object ModelsGates {
     Gate("q_isotonic", (s, d) =>
       graft.ops.Models.isotonicCalibration(scoredDemo(s, d),
         "actual", "score", bins = 16))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |sc AS (SELECT vec_id,
-        |         CAST(label % 2 = 1 AS INTEGER) AS l,
-        |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
-        |           + 0.1))), 6) AS s
-        |       FROM u CROSS JOIN w),
+      demoScoreCtes + """,
         |b AS (SELECT CAST(least(greatest(CAST(floor(s * 16) AS BIGINT),
         |          0), 15) AS INTEGER) AS bin,
         |        CAST(count(*) AS BIGINT) AS n,
@@ -366,12 +302,7 @@ object ModelsGates {
         |FROM b JOIN iso i USING (bin) ORDER BY bin""".stripMargin),
     Gate("q_brier", (s, d) =>
       graft.ops.Models.brierScore(scoredDemo(s, d), "actual", "score"))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+      demoWeightCtes + """,
         |sc AS (SELECT CAST(CAST(label % 2 = 1 AS INTEGER) AS DOUBLE) AS l,
         |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
         |           + 0.1))), 6) AS s
@@ -755,12 +686,7 @@ object ModelsGates {
     // via an ordered window so both engines accumulate identically
     Gate("q_pr_auc", (s, d) =>
       graft.ops.Models.prAuc(scoredDemo(s, d), "actual", "score"))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+      demoWeightCtes + """,
         |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
         |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
         |           + 0.1))), 6) AS s
@@ -790,12 +716,7 @@ object ModelsGates {
     Gate("q_lift_gain", (s, d) =>
       graft.ops.Models.liftGain(scoredDemo(s, d), "actual", "score",
         buckets = 10))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
+      demoWeightCtes + """,
         |sc AS (SELECT CAST(label % 2 = 1 AS INTEGER) AS l,
         |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
         |           + 0.1))), 6) AS s
@@ -1430,9 +1351,6 @@ object ModelsGates {
     * dot/norm spelling both engines), so the greedy path is identical.
     */
   private def mmrSelectOracle(k: Int): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
     val rounds = (2 to k).map { r =>
       val p = r - 1
       s"""m$r AS (SELECT c.vec_id, max(${cos("c.v", "s.v")}) AS ms

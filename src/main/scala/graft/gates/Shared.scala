@@ -456,14 +456,11 @@ private[gates] object Shared {
        |      6) AS score
        |  FROM cf, stm, bfin b)""".stripMargin
 
-  /** The shared trigram stupid-backoff CTE chain (through `pd`):
-    * train-split count tables, eval trigram projection, the LEFT-join
-    * backoff ladder (exact-count quotients, dyadic λ = 1/2, smoothed
-    * unigram floor), per-doc ln sums. q_lm_trigram appends the per-doc
-    * final select; q_ccnet_buckets appends the percentile bucketing.
-    * `ev` carries `source` for the bucket rollup.
+  /** The count tables of [[graft.ops.Text.lmCountIndex]] up to order 3
+    * over the % 7 != 0 train split `tr` (`uni`, `bi`, `tri`, plus the
+    * token and vocabulary sizes `nv`), and the % 7 = 0 eval docs `ev`.
     */
-  lazy val lmTrigramChainSql: String =
+  private lazy val lmCountCtes: String =
     """WITH tr AS (SELECT string_split(text, ' ') AS t
       |            FROM documents WHERE doc_id % 7 <> 0),
       |ev AS (SELECT doc_id, source, string_split(text, ' ') AS t
@@ -482,7 +479,17 @@ private[gates] object Shared {
       |        FROM tr CROSS JOIN
       |          UNNEST(range(1, greatest(len(t) - 2, 1) + 1)) AS i(i)
       |        WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL
-      |        GROUP BY 1, 2, 3),
+      |        GROUP BY 1, 2, 3)""".stripMargin
+
+  /** The shared trigram stupid-backoff CTE chain (through `pd`):
+    * train-split count tables, eval trigram projection, the LEFT-join
+    * backoff ladder (exact-count quotients, dyadic λ = 1/2, smoothed
+    * unigram floor), per-doc ln sums. q_lm_trigram appends the per-doc
+    * final select; q_ccnet_buckets appends the percentile bucketing.
+    * `ev` carries `source` for the bucket rollup.
+    */
+  lazy val lmTrigramChainSql: String =
+    lmCountCtes + """,
       |eg AS (SELECT doc_id, t[i.i] AS w1, t[i.i + 1] AS w2,
       |         t[i.i + 2] AS w3
       |       FROM ev CROSS JOIN
@@ -524,25 +531,7 @@ private[gates] object Shared {
     * final select; q_ccnet_buckets5 appends the percentile bucketing.
     */
   lazy val lm5gramChainSql: String =
-    """WITH tr AS (SELECT string_split(text, ' ') AS t
-      |            FROM documents WHERE doc_id % 7 <> 0),
-      |ev AS (SELECT doc_id, source, string_split(text, ' ') AS t
-      |       FROM documents WHERE doc_id % 7 = 0),
-      |uni AS (SELECT u.w, CAST(count(*) AS BIGINT) AS c1
-      |        FROM tr, UNNEST(t) AS u(w) GROUP BY 1),
-      |nv AS (SELECT CAST(sum(c1) AS DOUBLE) AS n,
-      |         CAST(count(*) AS DOUBLE) AS v FROM uni),
-      |bi AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2,
-      |         CAST(count(*) AS BIGINT) AS c2
-      |       FROM tr CROSS JOIN
-      |         UNNEST(range(1, greatest(len(t) - 1, 1) + 1)) AS i(i)
-      |       WHERE t[i.i + 1] IS NOT NULL GROUP BY 1, 2),
-      |tri AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2, t[i.i + 2] AS w3,
-      |          CAST(count(*) AS BIGINT) AS c3
-      |        FROM tr CROSS JOIN
-      |          UNNEST(range(1, greatest(len(t) - 2, 1) + 1)) AS i(i)
-      |        WHERE t[i.i + 1] IS NOT NULL AND t[i.i + 2] IS NOT NULL
-      |        GROUP BY 1, 2, 3),
+    lmCountCtes + """,
       |fou AS (SELECT t[i.i] AS w1, t[i.i + 1] AS w2, t[i.i + 2] AS w3,
       |          t[i.i + 3] AS w4, CAST(count(*) AS BIGINT) AS c4
       |        FROM tr CROSS JOIN
@@ -609,4 +598,184 @@ private[gates] object Shared {
       |      AS BIGINT) AS n_1_hits,
       |    sum(ln(s)) AS lp
       |  FROM sc GROUP BY doc_id)""".stripMargin
+
+  /** Cosine of two DuckDB double lists, in the sequential dot/norm
+    * spelling of [[graft.functions.CosineSimilarity]] and the
+    * `nearest_cos` kernel: dot(a, b) / (sqrt(dot(a, a)) · sqrt(dot(b, b))).
+    */
+  def cos(a: String, b: String): String =
+    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
+      s"* sqrt(list_dot_product($b, $b)))"
+
+  /** Squared L2 distance, the `nearest_l2` kernel's order key, spelled
+    * dot(a, a) − 2·dot(a, b) + dot(b, b). Spark folds squared
+    * differences instead (Similarity.l2sq); on the 1/1024 dyadic lattice
+    * both spellings are exact, so they agree bit for bit.
+    */
+  def d2(a: String, b: String): String =
+    s"(list_dot_product($a, $a) - 2 * list_dot_product($a, $b) " +
+      s"+ list_dot_product($b, $b))"
+
+  /** The embedding corpus as double lists, `u(vec_id, v)`: the widening
+    * every vector operator applies to the float `embedding` column.
+    */
+  lazy val embVecCte: String =
+    """WITH u AS (SELECT vec_id,
+      |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      |           FROM embeddings)""".stripMargin
+
+  /** [[graft.ops.Similarity.lshBuckets]] over `u(vec_id, v)`: the
+    * md5-derived hyperplanes w(t, p, d) = (int('0x' ||
+    * md5('plane_t_p_d')[:15]) % 2000001 − 10^6) / 10^6 (CTE `pl`) and
+    * each vector's per-table bucket, the bits of its positive-dot planes
+    * (CTE `bkt`). `planes` is SQL: a literal or a count-derived
+    * subquery.
+    */
+  def hyperplaneCtes(tables: Int, planes: String): String =
+    s"""pl AS (SELECT t.t AS tbl, p.p AS plane,
+       |         list_transform(range(64), d ->
+       |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
+       |              || '_' || d), 1, 15) AS BIGINT)
+       |              % 2000001 - 1000000) / 1000000.0) AS w
+       |       FROM UNNEST(range($tables)) AS t(t)
+       |       CROSS JOIN UNNEST(range($planes)) AS p(p)),
+       |bkt AS (SELECT u.vec_id, pl.tbl,
+       |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
+       |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
+       |            AS BIGINT) AS bucket
+       |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl)""".stripMargin
+
+  /** [[graft.ops.Dedup.dupClusters]] over the pair CTE `dup(id_i,
+    * id_j)`: undirected `edges`, the recursive transitive closure
+    * `reach`, and `lab(id, cluster_id)`, the minimum reachable id. The
+    * enclosing query must open with WITH RECURSIVE.
+    */
+  lazy val dupClosureCtes: String =
+    """edges AS (SELECT id_i AS src, id_j AS dst FROM dup
+      |          UNION SELECT id_j, id_i FROM dup),
+      |reach(src, dst) AS (
+      |  SELECT DISTINCT src, src FROM edges
+      |  UNION
+      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
+      |lab AS (SELECT src AS id, min(dst) AS cluster_id
+      |        FROM reach GROUP BY src)""".stripMargin
+
+  /** The distinct word-3-shingle set `sh(doc_id, s)` of
+    * [[graft.ops.Dedup.ngramJaccardPairs]] over `toks(doc_id, t)`.
+    */
+  lazy val shingleCte: String =
+    """sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
+      |       FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i))"""
+      .stripMargin
+
+  /** The 3-shingle set of [[shingleCte]] with
+    * [[graft.ops.Dedup.ngramJaccardPairs]]' `maxDocFreq = Some(10)` cap:
+    * shingles held by more than 10 docs are dropped before pairing.
+    */
+  lazy val cappedShingleCtes: String =
+    """sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
+      |        FROM toks, UNNEST(range(1, greatest(len(t)-1, 2))) AS u(i)),
+      |sh AS (SELECT sh0.* FROM sh0
+      |       JOIN (SELECT s, count(*) AS df FROM sh0 GROUP BY s) f
+      |         ON f.s = sh0.s AND f.df <= 10)""".stripMargin
+
+  /** The shingle-overlap counts of [[graft.ops.Dedup.ngramJaccardPairs]]
+    * over `sh`: per-doc sizes and `pairs(id_i, id_j, c)`, the shared
+    * shingle count of every co-occurring pair.
+    */
+  lazy val shinglePairCtes: String =
+    """sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |pairs AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
+      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+      |          GROUP BY 1, 2)""".stripMargin
+
+  /** [[graft.ops.Dedup.dupClusters]] over
+    * [[graft.ops.Dedup.ngramJaccardPairs]] (n = 3, threshold 0.8) on
+    * `documents`: the tokens, [[shingleCte]], per-doc shingle counts,
+    * the pair counts, the Jaccard-thresholded `dup` pairs and then
+    * [[dupClosureCtes]], ending at `lab(id, cluster_id)`.
+    */
+  lazy val jaccardClosureCtes: String =
+    """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t
+      |              FROM documents),
+      |""".stripMargin + shingleCte + """,
+      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |p AS (SELECT a.doc_id AS id_i, b.doc_id AS id_j, count(*) AS c
+      |      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+      |      GROUP BY 1, 2),
+      |dup AS (SELECT id_i, id_j FROM p
+      |        JOIN sizes sa ON sa.doc_id = id_i
+      |        JOIN sizes sb ON sb.doc_id = id_j
+      |        WHERE round(c * 1.0 / (sa.n + sb.n - c), 6) >= 0.8),
+      |""".stripMargin + dupClosureCtes
+
+  /** [[graft.ops.Dedup.minhashSignatures]] (32 hashes) and its 8 bands
+    * of 4 over [[shingleCte]]: one md5 per shingle, the arithmetic hash
+    * family ((h % 2^31)·(2i + 1) + 1000003·i) % (2^31 − 1), per-doc
+    * minima `mh(doc_id, i, m)` and the band signature strings
+    * `bands(doc_id, band, bsig)`.
+    */
+  lazy val minhashBandCtes: String =
+    shingleCte + """,
+      |mh AS (SELECT doc_id, r.i AS i,
+      |         min(((CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
+      |               % 2147483648) * (2 * r.i + 1) + 1000003 * r.i)
+      |             % 2147483647) AS m
+      |       FROM sh CROSS JOIN UNNEST(range(32)) AS r(i)
+      |       GROUP BY doc_id, r.i),
+      |bands AS (SELECT doc_id, i // 4 AS band,
+      |            string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS bsig
+      |          FROM mh GROUP BY doc_id, i // 4)""".stripMargin
+
+  /** The candidate verification of [[graft.ops.Dedup.minhashLshPairs]]
+    * after [[minhashBandCtes]]: pairs sharing any band `cand(id_i,
+    * id_j)`, per-doc shingle counts `sizes` and the exact common-shingle
+    * counts `common(id_i, id_j, nc)` the Jaccard threshold reads.
+    */
+  lazy val minhashCommonCtes: String =
+    """cand AS (SELECT DISTINCT a.doc_id AS id_i, b.doc_id AS id_j
+      |         FROM bands a JOIN bands b
+      |           ON a.band = b.band AND a.bsig = b.bsig
+      |              AND a.doc_id < b.doc_id),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |common AS (SELECT c.id_i, c.id_j, count(*) AS nc
+      |           FROM cand c
+      |           JOIN sh a ON a.doc_id = c.id_i
+      |           JOIN sh b ON b.doc_id = c.id_j AND b.s = a.s
+      |           GROUP BY c.id_i, c.id_j)""".stripMargin
+
+  /** [[scoredDemo]]'s inputs: the labeled vectors `u(vec_id, label, v)`
+    * widened to double, and the md5 demo weights `w(wv)` of
+    * `Models.md5Weights(s, "demo", 64)`.
+    */
+  lazy val demoWeightCtes: String =
+    """WITH u AS (SELECT vec_id, label,
+      |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      |           FROM embeddings),
+      |w AS (SELECT list_transform(range(64), d ->
+      |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
+      |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv)""".stripMargin
+
+  /** [[scoredDemo]]'s logit: [[demoWeightCtes]], then
+    * `s(vec_id, label, z)` with z = w·v + 0.1 (the sequential dot of
+    * `Models.scoreLinear`).
+    */
+  lazy val demoLogitCtes: String =
+    demoWeightCtes + """,
+      |s AS (SELECT vec_id, label,
+      |        list_dot_product(u.v, w.wv) + 0.1 AS z
+      |      FROM u CROSS JOIN w)""".stripMargin
+
+  /** [[scoredDemo]]'s scores: [[demoWeightCtes]], then
+    * `sc(vec_id, l, s)` with the odd-label truth l and the score
+    * s = σ(w·v + 0.1) rounded to 6 digits, as `Models.scoreLinear`
+    * emits it.
+    */
+  lazy val demoScoreCtes: String =
+    demoWeightCtes + """,
+      |sc AS (SELECT vec_id,
+      |         CAST(label % 2 = 1 AS INTEGER) AS l,
+      |         round(1.0 / (1.0 + exp(-(list_dot_product(u.v, w.wv)
+      |           + 0.1))), 6) AS s
+      |       FROM u CROSS JOIN w)""".stripMargin
 }

@@ -1,7 +1,9 @@
 package graft
 package gates
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.Similarity
+import Shared._
 
 /** The gates whose plans call [[graft.ops.Similarity]] first: each plan
   * declared beside the DuckDB oracle SQL its result must match. */
@@ -13,9 +15,7 @@ object SimilarityGates {
       Similarity.cosineTopK(emb, emb.filter(col("vec_id") % 100 === 0),
         "vec_id", "embedding", k = 5)
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
+      embVecCte + """,
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
         |    list_dot_product(q.v, c.v)
@@ -36,40 +36,7 @@ object SimilarityGates {
       Similarity.annTopKWithin(Tables.embeddings(s, d),
         col("vec_id") % 100 === 0, "vec_id", "embedding", k = 5)
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 0),
-        |cand AS (SELECT DISTINCT qb.vec_id AS query_id, b.vec_id AS cand_id
-        |         FROM qb JOIN bkt b
-        |           ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-        |          AND b.vec_id <> qb.vec_id),
-        |scored AS (SELECT c.query_id, c.cand_id,
-        |    list_dot_product(uq.v, uc.v)
-        |      / (sqrt(list_dot_product(uq.v, uq.v))
-        |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
-        |  FROM cand c
-        |  JOIN u uq ON uq.vec_id = c.query_id
-        |  JOIN u uc ON uc.vec_id = c.cand_id),
-        |rk AS (SELECT query_id, cand_id, cos,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, cand_id) AS rk
-        |  FROM scored)
-        |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-        |  round(cos, 6) AS cos_sim
-        |FROM rk WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin),
+      annTopKOracle(queryRem = 0)),
     // graded ranking-quality scorecard over the cosine retrieval
     // baseline: NDCG@10 with the CORPUS-WIDE ideal (from the label
     // histogram, not the top-k list), MRR, precision/recall@10 —
@@ -212,49 +179,14 @@ object SimilarityGates {
       Similarity.annTopK(emb, emb.filter(col("vec_id") % 100 === 50),
         "vec_id", "embedding", k = 5)
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 50),
-        |cand AS (SELECT DISTINCT qb.vec_id AS query_id, b.vec_id AS cand_id
-        |         FROM qb JOIN bkt b
-        |           ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-        |          AND b.vec_id <> qb.vec_id),
-        |scored AS (SELECT c.query_id, c.cand_id,
-        |    list_dot_product(uq.v, uc.v)
-        |      / (sqrt(list_dot_product(uq.v, uq.v))
-        |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
-        |  FROM cand c
-        |  JOIN u uq ON uq.vec_id = c.query_id
-        |  JOIN u uc ON uc.vec_id = c.cand_id),
-        |rk AS (SELECT query_id, cand_id, cos,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, cand_id) AS rk
-        |  FROM scored)
-        |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-        |  round(cos, 6) AS cos_sim
-        |FROM rk WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin),
+      annTopKOracle(queryRem = 50)),
     // scalar int8 quantization of the embedding corpus: per-dim [min,max]
     // grid, integer code checksums + reconstruction error per vector
     // int8 quantization: per-dim edges, code grid, reconstruction error —
     // codes integer-exact, error folds identical-operand
     Gate("q_emb_quantize", (s, d) => Similarity.quantizeEmbeddings(
       Tables.embeddings(s, d), "vec_id", "embedding"))(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
+      embVecCte + """,
         |mm AS (SELECT d.d AS d, min(u.v[d.d + 1]) AS mn,
         |         max(u.v[d.d + 1]) AS mx
         |       FROM u CROSS JOIN UNNEST(range(64)) AS d(d) GROUP BY d.d),
@@ -278,9 +210,7 @@ object SimilarityGates {
     Gate("q_emb_truncate", (s, d) => Similarity.truncationEnergy(
       Tables.embeddings(s, d), "vec_id", "embedding",
       dims = Seq(8, 16, 32, 64)))(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
+      embVecCte + """,
         |en AS (SELECT k.k,
         |         list_dot_product(u.v[1:k.k], u.v[1:k.k])
         |           / list_dot_product(u.v, u.v) AS energy
@@ -297,12 +227,6 @@ object SimilarityGates {
     // rounds (this was the last float-order no_oracle gate). The
     // SimilaritySpec exactness gate (nprobe = nCells ⇒ equals brute
     // force) and the nprobe = 2 recall floor still hold.
-    // ANN is deterministic end-to-end: the hyperplanes are md5-derived
-    // (same recipe as q_emb_cosine_dup_lsh, planes=4), candidates are
-    // bucket-equality, and ranking uses the same sequential-fold cosine —
-    // so the "approximate" index is still exactly hash-checkable
-    // full IVF replay: dyadic Lloyd training + inverted file + probe +
-    // exact verify (see ivfTopKOracle)
     Gate("q_ivf_topk", (s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
@@ -412,30 +336,9 @@ object SimilarityGates {
     // its higher-quality member, all unplanted vectors kept. The pair
     // pass runs the default top-2 multi-probe, so a planted pair
     // straddling a converged cell boundary is still examined.
-    Gate("q_semdedup", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.embeddings(s, d)
-      val orig = emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double"))
-          .as("embedding"))
-      val planted = emb.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            x.cast("double") + when(i % 2 === 0, lit(0.00390625))
-              .otherwise(lit(-0.00390625))).as("embedding"))
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"))
-      val corpus = orig.unionAll(planted)
-        .join(docs, expr("vec_id % 100000") === col("doc_id"))
-        .select(col("vec_id"), col("embedding"),
-          (col("n_chars") +
-            when(col("vec_id") >= 100000L && col("vec_id") % 50 === 0,
-              lit(7))
-              .when(col("vec_id") >= 100000L, lit(-1))
-              .otherwise(lit(0))).cast("long").as("quality"))
-      Similarity.semDedup(corpus, "vec_id", "embedding", "quality",
-        threshold = 0.95, nCells = 16, iters = 2)
-    })(
+    Gate("q_semdedup", (s, d) => Similarity.semDedup(
+      plantedCorpus(s, d), "vec_id", "embedding", "quality",
+      threshold = 0.95, nCells = 16, iters = 2))(
       semDedupOracle(nCells = 16, iters = 2,
       threshold = 0.95)),
     // occupancy-stable semDedup: the cell count DERIVED from the corpus
@@ -447,30 +350,9 @@ object SimilarityGates {
     // closure + quality keeper (full composition in SQL)
     // auto-celled variant: same Lloyd/probe/closure/keeper replay, the
     // c0 seed row-filtered by the count-derived nc instead of LIMIT
-    Gate("q_semdedup_auto", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.embeddings(s, d)
-      val orig = emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double"))
-          .as("embedding"))
-      val planted = emb.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            x.cast("double") + when(i % 2 === 0, lit(0.00390625))
-              .otherwise(lit(-0.00390625))).as("embedding"))
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"))
-      val corpus = orig.unionAll(planted)
-        .join(docs, expr("vec_id % 100000") === col("doc_id"))
-        .select(col("vec_id"), col("embedding"),
-          (col("n_chars") +
-            when(col("vec_id") >= 100000L && col("vec_id") % 50 === 0,
-              lit(7))
-              .when(col("vec_id") >= 100000L, lit(-1))
-              .otherwise(lit(0))).cast("long").as("quality"))
-      Similarity.semDedupAuto(corpus, "vec_id", "embedding", "quality",
-        threshold = 0.95, minCells = 4, targetPerCell = 64, iters = 2)
-    })(
+    Gate("q_semdedup_auto", (s, d) => Similarity.semDedupAuto(
+      plantedCorpus(s, d), "vec_id", "embedding", "quality",
+      threshold = 0.95, minCells = 4, targetPerCell = 64, iters = 2))(
       semDedupOracle(nCells = 0, iters = 2,
       threshold = 0.95, auto = Some((4, 64)))),
     // cluster-balanced diverse subset: perCell md5-ordered picks from
@@ -560,9 +442,7 @@ object SimilarityGates {
         col("vec_id") % 50 === 0, col("vec_id") % 50 === 7,
         "vec_id", "embedding", kDims = 16)
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
+      embVecCte + """,
         |pl AS (SELECT r.r AS r,
         |         list_transform(range(64), d ->
         |           CASE WHEN (CAST('0x' || substr(md5('plane_99_' || r.r
@@ -607,31 +487,7 @@ object SimilarityGates {
         col("vec_id") % 100 === 0, "vec_id", "embedding", k = 5,
         tablesGrid = Seq(2, 4, 8), planes = 4)
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |ex AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v))
-        |           * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
-        |      AS rk
-        |  FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 100 = 0) q
-        |  WHERE c.vec_id <> q.vec_id),
-        |exact AS (SELECT query_id, cand_id FROM ex WHERE rk <= 5),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
+      exactAndBucketCtes + """,
         |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 0),
         |pairs AS (SELECT qb.vec_id AS query_id, b.vec_id AS cand_id,
         |            min(b.tbl) AS mt
@@ -741,51 +597,12 @@ object SimilarityGates {
     // so recall@k is a deterministic function of two deterministic result
     // sets — the oracle recomputes both (the q_cosine_topk and q_ann_topk
     // CTEs verbatim) and joins them; SimilaritySpec still asserts the floor
-    // recall@k as a deterministic join of the two deterministic result
-    // sets above: the exact brute-force top-k (q_cosine_topk CTE) left-
-    // joined to the md5-derived LSH top-k (q_ann_topk CTE)
     Gate("q_ann_recall", (s, d) => {
       import org.apache.spark.sql.functions.col
       graft.ops.Similarity.annRecall(Tables.embeddings(s, d),
         col("vec_id") % 100 === 0, "vec_id", "embedding", k = 5)
     })(
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |ex AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v))
-        |           * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
-        |      AS rk
-        |  FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 100 = 0) q
-        |  WHERE c.vec_id <> q.vec_id),
-        |exact AS (SELECT query_id, cand_id FROM ex WHERE rk <= 5),
-        |pl AS (SELECT t.t AS tbl, p.p AS plane,
-        |         list_transform(range(64), d ->
-        |           (CAST('0x' || substr(md5('plane_' || t.t || '_' || p.p
-        |              || '_' || d), 1, 15) AS BIGINT)
-        |              % 2000001 - 1000000) / 1000000.0) AS w
-        |       FROM UNNEST(range(8)) AS t(t)
-        |       CROSS JOIN UNNEST(range(4)) AS p(p)),
-        |bkt AS (SELECT u.vec_id, pl.tbl,
-        |          CAST(sum(CASE WHEN list_dot_product(u.v, pl.w) > 0
-        |            THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END)
-        |            AS BIGINT) AS bucket
-        |        FROM u CROSS JOIN pl GROUP BY u.vec_id, pl.tbl),
-        |qb AS (SELECT * FROM bkt WHERE vec_id % 100 = 0),
-        |cand AS (SELECT DISTINCT qb.vec_id AS query_id, b.vec_id AS cand_id
-        |         FROM qb JOIN bkt b
-        |           ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-        |          AND b.vec_id <> qb.vec_id),
-        |scored AS (SELECT c.query_id, c.cand_id,
-        |    list_dot_product(uq.v, uc.v)
-        |      / (sqrt(list_dot_product(uq.v, uq.v))
-        |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
-        |  FROM cand c
-        |  JOIN u uq ON uq.vec_id = c.query_id
-        |  JOIN u uc ON uc.vec_id = c.cand_id),
+      exactAndBucketCtes + ",\n" + lshScoredCtes(queryRem = 0) + """,
         |ann AS (SELECT query_id, cand_id FROM (
         |    SELECT query_id, cand_id,
         |      row_number() OVER (PARTITION BY query_id
@@ -803,21 +620,109 @@ object SimilarityGates {
         |FROM j""".stripMargin),
   )
 
-  /** The q_ivf_topk oracle: the full IVF pipeline — dyadic-grid Lloyd
-    * training (`iters` rounds unrolled, Scala-generated like
-    * q_bpe_merges), inverted-file assignment, nprobe cell probing, exact
-    * cosine verify — replayed in DuckDB. Training runs on vectors floored
-    * to the 1/1024 lattice so every per-dimension mean is a quotient of
-    * exact sums and the assignment argmax has a total (cos DESC, cell)
-    * order: centroids agree with Spark bit-for-bit, which is what turned
-    * this gate from rows-only into hash-checked.
+  /** [[graft.ops.Similarity.annTopK]] (8 tables × 4 planes, k = 5) for
+    * the queries with vec_id % 100 = `queryRem`: [[lshScoredCtes]]
+    * ranked by (cos DESC, cand_id).
     */
-  private def ivfTopKOracle(nCells: Int, nprobe: Int, iters: Int,
-                            k: Int): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    val lloyd = (1 to iters).map { i =>
+  private def annTopKOracle(queryRem: Int): String =
+    embVecCte + ",\n" + hyperplaneCtes(8, "4") + ",\n" +
+      lshScoredCtes(queryRem) + """,
+      |rk AS (SELECT query_id, cand_id, cos,
+      |    row_number() OVER (PARTITION BY query_id
+      |      ORDER BY cos DESC, cand_id) AS rk
+      |  FROM scored)
+      |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
+      |  round(cos, 6) AS cos_sim
+      |FROM rk WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+
+  /** The candidate stage of [[graft.ops.Similarity.annTopK]] after
+    * [[hyperplaneCtes]]: the query buckets `qb` (vec_id % 100 =
+    * `queryRem`), the distinct bucket-sharing `cand(query_id, cand_id)`
+    * pairs and their exact cosine, `scored(query_id, cand_id, cos)`.
+    */
+  private def lshScoredCtes(queryRem: Int): String =
+    s"""qb AS (SELECT * FROM bkt WHERE vec_id % 100 = $queryRem),
+       |cand AS (SELECT DISTINCT qb.vec_id AS query_id, b.vec_id AS cand_id
+       |         FROM qb JOIN bkt b
+       |           ON b.tbl = qb.tbl AND b.bucket = qb.bucket
+       |          AND b.vec_id <> qb.vec_id),
+       |scored AS (SELECT c.query_id, c.cand_id,
+       |    list_dot_product(uq.v, uc.v)
+       |      / (sqrt(list_dot_product(uq.v, uq.v))
+       |         * sqrt(list_dot_product(uc.v, uc.v))) AS cos
+       |  FROM cand c
+       |  JOIN u uq ON uq.vec_id = c.query_id
+       |  JOIN u uc ON uc.vec_id = c.cand_id)""".stripMargin
+
+  /** The two sides of an ANN recall check: the brute-force
+    * [[graft.ops.Similarity.cosineTopK]] (k = 5) of the vec_id % 100 = 0
+    * queries, `exact(query_id, cand_id)`, then the [[hyperplaneCtes]]
+    * buckets (8 tables × 4 planes) the approximate side probes.
+    */
+  private lazy val exactAndBucketCtes: String =
+    embVecCte + """,
+      |ex AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+      |    row_number() OVER (PARTITION BY q.vec_id
+      |      ORDER BY list_dot_product(q.v, c.v)
+      |        / (sqrt(list_dot_product(q.v, q.v))
+      |           * sqrt(list_dot_product(c.v, c.v))) DESC, c.vec_id)
+      |      AS rk
+      |  FROM u c CROSS JOIN (SELECT * FROM u WHERE vec_id % 100 = 0) q
+      |  WHERE c.vec_id <> q.vec_id),
+      |exact AS (SELECT query_id, cand_id FROM ex WHERE rk <= 5),
+      |""".stripMargin + hyperplaneCtes(8, "4")
+
+  /** The q_semdedup corpus: the embeddings as doubles plus a planted
+    * near-copy of every 25th vector (id + 100000, per-dim alternating
+    * ±2^-8 jitter); quality = the aligned doc's n_chars, the copy docked
+    * 1 except every 50th id, where it gains 7.
+    */
+  private def plantedCorpus(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val emb = Tables.embeddings(s, d)
+    val orig = emb.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double"))
+        .as("embedding"))
+    val planted = emb.filter(col("vec_id") % 25 === 0)
+      .select((col("vec_id") + 100000L).as("vec_id"),
+        transform(col("embedding"), (x, i) =>
+          x.cast("double") + when(i % 2 === 0, lit(0.00390625))
+            .otherwise(lit(-0.00390625))).as("embedding"))
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id"), col("n_chars"))
+    orig.unionAll(planted)
+      .join(docs, expr("vec_id % 100000") === col("doc_id"))
+      .select(col("vec_id"), col("embedding"),
+        (col("n_chars") +
+          when(col("vec_id") >= 100000L && col("vec_id") % 50 === 0,
+            lit(7))
+            .when(col("vec_id") >= 100000L, lit(-1))
+            .otherwise(lit(0))).cast("long").as("quality"))
+  }
+
+  /** The md5-ordered seed centroids of [[graft.ops.Similarity.ivfCentroids]]:
+    * the first `nCells` vectors of `uq` by (md5(vec_id), vec_id), as
+    * `c0(cell, cvec)`.
+    */
+  private def seedCellsCte(nCells: Int): String =
+    s"""c0 AS MATERIALIZED (
+       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
+       |                            vec_id) - 1 AS cell,
+       |         v AS cvec
+       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+       |  LIMIT $nCells)""".stripMargin
+
+  /** The dyadic Lloyd rounds of [[graft.ops.Similarity.ivfCentroids]]
+    * over `uq(vec_id, v)` from the seed `c0`, unrolled: round i assigns
+    * every vector to its (cos DESC, cell) best centroid of round i − 1
+    * (`a$i`) and floors the per-dimension means to the 1/1024 lattice
+    * (`c$i`). Training vectors are floored to the same lattice, so each
+    * mean is a quotient of exact sums and the centroids agree with Spark
+    * bit for bit. `dims` is the SQL length of the vectors.
+    */
+  private def lloydCtes(iters: Int, dims: String): String =
+    (1 to iters).map { i =>
       val p = i - 1
       s"""a$i AS MATERIALIZED (
          |  SELECT vec_id, v, cell FROM (
@@ -830,10 +735,17 @@ object SimilarityGates {
          |         list_transform(list(m ORDER BY d),
          |                        y -> floor(y * 1024) / 1024) AS cvec
          |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
+         |        FROM a$i a CROSS JOIN UNNEST(range($dims)) AS d(d)
          |        GROUP BY a.cell, d.d)
          |  GROUP BY cell)""".stripMargin
-    }
+    }.mkString(",\n")
+
+  /** The IVF trainer over the embedding corpus: `uq` (vectors floored to
+    * the 1/1024 lattice), `uo` (the vectors as doubles), the
+    * [[seedCellsCte]] seed and `iters` [[lloydCtes]] rounds, ending at
+    * the final centroids `c$iters`.
+    */
+  private def ivfTrainCtes(nCells: Int, iters: Int): String =
     s"""WITH uq AS MATERIALIZED (
        |  SELECT vec_id,
        |    list_transform(embedding,
@@ -843,20 +755,29 @@ object SimilarityGates {
        |  SELECT vec_id,
        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${lloyd.mkString(",\n")},
+       |${seedCellsCte(nCells)},
+       |${lloydCtes(iters, "64")}""".stripMargin
+
+  /** [[ivfTrainCtes]] plus the inverted file of
+    * [[graft.ops.Similarity.ivfTopK]]: every vector's (cos DESC, cell)
+    * nearest final centroid, `inv(cand_id, cell)`.
+    */
+  private def ivfIndexCtes(nCells: Int, iters: Int): String =
+    s"""${ivfTrainCtes(nCells, iters)},
        |inv AS MATERIALIZED (
        |  SELECT vec_id AS cand_id, cell FROM (
        |    SELECT u.vec_id, c.cell,
        |      row_number() OVER (PARTITION BY u.vec_id
        |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$iters c) WHERE rk = 1),
-       |prb AS MATERIALIZED (
+       |    FROM uo u CROSS JOIN c$iters c) WHERE rk = 1)""".stripMargin
+
+  /** The probe stage of [[graft.ops.Similarity.ivfTopK]] after
+    * [[ivfIndexCtes]]: each vec_id % 100 = 0 query's `nprobe` nearest
+    * cells (`prb`) and the distinct inverted-file members of those cells,
+    * `cand(query_id, cand_id)`.
+    */
+  private def probeCandCtes(iters: Int, nprobe: Int): String =
+    s"""prb AS MATERIALIZED (
        |  SELECT vec_id AS query_id, cell FROM (
        |    SELECT u.vec_id, c.cell,
        |      row_number() OVER (PARTITION BY u.vec_id
@@ -866,230 +787,18 @@ object SimilarityGates {
        |cand AS MATERIALIZED (
        |  SELECT DISTINCT p.query_id, i.cand_id
        |  FROM prb p JOIN inv i
-       |    ON i.cell = p.cell AND i.cand_id <> p.query_id),
-       |scored AS (
-       |  SELECT c.query_id, c.cand_id, ${cos("q.v", "t.v")} AS cos
-       |  FROM cand c
-       |  JOIN uo q ON q.vec_id = c.query_id
-       |  JOIN uo t ON t.vec_id = c.cand_id),
-       |rkd AS (
-       |  SELECT query_id, cand_id, cos,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos DESC, cand_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
-       |  round(cos, 6) AS cos_sim
-       |FROM rkd WHERE rk <= $k ORDER BY query_id, rk""".stripMargin
-  }
+       |    ON i.cell = p.cell AND i.cand_id <> p.query_id)""".stripMargin
 
-  /** Shared CTE prefix for the cluster gates (q_cluster_profile,
-    * q_diverse_sample, q_silhouette): the ivfTopKOracle dyadic Lloyd
-    * chain, then the final-centroid assignment that KEEPS the winning
-    * cosine; with `withSecond` the emitted `asg` keeps ranks 1-2 (+ rk
-    * column) instead of the winner only — the silhouette's a/b pair.
+  /** The product quantizer of [[graft.ops.Similarity.pqCodebooks]] over
+    * `uo`: unit-normalized vectors floored to the 1/1024 lattice (`nq`),
+    * `m` subvectors each (`sq`), codebooks seeded from the md5-first
+    * `nCodes` vectors (`p0`) and trained by `pqIters` unrolled
+    * squared-L2 Lloyd rounds (`pa$i`/`p$i`), the corpus codes (`codes`)
+    * and the vec_id % 100 = 0 queries' ADC lookup table
+    * `lut(query_id, sm, code, qd2)`.
     */
-  private def clusterAssignCtes(nCells: Int, iters: Int,
-                                withSecond: Boolean = false): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    val lloyd = (1 to iters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    s"""WITH uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |                   x -> floor(CAST(x AS DOUBLE) * 1024) / 1024) AS v
-       |  FROM embeddings),
-       |uo AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${lloyd.mkString(",\n")},
-       |asg AS MATERIALIZED (
-       |  SELECT vec_id, cell, cos${if (withSecond) ", rk" else ""} FROM (
-       |    SELECT u.vec_id, c.cell, ${cos("u.v", "c.cvec")} AS cos,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$iters c)
-       |  WHERE rk <= ${if (withSecond) 2 else 1})""".stripMargin
-  }
-
-  /** The q_semdedup oracle: the clusterAssignCtes Lloyd chain rebuilt
-    * over the AUGMENTED corpus (originals + the gate's planted
-    * paraphrase copies — same alternating ±2^-8 jitter, same quality
-    * rule), then the TOP-2 MULTI-PROBE pair replay (rank <= 2 probe
-    * file, cell equi-join, DISTINCT pairs, 2^-20 floored cosine
-    * threshold; the output cell map stays rank 1), the q_dup_clusters
-    * recursive closure, and the quality-keeper row_number — the full
-    * ivfCentroids → pairs → dupClusters → resolveDuplicatesByQuality
-    * composition in SQL. Dims derive from len(v), never a hardcoded
-    * width.
-    */
-  private def semDedupOracle(nCells: Int, iters: Int, threshold: Double,
-                             auto: Option[(Int, Int)] = None): String = {
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    // auto = Some((minCells, targetPerCell)): the cell count is DERIVED
-    // from DuckDB's own count(*) — greatest(minCells,
-    // 2^ceil(log2(ceil(n / target)))) — replaying Similarity.autoCells
-    // (target is a power of two, so the double division is exact and
-    // ceil/log2 agree with the integer bit form)
-    val c0 = auto match {
-      case Some((minCells, target)) =>
-        s"""ncl AS MATERIALIZED (
-           |  SELECT greatest($minCells, CASE WHEN v <= 1 THEN 1
-           |      ELSE CAST(power(2, CAST(ceil(log2(CAST(v AS DOUBLE)))
-           |        AS BIGINT)) AS BIGINT) END) AS nc
-           |  FROM (SELECT CAST(ceil(count(*) / $target.0) AS BIGINT)
-           |          AS v
-           |        FROM base)),
-           |c0 AS MATERIALIZED (
-           |  SELECT cell, cvec FROM (
-           |    SELECT row_number() OVER (
-           |             ORDER BY md5(CAST(vec_id AS VARCHAR)),
-           |                      vec_id) - 1 AS cell,
-           |           v AS cvec
-           |    FROM uq)
-           |  WHERE cell < (SELECT nc FROM ncl))""".stripMargin
-      case None =>
-        s"""c0 AS MATERIALIZED (
-           |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-           |                            vec_id) - 1 AS cell,
-           |         v AS cvec
-           |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-           |  LIMIT $nCells)""".stripMargin
-    }
-    val lloyd = (1 to iters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(len(a.v))) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    s"""WITH RECURSIVE base AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 100000,
-       |    list_transform(embedding, (x, i) -> CAST(x AS DOUBLE)
-       |      + CASE WHEN (i - 1) % 2 = 0
-       |             THEN 0.00390625 ELSE -0.00390625 END)
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |qual AS MATERIALIZED (
-       |  SELECT b.vec_id,
-       |    CAST(d.n_chars
-       |      + CASE WHEN b.vec_id >= 100000 AND b.vec_id % 50 = 0 THEN 7
-       |             WHEN b.vec_id >= 100000 THEN -1 ELSE 0 END
-       |      AS BIGINT) AS quality
-       |  FROM base b JOIN documents d ON d.doc_id = b.vec_id % 100000),
-       |uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> floor(x * 1024) / 1024) AS v
-       |  FROM base),
-       |$c0,
-       |${lloyd.mkString(",\n")},
-       |prb AS MATERIALIZED (
-       |  SELECT vec_id, v, cell, rk FROM (
-       |    SELECT b.vec_id, b.v, c.cell,
-       |      row_number() OVER (PARTITION BY b.vec_id
-       |        ORDER BY ${cos("b.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM base b CROSS JOIN c$iters c) WHERE rk <= 2),
-       |inv AS MATERIALIZED (
-       |  SELECT vec_id, v, cell FROM prb WHERE rk = 1),
-       |dup AS MATERIALIZED (
-       |  SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
-       |  FROM prb a JOIN prb b ON a.cell = b.cell
-       |    AND a.vec_id < b.vec_id
-       |  WHERE floor(${cos("a.v", "b.v")} * 1048576) / 1048576
-       |    >= $threshold),
-       |edges AS (SELECT id_i AS src, id_j AS dst FROM dup
-       |          UNION SELECT id_j, id_i FROM dup),
-       |reach(src, dst) AS (
-       |  SELECT DISTINCT src, src FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst),
-       |lab AS (SELECT src AS id, min(dst) AS cluster_id
-       |        FROM reach GROUP BY src),
-       |rk AS (SELECT lab.id, row_number() OVER (
-       |         PARTITION BY lab.cluster_id
-       |         ORDER BY q.quality DESC, lab.id ASC) AS r
-       |       FROM lab JOIN qual q ON q.vec_id = lab.id),
-       |drops AS (SELECT id FROM rk WHERE r > 1)
-       |SELECT i.vec_id, i.cell, q.quality
-       |FROM inv i JOIN qual q ON q.vec_id = i.vec_id
-       |WHERE i.vec_id NOT IN (SELECT id FROM drops)
-       |ORDER BY i.vec_id""".stripMargin
-  }
-
-  /** The q_pq_topk oracle: the ivfTopKOracle candidate CTEs (same IVF
-    * Lloyd + inverted file + probe list) composed with the PQ chains —
-    * per-(vec_id, subspace) subvector rows, `pqIters` unrolled Lloyd
-    * rounds over the (subspace, code)-keyed codebook, corpus encoding,
-    * per-query ADC lookup table, Σ_m lookup scoring. Distances are
-    * spelled dot(a,a) − 2·dot(a,b) + dot(b,b) here vs Spark's
-    * fold-of-squared-diffs: both are EXACT on the 1/1024 dyadic lattice,
-    * so the spellings agree bit-for-bit (Similarity.l2sq note).
-    */
-  private def pqTopKOracle(nCells: Int, nprobe: Int, ivfIters: Int,
-                           m: Int, nCodes: Int, pqIters: Int,
-                           k: Int, refine: Int): String = {
+  private def pqCodebookCtes(m: Int, nCodes: Int, pqIters: Int): String = {
     val sub = 64 / m
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    def d2(a: String, b: String): String =
-      s"(list_dot_product($a, $a) - 2 * list_dot_product($a, $b) " +
-        s"+ list_dot_product($b, $b))"
-    val ivfLloyd = (1 to ivfIters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
     val pqLloyd = (1 to pqIters).map { i =>
       val p = i - 1
       s"""pa$i AS MATERIALIZED (
@@ -1107,40 +816,7 @@ object SimilarityGates {
          |        GROUP BY a.sm, a.code, d.d)
          |  GROUP BY sm, code)""".stripMargin
     }
-    s"""WITH uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |                   x -> floor(CAST(x AS DOUBLE) * 1024) / 1024) AS v
-       |  FROM embeddings),
-       |uo AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${ivfLloyd.mkString(",\n")},
-       |inv AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$ivfIters c) WHERE rk = 1),
-       |prb AS MATERIALIZED (
-       |  SELECT vec_id AS query_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$ivfIters c
-       |    WHERE u.vec_id % 100 = 0) WHERE rk <= $nprobe),
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT p.query_id, i.cand_id
-       |  FROM prb p JOIN inv i
-       |    ON i.cell = p.cell AND i.cand_id <> p.query_id),
-       |nq AS MATERIALIZED (
+    s"""nq AS MATERIALIZED (
        |  SELECT vec_id,
        |    list_transform(v, x -> floor((CASE WHEN nm > 0
        |      THEN x / nm ELSE x END) * 1024) / 1024) AS v
@@ -1170,7 +846,147 @@ object SimilarityGates {
        |  SELECT u.vec_id AS query_id, u.sm, c.code,
        |    ${d2("u.sv", "c.cvec")} AS qd2
        |  FROM sq u JOIN p$pqIters c ON c.sm = u.sm
-       |  WHERE u.vec_id % 100 = 0),
+       |  WHERE u.vec_id % 100 = 0)""".stripMargin
+  }
+
+  /** The q_ivf_topk oracle: the full IVF pipeline — [[ivfIndexCtes]],
+    * nprobe cell probing, exact cosine verify — replayed in DuckDB. The
+    * dyadic trainer gives the assignment argmax a total (cos DESC, cell)
+    * order over bit-identical centroids, which is what turned this gate
+    * from rows-only into hash-checked.
+    */
+  private def ivfTopKOracle(nCells: Int, nprobe: Int, iters: Int,
+                            k: Int): String =
+    s"""${ivfIndexCtes(nCells, iters)},
+       |${probeCandCtes(iters, nprobe)},
+       |scored AS (
+       |  SELECT c.query_id, c.cand_id, ${cos("q.v", "t.v")} AS cos
+       |  FROM cand c
+       |  JOIN uo q ON q.vec_id = c.query_id
+       |  JOIN uo t ON t.vec_id = c.cand_id),
+       |rkd AS (
+       |  SELECT query_id, cand_id, cos,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cos DESC, cand_id) AS rk
+       |  FROM scored)
+       |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
+       |  round(cos, 6) AS cos_sim
+       |FROM rkd WHERE rk <= $k ORDER BY query_id, rk""".stripMargin
+
+  /** Shared CTE prefix for the cluster gates (q_cluster_profile,
+    * q_diverse_sample, q_silhouette): [[ivfTrainCtes]], then the
+    * final-centroid assignment that KEEPS the winning cosine; with
+    * `withSecond` the emitted `asg` keeps ranks 1-2 (+ rk column)
+    * instead of the winner only — the silhouette's a/b pair.
+    */
+  private def clusterAssignCtes(nCells: Int, iters: Int,
+                                withSecond: Boolean = false): String =
+    s"""${ivfTrainCtes(nCells, iters)},
+       |asg AS MATERIALIZED (
+       |  SELECT vec_id, cell, cos${if (withSecond) ", rk" else ""} FROM (
+       |    SELECT u.vec_id, c.cell, ${cos("u.v", "c.cvec")} AS cos,
+       |      row_number() OVER (PARTITION BY u.vec_id
+       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
+       |    FROM uo u CROSS JOIN c$iters c)
+       |  WHERE rk <= ${if (withSecond) 2 else 1})""".stripMargin
+
+  /** The q_semdedup oracle: the [[lloydCtes]] chain rebuilt
+    * over the AUGMENTED corpus (originals + the gate's planted
+    * paraphrase copies — same alternating ±2^-8 jitter, same quality
+    * rule), then the TOP-2 MULTI-PROBE pair replay (rank <= 2 probe
+    * file, cell equi-join, DISTINCT pairs, 2^-20 floored cosine
+    * threshold; the output cell map stays rank 1), [[dupClosureCtes]],
+    * and the quality-keeper row_number — the full
+    * ivfCentroids → pairs → dupClusters → resolveDuplicatesByQuality
+    * composition in SQL. Dims derive from len(v), never a hardcoded
+    * width.
+    */
+  private def semDedupOracle(nCells: Int, iters: Int, threshold: Double,
+                             auto: Option[(Int, Int)] = None): String = {
+    // auto = Some((minCells, targetPerCell)): the cell count is DERIVED
+    // from DuckDB's own count(*) — greatest(minCells,
+    // 2^ceil(log2(ceil(n / target)))) — replaying Similarity.autoCells
+    // (target is a power of two, so the double division is exact and
+    // ceil/log2 agree with the integer bit form)
+    val c0 = auto match {
+      case Some((minCells, target)) =>
+        s"""ncl AS MATERIALIZED (
+           |  SELECT greatest($minCells, CASE WHEN v <= 1 THEN 1
+           |      ELSE CAST(power(2, CAST(ceil(log2(CAST(v AS DOUBLE)))
+           |        AS BIGINT)) AS BIGINT) END) AS nc
+           |  FROM (SELECT CAST(ceil(count(*) / $target.0) AS BIGINT)
+           |          AS v
+           |        FROM base)),
+           |c0 AS MATERIALIZED (
+           |  SELECT cell, cvec FROM (
+           |    SELECT row_number() OVER (
+           |             ORDER BY md5(CAST(vec_id AS VARCHAR)),
+           |                      vec_id) - 1 AS cell,
+           |           v AS cvec
+           |    FROM uq)
+           |  WHERE cell < (SELECT nc FROM ncl))""".stripMargin
+      case None => seedCellsCte(nCells)
+    }
+    s"""WITH RECURSIVE base AS MATERIALIZED (
+       |  SELECT vec_id,
+       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + 100000,
+       |    list_transform(embedding, (x, i) -> CAST(x AS DOUBLE)
+       |      + CASE WHEN (i - 1) % 2 = 0
+       |             THEN 0.00390625 ELSE -0.00390625 END)
+       |  FROM embeddings WHERE vec_id % 25 = 0),
+       |qual AS MATERIALIZED (
+       |  SELECT b.vec_id,
+       |    CAST(d.n_chars
+       |      + CASE WHEN b.vec_id >= 100000 AND b.vec_id % 50 = 0 THEN 7
+       |             WHEN b.vec_id >= 100000 THEN -1 ELSE 0 END
+       |      AS BIGINT) AS quality
+       |  FROM base b JOIN documents d ON d.doc_id = b.vec_id % 100000),
+       |uq AS MATERIALIZED (
+       |  SELECT vec_id,
+       |    list_transform(v, x -> floor(x * 1024) / 1024) AS v
+       |  FROM base),
+       |$c0,
+       |${lloydCtes(iters, "len(a.v)")},
+       |prb AS MATERIALIZED (
+       |  SELECT vec_id, v, cell, rk FROM (
+       |    SELECT b.vec_id, b.v, c.cell,
+       |      row_number() OVER (PARTITION BY b.vec_id
+       |        ORDER BY ${cos("b.v", "c.cvec")} DESC, c.cell) AS rk
+       |    FROM base b CROSS JOIN c$iters c) WHERE rk <= 2),
+       |inv AS MATERIALIZED (
+       |  SELECT vec_id, v, cell FROM prb WHERE rk = 1),
+       |dup AS MATERIALIZED (
+       |  SELECT DISTINCT a.vec_id AS id_i, b.vec_id AS id_j
+       |  FROM prb a JOIN prb b ON a.cell = b.cell
+       |    AND a.vec_id < b.vec_id
+       |  WHERE floor(${cos("a.v", "b.v")} * 1048576) / 1048576
+       |    >= $threshold),
+       |$dupClosureCtes,
+       |rk AS (SELECT lab.id, row_number() OVER (
+       |         PARTITION BY lab.cluster_id
+       |         ORDER BY q.quality DESC, lab.id ASC) AS r
+       |       FROM lab JOIN qual q ON q.vec_id = lab.id),
+       |drops AS (SELECT id FROM rk WHERE r > 1)
+       |SELECT i.vec_id, i.cell, q.quality
+       |FROM inv i JOIN qual q ON q.vec_id = i.vec_id
+       |WHERE i.vec_id NOT IN (SELECT id FROM drops)
+       |ORDER BY i.vec_id""".stripMargin
+  }
+
+  /** The q_pq_topk oracle: the ivfTopKOracle candidate CTEs
+    * ([[ivfIndexCtes]], [[probeCandCtes]]) composed with
+    * [[pqCodebookCtes]], Σ_m lookup scoring, a k·refine ADC shortlist and
+    * the exact cosine re-rank.
+    */
+  private def pqTopKOracle(nCells: Int, nprobe: Int, ivfIters: Int,
+                           m: Int, nCodes: Int, pqIters: Int,
+                           k: Int, refine: Int): String =
+    s"""${ivfIndexCtes(nCells, ivfIters)},
+       |${probeCandCtes(ivfIters, nprobe)},
+       |${pqCodebookCtes(m, nCodes, pqIters)},
        |scored AS (
        |  SELECT cd.query_id, cd.cand_id, sum(l.qd2) AS approx
        |  FROM (SELECT c.query_id, c.cand_id, k.sm, k.code
@@ -1197,10 +1013,9 @@ object SimilarityGates {
        |SELECT query_id, CAST(rk AS INTEGER) AS rk, cand_id,
        |  round(cos, 6) AS cos_sim
        |FROM rkd WHERE rk <= $k ORDER BY query_id, rk""".stripMargin
-  }
 
-  /** The q_ann_quality oracle: the pqTopKOracle training chains (IVF
-    * Lloyd + inverted file, PQ Lloyd + codes + LUT) computed ONCE, then
+  /** The q_ann_quality oracle: the pqTopKOracle training chains
+    * ([[ivfIndexCtes]], [[pqCodebookCtes]]) computed ONCE, then
     * the sweep replayed as rank filters — probe ranks kept up to
     * max(nprobe) so "candidates at nprobe = p" is `cell_rank <= p`, one
     * ADC sum per candidate pair, per-(query, nprobe) ADC ranks, exact
@@ -1213,71 +1028,9 @@ object SimilarityGates {
                                refines: Seq[Int], ivfIters: Int, m: Int,
                                nCodes: Int, pqIters: Int,
                                k: Int): String = {
-    val sub = 64 / m
     val nps = nprobes.distinct.sorted
     val rfs = refines.distinct.sorted
-    def cos(a: String, b: String): String =
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) " +
-        s"* sqrt(list_dot_product($b, $b)))"
-    def d2(a: String, b: String): String =
-      s"(list_dot_product($a, $a) - 2 * list_dot_product($a, $b) " +
-        s"+ list_dot_product($b, $b))"
-    val ivfLloyd = (1 to ivfIters).map { i =>
-      val p = i - 1
-      s"""a$i AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT u.vec_id, u.v, c.cell,
-         |      row_number() OVER (PARTITION BY u.vec_id
-         |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-         |    FROM uq u CROSS JOIN c$p c) WHERE rk = 1),
-         |c$i AS MATERIALIZED (
-         |  SELECT cell,
-         |         list_transform(list(m ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.cell, d.d AS d, avg(a.v[d.d + 1]) AS m
-         |        FROM a$i a CROSS JOIN UNNEST(range(64)) AS d(d)
-         |        GROUP BY a.cell, d.d)
-         |  GROUP BY cell)""".stripMargin
-    }
-    val pqLloyd = (1 to pqIters).map { i =>
-      val p = i - 1
-      s"""pa$i AS MATERIALIZED (
-         |  SELECT vec_id, sm, sv, code FROM (
-         |    SELECT u.vec_id, u.sm, u.sv, c.code,
-         |      row_number() OVER (PARTITION BY u.vec_id, u.sm
-         |        ORDER BY ${d2("u.sv", "c.cvec")}, c.code) AS rk
-         |    FROM sq u JOIN p$p c ON c.sm = u.sm) WHERE rk = 1),
-         |p$i AS MATERIALIZED (
-         |  SELECT sm, code,
-         |         list_transform(list(mu ORDER BY d),
-         |                        y -> floor(y * 1024) / 1024) AS cvec
-         |  FROM (SELECT a.sm, a.code, d.d AS d, avg(a.sv[d.d + 1]) AS mu
-         |        FROM pa$i a CROSS JOIN UNNEST(range($sub)) AS d(d)
-         |        GROUP BY a.sm, a.code, d.d)
-         |  GROUP BY sm, code)""".stripMargin
-    }
-    s"""WITH uq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |                   x -> floor(CAST(x AS DOUBLE) * 1024) / 1024) AS v
-       |  FROM embeddings),
-       |uo AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                            vec_id) - 1 AS cell,
-       |         v AS cvec
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCells),
-       |${ivfLloyd.mkString(",\n")},
-       |inv AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, cell FROM (
-       |    SELECT u.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY u.vec_id
-       |        ORDER BY ${cos("u.v", "c.cvec")} DESC, c.cell) AS rk
-       |    FROM uo u CROSS JOIN c$ivfIters c) WHERE rk = 1),
+    s"""${ivfIndexCtes(nCells, ivfIters)},
        |prb AS MATERIALIZED (
        |  SELECT vec_id AS query_id, cell, rk AS cell_rank FROM (
        |    SELECT u.vec_id, c.cell,
@@ -1289,37 +1042,7 @@ object SimilarityGates {
        |  SELECT p.query_id, i.cand_id, p.cell_rank
        |  FROM prb p JOIN inv i
        |    ON i.cell = p.cell AND i.cand_id <> p.query_id),
-       |nq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> floor((CASE WHEN nm > 0
-       |      THEN x / nm ELSE x END) * 1024) / 1024) AS v
-       |  FROM (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nm
-       |        FROM uo)),
-       |sq AS MATERIALIZED (
-       |  SELECT vec_id, sm.sm AS sm,
-       |    list_slice(v, sm.sm * $sub + 1, (sm.sm + 1) * $sub) AS sv
-       |  FROM nq CROSS JOIN UNNEST(range($m)) AS sm(sm)),
-       |sc AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |                       vec_id) - 1 AS code
-       |  FROM uq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nCodes),
-       |p0 AS MATERIALIZED (
-       |  SELECT sq.sm, sc.code, sq.sv AS cvec
-       |  FROM sq JOIN sc ON sc.vec_id = sq.vec_id),
-       |${pqLloyd.mkString(",\n")},
-       |codes AS MATERIALIZED (
-       |  SELECT vec_id AS cand_id, sm, code FROM (
-       |    SELECT u.vec_id, u.sm, c.code,
-       |      row_number() OVER (PARTITION BY u.vec_id, u.sm
-       |        ORDER BY ${d2("u.sv", "c.cvec")}, c.code) AS rk
-       |    FROM sq u JOIN p$pqIters c ON c.sm = u.sm) WHERE rk = 1),
-       |lut AS MATERIALIZED (
-       |  SELECT u.vec_id AS query_id, u.sm, c.code,
-       |    ${d2("u.sv", "c.cvec")} AS qd2
-       |  FROM sq u JOIN p$pqIters c ON c.sm = u.sm
-       |  WHERE u.vec_id % 100 = 0),
+       |${pqCodebookCtes(m, nCodes, pqIters)},
        |scored AS MATERIALIZED (
        |  SELECT cd.query_id, cd.cand_id,
        |    min(cd.cell_rank) AS cell_rank, sum(l.qd2) AS adc

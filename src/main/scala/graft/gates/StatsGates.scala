@@ -1,6 +1,8 @@
 package graft
 package gates
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, when}
 import Shared._
 
 /** The gates whose plans call [[graft.ops.Stats]] first: each plan
@@ -25,51 +27,10 @@ object StatsGates {
     // Kaplan-Meier time-to-second-order survival per first-order
     // priority: right-censored at the corpus max date; both KM windows
     // run over the per-group distinct-duration frame
-    Gate("q_survival", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val ranked = Tables.orders(s, d)
-        .withColumn("__r", row_number().over(w))
-      val first = ranked.filter(col("__r") === 1)
-        .select(col("o_custkey"), col("o_orderdate").as("__d1"),
-          col("o_orderpriority").as("grp"))
-      val second = ranked.filter(col("__r") === 2)
-        .select(col("o_custkey"), col("o_orderdate").as("__d2"))
-      val horizon = Tables.orders(s, d)
-        .agg(max(col("o_orderdate")).as("__hz"))
-      val subjects = first.join(second, Seq("o_custkey"), "left")
-        .crossJoin(broadcast(horizon))
-        .withColumn("dur", when(col("__d2").isNotNull,
-          datediff(col("__d2"), col("__d1")))
-          .otherwise(datediff(col("__hz"), col("__d1"))))
-        .withColumn("event",
-          when(col("__d2").isNotNull, 1).otherwise(0))
-      graft.ops.Stats.kaplanMeier(subjects, "grp", "dur", "event")
-    })(
-      """WITH rk AS (SELECT o_custkey, o_orderdate, o_orderpriority,
-        |        o_orderkey, row_number() OVER (PARTITION BY o_custkey
-        |          ORDER BY o_orderdate, o_orderkey) AS r FROM orders),
-        |f AS (SELECT o_custkey, o_orderdate AS d1,
-        |        o_orderpriority AS grp FROM rk WHERE r = 1),
-        |s2 AS (SELECT o_custkey, o_orderdate AS d2 FROM rk WHERE r = 2),
-        |hz AS (SELECT max(o_orderdate) AS h FROM orders),
-        |subj AS (SELECT f.grp,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN date_diff('day',
-        |        CAST(f.d1 AS DATE), CAST(s2.d2 AS DATE))
-        |      ELSE date_diff('day', CAST(f.d1 AS DATE),
-        |        CAST(hz.h AS DATE)) END AS t,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM f LEFT JOIN s2 ON s2.o_custkey = f.o_custkey
-        |  CROSS JOIN hz),
-        |c AS (SELECT grp, t, CAST(count(*) AS BIGINT) AS n_at,
-        |        CAST(sum(ev) AS BIGINT) AS d_events
-        |      FROM subj GROUP BY 1, 2),
-        |r AS (SELECT grp, t, n_at, d_events,
-        |        CAST(sum(n_at) OVER (PARTITION BY grp ORDER BY t DESC
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_risk
-        |      FROM c),
+    Gate("q_survival", (s, d) => graft.ops.Stats.kaplanMeier(
+      survivalSubjects(s, d, col("o_orderpriority")), "grp", "dur",
+      "event"))(
+      survivalRiskCtes + """,
         |sv AS (SELECT grp, t, n_risk, d_events,
         |        CASE WHEN max(CASE WHEN d_events = n_risk THEN 1
         |              ELSE 0 END) OVER (PARTITION BY grp ORDER BY t ASC
@@ -88,51 +49,10 @@ object StatsGates {
     // time-to-second-order subjects (q_survival's additive twin)
     // Nelson-Aalen replay: identical subject construction, same pinned
     // ORDER BY t cumulative folds over exact-integer counts
-    Gate("q_nelson_aalen", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val ranked = Tables.orders(s, d)
-        .withColumn("__r", row_number().over(w))
-      val first = ranked.filter(col("__r") === 1)
-        .select(col("o_custkey"), col("o_orderdate").as("__d1"),
-          col("o_orderpriority").as("grp"))
-      val second = ranked.filter(col("__r") === 2)
-        .select(col("o_custkey"), col("o_orderdate").as("__d2"))
-      val horizon = Tables.orders(s, d)
-        .agg(max(col("o_orderdate")).as("__hz"))
-      val subjects = first.join(second, Seq("o_custkey"), "left")
-        .crossJoin(broadcast(horizon))
-        .withColumn("dur", when(col("__d2").isNotNull,
-          datediff(col("__d2"), col("__d1")))
-          .otherwise(datediff(col("__hz"), col("__d1"))))
-        .withColumn("event",
-          when(col("__d2").isNotNull, 1).otherwise(0))
-      graft.ops.Stats.nelsonAalen(subjects, "grp", "dur", "event")
-    })(
-      """WITH rk AS (SELECT o_custkey, o_orderdate, o_orderpriority,
-        |        o_orderkey, row_number() OVER (PARTITION BY o_custkey
-        |          ORDER BY o_orderdate, o_orderkey) AS r FROM orders),
-        |f AS (SELECT o_custkey, o_orderdate AS d1,
-        |        o_orderpriority AS grp FROM rk WHERE r = 1),
-        |s2 AS (SELECT o_custkey, o_orderdate AS d2 FROM rk WHERE r = 2),
-        |hz AS (SELECT max(o_orderdate) AS h FROM orders),
-        |subj AS (SELECT f.grp,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN date_diff('day',
-        |        CAST(f.d1 AS DATE), CAST(s2.d2 AS DATE))
-        |      ELSE date_diff('day', CAST(f.d1 AS DATE),
-        |        CAST(hz.h AS DATE)) END AS t,
-        |    CASE WHEN s2.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM f LEFT JOIN s2 ON s2.o_custkey = f.o_custkey
-        |  CROSS JOIN hz),
-        |c AS (SELECT grp, t, CAST(count(*) AS BIGINT) AS n_at,
-        |        CAST(sum(ev) AS BIGINT) AS d_events
-        |      FROM subj GROUP BY 1, 2),
-        |r AS (SELECT grp, t, n_at, d_events,
-        |        CAST(sum(n_at) OVER (PARTITION BY grp ORDER BY t DESC
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_risk
-        |      FROM c),
+    Gate("q_nelson_aalen", (s, d) => graft.ops.Stats.nelsonAalen(
+      survivalSubjects(s, d, col("o_orderpriority")), "grp", "dur",
+      "event"))(
+      survivalRiskCtes + """,
         |na AS (SELECT grp, t, n_risk, d_events,
         |        round(sum(CAST(d_events AS DOUBLE)
         |            / CAST(n_risk AS DOUBLE)) OVER w, 6) AS cum_hazard,
@@ -157,30 +77,10 @@ object StatsGates {
     // survival over the same unique (grp, t) order
     // log-rank replay: zero-filled times×sides grid, exact integer
     // at-risk/event counts, pinned U/V folds, chi-square constant
-    Gate("q_logrank", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val ranked = Tables.orders(s, d)
-        .withColumn("__r", row_number().over(w))
-      val first = ranked.filter(col("__r") === 1)
-        .select(col("o_custkey"), col("o_orderdate").as("__d1"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-            "fast").otherwise("slow").as("grp"))
-      val second = ranked.filter(col("__r") === 2)
-        .select(col("o_custkey"), col("o_orderdate").as("__d2"))
-      val horizon = Tables.orders(s, d)
-        .agg(max(col("o_orderdate")).as("__hz"))
-      val subjects = first.join(second, Seq("o_custkey"), "left")
-        .crossJoin(broadcast(horizon))
-        .withColumn("dur", when(col("__d2").isNotNull,
-          datediff(col("__d2"), col("__d1")))
-          .otherwise(datediff(col("__hz"), col("__d1"))))
-        .withColumn("event",
-          when(col("__d2").isNotNull, 1).otherwise(0))
-      graft.ops.Stats.logRank(subjects, "grp", "dur", "event")
-    })(
+    Gate("q_logrank", (s, d) => graft.ops.Stats.logRank(
+      survivalSubjects(s, d, when(col("o_orderpriority")
+        .isin("1-URGENT", "2-HIGH"), "fast").otherwise("slow")),
+      "grp", "dur", "event"))(
       """WITH rk0 AS (SELECT o_custkey, o_orderdate, o_orderpriority,
         |        o_orderkey, row_number() OVER (PARTITION BY o_custkey
         |          ORDER BY o_orderdate, o_orderkey) AS r FROM orders),
@@ -352,15 +252,7 @@ object StatsGates {
     // pinned class folds, + 0.0 negative-zero guards
     Gate("q_kappa", (s, d) => graft.ops.Stats.cohenKappa(
       scoredDemo(s, d), "actual", "predicted"))(
-      """WITH u AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |w AS (SELECT list_transform(range(64), d ->
-        |        (CAST('0x' || substr(md5('wgt_demo_' || d), 1, 15)
-        |           AS BIGINT) % 2000001 - 1000000) / 1000000.0) AS wv),
-        |s AS (SELECT vec_id, label,
-        |        list_dot_product(u.v, w.wv) + 0.1 AS z
-        |      FROM u CROSS JOIN w),
+      demoLogitCtes + """,
         |b AS (SELECT CAST(label % 2 = 1 AS VARCHAR) AS a,
         |        CAST(round(1.0 / (1.0 + exp(-z)), 6) > 0.5 AS VARCHAR) AS p
         |      FROM s),
@@ -1305,6 +1197,65 @@ object StatsGates {
         |FROM d LEFT JOIN c ON c.digit = d.digit CROSS JOIN t
         |ORDER BY d.digit""".stripMargin),
   )
+
+  /** The right-censored time-to-second-order subjects the survival gates
+    * share: each customer's first order (its group `grp`), the days to
+    * the second order (`event` = 1) or, with none, to the last order
+    * date in the corpus (`event` = 0), as `dur`.
+    */
+  private def survivalSubjects(s: SparkSession, d: String,
+                               grp: Column): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("o_custkey")
+      .orderBy(col("o_orderdate"), col("o_orderkey"))
+    val ranked = Tables.orders(s, d)
+      .withColumn("__r", row_number().over(w))
+    val first = ranked.filter(col("__r") === 1)
+      .select(col("o_custkey"), col("o_orderdate").as("__d1"),
+        grp.as("grp"))
+    val second = ranked.filter(col("__r") === 2)
+      .select(col("o_custkey"), col("o_orderdate").as("__d2"))
+    val horizon = Tables.orders(s, d)
+      .agg(max(col("o_orderdate")).as("__hz"))
+    first.join(second, Seq("o_custkey"), "left")
+      .crossJoin(broadcast(horizon))
+      .withColumn("dur", when(col("__d2").isNotNull,
+        datediff(col("__d2"), col("__d1")))
+        .otherwise(datediff(col("__hz"), col("__d1"))))
+      .withColumn("event",
+        when(col("__d2").isNotNull, 1).otherwise(0))
+  }
+
+  /** [[survivalSubjects]] grouped by first-order priority, in SQL: per
+    * (grp, t) the subjects `n_at` and events `d_events`, then the
+    * reverse-cumulative risk set `r(…, n_risk)` that
+    * [[graft.ops.Stats.kaplanMeier]] and [[graft.ops.Stats.nelsonAalen]]
+    * both fold.
+    */
+  private lazy val survivalRiskCtes: String =
+    """WITH rk AS (SELECT o_custkey, o_orderdate, o_orderpriority,
+      |        o_orderkey, row_number() OVER (PARTITION BY o_custkey
+      |          ORDER BY o_orderdate, o_orderkey) AS r FROM orders),
+      |f AS (SELECT o_custkey, o_orderdate AS d1,
+      |        o_orderpriority AS grp FROM rk WHERE r = 1),
+      |s2 AS (SELECT o_custkey, o_orderdate AS d2 FROM rk WHERE r = 2),
+      |hz AS (SELECT max(o_orderdate) AS h FROM orders),
+      |subj AS (SELECT f.grp,
+      |    CASE WHEN s2.d2 IS NOT NULL THEN date_diff('day',
+      |        CAST(f.d1 AS DATE), CAST(s2.d2 AS DATE))
+      |      ELSE date_diff('day', CAST(f.d1 AS DATE),
+      |        CAST(hz.h AS DATE)) END AS t,
+      |    CASE WHEN s2.d2 IS NOT NULL THEN 1 ELSE 0 END AS ev
+      |  FROM f LEFT JOIN s2 ON s2.o_custkey = f.o_custkey
+      |  CROSS JOIN hz),
+      |c AS (SELECT grp, t, CAST(count(*) AS BIGINT) AS n_at,
+      |        CAST(sum(ev) AS BIGINT) AS d_events
+      |      FROM subj GROUP BY 1, 2),
+      |r AS (SELECT grp, t, n_at, d_events,
+      |        CAST(sum(n_at) OVER (PARTITION BY grp ORDER BY t DESC
+      |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_risk
+      |      FROM c)""".stripMargin
 
   /** Unrolled fixed-round Newton chain for a 1-feature logistic fit —
     * the q_fit_logistic CTE sequence as a generator: expects a CTE

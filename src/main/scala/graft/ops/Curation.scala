@@ -1520,6 +1520,12 @@ object Curation {
     * scope: doc/token totals, distinct tokens, type-token ratio, and
     * the same pair at 3-token-shingle granularity (phrase diversity).
     *
+    * NULL text: a NULL doc counts in n_docs, adds no tokens and adds ONE
+    * empty shingle. So a scope whose every doc has NULL text is still
+    * emitted, with n_tokens = 0, distinct_tokens = 0 and a NULL ttr (no
+    * tokens to divide by; a plain division would fail under ANSI mode),
+    * n_shingles = n_docs and distinct_shingles = 1.
+    *
     * Scale shape: the membership frame is one union of (id, scope)
     * pairs; each granularity is ONE explode + a scope groupBy with
     * exact distinct counts (token-domain-bounded shuffles). The
@@ -1577,8 +1583,8 @@ object Curation {
       .join(gramAgg, Seq("scope"))
       .select(col("scope"), col("n_docs"), col("n_tokens"),
         col("distinct_tokens"),
-        round(col("distinct_tokens").cast("double") / col("n_tokens"), 6)
-          .as("ttr"),
+        round(try_divide(col("distinct_tokens").cast("double"),
+          col("n_tokens")), 6).as("ttr"),
         col("n_shingles"), col("distinct_shingles"),
         round(col("distinct_shingles").cast("double") / col("n_shingles"),
           6).as("shingle_ttr"))

@@ -593,6 +593,38 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("selectionDiversityReport: a scope whose every doc has NULL text " +
+    "is emitted with zero tokens, a NULL token ratio and one empty " +
+    "shingle per doc") {
+    import spark.implicits._
+    // k = 1: the hash baseline is the md5-first id alone; give that doc
+    // the only NULL text
+    val ids = Seq(1L, 2L, 3L, 4L)
+    val first = ids.toDF("doc_id")
+      .orderBy(graft.ops.Dedup.h60(col("doc_id").cast("string")),
+        col("doc_id"))
+      .head.getLong(0)
+    val corpus = ids.map(i =>
+      (i, if (i == first) null else s"the cat sat on mat $i"))
+      .toDF("doc_id", "text")
+    val target = Seq((100L, "the cat sat")).toDF("doc_id", "text")
+    val out = Curation.selectionDiversityReport(target, corpus,
+      "doc_id", "text", k = 1).collect()
+      .map(r => r.getAs[String]("scope") -> r).toMap
+    val b = out("3_hash_baseline")
+    assert(b.getAs[Long]("n_docs") === 1L)
+    assert(b.getAs[Long]("n_tokens") === 0L)
+    assert(b.getAs[Long]("distinct_tokens") === 0L)
+    assert(b.isNullAt(b.fieldIndex("ttr")))
+    assert(b.getAs[Long]("n_shingles") === 1L)
+    assert(b.getAs[Long]("distinct_shingles") === 1L)
+    assert(b.getAs[Double]("shingle_ttr") === 1.0)
+    // the other scopes are unaffected: the corpus counts 3 texts of 6
+    // tokens, and the selection skips the unscorable NULL doc
+    assert(out("1_corpus").getAs[Long]("n_tokens") === 18L)
+    assert(out("2_dsir_selected").getAs[Long]("n_tokens") === 6L)
+  }
+
   test("ccnetPipeline: stage counts are a monotone funnel, stage 0 " +
     "matches the batch, the lang stage matches the standalone langId, " +
     "and dedup keeps exactly one doc per surviving digest") {

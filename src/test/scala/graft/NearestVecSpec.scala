@@ -113,6 +113,33 @@ class NearestVecSpec extends SparkSpec {
       .filter(col("old_cell") =!= col("cell")).count() === 0L)
   }
 
+  test("interpreted eval agrees with the codegen result (nearest_cos " +
+    "and nearest_l2 over ties, NaN and a null candidate vector)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    import graft.functions.NearestVec
+    val cands = candTable.agg(sort_array(collect_list(
+      struct(col("cell"), col("cvec")))).as("__cands"))
+    val candsRow = cands.head
+    val candsLit = Literal.create(candsRow.getSeq[Row](0),
+      cands.schema("__cands").dataType)
+    for (fn <- Seq("nearest_cos", "nearest_l2")) {
+      // a projection over a join is compiled, not folded into a local
+      // relation by the optimizer's interpreted evaluation
+      val compiled = vecs.crossJoin(cands)
+        .select(col("id"), expr(s"$fn(v, __cands)").as("c"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      vecs.collect().foreach { r =>
+        val e = NearestVec(Literal.create(r.getSeq[Double](1),
+          ArrayType(DoubleType, containsNull = false)), candsLit,
+          if (fn == "nearest_cos") "cos" else "l2")
+        assert(e.eval(null) === compiled(r.getLong(0)),
+          s"$fn for id ${r.getLong(0)}")
+      }
+    }
+  }
+
   test("NULL v and empty candidate list return NULL; float candidate " +
     "arrays widen") {
     assert(spark.sql(

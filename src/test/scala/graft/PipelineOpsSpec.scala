@@ -2137,7 +2137,7 @@ class PipelineOpsSpec extends SparkSpec {
     val rebuilt = Text.lmCountIndex(a.unionByName(b), "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (0 until 7).map(i =>
-        if (r.isNullAt(i)) null else r.get(i)).mkString(" "))
+        if (r.isNullAt(i)) null else r.get(i)).mkString("\u0000"))
         .sorted.toSeq
     assert(rows(merged) === rows(rebuilt))
     // end-to-end: the merged index scores exactly like the rebuild
