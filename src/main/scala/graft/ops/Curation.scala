@@ -1337,7 +1337,8 @@ object Curation {
     * cross-engine sum-order drift cannot accumulate across rounds.
     *
     * Scale shape: ONE corpus-sized groupBy to cells; every subsequent
-    * frame is (sources × langs)-bounded, localCheckpoint per round.
+    * frame is (sources × langs)-bounded, the rounds run in
+    * [[Par.iterate]].
     */
   def rakeWeights(docs: DataFrame, rowCol: String, colCol: String,
                   rounds: Int = 3): DataFrame = {
@@ -1350,12 +1351,12 @@ object Curation {
       sum(col("n")).cast("double").as("ntot"),
       countDistinct(col("r")).cast("double").as("nr"),
       countDistinct(col("c")).cast("double").as("nc")))
-    var w = cells.crossJoin(tot)
+    val w0 = cells.crossJoin(tot)
       .withColumn("tr", col("ntot") / col("nr"))
       .withColumn("tc", col("ntot") / col("nc"))
       .withColumn("w", lit(1.0))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val w = Par.iterate("rakeWeights", rounds, w0) { (w, _) =>
       val rs = w.groupBy(col("r").as("__rr"))
         .agg(sum(col("n") * col("w")).as("__rs"))
       val afterRow = w.join(rs, col("r") === col("__rr"))
@@ -1364,13 +1365,10 @@ object Curation {
         .drop("__rr", "__rs")
       val cs = afterRow.groupBy(col("c").as("__cc"))
         .agg(sum(col("n") * col("w")).as("__cs"))
-      val next = afterRow.join(cs, col("c") === col("__cc"))
+      afterRow.join(cs, col("c") === col("__cc"))
         .withColumn("w",
           round(col("w") * (col("tc") / col("__cs")), 9))
         .drop("__cc", "__cs")
-        .localCheckpoint()
-      w.unpersist()
-      w = next
     }
     import org.apache.spark.sql.expressions.Window
     val byR = Window.partitionBy("r")

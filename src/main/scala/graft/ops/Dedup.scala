@@ -801,9 +801,6 @@ object Dedup {
     * Returns (id, cluster_id, cluster_size) for every id in any pair,
     * ordered by id. Keeper = the row with id == cluster_id.
     */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    Par.unpersistCheckpoint(df)
-
   def dupClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     val edges = pairs.select(col("id_i").as("src"), col("id_j").as("dst"))
       .union(pairs.select(col("id_j").as("src"), col("id_i").as("dst")))
@@ -826,11 +823,11 @@ object Dedup {
           coalesce(col("nmin") < col("lab"), lit(false)).as("__changed"))
         .localCheckpoint()
       converged = next.filter(col("__changed")).isEmpty
-      unpersistCheckpoint(labels)
+      Par.unpersistCheckpoint(labels)
       labels = next.drop("__changed")
       it += 1
     }
-    unpersistCheckpoint(edges)
+    Par.unpersistCheckpoint(edges)
     IterStats.record("dupClusters", it)
     require(converged, s"dupClusters did not converge in $maxIters rounds " +
       "— graph diameter exceeds the bound; raise maxIters")
@@ -898,7 +895,7 @@ object Dedup {
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nextCount = next.count()
       converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
-      unpersistCheckpoint(edges)
+      Par.unpersistCheckpoint(edges)
       edges = next
       edgeCount = nextCount
       it += 1
@@ -912,7 +909,7 @@ object Dedup {
       .union(edges.select(col("v").as("id"), col("v").as("lab")))
       .distinct()
       .localCheckpoint()
-    unpersistCheckpoint(edges)
+    Par.unpersistCheckpoint(edges)
     labels.groupBy(col("lab"))
       .agg(count(lit(1)).as("cluster_size"))
       .join(labels, "lab")

@@ -638,19 +638,16 @@ object Events {
       .select(col("v"), col("from_s"), col("to_s"), col("p"))
       .unionAll(absorb)
       .localCheckpoint()
-    var mass = variants
+    val start = variants
       .select(col("v"), lit("START").as("st"), lit(1.0).as("mass"))
       .localCheckpoint()
-    for (_ <- 1 to steps) {
+    val mass = Par.iterate("markovAttribution", steps, start) { (mass, _) =>
       val m = mass.select(col("v").as("__mv"), col("st"), col("mass"))
-      val next = trans
+      trans
         .join(m, col("v") === col("__mv") && col("from_s") === col("st"))
         .groupBy(col("v"), col("to_s"))
         .agg(round(sum(col("mass") * col("p")), 9).as("mass"))
         .select(col("v"), col("to_s").as("st"), col("mass"))
-        .localCheckpoint()
-      mass.unpersist()
-      mass = next
     }
     val pcv = variants
       .join(mass.where(col("st") === "CONV")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over edge lists — the link-structure reading of the
@@ -15,17 +15,18 @@ object Graph {
     * form: rank₀ = 1, rankₜ₊₁ = (1−d) + d·Σ_in rank/outdeg — the Spark/
     * Pregel example recursion; dangling mass is dropped, not
     * redistributed, which keeps every step a pure edge equi-join and is
-    * the standard simplification for fixed-round scoring).
+    * the standard simplification for fixed-round scoring). This is
+    * [[personalizedPageRank]]'s recursion with teleport weight 1 on every
+    * node: (1−d)·1.0 is exact in IEEE arithmetic, so the ranks are the
+    * unpersonalized ones bit for bit.
     *
     * Scale shape: every iteration is ONE join of the edge list with the
     * |V|-row rank frame on the source id plus ONE groupBy(dst) whose sums
     * collapse map-side — shuffle volume is O(|E|) per round, keyed the
-    * same way every round. The rank frame is `localCheckpoint`'d per
-    * iteration ([[Dedup.duplicateClusters]]'s discipline) so round N's
-    * plan never replays rounds 1..N−1, and the superseded checkpoint is
-    * unpersisted as soon as the next round materializes. Edge
-    * multiplicity is intentional weighting (a pair that co-occurs twice
-    * carries twice the mass).
+    * same way every round. The rounds run in [[Par.iterate]], so round
+    * N's plan never replays rounds 1..N−1. Edge multiplicity is
+    * intentional weighting (a pair that co-occurs twice carries twice
+    * the mass).
     *
     * Determinism: per-iteration ranks are rounded to 9 decimals (both
     * engines), the published rank to 6 — distributed float-sum order
@@ -36,45 +37,8 @@ object Graph {
                topK: Int = 20): DataFrame = {
     require(iterations >= 1 && iterations <= 20,
       "pageRank needs 1 <= iterations <= 20 (fixed-round contract)")
-    require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
-    // NOTE (r16): pre-partitioning e/nodes by the per-round join keys
-    // (the labelPropagation/kCore win) was A/B-measured HERE and
-    // REJECTED — on this op's small rank/contrib frames AQE already
-    // rewrites the per-round joins to broadcast at runtime, so the
-    // upfront |E|-row exchange bought nothing and q_pagerank/q_ppr
-    // regressed ~15% (OPTIMIZATION_r16.md).
-    val e = edges
-      .select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst"))
-      .where(col("__src").isNotNull && col("__dst").isNotNull)
-      .localCheckpoint()
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    val outd = e.groupBy(col("__src"))
-      .agg(count(lit(1)).cast("double").as("__od"))
-      .localCheckpoint()
-    var rank = nodes.withColumn("rank", lit(1.0)).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(rank.withColumnRenamed("node", "__src"), "__src")
-        .join(outd, "__src")
-        .groupBy(col("__dst"))
-        .agg(sum(col("rank") / col("__od")).as("__in"))
-      val next = nodes
-        .join(contrib, nodes("node") === contrib("__dst"), "left")
-        .select(col("node"),
-          round(lit(1.0 - damping) +
-            lit(damping) * coalesce(col("__in"), lit(0.0)), 9).as("rank"))
-        .localCheckpoint()
-      rank.unpersist()
-      rank = next
-    }
-    rank
-      .select(col("node"), round(col("rank"), 6).as("rank"))
-      .orderBy(col("rank").desc, col("node"))
-      .limit(topK)
+    teleportRanks("pageRank", edges, srcCol, dstCol, lit(1.0), iterations,
+      damping, topK)
   }
 
   /** Personalized PageRank: [[pageRank]]'s recursion with the teleport
@@ -83,8 +47,8 @@ object Graph {
     * proximity TO THE SEEDS through the link structure, not global
     * importance: the "related to these items" primitive behind
     * recommendation expansion and seed-set labeling. Same per-round
-    * shape and checkpoint discipline as [[pageRank]]; the seed predicate
-    * is a broadcast semi-join flag, never a driver-side filter.
+    * shape as [[pageRank]]; the seed predicate is an IN-list on the node
+    * column, never a driver-side filter.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: Seq[Long], iterations: Int,
@@ -93,8 +57,59 @@ object Graph {
     require(seeds.nonEmpty, "personalizedPageRank needs a seed set")
     require(iterations >= 1 && iterations <= 20,
       "personalizedPageRank needs 1 <= iterations <= 20")
+    teleportRanks("personalizedPageRank", edges, srcCol, dstCol,
+      when(col("node").isin(seeds: _*), 1.0).otherwise(0.0), iterations,
+      damping, topK)
+  }
+
+  /** The recursion behind [[pageRank]] and [[personalizedPageRank]]:
+    * rank₀ = t(v), rankₜ₊₁ = (1−d)·t(v) + d·Σ_in rank/outdeg, with the
+    * per-node teleport weight t a column over `node`. Publishes the
+    * top-k positive ranks (every [[pageRank]] rank is ≥ 1−d, so the
+    * filter only drops unreached nodes of a personalized walk).
+    */
+  private def teleportRanks(op: String, edges: DataFrame, srcCol: String,
+                            dstCol: String, teleport: Column,
+                            iterations: Int, damping: Double,
+                            topK: Int): DataFrame = {
     require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
-    // no pre-partitioning — same A/B rejection as [[pageRank]] (r16)
+    // NOTE (r16): pre-partitioning e/nodes by the per-round join keys
+    // (the labelPropagation/kCore win) was A/B-measured HERE and
+    // REJECTED — on this op's small rank/contrib frames AQE already
+    // rewrites the per-round joins to broadcast at runtime, so the
+    // upfront |E|-row exchange bought nothing and q_pagerank/q_ppr
+    // regressed ~15% (OPTIMIZATION_r16.md).
+    val (e, nodes) = directedGraph(edges, srcCol, dstCol)
+    val outd = e.groupBy(col("__src"))
+      .agg(count(lit(1)).cast("double").as("__od"))
+      .localCheckpoint()
+    val init = nodes.select(col("node"), teleport.as("rank"))
+      .localCheckpoint()
+    Par.iterate(op, iterations, init) { (rank, _) =>
+      val contrib = e
+        .join(rank.withColumnRenamed("node", "__src"), "__src")
+        .join(outd, "__src")
+        .groupBy(col("__dst"))
+        .agg(sum(col("rank") / col("__od")).as("__in"))
+      nodes
+        .join(contrib, nodes("node") === contrib("__dst"), "left")
+        .select(col("node"),
+          round(lit(1.0 - damping) * teleport +
+            lit(damping) * coalesce(col("__in"), lit(0.0)), 9).as("rank"))
+    }
+      .where(col("rank") > 0.0)
+      .select(col("node"), round(col("rank"), 6).as("rank"))
+      .orderBy(col("rank").desc, col("node"))
+      .limit(topK)
+  }
+
+  /** The directed set-up [[pageRank]], [[personalizedPageRank]] and
+    * [[hits]] share: the edge list as (__src, __dst) longs with NULL
+    * endpoints dropped, and its distinct node set, each checkpointed
+    * once. No pre-partitioning — see [[teleportRanks]]' r16 note.
+    */
+  private def directedGraph(edges: DataFrame, srcCol: String,
+                            dstCol: String): (DataFrame, DataFrame) = {
     val e = edges
       .select(col(srcCol).cast("long").as("__src"),
         col(dstCol).cast("long").as("__dst"))
@@ -103,34 +118,8 @@ object Graph {
     val nodes = e.select(col("__src").as("node"))
       .union(e.select(col("__dst").as("node")))
       .distinct()
-      .withColumn("__seed",
-        when(col("node").isin(seeds: _*), 1.0).otherwise(0.0))
       .localCheckpoint()
-    val outd = e.groupBy(col("__src"))
-      .agg(count(lit(1)).cast("double").as("__od"))
-      .localCheckpoint()
-    var rank = nodes.withColumn("rank", col("__seed"))
-      .select(col("node"), col("rank")).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(rank.withColumnRenamed("node", "__src"), "__src")
-        .join(outd, "__src")
-        .groupBy(col("__dst"))
-        .agg(sum(col("rank") / col("__od")).as("__in"))
-      val next = nodes
-        .join(contrib, nodes("node") === contrib("__dst"), "left")
-        .select(col("node"),
-          round(lit(1.0 - damping) * col("__seed") +
-            lit(damping) * coalesce(col("__in"), lit(0.0)), 9).as("rank"))
-        .localCheckpoint()
-      rank.unpersist()
-      rank = next
-    }
-    rank
-      .where(col("rank") > 0.0)
-      .select(col("node"), round(col("rank"), 6).as("rank"))
-      .orderBy(col("rank").desc, col("node"))
-      .limit(topK)
+    (e, nodes)
   }
 
   /** Fixed-iteration HITS (hubs & authorities, max-normalized): per round
@@ -142,55 +131,42 @@ object Graph {
     *
     * Same scale shape as [[pageRank]]: each round is TWO edge equi-joins
     * (one per direction) + map-side-combined groupBys, the max is a 1-row
-    * broadcast scalar, lineage truncated per round via localCheckpoint
-    * with superseded checkpoints unpersisted. Per-round scores round to 9
-    * (final to 6) so distributed float-sum order cannot surface.
+    * broadcast scalar, and the round's (auth, hub) frame is the one
+    * [[Par.iterate]] checkpoints; the authority half feeds both the hub
+    * sums and that frame within the round's one job. Per-round scores
+    * round to 9 (final to 6) so distributed float-sum order cannot
+    * surface.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int, topK: Int = 20): DataFrame = {
     require(iterations >= 1 && iterations <= 20,
       "hits needs 1 <= iterations <= 20 (fixed-round contract)")
-    // no pre-partitioning — same A/B rejection as [[pageRank]] (r16)
-    val e = edges
-      .select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst"))
-      .where(col("__src").isNotNull && col("__dst").isNotNull)
-      .localCheckpoint()
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    var scores = nodes
+    val (e, nodes) = directedGraph(edges, srcCol, dstCol)
+    val init = nodes
       .withColumn("auth", lit(1.0)).withColumn("hub", lit(1.0))
       .localCheckpoint()
-    for (_ <- 1 to iterations) {
+    Par.iterate("hits", iterations, init) { (scores, _) =>
       val aRaw = e.join(scores.select(col("node").as("__src"),
             col("hub")), "__src")
         .groupBy(col("__dst")).agg(sum(col("hub")).as("__a"))
       val aFrame = nodes
-        .join(aRaw, nodes("node") === aRaw("__dst"), "left")
+        .join(aRaw, col("node") === col("__dst"), "left")
         .select(col("node"), coalesce(col("__a"), lit(0.0)).as("__a"))
       val aMax = aFrame.agg(max(col("__a")).as("__m"))
       val aNorm = aFrame.crossJoin(broadcast(aMax))
         .select(col("node"), round(col("__a") / col("__m"), 9).as("auth"))
-        .localCheckpoint()
       val hRaw = e.join(aNorm.select(col("node").as("__dst"),
             col("auth")), "__dst")
         .groupBy(col("__src")).agg(sum(col("auth")).as("__h"))
       val hFrame = nodes
-        .join(hRaw, nodes("node") === hRaw("__src"), "left")
+        .join(hRaw, col("node") === col("__src"), "left")
         .select(col("node"), coalesce(col("__h"), lit(0.0)).as("__h"))
       val hMax = hFrame.agg(max(col("__h")).as("__m"))
-      val next = aNorm.join(
-          hFrame.crossJoin(broadcast(hMax))
-            .select(col("node"), round(col("__h") / col("__m"), 9)
-              .as("hub")), "node")
-        .localCheckpoint()
-      scores.unpersist()
-      aNorm.unpersist()
-      scores = next
+      aNorm.join(
+        hFrame.crossJoin(broadcast(hMax))
+          .select(col("node"), round(col("__h") / col("__m"), 9)
+            .as("hub")), "node")
     }
-    scores
       .select(col("node"), round(col("auth"), 6).as("authority"),
         round(col("hub"), 6).as("hub"))
       .orderBy(col("authority").desc, col("node"))
@@ -366,10 +342,9 @@ object Graph {
     * Scale shape: per round ONE equi-join of the undirected edge list
     * with the |V|-row label frame plus one (node, label) groupBy and a
     * node-partitioned top-1 window — O(|E|) shuffle per round, keyed
-    * identically every round. The label frame is localCheckpoint'd per
-    * round ([[pageRank]]'s discipline) so round N never replays rounds
-    * 1..N−1. Output: every node with its final label and the label's
-    * community size.
+    * identically every round; the rounds run in [[Par.iterate]], so
+    * round N never replays rounds 1..N−1. Output: every node with its
+    * final label and the label's community size.
     */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        rounds: Int): DataFrame = {
@@ -390,22 +365,18 @@ object Graph {
       .repartition(col("t"))
       .localCheckpoint()
     val nodes = und.select(col("s").as("node")).distinct()
-    var lab = nodes.withColumn("label", col("node")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val nbr = und
+    val init = nodes.withColumn("label", col("node")).localCheckpoint()
+    val pick = Window.partitionBy("s")
+      .orderBy(col("__c").desc, col("label").asc)
+    val lab = Par.iterate("labelPropagation", rounds, init) { (lab, _) =>
+      und
         .join(lab.withColumnRenamed("node", "t"), "t")
         .groupBy(col("s"), col("label"))
         .agg(count(lit(1)).as("__c"))
-      val pick = Window.partitionBy("s")
-        .orderBy(col("__c").desc, col("label").asc)
-      val next = nbr.withColumn("__r", row_number().over(pick))
+        .withColumn("__r", row_number().over(pick))
         .where(col("__r") === 1)
         .select(col("s").as("node"), col("label"))
-        .localCheckpoint()
-      lab.unpersist()
-      lab = next
     }
-    IterStats.record("labelPropagation", rounds)
     val sizes = lab.groupBy(col("label"))
       .agg(count(lit(1)).as("community_size"))
     lab.join(sizes, "label")
@@ -434,13 +405,7 @@ object Graph {
   def modularity(edges: DataFrame, aCol: String, bCol: String,
                  communities: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val p = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    val p = canonicalPairs(edges, aCol, bCol)
     val m = p.agg(count(lit(1)).as("m"))
     val deg = p.select(col("a").as("node"))
       .unionAll(p.select(col("b").as("node")))
@@ -527,7 +492,7 @@ object Graph {
     *
     * Scale shape: per round ONE equi-join of the edge list with the
     * current distance frame + one min groupBy — O(|E|) shuffle per
-    * round, [[pageRank]]'s checkpoint discipline. Edges are treated as
+    * round, run in [[Par.iterate]]. Edges are treated as
     * directed; pass a mirrored edge list for the undirected metric.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
@@ -542,25 +507,19 @@ object Graph {
       .where(col("s").isNotNull && col("t").isNotNull)
       .distinct()
       .localCheckpoint()
-    var dist = e.select(col("s").as("node"))
+    val seeded = e.select(col("s").as("node"))
       .union(e.select(col("t").as("node")))
       .distinct()
       .where(col("node").isin(seeds: _*))
       .withColumn("hops", lit(0L))
-      .localCheckpoint(eager = true)
-    for (_ <- 1 to maxHops) {
-      val relaxed = e
-        .join(dist.withColumnRenamed("node", "s"), "s")
+      .localCheckpoint()
+    Par.iterate("bfsHops", maxHops, seeded) { (dist, _) =>
+      e.join(dist.withColumnRenamed("node", "s"), "s")
         .select(col("t").as("node"), (col("hops") + 1L).as("hops"))
         .unionAll(dist)
         .groupBy(col("node"))
         .agg(min(col("hops")).as("hops"))
-        .localCheckpoint(eager = true)
-      dist.unpersist()
-      dist = relaxed
-    }
-    IterStats.record("bfsHops", maxHops)
-    dist.orderBy("node")
+    }.orderBy("node")
   }
 
   /** Fixed-round k-core peel over an undirected (a < b) edge list — the
@@ -574,9 +533,8 @@ object Graph {
     *
     * Scale shape: per round ONE degree groupBy over the mirrored edge
     * list + two semi-join filters — O(|E|) keyed shuffles, never a
-    * collect; lineage truncated per round ([[pageRank]]'s checkpoint
-    * discipline). Output: surviving nodes with their within-core
-    * degree.
+    * collect; the rounds run in [[Par.iterate]]. Output: surviving nodes
+    * with their within-core degree.
     */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             rounds: Int): DataFrame = {
@@ -591,23 +549,18 @@ object Graph {
     // cur stays hash-partitioned by s across rounds: the degree groupBy
     // AND the s-side semi-filter both consume that partitioning, so the
     // one repartition per round replaces two exchanges (r16, §2.4)
-    var cur = canon.select(col("a").as("s"), col("b").as("t"))
+    val mirrored = canon.select(col("a").as("s"), col("b").as("t"))
       .unionAll(canon.select(col("b").as("s"), col("a").as("t")))
       .repartition(col("s"))
-      .localCheckpoint(eager = true)
-    for (_ <- 1 to rounds) {
+      .localCheckpoint()
+    Par.iterate("kCore", rounds, mirrored) { (cur, _) =>
       val keep = cur.groupBy(col("s")).agg(count(lit(1)).as("__d"))
         .where(col("__d") >= k).select(col("s"))
-      val next = cur.join(keep, Seq("s"))
+      cur.join(keep, Seq("s"))
         .join(keep.select(col("s").as("t")), Seq("t"))
         .select(col("s"), col("t"))
         .repartition(col("s"))
-        .localCheckpoint(eager = true)
-      cur.unpersist()
-      cur = next
-    }
-    IterStats.record("kCore", rounds)
-    cur.groupBy(col("s").as("node"))
+    }.groupBy(col("s").as("node"))
       .agg(count(lit(1)).as("core_degree"))
       .orderBy("node")
   }
@@ -627,8 +580,8 @@ object Graph {
     * Scale shape: per round one wedge self-join + one closing equi-join
     * (O(Σ deg²) candidate wedges worst-case — run it on degree-capped
     * graphs like [[basketPairs]]' output, the q_triangles contract) and
-    * one edge-keyed support groupBy; lineage truncated per round
-    * ([[pageRank]]'s checkpoint discipline). After the last peel, the
+    * one edge-keyed support groupBy; the rounds run in
+    * [[Par.iterate]]. After the last peel, the
     * support is RECOMPUTED once over the final surviving edge set —
     * the last round's pre-peel counts may bill triangles through
     * edges peeled in that same round, so the published number is the
@@ -642,12 +595,12 @@ object Graph {
     require(k >= 3, "kTruss needs k >= 3 (k-2 triangles per edge)")
     require(rounds >= 1 && rounds <= 16,
       "kTruss runs a fixed 1..16 peel rounds")
-    var cur = edges
+    val canon = edges
       .select(col(aCol).cast("long").as("a"),
         col(bCol).cast("long").as("b"))
       .where(col("a") < col("b"))
       .distinct()
-      .localCheckpoint(eager = true)
+      .localCheckpoint()
     // one wedge-close + per-edge billing pass over an edge set
     def billSupport(e: DataFrame): DataFrame = {
       val tri = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
@@ -663,18 +616,14 @@ object Graph {
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("support"))
     }
-    for (_ <- 1 to rounds) {
-      val next = billSupport(cur).where(col("support") >= k - 2)
+    val truss = Par.iterate("kTruss", rounds, canon) { (e, _) =>
+      billSupport(e).where(col("support") >= k - 2)
         .select(col("a"), col("b"))
-        .localCheckpoint(eager = true)
-      cur.unpersist()
-      cur = next
     }
-    IterStats.record("kTruss", rounds)
     // publish the TRUE within-truss support of the survivors (LEFT:
     // a survivor whose triangles all peeled in the last round keeps
     // its edge row at support 0)
-    cur.join(billSupport(cur), Seq("a", "b"), "left")
+    truss.join(billSupport(truss), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
       .orderBy("a", "b")
@@ -726,13 +675,7 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 10,
       "louvainLocalMove runs a fixed 1..10 move rounds")
-    val p = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    val p = canonicalPairs(edges, aCol, bCol)
     // pre-partitioned by the per-round neighbor-label join key (r16,
     // guide §2.4 — the checkpoint preserves the partitioning, so each
     // round shuffles only the V-row label frame)
@@ -744,9 +687,10 @@ object Graph {
     val deg = und.groupBy(col("s").as("node"))
       .agg(count(lit(1)).as("__d"))
       .localCheckpoint()
-    var lab = communities.select(col("node").cast("long").as("node"),
-      col("label").cast("long").as("label")).localCheckpoint()
-    for (r <- 1 to rounds) {
+    val pick = Window.partitionBy("node")
+      .orderBy(col("__score").desc, col("cand").asc)
+    val init = assignment(communities)
+    Par.iterate("louvainLocalMove", rounds, init) { (lab, r) =>
       // k_{i,C}: edges from each node into each neighboring community
       val kc = und
         .join(lab.select(col("node").as("t"), col("label")), "t")
@@ -764,13 +708,11 @@ object Graph {
       val dc = lab.join(deg, Seq("node"), "left")
         .groupBy(col("label").as("cand"))
         .agg(sum(coalesce(col("__d"), lit(0L))).as("__dc"))
-      val pick = Window.partitionBy("node")
-        .orderBy(col("__score").desc, col("cand").asc)
       // direction gate: odd rounds down-or-stay, even rounds
       // up-or-stay — monotone relabels admit no swap cycle in-round
       val dir = if (r % 2 == 1) col("cand") <= col("label")
                 else col("cand") >= col("label")
-      val next = cand
+      cand
         .join(lab, "node")
         .join(deg, Seq("node"), "left")
         .join(broadcast(dc), "cand")
@@ -785,12 +727,7 @@ object Graph {
         .withColumn("__r", row_number().over(pick))
         .where(col("__r") === 1)
         .select(col("node"), col("cand").as("label"))
-        .localCheckpoint()
-      lab.unpersist()
-      lab = next
-    }
-    IterStats.record("louvainLocalMove", rounds)
-    lab.orderBy("node")
+    }.orderBy("node")
   }
 
   /** One exact-integer modularity summary row read straight off the
@@ -853,41 +790,13 @@ object Graph {
                         rounds: Int = 2): DataFrame = {
     require(maxLevels >= 1 && maxLevels <= 4,
       "louvainMultiLevel runs a fixed budget of 1..4 coarsen levels")
-    val p = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    val m2 = broadcast(p.agg((count(lit(1)) * 2L).as("__m2")))
-    val lab = communities.select(col("node").cast("long").as("node"),
-      col("label").cast("long").as("label")).localCheckpoint()
-    var se = contractWeighted(
-      p.select(col("a").as("sa"), col("b").as("sb"), lit(1L).as("w")),
-      lab).localCheckpoint()
-    var sd = weightedDegrees(se).localCheckpoint()
-    var summary = superLevelSummary(se, sd, m2, 0)
-    var prevQ = summary.head().getAs[Long]("q_num")
+    val (start, levels) = louvainLevels(
+      superGraph(edges, aCol, bCol, communities), maxLevels, rounds)
+    IterStats.record("louvainMultiLevel", levels.size)
     // the returned frame is the LAZY union of the per-level summaries
     // (their checkpointed inputs make re-execution cheap), so the plan
     // stays auditable instead of collapsing to collected local rows
-    val out = scala.collection.mutable.ArrayBuffer(summary)
-    var level = 1
-    var improving = true
-    while (level <= maxLevels && improving) {
-      val slab = weightedMoveRounds(se, sd, m2, rounds)
-      se = contractWeighted(se, slab).localCheckpoint()
-      sd = weightedDegrees(se).localCheckpoint()
-      val cur = superLevelSummary(se, sd, m2, level)
-      out += cur
-      val q = cur.head().getAs[Long]("q_num")
-      improving = q > prevQ
-      prevQ = q
-      level += 1
-    }
-    IterStats.record("louvainMultiLevel", out.size - 1)
-    out.reduce(_ unionAll _).orderBy("level")
+    (start +: levels.map(_.summary)).reduce(_ unionAll _).orderBy("level")
   }
 
   /** The FINAL node→community assignment of [[louvainMultiLevel]] — the
@@ -917,51 +826,23 @@ object Graph {
                               rounds: Int = 2): DataFrame = {
     require(maxLevels >= 1 && maxLevels <= 4,
       "louvainMultiLevelAssign runs a fixed budget of 1..4 levels")
-    val p = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    val m2 = broadcast(p.agg((count(lit(1)) * 2L).as("__m2")))
-    val lab = communities.select(col("node").cast("long").as("node"),
-      col("label").cast("long").as("label")).localCheckpoint()
-    var se = contractWeighted(
-      p.select(col("a").as("sa"), col("b").as("sb"), lit(1L).as("w")),
-      lab).localCheckpoint()
-    var sd = weightedDegrees(se).localCheckpoint()
-    var prevQ = superLevelSummary(se, sd, m2, 0)
-      .head().getAs[Long]("q_num")
-    // composed label→community map, identity start (labels-bounded)
-    var comp = lab.select(col("label").as("l0")).distinct()
+    val g = superGraph(edges, aCol, bCol, communities)
+    val (_, levels) = louvainLevels(g, maxLevels, rounds)
+    IterStats.record("louvainMultiLevelAssign", levels.size)
+    // composed label→community map, identity start (labels-bounded);
+    // each improving level's super moves fold in — the moves are total
+    // over that level's super nodes, so the join is inner
+    val identity = g.lab.select(col("label").as("l0")).distinct()
       .select(col("l0"), col("l0").as("cur"))
       .localCheckpoint()
-    var level = 1
-    var improving = true
-    var levelsRun = 0
-    while (level <= maxLevels && improving) {
-      val slab = weightedMoveRounds(se, sd, m2, rounds)
-      se = contractWeighted(se, slab).localCheckpoint()
-      sd = weightedDegrees(se).localCheckpoint()
-      val q = superLevelSummary(se, sd, m2, level)
-        .head().getAs[Long]("q_num")
-      improving = q > prevQ
-      prevQ = q
-      levelsRun += 1
-      if (improving) {
-        // fold this level's super moves into the composition; slab is
-        // total over the current super nodes, so the join is inner
-        comp = comp
-          .join(slab.select(col("node").as("cur"),
-            col("label").as("__n")), Seq("cur"))
-          .select(col("l0"), col("__n").as("cur"))
-          .localCheckpoint()
-      }
-      level += 1
+    val comp = levels.filter(_.improved).foldLeft(identity) { (comp, l) =>
+      comp
+        .join(l.moves.select(col("node").as("cur"),
+          col("label").as("__n")), Seq("cur"))
+        .select(col("l0"), col("__n").as("cur"))
+        .localCheckpoint()
     }
-    IterStats.record("louvainMultiLevelAssign", levelsRun)
-    val asg = lab
+    val asg = g.lab
       .join(comp.select(col("l0").as("label"),
         col("cur").as("community")), Seq("label"), "left")
       .select(col("node"), coalesce(col("community"), col("label"))
@@ -993,13 +874,7 @@ object Graph {
     */
   def assortativity(edges: DataFrame, aCol: String,
                     bCol: String): DataFrame = {
-    val p = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    val p = canonicalPairs(edges, aCol, bCol)
     val deg = p.select(col("a").as("node"))
       .unionAll(p.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -1052,26 +927,11 @@ object Graph {
   def louvainCoarseMove(edges: DataFrame, aCol: String, bCol: String,
                         communities: DataFrame,
                         rounds: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 10,
       "louvainCoarseMove runs a fixed 1..10 move rounds")
-    val p = edges
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    val lab = communities.select(col("node").cast("long").as("node"),
-      col("label").cast("long").as("label")).localCheckpoint()
-    val m2 = broadcast(p.agg((count(lit(1)) * 2L).as("__m2")))
-    val se = contractWeighted(
-      p.select(col("a").as("sa"), col("b").as("sb"), lit(1L).as("w")),
-      lab).localCheckpoint()
-    val sdeg = weightedDegrees(se).localCheckpoint()
-    val slab = weightedMoveRounds(se, sdeg, m2, rounds)
-    IterStats.record("louvainCoarseMove", rounds)
-    lab.join(slab.select(col("node").as("label"),
+    val g = superGraph(edges, aCol, bCol, communities)
+    val slab = weightedMoveRounds(g.se, g.sd, g.m2, rounds)
+    g.lab.join(slab.select(col("node").as("label"),
         col("label").as("__nl")), Seq("label"), "left")
       .select(col("node"),
         coalesce(col("__nl"), col("label")).as("label"))
@@ -1121,9 +981,11 @@ object Graph {
       .unionAll(se.where(col("sa") =!= col("sb"))
         .select(col("sb").as("s"), col("sa").as("t"), col("w")))
       .localCheckpoint()
-    var slab = sdeg.select(col("node"), col("node").as("label"))
+    val identity = sdeg.select(col("node"), col("node").as("label"))
       .localCheckpoint()
-    for (r <- 1 to rounds) {
+    val pick = Window.partitionBy("node")
+      .orderBy(col("__score").desc, col("cand").asc)
+    Par.iterate("weightedMoveRounds", rounds, identity) { (slab, r) =>
       val kc = und
         .join(slab.select(col("node").as("t"), col("label")), "t")
         .groupBy(col("s").as("node"), col("label").as("cand"))
@@ -1136,12 +998,10 @@ object Graph {
       val dc = slab.join(sdeg, "node")
         .groupBy(col("label").as("cand"))
         .agg(sum(col("__d")).as("__dc"))
-      val pick = Window.partitionBy("node")
-        .orderBy(col("__score").desc, col("cand").asc)
       // louvainLocalMove's monotone direction gate at the super level
       val dir = if (r % 2 == 1) col("cand") <= col("label")
                 else col("cand") >= col("label")
-      val next = cand
+      cand
         .join(slab, "node")
         .join(sdeg, "node")
         .join(broadcast(dc), "cand")
@@ -1155,10 +1015,78 @@ object Graph {
         .withColumn("__r", row_number().over(pick))
         .where(col("__r") === 1)
         .select(col("node"), col("cand").as("label"))
-        .localCheckpoint()
-      slab.unpersist()
-      slab = next
     }
-    slab
+  }
+
+  /** Canonical undirected pairs: (a, b) = (least, greatest) endpoint as
+    * longs, NULL endpoints and self-loops dropped, multi-edges collapsed
+    * — checkpointed once, since every caller reads it several times.
+    */
+  private def canonicalPairs(edges: DataFrame, aCol: String,
+                             bCol: String): DataFrame =
+    edges
+      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
+        greatest(col(aCol), col(bCol)).cast("long").as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull &&
+        col("a") =!= col("b"))
+      .distinct()
+      .localCheckpoint()
+
+  /** A (node, label) community assignment as longs, checkpointed. */
+  private def assignment(communities: DataFrame): DataFrame =
+    communities.select(col("node").cast("long").as("node"),
+      col("label").cast("long").as("label")).localCheckpoint()
+
+  /** The start every Louvain phase-two driver shares: the node
+    * assignment `lab`, the 1-row broadcast 2m over the NODE graph's
+    * canonical edge count, and the canonical pairs contracted by `lab`
+    * into weighted super edges `se` (sa ≤ sb, integer w) with their
+    * weighted degrees `sd`.
+    */
+  private case class SuperGraph(lab: DataFrame, m2: DataFrame,
+                                se: DataFrame, sd: DataFrame)
+
+  private def superGraph(edges: DataFrame, aCol: String, bCol: String,
+                         communities: DataFrame): SuperGraph = {
+    val p = canonicalPairs(edges, aCol, bCol)
+    val lab = assignment(communities)
+    val se = contractWeighted(
+      p.select(col("a").as("sa"), col("b").as("sb"), lit(1L).as("w")),
+      lab).localCheckpoint()
+    SuperGraph(lab, broadcast(p.agg((count(lit(1)) * 2L).as("__m2"))), se,
+      weightedDegrees(se).localCheckpoint())
+  }
+
+  /** One computed level of the Louvain coarsening recursion: its
+    * scorecard row, the super-node moves it made, and whether its
+    * exact-integer modularity numerator strictly improved.
+    */
+  private case class Level(summary: DataFrame, moves: DataFrame,
+                           improved: Boolean)
+
+  /** The level recursion [[louvainMultiLevel]] and
+    * [[louvainMultiLevelAssign]] both run: per level a weighted sweep
+    * ([[weightedMoveRounds]]), re-contraction and scorecard, until a
+    * level fails to improve the numerator or `maxLevels` levels ran. The
+    * stop decision reads ONE summary row per level. Returns the level-0
+    * scorecard and every computed level, the stall level included.
+    */
+  private def louvainLevels(g: SuperGraph, maxLevels: Int,
+                            rounds: Int): (DataFrame, Seq[Level]) = {
+    val start = superLevelSummary(g.se, g.sd, g.m2, 0)
+    var prevQ = start.head().getAs[Long]("q_num")
+    var se = g.se
+    var sd = g.sd
+    val levels = scala.collection.mutable.ArrayBuffer.empty[Level]
+    while (levels.size < maxLevels && levels.lastOption.forall(_.improved)) {
+      val moves = weightedMoveRounds(se, sd, g.m2, rounds)
+      se = contractWeighted(se, moves).localCheckpoint()
+      sd = weightedDegrees(se).localCheckpoint()
+      val summary = superLevelSummary(se, sd, g.m2, levels.size + 1)
+      val q = summary.head().getAs[Long]("q_num")
+      levels += Level(summary, moves, q > prevQ)
+      prevQ = q
+    }
+    (start, levels.toSeq)
   }
 }

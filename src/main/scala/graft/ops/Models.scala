@@ -1916,9 +1916,8 @@ object Models {
     var p: DataFrame = null
     val rmses = (1 to rounds).map { k =>
       p = solve(inter.join(q, "i"), "u").localCheckpoint()
-      val nq = solve(inter.join(p, "u"), "i").localCheckpoint()
-      q.unpersist()
-      q = nq
+      // the superseded q stays held: the rmse frames read it lazily
+      q = solve(inter.join(p, "u"), "i").localCheckpoint()
       val scored = inter
         .join(p.select(col("u"), col("f1").as("__pa"),
           col("f2").as("__pb")), "u")

@@ -75,16 +75,40 @@ private[graft] object Par {
         .get("spark.graft.audit.noCheckpoint", "false").toBoolean) df
     else df.localCheckpoint(eager = false)
 
-  /** Free the block-manager blocks behind a `localCheckpoint`'d frame (or
-    * a projection over one): the checkpoint is a persisted RDD wrapped in
-    * a `LogicalRDD` leaf. `spark.catalog.clearCache()` does NOT touch
-    * these — without an explicit unpersist they accumulate until the
-    * frame is GC'd. No-op on non-checkpointed frames; non-blocking.
+  /** Free the block-manager blocks behind a `localCheckpoint`'d frame: the
+    * checkpoint is a persisted RDD wrapped in a `LogicalRDD` leaf, and
+    * neither `Dataset.unpersist` nor `spark.catalog.clearCache()`
+    * touches it — both only clear the `CacheManager`. Releases the FIRST
+    * `LogicalRDD` the frame's plan reaches, so a frame built over any
+    * checkpoint (a projection, a join with a checkpointed input) frees
+    * that checkpoint, whoever took it; only a plan with no `LogicalRDD`
+    * leaf is left alone. Non-blocking.
     */
   def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
+
+  /** The fixed-round loop behind every iterative operator: `n` rounds of
+    * `cur = step(cur, r)` for r = 1..n, each result eagerly
+    * `localCheckpoint`'d so round r's plan never replays rounds 1..r−1.
+    * Once round r is materialized, the checkpoint round r−1 took is
+    * released ([[unpersistCheckpoint]]), so at most two round frames
+    * are held whatever `n` is. `init` is never released: it is the
+    * caller's, and may be a lazy frame over a checkpoint the caller still
+    * reads. Returns the last round's checkpoint (`init` when `n` = 0)
+    * and records `n` rounds under `op` in [[IterStats]].
+    */
+  def iterate(op: String, n: Int, init: DataFrame)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    val out = (1 to n).foldLeft(init) { (cur, r) =>
+      val next = step(cur, r).localCheckpoint()
+      if (r > 1) unpersistCheckpoint(cur)
+      next
+    }
+    IterStats.record(op, n)
+    out
+  }
 
   /** Fail fast with a descriptive error when a graft-native SQL kernel is
     * missing from the session (i.e. it was built without

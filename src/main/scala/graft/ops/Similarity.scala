@@ -280,13 +280,16 @@ object Similarity {
     // TakeOrderedAndProject (per-partition top-k, merged on the driver) —
     // NOT a single-task global-sort WindowExec; the row_number below runs
     // over the nCells survivors only.
-    var cents: DataFrame = base
+    val seeds = base
       .orderBy(md5(col("__id").cast("string")), col("__id"))
       .limit(nCells)
       .withColumn("__rk", row_number().over(
         Window.orderBy(md5(col("__id").cast("string")), col("__id"))))
       .select((col("__rk") - 1).as("cell"), col("__v").as("cvec"))
-    for (_ <- 0 until iters) {
+    // Par.iterate truncates the per-iteration lineage growth (the
+    // centroid table is k rows); it never releases the lazy seed frame,
+    // whose plan reaches the caller's corpus checkpoint
+    Par.iterate("ivfCentroids", iters, seeds) { (cents, _) =>
       // argmax via the native nearest_cos kernel over the ONE-ROW
       // broadcast candidate array — bit-contracted to the
       // max(struct(cos, -cell)) spelling it retired (NearestVecSpec):
@@ -305,17 +308,13 @@ object Similarity {
         case Some(g) => floor(avg(col("x")) * g) / g
         case None => avg(col("x"))
       }
-      val means = assigned
+      assigned
         .select(col("cell"), posexplode(col("__v")).as(Seq("d", "x")))
         .groupBy(col("cell"), col("d")).agg(mean.as("m"))
         .groupBy(col("cell"))
         .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
           s => s.getField("m")).as("cvec"))
-      // localCheckpoint truncates the per-iteration lineage growth; the
-      // centroid table is k rows
-      cents = means.localCheckpoint(eager = true)
     }
-    cents
   }
 
   /** IVF-ANN top-k: assign the corpus to its nearest cell once (the
@@ -569,8 +568,8 @@ object Similarity {
     * is a 1-row scalar broadcast. Nothing holds a dims×dims matrix —
     * memory is O(dims) however many rows the corpus has (the covariance-
     * matrix spelling is O(dims²) state and a 4096-way explode per row at
-    * 64 dims; this is the scale path). Iterations materialize eagerly
-    * with lineage truncation ([[graft.ops.Graph.pageRank]] discipline).
+    * 64 dims; this is the scale path). The rounds run in
+    * [[Par.iterate]].
     */
   def topPrincipalComponent(embs: DataFrame, idCol: String, vecCol: String,
                             iterations: Int): DataFrame = {
@@ -580,11 +579,11 @@ object Similarity {
         posexplode(transform(col(vecCol), e => e.cast("double")))
           .as(Seq("dim", "__x")))
       .localCheckpoint()
-    var v = x.select(col("dim")).distinct()
+    val e0 = x.select(col("dim")).distinct()
       .select(col("dim"),
         when(col("dim") === 0, lit(1.0)).otherwise(lit(0.0)).as("val"))
       .localCheckpoint()
-    for (_ <- 1 to iterations) {
+    Par.iterate("topPrincipalComponent", iterations, e0) { (v, _) =>
       val dots = x.join(v, "dim")
         .groupBy(col("__id"))
         .agg(sum(col("__x") * col("val")).as("__dot"))
@@ -592,13 +591,9 @@ object Similarity {
         .groupBy(col("dim"))
         .agg(sum(col("__x") * col("__dot")).as("__s"))
       val norm = proj.agg(sqrt(sum(col("__s") * col("__s"))).as("__n"))
-      val next = proj.crossJoin(broadcast(norm))
+      proj.crossJoin(broadcast(norm))
         .select(col("dim"), round(col("__s") / col("__n"), 9).as("val"))
-        .localCheckpoint()
-      v.unpersist()
-      v = next
-    }
-    v.select(col("dim"), round(col("val"), 6).as("component"))
+    }.select(col("dim"), round(col("val"), 6).as("component"))
       .orderBy("dim")
   }
 
@@ -718,10 +713,10 @@ object Similarity {
       .limit(nCodes)
       .withColumn("code", row_number().over(
         Window.orderBy(md5(col("__id").cast("string")), col("__id"))) - 1)
-    var cb = sub.join(seedIds, "__id")
+    val seeds = sub.join(seedIds, "__id")
       .select(col("__m"), col("code"), col("__sv").as("cvec"))
-      .localCheckpoint(eager = true)
-    for (_ <- 0 until iters) {
+      .localCheckpoint()
+    Par.iterate("pqCodebooks", iters, seeds) { (cb, _) =>
       // argmin via the native nearest_l2 kernel over the per-subspace
       // broadcast candidate array — bit-contracted to the
       // min(struct(d2, code)) spelling it retired (NearestVecSpec).
@@ -736,7 +731,7 @@ object Similarity {
         .select(col("__m"),
           nearestOrFirst("nearest_l2", "__sv", "code").as("code"),
           col("__sv"))
-      val means = assigned
+      assigned
         .select(col("__m"), col("code"),
           posexplode(col("__sv")).as(Seq("d", "x")))
         .groupBy(col("__m"), col("code"), col("d"))
@@ -745,9 +740,7 @@ object Similarity {
         .agg(transform(
           array_sort(collect_list(struct(col("d"), col("mu")))),
           s => s.getField("mu")).as("cvec"))
-      cb = means.localCheckpoint(eager = true)
-    }
-    cb.select(col("__m").as("subspace"), col("code"), col("cvec"))
+    }.select(col("__m").as("subspace"), col("code"), col("cvec"))
   }
 
   /** IVF-PQ approximate top-k — the FAISS-style composition and the

@@ -2758,7 +2758,7 @@ object Text {
     * Scale shape: ONE tokenize pass; the pair build is a doc-keyed
     * self-join whose fan-out is bounded by windowSize × doc length;
     * each round is one edge equi-join + one map-side-combined groupBy
-    * over the VOCABULARY-bounded rank frame, checkpointed per round.
+    * over the VOCABULARY-bounded rank frame, run in [[Par.iterate]].
     */
   def textRank(docs: DataFrame, idCol: String, textCol: String,
                windowSize: Int = 2, rounds: Int = 3,
@@ -2795,24 +2795,19 @@ object Text {
     val outd = e.groupBy("src")
       .agg(count(lit(1)).cast("double").as("__od"))
       .localCheckpoint()
-    var rank = nodes.withColumn("rank", lit(1.0)).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val init = nodes.withColumn("rank", lit(1.0)).localCheckpoint()
+    Par.iterate("textRank", rounds, init) { (rank, _) =>
       val contrib = e
         .join(rank.withColumnRenamed("word", "src"), "src")
         .join(outd, "src")
         .groupBy(col("dst"))
         .agg(sum(col("rank") / col("__od")).as("__in"))
-      val next = nodes
+      nodes
         .join(contrib, nodes("word") === contrib("dst"), "left")
         .select(col("word"),
           round(lit(1.0 - damping) +
             lit(damping) * coalesce(col("__in"), lit(0.0)), 9).as("rank"))
-        .localCheckpoint()
-      rank.unpersist()
-      rank = next
     }
-    IterStats.record("textRank", rounds)
-    rank
       .join(outd.select(col("src").as("word"),
         col("__od").cast("long").as("degree")), Seq("word"))
       .select(col("word"), col("degree"),

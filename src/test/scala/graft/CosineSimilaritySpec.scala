@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.functions.CosineSimilarity
 
@@ -44,19 +45,33 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(math.abs(c1 - c2) < 1e-12)
   }
 
+  // over a parquet file, so generated code really runs: bits equal
+  // across CODEGEN_ONLY, NO_CODEGEN and eval, and the compiled plan
+  // holds the kernel inside a WholeStageCodegen stage
   test("interpreted eval agrees with the codegen result") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val a = Array(0.1, -0.5, 0.9, 2.0)
     val b = Array(1.0, 0.5, -0.3, 0.7)
-    // interpreted: call nullSafeEval through the expression's eval on a row
-    val expr0 = CosineSimilarity(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(a,
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(b,
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))
-    val interpreted = expr0.eval(null).asInstanceOf[Double]
-    val codegen = Seq((a, b)).toDF("a", "b")
-      .select(expr("cosine_sim(a, b)")).head.getDouble(0)
-    assert(interpreted === codegen)
+    val path = tempDir("cosine_sim_paths").resolve("in.parquet").toString
+    Seq((a, b)).toDF("a", "b").write.parquet(path)
+    val (compiled, interpreted, plan) =
+      inBothCodegenModes(spark.read.parquet(path), expr("cosine_sim(a, b)"))
+    val evaluated = CosineSimilarity(
+      Literal.create(a, ArrayType(DoubleType)),
+      Literal.create(b, ArrayType(DoubleType))).eval(null)
+      .asInstanceOf[Double]
+    def bits(r: Row): Long =
+      java.lang.Double.doubleToRawLongBits(r.getDouble(0))
+    val want = java.lang.Double.doubleToRawLongBits(evaluated)
+    assert(compiled.map(bits) === Seq(want))
+    assert(interpreted.map(bits) === Seq(want))
+    assert(plan.exists {
+      case w: WholeStageCodegenExec => w.child.exists(
+        _.expressions.exists(_.exists(_.isInstanceOf[CosineSimilarity])))
+      case _ => false
+    }, plan.toString)
   }
 
   test("rejects non-array inputs at analysis time") {

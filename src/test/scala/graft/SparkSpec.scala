@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +27,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory(prefix)
     tempDirs.add(dir)
     dir
+  }
+
+  /** `kernel` projected over `input` under
+    * `spark.sql.codegen.factoryMode=CODEGEN_ONLY` and then `NO_CODEGEN`,
+    * with the session's setting restored afterwards. `input` must be read
+    * from a file: over a local relation the optimizer folds the
+    * projection by interpreted evaluation and no generated code runs.
+    * Returns the compiled rows, the interpreted rows and the compiled
+    * executed plan.
+    */
+  def inBothCodegenModes(input: DataFrame, kernel: Column)
+      : (Seq[Row], Seq[Row], SparkPlan) = {
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    def run(mode: String): (Seq[Row], SparkPlan) = {
+      spark.conf.set(key, mode)
+      val df = input.select(kernel)
+      (df.collect().toSeq, df.queryExecution.executedPlan)
+    }
+    try {
+      val (compiled, plan) = run("CODEGEN_ONLY")
+      (compiled, run("NO_CODEGEN")._1, plan)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   override protected def afterAll(): Unit =
