@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver testdata star schema (TESTDATA.md).
   *
@@ -14,8 +18,52 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Session confs whose values change the schema parquet inference
+    * returns for the same file.
+    */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Inferred schemas by (qualified path, length, modification time,
+    * values of [[inferenceConfs]]). No session is held.
+    */
+  private val schemas =
+    new ConcurrentHashMap[(String, Long, Long, Seq[String]), StructType]()
+
+  /** The parquet file or Spark-written directory at `path`, for data
+    * that is replaced, not edited in place: test tables, published
+    * artifacts, model stores. The first read of each version of the path
+    * (a rewrite changes its length or modification time) under each
+    * value of the confs that change inference infers the schema from the
+    * footer, as `spark.read.parquet` does; later reads pin that schema,
+    * so they run no Spark job. Only the `StructType` is kept: every call
+    * builds a fresh relation (fresh expression IDs, fresh file listing),
+    * so nothing of a plan or of the data is reused.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing path has no key: the unpinned read fails as Spark reports it
+    val key = Option.when(fs.exists(p)) {
+      val st = fs.getFileStatus(p)
+      (st.getPath.toString, st.getLen, st.getModificationTime,
+        inferenceConfs.map(spark.conf.get))
+    }
+    key.flatMap(k => Option(schemas.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(schemas.put(_, df.schema))
+        df
+    }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

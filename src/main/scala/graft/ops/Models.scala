@@ -27,9 +27,11 @@ object Models {
   def saveModel(params: DataFrame, path: String): Unit =
     params.write.mode("overwrite").parquet(path)
 
-  /** S11 source: load a persisted model's parameter table. */
+  /** S11 source: load a persisted model's parameter table, with its
+    * schema resolved once per version of the path ([[graft.Tables.read]]).
+    */
   def loadModel(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
 
   /** F25 encode: one transport payload per parameter row —
     * `{"param":"<key>","mu":<%.6f>,"sigma":<%.6f>}` base64-encoded.

@@ -59,7 +59,7 @@ object ScaleGen {
       (0 until factor).map(k => shift(perturb(load, k), k, keys))
         .reduce(_ unionByName _)
 
-    def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def t(name: String): DataFrame = graft.Tables.load(spark, src, name)
 
     write(t("region"), "region")
     write(t("nation"), "nation")

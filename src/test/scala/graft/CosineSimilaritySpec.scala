@@ -17,32 +17,38 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
   }
 
+  // The cases below read their vectors from a parquet file, so that
+  // agreedDoubles runs the kernel's generated code and its interpreted
+  // eval, and checks they agree bit for bit.
+
   test("orthogonal, opposite, identical vectors") {
-    val df = Seq(
-      (Array(1.0, 0.0), Array(0.0, 1.0), 0.0),
-      (Array(1.0, 2.0), Array(-1.0, -2.0), -1.0),
-      (Array(3.0, 4.0), Array(3.0, 4.0), 1.0)
-    ).toDF("a", "b", "want")
-    val bad = df.withColumn("got", expr("cosine_sim(a, b)"))
-      .filter(abs(col("got") - col("want")) > 1e-12).count()
-    assert(bad === 0L)
+    val in = viaParquet(Seq(
+      (Array(1.0, 0.0), Array(0.0, 1.0)),
+      (Array(1.0, 2.0), Array(-1.0, -2.0)),
+      (Array(3.0, 4.0), Array(3.0, 4.0))).toDF("a", "b"))
+    val got = agreedDoubles(in, expr("cosine_sim(a, b)"))
+    assert(got.size === 3)
+    got.zip(Seq(0.0, -1.0, 1.0)).foreach { case (g, want) =>
+      assert(math.abs(g.get - want) <= 1e-12, s"got $g, want $want")
+    }
   }
 
   test("float arrays widen to double (the embeddings path)") {
-    val df = Seq((Array(1.0f, 2.0f), Array(2.0f, 4.0f))).toDF("a", "b")
-    val got = df.select(expr("cosine_sim(a, b)")).head.getDouble(0)
-    assert(math.abs(got - 1.0) < 1e-7)
+    val in = viaParquet(
+      Seq((Array(1.0f, 2.0f), Array(2.0f, 4.0f))).toDF("a", "b"))
+    val got = agreedDoubles(in, expr("cosine_sim(a, b)"))
+    assert(math.abs(got.head.get - 1.0) < 1e-7)
   }
 
   test("null array yields null; scale invariance holds") {
-    val got = spark.sql(
-      "SELECT cosine_sim(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D))").head
-    assert(got.isNullAt(0))
-    val df = Seq((Array(0.3, -0.7, 2.0), Array(1.1, 0.4, -0.2))).toDF("a", "b")
-    val c1 = df.select(expr("cosine_sim(a, b)")).head.getDouble(0)
-    val c2 = df.select(expr(
-      "cosine_sim(transform(a, x -> x * 17.0), b)")).head.getDouble(0)
-    assert(math.abs(c1 - c2) < 1e-12)
+    val in = viaParquet(Seq[(Array[Double], Array[Double])](
+      (null, Array(1.0)),
+      (Array(0.3, -0.7, 2.0), Array(1.1, 0.4, -0.2))).toDF("a", "b"))
+    val c1 = agreedDoubles(in, expr("cosine_sim(a, b)"))
+    val c2 = agreedDoubles(in,
+      expr("cosine_sim(transform(a, x -> x * 17.0), b)"))
+    assert(c1.head === None && c2.head === None)
+    assert(math.abs(c1(1).get - c2(1).get) < 1e-12)
   }
 
   // over a parquet file, so generated code really runs: bits equal
@@ -54,10 +60,8 @@ class CosineSimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val a = Array(0.1, -0.5, 0.9, 2.0)
     val b = Array(1.0, 0.5, -0.3, 0.7)
-    val path = tempDir("cosine_sim_paths").resolve("in.parquet").toString
-    Seq((a, b)).toDF("a", "b").write.parquet(path)
-    val (compiled, interpreted, plan) =
-      inBothCodegenModes(spark.read.parquet(path), expr("cosine_sim(a, b)"))
+    val (compiled, interpreted, plan) = inBothCodegenModes(
+      viaParquet(Seq((a, b)).toDF("a", "b")), expr("cosine_sim(a, b)"))
     val evaluated = CosineSimilarity(
       Literal.create(a, ArrayType(DoubleType)),
       Literal.create(b, ArrayType(DoubleType))).eval(null)

@@ -17,56 +17,56 @@ class DotProductSpec extends SparkSpec {
     assert(r.getDouble(0) === 11.0)
   }
 
+  private def bits(xs: Seq[Option[Double]]): Seq[Option[Long]] =
+    xs.map(_.map(java.lang.Double.doubleToRawLongBits))
+
+  private val hofFold =
+    aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
+      lit(0.0), (acc, x) => acc + x)
+
+  // The cases below read their vectors from a parquet file, so that
+  // agreedDoubles runs the kernel's generated code and its interpreted
+  // eval, and checks they agree bit for bit.
+
   test("bit-identical to the aggregate(zip_with(...)) fold it replaced") {
     // adversarial magnitudes: summation-order-sensitive values — the two
     // spellings must accumulate in the same sequence, hence agree exactly
-    val rows = Seq(
+    val in = viaParquet(Seq(
       (Array(1e16, 1.0, -1e16, 3.5), Array(1.0, 1.0, 1.0, 1.0)),
       (Array(0.1, 0.2, 0.3), Array(-0.3, 0.2, -0.1)),
       (Array.tabulate(64)(i => math.sin(i + 1.0)),
-        Array.tabulate(64)(i => math.cos(i * 2.0))))
-    val df = rows.toDF("a", "b")
-      .withColumn("native", expr("dot_prod(a, b)"))
-      .withColumn("hof",
-        aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-          lit(0.0), (acc, x) => acc + x))
-    assert(df.filter(col("native") =!= col("hof")).count() === 0L,
+        Array.tabulate(64)(i => math.cos(i * 2.0)))).toDF("a", "b"))
+    val native = agreedDoubles(in, expr("dot_prod(a, b)"))
+    assert(native.size === 3 && native.forall(_.isDefined))
+    assert(bits(native) === bits(agreedDoubles(in, hofFold)),
       "native kernel diverged from the sequential HOF fold")
   }
 
   test("float arrays widen to double (the embeddings path)") {
-    val got = Seq((Array(1.5f, 2.0f), Array(2.0f, 0.5f))).toDF("a", "b")
-      .select(expr("dot_prod(a, b)")).head.getDouble(0)
-    assert(math.abs(got - 4.0) < 1e-6)
+    val in = viaParquet(
+      Seq((Array(1.5f, 2.0f), Array(2.0f, 0.5f))).toDF("a", "b"))
+    assert(agreedDoubles(in, expr("dot_prod(a, b)")) === Seq(Some(4.0)))
   }
 
   test("null array yields null; mismatched lengths use the common prefix") {
-    assert(spark.sql(
-      "SELECT dot_prod(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D))")
-      .head.isNullAt(0))
-    val got = spark.sql(
-      "SELECT dot_prod(array(2.0D, 3.0D, 99.0D), array(4.0D, 5.0D))")
-      .head.getDouble(0)
-    assert(got === 23.0)
+    val in = viaParquet(Seq[(Array[Double], Array[Double])](
+      (null, Array(1.0)),
+      (Array(2.0, 3.0, 99.0), Array(4.0, 5.0))).toDF("a", "b"))
+    assert(agreedDoubles(in, expr("dot_prod(a, b)")) ===
+      Seq(None, Some(23.0)))
   }
 
   test("null ELEMENT propagates NULL, matching the HOF fold") {
-    // the fold poisons its running sum on x * NULL — the kernel must too
-    val df = Seq((Array[java.lang.Double](1.0, null, 3.0),
-        Array[java.lang.Double](1.0, 1.0, 1.0)))
-      .toDF("a", "b")
-      .withColumn("native", expr("dot_prod(a, b)"))
-      .withColumn("hof",
-        aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-          lit(0.0), (acc, x) => acc + x))
-    val r = df.head
-    assert(r.isNullAt(r.fieldIndex("native")))
-    assert(r.isNullAt(r.fieldIndex("hof")))
-    // and a null element BEYOND the common prefix stays invisible
-    val ok = spark.sql(
-      "SELECT dot_prod(array(2.0D, 3.0D, CAST(NULL AS DOUBLE)), " +
-        "array(4.0D, 5.0D)) AS d").head
-    assert(ok.getDouble(0) === 23.0)
+    // the fold poisons its running sum on x * NULL — the kernel must too;
+    // a null element BEYOND the common prefix stays invisible
+    val in = viaParquet(Seq(
+      (Array[java.lang.Double](1.0, null, 3.0),
+        Array[java.lang.Double](1.0, 1.0, 1.0)),
+      (Array[java.lang.Double](2.0, 3.0, null),
+        Array[java.lang.Double](4.0, 5.0))).toDF("a", "b"))
+    assert(agreedDoubles(in, expr("dot_prod(a, b)")) ===
+      Seq(None, Some(23.0)))
+    assert(agreedDoubles(in, hofFold).head === None)
   }
 
   // over a parquet file, so generated code really runs: bits equal
@@ -78,10 +78,8 @@ class DotProductSpec extends SparkSpec {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val a = Array(0.1, -0.5, 0.9, 2.0)
     val b = Array(1.0, 0.5, -0.3, 0.7)
-    val path = tempDir("dot_prod_paths").resolve("in.parquet").toString
-    Seq((a, b)).toDF("a", "b").write.parquet(path)
-    val (compiled, interpreted, plan) =
-      inBothCodegenModes(spark.read.parquet(path), expr("dot_prod(a, b)"))
+    val (compiled, interpreted, plan) = inBothCodegenModes(
+      viaParquet(Seq((a, b)).toDF("a", "b")), expr("dot_prod(a, b)"))
     val evaluated = DotProduct(
       Literal.create(a, ArrayType(DoubleType)),
       Literal.create(b, ArrayType(DoubleType))).eval(null)

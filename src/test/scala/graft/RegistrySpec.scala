@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.gates.{Gate, Gates}
 
 /** The gate registry and the artifact store behind the publish-split
   * gates: each gate is declared once, declaring it builds no oracle SQL,
   * and each published artifact is built once per JVM in its own
-  * `graft_<name>_*` directory.
+  * `graft_<name>_*` directory. Parquet tables are read through
+  * `Tables.read`, which infers each schema once.
   */
 class RegistrySpec extends SparkSpec {
 
@@ -59,5 +61,25 @@ class RegistrySpec extends SparkSpec {
     intercept[IllegalStateException](flaky())
     flaky()
     assert(attempts === 2)
+  }
+
+  test("lint: parquet is read unpinned only by Tables.read and Etl's " +
+    "mutable write targets") {
+    // a `.read.parquet(` infers the schema with a Spark job on every call;
+    // Tables.read does it once per file version. Etl's upsert and
+    // compaction read the directory they rewrite, so they stay unpinned.
+    val allowed = Map("graft/Tables.scala" -> 1, "graft/ops/Etl.scala" -> 2)
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"no $root under ${Paths.get("").toAbsolutePath}")
+    val call = """\.read\s*\.parquet\s*\(""".r
+    val walk = Files.walk(root)
+    val found = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map { f =>
+        root.relativize(f).toString -> call.findAllIn(Files.readString(f)).size
+      }.filter(_._2 > 0).toMap
+    finally walk.close()
+    assert(found === allowed,
+      "read a table through Tables.read, which pins its schema")
   }
 }

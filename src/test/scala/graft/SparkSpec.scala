@@ -55,6 +55,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** `df` written to one parquet file and read back, with its row order:
+    * an input that [[inBothCodegenModes]] really compiles.
+    */
+  def viaParquet(df: DataFrame): DataFrame = {
+    val path = tempDir("via_parquet").resolve("in.parquet").toString
+    df.coalesce(1).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** The doubles `kernel` yields over `input` (NULL as None), after
+    * asserting that the compiled and the interpreted run of
+    * [[inBothCodegenModes]] agree bit for bit, row by row.
+    */
+  def agreedDoubles(input: DataFrame, kernel: Column): Seq[Option[Double]] = {
+    val (compiled, interpreted, _) = inBothCodegenModes(input, kernel)
+    def values(rows: Seq[Row]): Seq[Option[Double]] =
+      rows.map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    def bits(rows: Seq[Row]): Seq[Option[Long]] =
+      values(rows).map(_.map(java.lang.Double.doubleToRawLongBits))
+    assert(bits(compiled) === bits(interpreted),
+      s"$kernel: compiled ${values(compiled)} vs interpreted " +
+        s"${values(interpreted)}")
+    values(compiled)
+  }
+
   override protected def afterAll(): Unit =
     try tempDirs.forEach(d => Artifacts.deleteRecursively(d))
     finally super.afterAll()
