@@ -1,104 +1,57 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 
 /** Native Catalyst expression: cosine similarity of two numeric arrays in a
-  * single fused pass (dot product and both norms in one loop), with full
-  * whole-stage codegen via [[doGenCode]]. Accepts array<float> (read
-  * widened to double) or array<double>.
+  * single fused pass (dot product and both norms in one loop), callable as
+  * SQL `cosine_sim(a, b)`. A [[VectorKernel]].
   *
   * Why a custom expression (SURVEY §2.8 policy): the built-in spelling —
   * `aggregate(zip_with(...))` — is an interpreted lambda per element on the
   * hot pair-join path, and flat-column unrolling costs one projected column
-  * per dimension per side. This is preference order (b) from the build
-  * brief: a scalar `Expression` with codegen, registered through
-  * `SparkSessionExtensions` (see [[graft.GraftExtensions]]) so it is
-  * callable as SQL `cosine_sim(a, b)`.
+  * per dimension per side.
   *
   * Numerics: accumulates left-to-right in doubles, `dot / (sqrt(na) *
   * sqrt(nb))` — the same sequence DuckDB's `list_dot_product(a,b) /
   * (sqrt(list_dot_product(a,a)) * sqrt(list_dot_product(b,b)))` evaluates,
-  * so oracle comparisons match bit-for-bit. Null array ⇒ null; mismatched
-  * lengths use the common prefix; zero-norm input ⇒ NaN (caller filters);
-  * null ELEMENTS are read as 0 (embeddings are dense — document, don't
-  * branch, in the hot loop).
+  * so oracle comparisons match bit-for-bit. Zero-norm input ⇒ NaN (caller
+  * filters). Null ELEMENTS are read as 0 (embeddings are dense — document,
+  * don't branch, in the hot loop).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemType(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemType(left.dataType).isDefined && elemType(right.dataType).isDefined)
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"cosine_sim requires array<float|double> inputs, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
+  extends VectorKernel {
 
   override def prettyName: String = "cosine_sim"
 
-  private def get(a: ArrayData, elem: DataType, i: Int): Double = elem match {
-    case FloatType => a.getFloat(i).toDouble
-    case _ => a.getDouble(i)
+  override protected def nullElementYieldsNull: Boolean = false
+
+  override protected def zero(): Array[Double] = new Array[Double](3)
+
+  override protected def step(acc: Array[Double], x: Double, y: Double)
+      : Unit = {
+    acc(0) += x * y
+    acc(1) += x * x
+    acc(2) += y * y
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lt = elemType(left.dataType).get
-    val rt = elemType(right.dataType).get
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = get(x, lt, i)
-      val yi = get(y, rt, i)
-      dot += xi * yi
-      na += xi * xi
-      nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override protected def finish(acc: Array[Double]): Double =
+    acc(0) / (math.sqrt(acc(1)) * math.sqrt(acc(2)))
 
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      def read(arr: String, dt: DataType, i: String): String = dt match {
-        case FloatType => s"(double) $arr.getFloat($i)"
-        case _ => s"$arr.getDouble($i)"
-      }
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = ${read(x, elemType(left.dataType).get, i)};
-         |  double $yi = ${read(y, elemType(right.dataType).get, i)};
-         |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+  override protected def genFold(ctx: CodegenContext)
+      : (String, (String, String) => String, String) = {
+    val dot = ctx.freshName("dot")
+    val na = ctx.freshName("na")
+    val nb = ctx.freshName("nb")
+    val xi = ctx.freshName("xi")
+    val yi = ctx.freshName("yi")
+    (s"double $dot = 0.0; double $na = 0.0; double $nb = 0.0;",
+      (x, y) => s"""double $xi = $x;
+         |  double $yi = $y;
+         |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;"""
+        .stripMargin,
+      s"$dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb))")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

@@ -1,121 +1,41 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 
-/** Native Catalyst expression: dot product of two numeric arrays with full
-  * whole-stage codegen — the linear-model scoring kernel
+/** Native Catalyst expression: dot product of two numeric arrays, callable
+  * as SQL `dot_prod(a, b)` — the linear-model scoring kernel
   * ([[graft.ops.Models.scoreLinear]]'s w·v), replacing the interpreted
   * `aggregate(zip_with(...))` fold that runs two lambda dispatches per
-  * vector component on every corpus row. Same design rules as
-  * [[CosineSimilarity]] (SURVEY §2.8 preference order (b)): accepts
-  * array<float> (read widened to double) or array<double>, registered via
-  * [[graft.GraftExtensions]] as SQL `dot_prod(a, b)`.
+  * vector component on every corpus row. A [[VectorKernel]].
   *
   * Numerics: a single left-to-right double accumulation — the identical
   * summation sequence of both the HOF spelling it replaces (bit-identity
   * proven in DotProductSpec) and DuckDB's `list_dot_product`, so oracle
-  * hashes are unchanged. Null array ⇒ null; mismatched lengths use the
-  * common prefix; a null ELEMENT makes the result NULL — the same
+  * hashes are unchanged. A null ELEMENT makes the result NULL — the same
   * propagation the HOF fold gives (`x * null` poisons the running sum),
   * so any SQL caller sees a malformed vector as a detectable NULL score
-  * instead of a silently-zeroed component. `containsNull` is statically
-  * known per side, so for the dense-vector common case the codegen'd
-  * loop carries no per-element null branch at all.
+  * instead of a silently-zeroed component.
   */
 case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemType(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemType(left.dataType).isDefined && elemType(right.dataType).isDefined)
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"dot_prod requires array<float|double> inputs, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
+  extends VectorKernel {
 
   override def prettyName: String = "dot_prod"
 
-  private def sideContainsNull(dt: DataType): Boolean = dt match {
-    case ArrayType(_, n) => n
-    case _ => false
+  override protected def nullElementYieldsNull: Boolean = true
+
+  override protected def zero(): Array[Double] = new Array[Double](1)
+
+  override protected def step(acc: Array[Double], x: Double, y: Double)
+      : Unit = acc(0) += x * y
+
+  override protected def finish(acc: Array[Double]): Double = acc(0)
+
+  override protected def genFold(ctx: CodegenContext)
+      : (String, (String, String) => String, String) = {
+    val dot = ctx.freshName("dot")
+    (s"double $dot = 0.0;", (x, y) => s"$dot += $x\n    * $y;", dot)
   }
-
-  // nullable even when both inputs are: a null ELEMENT yields NULL
-  override def nullable: Boolean =
-    left.nullable || right.nullable ||
-      sideContainsNull(left.dataType) || sideContainsNull(right.dataType)
-
-  private def get(a: ArrayData, elem: DataType, i: Int): Double = elem match {
-    case FloatType => a.getFloat(i).toDouble
-    case _ => a.getDouble(i)
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lt = elemType(left.dataType).get
-    val rt = elemType(right.dataType).get
-    val n = math.min(x.numElements(), y.numElements())
-    val checkL = sideContainsNull(left.dataType)
-    val checkR = sideContainsNull(right.dataType)
-    var dot = 0.0
-    var i = 0
-    while (i < n) {
-      if ((checkL && x.isNullAt(i)) || (checkR && y.isNullAt(i))) return null
-      dot += get(x, lt, i) * get(y, rt, i)
-      i += 1
-    }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      def read(arr: String, dt: DataType, i: String): String = dt match {
-        case FloatType => s"(double) $arr.getFloat($i)"
-        case _ => s"$arr.getDouble($i)"
-      }
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      // per-element null checks are emitted ONLY for sides whose array
-      // type statically carries containsNull — dense-vector loops stay
-      // branch-free; `ev.isNull = true` on a hit is the nullSafeCodeGen-
-      // sanctioned way for result code to change nullability
-      val nullChecks = Seq(
-        if (sideContainsNull(left.dataType)) Some(s"$x.isNullAt($i)") else None,
-        if (sideContainsNull(right.dataType)) Some(s"$y.isNullAt($i)") else None
-      ).flatten
-      val guard =
-        if (nullChecks.isEmpty) ""
-        else s"""if (${nullChecks.mkString(" || ")}) {
-           |    ${ev.isNull} = true; break;
-           |  }
-           |  """.stripMargin
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $guard$dot += ${read(x, elemType(left.dataType).get, i)}
-         |    * ${read(y, elemType(right.dataType).get, i)};
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $dot;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =

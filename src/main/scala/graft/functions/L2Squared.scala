@@ -1,118 +1,46 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 
 /** Native Catalyst expression: squared Euclidean distance of two numeric
-  * arrays with full whole-stage codegen — the PQ/IVF assignment and ADC
+  * arrays, callable as SQL `l2_sq(a, b)` — the PQ/IVF assignment and ADC
   * kernel ([[graft.ops.Similarity.pqCodebooks]]'s Σ(aᵢ−bᵢ)²), replacing
   * the interpreted `aggregate(zip_with(...))` fold that runs two lambda
   * dispatches per component on every (vector, centroid) candidate row.
-  * Fourth kernel beside [[CosineSimilarity]], [[DotProduct]] and
-  * [[RollingFingerprint]] (SURVEY §2.8 preference order (b)); registered
-  * via [[graft.GraftExtensions]] as SQL `l2_sq(a, b)`.
+  * A [[VectorKernel]].
   *
   * Numerics: a single left-to-right accumulation of (aᵢ−bᵢ)² — the
   * identical sequence of the HOF spelling it replaced (bit-identity
   * proven in L2SquaredSpec). On the dyadic lattice the PQ pipeline uses,
   * every term and partial sum is exact, so this also equals the oracle's
-  * dot(a,a) − 2·dot(a,b) + dot(b,b) spelling bit-for-bit. Same null
-  * surface as dot_prod: null array ⇒ NULL, mismatched lengths use the
-  * common prefix, a null ELEMENT ⇒ NULL; `containsNull` is static per
-  * side so dense-vector loops carry no per-element branch.
+  * dot(a,a) − 2·dot(a,b) + dot(b,b) spelling bit-for-bit. A null ELEMENT
+  * makes the result NULL.
   */
 case class L2Squared(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemType(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemType(left.dataType).isDefined && elemType(right.dataType).isDefined)
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"l2_sq requires array<float|double> inputs, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
+  extends VectorKernel {
 
   override def prettyName: String = "l2_sq"
 
-  private def sideContainsNull(dt: DataType): Boolean = dt match {
-    case ArrayType(_, n) => n
-    case _ => false
+  override protected def nullElementYieldsNull: Boolean = true
+
+  override protected def zero(): Array[Double] = new Array[Double](1)
+
+  override protected def step(acc: Array[Double], x: Double, y: Double)
+      : Unit = {
+    val d = x - y
+    acc(0) += d * d
   }
 
-  // nullable even when both inputs are: a null ELEMENT yields NULL
-  override def nullable: Boolean =
-    left.nullable || right.nullable ||
-      sideContainsNull(left.dataType) || sideContainsNull(right.dataType)
+  override protected def finish(acc: Array[Double]): Double = acc(0)
 
-  private def get(a: ArrayData, elem: DataType, i: Int): Double = elem match {
-    case FloatType => a.getFloat(i).toDouble
-    case _ => a.getDouble(i)
+  override protected def genFold(ctx: CodegenContext)
+      : (String, (String, String) => String, String) = {
+    val acc = ctx.freshName("acc")
+    val d = ctx.freshName("d")
+    (s"double $acc = 0.0;",
+      (x, y) => s"double $d = $x\n    - $y;\n  $acc += $d * $d;", acc)
   }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lt = elemType(left.dataType).get
-    val rt = elemType(right.dataType).get
-    val n = math.min(x.numElements(), y.numElements())
-    val checkL = sideContainsNull(left.dataType)
-    val checkR = sideContainsNull(right.dataType)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if ((checkL && x.isNullAt(i)) || (checkR && y.isNullAt(i))) return null
-      val d = get(x, lt, i) - get(y, rt, i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      def read(arr: String, dt: DataType, i: String): String = dt match {
-        case FloatType => s"(double) $arr.getFloat($i)"
-        case _ => s"$arr.getDouble($i)"
-      }
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val nullChecks = Seq(
-        if (sideContainsNull(left.dataType)) Some(s"$x.isNullAt($i)") else None,
-        if (sideContainsNull(right.dataType)) Some(s"$y.isNullAt($i)") else None
-      ).flatten
-      val guard =
-        if (nullChecks.isEmpty) ""
-        else s"""if (${nullChecks.mkString(" || ")}) {
-           |    ${ev.isNull} = true; break;
-           |  }
-           |  """.stripMargin
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${guard}double $d = ${read(x, elemType(left.dataType).get, i)}
-         |    - ${read(y, elemType(right.dataType).get, i)};
-         |  $acc += $d * $d;
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2Squared =

@@ -192,6 +192,18 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double,
                         maxDocFreq: Option[Long] = None): DataFrame = {
+    val (sizes, common) = shingleCommons(df, idCol, textCol, n, maxDocFreq)
+    jaccardPairs(common, sizes, idCol, threshold)
+  }
+
+  /** The undirected shingle overlap of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: each document's shingle count (idCol, n_sh)
+    * and, for every pair sharing a shingle, the common count
+    * (id_i < id_j, n_common).
+    */
+  private def shingleCommons(df: DataFrame, idCol: String, textCol: String,
+                             n: Int, maxDocFreq: Option[Long])
+      : (DataFrame, DataFrame) = {
     // the posting list feeds sizes + both pair-join sides (and the hot-set
     // scan when capped): materialize it once instead of re-running the
     // split/slice/explode over the corpus per consumer
@@ -237,6 +249,14 @@ object Dedup {
           .groupBy(col(s"a.$idCol").as("id_i"), col(s"b.$idCol").as("id_j"))
           .agg(count(lit(1)).as("n_common"))
     }
+    (sizes, common)
+  }
+
+  /** Exact Jaccard from the (id_i, id_j, n_common) counts and the per-doc
+    * shingle counts (idCol, n_sh), kept at `threshold` and above.
+    */
+  private def jaccardPairs(common: DataFrame, sizes: DataFrame,
+                           idCol: String, threshold: Double): DataFrame =
     common
       .join(sizes.withColumnRenamed(idCol, "id_i")
         .withColumnRenamed("n_sh", "n_i"), "id_i")
@@ -248,7 +268,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_i"), col("id_j"), col("jaccard"))
       .orderBy("id_i", "id_j")
-  }
 
   /** Directed n-gram CONTAINMENT pairs: |shingles(i) ∩ shingles(j)| /
     * |shingles(i)| ≥ threshold, i ≠ j — the asymmetric twin of
@@ -267,36 +286,7 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int, threshold: Double,
                        maxDocFreq: Option[Long] = None): DataFrame = {
-    val sh0 = shingles(df, idCol, textCol, n).localCheckpoint()
-    val sh = maxDocFreq match {
-      case Some(cap) =>
-        val hot = sh0.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("__df")).filter(col("__df") > cap)
-          .select("shingle")
-        sh0.join(hot, Seq("shingle"), "left_anti")
-      case None => sh0
-    }
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val common = maxDocFreq match {
-      case Some(_) =>
-        // capped postings: bounded per-shingle id lists, one grouped pass
-        // (safe ONLY because hot shingles were removed — ngram discipline)
-        sh.groupBy(col("shingle"))
-          .agg(collect_list(col(idCol)).as("__ids"))
-          .select(explode(col("__ids")).as("id_i"), col("__ids"))
-          .select(col("id_i"), explode(col("__ids")).as("id_j"))
-          .filter(col("id_i") < col("id_j"))
-          .groupBy("id_i", "id_j")
-          .agg(count(lit(1)).as("n_common"))
-      case None =>
-        sh.as("a")
-          .join(sh.as("b"),
-            col("a.shingle") === col("b.shingle") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .groupBy(col(s"a.$idCol").as("id_i"),
-            col(s"b.$idCol").as("id_j"))
-          .agg(count(lit(1)).as("n_common"))
-    }
+    val (sizes, common) = shingleCommons(df, idCol, textCol, n, maxDocFreq)
     val directed = common
       .unionAll(common.select(col("id_j").as("id_i"),
         col("id_i").as("id_j"), col("n_common")))
@@ -410,17 +400,7 @@ object Dedup {
       .join(sh.withColumnRenamed(idCol, "id_i"), "id_i")
       .join(sh.withColumnRenamed(idCol, "id_j"), Seq("id_j", "shingle"))
       .groupBy("id_i", "id_j").agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.withColumnRenamed(idCol, "id_i")
-        .withColumnRenamed("n_sh", "n_i"), "id_i")
-      .join(sizes.withColumnRenamed(idCol, "id_j")
-        .withColumnRenamed("n_sh", "n_j"), "id_j")
-      .withColumn("jaccard", round(
-        col("n_common").cast("double")
-          / (col("n_i") + col("n_j") - col("n_common")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_i"), col("id_j"), col("jaccard"))
-      .orderBy("id_i", "id_j")
+    jaccardPairs(common, sizes, idCol, threshold)
   }
 
   /** Incremental near-dup against a persisted MinHash signature index —
@@ -1022,15 +1002,8 @@ object Dedup {
     // NULL text is an absent payload, not an absent document: coalesce
     // to "" so the doc yields one empty (always-kept) line and a visible
     // zero-accounting row instead of vanishing through the inner join.
-    val base = Par.ensure(docs)
-      .select(col(idCol), coalesce(col(textCol), lit("")).as(textCol))
-    val lines = base
-      .select(col(idCol), posexplode(
-        split(col(textCol), java.util.regex.Pattern.quote(delim), -1)))
-      .withColumnRenamed("pos", "__pos").withColumnRenamed("col", "__line")
-      .withColumn("__norm",
-        trim(regexp_replace(lower(col("__line")), "\\s+", " ")))
-      .withColumn("__key", md5(col("__norm")))
+    val (base, lineRows) = splitLines(docs, idCol, textCol, delim)
+    val lines = lineRows.withColumn("__key", md5(col("__norm")))
       .localCheckpoint()
     val stats = lines.where(col("__norm") =!= "")
       .groupBy(col("__key"))
@@ -1043,6 +1016,37 @@ object Dedup {
       .where(col("__nd").isNull ||
         (col(idCol) === col("__keep.id") &&
           col("__pos") === col("__keep.pos")))
+    rebuildReport(base, lines, kept, idCol, textCol, delim)
+  }
+
+  /** The line frame of the line-level rewrites ([[lineDedup]],
+    * [[Text.lineQualityRewrite]]): `base` is (id, text) with NULL text
+    * read as "", and the second frame holds one row per
+    * `delim`-separated line: its position `__pos`, the raw `__line` and
+    * `__norm`, lower-cased with whitespace runs collapsed and trimmed.
+    */
+  private[ops] def splitLines(docs: DataFrame, idCol: String,
+                              textCol: String, delim: String)
+      : (DataFrame, DataFrame) = {
+    val base = Par.ensure(docs)
+      .select(col(idCol), coalesce(col(textCol), lit("")).as(textCol))
+    val lines = base
+      .select(col(idCol), posexplode(
+        split(col(textCol), java.util.regex.Pattern.quote(delim), -1)))
+      .withColumnRenamed("pos", "__pos").withColumnRenamed("col", "__line")
+      .withColumn("__norm",
+        trim(regexp_replace(lower(col("__line")), "\\s+", " ")))
+    (base, lines)
+  }
+
+  /** The rewrite report over [[splitLines]]' frames: the `kept` lines of
+    * each document re-joined by `delim` in position order, with
+    * n_lines / n_lines_kept / n_lines_removed and n_chars_removed.
+    */
+  private[ops] def rebuildReport(base: DataFrame, lines: DataFrame,
+                                 kept: DataFrame, idCol: String,
+                                 textCol: String,
+                                 delim: String): DataFrame = {
     val rebuilt = kept.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_lines_kept"),
         array_join(transform(

@@ -40,6 +40,17 @@ object Drift {
   def psiDrift(a: DataFrame, b: DataFrame, valCol: String,
                lo: Double, hi: Double, bins: Int): DataFrame = {
     require(bins > 0 && hi > lo, "psiDrift needs bins > 0 and hi > lo")
+    binTotal(smoothedBins(a, b, valCol, lo, hi, bins)
+      .withColumn("contrib",
+        (col("p_a") - col("p_b")) * log(col("p_a") / col("p_b"))), "psi")
+  }
+
+  /** The histogram frame [[psiDrift]] and [[jsDivergence]] share: one
+    * row per bin with the counts c_a and c_b and the Laplace-smoothed
+    * proportions p_a and p_b.
+    */
+  private def smoothedBins(a: DataFrame, b: DataFrame, valCol: String,
+                           lo: Double, hi: Double, bins: Int): DataFrame = {
     def binned(df: DataFrame, side: String): DataFrame =
       df.filter(col(valCol).isNotNull)
         .select(least(greatest(
@@ -63,17 +74,21 @@ object Drift {
         (col("c_a") + half) / (col("n_a") + half * bins))
       .withColumn("p_b",
         (col("c_b") + half) / (col("n_b") + half * bins))
-      .withColumn("contrib",
-        (col("p_a") - col("p_b")) * log(col("p_a") / col("p_b")))
-      .withColumn("psi", round(
+  }
+
+  /** The per-bin report over [[smoothedBins]] plus a `contrib` column,
+    * with the contributions summed into `stat` on every row.
+    */
+  private def binTotal(withContrib: DataFrame, stat: String): DataFrame =
+    withContrib
+      .withColumn(stat, round(
         sum(col("contrib")).over(
           Window.orderBy("bin").rowsBetween(Window.unboundedPreceding,
             Window.unboundedFollowing)), 6))
       .select(col("bin"), col("c_a"), col("c_b"),
         round(col("p_a"), 6).as("p_a"), round(col("p_b"), 6).as("p_b"),
-        round(col("contrib"), 6).as("contrib"), col("psi"))
+        round(col("contrib"), 6).as("contrib"), col(stat))
       .orderBy("bin")
-  }
 
   /** Jensen–Shannon divergence over the same fixed-bin histogram frame
     * as [[psiDrift]] (shared smoothing, shared clamp discipline):
@@ -87,40 +102,11 @@ object Drift {
   def jsDivergence(a: DataFrame, b: DataFrame, valCol: String,
                    lo: Double, hi: Double, bins: Int): DataFrame = {
     require(bins > 0 && hi > lo, "jsDivergence needs bins > 0 and hi > lo")
-    def binned(df: DataFrame, side: String): DataFrame =
-      df.filter(col(valCol).isNotNull)
-        .select(least(greatest(
-          floor((col(valCol).cast("double") - lit(lo))
-            / lit((hi - lo) / bins)), lit(0L)), lit(bins - 1L))
-          .cast("int").as("bin"))
-        .groupBy("bin").agg(count(lit(1)).as(s"c_$side"))
-    val spark = a.sparkSession
-    import spark.implicits._
-    val allBins = (0 until bins).toDF("bin")
-    val joined = broadcast(allBins)
-      .join(binned(a, "a"), Seq("bin"), "left")
-      .join(binned(b, "b"), Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("c_a"), lit(0L)).as("c_a"),
-        coalesce(col("c_b"), lit(0L)).as("c_b"))
-    val tot = joined.agg(sum(col("c_a")).as("n_a"), sum(col("c_b")).as("n_b"))
-    val half = lit(0.5)
-    val pa = (col("c_a") + half) / (col("n_a") + half * bins)
-    val pb = (col("c_b") + half) / (col("n_b") + half * bins)
-    joined.crossJoin(broadcast(tot))
-      .withColumn("p_a", pa).withColumn("p_b", pb)
+    binTotal(smoothedBins(a, b, valCol, lo, hi, bins)
       .withColumn("m", (col("p_a") + col("p_b")) / 2.0)
       .withColumn("contrib",
         (col("p_a") * log(col("p_a") / col("m"))
-          + col("p_b") * log(col("p_b") / col("m"))) / 2.0)
-      .withColumn("jsd", round(
-        sum(col("contrib")).over(
-          Window.orderBy("bin").rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)), 6))
-      .select(col("bin"), col("c_a"), col("c_b"),
-        round(col("p_a"), 6).as("p_a"), round(col("p_b"), 6).as("p_b"),
-        round(col("contrib"), 6).as("contrib"), col("jsd"))
-      .orderBy("bin")
+          + col("p_b") * log(col("p_b") / col("m"))) / 2.0), "jsd")
   }
 
   /** CUSUM changepoint score per key: Sₜ = Σ_{i≤t}(xᵢ − x̄) over the

@@ -103,18 +103,27 @@ object Events {
   def transitions(events: DataFrame, userCol: String, timeCol: String,
                   idCol: String, typeCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col(timeCol), col(idCol))
-    val pairs = events
-      .select(col(userCol), col(timeCol), col(idCol),
-        col(typeCol).as("to_type"))
-      .withColumn("from_type", lag(col("to_type"), 1).over(w))
-      .where(col("from_type").isNotNull)
+    val pairs = typePairs(events, userCol, timeCol, idCol, typeCol)
     val byFrom = Window.partitionBy("from_type")
     pairs.groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n"))
       .withColumn("p", round(col("n") / sum(col("n")).over(byFrom), 6))
       .orderBy("from_type", "to_type")
+  }
+
+  /** Per user, each event's type (`to_type`) beside the type of the
+    * user's previous event (`from_type`), ordered by time with the event
+    * id as the deterministic tiebreak; first events drop out.
+    */
+  private def typePairs(events: DataFrame, userCol: String, timeCol: String,
+                        idCol: String, typeCol: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(userCol))
+      .orderBy(col(timeCol), col(idCol))
+    events
+      .select(col(userCol), col(timeCol), col(idCol),
+        col(typeCol).as("to_type"))
+      .withColumn("from_type", lag(col("to_type"), 1).over(w))
+      .where(col("from_type").isNotNull)
   }
 
   /** Last-touch attribution: each `convType` event is credited to the
@@ -243,6 +252,15 @@ object Events {
           .partitionBy(col("__u"), col("__cid"))))
       .select(col("__ty").as("channel"),
         (lit(1.0) / col("__n")).as("__credit"))
+    channelCredits(credited, pairs, convs)
+  }
+
+  /** Per channel, the summed `__credit` of the touch rows `credited`
+    * plus a full credit to "none" for every conversion in `convs` with
+    * no touch in `pairs`, and the number of credited rows.
+    */
+  private def channelCredits(credited: DataFrame, pairs: DataFrame,
+                             convs: DataFrame): DataFrame = {
     val untouched = convs.join(pairs.select(col("__u"),
           col("__cid")).distinct(),
         Seq("__u", "__cid"), "left_anti")
@@ -284,15 +302,7 @@ object Events {
           .partitionBy(col("__u"), col("__cid"))))
       .select(col("__ty").as("channel"),
         (col("__w") / col("__sw")).as("__credit"))
-    val untouched = convs.join(pairs.select(col("__u"),
-          col("__cid")).distinct(),
-        Seq("__u", "__cid"), "left_anti")
-      .select(lit("none").as("channel"), lit(1.0).as("__credit"))
-    credited.unionByName(untouched)
-      .groupBy("channel")
-      .agg(round(sum(col("__credit")), 6).as("credit"),
-        count(lit(1)).as("n_touchpoints"))
-      .orderBy("channel")
+    channelCredits(credited, pairs, convs)
   }
 
   /** Top-k session paths: sessionize (same inactivity-gap rule as the
@@ -522,13 +532,7 @@ object Events {
                         timeCol: String, idCol: String,
                         typeCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col(timeCol), col(idCol))
-    val pairs = events
-      .select(col(userCol), col(timeCol), col(idCol),
-        col(typeCol).as("to_type"))
-      .withColumn("from_type", lag(col("to_type"), 1).over(w))
-      .where(col("from_type").isNotNull)
+    val pairs = typePairs(events, userCol, timeCol, idCol, typeCol)
     val cnt = pairs.groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n"))
     val wFrom = Window.partitionBy("from_type")

@@ -1016,6 +1016,13 @@ object Models {
   def boostedStumpsEval(df: DataFrame, yCol: String, xCols: Seq[String],
                         rounds: Int = 3, lr: Double = 0.5): DataFrame = {
     val (_, cur, fExpr) = fitStumps(df, yCol, xCols, rounds, lr)
+    regressionEval(cur, fExpr)
+  }
+
+  /** n, RMSE, MAE and R² of the fitted predictions `fExpr` against `__y`
+    * over a booster's final frame, in one scan.
+    */
+  private def regressionEval(cur: DataFrame, fExpr: Column): DataFrame = {
     val scored = cur.withColumn("__r", col("__y") - fExpr)
     val ybar = scored.agg(avg(col("__y")).as("__ybar"))
     scored.crossJoin(broadcast(ybar))
@@ -1098,6 +1105,76 @@ object Models {
       .drop("__m")
   }
 
+  /** The boosters' start: the (__y, features) projection, checkpointed
+    * once because every round re-scans it (the XGBoost-on-Spark "cache
+    * the feature matrix before boosting" discipline), crossed with F0,
+    * the dyadic-floored mean of y, as `__f0`; and the checkpointed
+    * round-0 model row carrying F0, with `node` columns after
+    * boost_round. The base row makes the published model
+    * SELF-CONTAINED: a scorer needs F0, and shipping it inside the model
+    * frame is the parameter-table discipline (printf-rounded like the
+    * leaves).
+    */
+  private def boostStart(df: DataFrame, yCol: String, xCols: Seq[String],
+                         node: Seq[Column]): (DataFrame, DataFrame) = {
+    val data = df.select(
+      (col(yCol).cast("double").as("__y") +:
+        xCols.map(c => col(c).cast("double").as(c))): _*)
+      .localCheckpoint()
+    val f0 = data.agg(
+      (floor(avg(col("__y")) * 1024) / 1024).as("__f0"))
+    val base = f0.select((lit(0).as("boost_round") +: node) ++ Seq(
+      lit("__base").as("feature"),
+      lit(null).cast("double").as("threshold"),
+      round(col("__f0"), 6).as("leaf_left"),
+      round(col("__f0"), 6).as("leaf_right"),
+      lit(null).cast("double").as("gain")): _*)
+      .localCheckpoint()
+    (data.crossJoin(broadcast(f0)), base)
+  }
+
+  /** Every candidate split over the residual `__r`, per `keys` and
+    * feature: each non-NULL feature value `v` with the running residual
+    * sum and count up to it (sl, cl) and the totals (st, ct), the top
+    * value (empty right side) dropped. One explode carries every
+    * feature's (value, residual) pairs through one scan. NULL feature
+    * values never enter the search: unfiltered, NULLS-FIRST ordering
+    * would bill them to the left of every candidate (and a NULL could
+    * even be picked as the threshold) while the prediction CASE routes
+    * them right — the missing-goes-right contract keeps fit and score
+    * consistent instead.
+    */
+  private def splitSearch(resid: DataFrame, xCols: Seq[String],
+                          keys: Seq[String]): DataFrame = {
+    val cands = resid.select(keys.map(col) ++ Seq(col("__r"),
+        explode(array(xCols.map(c =>
+          struct(lit(c).as("feature"), col(c).as("v"))): _*)).as("p")): _*)
+      .filter(col("p.v").isNotNull)
+      .groupBy(keys.map(col) ++ Seq(col("p.feature").as("feature"),
+        col("p.v").as("v")): _*)
+      .agg(sum(col("__r")).as("s"), count(lit(1)).as("c"))
+    val byFeature = (keys :+ "feature").map(col)
+    val wRun = Window.partitionBy(byFeature: _*).orderBy("v")
+    val wAll = Window.partitionBy(byFeature: _*)
+    cands
+      .withColumn("sl", sum(col("s")).over(wRun))
+      .withColumn("cl", sum(col("c")).over(wRun))
+      .withColumn("st", sum(col("s")).over(wAll))
+      .withColumn("ct", sum(col("c")).over(wAll))
+      .filter(col("cl") < col("ct"))
+  }
+
+  /** Squared-loss gain of a [[splitSearch]] candidate. */
+  private val splitGain: Column =
+    col("sl") * col("sl") / col("cl") +
+      (col("st") - col("sl")) * (col("st") - col("sl")) /
+        (col("ct") - col("cl"))
+
+  /** Dyadic-floored residual means left and right of a candidate. */
+  private val leftMean: Column = floor(col("sl") / col("cl") * 1024) / 1024
+  private val rightMean: Column =
+    floor((col("st") - col("sl")) / (col("ct") - col("cl")) * 1024) / 1024
+
   private def fitStumps(df: DataFrame, yCol: String, xCols: Seq[String],
                         rounds: Int, lr: Double)
       : (DataFrame, DataFrame, Column) = {
@@ -1106,55 +1183,15 @@ object Models {
     require(lr > 0 && lr <= 1 && lr * 1024 == math.rint(lr * 1024),
       s"lr must be a dyadic multiple of 2^-10 in (0, 1], got $lr")
     require(xCols.nonEmpty, "boostedStumps needs at least one feature")
-    // cache the projected feature frame for the per-round scans (the
-    // fitTrees2 note: XGBoost-on-Spark's feature-matrix caching)
-    val data = df.select(
-      (col(yCol).cast("double").as("__y") +:
-        xCols.map(c => col(c).cast("double").as(c))): _*)
-      .localCheckpoint()
-    val f0 = data.agg(
-      (floor(avg(col("__y")) * 1024) / 1024).as("__f0"))
-    var cur = data.crossJoin(broadcast(f0))
+    val (start, base) = boostStart(df, yCol, xCols, Seq.empty)
+    var cur = start
     var fExpr: Column = col("__f0")
-    val model = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // round-0 base row makes the published model SELF-CONTAINED: a
-    // scorer needs F0, and shipping it inside the model frame is the
-    // parameter-table discipline (printf-rounded like the leaves)
-    model += f0.select(lit(0).as("boost_round"),
-      lit("__base").as("feature"),
-      lit(null).cast("double").as("threshold"),
-      round(col("__f0"), 6).as("leaf_left"),
-      round(col("__f0"), 6).as("leaf_right"),
-      lit(null).cast("double").as("gain"))
-      .localCheckpoint()
+    val model = scala.collection.mutable.ArrayBuffer(base)
     for (r <- 1 to rounds) {
       val resid = cur.withColumn("__r", col("__y") - fExpr)
-      // one scan: every feature's (value, residual) pairs in one explode
-      // NULL feature values never enter the split search: unfiltered,
-      // NULLS-FIRST ordering would bill them to the left of every
-      // candidate (and a NULL could even be picked as the threshold)
-      // while the prediction CASE routes them right — the missing-goes-
-      // right contract below keeps fit and score consistent instead
-      val cands = resid.select(col("__r"), explode(array(xCols.map(c =>
-        struct(lit(c).as("feature"), col(c).as("v"))): _*)).as("p"))
-        .filter(col("p.v").isNotNull)
-        .groupBy(col("p.feature").as("feature"), col("p.v").as("v"))
-        .agg(sum(col("__r")).as("s"), count(lit(1)).as("c"))
-      val wRun = Window.partitionBy("feature").orderBy("v")
-      val wAll = Window.partitionBy("feature")
-      val best = cands
-        .withColumn("sl", sum(col("s")).over(wRun))
-        .withColumn("cl", sum(col("c")).over(wRun))
-        .withColumn("st", sum(col("s")).over(wAll))
-        .withColumn("ct", sum(col("c")).over(wAll))
-        .filter(col("cl") < col("ct")) // top value leaves R empty: skip
-        .select(col("feature"), col("v"),
-          (floor(col("sl") / col("cl") * 1024) / 1024).as("ml"),
-          (floor((col("st") - col("sl")) / (col("ct") - col("cl")) * 1024)
-            / 1024).as("mr"),
-          (col("sl") * col("sl") / col("cl") +
-            (col("st") - col("sl")) * (col("st") - col("sl")) /
-              (col("ct") - col("cl"))).as("gain"))
+      val best = splitSearch(resid, xCols, Seq.empty)
+        .select(col("feature"), col("v"), leftMean.as("ml"),
+          rightMean.as("mr"), splitGain.as("gain"))
         .orderBy(col("gain").desc, col("feature"), col("v"))
         .limit(1)
         .select(col("feature").as(s"__ft$r"), col("v").as(s"__t$r"),
@@ -1245,15 +1282,7 @@ object Models {
   def boostedTrees2Eval(df: DataFrame, yCol: String, xCols: Seq[String],
                         rounds: Int = 3, lr: Double = 0.5): DataFrame = {
     val (_, cur, fExpr) = fitTrees2(df, yCol, xCols, rounds, lr)
-    val scored = cur.withColumn("__r", col("__y") - fExpr)
-    val ybar = scored.agg(avg(col("__y")).as("__ybar"))
-    scored.crossJoin(broadcast(ybar))
-      .agg(count(lit(1)).as("n"),
-        round(sqrt(avg(col("__r") * col("__r"))), 6).as("rmse"),
-        round(avg(abs(col("__r"))), 6).as("mae"),
-        round(lit(1.0) - sum(col("__r") * col("__r")) /
-          sum((col("__y") - col("__ybar")) * (col("__y") - col("__ybar"))),
-          6).as("r2"))
+    regressionEval(cur, fExpr)
   }
 
   /** Score any frame with a PUBLISHED depth-2 model
@@ -1273,20 +1302,9 @@ object Models {
   def scoreTrees2(df: DataFrame, xCols: Seq[String], model: DataFrame,
                   lr: Double = 0.5): DataFrame = {
     require(xCols.nonEmpty, "scoreTrees2 needs the feature columns")
-    def pick(node: String, c: String) =
-      first(when(col("node") === node, col(c)), ignoreNulls = true)
     // plan-time pull of the round-pivoted parameter table: bounded by
     // construction (one row per boost round), never corpus data
-    val rows = model.groupBy(col("boost_round").cast("int").as("r")).agg(
-      pick("base", "leaf_left").as("base"),
-      pick("root", "feature").as("ft"), pick("root", "threshold").as("t"),
-      pick("left", "feature").as("lf"), pick("left", "threshold").as("lt"),
-      pick("left", "leaf_left").as("lml"),
-      pick("left", "leaf_right").as("lmr"),
-      pick("right", "feature").as("rf"),
-      pick("right", "threshold").as("rt"),
-      pick("right", "leaf_left").as("rml"),
-      pick("right", "leaf_right").as("rmr"))
+    val rows = trees2ByRound(model, col("boost_round").cast("int"))
       .collect().sortBy(_.getInt(0))
     def dl(m: org.apache.spark.sql.Row, i: Int): Column =
       if (m.isNullAt(i)) lit(null).cast("double") else lit(m.getDouble(i))
@@ -1305,18 +1323,13 @@ object Models {
     df.withColumn("prediction", pred)
   }
 
-  /** The retired HOF spelling of [[scoreTrees2]] — one broadcast
-    * round-ordered array folded by an ArrayAggregate lambda
-    * (CodegenFallback: interpreted per row). Kept private as the bit-
-    * identity contract the compiled scorer is A/B-gated against.
+  /** A published depth-2 model pivoted to one row per round `r`: base,
+    * root (ft, t), left (lf, lt, lml, lmr) and right (rf, rt, rml, rmr).
     */
-  private[graft] def scoreTrees2Hof(df: DataFrame, xCols: Seq[String],
-                                    model: DataFrame,
-                                    lr: Double = 0.5): DataFrame = {
-    require(xCols.nonEmpty, "scoreTrees2 needs the feature columns")
+  private def trees2ByRound(model: DataFrame, roundCol: Column): DataFrame = {
     def pick(node: String, c: String) =
       first(when(col("node") === node, col(c)), ignoreNulls = true)
-    val byRound = model.groupBy(col("boost_round").as("r")).agg(
+    model.groupBy(roundCol.as("r")).agg(
       pick("base", "leaf_left").as("base"),
       pick("root", "feature").as("ft"), pick("root", "threshold").as("t"),
       pick("left", "feature").as("lf"), pick("left", "threshold").as("lt"),
@@ -1326,6 +1339,18 @@ object Models {
       pick("right", "threshold").as("rt"),
       pick("right", "leaf_left").as("rml"),
       pick("right", "leaf_right").as("rmr"))
+  }
+
+  /** The retired HOF spelling of [[scoreTrees2]] — one broadcast
+    * round-ordered array folded by an ArrayAggregate lambda
+    * (CodegenFallback: interpreted per row). Kept private as the bit-
+    * identity contract the compiled scorer is A/B-gated against.
+    */
+  private[graft] def scoreTrees2Hof(df: DataFrame, xCols: Seq[String],
+                                    model: DataFrame,
+                                    lr: Double = 0.5): DataFrame = {
+    require(xCols.nonEmpty, "scoreTrees2 needs the feature columns")
+    val byRound = trees2ByRound(model, col("boost_round"))
     val mlist = byRound.agg(array_sort(collect_list(struct(
       col("r"), col("base"), col("ft"), col("t"), col("lf"), col("lt"),
       col("lml"), col("lmr"), col("rf"), col("rt"), col("rml"),
@@ -1597,51 +1622,21 @@ object Models {
     require(lr > 0 && lr <= 1 && lr * 1024 == math.rint(lr * 1024),
       s"lr must be a dyadic multiple of 2^-10 in (0, 1], got $lr")
     require(xCols.nonEmpty, "boostedTrees2 needs at least one feature")
-    // checkpoint the projected feature frame ONCE: every round makes
-    // two full passes (root scan, branch scan) plus the F0/eval scans,
-    // and without this each re-derives the projection from the source
-    // scan — the XGBoost-on-Spark "cache the feature matrix before
-    // boosting" discipline (executor-local blocks, freed with the frame)
-    val data = df.select(
-      (col(yCol).cast("double").as("__y") +:
-        xCols.map(c => col(c).cast("double").as(c))): _*)
-      .localCheckpoint()
-    val f0 = data.agg(
-      (floor(avg(col("__y")) * 1024) / 1024).as("__f0"))
-    var cur = data.crossJoin(broadcast(f0))
+    val (start, base) =
+      boostStart(df, yCol, xCols, Seq(lit("base").as("node")))
+    var cur = start
     var fExpr: Column = col("__f0")
     // dispatch the feature named by ftCol to its column value
     def dispatch(ftCol: Column): Column =
       xCols.tail.foldLeft(when(ftCol === xCols.head, col(xCols.head))) {
         (acc, c) => acc.when(ftCol === c, col(c))
       }
-    val model = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    model += f0.select(lit(0).as("boost_round"), lit("base").as("node"),
-      lit("__base").as("feature"),
-      lit(null).cast("double").as("threshold"),
-      round(col("__f0"), 6).as("leaf_left"),
-      round(col("__f0"), 6).as("leaf_right"),
-      lit(null).cast("double").as("gain"))
-      .localCheckpoint()
+    val model = scala.collection.mutable.ArrayBuffer(base)
     for (r <- 1 to rounds) {
       val resid = cur.withColumn("__r", col("__y") - fExpr)
       // ROOT: the depth-1 candidate scan (NULLs sit out — stump contract)
-      val cands = resid.select(col("__r"), explode(array(xCols.map(c =>
-        struct(lit(c).as("feature"), col(c).as("v"))): _*)).as("p"))
-        .filter(col("p.v").isNotNull)
-        .groupBy(col("p.feature").as("feature"), col("p.v").as("v"))
-        .agg(sum(col("__r")).as("s"), count(lit(1)).as("c"))
-      val wRun = Window.partitionBy("feature").orderBy("v")
-      val wAll = Window.partitionBy("feature")
-      val best = cands
-        .withColumn("sl", sum(col("s")).over(wRun))
-        .withColumn("cl", sum(col("c")).over(wRun))
-        .withColumn("st", sum(col("s")).over(wAll))
-        .withColumn("ct", sum(col("c")).over(wAll))
-        .filter(col("cl") < col("ct"))
-        .withColumn("gain", col("sl") * col("sl") / col("cl") +
-          (col("st") - col("sl")) * (col("st") - col("sl")) /
-            (col("ct") - col("cl")))
+      val best = splitSearch(resid, xCols, Seq.empty)
+        .withColumn("gain", splitGain)
         .orderBy(col("gain").desc, col("feature"), col("v"))
         .limit(1)
         .select(col("feature").as(s"__ft$r"), col("v").as(s"__t$r"),
@@ -1652,33 +1647,14 @@ object Models {
         .withColumn("__side",
           when(dispatch(col(s"__ft$r")) <= col(s"__t$r"), lit("L"))
             .otherwise(lit("R")))
-      val bCands = sided.select(col("__side"), col("__r"),
-          explode(array(xCols.map(c =>
-            struct(lit(c).as("feature"), col(c).as("v"))): _*)).as("p"))
-        .filter(col("p.v").isNotNull)
-        .groupBy(col("__side"), col("p.feature").as("feature"),
-          col("p.v").as("v"))
-        .agg(sum(col("__r")).as("s"), count(lit(1)).as("c"))
-      val wbRun = Window.partitionBy("__side", "feature").orderBy("v")
-      val wbAll = Window.partitionBy("__side", "feature")
       val wSide = Window.partitionBy("__side")
         .orderBy(col("gain").desc, col("feature"), col("v"))
-      val bBest = bCands
-        .withColumn("sl", sum(col("s")).over(wbRun))
-        .withColumn("cl", sum(col("c")).over(wbRun))
-        .withColumn("st", sum(col("s")).over(wbAll))
-        .withColumn("ct", sum(col("c")).over(wbAll))
-        .filter(col("cl") < col("ct"))
-        .withColumn("gain", col("sl") * col("sl") / col("cl") +
-          (col("st") - col("sl")) * (col("st") - col("sl")) /
-            (col("ct") - col("cl")))
+      val bBest = splitSearch(sided, xCols, Seq("__side"))
+        .withColumn("gain", splitGain)
         .withColumn("__rk", row_number().over(wSide))
         .filter(col("__rk") === 1)
         .select(col("__side"), col("feature").as("bf"), col("v").as("bt"),
-          (floor(col("sl") / col("cl") * 1024) / 1024).as("ml"),
-          (floor((col("st") - col("sl")) / (col("ct") - col("cl")) * 1024)
-            / 1024).as("mr"),
-          col("gain").as("bg"))
+          leftMean.as("ml"), rightMean.as("mr"), col("gain").as("bg"))
       // collapsed-branch fallback: the branch's own quantized mean
       val sideMeans = sided.groupBy(col("__side"))
         .agg((floor(sum(col("__r")) / count(lit(1)) * 1024) / 1024)

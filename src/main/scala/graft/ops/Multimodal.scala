@@ -128,6 +128,14 @@ object Multimodal {
       */
     def pixelStats(bi: BufferedImage): (Double, Array[Long]) = {
       val hist = new Array[Long](16)
+      val sum = addPixels(bi, hist)
+      (sum.toDouble / (3.0 * bi.getWidth * bi.getHeight), hist)
+    }
+
+    /** Adds every RGB channel value of `bi` to the 16-bin `hist` and
+      * returns the channel-value sum.
+      */
+    private def addPixels(bi: BufferedImage, hist: Array[Long]): Long = {
       var sum = 0L
       var y = 0
       while (y < bi.getHeight) {
@@ -143,7 +151,7 @@ object Multimodal {
         }
         y += 1
       }
-      (sum.toDouble / (3.0 * bi.getWidth * bi.getHeight), hist)
+      sum
     }
 
     /** Deterministic audio test signal for `id`: n = id%400+100 samples
@@ -296,20 +304,7 @@ object Multimodal {
       var sum = 0L
       var pixels = 0L
       frames.foreach { bi =>
-        var y = 0
-        while (y < bi.getHeight) {
-          var x = 0
-          while (x < bi.getWidth) {
-            val rgb = bi.getRGB(x, y)
-            val r = (rgb >> 16) & 0xff
-            val g = (rgb >> 8) & 0xff
-            val b = rgb & 0xff
-            hist(r >> 4) += 1; hist(g >> 4) += 1; hist(b >> 4) += 1
-            sum += r + g + b
-            x += 1
-          }
-          y += 1
-        }
+        sum += addPixels(bi, hist)
         pixels += bi.getWidth.toLong * bi.getHeight
       }
       (if (pixels == 0) 0.0 else sum.toDouble / (3.0 * pixels), hist)

@@ -347,24 +347,37 @@ object Similarity {
       // native nearest_cos kernel (bit-contracted to the rank-1 window
       // below — NearestVecSpec), instead of a row_number window whose
       // id-keyed exchange shuffled the corpus per index build (r17)
-      val cands = broadcast(cents.agg(sort_array(collect_list(
-        struct(col("cell"), col("cvec")))).as("__cands")))
       df.select(col(idCol).as(outId),
           transform(col(vecCol), x => x.cast("double")).as("__v"))
-        .crossJoin(cands)
+        .crossJoin(cellArray(cents))
         .select(col(outId),
           nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
     } else {
-      val w = Window.partitionBy("__id")
-        .orderBy(col("__cos").desc, col("cell"))
-      df.select(col(idCol).as("__id"),
-          transform(col(vecCol), x => x.cast("double")).as("__v"))
-        .crossJoin(cents)
-        .withColumn("__cos", expr("cosine_sim(__v, cvec)"))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= n)
+      rankedCells(cents, df, idCol, vecCol, n)
         .select(col("__id").as(outId), col("cell"))
     }
+
+  /** The centroid table as one broadcast row: `__cands`, the
+    * (cell, cvec) structs sorted by cell.
+    */
+  private def cellArray(cents: DataFrame): DataFrame =
+    broadcast(cents.agg(sort_array(collect_list(
+      struct(col("cell"), col("cvec")))).as("__cands")))
+
+  /** Each row of `df` (as `__id`) beside its `n` most cosine-similar
+    * centroids, ranked `__rk` by (cosine DESC, cell).
+    */
+  private def rankedCells(cents: DataFrame, df: DataFrame, idCol: String,
+                          vecCol: String, n: Int): DataFrame = {
+    val w = Window.partitionBy("__id")
+      .orderBy(col("__cos").desc, col("cell"))
+    df.select(col(idCol).as("__id"),
+        transform(col(vecCol), x => x.cast("double")).as("__v"))
+      .crossJoin(cents)
+      .withColumn("__cos", expr("cosine_sim(__v, cvec)"))
+      .withColumn("__rk", row_number().over(w))
+      .filter(col("__rk") <= n)
+  }
 
   /** Candidate pairs: inverted file × broadcast probe list on the cell
     * id, self-pairs dropped.
@@ -914,30 +927,14 @@ object Similarity {
     val rfs = refines.distinct.sorted
     val cents = broadcast(
       ivfCentroids(corpus, idCol, vecCol, nCells, ivfIters, Some(grid)))
-    def rankedCells(df: DataFrame, outId: String, n: Int): DataFrame = {
-      val w = Window.partitionBy("__id")
-        .orderBy(col("__cos").desc, col("cell"))
-      df.select(col(idCol).as("__id"),
-          transform(col(vecCol), x => x.cast("double")).as("__v"))
-        .crossJoin(cents)
-        .withColumn("__cos", expr("cosine_sim(__v, cvec)"))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= n)
-        .select(col("__id").as(outId), col("cell"), col("__rk"))
-    }
     // inverted file via the nearest_cos kernel projection (rank-1 ≡
     // the window below — NearestVecSpec); the probe side keeps the
     // window (it needs ranks 1..max(nprobe), and the query set is the
     // sampled broadcast-bounded side)
-    val candsArr = broadcast(cents.agg(sort_array(collect_list(
-      struct(col("cell"), col("cvec")))).as("__cands")))
-    val inv = corpus.select(col(idCol).as("cand_id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
-      .crossJoin(candsArr)
-      .select(col("cand_id"),
-        nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
-    val prb = rankedCells(queries, "query_id", nps.max)
-      .withColumnRenamed("__rk", "cell_rank")
+    val inv = nearestCells(cents, corpus, idCol, vecCol, "cand_id", 1)
+    val prb = rankedCells(cents, queries, idCol, vecCol, nps.max)
+      .select(col("__id").as("query_id"), col("cell"),
+        col("__rk").as("cell_rank"))
     // each cand sits in ONE cell ⇒ one row per (query, cand) pair, its
     // probe rank attached; no distinct needed
     val pairs = inv.join(broadcast(prb), Seq("cell"))
@@ -1094,11 +1091,9 @@ object Similarity {
     // NearestVecSpec), then ONE winning-cell cosine via a broadcast
     // equi-join back to the centroid table: k cosines per row become
     // one, and the id-keyed window exchange disappears (r17)
-    val cands = broadcast(cents.agg(sort_array(collect_list(
-      struct(col("cell"), col("cvec")))).as("__cands")))
     corpus.select(col(idCol).as("__id"),
         transform(col(vecCol), x => x.cast("double")).as("__v"))
-      .crossJoin(cands)
+      .crossJoin(cellArray(cents))
       .select(col("__id"), col("__v"),
         nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
       .join(broadcast(cents), Seq("cell"))

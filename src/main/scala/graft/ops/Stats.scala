@@ -1302,6 +1302,27 @@ object Stats {
       .orderBy("grp")
   }
 
+  /** The risk-set frame of [[kaplanMeier]] and [[nelsonAalen]]: one row
+    * per (grp, t) with n_at subjects ending at duration t, d_events
+    * uncensored among them, and n_risk(t) = Σ_{t' >= t} n_at(t') — a
+    * reverse cumulative over the per-group distinct-duration frame
+    * (bounded by the time grid). NULL groups and durations drop out.
+    */
+  private def riskSets(subjects: DataFrame, groupCol: String,
+                       durationCol: String, eventCol: String): DataFrame = {
+    val counts = subjects
+      .select(col(groupCol).as("grp"),
+        col(durationCol).cast("long").as("t"),
+        col(eventCol).cast("int").as("ev"))
+      .where(col("grp").isNotNull && col("t").isNotNull)
+      .groupBy(col("grp"), col("t"))
+      .agg(count(lit(1)).as("n_at"),
+        sum(col("ev")).cast("long").as("d_events"))
+    val wRisk = Window.partitionBy("grp").orderBy(col("t").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    counts.withColumn("n_risk", sum(col("n_at")).over(wRisk))
+  }
+
   /** Kaplan-Meier product-limit survival curve per group over
     * right-censored durations — the time-to-event estimator behind every
     * churn/retention/time-to-second-purchase analysis (lifelines
@@ -1323,22 +1344,9 @@ object Stats {
     */
   def kaplanMeier(subjects: DataFrame, groupCol: String,
                   durationCol: String, eventCol: String): DataFrame = {
-    val counts = subjects
-      .select(col(groupCol).as("grp"),
-        col(durationCol).cast("long").as("t"),
-        col(eventCol).cast("int").as("ev"))
-      .where(col("grp").isNotNull && col("t").isNotNull)
-      .groupBy(col("grp"), col("t"))
-      .agg(count(lit(1)).as("n_at"),
-        sum(col("ev")).cast("long").as("d_events"))
-    // n_risk(t) = Σ_{t' >= t} n_at(t'): reverse cumulative over the
-    // per-group distinct-duration frame (bounded by the time grid)
-    val wRisk = Window.partitionBy("grp").orderBy(col("t").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wSurv = Window.partitionBy("grp").orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    counts
-      .withColumn("n_risk", sum(col("n_at")).over(wRisk))
+    riskSets(subjects, groupCol, durationCol, eventCol)
       // d == n collapses the factor to 0 (ln undefined): absorb it via
       // an explicit flag — survival is exactly 0 from that time on
       .withColumn("__ln",
@@ -1546,20 +1554,9 @@ object Stats {
     */
   def nelsonAalen(subjects: DataFrame, groupCol: String,
                   durationCol: String, eventCol: String): DataFrame = {
-    val counts = subjects
-      .select(col(groupCol).as("grp"),
-        col(durationCol).cast("long").as("t"),
-        col(eventCol).cast("int").as("ev"))
-      .where(col("grp").isNotNull && col("t").isNotNull)
-      .groupBy(col("grp"), col("t"))
-      .agg(count(lit(1)).as("n_at"),
-        sum(col("ev")).cast("long").as("d_events"))
-    val wRisk = Window.partitionBy("grp").orderBy(col("t").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wCum = Window.partitionBy("grp").orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    counts
-      .withColumn("n_risk", sum(col("n_at")).over(wRisk))
+    riskSets(subjects, groupCol, durationCol, eventCol)
       .withColumn("__h", col("d_events").cast("double") /
         col("n_risk").cast("double"))
       .withColumn("__v", col("d_events").cast("double") *

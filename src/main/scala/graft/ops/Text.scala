@@ -259,6 +259,27 @@ object Text {
     (53L, "de", "ja"),
     (54L, "fr", "ski nautique"))
 
+  /** The five per-document measures behind the [[qualityExpr]] battery,
+    * over whitespace tokens and characters of the text column.
+    */
+  private case class QualityRatios(nToks: Column, nChars: Column,
+                                   meanTokLen: Column, stopRatio: Column,
+                                   punctRatio: Column, digitRatio: Column)
+
+  private def qualityRatios(t: Column): QualityRatios = {
+    val nToks = size(split(t, " "))
+    val nChars = length(t)
+    QualityRatios(nToks, nChars,
+      length(regexp_replace(t, " ", "")).cast("double")
+        / greatest(nToks, lit(1)),
+      stopHits(split(lower(t), " "), stopEn).cast("double") /
+        greatest(nToks, lit(1)),
+      (length(t) - length(regexp_replace(t, "[\\p{Punct}]", "")))
+        .cast("double") / greatest(nChars, lit(1)),
+      (length(t) - length(regexp_replace(t, "[0-9]", "")))
+        .cast("double") / greatest(nChars, lit(1)))
+  }
+
   /** Quality scoring: length/punctuation/stopword/digit ratios composed
     * into a [0,1] score — the standard pre-training corpus filters
     * (Gopher/C4-style rules) as one codegen'd projection.
@@ -266,18 +287,8 @@ object Text {
   def qualityScore(docs: DataFrame, idCol: String,
                    textCol: String): DataFrame = {
     val t = col(textCol)
-    val toks = split(t, " ")
-    val nToks = size(toks)
-    val nChars = length(t)
-    val meanTokLen =
-      (length(regexp_replace(t, " ", "")).cast("double")
-        / greatest(nToks, lit(1)))
-    val stopRatio = stopHits(split(lower(t), " "), stopEn).cast("double") /
-      greatest(nToks, lit(1))
-    val punctRatio = (length(t) - length(regexp_replace(t, "[\\p{Punct}]", "")))
-      .cast("double") / greatest(nChars, lit(1))
-    val digitRatio = (length(t) - length(regexp_replace(t, "[0-9]", "")))
-      .cast("double") / greatest(nChars, lit(1))
+    val QualityRatios(nToks, nChars, meanTokLen, stopRatio, punctRatio,
+      digitRatio) = qualityRatios(t)
     docs.select(col(idCol), nToks.as("n_tokens"), nChars.as("n_chars_m"),
       round(meanTokLen, 6).as("mean_tok_len"),
       round(stopRatio, 6).as("stop_ratio"),
@@ -307,18 +318,8 @@ object Text {
   def filterAttribution(docs: DataFrame, idCol: String,
                         textCol: String): DataFrame = {
     val t = col(textCol)
-    val toks = split(t, " ")
-    val nToks = size(toks)
-    val nChars = length(t)
-    val meanTokLen =
-      (length(regexp_replace(t, " ", "")).cast("double")
-        / greatest(nToks, lit(1)))
-    val stopRatio = stopHits(split(lower(t), " "), stopEn).cast("double") /
-      greatest(nToks, lit(1))
-    val punctRatio = (length(t) - length(regexp_replace(t, "[\\p{Punct}]", "")))
-      .cast("double") / greatest(nChars, lit(1))
-    val digitRatio = (length(t) - length(regexp_replace(t, "[0-9]", "")))
-      .cast("double") / greatest(nChars, lit(1))
+    val QualityRatios(nToks, nChars, meanTokLen, stopRatio, punctRatio,
+      digitRatio) = qualityRatios(t)
     val pass = Seq(
       nToks.between(5, 1000),
       meanTokLen.between(3.0, 12.0),
@@ -361,18 +362,8 @@ object Text {
     * composers ([[Curation]]) can evaluate it inline without a join.
     */
   def qualityExpr(t: Column): Column = {
-    val toks = split(t, " ")
-    val nToks = size(toks)
-    val nChars = length(t)
-    val meanTokLen =
-      (length(regexp_replace(t, " ", "")).cast("double")
-        / greatest(nToks, lit(1)))
-    val stopRatio = stopHits(split(lower(t), " "), stopEn).cast("double") /
-      greatest(nToks, lit(1))
-    val punctRatio = (length(t) - length(regexp_replace(t, "[\\p{Punct}]", "")))
-      .cast("double") / greatest(nChars, lit(1))
-    val digitRatio = (length(t) - length(regexp_replace(t, "[0-9]", "")))
-      .cast("double") / greatest(nChars, lit(1))
+    val QualityRatios(nToks, nChars, meanTokLen, stopRatio, punctRatio,
+      digitRatio) = qualityRatios(t)
     // heuristic score: reward in-range doc length / word length / stopword
     // presence, punish punctuation & digit noise
     val score =
@@ -1928,37 +1919,11 @@ object Text {
     // NULL text coalesces to "" (one always-kept empty line) so the doc
     // keeps its one-row-per-document contract instead of vanishing
     // through the inner line-count join — the lineDedup rule
-    val base = Par.ensure(docs)
-      .select(col(idCol), coalesce(col(textCol), lit("")).as(textCol))
-    val lines = base
-      .select(col(idCol), posexplode(
-        split(col(textCol), java.util.regex.Pattern.quote(delim), -1)))
-      .withColumnRenamed("pos", "__pos")
-      .withColumnRenamed("col", "__line")
-      .withColumn("__norm",
-        trim(regexp_replace(lower(col("__line")), "\\s+", " ")))
-      .withColumn("__q", qualityExpr(col("__line")))
+    val (base, lineRows) = Dedup.splitLines(docs, idCol, textCol, delim)
+    val lines = lineRows.withColumn("__q", qualityExpr(col("__line")))
     val kept = lines.where(col("__norm") === "" ||
       col("__q") >= minQuality)
-    val rebuilt = kept.groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_lines_kept"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("__pos"), col("__line")))),
-          s => s.getField("__line")), delim).as("text_clean"))
-    base
-      .join(lines.groupBy(col(idCol))
-        .agg(count(lit(1)).as("n_lines")), Seq(idCol))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        col("n_lines"),
-        coalesce(col("n_lines_kept"), lit(0L)).as("n_lines_kept"),
-        (col("n_lines") - coalesce(col("n_lines_kept"), lit(0L)))
-          .as("n_lines_removed"),
-        (length(col(textCol)) -
-          length(coalesce(col("text_clean"), lit(""))))
-          .cast("long").as("n_chars_removed"),
-        coalesce(col("text_clean"), lit("")).as("text_clean"))
-      .orderBy(idCol)
+    Dedup.rebuildReport(base, lines, kept, idCol, textCol, delim)
   }
 
   /** PMI collocations — the phrase-mining pass (find "new york"-style
@@ -2336,22 +2301,7 @@ object Text {
       .groupBy(col(idCol), col("w")).agg(count(lit(1)).as("cnt"))
     val nsub = wc.select(col("w")).distinct()
       .crossJoin(broadcast(mlist))
-      .withColumn("__syms", expr(
-        """aggregate(__m,
-          |  transform(sequence(1, length(w)), i -> substring(w, i, 1)),
-          |  (acc, m) -> aggregate(acc,
-          |    named_struct('a', cast(array() as array<string>),
-          |                 'p', cast(null as string)),
-          |    (st, s) -> CASE
-          |      WHEN st.p IS NULL THEN named_struct('a', st.a, 'p', s)
-          |      WHEN st.p = m.lhs AND s = m.rhs THEN named_struct(
-          |        'a', concat(st.a, array(concat(m.lhs, m.rhs))),
-          |        'p', cast(null as string))
-          |      ELSE named_struct('a', concat(st.a, array(st.p)), 'p', s)
-          |    END,
-          |    st -> CASE WHEN st.p IS NULL THEN st.a
-          |               ELSE concat(st.a, array(st.p)) END))
-          |""".stripMargin))
+      .withColumn("__syms", expr(bpeCascadeExpr("__m")))
       .select(col("w"), size(col("__syms")).cast("long").as("n_sub"),
         length(col("w")).cast("long").as("n_chars"))
     wc.join(nsub, "w")
@@ -2362,6 +2312,28 @@ object Text {
         col("n_char_syms").cast("double") / col("n_bpe_tokens"), 6))
       .orderBy(idCol)
   }
+
+  /** The BPE merge cascade as one SQL fold over a word `w`: outer over
+    * the merge list `merges` (structs of rank r, lhs, rhs, in rank
+    * order), inner the trainer's greedy left-to-right non-overlapping
+    * pass. Yields the word's subword array.
+    */
+  private def bpeCascadeExpr(merges: String): String =
+    s"""aggregate($merges,
+         |  transform(sequence(1, length(w)), i -> substring(w, i, 1)),
+         |  (acc, m) -> aggregate(acc,
+         |    named_struct('a', cast(array() as array<string>),
+         |                 'p', cast(null as string)),
+         |    (st, s) -> CASE
+         |      WHEN st.p IS NULL THEN named_struct('a', st.a, 'p', s)
+         |      WHEN st.p = m.lhs AND s = m.rhs THEN named_struct(
+         |        'a', concat(st.a, array(concat(m.lhs, m.rhs))),
+         |        'p', cast(null as string))
+         |      ELSE named_struct('a', concat(st.a, array(st.p)), 'p', s)
+         |    END,
+         |    st -> CASE WHEN st.p IS NULL THEN st.a
+         |               ELSE concat(st.a, array(st.p)) END))
+         |""".stripMargin
 
   /** Tokenizer fertility/compression report per source at several vocab
     * sizes — the read a corpus owner takes BEFORE committing a BPE
@@ -2409,22 +2381,9 @@ object Text {
     // counts come out of one projection (filter the merge list to
     // rank <= j inside the same fold bpeEncode uses)
     val subCols = checkpoints.map { j =>
-      struct(lit(j).as("n_merges"), size(expr(
-        s"""aggregate(filter(__m, m -> m.r <= $j),
-           |  transform(sequence(1, length(w)), i -> substring(w, i, 1)),
-           |  (acc, m) -> aggregate(acc,
-           |    named_struct('a', cast(array() as array<string>),
-           |                 'p', cast(null as string)),
-           |    (st, s) -> CASE
-           |      WHEN st.p IS NULL THEN named_struct('a', st.a, 'p', s)
-           |      WHEN st.p = m.lhs AND s = m.rhs THEN named_struct(
-           |        'a', concat(st.a, array(concat(m.lhs, m.rhs))),
-           |        'p', cast(null as string))
-           |      ELSE named_struct('a', concat(st.a, array(st.p)), 'p', s)
-           |    END,
-           |    st -> CASE WHEN st.p IS NULL THEN st.a
-           |               ELSE concat(st.a, array(st.p)) END))
-           |""".stripMargin)).cast("long").as("n_sub"))
+      struct(lit(j).as("n_merges"),
+        size(expr(bpeCascadeExpr(s"filter(__m, m -> m.r <= $j)")))
+          .cast("long").as("n_sub"))
     }
     val nsub = wc.select(col("w")).distinct()
       .crossJoin(broadcast(mlist))
@@ -2601,27 +2560,25 @@ object Text {
     // seed frame — model-sized, never corpus-sized
     val chars = seeds.where(length(col("piece")) === 1)
       .select(col("piece"), col("cnt")).localCheckpoint()
-    var vocab = chars.unionByName(
+    val seedVocab = chars.unionByName(
       seeds.where(length(col("piece")) > 1 && col("cnt") >= minCount)
         .orderBy(col("cnt").desc, col("piece")).limit(seedSize))
       .localCheckpoint()
     val fwd = viterbiForwardExpr("w", "__v", maxPieceLen)
     val bt = viterbiBacktraceExpr("w", "__v", "__b", maxPieceLen)
-    for (_ <- 1 to rounds) {
-      val counts = withVocabMap(words, vocab)
+    val vocab = Par.iterate("unigramTrain", rounds, seedVocab) { (cur, _) =>
+      val counts = withVocabMap(words, cur)
         .withColumn("__b", expr(fwd))
         .select(col("freq"), explode(expr(bt)).as("piece"))
         .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-      val next = chars.select(col("piece"))
+      chars.select(col("piece"))
         .join(counts, Seq("piece"), "left")
         .select(col("piece"),
           greatest(coalesce(col("cnt"), lit(0L)), lit(1L)).as("cnt"))
         .unionByName(counts.where(length(col("piece")) > 1))
-        .localCheckpoint()
-      Par.unpersistCheckpoint(vocab)
-      vocab = next
     }
-    IterStats.record("unigramTrain", rounds)
+    // Par.iterate leaves its init to the caller: the seed is ours
+    Par.unpersistCheckpoint(seedVocab)
     Par.unpersistCheckpoint(words)
     vocab
       .crossJoin(broadcast(
@@ -2700,22 +2657,8 @@ object Text {
     // BPE side: the bpeEncode merge-cascade fold, full learned list
     val bpeN = words
       .crossJoin(broadcast(mlist))
-      .select(col("w"), size(expr(
-        """aggregate(__m,
-          |  transform(sequence(1, length(w)), i -> substring(w, i, 1)),
-          |  (acc, m) -> aggregate(acc,
-          |    named_struct('a', cast(array() as array<string>),
-          |                 'p', cast(null as string)),
-          |    (st, s) -> CASE
-          |      WHEN st.p IS NULL THEN named_struct('a', st.a, 'p', s)
-          |      WHEN st.p = m.lhs AND s = m.rhs THEN named_struct(
-          |        'a', concat(st.a, array(concat(m.lhs, m.rhs))),
-          |        'p', cast(null as string))
-          |      ELSE named_struct('a', concat(st.a, array(st.p)), 'p', s)
-          |    END,
-          |    st -> CASE WHEN st.p IS NULL THEN st.a
-          |               ELSE concat(st.a, array(st.p)) END))
-          |""".stripMargin)).cast("long").as("n_sub"),
+      .select(col("w"), size(expr(bpeCascadeExpr("__m"))).cast("long")
+        .as("n_sub"),
         lit("bpe").as("tokenizer"))
     val uniN = words
       .crossJoin(broadcast(vocab.agg(map_from_entries(

@@ -629,6 +629,20 @@ object Windows {
   def acf(series: DataFrame, ordCol: String, valCol: String,
           maxLag: Int): DataFrame = {
     require(maxLag >= 1, "acf needs maxLag >= 1")
+    val sums = lagSums(series, ordCol, valCol, maxLag, Seq.empty)
+    sums.select(expr(s"stack($maxLag, " + (1 to maxLag)
+        .map(j => s"$j, __s$j / __ss").mkString(", ") + ") as (lag, acf)"))
+      .select(col("lag").cast("int").as("lag"),
+        round(col("acf"), 6).as("acf"))
+      .orderBy("lag")
+  }
+
+  /** The one-row product-sums of [[acf]], [[ljungBox]] and [[pacf]]: `extra`
+    * aggregates, then `__ss` = Σ(xₜ−x̄)² and `__sj` = Σ(xₜ−x̄)(xₜ₋ⱼ−x̄)
+    * for lags j = 1..maxLag, over `series` ordered by `ordCol`.
+    */
+  private def lagSums(series: DataFrame, ordCol: String, valCol: String,
+                      maxLag: Int, extra: Seq[Column]): DataFrame = {
     val x = col(valCol).cast("double")
     val base = series.select(col(ordCol).as("__o"), x.as("__x"))
     val m = base.agg(avg(col("__x")).as("__m"))
@@ -637,16 +651,12 @@ object Windows {
       base.crossJoin(broadcast(m))) { (df, j) =>
       df.withColumn(s"__l$j", lag(col("__x"), j).over(w))
     }
-    val aggs = sum((col("__x") - col("__m")) * (col("__x") - col("__m")))
-      .as("__ss") +: (1 to maxLag).map(j =>
+    val aggs = extra ++ (
+      sum((col("__x") - col("__m")) * (col("__x") - col("__m")))
+        .as("__ss") +: (1 to maxLag).map(j =>
       sum((col("__x") - col("__m")) * (col(s"__l$j") - col("__m")))
-        .as(s"__s$j"))
-    val sums = lagged.agg(aggs.head, aggs.tail: _*)
-    sums.select(expr(s"stack($maxLag, " + (1 to maxLag)
-        .map(j => s"$j, __s$j / __ss").mkString(", ") + ") as (lag, acf)"))
-      .select(col("lag").cast("int").as("lag"),
-        round(col("acf"), 6).as("acf"))
-      .orderBy("lag")
+        .as(s"__s$j")))
+    lagged.agg(aggs.head, aggs.tail: _*)
   }
 
   /** Upper 5% chi-square critical values for df 1..12 — the bounded
@@ -676,20 +686,8 @@ object Windows {
                maxLag: Int): DataFrame = {
     require(maxLag >= 1 && maxLag <= 12,
       "ljungBox needs maxLag in 1..12 (bounded chi-square table)")
-    val x = col(valCol).cast("double")
-    val base = series.select(col(ordCol).as("__o"), x.as("__x"))
-    val m = base.agg(avg(col("__x")).as("__m"))
-    val w = Window.orderBy("__o")
-    val lagged = (1 to maxLag).foldLeft(
-      base.crossJoin(broadcast(m))) { (df, j) =>
-      df.withColumn(s"__l$j", lag(col("__x"), j).over(w))
-    }
-    val aggs = count(lit(1)).cast("double").as("__n") +:
-      sum((col("__x") - col("__m")) * (col("__x") - col("__m")))
-        .as("__ss") +: (1 to maxLag).map(j =>
-      sum((col("__x") - col("__m")) * (col(s"__l$j") - col("__m")))
-        .as(s"__s$j"))
-    val sums = lagged.agg(aggs.head, aggs.tail: _*)
+    val sums = lagSums(series, ordCol, valCol, maxLag,
+      Seq(count(lit(1)).cast("double").as("__n")))
     val run = Window.orderBy("lag")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val crit = chi2Crit5.take(maxLag)
@@ -1053,6 +1051,93 @@ object Windows {
       .orderBy(keyCol, "horizon")
   }
 
+  /** Per key `__k`, the non-NULL (o, v) observations as one array
+    * `__seq` sorted by `o`: the input of every Holt-Winters fold.
+    */
+  private def hwSeries(df: DataFrame, keyCol: String, ordCol: String,
+                       valCol: String): DataFrame =
+    df
+      .where(col(ordCol).isNotNull && col(valCol).isNotNull)
+      .select(col(keyCol).as("__k"),
+        struct(col(ordCol).as("o"), col(valCol).cast("double").as("v"))
+          .as("__p"))
+      .groupBy("__k")
+      .agg(sort_array(collect_list(col("__p"))).as("__seq"))
+
+  /** The additive Holt-Winters recursion as one SQL fold over `__seq`,
+    * keeping every (l, b, s) state. Each smoothing coefficient comes as
+    * its SQL text and its complement's. `phi` prefixes every read of the
+    * previous trend (empty: undamped). `withSse` adds `e`, the running
+    * sum of squared one-step-ahead errors from the second observation.
+    */
+  private def hwFoldExpr(period: Int, alpha: (String, String),
+                         beta: (String, String), gamma: (String, String),
+                         phi: String = "", withSse: Boolean = false)
+      : String = {
+    // the zero-warm-up seasonal read, spelled once and inlined everywhere
+    val sm = s"(CASE WHEN size(acc) >= $period " +
+      s"THEN element_at(acc, -$period).s ELSE cast(0.0 as double) END)"
+    val b = s"${phi}element_at(acc, -1).b"
+    val lNew = s"${alpha._1} * (x.v - $sm) + ${alpha._2} * " +
+      s"(element_at(acc, -1).l + $b)"
+    val err = s"(x.v - (element_at(acc, -1).l + element_at(acc, -1).b " +
+      s"+ $sm))"
+    val (eType, eInit, eNext) =
+      if (withSse) (", e: double", ", 'e', cast(0.0 as double)",
+        s", 'e', element_at(acc, -1).e + $err * $err")
+      else ("", "", "")
+    s"""aggregate(__seq,
+       |  cast(array() as array<struct<l: double, b: double, s: double$eType>>),
+       |  (acc, x) -> acc || array(CASE WHEN size(acc) = 0
+       |    THEN named_struct('l', x.v, 'b', cast(0.0 as double),
+       |                      's', cast(0.0 as double)$eInit)
+       |    ELSE named_struct(
+       |      'l', $lNew,
+       |      'b', ${beta._1} * (($lNew) - element_at(acc, -1).l)
+       |           + ${beta._2} * $b,
+       |      's', ${gamma._1} * (x.v - element_at(acc, -1).l
+       |                     - $b)
+       |           + ${gamma._2} * $sm$eNext) END))""".stripMargin
+  }
+
+  /** A fixed smoothing coefficient and its complement as SQL literals. */
+  private def hwCoef(x: Double): (String, String) =
+    (x.toString, (1.0 - x).toString)
+
+  /** The output columns over a folded frame: key, last_ord, `extra`,
+    * the rounded final level and trend, and the raw final state plus
+    * history (`__l`, `__b`, `__a`) that [[hwForecast]] reads.
+    */
+  private def hwState(keyCol: String, extra: Seq[Column]): Seq[Column] =
+    Seq(col("__k").as(keyCol),
+      col("__seq")(size(col("__seq")) - 1).getField("o").as("last_ord")) ++
+      extra ++ Seq(
+      round(element_at(col("__acc"), -1).getField("l"), 6).as("level"),
+      round(element_at(col("__acc"), -1).getField("b"), 6).as("trend"),
+      element_at(col("__acc"), -1).getField("l").as("__l"),
+      element_at(col("__acc"), -1).getField("b").as("__b"),
+      col("__acc").as("__a"))
+
+  /** Forecast columns f1..f`horizons`: ŷ(T+h) = l_T + trendWeight(h)·b_T
+    * + s_{T+h−m}, ordered by key.
+    */
+  private def hwForecast(base: DataFrame, keyCol: String, period: Int,
+                         horizons: Int,
+                         trendWeight: Int => Column): DataFrame =
+    (1 to horizons).foldLeft(base) { (d, h) =>
+        // ŷ(T+h) needs s_{T+h−m} = the (m−h+1)-th seasonal from the end;
+        // absent (series shorter than that) it reads 0, the same zero
+        // warm-up convention the recursion uses
+        val back = period - h + 1
+        val sTerm = when(size(col("__a")) >= back,
+          element_at(col("__a"), -back).getField("s"))
+          .otherwise(lit(0.0))
+        d.withColumn(s"f$h",
+          round(col("__l") + trendWeight(h) * col("__b") + sTerm, 6))
+      }
+      .drop("__l", "__b", "__a")
+      .orderBy(keyCol)
+
   /** Holt-Winters ADDITIVE-SEASONAL triple exponential smoothing per key,
     * plus h-step forecasts — the seasonal half of the reference's
     * forecasting surface (forecasting_dag.py:174-184) that [[holtForecast]]
@@ -1089,51 +1174,10 @@ object Windows {
     require(gamma > 0.0 && gamma <= 1.0, "holt-winters needs gamma in (0, 1]")
     require(horizons >= 1 && horizons <= period,
       "holt-winters needs 1 <= horizons <= period (longer h reuses indices)")
-    val seq = df
-      .where(col(ordCol).isNotNull && col(valCol).isNotNull)
-      .select(col(keyCol).as("__k"),
-        struct(col(ordCol).as("o"), col(valCol).cast("double").as("v"))
-          .as("__p"))
-      .groupBy("__k")
-      .agg(sort_array(collect_list(col("__p"))).as("__seq"))
-    // the zero-warm-up seasonal read, spelled once and inlined everywhere
-    val sm = s"(CASE WHEN size(acc) >= $period " +
-      s"THEN element_at(acc, -$period).s ELSE cast(0.0 as double) END)"
-    val lNew = s"$alpha * (x.v - $sm) + ${1.0 - alpha} * " +
-      "(element_at(acc, -1).l + element_at(acc, -1).b)"
-    val folded = seq.withColumn("__acc", expr(
-      s"""aggregate(__seq,
-         |  cast(array() as array<struct<l: double, b: double, s: double>>),
-         |  (acc, x) -> acc || array(CASE WHEN size(acc) = 0
-         |    THEN named_struct('l', x.v, 'b', cast(0.0 as double),
-         |                      's', cast(0.0 as double))
-         |    ELSE named_struct(
-         |      'l', $lNew,
-         |      'b', $beta * (($lNew) - element_at(acc, -1).l)
-         |           + ${1.0 - beta} * element_at(acc, -1).b,
-         |      's', $gamma * (x.v - element_at(acc, -1).l
-         |                     - element_at(acc, -1).b)
-         |           + ${1.0 - gamma} * $sm) END))""".stripMargin))
-    val base = folded.select(col("__k").as(keyCol),
-      col("__seq")(size(col("__seq")) - 1).getField("o").as("last_ord"),
-      round(element_at(col("__acc"), -1).getField("l"), 6).as("level"),
-      round(element_at(col("__acc"), -1).getField("b"), 6).as("trend"),
-      element_at(col("__acc"), -1).getField("l").as("__l"),
-      element_at(col("__acc"), -1).getField("b").as("__b"),
-      col("__acc").as("__a"))
-    (1 to horizons).foldLeft(base) { (d, h) =>
-        // ŷ(T+h) needs s_{T+h−m} = the (m−h+1)-th seasonal from the end;
-        // absent (series shorter than that) it reads 0, the same zero
-        // warm-up convention the recursion uses
-        val back = period - h + 1
-        val sTerm = when(size(col("__a")) >= back,
-          element_at(col("__a"), -back).getField("s"))
-          .otherwise(lit(0.0))
-        d.withColumn(s"f$h",
-          round(col("__l") + lit(h) * col("__b") + sTerm, 6))
-      }
-      .drop("__l", "__b", "__a")
-      .orderBy(keyCol)
+    val folded = hwSeries(df, keyCol, ordCol, valCol).withColumn("__acc",
+      expr(hwFoldExpr(period, hwCoef(alpha), hwCoef(beta), hwCoef(gamma))))
+    hwForecast(folded.select(hwState(keyCol, Seq.empty): _*), keyCol,
+      period, horizons, h => lit(h))
   }
 
   /** Theta-method forecast (Assimakopoulos & Nikolopoulos '00, the M3
@@ -1250,52 +1294,16 @@ object Windows {
       "needs phi a dyadic multiple of 2^-10 in (0, 1]")
     require(horizons >= 1 && horizons <= period,
       "needs 1 <= horizons <= period")
-    val seq = df
-      .where(col(ordCol).isNotNull && col(valCol).isNotNull)
-      .select(col(keyCol).as("__k"),
-        struct(col(ordCol).as("o"), col(valCol).cast("double").as("v"))
-          .as("__p"))
-      .groupBy("__k")
-      .agg(sort_array(collect_list(col("__p"))).as("__seq"))
-    val sm = s"(CASE WHEN size(acc) >= $period " +
-      s"THEN element_at(acc, -$period).s ELSE cast(0.0 as double) END)"
-    val lNew = s"$alpha * (x.v - $sm) + ${1.0 - alpha} * " +
-      s"(element_at(acc, -1).l + $phi * element_at(acc, -1).b)"
-    val folded = seq.withColumn("__acc", expr(
-      s"""aggregate(__seq,
-         |  cast(array() as array<struct<l: double, b: double, s: double>>),
-         |  (acc, x) -> acc || array(CASE WHEN size(acc) = 0
-         |    THEN named_struct('l', x.v, 'b', cast(0.0 as double),
-         |                      's', cast(0.0 as double))
-         |    ELSE named_struct(
-         |      'l', $lNew,
-         |      'b', $beta * (($lNew) - element_at(acc, -1).l)
-         |           + ${1.0 - beta} * $phi * element_at(acc, -1).b,
-         |      's', $gamma * (x.v - element_at(acc, -1).l
-         |                     - $phi * element_at(acc, -1).b)
-         |           + ${1.0 - gamma} * $sm) END))""".stripMargin))
-    val base = folded.select(col("__k").as(keyCol),
-      col("__seq")(size(col("__seq")) - 1).getField("o").as("last_ord"),
-      round(element_at(col("__acc"), -1).getField("l"), 6).as("level"),
-      round(element_at(col("__acc"), -1).getField("b"), 6).as("trend"),
-      element_at(col("__acc"), -1).getField("l").as("__l"),
-      element_at(col("__acc"), -1).getField("b").as("__b"),
-      col("__acc").as("__a"))
+    val folded = hwSeries(df, keyCol, ordCol, valCol).withColumn("__acc",
+      expr(hwFoldExpr(period, hwCoef(alpha), hwCoef(beta), hwCoef(gamma),
+        phi = s"$phi * ")))
     // φ + φ² + … + φʰ as exact dyadic partial sums (products and sums
     // of dyadics are dyadic; both engines get the identical literal)
     val phiSums = (1 to horizons).scanLeft((0.0, 1.0)) {
       case ((acc, pw), _) => (acc + pw * phi, pw * phi)
     }.tail.map(_._1)
-    (1 to horizons).foldLeft(base) { (d, h) =>
-        val back = period - h + 1
-        val sTerm = when(size(col("__a")) >= back,
-          element_at(col("__a"), -back).getField("s"))
-          .otherwise(lit(0.0))
-        d.withColumn(s"f$h",
-          round(col("__l") + lit(phiSums(h - 1)) * col("__b") + sTerm, 6))
-      }
-      .drop("__l", "__b", "__a")
-      .orderBy(keyCol)
+    hwForecast(folded.select(hwState(keyCol, Seq.empty): _*), keyCol,
+      period, horizons, h => lit(phiSums(h - 1)))
   }
 
   /** Auto Holt-Winters: [[holtWintersForecast]] with the smoothing
@@ -1339,62 +1347,21 @@ object Windows {
     val grid = candidates.zipWithIndex
       .map { case ((a, b, g), i) => (i, a, b, g) }
       .toDF("__cand", "__al", "__be", "__ga")
-    val seq = df
-      .where(col(ordCol).isNotNull && col(valCol).isNotNull)
-      .select(col(keyCol).as("__k"),
-        struct(col(ordCol).as("o"), col(valCol).cast("double").as("v"))
-          .as("__p"))
-      .groupBy("__k")
-      .agg(sort_array(collect_list(col("__p"))).as("__seq"))
+    val seq = hwSeries(df, keyCol, ordCol, valCol)
       .crossJoin(broadcast(grid))
-    val sm = s"(CASE WHEN size(acc) >= $period " +
-      s"THEN element_at(acc, -$period).s ELSE cast(0.0 as double) END)"
-    val lNew = s"__al * (x.v - $sm) + (1.0D - __al) * " +
-      "(element_at(acc, -1).l + element_at(acc, -1).b)"
-    val err = s"(x.v - (element_at(acc, -1).l + element_at(acc, -1).b " +
-      s"+ $sm))"
-    val folded = seq.withColumn("__acc", expr(
-      s"""aggregate(__seq,
-         |  cast(array() as
-         |       array<struct<l: double, b: double, s: double, e: double>>),
-         |  (acc, x) -> acc || array(CASE WHEN size(acc) = 0
-         |    THEN named_struct('l', x.v, 'b', cast(0.0 as double),
-         |                      's', cast(0.0 as double),
-         |                      'e', cast(0.0 as double))
-         |    ELSE named_struct(
-         |      'l', $lNew,
-         |      'b', __be * (($lNew) - element_at(acc, -1).l)
-         |           + (1.0D - __be) * element_at(acc, -1).b,
-         |      's', __ga * (x.v - element_at(acc, -1).l
-         |                   - element_at(acc, -1).b)
-         |           + (1.0D - __ga) * $sm,
-         |      'e', element_at(acc, -1).e + $err * $err) END))"""
-        .stripMargin))
+    val folded = seq.withColumn("__acc", expr(hwFoldExpr(period,
+      ("__al", "(1.0D - __al)"), ("__be", "(1.0D - __be)"),
+      ("__ga", "(1.0D - __ga)"), withSse = true)))
     val win = Window.partitionBy(col("__k"))
       .orderBy(element_at(col("__acc"), -1).getField("e"), col("__cand"))
     val base = folded
       .withColumn("__rk", row_number().over(win))
       .filter(col("__rk") === 1)
-      .select(col("__k").as(keyCol),
-        col("__seq")(size(col("__seq")) - 1).getField("o").as("last_ord"),
+      .select(hwState(keyCol, Seq(
         col("__al").as("alpha"), col("__be").as("beta"),
         col("__ga").as("gamma"),
-        round(element_at(col("__acc"), -1).getField("e"), 4).as("sse"),
-        round(element_at(col("__acc"), -1).getField("l"), 6).as("level"),
-        round(element_at(col("__acc"), -1).getField("b"), 6).as("trend"),
-        element_at(col("__acc"), -1).getField("l").as("__l"),
-        element_at(col("__acc"), -1).getField("b").as("__b"),
-        col("__acc").as("__a"))
-    (1 to horizons).foldLeft(base) { (d, h) =>
-        val back = period - h + 1
-        val sTerm = when(size(col("__a")) >= back,
-          element_at(col("__a"), -back).getField("s"))
-          .otherwise(lit(0.0))
-        d.withColumn(s"f$h",
-          round(col("__l") + lit(h) * col("__b") + sTerm, 6))
-      }
-      .drop("__l", "__b", "__a")
-      .orderBy(keyCol)
+        round(element_at(col("__acc"), -1).getField("e"), 4).as("sse"))): _*)
+    hwForecast(base, keyCol, period, horizons, h => lit(h))
   }
 
   /** Rolling Pearson correlation of two aligned series over a trailing
@@ -1448,18 +1415,7 @@ object Windows {
     * identical IEEE path. Rounding to 6 happens only at the end.
     */
   def pacf(series: DataFrame, ordCol: String, valCol: String): DataFrame = {
-    val x = col(valCol).cast("double")
-    val base = series.select(col(ordCol).as("__o"), x.as("__x"))
-    val m = base.agg(avg(col("__x")).as("__m"))
-    val w = Window.orderBy("__o")
-    val lagged = (1 to 3).foldLeft(base.crossJoin(broadcast(m))) {
-      (df, j) => df.withColumn(s"__l$j", lag(col("__x"), j).over(w))
-    }
-    val aggs = sum((col("__x") - col("__m")) * (col("__x") - col("__m")))
-      .as("__ss") +: (1 to 3).map(j =>
-      sum((col("__x") - col("__m")) * (col(s"__l$j") - col("__m")))
-        .as(s"__s$j"))
-    lagged.agg(aggs.head, aggs.tail: _*)
+    lagSums(series, ordCol, valCol, 3, Seq.empty)
       .withColumn("__r1", col("__s1") / col("__ss"))
       .withColumn("__r2", col("__s2") / col("__ss"))
       .withColumn("__r3", col("__s3") / col("__ss"))

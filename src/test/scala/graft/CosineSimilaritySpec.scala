@@ -78,6 +78,21 @@ class CosineSimilaritySpec extends SparkSpec {
     }, plan.toString)
   }
 
+  test("empty array, NaN and ±0.0 agree on both paths") {
+    val got = agreedDoubles(viaParquet(VectorEdges.rows.toDF("a", "b")),
+      expr("cosine_sim(a, b)"))
+    assert(VectorEdges.same(got,
+      Seq(Double.NaN, Double.NaN, Double.NaN, 1.0)), got)
+  }
+
+  test("dense input (containsNull = false) compiles the loop") {
+    val (in, want) = VectorEdges.dense(spark)
+    val (dot, na, nb) = want.foldLeft((0.0, 0.0, 0.0)) {
+      case ((d, p, q), (x, y)) => (d + x * y, p + x * x, q + y * y) }
+    assert(agreedDoubles(in, expr("cosine_sim(a, b)")) ===
+      Seq(Some(dot / (math.sqrt(na) * math.sqrt(nb)))))
+  }
+
   test("rejects non-array inputs at analysis time") {
     val e = intercept[Exception] {
       spark.sql("SELECT cosine_sim(1.0, array(1.0D))").collect()

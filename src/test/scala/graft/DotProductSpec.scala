@@ -96,6 +96,18 @@ class DotProductSpec extends SparkSpec {
     }, plan.toString)
   }
 
+  test("empty array, NaN and ±0.0 agree on both paths") {
+    val got = agreedDoubles(viaParquet(VectorEdges.rows.toDF("a", "b")),
+      expr("dot_prod(a, b)"))
+    assert(VectorEdges.same(got, Seq(0.0, Double.NaN, 0.0, 12.0)), got)
+  }
+
+  test("dense input (containsNull = false) compiles the branch-free loop") {
+    val (in, want) = VectorEdges.dense(spark)
+    assert(agreedDoubles(in, expr("dot_prod(a, b)")) ===
+      Seq(Some(want.map { case (x, y) => x * y }.sum)))
+  }
+
   test("rejects non-array inputs at analysis time") {
     val e = intercept[Exception] {
       spark.sql("SELECT dot_prod(1.0, array(1.0D))").collect()

@@ -16,20 +16,27 @@ class L2SquaredSpec extends SparkSpec {
     assert(r.getDouble(0) === 25.0)
   }
 
+  private def bits(xs: Seq[Option[Double]]): Seq[Option[Long]] =
+    xs.map(_.map(java.lang.Double.doubleToRawLongBits))
+
+  // The cases below read their vectors from a parquet file, so that
+  // agreedDoubles runs the kernel's generated code and its interpreted
+  // eval, and checks they agree bit for bit.
+
   test("bit-identical to the aggregate(zip_with(...)) fold it replaced") {
     // adversarial magnitudes: summation-order-sensitive values — the two
     // spellings must accumulate in the same sequence, hence agree exactly
-    val rows = Seq(
+    val in = viaParquet(Seq(
       (Array(1e16, 1.0, -1e16, 3.5), Array(1.0, 1.0, 1.0, 1.0)),
       (Array(0.1, 0.2, 0.3), Array(-0.3, 0.2, -0.1)),
       (Array.tabulate(64)(i => math.sin(i + 1.0)),
-        Array.tabulate(64)(i => math.cos(i * 2.0))))
-    val df = rows.toDF("a", "b")
-      .withColumn("native", expr("l2_sq(a, b)"))
-      .withColumn("hof",
-        aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, t) => acc + t))
-    assert(df.filter(col("native") =!= col("hof")).count() === 0L,
+        Array.tabulate(64)(i => math.cos(i * 2.0)))).toDF("a", "b"))
+    val hof = aggregate(
+      zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
+      lit(0.0), (acc, t) => acc + t)
+    val native = agreedDoubles(in, expr("l2_sq(a, b)"))
+    assert(native.size === 3 && native.forall(_.isDefined))
+    assert(bits(native) === bits(agreedDoubles(in, hof)),
       "native kernel diverged from the sequential HOF fold")
   }
 
@@ -39,33 +46,38 @@ class L2SquaredSpec extends SparkSpec {
     // and partial sum is exact, so Σ(a-b)² == a·a − 2·a·b + b·b exactly
     val a = Array.tabulate(16)(i => math.floor(math.sin(i) * 1024) / 1024)
     val b = Array.tabulate(16)(i => math.floor(math.cos(i) * 1024) / 1024)
-    val df = Seq((a, b)).toDF("a", "b")
-      .withColumn("fold", expr("l2_sq(a, b)"))
-      .withColumn("dots", expr(
-        "dot_prod(a, a) - 2 * dot_prod(a, b) + dot_prod(b, b)"))
-    val r = df.head
-    assert(r.getAs[Double]("fold") === r.getAs[Double]("dots"))
+    val in = viaParquet(Seq((a, b)).toDF("a", "b"))
+    assert(agreedDoubles(in, expr("l2_sq(a, b)")) === agreedDoubles(in,
+      expr("dot_prod(a, a) - 2 * dot_prod(a, b) + dot_prod(b, b)")))
   }
 
   test("float arrays widen to double (the embeddings path)") {
-    val got = Seq((Array(1.5f, 2.0f), Array(2.0f, 0.5f))).toDF("a", "b")
-      .select(expr("l2_sq(a, b)")).head.getDouble(0)
-    assert(math.abs(got - 2.5) < 1e-6)
+    val in = viaParquet(
+      Seq((Array(1.5f, 2.0f), Array(2.0f, 0.5f))).toDF("a", "b"))
+    assert(agreedDoubles(in, expr("l2_sq(a, b)")) === Seq(Some(2.5)))
   }
 
   test("null array yields null; mismatched lengths use the common " +
     "prefix; null ELEMENT propagates NULL") {
-    assert(spark.sql(
-      "SELECT l2_sq(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D))")
-      .head.isNullAt(0))
-    val got = spark.sql(
-      "SELECT l2_sq(array(2.0D, 3.0D, 99.0D), array(4.0D, 5.0D))")
-      .head.getDouble(0)
-    assert(got === 8.0)
-    val withNull = Seq((Array[java.lang.Double](1.0, null, 3.0),
-        Array[java.lang.Double](1.0, 1.0, 1.0)))
-      .toDF("a", "b")
-      .withColumn("native", expr("l2_sq(a, b)"))
-    assert(withNull.head.isNullAt(2))
+    val in = viaParquet(Seq[
+        (Array[java.lang.Double], Array[java.lang.Double])](
+      (null, Array(1.0)),
+      (Array(2.0, 3.0, 99.0), Array(4.0, 5.0)),
+      (Array(1.0, null, 3.0), Array(1.0, 1.0, 1.0)),
+      (Array(2.0, 3.0, null), Array(4.0, 5.0))).toDF("a", "b"))
+    assert(agreedDoubles(in, expr("l2_sq(a, b)")) ===
+      Seq(None, Some(8.0), None, Some(8.0)))
+  }
+
+  test("empty array, NaN and ±0.0 agree on both paths") {
+    val got = agreedDoubles(viaParquet(VectorEdges.rows.toDF("a", "b")),
+      expr("l2_sq(a, b)"))
+    assert(VectorEdges.same(got, Seq(0.0, Double.NaN, 0.0, 1.0)), got)
+  }
+
+  test("dense input (containsNull = false) compiles the branch-free loop") {
+    val (in, want) = VectorEdges.dense(spark)
+    assert(agreedDoubles(in, expr("l2_sq(a, b)")) === Seq(Some(
+      want.map { case (x, y) => (x - y) * (x - y) }.sum)))
   }
 }

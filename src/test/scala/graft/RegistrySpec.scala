@@ -8,7 +8,8 @@ import graft.gates.{Gate, Gates}
   * gates: each gate is declared once, declaring it builds no oracle SQL,
   * and each published artifact is built once per JVM in its own
   * `graft_<name>_*` directory. Parquet tables are read through
-  * `Tables.read`, which infers each schema once.
+  * `Tables.read`, which infers each schema once. Copied code in ops/
+  * and functions/ does not grow back.
   */
 class RegistrySpec extends SparkSpec {
 
@@ -81,5 +82,22 @@ class RegistrySpec extends SparkSpec {
     finally walk.close()
     assert(found === allowed,
       "read a table through Tables.read, which pins its schema")
+  }
+
+  test("ratchet: ops/ and functions/ repeat no more 8-line windows " +
+    "than when their copies were merged (tools/dupwindows.py)") {
+    // functions/ keeps the shared import header of TokenShingles and
+    // SubwordTokens
+    val ceiling = Map("ops/" -> 0, "functions/" -> 8)
+    val out = scala.sys.process.Process(
+      Seq("python3", "tools/dupwindows.py")).!!
+    val counts = out.linesIterator.filterNot(_.startsWith(" ")).map { l =>
+      val Array(dir, n) = l.split(" ")
+      dir -> n.toInt
+    }.toMap
+    ceiling.foreach { case (dir, max) =>
+      assert(counts(dir) <= max, s"$dir repeats ${counts(dir)} lines " +
+        s"(ceiling $max); write the copy once instead:\n$out")
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -83,4 +84,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override protected def afterAll(): Unit =
     try tempDirs.forEach(d => Artifacts.deleteRecursively(d))
     finally super.afterAll()
+}
+
+/** Shared rows for the array kernels `cosine_sim`, `dot_prod` and
+  * `l2_sq`.
+  */
+object VectorEdges {
+
+  /** An empty pair, a NaN element, a signed zero, and a signed zero
+    * beside non-zero elements.
+    */
+  val rows: Seq[(Array[Double], Array[Double])] = Seq(
+    (Array.empty[Double], Array.empty[Double]),
+    (Array(Double.NaN, 1.0), Array(1.0, 1.0)),
+    (Array(-0.0), Array(0.0)),
+    (Array(-0.0, 3.0), Array(0.0, 4.0)))
+
+  /** `got` against `want` with NaNs equal and -0.0 distinct from 0.0. */
+  def same(got: Seq[Option[Double]], want: Seq[Double]): Boolean =
+    got.map(_.map(java.lang.Double.doubleToLongBits)) ==
+      want.map(w => Some(java.lang.Double.doubleToLongBits(w)))
+
+  /** One row of two dense vectors (array<double> with containsNull =
+    * false) behind a local checkpoint, so the optimizer cannot fold the
+    * projection, and the element pairs it holds.
+    */
+  def dense(spark: SparkSession): (DataFrame, Seq[(Double, Double)]) = {
+    import spark.implicits._
+    val a = Array.tabulate(8)(i => math.sin(i + 1.0))
+    val b = Array.tabulate(8)(i => math.cos(i * 2.0))
+    val df = Seq((a, b)).toDF("a", "b").localCheckpoint()
+    assert(df.schema.fields.forall(
+      _.dataType == ArrayType(DoubleType, containsNull = false)))
+    (df, a.toSeq.zip(b))
+  }
 }
