@@ -682,8 +682,7 @@ object SimilarityGates {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(s, d)
     val orig = emb.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double"))
-        .as("embedding"))
+      Similarity.doubles("embedding").as("embedding"))
     val planted = emb.filter(col("vec_id") % 25 === 0)
       .select((col("vec_id") + 100000L).as("vec_id"),
         transform(col("embedding"), (x, i) =>

@@ -1185,7 +1185,7 @@ object Curation {
     val lam = lambdaNum.toDouble / lambdaDen
     var cur = emb
       .select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+        Similarity.doubles(vecCol).as("__v"))
       .join(relevance.select(col(idCol).as("__id"), col("rel")), "__id")
       // NULL until the first fold: a literal 0.0 would CLAMP negative
       // max-cosines (greatest(0, cos) != max over selected when every

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *    (`database/operations.py:131-172`) as anti-join + union rewrites.
   *
   * At 100 TB: validity is a per-row expression (codegen, no shuffle); the
-  * file split is one groupBy on the file key (or a window over
-  * `input_file_name()`); the load dedup is one shuffle join per batch where
-  * the reference paid one round-trip per record.
+  * file split is one window partitioned by the file key (one shuffle); the
+  * load dedup is one shuffle join per batch where the reference paid one
+  * round-trip per record.
   */
 object Etl {
 
@@ -57,14 +57,14 @@ object Etl {
   /** File-granularity split (C1): a file is bad iff ANY of its rows is bad.
     * Returns (validRows, erroredRows) — each side still carries every row
     * of its files, mirroring the reference's copy-whole-file semantics.
-    * One aggregate + one broadcastable join on the file key.
+    * One `max(bad) over (partition by file)` window: each side is one
+    * shuffle on the file key, with no aggregate stage to join back.
     */
   def fileLevelSplit(df: DataFrame, fileCol: String,
                      bad: Column): (DataFrame, DataFrame) = {
-    val fileStatus = df
-      .groupBy(col(fileCol))
-      .agg(max(bad.cast("int")).as("__file_bad"))
-    val tagged = df.join(fileStatus, fileCol)
+    import org.apache.spark.sql.expressions.Window
+    val tagged = df.withColumn("__file_bad",
+      max(bad.cast("int")).over(Window.partitionBy(col(fileCol))))
     (tagged.filter(col("__file_bad") === 0).drop("__file_bad"),
       tagged.filter(col("__file_bad") === 1).drop("__file_bad"))
   }
@@ -272,8 +272,8 @@ object Etl {
     * (the reference copies the ORIGINAL file there), and return the
     * per-file audit log plus the error-rate breaker row.
     *
-    * One read, one file-status aggregate, two writes — no per-file driver
-    * loop; at 100 TB this is the same plan with more input splits.
+    * One read, two writes of one file-keyed window each — no per-file
+    * driver loop; at 100 TB this is the same plan with more input splits.
     */
   def runWeatherTransform(spark: org.apache.spark.sql.SparkSession,
                           rawDir: String, processedDir: String,
@@ -459,10 +459,14 @@ object Etl {
     *
     * `partCol` must be one of `keys`: the key then pins each row to its
     * partition, which is what makes partition-scoped merging equal to the
-    * global upsert. The touched-partition values are collected to the
-    * driver (a backfill window is days, not data) to both prune the read
-    * and break the read-path/write-path cycle; the merged frame (touched
-    * partitions only) is localCheckpoint'd for the same reason.
+    * global upsert. `updates` runs exactly once, in one eager
+    * `localCheckpoint` whose job also collects the touched partition
+    * values (a backfill window is days, not data) through an
+    * [[org.apache.spark.sql.Observation]] — `updates` may itself read
+    * `path`, and the checkpoint pins it before the write replaces files.
+    * The merged frame is written as it is planned: the overwrite mode is
+    * a per-write option, and a dynamic overwrite stages its files and
+    * swaps the partitions only at job commit, after every read of them.
     */
   def upsertPartitioned(spark: org.apache.spark.sql.SparkSession,
                         path: String, updates: DataFrame,
@@ -471,22 +475,20 @@ object Etl {
       s"partition column $partCol must be part of the upsert key " +
         s"(${keys.mkString(", ")}) — otherwise a key could move across " +
         "partitions and scoped merging would diverge from the global upsert")
-    val existing = spark.read.parquet(path)
-    val touched = updates.select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    val scoped = existing.filter(col(partCol).isin(touched: _*))
-    val merged = scoped
-      .join(updates.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(updates.select(existing.columns.map(col): _*))
+    val touchedParts = org.apache.spark.sql.Observation()
+    val upd = updates
+      .observe(touchedParts, collect_set(col(partCol)).as("touched"))
       .localCheckpoint()
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try merged.write.mode("overwrite").partitionBy(partCol).parquet(path)
-    finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      Par.unpersistCheckpoint(merged)
-    }
+    try {
+      val touched = touchedParts.get("touched")
+        .asInstanceOf[scala.collection.Seq[Any]].toSeq
+      val existing = spark.read.parquet(path)
+      existing.filter(col(partCol).isin(touched: _*))
+        .join(upd.select(keys.map(col): _*), keys, "left_anti")
+        .unionByName(upd.select(existing.columns.map(col): _*))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCol).parquet(path)
+    } finally Par.unpersistCheckpoint(upd)
   }
 
   /** Additive aggregate state over `valueCol` per `keys`: (n, sum_value,

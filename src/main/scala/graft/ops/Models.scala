@@ -118,7 +118,7 @@ object Models {
                   extraCols: Seq[String], weights: DataFrame,
                   bias: Double): DataFrame = {
     Par.requireKernel(emb.sparkSession, "dot_prod")
-    val v = transform(col(vecCol), x => x.cast("double"))
+    val v = Similarity.doubles(vecCol)
     Par.ensure(emb)
       .select((col(idCol) +: extraCols.map(col)) :+ v.as("__v"): _*)
       .crossJoin(broadcast(weights))

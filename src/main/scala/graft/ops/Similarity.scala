@@ -18,6 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** The array column `vecCol` as array<double>: every element widened on
+    * its own (the embeddings are float), so the kernels and folds that
+    * read it see one element type.
+    */
+  def doubles(vecCol: String): Column =
+    transform(col(vecCol), x => x.cast("double"))
+
   /** Exact cosine top-k per query vector. `queries` must be small (it is
     * broadcast); corpus side never collects. Deterministic tiebreak on
     * (cos desc, id asc).
@@ -79,7 +86,7 @@ object Similarity {
     val planeRows = for { t <- 0 until tables; p <- 0 until planes } yield
       (t, p, (0 until dims).map(d => planeComponent(t, p, d)).toArray)
     val planesDf = planeRows.toDF("table", "plane", "w")
-    val v = transform(col(vecCol), x => x.cast("double"))
+    val v = doubles(vecCol)
     // the per-row projection loops are CPU-dense — spread an under-split
     // source to full width first (no-op on well-split inputs)
     Par.ensure(emb).select(col(idCol), v.as("__v"))
@@ -224,7 +231,7 @@ object Similarity {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     chunks
       .select(col(keyCol).as("key"),
-        posexplode(transform(col(vecCol), x => x.cast("double")))
+        posexplode(doubles(vecCol))
           .as(Seq("d", "x")))
       .groupBy("key", "d").agg(avg(col("x")).as("m_raw"))
       .withColumn("norm", sqrt(sum(col("m_raw") * col("m_raw")).over(w)))
@@ -272,7 +279,7 @@ object Similarity {
     val v = grid match {
       case Some(g) => transform(col(vecCol),
         x => floor(x.cast("double") * g) / g)
-      case None => transform(col(vecCol), x => x.cast("double"))
+      case None => doubles(vecCol)
     }
     val base = corpus.select(col(idCol).as("__id"), v.as("__v"))
     // deterministic seeds: smallest md5 of the id (uniform over the corpus,
@@ -348,7 +355,7 @@ object Similarity {
       // below — NearestVecSpec), instead of a row_number window whose
       // id-keyed exchange shuffled the corpus per index build (r17)
       df.select(col(idCol).as(outId),
-          transform(col(vecCol), x => x.cast("double")).as("__v"))
+          doubles(vecCol).as("__v"))
         .crossJoin(cellArray(cents))
         .select(col(outId),
           nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
@@ -372,7 +379,7 @@ object Similarity {
     val w = Window.partitionBy("__id")
       .orderBy(col("__cos").desc, col("cell"))
     df.select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+        doubles(vecCol).as("__v"))
       .crossJoin(cents)
       .withColumn("__cos", expr("cosine_sim(__v, cvec)"))
       .withColumn("__rk", row_number().over(w))
@@ -538,9 +545,9 @@ object Similarity {
         if (planeComponent(99, r, d) >= 0) 1.0 else -1.0).toArray))
     val planes = planeRows.toDF("r", "w")
     val a = corpus.filter(predA).select(col(idCol).as("id_a"),
-      transform(col(vecCol), x => x.cast("double")).as("__va"))
+      doubles(vecCol).as("__va"))
     val b = corpus.filter(predB).select(col(idCol).as("id_b"),
-      transform(col(vecCol), x => x.cast("double")).as("__vb"))
+      doubles(vecCol).as("__vb"))
     val pairs = a.crossJoin(broadcast(b))
       .filter(col("id_a") =!= col("id_b"))
       .withColumn("__diff", zip_with(col("__va"), col("__vb"),
@@ -589,7 +596,7 @@ object Similarity {
     require(iterations >= 1 && iterations <= 10,
       "topPrincipalComponent needs 1 <= iterations <= 10 (fixed rounds)")
     val x = embs.select(col(idCol).as("__id"),
-        posexplode(transform(col(vecCol), e => e.cast("double")))
+        posexplode(doubles(vecCol))
           .as(Seq("dim", "__x")))
       .localCheckpoint()
     val e0 = x.select(col("dim")).distinct()
@@ -640,7 +647,7 @@ object Similarity {
       "truncationEnergy needs at least one positive dim count")
     val ks = array(dims.map(lit): _*)
     emb
-      .select(transform(col(vecCol), x => x.cast("double")).as("__v"),
+      .select(doubles(vecCol).as("__v"),
         explode(ks).as("k"))
       .withColumn("__energy", expr(
         """aggregate(slice(__v, 1, k), cast(0.0 as double),
@@ -658,7 +665,7 @@ object Similarity {
   def quantizeEmbeddings(emb: DataFrame, idCol: String,
                          vecCol: String): DataFrame = {
     val mm = emb
-      .select(posexplode(transform(col(vecCol), x => x.cast("double")))
+      .select(posexplode(doubles(vecCol))
         .as(Seq("d", "x")))
       .groupBy("d").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
       .agg(
@@ -667,7 +674,7 @@ object Similarity {
         transform(array_sort(collect_list(struct(col("d"), col("mx")))),
           s => s.getField("mx")).as("__mx"))
     emb.crossJoin(broadcast(mm))
-      .withColumn("__v", transform(col(vecCol), x => x.cast("double")))
+      .withColumn("__v", doubles(vecCol))
       .withColumn("__c", expr(
         """transform(sequence(0, size(__v) - 1), i ->
           |  CASE WHEN __mx[i] = __mn[i] THEN 0
@@ -1012,7 +1019,7 @@ object Similarity {
     Par.requireKernel(emb.sparkSession, "cosine_sim")
     val cents = emb
       .select(col(labelCol).as("lab"),
-        posexplode(transform(col(vecCol), x => x.cast("double")))
+        posexplode(doubles(vecCol))
           .as(Seq("d", "x")))
       .groupBy(col("lab"), col("d"))
       .agg(round(avg(col("x")), 6).as("m"))
@@ -1054,7 +1061,7 @@ object Similarity {
     Par.requireKernel(emb.sparkSession, "cosine_sim")
     val dims = emb
       .select(col(groupCol).as("grp"),
-        posexplode(transform(col(vecCol), x => x.cast("double")))
+        posexplode(doubles(vecCol))
           .as(Seq("d", "x")))
       .localCheckpoint()
     def fold(df: DataFrame, keys: Seq[String]) = df
@@ -1092,7 +1099,7 @@ object Similarity {
     // equi-join back to the centroid table: k cosines per row become
     // one, and the id-keyed window exchange disappears (r17)
     corpus.select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+        doubles(vecCol).as("__v"))
       .crossJoin(cellArray(cents))
       .select(col("__id"), col("__v"),
         nearestOrFirst("nearest_cos", "__v", "cell").as("cell"))
@@ -1174,7 +1181,7 @@ object Similarity {
       .orderBy(col("__cos").desc, col("cell"))
     val cq = floor(col("__cos") * 1048576) / 1048576
     val ranked = corpus.select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+        doubles(vecCol).as("__v"))
       .crossJoin(broadcast(cents))
       .withColumn("__cos", expr("cosine_sim(__v, cvec)"))
       .withColumn("__rk", row_number().over(w))
@@ -1245,7 +1252,7 @@ object Similarity {
     // probe file carrying the raw vector: rank-1 rows are the output
     // cell map, ranks 1..nProbes feed the pair join — materialize once
     val probes = corpus.select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+        doubles(vecCol).as("__v"))
       .crossJoin(broadcast(cents))
       .withColumn("__cos", expr("cosine_sim(__v, cvec)"))
       .withColumn("__rk", row_number().over(
@@ -1365,7 +1372,7 @@ object Similarity {
     */
   private def subvectors(df: DataFrame, idCol: String, vecCol: String,
                          m: Int, grid: Int): DataFrame = {
-    val vd = transform(col(vecCol), x => x.cast("double"))
+    val vd = doubles(vecCol)
     // the m-way explode fans every vector into m subvector rows that
     // downstream code/codebook joins multiply by nCodes — an
     // under-split source (the driver testdata's single-row-group

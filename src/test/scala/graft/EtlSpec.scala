@@ -186,34 +186,45 @@ class EtlSpec extends SparkSpec {
     assert(twice.collect().toSeq === once.collect().toSeq)
   }
 
+  private val goldRows = Set(
+    ("2023-01-01", 1, "Pending"), ("2023-01-01", 2, "Pending"),
+    ("2023-01-02", 3, "Pending"), ("2023-01-03", 4, "Pending"))
+
+  /** A date-partitioned gold table of [[goldRows]] in a fresh directory. */
+  private def goldTable(prefix: String): String = {
+    val dir = tempDir(prefix).toFile.getAbsolutePath
+    graft.Tables.writePartitioned(goldRows.toSeq.toDF("date", "id", "status"),
+      dir, "date")
+    dir
+  }
+
+  /** The part-file names in each partition directory of `dir`, by date. */
+  private def partFiles(dir: String): Map[String, Set[String]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("date="))
+      .map(p => p.getName.stripPrefix("date=") ->
+        p.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet)
+      .toMap
+
+  private def goldNow(dir: String): Set[(String, Int, String)] =
+    spark.read.parquet(dir)
+      .select(col("date").cast("string"), col("id"), col("status"))
+      .as[(String, Int, String)].collect().toSet
+
   test("upsertPartitioned rewrites ONLY the touched partitions and " +
     "matches the global upsert's rows (operations.py:146-172 at scale)") {
-    val dir = tempDir("graft_upsert")
-      .toFile.getAbsolutePath
-    val existing = Seq(
-      ("2023-01-01", 1, "Pending"), ("2023-01-01", 2, "Pending"),
-      ("2023-01-02", 3, "Pending"), ("2023-01-03", 4, "Pending"))
-      .toDF("date", "id", "status")
-    graft.Tables.writePartitioned(existing, dir, "date")
-    def files(d: String): Set[String] = {
-      val p = new java.io.File(s"$dir/date=$d")
-      p.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-    }
-    val before = Seq("2023-01-01", "2023-01-02", "2023-01-03")
-      .map(d => d -> files(d)).toMap
+    val dir = goldTable("graft_upsert")
+    val before = partFiles(dir)
     // update one key in 01-02, insert a new key there too
     val updates = Seq(("2023-01-02", 3, "Processed"),
       ("2023-01-02", 5, "Processed")).toDF("date", "id", "status")
     Etl.upsertPartitioned(spark, dir, updates, Seq("date", "id"), "date")
     // untouched partition directories keep their exact files; the touched
     // one was rewritten (fresh part-file names every write)
-    assert(files("2023-01-01") === before("2023-01-01"))
-    assert(files("2023-01-03") === before("2023-01-03"))
-    assert(files("2023-01-02") !== before("2023-01-02"))
-    val got = spark.read.parquet(dir)
-      .select(col("date").cast("string"), col("id"), col("status"))
-      .as[(String, Int, String)].collect().toSet
-    assert(got === Set(
+    val after = partFiles(dir)
+    assert(after("2023-01-01") === before("2023-01-01"))
+    assert(after("2023-01-03") === before("2023-01-03"))
+    assert(after("2023-01-02") !== before("2023-01-02"))
+    assert(goldNow(dir) === Set(
       ("2023-01-01", 1, "Pending"), ("2023-01-01", 2, "Pending"),
       ("2023-01-02", 3, "Processed"), ("2023-01-02", 5, "Processed"),
       ("2023-01-03", 4, "Pending")))
@@ -221,6 +232,55 @@ class EtlSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Etl.upsertPartitioned(spark, dir, updates, Seq("id"), "date")
     }
+  }
+
+  test("upsertPartitioned evaluates each row of updates exactly once") {
+    val dir = goldTable("graft_upsert_once")
+    val evals = spark.sparkContext.longAccumulator("updates_evals")
+    // nondeterministic, so no consumer can share or skip the evaluation
+    val seen = udf { (_: Int) => evals.add(1); true }.asNondeterministic()
+    val updates = Seq(("2023-01-02", 3, "Processed"),
+      ("2023-01-04", 6, "Processed")).toDF("date", "id", "status")
+      .filter(seen(col("id")))
+    Etl.upsertPartitioned(spark, dir, updates, Seq("date", "id"), "date")
+    assert(evals.value === 2L)
+    assert(goldNow(dir) === goldRows - (("2023-01-02", 3, "Pending")) ++
+      Set(("2023-01-02", 3, "Processed"), ("2023-01-04", 6, "Processed")))
+  }
+
+  test("upsertPartitioned: updates read from the gold path it rewrites " +
+    "(the DAG's load shape)") {
+    val dir = goldTable("graft_upsert_gold")
+    val before = partFiles(dir)
+    val gold = spark.read.parquet(dir)
+    val incoming = Seq(("2023-01-02", 5, "New"), ("2023-01-03", 4, "Pending"),
+      ("2023-01-04", 6, "New")).toDF("date", "id", "status")
+      .withColumn("date", to_date(col("date")))
+    // as the load does: gold plus the deduped incoming rows, cut to the
+    // incoming days; one gold row is also edited on its way through
+    val fresh = Etl.dedupAgainstExisting(incoming, gold, Seq("date", "id"))
+    val updates = gold.unionByName(fresh)
+      .join(incoming.select("date").distinct(), Seq("date"), "left_semi")
+      .withColumn("status",
+        when(col("id") === 3, lit("Processed")).otherwise(col("status")))
+    Etl.upsertPartitioned(spark, dir, updates, Seq("date", "id"), "date")
+    val after = partFiles(dir)
+    assert(after("2023-01-01") === before("2023-01-01"))
+    Seq("2023-01-02", "2023-01-03").foreach(d => assert(after(d) !== before(d)))
+    assert(goldNow(dir) === Set(
+      ("2023-01-01", 1, "Pending"), ("2023-01-01", 2, "Pending"),
+      ("2023-01-02", 3, "Processed"), ("2023-01-02", 5, "New"),
+      ("2023-01-03", 4, "Pending"), ("2023-01-04", 6, "New")))
+  }
+
+  test("upsertPartitioned: empty updates leave every partition file as it " +
+    "was") {
+    val dir = goldTable("graft_upsert_empty")
+    val before = partFiles(dir)
+    val updates = Seq.empty[(String, Int, String)].toDF("date", "id", "status")
+    Etl.upsertPartitioned(spark, dir, updates, Seq("date", "id"), "date")
+    assert(partFiles(dir) === before)
+    assert(goldNow(dir) === goldRows)
   }
 
   // --- extractor manifest (S1-S4) -----------------------------------------

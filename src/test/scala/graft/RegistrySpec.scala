@@ -15,6 +15,22 @@ class RegistrySpec extends SparkSpec {
 
   private val noPlan: Gate.Plan = (s, _) => s.emptyDataFrame
 
+  /** Matches of `call` per .scala file under `dir` (relative to `dir`),
+    * for the files with at least one.
+    */
+  private def callsUnder(dir: String,
+                         call: scala.util.matching.Regex): Map[String, Int] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root),
+      s"no $root under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map { f =>
+        root.relativize(f).toString -> call.findAllIn(Files.readString(f)).size
+      }.filter(_._2 > 0).toMap
+    finally walk.close()
+  }
+
   test("registry: a gate name declared twice fails its require") {
     val e = intercept[IllegalArgumentException](Gates.index(Seq(
       Gate("q_twice", noPlan)("SELECT 1"),
@@ -70,18 +86,17 @@ class RegistrySpec extends SparkSpec {
     // Tables.read does it once per file version. Etl's upsert and
     // compaction read the directory they rewrite, so they stay unpinned.
     val allowed = Map("graft/Tables.scala" -> 1, "graft/ops/Etl.scala" -> 2)
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root),
-      s"no $root under ${Paths.get("").toAbsolutePath}")
-    val call = """\.read\s*\.parquet\s*\(""".r
-    val walk = Files.walk(root)
-    val found = try walk.iterator().asScala
-      .filter(_.toString.endsWith(".scala")).map { f =>
-        root.relativize(f).toString -> call.findAllIn(Files.readString(f)).size
-      }.filter(_._2 > 0).toMap
-    finally walk.close()
-    assert(found === allowed,
-      "read a table through Tables.read, which pins its schema")
+    assert(callsUnder("src/main/scala", """\.read\s*\.parquet\s*\(""".r)
+      === allowed, "read a table through Tables.read, which pins its schema")
+  }
+
+  test("lint: no op writes the session conf") {
+    // ops run on the caller's shared session: a conf.set or conf.unset
+    // there changes every later query of that session; a setting that one
+    // read or write needs goes on that reader or writer as an .option
+    val found = callsUnder("src/main/scala/graft/ops",
+      """conf\s*\.\s*(set|unset)\s*\(""".r)
+    assert(found.isEmpty, s"session conf written in $found")
   }
 
   test("ratchet: ops/ and functions/ repeat no more 8-line windows " +

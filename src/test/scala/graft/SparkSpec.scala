@@ -40,17 +40,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   def inBothCodegenModes(input: DataFrame, kernel: Column)
       : (Seq[Row], Seq[Row], SparkPlan) = {
-    val key = "spark.sql.codegen.factoryMode"
+    def run(mode: String): (Seq[Row], SparkPlan) =
+      withConf("spark.sql.codegen.factoryMode", mode) {
+        val df = input.select(kernel)
+        (df.collect().toSeq, df.queryExecution.executedPlan)
+      }
+    val (compiled, plan) = run("CODEGEN_ONLY")
+    (compiled, run("NO_CODEGEN")._1, plan)
+  }
+
+  /** `body` with the session conf `key` set to `value`, and the session's
+    * setting (or its absence) restored afterwards.
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
-    def run(mode: String): (Seq[Row], SparkPlan) = {
-      spark.conf.set(key, mode)
-      val df = input.select(kernel)
-      (df.collect().toSeq, df.queryExecution.executedPlan)
-    }
-    try {
-      val (compiled, plan) = run("CODEGEN_ONLY")
-      (compiled, run("NO_CODEGEN")._1, plan)
-    } finally prev match {
+    spark.conf.set(key, value)
+    try body finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }

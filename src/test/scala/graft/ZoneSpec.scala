@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.ops.Etl
 
@@ -84,6 +86,57 @@ class ZoneSpec extends SparkSpec {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
     }
     rm(base)
+  }
+
+  private val weatherSchema = "date STRING, tavg DOUBLE, tmin DOUBLE, " +
+    "tmax DOUBLE, snow DOUBLE, tsun DOUBLE"
+
+  private def weatherLine(day: Int, tavg: String): String =
+    f"""{"date":"2023-01-$day%02d","tavg":$tavg,"tmin":18.0,"tmax":28.0,""" +
+      """"snow":1.0,"tsun":2.0}"""
+
+  /** A raw zone of `files` (name -> JSON lines) under a fresh directory,
+    * with the processed and error zone paths beside it.
+    */
+  private def zones(prefix: String, files: Map[String, Seq[String]])
+      : (String, String, String) = {
+    val base = tempDir(prefix)
+    val raw = Files.createDirectories(base.resolve("raw"))
+    files.foreach { case (name, lines) =>
+      Files.write(raw.resolve(name), lines.asJava)
+    }
+    (raw.toString, base.resolve("processed").toString,
+      base.resolve("error").toString)
+  }
+
+  test("a raw file read as several input splits still errors whole") {
+    // the bad row is the file's last line: a split-local status would pass
+    // the file's first rows as valid
+    val lines =
+      (1 to 8).map(d => weatherLine(d, if (d == 8) "null" else "24.0"))
+    val (raw, processed, error) = zones("graft_split",
+      Map("MDA_WEATHER_2023-01-01.json" -> Seq(weatherLine(1, "25.5")),
+        "MDA_WEATHER_2023-01-02.json" -> lines))
+    withConf("spark.sql.files.maxPartitionBytes", "256") {
+      assert(spark.read.schema(weatherSchema).json(raw).rdd
+        .getNumPartitions >= 3, "the 8-line file is not split")
+      Etl.runWeatherTransform(spark, raw, processed, error, weatherSchema,
+        Etl.weatherCheckCols, "Moldova")
+    }
+    assert(spark.read.schema(weatherSchema).json(error).count() === 8)
+    assert(spark.read.json(processed).count() === 1)
+  }
+
+  test("an all-good batch still writes an empty error zone") {
+    val (raw, processed, error) = zones("graft_all_good",
+      Map("MDA_WEATHER_2023-01-01.json" -> Seq(weatherLine(1, "25.5"))))
+    val (logs, breaker) = Etl.runWeatherTransform(spark, raw, processed,
+      error, weatherSchema, Etl.weatherCheckCols, "Moldova")
+    assert(Files.exists(Paths.get(error, "_SUCCESS")))
+    assert(spark.read.schema(weatherSchema).json(error).count() === 0)
+    assert(spark.read.json(processed).count() === 1)
+    assert(logs.collect().map(_.getString(1)).toSeq === Seq("Processed"))
+    assert(breaker.head.getAs[Long]("n_errors") === 0L)
   }
 
   test("CSV sink/source round-trip (S10: forecast/prediction exports)") {
