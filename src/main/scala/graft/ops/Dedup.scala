@@ -760,61 +760,69 @@ object Dedup {
     * and C in one cluster even when A and C never met a threshold), and
     * "keep the minimum id per cluster" is deterministic across engines.
     *
-    * Algorithm: iterative min-label propagation. Each round every node
-    * takes the min of its own label and its neighbors' labels — one
-    * equi-join (edges × labels on the neighbor id) plus one groupBy(node),
-    * both shuffle-keyed on the node id, with `localCheckpoint` truncating
-    * the lineage so round N's plan does not replay rounds 1..N-1.
+    * Algorithm: iterative min-label propagation over the CLOSED
+    * neighbourhood. The edge list (both directions of every pair plus one
+    * self loop per id, deduped by a `distinct`, so callers need not
+    * dedup their pairs) is checkpointed once. Round r gives every node
+    * the minimum round r−1 label over its closed neighbourhood: one
+    * equi-join (edges × labels on `dst`) plus one groupBy(src), both
+    * shuffle-keyed on the node id. The self-loop row carries the node's
+    * own previous label, so the same aggregate emits it beside the new
+    * one and a label can only fall. Round 1 joins nothing: labels start
+    * as the ids, so its neighbour labels are the `dst` ids themselves.
+    * Each round's labels are one eager `localCheckpoint`, whose job also
+    * counts the labels that fell ([[Par.checkpointCounting]]); the loop
+    * stops after the first round in which none fell. So a graph whose
+    * labels settle in k − 1 rounds runs k rounds and k + 1 Spark actions
+    * (the edge list's included), with no separate convergence probe.
     * Converges in O(diameter) rounds; duplicate clusters are near-cliques
     * (diameter ≤ 2-3 in practice), so the loop runs 2-4 rounds regardless
-    * of corpus size. The convergence probe rides the checkpointed frame
-    * itself (a `__changed` flag computed in the same projection), so per
-    * round it costs one filter-scan of the just-materialized blocks — no
-    * extra join. Superseded label checkpoints are unpersisted as soon as
-    * the next round's frame is materialized (and the edge checkpoint after
-    * the loop), so executor block-manager memory holds at most two label
-    * frames regardless of round count. For
+    * of corpus size. A round's label checkpoint is released as soon as
+    * the next round's is materialized (and the edge list after the loop),
+    * so executor block-manager memory holds at most two label frames
+    * regardless of round count. `cluster_size` is a count over a window
+    * partitioned by label, read off the last round's checkpoint. For
     * adversarial long-chain graphs (diameter ~ n), the O(log n)
-    * large-star/small-star rewrite is the known upgrade; not needed for
-    * dedup workloads, so we keep the simpler invariant-preserving form.
+    * large-star/small-star rewrite is the known upgrade
+    * ([[dupClustersStar]]); not needed for dedup workloads, so we keep
+    * the simpler invariant-preserving form.
     *
     * Returns (id, cluster_id, cluster_size) for every id in any pair,
     * ordered by id. Keeper = the row with id == cluster_id.
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    val edges = pairs.select(col("id_i").as("src"), col("id_j").as("dst"))
-      .union(pairs.select(col("id_j").as("src"), col("id_i").as("dst")))
+    require(maxIters >= 1, "dupClusters needs maxIters >= 1")
+    val (i, j) = (col("id_i"), col("id_j"))
+    val edges = Seq(i -> j, j -> i, i -> i, j -> j)
+      .map { case (s, d) => pairs.select(s.as("src"), d.as("dst")) }
+      .reduce(_ union _)
       .distinct()
       .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-      .localCheckpoint()
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("lab").as("dlab")),
-          "dst")
-        .groupBy("src").agg(min(col("dlab")).as("nmin"))
-        .withColumnRenamed("src", "id")
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("nmin"), col("lab"))).as("lab"),
-          coalesce(col("nmin") < col("lab"), lit(false)).as("__changed"))
-        .localCheckpoint()
-      converged = next.filter(col("__changed")).isEmpty
+    // (src, dst, dlab) rows -> the round's (id, lab, old) checkpoint and
+    // the number of labels that fell
+    def round(nbrLabels: DataFrame): (DataFrame, Long) =
+      Par.checkpointCounting(
+        nbrLabels.groupBy(col("src").as("id"))
+          .agg(min(col("dlab")).as("lab"),
+            max(when(col("src") === col("dst"), col("dlab"))).as("old")),
+        col("lab") < col("old"))
+    var (labels, fell) = round(edges.withColumn("dlab", col("dst")))
+    var it = 1
+    while (fell > 0 && it < maxIters) {
+      val (next, n) = round(edges.join(
+        labels.select(col("id").as("dst"), col("lab").as("dlab")), "dst"))
       Par.unpersistCheckpoint(labels)
-      labels = next.drop("__changed")
+      labels = next
+      fell = n
       it += 1
     }
     Par.unpersistCheckpoint(edges)
     IterStats.record("dupClusters", it)
-    require(converged, s"dupClusters did not converge in $maxIters rounds " +
+    require(fell == 0, s"dupClusters did not converge in $maxIters rounds " +
       "— graph diameter exceeds the bound; raise maxIters")
-    val sizes = labels.groupBy(col("lab"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lab")
-      .select(col("id"), col("lab").as("cluster_id"), col("cluster_size"))
+    labels.select(col("id"), col("lab").as("cluster_id"),
+        count(lit(1)).over(Window.partitionBy(col("lab")))
+          .as("cluster_size"))
       .orderBy("id")
   }
 
@@ -838,7 +846,10 @@ object Dedup {
     * All emitted edges are canonical (u > v), so the fixed point — the
     * edge set stops changing — is exactly the star graph (member →
     * component-minimum root). Set equality is checked as |next| = |cur|
-    * plus an empty one-sided except over the two checkpointed frames.
+    * plus an empty one-sided except over the two checkpointed frames;
+    * each edge count is taken by its frame's own checkpoint job
+    * ([[Par.checkpointCounting]]), so a round runs one Spark action,
+    * plus the except probe when the counts agree.
     */
   def dupClustersStar(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     def largeStar(e: DataFrame): DataFrame = {
@@ -862,18 +873,16 @@ object Dedup {
         .filter(col("u") =!= col("v"))
         .distinct()
     }
-    var edges = pairs
+    var (edges, edgeCount) = Par.checkpointCounting(pairs
       .select(greatest(col("id_i"), col("id_j")).as("u"),
         least(col("id_i"), col("id_j")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    var edgeCount = edges.count()
+      .distinct(), lit(true))
     var it = 0
     var converged = edgeCount == 0L
     while (!converged && it < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val nextCount = next.count()
+      val (next, nextCount) =
+        Par.checkpointCounting(smallStar(largeStar(edges)), lit(true))
       converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
       Par.unpersistCheckpoint(edges)
       edges = next
@@ -918,19 +927,20 @@ object Dedup {
     * untouched (they never reach the drop list).
     *
     * Scale shape: one equi-join of the cluster table to the (id, quality)
-    * projection, one cluster-keyed `max_by` aggregate, and the same
-    * broadcast-size anti-join as [[resolveDuplicates]] — the drop list
-    * stays cluster_size−1 rows per cluster.
+    * projection, the keeper as a `max_by` over a window partitioned by
+    * cluster (one cluster-keyed shuffle, and the member join is planned
+    * once), and the same broadcast-size anti-join as
+    * [[resolveDuplicates]] — the drop list stays cluster_size−1 rows per
+    * cluster.
     */
   def resolveDuplicatesByQuality(df: DataFrame, clusters: DataFrame,
                                  idCol: String,
                                  qualityCol: String): DataFrame = {
-    val member = df.select(col(idCol).as("id"), col(qualityCol).as("__q"))
+    val drop = df.select(col(idCol).as("id"), col(qualityCol).as("__q"))
       .join(clusters.select(col("id"), col("cluster_id")), Seq("id"))
-    val keepers = member.groupBy(col("cluster_id"))
-      .agg(max_by(col("id"), struct(col("__q"), (-col("id")).as("__ni")))
-        .as("keeper"))
-    val drop = member.join(keepers, Seq("cluster_id"))
+      .withColumn("keeper",
+        max_by(col("id"), struct(col("__q"), (-col("id")).as("__ni")))
+          .over(Window.partitionBy(col("cluster_id"))))
       .filter(col("id") =!= col("keeper"))
       .select(col("id").as(idCol))
     df.join(drop, Seq(idCol), "left_anti")

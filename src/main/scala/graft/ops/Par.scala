@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.count_if
 
 /** Input-parallelism guard for CPU-dense kernels. A source with fewer
   * input splits than the session's parallelism (here: the driver
@@ -88,6 +89,17 @@ private[graft] object Par {
     df.queryExecution.logical.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
+
+  /** Eager `localCheckpoint` of `df`, and the number of its rows where
+    * `cond` holds, counted by the checkpoint's own job through a fresh
+    * [[org.apache.spark.sql.Observation]]: a convergence loop reads its
+    * round's change count without a second job over the round.
+    */
+  def checkpointCounting(df: DataFrame, cond: Column): (DataFrame, Long) = {
+    val n = Observation()
+    val cp = df.observe(n, count_if(cond).as("n")).localCheckpoint()
+    (cp, n.get("n").asInstanceOf[Long])
+  }
 
   /** The fixed-round loop behind every iterative operator: `n` rounds of
     * `cur = step(cur, r)` for r = 1..n, each result eagerly

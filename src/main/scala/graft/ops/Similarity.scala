@@ -1235,6 +1235,15 @@ object Similarity {
     * lattice before the threshold ([[clusterProfile]]'s rule), so the
     * prune set is bit-reproducible cross-engine.
     *
+    * Materializations: the (id, vector, quality) projection of the
+    * corpus, once (the seeds and every Lloyd round read it, so the
+    * caller's plan runs once); the Lloyd rounds; the probe file, which
+    * carries the quality, so the result is its rank-1 rows minus the drop
+    * list with no join back to the corpus; and [[Dedup.dupClusters]]'
+    * edge list and label rounds. Once the probe file is materialized the
+    * projection and the last centroid checkpoint are released: the
+    * returned frame holds only the probe file and the cluster labels.
+    *
     * Returns the SURVIVING vectors as (id, cell, quality), one row per
     * kept vector — the cleaned corpus map downstream mixing reads.
     */
@@ -1247,32 +1256,36 @@ object Similarity {
     require(nProbes >= 1 && nProbes <= 4,
       "semDedup probes 1..4 cells per vector (pair space ~ nProbes^2)")
     Par.requireKernel(corpus.sparkSession, "cosine_sim")
-    val cents = ivfCentroids(corpus, idCol, vecCol, nCells, iters,
+    val base = corpus.select(col(idCol).as("__id"),
+        doubles(vecCol).as("__v"), col(qualityCol).as("__q"))
+      .localCheckpoint()
+    val cents = ivfCentroids(base, "__id", "__v", nCells, iters,
       Some(grid))
-    // probe file carrying the raw vector: rank-1 rows are the output
-    // cell map, ranks 1..nProbes feed the pair join — materialize once
-    val probes = corpus.select(col(idCol).as("__id"),
-        doubles(vecCol).as("__v"))
+    // probe file carrying the raw vector and the quality: rank-1 rows are
+    // the output cell map, ranks 1..nProbes feed the pair join —
+    // materialize once
+    val probes = base
       .crossJoin(broadcast(cents))
       .withColumn("__cos", expr("cosine_sim(__v, cvec)"))
       .withColumn("__rk", row_number().over(
         Window.partitionBy("__id")
           .orderBy(col("__cos").desc, col("cell"))))
       .filter(col("__rk") <= nProbes)
-      .select(col("cell"), col("__id"), col("__v"), col("__rk"))
+      .select(col("cell"), col("__id"), col("__v"), col("__q"), col("__rk"))
       .localCheckpoint()
-    val inv = probes.filter(col("__rk") === 1)
-      .select(col("cell"), col("__id"), col("__v"))
+    // the returned frame reads only the probe file and the cluster labels
+    Par.unpersistCheckpoint(cents)
+    Par.unpersistCheckpoint(base)
     // a pair sharing two probe cells scores twice and must count once —
-    // but dedupe AFTER the threshold, not before: dropDuplicates on the
-    // raw candidate fan-out shuffled Σn_c² rows with BOTH 64-dim
-    // vectors riding the exchange (~1 GB at sf0.1 — r17 measurement:
-    // the pair pass was 5.0 s of the gate's 9 s). Scoring first keeps
-    // the cosine map-side on the cell-join output and the dedup
-    // exchange carries only the SURVIVING id pairs (near-dups — tiny
-    // by definition). Identical pair set: duplicate candidate rows
-    // carry identical vectors, so both copies pass or fail the
-    // threshold together and the id-level dedup picks among equals.
+    // dupClusters' edge `distinct` dedups it AFTER the threshold, not
+    // before: dropDuplicates on the raw candidate fan-out shuffled Σn_c²
+    // rows with BOTH 64-dim vectors riding the exchange (~1 GB at sf0.1 —
+    // r17 measurement: the pair pass was 5.0 s of the gate's 9 s).
+    // Scoring first keeps the cosine map-side on the cell-join output and
+    // the dedup exchange carries only the SURVIVING id pairs (near-dups —
+    // tiny by definition). Identical pair set: duplicate candidate rows
+    // carry identical vectors, so both copies pass or fail the threshold
+    // together and the id-level dedup picks among equals.
     val pairs = probes.select(col("cell"), col("__id").as("id_i"),
         col("__v").as("__vi"))
       .join(probes.select(col("cell"), col("__id").as("id_j"),
@@ -1282,14 +1295,10 @@ object Similarity {
         floor(expr("cosine_sim(__vi, __vj)") * 1048576) / 1048576)
       .filter(col("__c") >= threshold)
       .select(col("id_i"), col("id_j"))
-      .dropDuplicates("id_i", "id_j")
-    val clusters = Dedup.dupClusters(pairs)
-    val kept = Dedup.resolveDuplicatesByQuality(
-      corpus.select(col(idCol), col(qualityCol)), clusters, idCol,
-      qualityCol)
-    kept
-      .join(inv.select(col("__id").as(idCol), col("cell")), Seq(idCol))
-      .select(col(idCol), col("cell"), col(qualityCol))
+    val inv = probes.filter(col("__rk") === 1)
+      .select(col("__id").as(idCol), col("cell"), col("__q").as(qualityCol))
+    Dedup.resolveDuplicatesByQuality(inv, Dedup.dupClusters(pairs), idCol,
+        qualityCol)
       .orderBy(idCol)
   }
 

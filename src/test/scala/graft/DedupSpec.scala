@@ -1,7 +1,14 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, IterStats, Similarity}
 
 /** Properties of the dedup/similarity suite that the SQL oracle doesn't
   * cover: LSH completeness vs exact Jaccard, signature determinism, ANN
@@ -104,6 +111,96 @@ class DedupSpec extends SparkSpec {
     assert(Seq(1L, 2L, 3L, 4L).forall(c(_) == (1L, 4L)),
       s"chain did not collapse to cluster 1: $c")
     assert(Seq(10L, 11L).forall(c(_) == (10L, 2L)))
+  }
+
+  /** `f`'s result and the top-level SQL executions (Spark actions)
+    * started while it ran. A marker job in its own group follows `f`: the
+    * listener bus delivers in order, so once the marker's start is seen
+    * every earlier execution start was counted.
+    */
+  private def withActionCount[T](f: => T): (T, Int) = {
+    val marker = "dedup-spec-marker"
+    val started = new AtomicInteger()
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == marker)) markerSeen = true
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.rootExecutionId.forall(_ == s.executionId) =>
+          started.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "the marker job's start never arrived")
+      (out, started.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** dupClusters' rows as id -> (cluster_id, cluster_size), and the
+    * rounds it recorded in IterStats.
+    */
+  private def clustersOf(pairs: DataFrame): (Map[Long, (Long, Long)], Int) = {
+    IterStats.drain()
+    val c = Dedup.dupClusters(pairs).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    (c, IterStats.drain().getOrElse("dupClusters", 0))
+  }
+
+  test("dupClusters: a graph that converges in k rounds runs k + 1 " +
+    "Spark actions (the edge list and one checkpoint per round)") {
+    import spark.implicits._
+    // labels settle after 3 rounds (4 takes 1's label last); the 4th
+    // round confirms nothing fell
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+      .toDF("id_i", "id_j")
+    IterStats.drain()
+    val (clusters, actions) = withActionCount(Dedup.dupClusters(pairs))
+    val k = IterStats.drain()("dupClusters")
+    assert(k === 4)
+    assert(actions === k + 1, s"$actions actions for $k rounds")
+    assert(clusters.count() === 6L)
+  }
+
+  test("dupClusters: a 6-node chain and a two-component graph match " +
+    "the hand-computed labels, sizes and rounds") {
+    import spark.implicits._
+    // 1-2-3-4-5-6 listed out of order, one pair reversed and one
+    // repeated: 6 takes label 1 in round 5, round 6 confirms
+    val chain = Seq((5L, 6L), (3L, 2L), (1L, 2L), (4L, 5L), (3L, 4L),
+      (2L, 3L)).toDF("id_i", "id_j")
+    assert(clustersOf(chain) ===
+      ((1L to 6L).map(_ -> (1L, 6L)).toMap, 6))
+    // path 3-7-9-12 (12 takes 3 in round 3) beside the triangle 20-21-22
+    // (settled in round 1): 4 rounds in all
+    val two = Seq((7L, 3L), (7L, 9L), (12L, 9L), (20L, 21L), (21L, 22L),
+      (22L, 20L)).toDF("id_i", "id_j")
+    assert(clustersOf(two) === (Map(
+      3L -> (3L, 4L), 7L -> (3L, 4L), 9L -> (3L, 4L), 12L -> (3L, 4L),
+      20L -> (20L, 3L), 21L -> (20L, 3L), 22L -> (20L, 3L)), 4))
+  }
+
+  test("dupClusters: empty pairs give an empty frame after one round " +
+    "without blocking on the round's change count") {
+    import spark.implicits._
+    val local = Seq.empty[(Long, Long)].toDF("id_i", "id_j")
+    val scanned = spark.range(0, 20).select(col("id").as("id_i"),
+        (col("id") + 1).as("id_j"))
+      .localCheckpoint()
+      .filter(col("id_i") > 100)
+    for (pairs <- Seq(local, scanned)) {
+      val run = Future(clustersOf(pairs))(ExecutionContext.global)
+      assert(Await.result(run, 2.minutes) === (Map.empty, 1))
+    }
   }
 
   test("incremental minhash screen: index round-trips through the model " +
@@ -229,6 +326,25 @@ class DedupSpec extends SparkSpec {
     val minId = Dedup.resolveDuplicates(frame, clusters, "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(minId === Set(1L, 4L, 5L))
+  }
+
+  test("resolveDuplicatesByQuality: equal-quality ties go to the smallest " +
+    "id and a NULL quality ranks below every value") {
+    import spark.implicits._
+    val frame = Seq[(Long, Option[Long])](
+      (1L, Some(50L)), (2L, Some(50L)), (3L, None),  // A: tie -> 1
+      (4L, None), (5L, None),                        // B: all NULL -> 4
+      (6L, Some(3L)), (7L, None), (8L, Some(9L)),    // C: 8
+      (10L, Some(5L)), (11L, Some(5L)),              // D: tie -> 10
+      (12L, None)                                    // unclustered
+    ).toDF("doc_id", "q")
+    val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
+      (6L, 6L), (7L, 6L), (8L, 6L), (10L, 10L), (11L, 10L))
+      .toDF("id", "cluster_id")
+    val kept = Dedup.resolveDuplicatesByQuality(frame, clusters,
+      "doc_id", "q").orderBy("doc_id").as[(Long, Option[Long])].collect()
+    assert(kept.toSeq === Seq((1L, Some(50L)), (4L, None), (8L, Some(9L)),
+      (10L, Some(5L)), (12L, None)))
   }
 
   test("autoPlanes: occupancy-stabilizing plane count, exact at power-of-" +

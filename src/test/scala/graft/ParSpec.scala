@@ -72,6 +72,23 @@ class ParSpec extends SparkSpec {
     assert(corpus.count() === 40L)
   }
 
+  test("semDedup holds only the probe file and the cluster labels " +
+    "once it returns") {
+    // 40 unit vectors 9 degrees apart (cosine 0.988 between neighbours)
+    // plus a near-copy of every 10th (id + 100), which loses on quality,
+    // so the pair pass and the closure see real pairs
+    def at(a: Double) = Array(math.cos(a), math.sin(a))
+    val step = 2 * math.Pi / 40
+    val rows = (0 until 40).map(i => (i.toLong, at(i * step), 10L))
+    val copies = (0 until 40 by 10).map(i =>
+      (i + 100L, at(i * step + 1e-4), 9L))
+    val corpus = (rows ++ copies).toDF("id", "v", "q")
+    val (out, held) = leftBehind(Similarity.semDedup(corpus, "id", "v",
+      "q", threshold = 0.99, nCells = 3, iters = 2))
+    assert(held.size <= 2, s"persisted after semDedup: $held")
+    assert(out.select("id").as[Long].collect().toSeq === (0L until 40L))
+  }
+
   test("pageRank and hits record their round counts in IterStats") {
     IterStats.drain()
     Graph.pageRank(chain, "src", "dst", iterations = 3)

@@ -16,13 +16,20 @@ same plan:
 - the random suffix of an artifact directory (`/tmp/graft_als_pub_529…/`)
   becomes `_`;
 - JVM lambda class names and identity hashes (`$$Lambda$61/0x7f…@56a9`)
-  become `$$Lambda`.
-
-Plans with several DISTINCT aggregates are the exception: Spark's
-distinct-aggregate rewrite orders its grouping keys by expression hash,
-and so by expression id, which depends on what the JVM planned before.
-When such a gate differs in a full dump, dump it alone on both sides
-(`graft.Explain` takes a comma-separated gate list) and compare those.
+  become `$$Lambda`;
+- the numbered names that come from JVM-wide counters, lambda variables
+  of higher-order functions (`lambda x_153`) and common subexpressions
+  (`_common_expr_13`), are numbered again from 0 in order of first
+  appearance in the plan;
+- the distinct-aggregate rewrite is put in one canonical order. For a
+  query with several DISTINCT aggregates, Spark's rewrite numbers the
+  distinct groups (`gid`) and orders their key columns by expression
+  hash, and so by expression id, which depends on what the JVM planned
+  before. Each `Expand` that outputs `gid` has its key columns sorted by
+  name and its groups renumbered in that order; the key lists next to
+  `gid` (aggregate keys, inputs, results, the exchange's partitioning)
+  and the `FILTER (WHERE (gid = k))` clauses of the operators above it
+  follow. So a full dump and a dump of a few gates compare equal.
 
 Usage:
     python3 tools/plandiff.py DIR_A DIR_B [-v]
@@ -45,6 +52,102 @@ NORMALIZE = [
     (re.compile(r"(graft_\w+?)_\d{6,}"), r"\1_"),
     (re.compile(r"\$\$Lambda\$[\w/]+@[0-9a-f]+"), "$$Lambda"),
 ]
+COUNTED = [re.compile(r"\b(lambda \w+?_)(\d+)\b"),
+           re.compile(r"\b(_common_expr_)(\d+)\b")]
+EXPAND = re.compile(r"^\(\d+\) Expand$")
+GID = "gid#_"
+GID_FILTER = re.compile(r"\(gid#_ = (\d+)\)")
+
+
+def split_top(text):
+    """`text` split at the commas outside brackets and quotes."""
+    items, depth, quote, start = [], 0, None, 0
+    for i, c in enumerate(text):
+        if quote:
+            quote = None if c == quote else quote
+        elif c in "'`":
+            quote = c
+        elif c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        elif c == "," and depth == 0:
+            items.append(text[start:i].strip())
+            start = i + 1
+    items.append(text[start:].strip())
+    return items
+
+
+def unbracket(item):
+    """The items of a `[a, b, ...]` list, or None when `item` is not one."""
+    if item[:1] == "[" and item[-1:] == "]":
+        return split_top(item[1:-1])
+    return None
+
+
+def canonical_expand(args):
+    """The rewrite of one distinct-aggregate `Expand`'s argument text in
+    canonical order: (new argument text, old key list, new key list,
+    old gid -> new gid), or None when `args` is not such an Expand.
+    """
+    top = split_top(args)
+    rows = unbracket(top[0]) if len(top) == 2 else None
+    out = unbracket(top[1]) if rows else None
+    if not out or GID not in out:
+        return None
+    rows = [unbracket(r) for r in rows]
+    g = out.index(GID)
+    if any(r is None or len(r) != len(out) or not r[g].isdigit()
+           for r in rows):
+        return None
+    keys = [j for j in range(g) if any(r[j] == "null" for r in rows)]
+    order = sorted(keys, key=lambda j: out[j])
+    perm = list(range(len(out)))
+    for j, k in zip(keys, order):
+        perm[j] = k
+    rows = [[r[k] for k in perm] for r in rows]
+    regular = [r for r in rows if r[g] == "0"]
+    groups = sorted((r for r in rows if r[g] != "0"),
+                    key=lambda r: [r[j] == "null" for j in keys])
+    renumber = {}
+    for n, r in enumerate(groups, 1):
+        renumber[r[g]] = str(n)
+        r[g] = str(n)
+    text = "[" + ", ".join("[" + ", ".join(r) + "]"
+                           for r in regular + groups) + "], ["
+    text += ", ".join(out[k] for k in perm) + "]"
+    old_keys = ", ".join(out[j] for j in keys)
+    new_keys = ", ".join(out[j] for j in order)
+    return text, old_keys, new_keys, renumber
+
+
+def canonical_distinct_rewrite(text):
+    """`text` with every distinct-aggregate `Expand` in canonical order
+    (see the module docstring); the operators after an Expand, up to the
+    next Expand, follow its key order and group numbers.
+    """
+    lines = text.split("\n")
+    rewrite = expand_args = None
+    for i, line in enumerate(lines):
+        if EXPAND.match(line):
+            rewrite = None
+            expand_args = next(
+                (j for j in range(i + 1, min(i + 4, len(lines)))
+                 if lines[j].startswith("Arguments: ")), None)
+            if expand_args is not None:
+                rewrite = canonical_expand(
+                    lines[expand_args][len("Arguments: "):])
+                if rewrite:
+                    lines[expand_args] = "Arguments: " + rewrite[0]
+            continue
+        if rewrite is None or i == expand_args:
+            continue
+        _, old_keys, new_keys, renumber = rewrite
+        if GID in line:
+            line = line.replace(old_keys, new_keys)
+        lines[i] = GID_FILTER.sub(lambda m: "(gid#_ = {})".format(
+            renumber.get(m.group(1), m.group(1))), line)
+    return "\n".join(lines)
 
 
 def normalized(path):
@@ -52,7 +155,11 @@ def normalized(path):
         text = f.read()
     for pattern, repl in NORMALIZE:
         text = pattern.sub(repl, text)
-    return text
+    for pattern in COUNTED:
+        first = {}
+        text = pattern.sub(lambda m: m.group(1) + str(
+            first.setdefault(m.group(2), len(first))), text)
+    return canonical_distinct_rewrite(text)
 
 
 def plans(root):
